@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{GraftSession, LayerSpec}
+import graft.core.{Caching, GraftSession, LayerSpec}
 import graft.plans.{LayerJob, VectorJob}
 import graft.sources.{Catalog, GeoTiffSpark}
 import java.nio.file.{Files, Paths}
@@ -48,29 +48,43 @@ object Pixetl {
       sys.exit(0)
     } catch {
       case e: Throwable =>
-        System.err.println(s"pixetl failed: ${e.getMessage}")
+        System.err.println(failure("pixetl", e))
         sys.exit(1)
     } finally spark.stop()
   }
 
+  /** CLI failure text: `<tool> failed:` then the class and message of the
+    * error and of each cause under it — a bare `getMessage` is often null
+    * (an NPE) or only a wrapper's summary (a task's `SparkException`). */
+  private[graft] def failure(tool: String, e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(32)
+      .map(c => s"${c.getClass.getName}: ${c.getMessage}")
+      .mkString(s"$tool failed: ", "\n  caused by: ", "")
+
   /** Tile sink + the spec's pyramid choice: internal overviews (chained
     * IFDs, optionally COG head-first) ride the SAME write; the external
     * layout publishes plain tiles then builds `.ovr` sidecars next to
-    * them (gdaladdo -ro semantics — the tiles stay byte-stable). */
+    * them (gdaladdo -ro semantics — the tiles stay byte-stable). Returns
+    * the sink's per-tile rows, pinned and materialized: the only pass
+    * over the pixel plane, which every later step reads instead. */
   private def writeWithPyramid(spark: org.apache.spark.sql.SparkSession,
       blocks: org.apache.spark.sql.DataFrame, spec: LayerSpec,
-      outDir: String): Unit =
-    if (spec.overviewLayout == "external" && spec.overviewFactors.nonEmpty) {
-      GeoTiffSpark.writeTiles(blocks, spec, outDir).count()
-      GeoTiffSpark.addOverviewSidecars(spark, outDir, spec,
-        spec.overviewFactors, spec.overviewResampling,
-        seamExact = spec.overviewSeamExact).count()
-    } else
-      GeoTiffSpark.writeTiles(blocks, spec, outDir,
+      outDir: String): org.apache.spark.sql.DataFrame = {
+    val external = spec.overviewLayout == "external" && spec.overviewFactors.nonEmpty
+    val written = Caching.shared(
+      if (external) GeoTiffSpark.writeTiles(blocks, spec, outDir)
+      else GeoTiffSpark.writeTiles(blocks, spec, outDir,
         overviewFactors = spec.overviewFactors,
         overviewMethod = spec.overviewResampling,
         cogLayout = spec.cog,
-        overviewSeamExact = spec.overviewSeamExact).count()
+        overviewSeamExact = spec.overviewSeamExact))
+    written.count()
+    if (external)
+      GeoTiffSpark.addOverviewSidecars(spark, outDir, spec,
+        spec.overviewFactors, spec.overviewResampling,
+        seamExact = spec.overviewSeamExact).count()
+    written
+  }
 
   /** Resolve `pixetl://dataset/attr/grid/tiles.geojson` source uris (emitted
     * by [[SubmitJob]] for resampled `depends_on` grids) to the upstream
@@ -88,32 +102,44 @@ object Pixetl {
   /** In-process job entry (SubmitJob's executor): the same pipeline as the
     * CLI on the CALLER's SparkSession — independent layer jobs interleave
     * their stages on one cluster instead of paying a session each. Throws
-    * on failure; returns the status tally. */
+    * on failure; returns the status tally.
+    *
+    * One pass over the pixel plane: the tile sink is its only consumer.
+    * The manifests, stats sidecars, extent and status tally derive from
+    * the sink's per-tile rows and the plan-side tile sets
+    * ([[LayerJob.derive]]). */
   def run(spark: org.apache.spark.sql.SparkSession, spec0: LayerSpec, dest: String,
           overwrite: Boolean, sub: Option[Seq[String]]): Seq[(String, Long)] = {
-      val spec = resolvePixetlUris(spec0, dest)
-      val outDir = s"$dest/${spec.prefix()}"
-      Files.createDirectories(Paths.get(outDir))
-
-      val (blocks, status) = spec.sourceType match {
+    val spec = resolvePixetlUris(spec0, dest)
+    val outDir = s"$dest/${spec.prefix()}"
+    Files.createDirectories(Paths.get(outDir))
+    // the run's pins (source catalog, sink rows) are released when it
+    // returns; an explicit scope rather than a `Caching.scoped` closure
+    // keeps each Spark job's call site on its own line of `run`, which is
+    // how perfbench's step trace attributes the jobs written inline here
+    val pins = Caching.open()
+    try {
+      val (blocks, tiles) = spec.sourceType match {
         case "raster" =>
           // plan-time catalog: manifest uris ending in .geojson are S2
-          // manifests; anything else is harvested from file metadata (S4)
+          // manifests; anything else is harvested from file metadata (S4).
+          // Pinned: the plan probes and the tile sets read it again, and
+          // a harvest re-opens every source
           val uris = spec.sourceUri.get
           // each source_uri contributes the next global band (A, B, C…) —
           // the reference's band concatenation (layers.py:171-237)
           val (catalog0, srcEpsg) =
             if (uris.forall(_.endsWith(".geojson")))
-              (uris.zipWithIndex
+              (Caching.shared(uris.zipWithIndex
                 .map { case (u, i) => Catalog.fromTilesGeojson(spark, u, band = i + 1) }
-                .reduce(_ unionByName _),
+                .reduce(_ unionByName _)),
                 4326) // tiles.geojson footprints are always 4326 (pixetl_prep.py:60-76)
             else {
-              val harvested = uris.zipWithIndex.map { case (u, i) =>
+              val harvested = Caching.shared(uris.zipWithIndex.map { case (u, i) =>
                 GeoTiffSpark.harvestCatalog(spark,
                     Catalog.listFolder(spark, u).collect().map(_.getString(0)).toSeq)
                   .withColumn("band", org.apache.spark.sql.functions.lit(i + 1))
-              }.reduce(_ unionByName _)
+              }.reduce(_ unionByName _))
               val epsgs = harvested.select("epsg").distinct().collect().map(_.getInt(0)).toSeq
               require(epsgs.size == 1, s"sources span multiple CRSs: $epsgs")
               (harvested.select("uri", "band", "file_band", "footprint"), epsgs.head)
@@ -162,54 +188,7 @@ object Pixetl {
           val existing = Catalog.existingTiles(spark, outDir)
           val result = LayerJob.run(spark, spec, catalog, reader,
             subset = sub, existing = Some(existing), overwrite = overwrite)
-          writeWithPyramid(spark, result.blocks, spec, outDir)
-          // dual destination profiles (tiles/tile.py:54-97): the
-          // `gdal-geotiff` variant differs only in creation options the
-          // codec normalizes away, so it materializes as a copy —
-          // DISTRIBUTED (Hadoop-FS per task): a driver-side loop would
-          // serialize the whole second profile at 100k tiles
-          val gdalDir = s"$dest/${spec.prefix(fmt = "gdal-geotiff")}"
-          def abs(p: String) =
-            if (p.contains("://")) p else Paths.get(p).toAbsolutePath.toString
-          if (gdalDir.contains("://")) {
-            val p = new org.apache.hadoop.fs.Path(gdalDir)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-          } else Files.createDirectories(Paths.get(gdalDir))
-          val (srcRoot, dstRoot) = (abs(outDir), abs(gdalDir))
-          locally {
-            import spark.implicits._
-            val confBytes = graft.sources.HadoopConfs.capture(
-              spark.sparkContext.hadoopConfiguration)
-            Catalog.existingTiles(spark, outDir).as[String].mapPartitions { ids =>
-              graft.sources.HadoopConfs.install(confBytes)
-              val conf = graft.sources.HadoopConfs.get
-              ids.map { id =>
-                // the tile AND any external .ovr sidecar — a dual profile
-                // must not silently drop the pyramid the primary one has
-                for (name <- Seq(s"$id.tif", s"$id.tif.ovr")) {
-                  val src = new org.apache.hadoop.fs.Path(s"$srcRoot/$name")
-                  val dst = new org.apache.hadoop.fs.Path(s"$dstRoot/$name")
-                  val sfs = src.getFileSystem(conf)
-                  val dfs = dst.getFileSystem(conf)
-                  dfs.setWriteChecksum(false)
-                  if (sfs.exists(src))
-                    org.apache.hadoop.fs.FileUtil.copy(sfs, src, dfs, dst, false, true, conf)
-                }
-                id
-              }
-            }.count()
-          }
-          // streamed manifest write (zoom-22-safe) + optional PAM sidecars
-          LayerJob.writeTilesGeojson(result.manifest, s"$outDir/tiles.geojson",
-            if (spec.computeStats) Some(result.tileStats) else None)
-          if (spec.computeStats) {
-            val g = spec.gridDef
-            GeoTiffSpark.writeStatsSidecars(result.tileStats, outDir,
-              g.cols.toLong * g.rows).count()
-          }
-          Files.writeString(Paths.get(s"$outDir/extent.geojson"),
-            LayerJob.renderExtentGeojson(result.extent))
-          (result.blocks, result.status)
+          (result.blocks, result.tiles)
         case "vector" =>
           // S7: features from a live PostGIS via ONE partitioned JDBC scan
           // with the envelope predicate pushed into the database
@@ -227,15 +206,61 @@ object Pixetl {
               s"$dest/features.parquet"))
           }
           val result = VectorJob.run(spark, spec, features, subset = sub)
-          writeWithPyramid(spark, result.blocks, spec, outDir)
-          LayerJob.writeTilesGeojson(result.manifest, s"$outDir/tiles.geojson")
-          Files.writeString(Paths.get(s"$outDir/extent.geojson"),
-            LayerJob.renderExtentGeojson(result.extent))
-          (result.blocks, result.status)
+          (result.blocks, result.tiles)
       }
 
-      val _ = blocks // per-branch writes already materialized above
-      status.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      val written = writeWithPyramid(spark, blocks, spec, outDir)
+      if (spec.sourceType == "raster") {
+        // dual destination profiles (tiles/tile.py:54-97): the
+        // `gdal-geotiff` variant differs only in creation options the
+        // codec normalizes away, so it materializes as a copy —
+        // DISTRIBUTED (Hadoop-FS per task): a driver-side loop would
+        // serialize the whole second profile at 100k tiles
+        val gdalDir = s"$dest/${spec.prefix(fmt = "gdal-geotiff")}"
+        def abs(p: String) =
+          if (p.contains("://")) p else Paths.get(p).toAbsolutePath.toString
+        if (gdalDir.contains("://")) {
+          val p = new org.apache.hadoop.fs.Path(gdalDir)
+          p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
+        } else Files.createDirectories(Paths.get(gdalDir))
+        val (srcRoot, dstRoot) = (abs(outDir), abs(gdalDir))
+        locally {
+          import spark.implicits._
+          val confBytes = graft.sources.HadoopConfs.capture(
+            spark.sparkContext.hadoopConfiguration)
+          Catalog.existingTiles(spark, outDir).as[String].mapPartitions { ids =>
+            graft.sources.HadoopConfs.install(confBytes)
+            val conf = graft.sources.HadoopConfs.get
+            ids.map { id =>
+              // the tile AND any external .ovr sidecar — a dual profile
+              // must not silently drop the pyramid the primary one has
+              for (name <- Seq(s"$id.tif", s"$id.tif.ovr")) {
+                val src = new org.apache.hadoop.fs.Path(s"$srcRoot/$name")
+                val dst = new org.apache.hadoop.fs.Path(s"$dstRoot/$name")
+                val sfs = src.getFileSystem(conf)
+                val dfs = dst.getFileSystem(conf)
+                dfs.setWriteChecksum(false)
+                if (sfs.exists(src))
+                  org.apache.hadoop.fs.FileUtil.copy(sfs, src, dfs, dst, false, true, conf)
+              }
+              id
+            }
+          }.count()
+        }
+      }
+      val derived = LayerJob.derive(spec, tiles, written)
+      // streamed manifest write (zoom-22-safe) + optional PAM sidecars
+      LayerJob.writeTilesGeojson(derived.manifest, s"$outDir/tiles.geojson",
+        if (spec.computeStats) Some(derived.tileStats) else None)
+      if (spec.computeStats) {
+        val g = spec.gridDef
+        GeoTiffSpark.writeStatsSidecars(derived.tileStats, outDir,
+          g.cols.toLong * g.rows).count()
+      }
+      Files.writeString(Paths.get(s"$outDir/extent.geojson"),
+        LayerJob.renderExtentGeojson(derived.extent))
+      derived.status.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    } finally pins.close()
   }
 }
 
@@ -290,7 +315,7 @@ object Addo {
       sys.exit(0)
     } catch {
       case e: Throwable =>
-        System.err.println(s"addo failed: ${e.getMessage}")
+        System.err.println(Pixetl.failure("addo", e))
         sys.exit(1)
     } finally spark.stop()
   }
@@ -312,7 +337,7 @@ object PixetlPrep {
       run(spark, dest, uris.toSeq, mergeExisting)
       sys.exit(0)
     } catch {
-      case e: Throwable => System.err.println(s"pixetl_prep failed: ${e.getMessage}"); sys.exit(1)
+      case e: Throwable => System.err.println(Pixetl.failure("pixetl_prep", e)); sys.exit(1)
     } finally spark.stop()
   }
 

@@ -20,7 +20,9 @@ import org.apache.spark.storage.StorageLevel
   * the same at its own job boundaries. Without this, cached relations
   * accumulate in the block manager for the life of the session
   * (MEMORY_AND_DISK spills rather than OOMs, but a 100 TB shared session
-  * would bloat storage memory and evict useful blocks).
+  * would bloat storage memory and evict useful blocks). A [[Scope]] is
+  * per thread: pins made inside it are released when it closes, whatever
+  * other threads on the same session have pinned meanwhile.
   *
   * Release is surgical — only graft-registered handles are unpersisted,
   * never caches the embedding application created itself — and idempotent:
@@ -32,30 +34,60 @@ object Caching {
   private val registry =
     new ConcurrentHashMap[SparkSession, ConcurrentLinkedQueue[Dataset[_]]]()
 
+  /** Registration scopes open on the calling thread, innermost first. */
+  private val scopes = new ThreadLocal[List[Scope]] {
+    override def initialValue(): List[Scope] = Nil
+  }
+
+  /** The pins registered while this scope was the calling thread's
+    * innermost one; [[close]] releases exactly those. Concurrent jobs on
+    * one session (SubmitJob's executor) each own their scope, so one job's
+    * release never unpersists a relation another job is still reading. */
+  final class Scope private[Caching] () extends AutoCloseable {
+    private[Caching] val handles = new ConcurrentLinkedQueue[Dataset[_]]()
+    override def close(): Unit = {
+      scopes.set(scopes.get.filterNot(_ eq this))
+      handles.forEach(_.unpersist(false))
+      handles.clear()
+    }
+  }
+
+  /** Open a registration scope on the calling thread; close it (or use
+    * [[scoped]]) once the results are materialized. */
+  def open(): Scope = {
+    val s = new Scope
+    scopes.set(s :: scopes.get)
+    s
+  }
+
   /** Persist `ds` (MEMORY_AND_DISK unless overridden) and register the
-    * handle for a later session-wide [[release]]. Drop-in for the bare
-    * `ds.persist(...)` an operator would otherwise call on a
+    * handle with the calling thread's innermost [[Scope]], or with the
+    * session for a later [[release]] when no scope is open. Drop-in for
+    * the bare `ds.persist(...)` an operator would otherwise call on a
     * multi-consumer intermediate. */
   def shared[T](ds: Dataset[T],
                 level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Dataset[T] = {
     val pinned = ds.persist(level)
-    registry
-      .computeIfAbsent(ds.sparkSession, _ => new ConcurrentLinkedQueue[Dataset[_]]())
+    scopes.get.headOption.map(_.handles).getOrElse(registry
+      .computeIfAbsent(ds.sparkSession, _ => new ConcurrentLinkedQueue[Dataset[_]]()))
       .add(pinned)
     pinned
   }
 
-  /** Unpersist every intermediate registered against `spark` since the
-    * last release. Non-blocking: block eviction proceeds asynchronously. */
+  /** Unpersist every intermediate registered against `spark` outside any
+    * scope since the last release. Non-blocking: block eviction proceeds
+    * asynchronously. */
   def release(spark: SparkSession): Unit = {
     val handles = registry.remove(spark)
     if (handles != null) handles.forEach(_.unpersist(false))
   }
 
-  /** Run `body`, then release all intermediates it registered. `body` must
-    * MATERIALIZE its results (write/collect/count) before returning —
-    * returning a lazy plan from `scoped` would recompute the released
-    * intermediates on first use. */
-  def scoped[T](spark: SparkSession)(body: => T): T =
-    try body finally release(spark)
+  /** Run `body` in a fresh [[Scope]], then release all intermediates it
+    * registered. `body` must MATERIALIZE its results (write/collect/count)
+    * before returning — returning a lazy plan from `scoped` would
+    * recompute the released intermediates on first use. */
+  def scoped[T](body: => T): T = {
+    val s = open()
+    try body finally s.close()
+  }
 }

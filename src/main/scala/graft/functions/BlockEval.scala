@@ -254,13 +254,29 @@ case class BlockZipEval(arrays: IndexedSeq[Expression],
   * accumulation (invalid elements still add literal 0.0 — the fold's
   * `coalesce(v, 0.0)` — so a -0.0 accumulator flips exactly as before),
   * same null/NaN comparison rules (`<`/`>` false for NaN). A pixel
-  * contributes iff its mask element is TRUE (non-null) and its value is
-  * non-null. */
-case class BlockStats(values: Expression, valid: Expression)
+  * contributes iff its mask element, if any, is TRUE (non-null), its value is
+  * non-null and differs from `noData` when one is given (Spark SQL
+  * equality: NaN equals NaN) — so `valid = None` with a `noData` applies
+  * the [[graft.operators.Raster.validMask]] rule without building the
+  * mask. `values` may be any numeric array: elements widen to double as a
+  * cast to `array<double>` would, without materializing that array. */
+case class BlockStats(values: Expression, valid: Option[Expression],
+                      noData: Option[Double] = None)
   extends Expression with CodegenFallback {
+  /** How an element of `values` widens to double, chosen once. */
+  private lazy val widen: Int = values.dataType match {
+    case ArrayType(DoubleType, _)  => 0
+    case ArrayType(FloatType, _)   => 1
+    case ArrayType(LongType, _)    => 2
+    case ArrayType(IntegerType, _) => 3
+    case ArrayType(ShortType, _)   => 4
+    case ArrayType(ByteType, _)    => 5
+    case other => throw new IllegalArgumentException(
+      s"block_stats: values must be a numeric array, got ${other.simpleString}")
+  }
   override def prettyName: String = "block_stats"
-  override def children: Seq[Expression] = Seq(values, valid)
-  override def nullable: Boolean = values.nullable || valid.nullable
+  override def children: Seq[Expression] = values +: valid.toSeq
+  override def nullable: Boolean = children.exists(_.nullable)
   override def foldable: Boolean = false
   override def dataType: DataType = StructType(Seq(
     StructField("mn", DoubleType, nullable = false),
@@ -271,20 +287,36 @@ case class BlockStats(values: Expression, valid: Expression)
 
   override def eval(input: InternalRow): Any = {
     val va = values.eval(input)
-    val ka = valid.eval(input)
-    if (va == null || ka == null) return null
+    if (va == null) return null
     val v = va.asInstanceOf[ArrayData]
-    val k = ka.asInstanceOf[ArrayData]
     val n = v.numElements()
-    require(k.numElements() == n,
-      s"block_stats: mask has ${k.numElements()} elements, values $n")
+    val k = valid match {
+      case Some(e) =>
+        val ka = e.eval(input)
+        if (ka == null) return null
+        val m = ka.asInstanceOf[ArrayData]
+        require(m.numElements() == n,
+          s"block_stats: mask has ${m.numElements()} elements, values $n")
+        m
+      case None => null
+    }
+    val (hasNd, nd) = (noData.isDefined, noData.getOrElse(0.0))
     var mn = Double.MaxValue; var mx = Double.MinValue
     var sum = 0.0; var sumsq = 0.0; var cnt = 0L
+    val w = widen
     var i = 0
     while (i < n) {
-      val ok = !k.isNullAt(i) && k.getBoolean(i) && !v.isNullAt(i)
+      var ok = !v.isNullAt(i) && (k == null || !k.isNullAt(i) && k.getBoolean(i))
+      val x = if (!ok) 0.0 else (w: @scala.annotation.switch) match {
+        case 0 => v.getDouble(i)
+        case 1 => v.getFloat(i).toDouble
+        case 2 => v.getLong(i).toDouble
+        case 3 => v.getInt(i).toDouble
+        case 4 => v.getShort(i).toDouble
+        case _ => v.getByte(i).toDouble
+      }
+      if (ok && hasNd && BlockKernels.cmp(x, nd) == 0) ok = false
       if (ok) {
-        val x = v.getDouble(i)
         // Spark SQL double ordering (NaN largest, ±0.0 equal) — NOT the
         // IEEE `<`, which would drop a NaN max the HOF fold kept
         if (BlockKernels.cmp(x, mn) < 0) mn = x
@@ -299,7 +331,7 @@ case class BlockStats(values: Expression, valid: Expression)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(values = newChildren(0), valid = newChildren(1))
+    copy(values = newChildren(0), valid = newChildren.lift(1))
 }
 
 /** Valid-pixel count (A5) as a primitive loop — counts TRUE mask elements

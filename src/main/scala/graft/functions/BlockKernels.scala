@@ -36,7 +36,7 @@ object BlockKernels {
 
   /** Spark SQL double comparison (SQLOrderingUtil semantics): ±0.0 equal,
     * NaN equal to itself and larger than everything else. */
-  @inline private[functions] def cmp(x: Double, y: Double): Int =
+  @inline private[graft] def cmp(x: Double, y: Double): Int =
     if (x == y) 0 else java.lang.Double.compare(x, y)
 
   /** Canonical enumeration of the `s`-thick output frame of a (ow×oh)

@@ -24,6 +24,19 @@ import org.apache.spark.sql.functions._
   */
 object Raster {
 
+  /** A3 partial (the [[blockPartialStats]] struct) on the typed side of the
+    * tile sink, which folds a tile's blocks into one partial per band. */
+  final case class StatsPartial(mn: Double, mx: Double, sum: Double, sumsq: Double,
+                                cnt: Long) {
+    /** Two partials combined the way [[combineStats]]' min/max/sum do it
+      * (Spark SQL double ordering: NaN largest). */
+    def merge(o: StatsPartial): StatsPartial = {
+      import graft.functions.BlockKernels.cmp
+      StatsPartial(if (cmp(o.mn, mn) < 0) o.mn else mn, if (cmp(o.mx, mx) > 0) o.mx else mx,
+        sum + o.sum, sumsq + o.sumsq, cnt + o.cnt)
+    }
+  }
+
   /** Expand a tiles seed into its block grid, distributed (operator:
     * tile→windows flatMap, `raster_src_tile.py:328-378`). Generates
     * (blocksPerSide)² block rows per tile via `explode(sequence(...))` —
@@ -171,12 +184,25 @@ object Raster {
   def blockPartialStats(values: Column, valid: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.functions.BlockStats(
-      ColumnBridge.expression(values), ColumnBridge.expression(valid)))
+      ColumnBridge.expression(values), Some(ColumnBridge.expression(valid))))
   }
 
-  /** Combine block partials into per-(tile, band) statistics (A3 final). */
+  /** One [[blockPartialStats]] per band of a block, in band order: the
+    * `stats` column the tile sink returns per tile and
+    * [[graft.plans.LayerJob.derive]] combines. Nulls and `noData` pixels
+    * are invalid — the [[validMask]] rule, applied inside the fold. */
+  def bandPartials(bands: Seq[Column], noData: Option[Double]): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    array(bands.map(b => ColumnBridge.column(graft.functions.BlockStats(
+      ColumnBridge.expression(b), None, noData))): _*)
+  }
+
+  /** Combine block partials into per-(tile, band) statistics (A3 final).
+    * A key with no valid pixel (`n` = 0) has no statistics: all four are
+    * NaN, which the manifest renders as null and the PAM sidecar omits. */
   def combineStats(blocks: DataFrame, keys: Seq[String]): DataFrame = {
     val p = col("partial")
+    def valid(c: Column): Column = when(col("n") > 0, c).otherwise(lit(Double.NaN))
     blocks
       .groupBy(keys.map(col): _*)
       .agg(
@@ -185,9 +211,11 @@ object Raster {
         sum(p("sum")).as("s"),
         sum(p("sumsq")).as("ss"),
         sum(p("cnt")).as("n"))
-      .withColumn("stat_mean", col("s") / col("n"))
-      .withColumn("stat_std",
-        sqrt(greatest(col("ss") / col("n") - pow(col("s") / col("n"), 2), lit(0.0))))
+      .withColumn("stat_min", valid(col("stat_min")))
+      .withColumn("stat_max", valid(col("stat_max")))
+      .withColumn("stat_mean", valid(col("s") / col("n")))
+      .withColumn("stat_std", valid(
+        sqrt(greatest(col("ss") / col("n") - pow(col("s") / col("n"), 2), lit(0.0)))))
       .drop("s", "ss")
   }
 

@@ -31,13 +31,33 @@ object LayerJob {
     * Production: a GeoTIFF decoder; tests/bench: Raster.synthesizeBand. */
   type BlockReader = DataFrame => DataFrame
 
-  final case class Result(
-      blocks: DataFrame,     // output pixel blocks (post calc/fill)
+  /** The plan-side tile sets of a publish — footprint joins, no pixels:
+    * the seed after the subset filter (F1), the tiles a source covers (F2),
+    * the tiles left to build (F3) and the already-published ones it skips.
+    * A pending tile that yields no pixels is tallied as `emptyStatus`. */
+  final case class Tiles(seed: DataFrame, withSource: DataFrame, pending: DataFrame,
+                         existing: Option[DataFrame], emptyStatus: String)
+
+  /** What a publish reports beside its tiles. */
+  final case class Derived(
       tileStats: DataFrame,  // per (tile_id, band) A3 stats
       manifest: DataFrame,   // per-tile footprint + metadata (tiles.geojson rows)
       extent: DataFrame,     // 1-row geometric union (extent.geojson)
-      status: DataFrame,     // status tally (A8)
-      tileHistogram: Option[DataFrame] = None) // per (tile_id, band) A4 buckets
+      status: DataFrame)     // status tally (A8)
+
+  /** A layer job's plan (raster here, vector in [[VectorJob]]): `blocks`
+    * are the output pixel blocks (post calc/fill); `tileStats`,
+    * `manifest`, `extent` and `status` are [[derive]]d from the non-empty
+    * ones on first use, and each re-runs the pixel plane when executed. A
+    * publish derives them from its sink's rows instead (`Pixetl.run`). */
+  final class Result(val blocks: DataFrame, val tiles: Tiles, derived0: => Derived,
+                     val tileHistogram: Option[DataFrame]) { // per (tile_id, band) A4 buckets
+    private lazy val derived = derived0
+    def tileStats: DataFrame = derived.tileStats
+    def manifest: DataFrame = derived.manifest
+    def extent: DataFrame = derived.extent
+    def status: DataFrame = derived.status
+  }
 
   def run(spark: SparkSession, spec: LayerSpec, catalog: DataFrame,
           reader: BlockReader, subset: Option[Seq[String]] = None,
@@ -82,8 +102,8 @@ object LayerJob {
     val (pending, existingTiles) = existing match {
       case Some(ex) if !overwrite =>
         (withSource.join(broadcast(ex), Seq("tile_id"), "left_anti"),
-         withSource.join(broadcast(ex), Seq("tile_id"), "left_semi"))
-      case _ => (withSource, spark.emptyDataFrame)
+         Some(withSource.join(broadcast(ex), Seq("tile_id"), "left_semi")))
+      case _ => (withSource, None)
     }
 
     // J2: file assignment — which files feed which tile, per band.
@@ -210,29 +230,7 @@ object LayerJob {
     val nonEmpty = nonEmptyBare.join(
       broadcast(pending.select("tile_id", "left", "bottom", "right", "top")), "tile_id")
 
-    // --- aggregations ----------------------------------------------------
-    // A3 per (tile, band): one array pass per block, tiny shuffle of partials
-    val statsIn = (1 to spec.bandCount).map { i =>
-      computed.select(col("tile_id"), lit(i).as("band"),
-        Raster.blockPartialStats(
-          col(s"band_$i").cast("array<double>"),
-          Raster.validMask(col(s"band_$i"), pt.sparkType, pt.noData)).as("partial"))
-    }.reduce(_ unionByName _)
-    val tileStats = Raster.combineStats(statsIn, Seq("tile_id", "band"))
-
-    // manifest rows: tile footprint + dst uri + band metadata (K3 shape)
-    val processedTiles = nonEmpty.select("tile_id").distinct()
-    val manifest = pending
-      .join(processedTiles, Seq("tile_id"), "left_semi")
-      .select(col("tile_id"), col("left"), col("bottom"), col("right"), col("top"),
-        concat(lit(spec.prefix() + "/"), col("tile_id"), lit(".tif")).as("uri"),
-        GeoFunctions.st_asGeoJson(tileEnv).as("geometry"))
-
-    // A6: geometric union of processed footprints → extent.geojson
-    val extent = manifest
-      .select(GeoFunctions.st_makeEnvelope(col("left"), col("bottom"), col("right"), col("top")).as("g"))
-      .agg(GeomUnionAgg.column(col("g")).as("extent_wkb"))
-      .select(GeoFunctions.st_asGeoJson(col("extent_wkb")).as("geometry"))
+    val tiles = Tiles(subsetted, withSource, pending, existingTiles, "skipped (has no data)")
 
     // A4 per (tile, band) when requested: per-block bucket partials summed
     // elementwise — the gdalinfo -hist shape {count, min, max, buckets[]}
@@ -260,28 +258,51 @@ object LayerJob {
           .drop("m"))
       }
 
-    // A8: status algebra (pipe.py:137-168; skip reasons raster_pipe.py:62-81)
-    val status = {
-      val processed = processedTiles.withColumn("status", lit("processed"))
-      val notIntersecting = subsetted.select("tile_id")
-        .join(withSource.select("tile_id"), Seq("tile_id"), "left_anti")
-        .withColumn("status", lit("skipped (does not intersect)"))
-      val skipped = pending.select("tile_id")
-        .join(processedTiles, Seq("tile_id"), "left_anti")
-        .withColumn("status", lit("skipped (has no data)"))
-        .unionByName(notIntersecting)
-      val existed =
-        if (existingTiles.columns.contains("tile_id"))
-          existingTiles.select("tile_id").withColumn("status", lit("existing"))
-        else spark.emptyDataFrame.withColumn("tile_id", lit("")).withColumn("status", lit(""))
-            .limit(0)
-      processed.unionByName(skipped).unionByName(existed)
-        .groupBy("status").agg(count(lit(1)).as("n"))
-    }
-
-    Result(nonEmpty, tileStats, manifest, extent, status, tileHist)
+    new Result(nonEmpty, tiles, derive(spec, tiles, nonEmptyBare.select(col("tile_id"),
+      Raster.bandPartials((1 to spec.bandCount).map(i => col(s"band_$i")), pt.noData)
+        .as("stats"))), tileHist)
   }
 
+  /** A3 stats, K3 manifest rows, A6 extent and A8 status tally of a publish,
+    * from the tiles it processed. `processed` carries `tile_id` and a
+    * `stats` array of per-band A3 partials ([[Raster.bandPartials]]), one
+    * row per block or per tile: the tile sink returns exactly such rows,
+    * so a publish derives all four from them plus the plan-side
+    * [[Tiles]], without running the pixel plane again. */
+  def derive(spec: LayerSpec, tiles: Tiles, processed: DataFrame): Derived = {
+    // A3 per (tile, band): a tiny shuffle of partials
+    val tileStats = Raster.combineStats(
+      processed.select(col("tile_id"), posexplode(col("stats")).as(Seq("pos", "partial")))
+        .select(col("tile_id"), (col("pos") + 1).as("band"), col("partial")),
+      Seq("tile_id", "band"))
+
+    // manifest rows: tile footprint + dst uri + band metadata (K3 shape)
+    val processedIds = processed.select("tile_id")
+    val tileEnv = GeoFunctions.st_makeEnvelope(col("left"), col("bottom"), col("right"), col("top"))
+    val manifest = tiles.pending
+      .join(processedIds, Seq("tile_id"), "left_semi")
+      .select(col("tile_id"), col("left"), col("bottom"), col("right"), col("top"),
+        concat(lit(spec.prefix() + "/"), col("tile_id"), lit(".tif")).as("uri"),
+        GeoFunctions.st_asGeoJson(tileEnv).as("geometry"))
+
+    // A6: geometric union of processed footprints → extent.geojson
+    val extent = manifest
+      .select(tileEnv.as("g"))
+      .agg(GeomUnionAgg.column(col("g")).as("extent_wkb"))
+      .select(GeoFunctions.st_asGeoJson(col("extent_wkb")).as("geometry"))
+
+    // A8: status algebra (pipe.py:137-168; skip reasons raster_pipe.py:62-81)
+    def tally(ids: DataFrame, status: String) =
+      ids.select("tile_id").withColumn("status", lit(status))
+    val status = Seq(
+      tally(processedIds.distinct(), "processed"),
+      tally(tiles.pending.join(processedIds, Seq("tile_id"), "left_anti"), tiles.emptyStatus),
+      tally(tiles.seed.join(tiles.withSource, Seq("tile_id"), "left_anti"),
+        "skipped (does not intersect)")) ++
+      tiles.existing.map(tally(_, "existing"))
+    Derived(tileStats, manifest, extent,
+      status.reduce(_ unionByName _).groupBy("status").agg(count(lit(1)).as("n")))
+  }
   /** Manifest sink (K3): render tiles.geojson + extent.geojson strings.
     * Aggregated rows are tiny (one per tile) — rendered on the driver like
     * the reference (`utils/upload_geometries.py:31-59`). When `tileStats`

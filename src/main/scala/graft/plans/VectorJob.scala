@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.core.LayerSpec
 import graft.functions.GeoFunctions
-import graft.operators.Rasterize
+import graft.operators.{Raster, Rasterize}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,20 +18,17 @@ import org.apache.spark.sql.functions._
   *   GeoTIFF sink as the raster path.
   *
   * Scale design: the feature⋈tile join broadcasts the TILE side (the seed
-  * after pruning is small); pixel rows shuffle once, keyed by tile/block,
-  * map-side combined by the burn aggregate. The reference's per-tile
-  * PostGIS queries (with a 4-connection cap, vector_pipe.py:57) become one
-  * partitioned scan.
+  * after pruning is small); pixel rows shuffle twice — the burn aggregate
+  * (keyed by pixel, map-side combined) and the block packing (keyed by
+  * tile/block). The reference's per-tile PostGIS queries (with a
+  * 4-connection cap, vector_pipe.py:57) become one partitioned scan.
   */
 object VectorJob {
-
-  final case class Result(blocks: DataFrame, status: DataFrame,
-                          manifest: DataFrame, extent: DataFrame)
 
   /** `features` must carry `geom` (WKB binary); `burnField` names the value
     * column for A2 (ignored for count). */
   def run(spark: SparkSession, spec: LayerSpec, features: DataFrame,
-          burnField: String = "value", subset: Option[Seq[String]] = None): Result = {
+          burnField: String = "value", subset: Option[Seq[String]] = None): LayerJob.Result = {
     val grid = spec.gridDef
 
     // features arrive in EPSG:4326; WebMercator grids reproject geometries
@@ -111,28 +108,11 @@ object VectorJob {
         "block_row", "block_col", "band_1")
       .withColumn("width", lit(block)).withColumn("height", lit(block))
 
-    val processedTiles = withTile.select("tile_id").distinct()
-    val status = processedTiles
-      .withColumn("status", lit("processed"))
-      .unionByName(tiles.select("tile_id")
-        .join(processedTiles, Seq("tile_id"), "left_anti")
-        .withColumn("status", lit("skipped (does not intersect)"))) // vector_pipe.py:62
-      .groupBy("status").agg(count(lit(1)).as("n"))
-
-    // K3: the base pipe uploads geojson manifests for vector layers too
-    // (pipes/pipe.py:163-167) — same shape as LayerJob's
-    val outEnv = GeoFunctions.st_makeEnvelope(
-      col("left"), col("bottom"), col("right"), col("top"))
-    val manifest = withTile
-      .select("tile_id", "left", "bottom", "right", "top").distinct()
-      .select(col("tile_id"), col("left"), col("bottom"), col("right"), col("top"),
-        concat(lit(spec.prefix() + "/"), col("tile_id"), lit(".tif")).as("uri"),
-        GeoFunctions.st_asGeoJson(outEnv).as("geometry"))
-    val extent = manifest
-      .select(outEnv.as("g"))
-      .agg(graft.functions.GeomUnionAgg.column(col("g")).as("wkb"))
-      .select(GeoFunctions.st_asGeoJson(col("wkb")).as("geometry"))
-
-    Result(withTile, status, manifest, extent)
+    // K3 manifests for vector layers too (pipes/pipe.py:163-167); a tile
+    // without burnt pixels does not intersect (vector_pipe.py:62)
+    val tileSets = LayerJob.Tiles(tiles, tiles, tiles, None, "skipped (does not intersect)")
+    new LayerJob.Result(withTile, tileSets, LayerJob.derive(spec, tileSets,
+      withTile.select(col("tile_id"),
+        Raster.bandPartials(Seq(col("band_1")), spec.pixelType.noData).as("stats"))), None)
   }
 }

@@ -94,14 +94,15 @@ object Catalog {
   }
 
   /** Listing of existing outputs under a destination prefix as a DataFrame
-    * of tile ids — the right side of the F3/J6 anti-join. */
+    * of tile ids — the right side of the F3/J6 anti-join. Only `<id>.tif`
+    * names are tiles: the manifests, PAM and `.ovr` sidecars published
+    * next to them are not. */
   def existingTiles(spark: SparkSession, destPrefix: String): DataFrame = {
     import spark.implicits._
-    val path = new Path(s"$destPrefix/*")
+    val path = new Path(s"$destPrefix/*.tif")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statuses = Option(fs.globStatus(path)).getOrElse(Array.empty)
-    statuses.map(_.getPath.getName)
-      .collect { case n if n.contains(".") => n.substring(0, n.lastIndexOf('.')) }
+    Option(fs.globStatus(path)).getOrElse(Array.empty)
+      .map(_.getPath.getName.stripSuffix(".tif"))
       .toSeq.toDF("tile_id")
   }
 }

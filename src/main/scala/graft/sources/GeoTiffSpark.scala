@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.core.LayerSpec
 import graft.core.grid.Grid
+import graft.operators.Raster.StatsPartial
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,8 +20,13 @@ import org.apache.spark.sql.functions._
 object GeoTiffSpark {
 
   /** Write one GeoTIFF per tile under `outDir` (`<tile_id>.tif`), returning
-    * (tile_id, path, n_blocks) rows. `blocks` must carry tile_id, left/top,
-    * block_row, block_col, width, height and band_1..band_N arrays.
+    * (tile_id, path, n_blocks, stats) rows. `blocks` must carry tile_id,
+    * left/top, block_row, block_col, width, height and band_1..band_N
+    * arrays. `stats` holds each band's A3 partial over the tile's base
+    * blocks ([[StatsPartial]], band order): the
+    * reference takes a tile's stats from the tile it just wrote
+    * (`tiles/tile.py:143-172`), so manifests and sidecars need no second
+    * pass over the pixels ([[graft.plans.LayerJob.derive]]).
     *
     * K2 upload: a scheme-qualified `outDir` (s3a://, file://, …) routes
     * each tile through a local temp file then a Hadoop-FS
@@ -250,34 +256,41 @@ object GeoTiffSpark {
     // a 20 GB uint16 file. Bit-parity is the kernel's contract (the
     // writer re-applies the same idempotent clamp).
     val mode = sinkMode
+    // A3 partials of the base blocks ride the same projection, taken
+    // BEFORE fillNulls: without a nodata value a null pixel and a 0 look
+    // alike once filled
+    val stats = graft.operators.Raster.bandPartials(bandCols0.map(col), noData)
     val packed = leveled
       .select((Seq(col("tile_id"), col("left"), col("top"),
         col("block_row"), col("block_col"), col("level")) ++
         bandCols0.map(b => graft.functions.BlockKernels.packBand(
-          graft.functions.BlockKernels.fillNulls(col(b), ndFill), mode).as(b))): _*)
+          graft.functions.BlockKernels.fillNulls(col(b), ndFill), mode).as(b)) :+
+        when(col("level") === 0, stats).as("stats")): _*)
       .repartition(col("tile_id"))
       .sortWithinPartitions("tile_id")
       .select(col("tile_id"), col("left"), col("top"), col("block_row"),
         col("block_col"), col("level"),
-        array(bandCols0.map(col): _*).as("bands"))
-      .as[(String, Double, Double, Int, Int, Int, Seq[Array[Byte]])]
+        array(bandCols0.map(col): _*).as("bands"), col("stats"))
+      .as[(String, Double, Double, Int, Int, Int, Seq[Array[Byte]],
+        Seq[StatsPartial])]
     packed
       .mapPartitions { it0 =>
         HadoopConfs.install(confBytes)
         val it = it0.buffered
-        new Iterator[(String, String, Int)] {
+        new Iterator[(String, String, Int, Seq[StatsPartial])] {
           override def hasNext: Boolean = it.hasNext
-          override def next(): (String, String, Int) = {
+          override def next(): (String, String, Int, Seq[StatsPartial]) = {
             val tileId = it.head._1
             var writer: GeoTiff.Writer = null
             var n = 0
+            var tileStats: Seq[StatsPartial] = Nil
             val path = s"$outDir/$tileId.tif"
             val localPath =
               if (viaFs) java.nio.file.Files.createTempFile(s"graft_$tileId", ".tif").toString
               else path
             val written = scala.collection.mutable.Set.empty[(Int, Int, Int, Int)]
             while (it.hasNext && it.head._1 == tileId) {
-              val (_, left, top, br, bc, lvl, bands) = it.next()
+              val (_, left, top, br, bc, lvl, bands, blockStats) = it.next()
               if (writer == null) {
                 val profile = GeoTiff.Profile(
                   width = cols, height = cols, bands = bandCount, dataType = dataType,
@@ -292,15 +305,19 @@ object GeoTiffSpark {
                   graft.functions.BlockKernels.unpackBand(bands(b - 1), mode))
                 written += ((lvl, b, br, bc))
               }
-              if (lvl == 0) n += 1
+              if (lvl == 0) {
+                tileStats = if (n == 0) blockStats
+                  else tileStats.zip(blockStats).map { case (a, b) => a.merge(b) }
+                n += 1
+              }
             }
             padCloseUpload(writer, bandCount, block, noData, written,
               viaFs, localPath, path)
-            (tileId, path, n)
+            (tileId, path, n, tileStats)
           }
         }
       }
-      .toDF("tile_id", "path", "n_blocks")
+      .toDF("tile_id", "path", "n_blocks", "stats")
   }
 
   /** `gdaladdo -ro` twin: build EXTERNAL `.ovr` overview sidecars for an

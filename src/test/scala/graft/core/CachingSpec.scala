@@ -22,7 +22,7 @@ class CachingSpec extends SparkSpec {
   }
 
   private def assertReleasesClean(label: String)(body: => Long): Unit = withCleanCache {
-    val n = Caching.scoped(spark) {
+    val n = Caching.scoped {
       val rows = body
       assert(rows >= 0)
       rows
@@ -140,7 +140,7 @@ class CachingSpec extends SparkSpec {
     val mine = docs.persist()
     try {
       mine.count()
-      Caching.scoped(spark) {
+      Caching.scoped {
         val sigs = Dedup.minhashSignatures(docs, k = 4)
         Dedup.lshCandidates(Dedup.lshBuckets(sigs, k = 4, rowsPerBand = 2)).count()
       }
@@ -149,6 +149,31 @@ class CachingSpec extends SparkSpec {
       assert(mine.storageLevel.useMemory,
         "the application-owned cache entry must survive release")
     } finally mine.unpersist()
+    }
+  }
+
+  test("a scope releases only its own pins, not another thread's") {
+    withCleanCache {
+      val theirs = new java.util.concurrent.atomic.AtomicReference[org.apache.spark.sql.DataFrame]()
+      val pinned = new java.util.concurrent.CountDownLatch(1)
+      val done = new java.util.concurrent.CountDownLatch(1)
+      val other = new Thread(() => Caching.scoped {
+        val d = Caching.shared(spark.range(10).toDF("x"))
+        d.count()
+        theirs.set(d)
+        pinned.countDown()
+        done.await()
+      })
+      other.start()
+      try {
+        pinned.await()
+        Caching.scoped {
+          Caching.shared(spark.range(5).toDF("y")).count()
+        }
+        assert(theirs.get.storageLevel.useMemory,
+          "closing one thread's scope must not unpersist another thread's pin")
+      } finally { done.countDown(); other.join() }
+      assert(spark.sharedState.cacheManager.isEmpty)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -90,6 +91,22 @@ class BlockEvalSpec extends SparkSpec {
     df.select(kernel.as("a"), hof.as("b")).collect().foreach { r =>
       val (a, b) = (r.getStruct(0), r.getStruct(1))
       (0 until 5).foreach(i => assert(same(a.get(i), b.get(i)), s"field $i: $a vs $b"))
+    }
+  }
+
+  test("BlockStats widens numeric arrays and applies noData like validMask over a cast") {
+    import spark.implicits._
+    import graft.operators.Raster
+    val in = Seq(Tuple1(Seq(Some(3.0), Some(-7.0), None, Some(12.0), Some(5.0), Some(-7.0))))
+      .toDF("v")
+    for (t <- Seq("tinyint", "smallint", "int", "bigint", "float", "double");
+         nd <- Seq(None, Some(-7.0))) {
+      val typed = col("v").cast(s"array<$t>")
+      val r = in.select(Raster.bandPartials(Seq(typed), nd),
+        array(Raster.blockPartialStats(typed.cast("array<double>"),
+          Raster.validMask(typed, org.apache.spark.sql.types.DataType.fromDDL(t), nd))))
+        .collect()(0)
+      assert(r.getSeq[Row](0) == r.getSeq[Row](1), s"$t, noData $nd")
     }
   }
 

@@ -81,8 +81,12 @@ class CatalogSpec extends SparkSpec {
     Files.createDirectories(dir)
     Files.writeString(dir.resolve("10N_010E.tif"), "x")
     Files.writeString(dir.resolve("20N_010E.tif"), "x")
+    // what a publish leaves next to its tiles is not a tile
+    for (other <- Seq("tiles.geojson", "extent.geojson", "10N_010E.tif.aux.xml",
+                      "10N_010E.tif.ovr"))
+      Files.writeString(dir.resolve(other), "x")
     val tiles = Catalog.existingTiles(spark, dir.toString)
-      .collect().map(_.getString(0)).toSet
-    assert(tiles == Set("10N_010E", "20N_010E"))
+      .collect().map(_.getString(0)).toSeq
+    assert(tiles.sorted == Seq("10N_010E", "20N_010E"), tiles)
   }
 }
