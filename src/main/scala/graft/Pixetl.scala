@@ -104,10 +104,12 @@ object Pixetl {
     * their stages on one cluster instead of paying a session each. Throws
     * on failure; returns the status tally.
     *
-    * One pass over the pixel plane: the tile sink is its only consumer.
-    * The manifests, stats sidecars, extent and status tally derive from
-    * the sink's per-tile rows and the plan-side tile sets
-    * ([[LayerJob.derive]]). */
+    * One pass over the pixel plane: the tile sink is its only consumer,
+    * and each sink task writes its tile's stats sidecar next to the tile.
+    * After the sink, two small Spark jobs ([[LayerJob.derive]]): one pass
+    * over the sink's per-tile rows writes tiles.geojson, folds the extent
+    * and counts the processed tiles; one count over the plan-side tile
+    * sets gives the rest of the status tally. */
   def run(spark: org.apache.spark.sql.SparkSession, spec0: LayerSpec, dest: String,
           overwrite: Boolean, sub: Option[Seq[String]]): Seq[(String, Long)] = {
     val spec = resolvePixetlUris(spec0, dest)
@@ -159,23 +161,22 @@ object Pixetl {
           }
           // same CRS is NOT enough for the aligned block reader: a resample
           // job (90/27008 fed from 10/40000 output — the catalog's
-          // depends_on chains) matches CRS but not lattice. Probe EVERY
-          // distinct source's profile at plan time (the reference opens
-          // every source, sources.py:179-210 — these are metadata-only
-          // reads, distributed here): a mixed-resolution source set must
-          // not take the aligned shortcut just because one sampled source
-          // happens to match the grid.
+          // depends_on chains) matches CRS but not lattice, and a source
+          // spanning several tiles or offset by part of a block matches
+          // resolution but not block corners. Probe EVERY distinct
+          // source's profile at plan time (the reference opens every
+          // source, sources.py:179-210 — these are metadata-only reads,
+          // distributed here): a mixed source set must not take the
+          // aligned shortcut just because one sampled source happens to
+          // sit on the grid's blocks; the rest warp in the same CRS.
           val aligned = srcEpsg == gridEpsg && {
             import spark.implicits._
             val distinctUris = catalog0.select("uri").distinct().as[String].collect()
             require(distinctUris.nonEmpty,
               s"no sources found for ${spec.dataset}/${spec.version}: " +
                 s"catalog resolved from ${uris.mkString(", ")} is empty")
-            val resolutions = GeoTiffSpark.harvestResolutions(spark, distinctUris.toSeq)
-            resolutions.forall { case (xres, yres) =>
-              math.abs(xres - grid.xres) <= 1e-9 * grid.xres &&
-                math.abs(yres - grid.yres) <= 1e-9 * grid.yres
-            }
+            GeoTiffSpark.harvestResolutions(spark, distinctUris.toSeq)
+              .forall(GeoTiffSpark.onBlockLattice(_, grid))
           }
           val (catalog, reader) =
             if (aligned) (catalog0, GeoTiffSpark.reader)
@@ -248,18 +249,13 @@ object Pixetl {
           }.count()
         }
       }
-      val derived = LayerJob.derive(spec, tiles, written)
-      // streamed manifest write (zoom-22-safe) + optional PAM sidecars
-      LayerJob.writeTilesGeojson(derived.manifest, s"$outDir/tiles.geojson",
-        if (spec.computeStats) Some(derived.tileStats) else None)
-      if (spec.computeStats) {
-        val g = spec.gridDef
-        GeoTiffSpark.writeStatsSidecars(derived.tileStats, outDir,
-          g.cols.toLong * g.rows).count()
-      }
+      // one pass over the sink's rows streams tiles.geojson (zoom-22-safe)
+      // and folds the extent; the status tally comes from counts
+      val (extent, status) = LayerJob.writeTilesGeojson(spec, tiles, written,
+        s"$outDir/tiles.geojson")
       Files.writeString(Paths.get(s"$outDir/extent.geojson"),
-        LayerJob.renderExtentGeojson(derived.extent))
-      derived.status.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+        LayerJob.renderExtentGeojson(extent))
+      status.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     } finally pins.close()
   }
 }

@@ -28,14 +28,30 @@ object Raster {
     * tile sink, which folds a tile's blocks into one partial per band. */
   final case class StatsPartial(mn: Double, mx: Double, sum: Double, sumsq: Double,
                                 cnt: Long) {
-    /** Two partials combined the way [[combineStats]]' min/max/sum do it
-      * (Spark SQL double ordering: NaN largest). */
+    /** Two partials combined: min, max and sums under Spark SQL double
+      * ordering (NaN largest), as the block fold takes them. */
     def merge(o: StatsPartial): StatsPartial = {
       import graft.functions.BlockKernels.cmp
       StatsPartial(if (cmp(o.mn, mn) < 0) o.mn else mn, if (cmp(o.mx, mx) > 0) o.mx else mx,
         sum + o.sum, sumsq + o.sumsq, cnt + o.cnt)
     }
+
+    /** A3 final: the one finisher of a band's statistics. A band with no
+      * valid pixel (`cnt` = 0) has none — all four are NaN, which the
+      * manifest renders as null and the PAM sidecar omits. Bit-identical
+      * to the SQL form `s / n`, `sqrt(greatest(ss / n - pow(s / n, 2), 0))`
+      * (Spark's `pow` is `StrictMath.pow`). */
+    def finish: BandStats =
+      if (cnt == 0) BandStats(Double.NaN, Double.NaN, Double.NaN, Double.NaN, 0L)
+      else {
+        val mean = sum / cnt
+        BandStats(mn, mx, mean,
+          math.sqrt(math.max(sumsq / cnt - StrictMath.pow(mean, 2), 0.0)), cnt)
+      }
   }
+
+  /** A band's published A3 statistics ([[StatsPartial.finish]]). */
+  final case class BandStats(min: Double, max: Double, mean: Double, std: Double, n: Long)
 
   /** Expand a tiles seed into its block grid, distributed (operator:
     * tile→windows flatMap, `raster_src_tile.py:328-378`). Generates
@@ -177,7 +193,7 @@ object Raster {
   /** Per-block partial stats (min/max/sum/sumsq/count) in ONE array pass.
     * This is the map-side combine of operator A3: per-band stats over a
     * 10-Gpx tile never explode pixels into rows — blocks fold to 5 numbers
-    * each, then an ordinary groupBy combines ~10k partials per tile.
+    * each, then ~10k partials per tile merge ([[StatsPartial.merge]]).
     * At 100 TB this is the difference between a shuffle of 10^13 pixel rows
     * and 10^7 partial rows. Primitive fold kernel ([[graft.functions
     * .BlockStats]]), bit-identical to the HOF `aggregate` it replaced. */
@@ -188,35 +204,16 @@ object Raster {
   }
 
   /** One [[blockPartialStats]] per band of a block, in band order: the
-    * `stats` column the tile sink returns per tile and
-    * [[graft.plans.LayerJob.derive]] combines. Nulls and `noData` pixels
-    * are invalid — the [[validMask]] rule, applied inside the fold. */
+    * partials the tile sink folds per tile ([[StatsPartial]]). Nulls and
+    * `noData` pixels are invalid — the [[validMask]] rule, applied inside
+    * the fold — and a null band array (a band no source covers) folds to
+    * the empty partial. */
   def bandPartials(bands: Seq[Column], noData: Option[Double]): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    array(bands.map(b => ColumnBridge.column(graft.functions.BlockStats(
-      ColumnBridge.expression(b), None, noData))): _*)
-  }
-
-  /** Combine block partials into per-(tile, band) statistics (A3 final).
-    * A key with no valid pixel (`n` = 0) has no statistics: all four are
-    * NaN, which the manifest renders as null and the PAM sidecar omits. */
-  def combineStats(blocks: DataFrame, keys: Seq[String]): DataFrame = {
-    val p = col("partial")
-    def valid(c: Column): Column = when(col("n") > 0, c).otherwise(lit(Double.NaN))
-    blocks
-      .groupBy(keys.map(col): _*)
-      .agg(
-        min(p("mn")).as("stat_min"),
-        max(p("mx")).as("stat_max"),
-        sum(p("sum")).as("s"),
-        sum(p("sumsq")).as("ss"),
-        sum(p("cnt")).as("n"))
-      .withColumn("stat_min", valid(col("stat_min")))
-      .withColumn("stat_max", valid(col("stat_max")))
-      .withColumn("stat_mean", valid(col("s") / col("n")))
-      .withColumn("stat_std", valid(
-        sqrt(greatest(col("ss") / col("n") - pow(col("s") / col("n"), 2), lit(0.0)))))
-      .drop("s", "ss")
+    val empty = struct(lit(Double.MaxValue).as("mn"), lit(Double.MinValue).as("mx"),
+      lit(0.0).as("sum"), lit(0.0).as("sumsq"), lit(0L).as("cnt"))
+    array(bands.map(b => coalesce(ColumnBridge.column(graft.functions.BlockStats(
+      ColumnBridge.expression(b), None, noData)), empty)): _*)
   }
 
   /** Per-pixel histogram bucket index (A4 map side; `gdalinfo -hist`

@@ -1,10 +1,14 @@
 package graft.plans
 
-import graft.core.LayerSpec
+import graft.core.{Caching, LayerSpec}
+import graft.core.grid.Bounds
 import graft.functions.{GeoFunctions, GeomUnionAgg}
 import graft.operators.Raster
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.operators.Raster.{BandStats, StatsPartial}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.locationtech.jts.geom.Geometry
+import scala.jdk.CollectionConverters._
 
 /** The end-to-end raster layer job — the Spark re-expression of the pixetl
   * CLI lifecycle (SURVEY §3.1). All of the reference's process boundaries
@@ -33,30 +37,41 @@ object LayerJob {
 
   /** The plan-side tile sets of a publish — footprint joins, no pixels:
     * the seed after the subset filter (F1), the tiles a source covers (F2),
-    * the tiles left to build (F3) and the already-published ones it skips.
-    * A pending tile that yields no pixels is tallied as `emptyStatus`. */
+    * and the tiles left to build (F3); the rest of `withSource` is already
+    * published and skipped. A pending tile that yields no pixels is
+    * tallied as `emptyStatus`. */
   final case class Tiles(seed: DataFrame, withSource: DataFrame, pending: DataFrame,
-                         existing: Option[DataFrame], emptyStatus: String)
-
-  /** What a publish reports beside its tiles. */
-  final case class Derived(
-      tileStats: DataFrame,  // per (tile_id, band) A3 stats
-      manifest: DataFrame,   // per-tile footprint + metadata (tiles.geojson rows)
-      extent: DataFrame,     // 1-row geometric union (extent.geojson)
-      status: DataFrame)     // status tally (A8)
+                         emptyStatus: String)
 
   /** A layer job's plan (raster here, vector in [[VectorJob]]): `blocks`
-    * are the output pixel blocks (post calc/fill); `tileStats`,
-    * `manifest`, `extent` and `status` are [[derive]]d from the non-empty
-    * ones on first use, and each re-runs the pixel plane when executed. A
-    * publish derives them from its sink's rows instead (`Pixetl.run`). */
-  final class Result(val blocks: DataFrame, val tiles: Tiles, derived0: => Derived,
+    * are the output pixel blocks (post calc/fill). `tileStats`,
+    * `manifest`, `extent` and `status` are small local frames, [[derive]]d
+    * on first use from a per-tile fold of `partials` (per-block
+    * [[Raster.bandPartials]] of the non-empty blocks), which re-runs the
+    * pixel plane. A publish derives them from its sink's rows instead
+    * (`Pixetl.run`). */
+  final class Result(val blocks: DataFrame, val tiles: Tiles, spec: LayerSpec,
+                     partials: DataFrame,
                      val tileHistogram: Option[DataFrame]) { // per (tile_id, band) A4 buckets
-    private lazy val derived = derived0
-    def tileStats: DataFrame = derived.tileStats
-    def manifest: DataFrame = derived.manifest
-    def extent: DataFrame = derived.extent
-    def status: DataFrame = derived.status
+    private lazy val derived = {
+      val spark = blocks.sparkSession
+      import spark.implicits._
+      val manifest = Vector.newBuilder[(String, Double, Double, Double, Double, String, String)]
+      val stats = Vector.newBuilder[(String, Int, Double, Double, Double, Double, Long)]
+      val (extent, status) = derive(spec, tiles, foldTiles(partials)) { t =>
+        val b = t.bounds
+        manifest += ((t.tileId, b.left, b.bottom, b.right, b.top, t.uri, t.geometry))
+        for ((s, i) <- t.stats.zipWithIndex)
+          stats += ((t.tileId, i + 1, s.min, s.max, s.mean, s.std, s.n))
+      }
+      (manifest.result().toDF("tile_id", "left", "bottom", "right", "top", "uri", "geometry"),
+        stats.result().toDF("tile_id", "band", "stat_min", "stat_max", "stat_mean", "stat_std", "n"),
+        extent, status)
+    }
+    def manifest: DataFrame = derived._1  // per-tile footprint + uri (tiles.geojson rows)
+    def tileStats: DataFrame = derived._2 // per (tile_id, band) A3 stats
+    def extent: DataFrame = derived._3    // 1-row geometric union (extent.geojson)
+    def status: DataFrame = derived._4    // status tally (A8)
   }
 
   def run(spark: SparkSession, spec: LayerSpec, catalog: DataFrame,
@@ -81,7 +96,9 @@ object LayerJob {
     // the interiors-intersect test of raster_src_tile.py:155-161.
     val tileEnv = GeoFunctions.st_makeEnvelope(col("left"), col("bottom"), col("right"), col("top"))
     val inBandCount = spec.sourceUri.map(_.length).getOrElse(1)
-    val withSource =
+    // pinned: the sink reads it (through `pending`), and so does the
+    // status count after it — without a second catalog broadcast
+    val withSource = Caching.shared(
       if (spec.unionBands || inBandCount == 1)
         subsetted.join(broadcast(cat.select(col("footprint").as("src_fp"))),
           GeoFunctions.st_intersectsInterior(tileEnv, col("src_fp")), "left_semi")
@@ -96,14 +113,14 @@ object LayerJob {
         require(!layerGeom.isEmpty, "Input bands do not overlap") // layers.py:255-257
         subsetted.filter(
           GeoFunctions.st_intersectsInterior(tileEnv, lit(GeoFunctions.write(layerGeom))))
-      }
+      })
 
-    // F3/J6: skip already-materialized tiles unless overwrite
-    val (pending, existingTiles) = existing match {
+    // F3/J6: skip already-materialized tiles unless overwrite (pinned
+    // like withSource)
+    val pending = existing match {
       case Some(ex) if !overwrite =>
-        (withSource.join(broadcast(ex), Seq("tile_id"), "left_anti"),
-         Some(withSource.join(broadcast(ex), Seq("tile_id"), "left_semi")))
-      case _ => (withSource, None)
+        Caching.shared(withSource.join(broadcast(ex), Seq("tile_id"), "left_anti"))
+      case _ => withSource
     }
 
     // J2: file assignment — which files feed which tile, per band.
@@ -230,7 +247,7 @@ object LayerJob {
     val nonEmpty = nonEmptyBare.join(
       broadcast(pending.select("tile_id", "left", "bottom", "right", "top")), "tile_id")
 
-    val tiles = Tiles(subsetted, withSource, pending, existingTiles, "skipped (has no data)")
+    val tiles = Tiles(subsetted, withSource, pending, "skipped (has no data)")
 
     // A4 per (tile, band) when requested: per-block bucket partials summed
     // elementwise — the gdalinfo -hist shape {count, min, max, buckets[]}
@@ -258,159 +275,206 @@ object LayerJob {
           .drop("m"))
       }
 
-    new Result(nonEmpty, tiles, derive(spec, tiles, nonEmptyBare.select(col("tile_id"),
+    new Result(nonEmpty, tiles, spec, nonEmptyBare.select(col("tile_id"),
       Raster.bandPartials((1 to spec.bandCount).map(i => col(s"band_$i")), pt.noData)
-        .as("stats"))), tileHist)
+        .as("stats")), tileHist)
   }
 
-  /** A3 stats, K3 manifest rows, A6 extent and A8 status tally of a publish,
-    * from the tiles it processed. `processed` carries `tile_id` and a
-    * `stats` array of per-band A3 partials ([[Raster.bandPartials]]), one
-    * row per block or per tile: the tile sink returns exactly such rows,
-    * so a publish derives all four from them plus the plan-side
-    * [[Tiles]], without running the pixel plane again. */
-  def derive(spec: LayerSpec, tiles: Tiles, processed: DataFrame): Derived = {
-    // A3 per (tile, band): a tiny shuffle of partials
-    val tileStats = Raster.combineStats(
-      processed.select(col("tile_id"), posexplode(col("stats")).as(Seq("pos", "partial")))
-        .select(col("tile_id"), (col("pos") + 1).as("band"), col("partial")),
-      Seq("tile_id", "band"))
-
-    // manifest rows: tile footprint + dst uri + band metadata (K3 shape)
-    val processedIds = processed.select("tile_id")
-    val tileEnv = GeoFunctions.st_makeEnvelope(col("left"), col("bottom"), col("right"), col("top"))
-    val manifest = tiles.pending
-      .join(processedIds, Seq("tile_id"), "left_semi")
-      .select(col("tile_id"), col("left"), col("bottom"), col("right"), col("top"),
-        concat(lit(spec.prefix() + "/"), col("tile_id"), lit(".tif")).as("uri"),
-        GeoFunctions.st_asGeoJson(tileEnv).as("geometry"))
-
-    // A6: geometric union of processed footprints → extent.geojson
-    val extent = manifest
-      .select(tileEnv.as("g"))
-      .agg(GeomUnionAgg.column(col("g")).as("extent_wkb"))
-      .select(GeoFunctions.st_asGeoJson(col("extent_wkb")).as("geometry"))
-
-    // A8: status algebra (pipe.py:137-168; skip reasons raster_pipe.py:62-81)
-    def tally(ids: DataFrame, status: String) =
-      ids.select("tile_id").withColumn("status", lit(status))
-    val status = Seq(
-      tally(processedIds.distinct(), "processed"),
-      tally(tiles.pending.join(processedIds, Seq("tile_id"), "left_anti"), tiles.emptyStatus),
-      tally(tiles.seed.join(tiles.withSource, Seq("tile_id"), "left_anti"),
-        "skipped (does not intersect)")) ++
-      tiles.existing.map(tally(_, "existing"))
-    Derived(tileStats, manifest, extent,
-      status.reduce(_ unionByName _).groupBy("status").agg(count(lit(1)).as("n")))
-  }
-  /** Manifest sink (K3): render tiles.geojson + extent.geojson strings.
-    * Aggregated rows are tiny (one per tile) — rendered on the driver like
-    * the reference (`utils/upload_geometries.py:31-59`). When `tileStats`
-    * is given, each feature carries the per-band stats of the reference's
-    * `Metadata.bands` shape (`models/pydantic.py:81-114`), NaN-sanitized
-    * like `utils/geometry.py:51-59`. */
-  def renderTilesGeojson(manifest: DataFrame, tileStats: Option[DataFrame] = None): String = {
-    // Deep-zoom guard (VERDICT r15 #5): a WM z≥14 grid is millions of
-    // tiles, and the collect-based render below holds Row objects + stats
-    // maps + per-feature strings + the mkString doubling — ~6-8× the
-    // output size in driver transients. Past the threshold, route through
-    // the streaming writer (one partition of driver memory + the file) and
-    // return the read-back string — the string itself is the caller's ask
-    // and the only O(rows) term left. Below it, keep the driver render:
-    // it is the reference-identical code path (upload_geometries.py:31-59)
-    // and LayerJobSpec asserts the two renderers byte-identical.
-    //
-    // NOTE (ADVICE r16): even the streamed branch returns one driver-side
-    // String — the API's contract. Callers with multi-GB manifests (WM
-    // z≥14) should call [[writeTilesGeojson]] directly and keep a path;
-    // this method's String result is bounded only by driver heap. The
-    // threshold probe is a LIMIT count (stops scanning at the threshold),
-    // not a full count over millions of rows on every small render.
-    if (manifest.limit(RenderCollectMax.toInt + 1).count() > RenderCollectMax) {
-      val tmp = java.nio.file.Files.createTempFile("tiles-", ".geojson")
-      try {
-        writeTilesGeojson(manifest, tmp.toString, tileStats)
-        new String(java.nio.file.Files.readAllBytes(tmp),
-          java.nio.charset.StandardCharsets.UTF_8)
-      } finally java.nio.file.Files.deleteIfExists(tmp)
-    } else renderTilesCollect(manifest, tileStats)
+  /** Per-tile fold of per-block band partials (`tile_id`, `stats`:
+    * [[Raster.bandPartials]]) into the tile sink's row shape: one row per
+    * tile, `stats` finalized per band ([[StatsPartial.finish]]). */
+  private def foldTiles(partials: DataFrame): DataFrame = {
+    val spark = partials.sparkSession
+    import spark.implicits._
+    partials.select("tile_id", "stats").as[(String, Seq[StatsPartial])]
+      .groupByKey(_._1)
+      .reduceGroups((a, b) => (a._1, a._2.zip(b._2).map { case (x, y) => x.merge(y) }))
+      .map { case (id, (_, ps)) => (id, ps.map(_.finish)) }
+      .toDF("tile_id", "stats")
   }
 
-  /** Manifests above this row count render via [[writeTilesGeojson]]. */
-  private[graft] val RenderCollectMax = 100000L
+  /** One processed tile as [[derive]] hands it on: its K3 manifest fields
+    * and its A3 stats (band order). */
+  final case class Published(tileId: String, bounds: Bounds, uri: String,
+                             stats: Seq[BandStats]) {
+    def footprint: Geometry =
+      GeoFunctions.envelope(bounds.left, bounds.bottom, bounds.right, bounds.top)
+    def geometry: String = GeoFunctions.toGeoJson(footprint)
+  }
 
-  private def renderTilesCollect(manifest: DataFrame,
-                                 tileStats: Option[DataFrame]): String = {
-    val statsByTile: Map[String, Seq[String]] = tileStats match {
-      case None => Map.empty
-      case Some(st) => st.orderBy("tile_id", "band").collect().toSeq.groupBy(
-          _.getAs[String]("tile_id")).view.mapValues(_.map { r =>
-          def num(name: String): String = {
-            val v = r.getAs[Double](name)
-            if (v.isNaN || v.isInfinite) "null" else v.toString
-          }
-          s"""{"band":${r.getAs[Int]("band")},"min":${num("stat_min")},""" +
-            s""""max":${num("stat_max")},"mean":${num("stat_mean")},""" +
-            s""""std_dev":${num("stat_std")},"count":${r.getAs[Long]("n")}}"""
-        }).toMap
+  /** Tiles per partition of [[derive]]'s pass: the driver holds at most
+    * this many (tile_id, stats) rows at a time. */
+  private val PassTiles = 1L << 20
+
+  /** Footprints buffered per union step of the extent fold. */
+  private val UnionBatch = 4096
+
+  /** The one derivation of what a publish reports beside its tiles, from
+    * `processed`: one row per tile with `tile_id` and `stats` (finalized
+    * per-band [[BandStats]]) — the tile sink's rows, or [[foldTiles]] of
+    * block partials. Two Spark jobs:
+    *  - one count over the plan-side [[Tiles]] ([[tileCounts]]);
+    *  - one pass over `processed` in tile_id order, which hands each tile
+    *    to `onTile` (K3 manifest, A3 stats), folds the A6 extent — the
+    *    union of the tile footprints, [[GeomUnionAgg.unionAll]] over
+    *    batches — and counts the processed tiles. The pass streams: the
+    *    driver holds one partition of at most [[PassTiles]] rows at a time.
+    *
+    * Returns the extent (one `geometry` row, null when nothing was
+    * processed) and the A8 status tally (`status`, `n`; pipe.py:137-168,
+    * skip reasons raster_pipe.py:62-81) as small local frames. The tally
+    * comes from counts: processed; empty = |pending| − processed;
+    * does-not-intersect = |seed| − |withSource|; existing = |withSource| −
+    * |pending|. Zero tallies are omitted and the rest sorted by status. */
+  def derive(spec: LayerSpec, tiles: Tiles, processed: DataFrame)
+            (onTile: Published => Unit): (DataFrame, DataFrame) = {
+    val spark = processed.sparkSession
+    import spark.implicits._
+    val (seed, withSource, pending) = tileCounts(tiles)
+    val parts = ((pending + PassTiles - 1) / PassTiles).toInt
+    val rows = processed.select("tile_id", "stats")
+    val ordered =
+      if (parts <= 1) rows.coalesce(1) else rows.repartitionByRange(parts, col("tile_id"))
+    val grid = spec.gridDef
+    val prefix = spec.prefix()
+    var extent: Geometry = null
+    val batch = scala.collection.mutable.ArrayBuffer.empty[Geometry]
+    def union(): Unit = {
+      extent = GeomUnionAgg.unionAll(Option(extent).toSeq ++ batch)
+      batch.clear()
     }
-    val feats = manifest.orderBy("tile_id").collect().map { r =>
-      val tileId = r.getAs[String]("tile_id")
-      val bands = statsByTile.get(tileId)
-        .map(bs => s""","bands":[${bs.mkString(",")}]""").getOrElse("")
-      s"""{"type":"Feature","geometry":${r.getAs[String]("geometry")},""" +
-        s""""properties":{"name":"${r.getAs[String]("uri")}"$bands}}"""
+    var n = 0L
+    val it = ordered.sortWithinPartitions("tile_id")
+      .as[(String, Seq[BandStats])].toLocalIterator()
+    while (it.hasNext) {
+      val (id, stats) = it.next()
+      val t = Published(id, grid.tileBounds(id), s"$prefix/$id.tif", stats)
+      onTile(t)
+      batch += t.footprint
+      if (batch.size == UnionBatch) union()
+      n += 1
     }
-    s"""{"type":"FeatureCollection","features":[${feats.mkString(",")}]}"""
+    if (batch.nonEmpty) union()
+    val status = Seq("processed" -> n, tiles.emptyStatus -> (pending - n),
+        "skipped (does not intersect)" -> (seed - withSource),
+        "existing" -> (withSource - pending))
+      .groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > 0).toSeq.sorted
+    (Seq(Option(extent).map(GeoFunctions.toGeoJson)).toDF("geometry"),
+      status.toDF("status", "n"))
   }
 
-  /** Streamed K3 sink: the same tiles.geojson as [[renderTilesGeojson]],
-    * but features are rendered as a DataFrame column and streamed to the
-    * file via `toLocalIterator` — one partition of driver memory instead
-    * of one giant string, so a zoom-22 manifest (268 M tiles) writes
-    * without materializing. Scheme-qualified paths go through Hadoop FS. */
-  def writeTilesGeojson(manifest: DataFrame, path: String,
-                        tileStats: Option[DataFrame] = None): Unit = {
-    def num(c: Column): Column =
-      when(c.isNull || isnan(c) || c === Double.PositiveInfinity ||
-        c === Double.NegativeInfinity, lit("null")).otherwise(c.cast("string"))
-    val withBands = tileStats match {
-      case None => manifest.withColumn("bands_json", lit(null).cast("string"))
-      case Some(st) =>
-        val entry = concat(lit("{\"band\":"), col("band").cast("string"),
-          lit(",\"min\":"), num(col("stat_min")), lit(",\"max\":"), num(col("stat_max")),
-          lit(",\"mean\":"), num(col("stat_mean")), lit(",\"std_dev\":"), num(col("stat_std")),
-          lit(",\"count\":"), col("n").cast("string"), lit("}"))
-        val frags = st.groupBy("tile_id").agg(
-          array_join(transform(
-            sort_array(collect_list(struct(col("band"), entry.as("e")))), s => s("e")), ",")
-            .as("bands_json"))
-        manifest.join(frags, Seq("tile_id"), "left")
+  /** |seed|, |withSource| and |pending| of a publish in ONE Spark job: an
+    * RDD aggregate over the union of the tagged sets, so no exchange or
+    * query stage of its own (the raster sets are pinned, and the sink has
+    * already materialized them). A relation passed as more than one set
+    * (vector passes the seed for all three) is counted once. */
+  private def tileCounts(t: Tiles): (Long, Long, Long) = {
+    val spark = t.seed.sparkSession
+    import spark.implicits._
+    val all = Seq(t.seed, t.withSource, t.pending)
+    val sets = all.foldLeft(Vector.empty[DataFrame])((s, df) => if (s.exists(_ eq df)) s else s :+ df)
+    val n = sets.zipWithIndex.map { case (df, i) => df.select(lit(i).as("set")) }
+      .reduce(_ union _).as[Int].rdd
+      .aggregate(new Array[Long](sets.size))((acc, i) => { acc(i) += 1; acc },
+        (a, b) => { for (i <- a.indices) a(i) += b(i); a })
+    val Seq(seed, withSource, pending) = all.map(df => n(sets.indexWhere(_ eq df)))
+    (seed, withSource, pending)
+  }
+
+  /** One tiles.geojson feature (K3): footprint, dst uri and, when given,
+    * each band's stats in the reference's `Metadata.bands` shape
+    * (`models/pydantic.py:81-114`), NaN-sanitized like
+    * `utils/geometry.py:51-59`. */
+  private def feature(geometry: String, uri: String,
+                      bands: Option[Seq[(Int, BandStats)]]): String = {
+    def num(v: Double): String = if (v.isNaN || v.isInfinite) "null" else v.toString
+    val props = bands.fold("")(_.map { case (b, s) =>
+      s"""{"band":$b,"min":${num(s.min)},"max":${num(s.max)},"mean":${num(s.mean)},""" +
+        s""""std_dev":${num(s.std)},"count":${s.n}}"""
+    }.mkString(""","bands":[""", ",", "]"))
+    s"""{"type":"Feature","geometry":$geometry,"properties":{"name":"$uri"$props}}"""
+  }
+
+  /** A FeatureCollection written to `out`: `body` emits its features. */
+  private def featureCollection[T](out: java.io.Writer)(body: (String => Unit) => T): T = {
+    out.write("{\"type\":\"FeatureCollection\",\"features\":[")
+    var first = true
+    val result = body { f =>
+      if (!first) out.write(",")
+      out.write(f)
+      first = false
     }
-    val feats = withBands.orderBy("tile_id").select(concat(
-      lit("{\"type\":\"Feature\",\"geometry\":"), col("geometry"),
-      lit(",\"properties\":{\"name\":\""), col("uri"), lit("\""),
-      coalesce(concat(lit(",\"bands\":["), col("bands_json"), lit("]")), lit("")),
-      lit("}}")).as("feat"))
+    out.write("]}")
+    result
+  }
+
+  /** [[featureCollection]] streamed to a file; scheme-qualified paths go
+    * through Hadoop FS. */
+  private def writeCollection[T](spark: SparkSession, path: String)
+                                (body: (String => Unit) => T): T = {
     val hp = new org.apache.hadoop.fs.Path(
       if (path.contains("://")) path
       else java.nio.file.Paths.get(path).toAbsolutePath.toString)
-    val fs = hp.getFileSystem(feats.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.setWriteChecksum(false) // no .crc droppings next to manifests
     val out = new java.io.BufferedWriter(
       new java.io.OutputStreamWriter(fs.create(hp, true), "UTF-8"), 1 << 20)
-    try {
-      out.write("{\"type\":\"FeatureCollection\",\"features\":[")
-      var first = true
-      val it = feats.toLocalIterator()
-      while (it.hasNext) {
-        if (!first) out.write(",")
-        out.write(it.next().getString(0))
-        first = false
-      }
-      out.write("]}")
-    } finally out.close()
+    try featureCollection(out)(body) finally out.close()
   }
+
+  /** A publish's K3 sink: [[derive]] over the tile sink's rows, streaming
+    * each processed tile's feature into tiles.geojson at `path` — with
+    * its per-band stats when the spec computes them. Returns derive's
+    * (extent, status). */
+  def writeTilesGeojson(spec: LayerSpec, tiles: Tiles, processed: DataFrame,
+                        path: String): (DataFrame, DataFrame) =
+    writeCollection(processed.sparkSession, path) { emit =>
+      derive(spec, tiles, processed) { t =>
+        emit(feature(t.geometry, t.uri,
+          if (spec.computeStats) Some(t.stats.zipWithIndex.map { case (s, i) => (i + 1, s) })
+          else None))
+      }
+    }
+
+  /** The features of a manifest frame (`tile_id`, `uri`, `geometry`) in
+    * tile_id order, each with its `tileStats` rows (per (tile_id, band)
+    * `stat_min`, `stat_max`, `stat_mean`, `stat_std`, `n`) when given —
+    * streamed via `toLocalIterator`, one partition of driver memory. */
+  private def manifestFeatures(manifest: DataFrame,
+                               tileStats: Option[DataFrame]): Iterator[String] = {
+    val withBands = tileStats match {
+      case None => manifest.withColumn("bands", lit(null))
+      case Some(st) => manifest.join(st.groupBy("tile_id").agg(sort_array(collect_list(
+        struct(col("band"), col("stat_min"), col("stat_max"), col("stat_mean"),
+          col("stat_std"), col("n")))).as("bands")), Seq("tile_id"), "left")
+    }
+    withBands.orderBy("tile_id").select("geometry", "uri", "bands")
+      .toLocalIterator().asScala.map { r =>
+        feature(r.getString(0), r.getString(1), Option(r.getSeq[Row](2)).map(_.map(b =>
+          (b.getInt(0), BandStats(b.getDouble(1), b.getDouble(2), b.getDouble(3),
+            b.getDouble(4), b.getLong(5))))))
+      }
+  }
+
+  /** Manifest sink (K3) for a manifest frame: the tiles.geojson string of
+    * [[writeTilesGeojson]]. The string is the caller's ask and bounded
+    * only by driver heap; deep-zoom manifests (WM z≥14) should stream to
+    * a path instead. */
+  def renderTilesGeojson(manifest: DataFrame, tileStats: Option[DataFrame] = None): String = {
+    val out = new java.io.StringWriter
+    featureCollection(out)(emit => manifestFeatures(manifest, tileStats).foreach(emit))
+    out.toString
+  }
+
+  /** Streamed K3 sink for a manifest frame: features stream to the file
+    * via `toLocalIterator` — one partition of driver memory instead of one
+    * giant string, so a zoom-22 manifest (268 M tiles) writes without
+    * materializing. Scheme-qualified paths go through Hadoop FS. */
+  def writeTilesGeojson(manifest: DataFrame, path: String,
+                        tileStats: Option[DataFrame] = None): Unit =
+    writeCollection(manifest.sparkSession, path) { emit =>
+      manifestFeatures(manifest, tileStats).foreach(emit)
+    }
 
   def renderExtentGeojson(extent: DataFrame): String = {
     val rows = extent.collect()

@@ -110,9 +110,8 @@ object VectorJob {
 
     // K3 manifests for vector layers too (pipes/pipe.py:163-167); a tile
     // without burnt pixels does not intersect (vector_pipe.py:62)
-    val tileSets = LayerJob.Tiles(tiles, tiles, tiles, None, "skipped (does not intersect)")
-    new LayerJob.Result(withTile, tileSets, LayerJob.derive(spec, tileSets,
-      withTile.select(col("tile_id"),
-        Raster.bandPartials(Seq(col("band_1")), spec.pixelType.noData).as("stats"))), None)
+    val tileSets = LayerJob.Tiles(tiles, tiles, tiles, "skipped (does not intersect)")
+    new LayerJob.Result(withTile, tileSets, spec, withTile.select(col("tile_id"),
+      Raster.bandPartials(Seq(col("band_1")), spec.pixelType.noData).as("stats")), None)
   }
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.core.LayerSpec
 import graft.core.grid.Grid
-import graft.operators.Raster.StatsPartial
+import graft.operators.Raster.{BandStats, StatsPartial}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,11 +22,17 @@ object GeoTiffSpark {
   /** Write one GeoTIFF per tile under `outDir` (`<tile_id>.tif`), returning
     * (tile_id, path, n_blocks, stats) rows. `blocks` must carry tile_id,
     * left/top, block_row, block_col, width, height and band_1..band_N
-    * arrays. `stats` holds each band's A3 partial over the tile's base
-    * blocks ([[StatsPartial]], band order): the
-    * reference takes a tile's stats from the tile it just wrote
-    * (`tiles/tile.py:143-172`), so manifests and sidecars need no second
-    * pass over the pixels ([[graft.plans.LayerJob.derive]]).
+    * arrays. `stats` holds each band's A3 statistics over the tile's base
+    * blocks ([[graft.operators.Raster.BandStats]], band order), folded and
+    * finalized in the task that writes the tile: the reference takes a
+    * tile's stats from the tile it just wrote (`tiles/tile.py:143-172`).
+    * With `spec.computeStats` the same task writes the tile's PAM sidecar
+    * `<tile_id>.tif.aux.xml` ([[pamXml]]) right after the `.tif`, so a
+    * sidecar never exists without its tile. Manifests need no second pass
+    * over the pixels ([[graft.plans.LayerJob.derive]]).
+    *
+    * Blocks reach the writer sorted by (tile, level, block row, block
+    * column), so a tile's byte layout does not depend on shuffle order.
     *
     * K2 upload: a scheme-qualified `outDir` (s3a://, file://, …) routes
     * each tile through a local temp file then a Hadoop-FS
@@ -267,19 +273,21 @@ object GeoTiffSpark {
           graft.functions.BlockKernels.fillNulls(col(b), ndFill), mode).as(b)) :+
         when(col("level") === 0, stats).as("stats")): _*)
       .repartition(col("tile_id"))
-      .sortWithinPartitions("tile_id")
+      .sortWithinPartitions("tile_id", "level", "block_row", "block_col")
       .select(col("tile_id"), col("left"), col("top"), col("block_row"),
         col("block_col"), col("level"),
         array(bandCols0.map(col): _*).as("bands"), col("stats"))
       .as[(String, Double, Double, Int, Int, Int, Seq[Array[Byte]],
         Seq[StatsPartial])]
+    val sidecars = spec.computeStats
+    val totalPixels = grid.cols.toLong * grid.rows
     packed
       .mapPartitions { it0 =>
         HadoopConfs.install(confBytes)
         val it = it0.buffered
-        new Iterator[(String, String, Int, Seq[StatsPartial])] {
+        new Iterator[(String, String, Int, Seq[BandStats])] {
           override def hasNext: Boolean = it.hasNext
-          override def next(): (String, String, Int, Seq[StatsPartial]) = {
+          override def next(): (String, String, Int, Seq[BandStats]) = {
             val tileId = it.head._1
             var writer: GeoTiff.Writer = null
             var n = 0
@@ -313,7 +321,17 @@ object GeoTiffSpark {
             }
             padCloseUpload(writer, bandCount, block, noData, written,
               viaFs, localPath, path)
-            (tileId, path, n, tileStats)
+            val bands = tileStats.map(_.finish)
+            if (sidecars) {
+              val aux = new org.apache.hadoop.fs.Path(
+                if (viaFs) s"$path.aux.xml"
+                else java.nio.file.Paths.get(s"$path.aux.xml").toAbsolutePath.toString)
+              val fs = aux.getFileSystem(HadoopConfs.get)
+              fs.setWriteChecksum(false)
+              val out = fs.create(aux, true)
+              try out.write(pamXml(bands, totalPixels).getBytes("UTF-8")) finally out.close()
+            }
+            (tileId, path, n, bands)
           }
         }
       }
@@ -417,7 +435,7 @@ object GeoTiffSpark {
         bandCols.map(b => graft.functions.BlockKernels.packBand(
           graft.functions.BlockKernels.fillNulls(col(b), ndFill), mode).as(b))): _*)
       .repartition(col("tile_id"))
-      .sortWithinPartitions("tile_id")
+      .sortWithinPartitions("tile_id", "level", "block_row", "block_col")
       .select(col("tile_id"), col("left"), col("top"), col("block_row"),
         col("block_col"), col("level"),
         array(bandCols.map(col): _*).as("bands"))
@@ -474,55 +492,35 @@ object GeoTiffSpark {
       .toDF("tile_id", "path")
   }
 
-  /** K1 stats sidecar: one `<tile_id>.tif.aux.xml` per tile next to the
-    * GeoTIFF — the GDAL PAM file `gdalinfo -stats` creates and the
-    * reference uploads (`tiles/tile.py:25,143-172`). Distributed: one task
-    * renders+writes each tile's XML through the Hadoop FS (scheme-aware).
-    * `tileStats` is LayerJob's per-(tile_id, band) A3 output. */
-  def writeStatsSidecars(tileStats: DataFrame, outDir: String, totalPixels: Long): DataFrame = {
-    val spark = tileStats.sparkSession
-    import spark.implicits._
-    val root = if (outDir.contains("://")) outDir
-      else java.nio.file.Paths.get(outDir).toAbsolutePath.toString
-    val confBytes = HadoopConfs.capture(spark.sparkContext.hadoopConfiguration)
-    tileStats
-      .select(col("tile_id"), col("band"), col("stat_min"), col("stat_max"),
-        col("stat_mean"), col("stat_std"), col("n"))
-      .as[(String, Int, Double, Double, Double, Double, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (tileId, rows) =>
-        HadoopConfs.install(confBytes)
-        val bands = rows.toSeq.sortBy(_._2).map { case (_, b, mn, mx, mean, std, n) =>
-          // an all-nodata tile has NO stats (NaN folds): omit the MDI
-          // entries like GDAL does rather than fabricate min=max=mean=0
-          def mdi(key: String, v: Double): Option[String] =
-            if (v.isNaN || v.isInfinite) None
-            else Some(s"""      <MDI key="$key">$v</MDI>""")
-          val pct = if (totalPixels <= 0) 100.0 else 100.0 * n / totalPixels
-          val stats = Seq(mdi("STATISTICS_MINIMUM", mn),
-            mdi("STATISTICS_MAXIMUM", mx), mdi("STATISTICS_MEAN", mean),
-            mdi("STATISTICS_STDDEV", std),
-            Some(s"""      <MDI key="STATISTICS_VALID_PERCENT">$pct</MDI>"""))
-            .flatten.mkString("\n")
-          s"""  <PAMRasterBand band="$b">
-             |    <Metadata>
-             |$stats
-             |    </Metadata>
-             |  </PAMRasterBand>""".stripMargin
-        }
-        val xml = s"<PAMDataset>\n${bands.mkString("\n")}\n</PAMDataset>\n"
-        val path = new org.apache.hadoop.fs.Path(s"$root/$tileId.tif.aux.xml")
-        val fs = path.getFileSystem(HadoopConfs.get)
-        fs.setWriteChecksum(false)
-        val out = fs.create(path, true)
-        try out.write(xml.getBytes("UTF-8")) finally out.close()
-        (tileId, path.toString)
-      }
-      .toDF("tile_id", "sidecar")
+  /** K1 stats sidecar: the GDAL PAM `<tile_id>.tif.aux.xml` that
+    * `gdalinfo -stats` creates and the reference uploads next to each tile
+    * (`tiles/tile.py:25,143-172`), for a tile's per-band stats (band
+    * order). `totalPixels` is the tile's pixel count, the base of
+    * `STATISTICS_VALID_PERCENT`. [[writeTiles]] writes it per tile. */
+  def pamXml(bands: Seq[BandStats], totalPixels: Long): String = {
+    val entries = bands.zipWithIndex.map { case (s, i) =>
+      // an all-nodata band has NO stats (NaN folds): omit the MDI entries
+      // like GDAL does rather than fabricate min=max=mean=0
+      def mdi(key: String, v: Double): Option[String] =
+        if (v.isNaN || v.isInfinite) None
+        else Some(s"""      <MDI key="$key">$v</MDI>""")
+      val pct = if (totalPixels <= 0) 100.0 else 100.0 * s.n / totalPixels
+      val stats = Seq(mdi("STATISTICS_MINIMUM", s.min),
+        mdi("STATISTICS_MAXIMUM", s.max), mdi("STATISTICS_MEAN", s.mean),
+        mdi("STATISTICS_STDDEV", s.std),
+        Some(s"""      <MDI key="STATISTICS_VALID_PERCENT">$pct</MDI>"""))
+        .flatten.mkString("\n")
+      s"""  <PAMRasterBand band="${i + 1}">
+         |    <Metadata>
+         |$stats
+         |    </Metadata>
+         |  </PAMRasterBand>""".stripMargin
+    }
+    s"<PAMDataset>\n${entries.mkString("\n")}\n</PAMDataset>\n"
   }
 
   /** PAM sidecar read-back: parse a `<tile>.tif.aux.xml` written by
-    * [[writeStatsSidecars]] (or by GDAL — same PAMDataset/PAMRasterBand/MDI
+    * [[writeTiles]] (or by GDAL — same PAMDataset/PAMRasterBand/MDI
     * schema) into per-band stats maps. A pipeline resuming over an
     * already-published tile set reads these instead of recomputing A3
     * (`tiles/tile.py:143-172` uploads them for exactly that reason). */
@@ -706,47 +704,88 @@ object GeoTiffSpark {
       .toDF("uri", "band", "file_band", "footprint", "data_type", "no_data", "epsg")
   }
 
-  /** Distinct (xres, yres) lattices across sources — metadata-only reads,
+  /** A source's pixel lattice: resolution, origin and internal tiling. */
+  final case class SourceLattice(xres: Double, yres: Double, originX: Double,
+                                 originY: Double, tileWidth: Int, tileHeight: Int)
+
+  /** Distinct pixel lattices across sources — metadata-only reads,
     * distributed like [[harvestCatalog]]. Used by the plan-time aligned-
     * reader probe: the aligned shortcut is only safe when EVERY source sits
-    * on the grid lattice, so the probe must see all profiles, not a sample
-    * (the reference opens every source, sources.py:179-210). */
-  def harvestResolutions(spark: SparkSession, uris: Seq[String]): Seq[(Double, Double)] = {
+    * on the grid's block lattice ([[onBlockLattice]]), so the probe must
+    * see all profiles, not a sample (the reference opens every source,
+    * sources.py:179-210). */
+  def harvestResolutions(spark: SparkSession, uris: Seq[String]): Seq[SourceLattice] = {
     import spark.implicits._
     val confBytes = HadoopConfs.capture(spark.sparkContext.hadoopConfiguration)
     spark.sparkContext.parallelize(uris, math.max(1, uris.length / 16))
       .map { uri =>
         HadoopConfs.install(confBytes)
         val p = GeoTiff.open(uri).profile
-        (p.xres, p.yres)
+        SourceLattice(p.xres, p.yres, p.originX, p.originY, p.tileWidth, p.tileHeight)
       }
       .distinct()
       .collect().toSeq
   }
 
-  /** S5: distributed block reader for LayerJob — reads each work row's
-    * (uri, band, block) window. Local/posix paths in tests; any
-    * Hadoop-visible store in production via a FS shim. */
+  /** True when a source's blocks ARE grid blocks: same resolution, internal
+    * tiling equal to the grid's block, and an origin on a block corner of
+    * the grid — the precondition of [[reader]]. Matching CRS and resolution
+    * alone is not enough: a source spanning several tiles, or offset by
+    * part of a block, would read the wrong window. */
+  def onBlockLattice(l: SourceLattice, grid: Grid): Boolean = {
+    val tile0 = grid.tileBounds(grid.tileId(0))
+    def onCorner(d: Double): Boolean =
+      math.abs(d - math.rint(d)) <= 1e-6 && math.rint(d) % grid.blockSize == 0
+    math.abs(l.xres - grid.xres) <= 1e-9 * grid.xres &&
+      math.abs(l.yres - grid.yres) <= 1e-9 * grid.yres &&
+      l.tileWidth == grid.blockSize && l.tileHeight == grid.blockSize &&
+      onCorner((l.originX - tile0.left) / grid.xres) &&
+      onCorner((tile0.top - l.originY) / grid.yres)
+  }
+
+  /** S5: distributed block reader for LayerJob, for sources on the grid's
+    * block lattice ([[onBlockLattice]]). The grid block (block_row,
+    * block_col) of the tile whose top-left corner is (left, top) is one
+    * whole source block, at the tile's block offset from the source's
+    * origin. A grid block outside the source reads as invalid, and so do
+    * the pixels of a partial edge block that lie past the source's width
+    * or height. Local/posix paths in tests; any Hadoop-visible store in
+    * production via a FS shim. */
   val reader: graft.plans.LayerJob.BlockReader = blockWork => {
     val spark = blockWork.sparkSession
     import spark.implicits._
     val cols0 = Seq("tile_id", "band", "file_band", "block_row", "block_col",
-      "width", "height", "uri", "priority")
+      "width", "height", "uri", "priority", "left", "top")
     val confBytes = HadoopConfs.capture(spark.sparkContext.hadoopConfiguration)
     blockWork.select(cols0.map(col): _*)
-      .as[(String, Int, Int, Int, Int, Int, Int, String, Int)]
+      .as[(String, Int, Int, Int, Int, Int, Int, String, Int, Double, Double)]
       .mapPartitions { rows =>
         HadoopConfs.install(confBytes)
         // one open Tiff per uri per partition (metadata cached)
         val open = scala.collection.mutable.Map.empty[String, GeoTiff.Tiff]
-        rows.map { case (tileId, band, fileBand, br, bc, w, h, uri, priority) =>
+        rows.map { case (tileId, band, fileBand, br, bc, w, h, uri, priority, left, top) =>
           val t = open.getOrElseUpdate(uri, GeoTiff.open(uri))
-          val px = t.readTile(fileBand, br, bc)
-          val nd = t.profile.noData
-          // NaN != NaN is true, so a NaN nodata sentinel needs its own test
-          val valid = px.map(v => nd.forall(x =>
-            if (x.isNaN) !v.isNaN else x != v))
-          (tileId, band, br, bc, w, h, uri, priority, px, valid)
+          val p = t.profile
+          val (dx, dy) = (math.rint((left - p.originX) / p.xres).toLong,
+            math.rint((p.originY - top) / p.yres).toLong)
+          require(p.tileWidth == w && p.tileHeight == h && dx % w == 0 && dy % h == 0,
+            s"$uri is not on the block lattice of tile $tileId")
+          val (sr, sc) = (dy / h + br, dx / w + bc)
+          val nd = p.noData
+          if (sr < 0 || sc < 0 || sr >= p.tilesDown || sc >= p.tilesAcross)
+            (tileId, band, br, bc, w, h, uri, priority,
+              Array.fill(w * h)(nd.getOrElse(0.0)), Array.fill(w * h)(false))
+          else {
+            val px = t.readTile(fileBand, sr.toInt, sc.toInt)
+            val (x0, y0) = (sc * w, sr * h)
+            // NaN != NaN is true, so a NaN nodata sentinel needs its own test
+            val valid = Array.tabulate(px.length) { i =>
+              val v = px(i)
+              x0 + i % w < p.width && y0 + i / w < p.height &&
+                nd.forall(x => if (x.isNaN) !v.isNaN else x != v)
+            }
+            (tileId, band, br, bc, w, h, uri, priority, px, valid)
+          }
         }
       }
       .toDF("tile_id", "band", "block_row", "block_col", "width", "height",

@@ -9,7 +9,8 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, RawLocalFileSystem}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
   SparkListenerSQLExecutionStart}
@@ -83,9 +84,30 @@ final class ParquetScanRows extends SparkListener {
   def rows: Long = synchronized(ids.toSeq.flatMap(values.get).sum)
 }
 
+/** The session's jobs in start order: the SQL execution id and the call
+  * site of the action that started each — the execution's for SQL jobs
+  * (which may run on broadcast or AQE threads), the job's own otherwise. */
+final class JobLog extends SparkListener {
+  private val execSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+  private val started = new java.util.concurrent.ConcurrentLinkedQueue[(Option[Long], String)]()
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart => execSites.put(s.executionId, s.details)
+    case _ =>
+  }
+  override def onJobStart(js: SparkListenerJobStart): Unit = {
+    val p = Option(js.properties)
+    started.add((p.flatMap(x => Option(x.getProperty("spark.sql.execution.id"))).map(_.toLong),
+      p.flatMap(x => Option(x.getProperty("callSite.long"))).getOrElse("")))
+  }
+  def jobs: Seq[(Option[Long], String)] = started.asScala.toSeq.map { case (e, site) =>
+    (e, e.flatMap(id => Option(execSites.get(id))).getOrElse(site))
+  }
+}
+
 /** `Pixetl.run` end to end: the tile sink is the only pass over the pixel
   * plane, and what a publish writes beside its tiles agrees with them. */
 class PixetlSpec extends SparkSpec {
+  import PixetlSpec._
   import spark.implicits._
 
   private def fresh(name: String): Path = {
@@ -225,6 +247,155 @@ class PixetlSpec extends SparkSpec {
     assert("\"type\":\"Feature\"".r.findAllMatchIn(manifest).size == 7)
   }
 
+  /** One uint16 90/256 source per tile and band under `name/b<band>`;
+    * `value(tile, band)(pixel index)`. Returns the band directories. */
+  private def bandSources(name: String, tiles: Seq[String])
+                         (value: (String, Int) => Int => Double): Seq[Path] = {
+    val grid = graft.core.grid.GridFactory("90/256")
+    (1 to 2).map { band =>
+      val src = fresh(s"$name/b$band")
+      for (id <- tiles) {
+        val b = grid.tileBounds(id)
+        val w = new GeoTiff.Writer(src.resolve(s"$id.tif").toString, GeoTiff.Profile(
+          width = grid.cols, height = grid.rows, bands = 1, dataType = "uint16",
+          tileWidth = grid.blockSize, tileHeight = grid.blockSize, noData = Some(0.0),
+          epsg = 4326, originX = b.left, originY = b.top, xres = grid.xres, yres = grid.yres))
+        w.writeTile(1, 0, 0, Array.tabulate(grid.blockSize * grid.blockSize)(value(id, band)))
+        w.close()
+      }
+      src
+    }
+  }
+
+  private def twoBandLayer(srcs: Seq[Path]): LayerSpec = LayerSpec.fromJson(
+    s"""{"dataset": "two", "version": "v1", "source_type": "raster",
+       |"pixel_meaning": "x", "data_type": "uint16", "grid": "90/256",
+       |"no_data": 0, "band_count": 2, "calc": "np.ma.array([A, B])",
+       |"compute_stats": true,
+       |"source_uri": [${srcs.map(p => s"\"$p\"").mkString(", ")}]}""".stripMargin)
+
+  /** Band 2 of 90N_090W is all nodata. */
+  private def twoBandValue(id: String, band: Int): Int => Double = (id, band) match {
+    case ("90N_180W", 1) => i => (i % 7 + 1).toDouble
+    case ("90N_180W", _) => i => if (i % 10 == 0) 0.0 else (40 + i % 5).toDouble
+    case (_, 1) => i => (i % 3).toDouble
+    case _ => _ => 0.0
+  }
+
+  test("a publish's manifests and stats sidecars keep their reference bytes") {
+    val tiles = Seq("90N_180W", "90N_090W")
+    val spec = twoBandLayer(bandSources("bytes/src", tiles)(twoBandValue))
+    val dest = fresh("bytes/dest")
+    val status = Pixetl.run(spark, spec, dest.toString, overwrite = false, sub = None).toMap
+    assert(status == Map("processed" -> 2L, "skipped (does not intersect)" -> 6L), status)
+    val out = dest.resolve(spec.prefix())
+    assert(Files.readString(out.resolve("tiles.geojson")) == ExpectedTilesGeojson)
+    for ((id, xml) <- ExpectedAuxXml)
+      assert(Files.readString(out.resolve(s"$id.tif.aux.xml")) == xml, id)
+    val extent = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(out.resolve("extent.geojson").toFile)
+      .get("features").get(0).get("geometry")
+    val ring = extent.get("coordinates").get(0)
+    val got = GeoFunctions.readWkt((0 until ring.size).map(i =>
+        s"${ring.get(i).get(0).asDouble} ${ring.get(i).get(1).asDouble}")
+      .mkString("POLYGON ((", ", ", "))"))
+    assert(extent.get("type").asText == "Polygon" &&
+      got.equalsTopo(GeoFunctions.readWkt(ExpectedExtentWkt)), got)
+  }
+
+  test("the epilogue after the tile sink runs at most two Spark jobs") {
+    val tiles = Seq("90N_180W", "90N_090W")
+    val raster = twoBandLayer(bandSources("jobs/src", tiles)(twoBandValue))
+    val vdest = fresh("jobs/vector")
+    Seq((GeoFunctions.write(GeoFunctions.envelope(-170, 10, -150, 30)), 1L))
+      .toDF("geom", "value").write.parquet(vdest.resolve("features.parquet").toString)
+    val vector = LayerSpec.fromJson(
+      """{"dataset": "burn", "version": "v1", "source_type": "vector",
+        |"pixel_meaning": "is", "data_type": "uint8", "no_data": 0, "grid": "90/256",
+        |"rasterize_method": "value"}""".stripMargin)
+    // the raster publish skips one already-published tile
+    val rdest = fresh("jobs/raster")
+    Pixetl.run(spark, raster, rdest.toString, overwrite = false, sub = Some(Seq("90N_180W")))
+    for ((spec, dest, dualCopy, tally) <- Seq(
+        (raster, rdest, true, Map("processed" -> 1L, "existing" -> 1L,
+          "skipped (does not intersect)" -> 6L)),
+        (vector, vdest, false, Map("processed" -> 1L, "skipped (does not intersect)" -> 7L)))) {
+      val log = new JobLog
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(log)
+      try {
+        assert(Pixetl.run(spark, spec, dest.toString, overwrite = false, sub = None).toMap
+          == tally)
+        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(log)
+      val jobs = log.jobs
+      val sink = jobs.lastIndexWhere(_._2.contains("graft.Pixetl$.writeWithPyramid"))
+      assert(sink >= 0)
+      var after = jobs.drop(sink + 1).filter(j => j._1.isEmpty || j._1 != jobs(sink)._1)
+      if (dualCopy) {
+        // the gdal-geotiff copy: the first SQL execution after the sink
+        val copy = after.head
+        assert(copy._1.isDefined && copy._2.linesIterator
+          .find(_.trim.startsWith("graft.")).exists(_.contains("graft.Pixetl$.run(")), copy)
+        after = after.filterNot(_._1 == copy._1)
+      }
+      info(s"${spec.sourceType} epilogue: ${after.size} jobs")
+      assert(after.size <= 2, s"${spec.sourceType} epilogue jobs:\n" +
+        after.map(_._2.linesIterator.take(4).mkString(" | ")).mkString("\n"))
+    }
+  }
+
+  test("a source spanning two tiles publishes each tile's own window") {
+    // one 512x256 source on the 90/256 lattice: 90N_180W all 5s, 90N_090W
+    // all nodata; the aligned reader must read the second source block
+    // for the second tile, not the first one again
+    val grid = graft.core.grid.GridFactory("90/256")
+    val src = fresh("span/src")
+    val w = new GeoTiff.Writer(src.resolve("span.tif").toString, GeoTiff.Profile(
+      width = 512, height = 256, bands = 1, dataType = "uint16",
+      tileWidth = grid.blockSize, tileHeight = grid.blockSize, noData = Some(0.0),
+      epsg = 4326, originX = -180, originY = 90, xres = grid.xres, yres = grid.yres))
+    w.writeTile(1, 0, 0, Array.fill(256 * 256)(5.0))
+    w.writeTile(1, 0, 1, Array.fill(256 * 256)(0.0))
+    w.close()
+    val spec = statsLayer(src, """ "no_data": 0,""")
+    val dest = fresh("span/dest")
+    Pixetl.run(spark, spec, dest.toString, overwrite = false, sub = None)
+    val out = dest.resolve(spec.prefix())
+    assert(GeoTiff.open(out.resolve("90N_180W.tif").toString).readTile(1, 0, 0)
+      .forall(_ == 5.0))
+    val east = out.resolve("90N_090W.tif")
+    assert(!Files.exists(east) || GeoTiff.open(east.toString).readTile(1, 0, 0)
+      .forall(_ == 0.0), "90N_090W published the window of 90N_180W")
+  }
+
+  test("a tile's bytes do not depend on the order its blocks arrive in") {
+    // zoom_2: one 1024-px tile of 4x4 256-px blocks
+    val spec = LayerSpec.fromJson(
+      """{"dataset": "order", "version": "v1", "source_type": "raster",
+        |"pixel_meaning": "x", "data_type": "uint16", "no_data": 0,
+        |"grid": "zoom_2", "source_uri": ["unused"]}""".stripMargin)
+    val grid = spec.gridDef
+    val b = grid.tileBounds("000R_000C")
+    val n = grid.cols / grid.blockSize
+    val blocks = for (br <- 0 until n; bc <- 0 until n) yield
+      ("000R_000C", b.left, b.top, br, bc,
+        Array.tabulate(grid.blockSize * grid.blockSize)(i => (br * 31 + bc * 7 + i) % 1000))
+    def publish(name: String, rows: Seq[(String, Double, Double, Int, Int, Array[Int])],
+                overviews: Seq[Int]): Array[Byte] = {
+      val dir = fresh(s"order/$name")
+      GeoTiffSpark.writeTiles(
+        rows.toDF("tile_id", "left", "top", "block_row", "block_col", "band_1")
+          .repartition(3), spec, dir.toString, overviewFactors = overviews).collect()
+      Files.readAllBytes(dir.resolve("000R_000C.tif"))
+    }
+    for (overviews <- Seq(Nil, Seq(2, 4))) {
+      val a = publish(s"fwd${overviews.size}", blocks, overviews)
+      val z = publish(s"rev${overviews.size}", blocks.reverse, overviews)
+      assert(java.util.Arrays.equals(a, z), s"overviews $overviews")
+    }
+  }
+
   test("CLI failure text names each cause's class") {
     val e = new org.apache.spark.SparkException("Job aborted",
       new IllegalStateException("tile 10N_010E", new NullPointerException()))
@@ -233,4 +404,52 @@ class PixetlSpec extends SparkSpec {
     assert(text.contains("caused by: java.lang.IllegalStateException: tile 10N_010E"))
     assert(text.contains("caused by: java.lang.NullPointerException: null"))
   }
+}
+
+/** Expected outputs of PixetlSpec's two-band layer, captured before the
+  * derivation moved to per-tile rows, which must keep these bytes. */
+object PixetlSpec {
+  val ExpectedTilesGeojson: String =
+    "{\"type\":\"FeatureCollection\",\"features\":[{\"type\":\"Feature\",\"geometry\":{\"type\":\"Polygon\",\"coordinates\":[[[-90.0,0.0],[-90.0,90.0],[0.0,90.0],[0.0,0.0],[-90.0,0.0]]]},\"properties\":{\"name\":\"two/v1/raster/epsg-4326/90x256/x/geotiff/90N_090W.tif\",\"bands\":[{\"band\":1,\"min\":1.0,\"max\":2.0,\"mean\":1.5,\"std_dev\":0.5,\"count\":43690},{\"band\":2,\"min\":null,\"max\":null,\"mean\":null,\"std_dev\":null,\"count\":0}]}" +
+    "},{\"type\":\"Feature\",\"geometry\":{\"type\":\"Polygon\",\"coordinates\":[[[-180.0,0.0],[-180.0,90.0],[-90.0,90.0],[-90.0,0.0],[-180.0,0.0]]]},\"properties\":{\"name\":\"two/v1/raster/epsg-4326/90x256/x/geotiff/90N_180W.tif\",\"bands\":[{\"band\":1,\"min\":1.0,\"max\":7.0,\"mean\":3.9999237060546875,\"std_dev\":2.000019071940202,\"count\":65536},{\"band\":2,\"min\":40.0,\"max\":44.0,\"mean\":42.22220338408328,\"std_dev\":1.3146947448053714,\"count\":58982}]}}]}"
+  val ExpectedAuxXml: Seq[(String, String)] = Seq(
+    "90N_180W" -> (
+      "<PAMDataset>\n" +
+      "  <PAMRasterBand band=\"1\">\n" +
+      "    <Metadata>\n" +
+      "      <MDI key=\"STATISTICS_MINIMUM\">1.0</MDI>\n" +
+      "      <MDI key=\"STATISTICS_MAXIMUM\">7.0</MDI>\n" +
+      "      <MDI key=\"STATISTICS_MEAN\">3.9999237060546875</MDI>\n" +
+      "      <MDI key=\"STATISTICS_STDDEV\">2.000019071940202</MDI>\n" +
+      "      <MDI key=\"STATISTICS_VALID_PERCENT\">100.0</MDI>\n" +
+      "    </Metadata>\n" +
+      "  </PAMRasterBand>\n" +
+      "  <PAMRasterBand band=\"2\">\n" +
+      "    <Metadata>\n" +
+      "      <MDI key=\"STATISTICS_MINIMUM\">40.0</MDI>\n" +
+      "      <MDI key=\"STATISTICS_MAXIMUM\">44.0</MDI>\n" +
+      "      <MDI key=\"STATISTICS_MEAN\">42.22220338408328</MDI>\n" +
+      "      <MDI key=\"STATISTICS_STDDEV\">1.3146947448053714</MDI>\n" +
+      "      <MDI key=\"STATISTICS_VALID_PERCENT\">89.9993896484375</MDI>\n" +
+      "    </Metadata>\n" +
+      "  </PAMRasterBand>\n" +
+      "</PAMDataset>\n"),
+    "90N_090W" -> (
+      "<PAMDataset>\n" +
+      "  <PAMRasterBand band=\"1\">\n" +
+      "    <Metadata>\n" +
+      "      <MDI key=\"STATISTICS_MINIMUM\">1.0</MDI>\n" +
+      "      <MDI key=\"STATISTICS_MAXIMUM\">2.0</MDI>\n" +
+      "      <MDI key=\"STATISTICS_MEAN\">1.5</MDI>\n" +
+      "      <MDI key=\"STATISTICS_STDDEV\">0.5</MDI>\n" +
+      "      <MDI key=\"STATISTICS_VALID_PERCENT\">66.6656494140625</MDI>\n" +
+      "    </Metadata>\n" +
+      "  </PAMRasterBand>\n" +
+      "  <PAMRasterBand band=\"2\">\n" +
+      "    <Metadata>\n" +
+      "      <MDI key=\"STATISTICS_VALID_PERCENT\">0.0</MDI>\n" +
+      "    </Metadata>\n" +
+      "  </PAMRasterBand>\n" +
+      "</PAMDataset>\n"))
+  val ExpectedExtentWkt = "POLYGON ((-180 0, -180 90, -90 90, 0 90, 0 0, -90 0, -180 0))"
 }

@@ -83,18 +83,18 @@ class RasterSpec extends SparkSpec {
 
   test("partial block stats fold + combine == global stats (A3)") {
     val in = Raster.synthesizeBand(blocks, band = 1, nodataEvery = 5)
-    val partial = in.withColumn("partial",
-      Raster.blockPartialStats(col("values"), col("valid")))
-    val stats = Raster.combineStats(partial, Seq("tile_id")).collect()(0)
+    import spark.implicits._
+    val stats = in.select(Raster.blockPartialStats(col("values"), col("valid")).as("p"))
+      .select("p.*").as[Raster.StatsPartial].collect().reduce(_ merge _).finish
     // ground truth by exploding pixels (slow path, test only)
     val truth = in.select(explode(zip_with(col("values"), col("valid"),
         (v, ok) => when(ok, v))).as("v"))
       .filter(col("v").isNotNull)
       .agg(min("v"), max("v"), avg("v"), count(lit(1))).collect()(0)
-    assert(stats.getAs[Double]("stat_min") == truth.getDouble(0))
-    assert(stats.getAs[Double]("stat_max") == truth.getDouble(1))
-    assert(math.abs(stats.getAs[Double]("stat_mean") - truth.getDouble(2)) < 1e-9)
-    assert(stats.getAs[Long]("n") == truth.getLong(3))
+    assert(stats.min == truth.getDouble(0))
+    assert(stats.max == truth.getDouble(1))
+    assert(math.abs(stats.mean - truth.getDouble(2)) < 1e-9)
+    assert(stats.n == truth.getLong(3))
   }
 
   test("bucket indexes cover every valid pixel and clamp to edges (A4)") {

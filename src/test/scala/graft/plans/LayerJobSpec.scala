@@ -78,7 +78,7 @@ class LayerJobSpec extends SparkSpec {
     val dir = java.nio.file.Paths.get("target/tmp/layerjob_aux")
     java.nio.file.Files.createDirectories(dir)
     val written = graft.sources.GeoTiffSpark
-      .writeStatsSidecars(result.tileStats, dir.toString, totalPixels = 1008L * 1008)
+      .writeTiles(result.blocks, spec.copy(computeStats = true), dir.toString)
       .collect()
     assert(written.length == 6)
     val xml = new String(java.nio.file.Files.readAllBytes(

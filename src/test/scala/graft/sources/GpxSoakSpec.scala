@@ -178,7 +178,8 @@ object GpxSoakMain {
         (col("id") / n).cast("int").as("block_row"),
         pmod(col("id"), lit(n)).cast("int").as("block_col"),
         lit(b).as("width"), lit(b).as("height"),
-        lit(path).as("uri"), lit(0).as("priority"))
+        lit(path).as("uri"), lit(0).as("priority"),
+        lit(10.0).as("left"), lit(10.0).as("top"))
       val tR = System.nanoTime()
       val readSum = GeoTiffSpark.reader(bw).select("values").as[Array[Double]]
         .mapPartitions(_.map { a =>

@@ -74,22 +74,38 @@ class MetadataSpec extends SparkSpec {
     assert(buckets.count(_ > 0) == 3)          // exactly the 3 values
   }
 
-  test("stats sidecar round-trips: writeStatsSidecars → readStatsSidecar") {
+  test("stats sidecar round-trips: sink-written sidecar → readStatsSidecar") {
+    // a 2-band layer on 90/256 (one 256-px block per tile); band 2 of
+    // 90N_090W is all nodata
+    val spec = graft.core.LayerSpec(dataset = "pam", version = "v1",
+      sourceType = "raster", pixelMeaning = "x", dataType = "uint16",
+      grid = "90/256", noData = Some(Seq(0.0, 0.0)), bandCount = 2,
+      computeStats = true, sourceUri = Some(Seq("unused")))
+    val px = 256 * 256
+    val band: Map[(String, Int), Int => Int] = Map(
+      ("90N_180W", 1) -> (i => i % 7 + 1), ("90N_180W", 2) -> (i => if (i % 10 == 0) 0 else 40),
+      ("90N_090W", 1) -> (i => i % 3), ("90N_090W", 2) -> (_ => 0))
+    val blocks = Seq("90N_180W" -> -180.0, "90N_090W" -> -90.0).map { case (id, left) =>
+      (id, left, 90.0, 0, 0, Array.tabulate(px)(band((id, 1))),
+        Array.tabulate(px)(band((id, 2))))
+    }.toDF("tile_id", "left", "top", "block_row", "block_col", "band_1", "band_2")
     val dir = java.nio.file.Files.createTempDirectory("graft_pam").toString
-    val tileStats = Seq(
-      ("t1", 1, 2.0, 9.0, 5.5, 1.25, 900L),
-      ("t1", 2, 0.0, 1.0, 0.5, 0.5, 1000L))
-      .toDF("tile_id", "band", "stat_min", "stat_max", "stat_mean", "stat_std", "n")
-    val written = GeoTiffSpark.writeStatsSidecars(tileStats, dir, totalPixels = 1000L)
-      .collect()
-    assert(written.length == 1)
-    val back = GeoTiffSpark.readStatsSidecar(s"$dir/t1.tif.aux.xml")
-    assert(back.keySet == Set(1, 2))
-    assert(back(1)("STATISTICS_MINIMUM") == 2.0)
-    assert(back(1)("STATISTICS_MAXIMUM") == 9.0)
-    assert(back(1)("STATISTICS_MEAN") == 5.5)
-    assert(back(1)("STATISTICS_STDDEV") == 1.25)
-    assert(back(1)("STATISTICS_VALID_PERCENT") == 90.0)
-    assert(back(2)("STATISTICS_VALID_PERCENT") == 100.0)
+    val written = GeoTiffSpark.writeTiles(blocks, spec, dir).collect()
+    assert(written.length == 2)
+    for (id <- Seq("90N_180W", "90N_090W"); b <- 1 to 2) {
+      val back = GeoTiffSpark.readStatsSidecar(s"$dir/$id.tif.aux.xml")
+      assert(back.keySet == Set(1, 2))
+      val valid = (0 until px).map(band((id, b))).filter(_ != 0).map(_.toDouble)
+      val got = back(b)
+      assert(got("STATISTICS_VALID_PERCENT") == 100.0 * valid.size / px, s"$id band $b")
+      if (valid.isEmpty) assert(got.keySet == Set("STATISTICS_VALID_PERCENT"), s"$id band $b")
+      else {
+        val mean = valid.sum / valid.size
+        assert(got("STATISTICS_MINIMUM") == valid.min && got("STATISTICS_MAXIMUM") == valid.max)
+        assert(math.abs(got("STATISTICS_MEAN") - mean) < 1e-9, s"$id band $b")
+        assert(math.abs(got("STATISTICS_STDDEV") -
+          math.sqrt(valid.map(v => (v - mean) * (v - mean)).sum / valid.size)) < 1e-9)
+      }
+    }
   }
 }
