@@ -1,9 +1,8 @@
 package graft
 
-import graft.core.LayerSpec
+import graft.core.{GraftSession, LayerSpec}
 import graft.operators.Raster
 import graft.plans.LayerJob
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
@@ -120,6 +119,16 @@ object Bench {
     ms
   }
 
+  /** The first of `records` (file name, full record line), newest first,
+    * that is quiet and was taken at `cpus` task threads: a contended
+    * record's `quiet_record` must point at numbers comparable with its own. */
+  def quietSibling(records: Seq[(String, String)], cpus: Int): Option[String] =
+    records.collectFirst {
+      case (name, body) if !body.contains("\"contended\":true") &&
+          "\"cpus\":(\\d+)".r.findFirstMatchIn(body).exists(_.group(1).toInt == cpus) =>
+        name
+    }
+
   /** The contention predicate, extracted so a unit test can feed synthetic
     * (start, steal, calibStart, calibEnd) tuples through it (VERDICT r13 #1).
     *
@@ -209,7 +218,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.defaultCores()
     // optional trailing query names: bench only those (local iteration);
     // the driver always invokes with no args = the full headline set.
     // Unknown names fail fast — a typo must not silently produce a smaller
@@ -245,55 +254,9 @@ object Bench {
     val toRun = if (only.isEmpty) headline
       else (headline ++ SparkEntry.queries.keys.filterNot(headline.contains))
         .filter(only)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-coalesce the output partitioning of cached plans:
-      // every Caching.shared pin otherwise freezes its pre-AQE partition
-      // count (32 here), inflating EVERY downstream stage over a pinned
-      // intermediate to 32 tasks regardless of size — measured on t22:
-      // 559 → 32 tasks, 4.7 → 2.0 s warm. Physical-only (same results);
-      // the setting a production AQE+cache deployment runs with.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // 8 MB advisory (not the 64 MB default): post-shuffle coalescing
-      // keeps enough partitions that compute-heavy cached intermediates
-      // (r16's pointer-doubling self-joins) stay parallel on 32 cores,
-      // while toy-SF relations still collapse to one task. A cluster
-      // deployment re-sizes this to its executor memory budget.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      // start every shuffle WIDE and let AQE coalesce down to the 8 MB
-      // advisory: with shuffle.partitions pinned to the core count, a
-      // third-decade aggregation state no longer fits one task's
-      // execution-memory share — the r18 metrics listener caught q21
-      // spilling 15.8 GB mem / 2.3 GB disk at sf10 (zero at sf1). 256
-      // initial partitions give big shuffles room — q21's sf10 3-run
-      // median dropped 17.3 → 9.2 s — while small queries coalesce to the
-      // same few partitions as before. This is the production AQE
-      // discipline: initialPartitionNum scales with the largest expected
-      // shuffle, advisory size right-sizes everything at runtime.
-      // env-overridable so the AQE audit can A/B the pre-r18 width (32)
-      // against the canonical 256 on one binary (VERDICT r18 #7)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", "256"))
-      // let AQE rewrite sort-merge joins to shuffled-hash at runtime when
-      // EVERY post-shuffle build-side partition is under the threshold
-      // (guide §3.1: SHJ skips both sides' sorts; the AQE form is the
-      // memory-safe one — it converts from MEASURED partition sizes, not
-      // planner estimates, and 64 MB per build partition is ordinary task
-      // memory at any scale). Round-19 interleaved A/B, min of 2, same
-      // host: sf1 q21 3.54→1.95 s, t22 5.54→2.47, e6 1.82→1.15; sf10
-      // q7 11.45→7.92, q21 7.67→6.09, g9 7.54→5.81 (t22 sf10 +0.7 s, the
-      // one small loss — section-wide strongly net-negative wall).
-      // env-overridable for A/B re-runs; "0" disables (Spark's default).
-      // One shared constant with the production builder (ADVICE r19).
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        graft.core.GraftSession.shjThreshold)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("bench", cpus)
+    // bench-only: 256-wide shuffles took sf10 q21 17.3 → 9.2 s (COVERAGE.md) but slow the pixetl runs
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
 
     // warm the session: JIT the parquet reader + codegen paths once
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -656,13 +619,13 @@ object Bench {
         // mandates try-with-resources) — ADVICE r17
         val ls = java.nio.file.Files.list(java.nio.file.Paths.get("."))
         try {
-          ls.iterator().asScala
+          quietSibling(ls.iterator().asScala
             .filter(_.getFileName.toString.matches("BENCH_FULL_r\\d+(-\\d+)?\\.json"))
             .toSeq
             .sortBy(p => -java.nio.file.Files.getLastModifiedTime(p).toMillis)
-            .find(p => !new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-              .contains("\"contended\":true"))
-            .map(p => s""","quiet_record":"${p.getFileName}"""")
+            .map(p => p.getFileName.toString ->
+              new String(java.nio.file.Files.readAllBytes(p), "UTF-8")), nCores)
+            .map(n => s""","quiet_record":"$n"""")
             .getOrElse("")
         } finally ls.close()
       } catch { case _: Throwable => "" })
@@ -681,7 +644,7 @@ object Bench {
     // COMPACT medians-only line to stdout — ~1.5 KB, which survives the tail
     // cap together with sbt's trailing [success] line.
     val compact =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"steal_pct":$stealPct%.2f,"calib_spin_ms":$calibMs%.1f,"calib_spin_end_ms":$calibEndMs%.1f$partialTag$sf1Tag$sf10Tag$pipe2gTag,"queries":$qs,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$nCores%d,"loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"steal_pct":$stealPct%.2f,"calib_spin_ms":$calibMs%.1f,"calib_spin_end_ms":$calibEndMs%.1f$partialTag$sf1Tag$sf10Tag$pipe2gTag,"queries":$qs,"sf":"$sfDir"}"""
     // a contended full run must NOT become the canonical baseline: r12's
     // contended record overwrote BENCH_LATEST and poisoned a round of
     // regression detection (ADVICE r12 medium)

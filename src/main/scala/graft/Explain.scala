@@ -10,8 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSeq else Bench.headline
-    val spark = GraftSession.local("explain",
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.local("explain")
     // GRAFT_EXPLAIN_EXEC=1: execute the query THROUGH ITS OWN
     // QueryExecution first (toRdd + foreach — no driver collect), so the
     // printed plan is AQE's FINAL plan (isFinalPlan=true) with the runtime

@@ -177,13 +177,7 @@ object ScaleData {
     val from = args.headOption.getOrElse(DefaultFrom)
     val to = args.drop(1).headOption.getOrElse(DefaultTo)
     val copies = args.drop(2).headOption.map(_.toInt).getOrElse(Copies)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local("scaledata")
     build(spark, from, to, copies)
     java.nio.file.Files.write(java.nio.file.Paths.get(to, "_GRAFT_SF1_OK"),
       s"from=$from copies=$copies layout=par\n".getBytes("UTF-8"))

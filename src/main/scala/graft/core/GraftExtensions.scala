@@ -29,40 +29,27 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // — bands bind positionally to A, B, …; the string must be a literal
     // (it compiles to a Catalyst expression tree at PLAN time, so the calc
     // runs fully codegen'd — there is no interpreter at runtime)
-    e.injectFunction(GraftExtensions.calcFunction)
+    e.injectFunction((
+      FunctionIdentifier("graft_calc"),
+      new ExpressionInfo(graft.functions.Calc.getClass.getName, "graft_calc"),
+      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+        val calcStr = exprs.headOption match {
+          case Some(lit: org.apache.spark.sql.catalyst.expressions.Literal)
+            if lit.dataType == org.apache.spark.sql.types.StringType &&
+              lit.value != null => lit.value.toString
+          case other => throw new IllegalArgumentException(
+            "graft_calc: first argument must be a literal calc string, got " +
+              other.fold("no arguments")(_.sql))
+        }
+        val names = ('A' to 'Z').take(exprs.size - 1).map(_.toString)
+        val bands = names.zip(exprs.tail.map(
+          org.apache.spark.sql.graftbridge.ColumnBridge.column)).toMap
+        org.apache.spark.sql.graftbridge.ColumnBridge.catalystExpression(
+          graft.functions.Calc.column(calcStr, bands))
+      }))
     // pure range joins ("point in interval", no equi key) rewrite to the
     // bucketized equi-join instead of a nested loop — SURVEY §2's custom
     // Rule tier; see graft.plans.RangeJoinBinning
     e.injectOptimizerRule(_ => graft.plans.RangeJoinBinning)
   }
-}
-
-object GraftExtensions {
-  private[graft] val calcFunction: (FunctionIdentifier, ExpressionInfo,
-      Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression) = (
-    FunctionIdentifier("graft_calc"),
-    new ExpressionInfo(graft.functions.Calc.getClass.getName, "graft_calc"),
-    (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-      val calcStr = exprs.headOption match {
-        case Some(lit: org.apache.spark.sql.catalyst.expressions.Literal)
-          if lit.dataType == org.apache.spark.sql.types.StringType &&
-            lit.value != null => lit.value.toString
-        case other => throw new IllegalArgumentException(
-          "graft_calc: first argument must be a literal calc string, got " +
-            other.fold("no arguments")(_.sql))
-      }
-      val names = ('A' to 'Z').take(exprs.size - 1).map(_.toString)
-      val bands = names.zip(exprs.tail.map(
-        org.apache.spark.sql.graftbridge.ColumnBridge.column)).toMap
-      org.apache.spark.sql.graftbridge.ColumnBridge.catalystExpression(
-        graft.functions.Calc.column(calcStr, bands))
-    })
-
-  /** Register `graft_calc` on an ALREADY-BUILT session (the extension
-    * path only applies when the session is constructed with
-    * `withExtensions`). */
-  def registerCalc(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
-      spark, calcFunction._1, calcFunction._2, calcFunction._3)
 }

@@ -180,7 +180,7 @@ object LayerJob {
     // multi-uri band escalates to the exact per-(tile,band) probe over the
     // tile⋈catalog join (ids only, no pixels). Run unconditionally, that
     // exact probe's extra Spark job doubled the bench pipeline's build
-    // constant — the r15→r16 drift, bisected via tools/PipeAB.
+    // constant (the r15→r16 drift).
     val anyBandMulti = prioritized.groupBy("band").count()
       .filter(col("count") > 1).limit(1).count() > 0
     val multiSource = anyBandMulti &&

@@ -21,8 +21,12 @@ object StreamLatency {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "10").toInt
-    val spark = GraftSession.local("stream-latency",
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local("stream-latency")
+    // recentProgress keeps only the last N updates (default 100): room for
+    // every data batch plus a no-data (watermark) batch after each, so the
+    // medians below cover the whole run
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
+      math.max(2 * nBatches + 1, 100).toString)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"),
         timestamp_millis(lit(1700000000000L) + col("doc_id") * 1000).as("ts"))

@@ -23,15 +23,4 @@ object ColumnBridge {
     * analyzer then resolves normally). */
   def catalystExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter.apply(c.node)
-
-  /** Register a function builder on an EXISTING session's registry — the
-    * per-session twin of `SparkSessionExtensions.injectFunction` (which
-    * only applies at session build time). `sessionState` is private[sql],
-    * hence this lives in the bridge. */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession,
-      id: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.registerFunction(id, info, builder)
 }

@@ -59,6 +59,18 @@ class BenchGateSpec extends AnyFunSuite {
     assert(gate(start = 1.45, steal = 1.37, c0 = 393.5, c1 = 301.3))
   }
 
+  test("quiet_record points at the newest quiet record taken at the same cpus") {
+    val records = Seq(
+      "BENCH_FULL_r20-3.json" -> """{"metric":"total","cpus":32,"contended":true}""",
+      "BENCH_FULL_r20-2.json" -> """{"metric":"total","cpus":8}""",
+      "BENCH_FULL_r20-1.json" -> """{"metric":"total","cpus":32}""",
+      "BENCH_FULL_r19.json" -> """{"metric":"total","value":1.0}""")
+    assert(Bench.quietSibling(records, 32).contains("BENCH_FULL_r20-1.json"))
+    assert(Bench.quietSibling(records, 8).contains("BENCH_FULL_r20-2.json"))
+    // a record without "cpus" cannot be shown comparable
+    assert(Bench.quietSibling(records, 4).isEmpty)
+  }
+
   test("every Files.list stream in src/main closes in a finally (fd-leak gate)") {
     // Files.list holds a directory fd until closed (its javadoc mandates
     // try-with-resources). ADVICE r17 flagged one bare site; the r18 fix

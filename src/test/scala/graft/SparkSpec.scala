@@ -1,21 +1,20 @@
 package graft
 
+import graft.core.{Caching, GraftSession}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session (one per suite, lazily built). */
-trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    .config("spark.sql.warehouse.dir",
-      new java.io.File("target/tmp/warehouse").getAbsolutePath)
-    .getOrCreate()
+/** Shared local session on the production profile, pinned to 4 cores (one
+  * per JVM, lazily built). Pins a suite leaves in the session registry
+  * (`Caching.shared` outside a scope, e.g. `LayerJob.run`'s tile sets) are
+  * released after the suite. */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+  lazy val spark: SparkSession = GraftSession.local(getClass.getSimpleName, "4")
+
+  override def afterAll(): Unit =
+    try SparkSession.getDefaultSession.foreach(Caching.release)
+    finally super.afterAll()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 }

@@ -86,7 +86,6 @@ class CalcSpec extends SparkSpec {
   }
 
   test("graft_calc SQL surface: literal calc compiles, bands bind positionally") {
-    graft.core.GraftExtensions.registerCalc(spark)
     val r = spark.sql(
       "SELECT graft_calc('(A + B) * (C + 2)', CAST(3 AS DOUBLE), " +
         "CAST(1 AS DOUBLE), CAST(0.5 AS DOUBLE)) AS v").collect()

@@ -18,7 +18,8 @@ class BucketingSpec extends SparkSpec {
     // the in-memory catalog is fresh per JVM; clear any stale table dirs
     // left by previous runs or the DROP can't see them
     Seq("li_bucketed", "o_bucketed").foreach { t =>
-      val dir = new java.io.File(s"target/tmp/warehouse/$t")
+      val dir = new java.io.File(new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"), t).toUri.getPath)
       if (dir.exists()) {
         def rm(f: java.io.File): Unit = {
           if (f.isDirectory) f.listFiles().foreach(rm)

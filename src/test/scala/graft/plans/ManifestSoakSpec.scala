@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,11 +18,10 @@ object ManifestSoakMain {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_manifest_soak").toString)
-    val spark = SparkSession.builder()
+    // 64 shuffle partitions: the render's orderBy + toLocalIterator holds
+    // one range partition of the ~600 MB output on the driver at a time
+    val spark = graft.core.GraftSession.builder("manifest-soak", "64")
       .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

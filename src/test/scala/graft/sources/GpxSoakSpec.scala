@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.core.LayerSpec
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -82,7 +81,12 @@ object GpxSoakMain {
       else if (noise) vNoise
       else (br, bc, idx) => v(br, bc, idx % b)
     val dtype = if (noise8) "uint8" else "uint16"
-    val spark = SparkSession.builder()
+    // partition sizing for the 3.5 GB heap — the knob a production
+    // deployment turns (SURVEY's "size shuffle partitions so partitions
+    // fit in executor memory"): 256 shuffle partitions keep the regroup
+    // stages' per-task sorts (~20 MB input) inside their execution-memory
+    // share, so only the single-tile groupByKey sort spills at all
+    val spark = graft.core.GraftSession.builder("gpx-soak", "256")
       // 16 workers, not the bench's 32: the claim under test is per-TASK
       // memory (one block each, any tile size), and 3.5 GB / 32 ways left
       // less headroom per task than any plausible production executor
@@ -90,12 +94,6 @@ object GpxSoakMain {
       // this ratio). 16 ways matches the production ratio while keeping
       // the heap bound far below the 5.2 GB raw tile.
       .master("local[16]")
-      // partition sizing for the 3.5 GB heap — the knob a production
-      // deployment turns (SURVEY's "size shuffle partitions so partitions
-      // fit in executor memory"): 256 shuffle partitions keep the regroup
-      // stages' per-task sorts (~20 MB input) inside their execution-memory
-      // share, so only the single-tile groupByKey sort spills at all
-      .config("spark.sql.shuffle.partitions", "256")
       // that one ~26 GB single-task sort merges dozens of spill files; the
       // default 1 MB read-ahead buffer PER SPILL is pure overhead on local
       // disk and the largest fixed cost under the capped heap
@@ -107,8 +105,6 @@ object GpxSoakMain {
       // 3.5 GB cap. Trade spill volume for headroom — the same dial a
       // memory-constrained production executor turns.
       .config("spark.memory.fraction", "0.35")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
