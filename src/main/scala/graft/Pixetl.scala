@@ -115,7 +115,7 @@ object Pixetl {
     val spec = resolvePixetlUris(spec0, dest)
     val outDir = s"$dest/${spec.prefix()}"
     Files.createDirectories(Paths.get(outDir))
-    // the run's pins (source catalog, sink rows) are released when it
+    // the run's pins (tile sets, sink rows) are released when it
     // returns; an explicit scope rather than a `Caching.scoped` closure
     // keeps each Spark job's call site on its own line of `run`, which is
     // how perfbench's step trace attributes the jobs written inline here
@@ -123,28 +123,31 @@ object Pixetl {
     try {
       val (blocks, tiles) = spec.sourceType match {
         case "raster" =>
-          // plan-time catalog: manifest uris ending in .geojson are S2
-          // manifests; anything else is harvested from file metadata (S4).
-          // Pinned: the plan probes and the tile sets read it again, and
-          // a harvest re-opens every source
-          val uris = spec.sourceUri.get
-          // each source_uri contributes the next global band (A, B, C…) —
+          // plan-time catalog, a local relation on the driver: manifest uris
+          // ending in .geojson are S2 manifests; anything else is a folder
+          // of sources harvested from file metadata (S4) in one Spark job.
+          // Each source_uri contributes the next global band (A, B, C…) —
           // the reference's band concatenation (layers.py:171-237)
-          val (catalog0, srcEpsg) =
-            if (uris.forall(_.endsWith(".geojson")))
-              (Caching.shared(uris.zipWithIndex
+          import spark.implicits._
+          val uris = spec.sourceUri.get
+          val geojson = uris.forall(_.endsWith(".geojson"))
+          val catalog0 =
+            if (geojson) {
+              val manifests = uris.zipWithIndex
                 .map { case (u, i) => Catalog.fromTilesGeojson(spark, u, band = i + 1) }
-                .reduce(_ unionByName _)),
-                4326) // tiles.geojson footprints are always 4326 (pixetl_prep.py:60-76)
+                .reduce(_ unionByName _)
+              spark.createDataFrame(java.util.Arrays.asList(manifests.collect(): _*),
+                manifests.schema)
+            } else GeoTiffSpark.harvestFolders(spark, uris)
+          val bands = catalog0.select("band").as[Int].collect().toSet
+          for ((u, i) <- uris.zipWithIndex) require(bands.contains(i + 1),
+            s"no sources found for ${spec.dataset}/${spec.version}: catalog resolved from $u is empty")
+          val srcEpsg =
+            if (geojson) 4326 // tiles.geojson footprints are always 4326 (pixetl_prep.py:60-76)
             else {
-              val harvested = Caching.shared(uris.zipWithIndex.map { case (u, i) =>
-                GeoTiffSpark.harvestCatalog(spark,
-                    Catalog.listFolder(spark, u).collect().map(_.getString(0)).toSeq)
-                  .withColumn("band", org.apache.spark.sql.functions.lit(i + 1))
-              }.reduce(_ unionByName _))
-              val epsgs = harvested.select("epsg").distinct().collect().map(_.getInt(0)).toSeq
+              val epsgs = catalog0.select("epsg").as[Int].collect().distinct.toSeq
               require(epsgs.size == 1, s"sources span multiple CRSs: $epsgs")
-              (harvested.select("uri", "band", "file_band", "footprint"), epsgs.head)
+              epsgs.head
             }
           // cross-CRS job (e.g. 4326 sources → zoom_N grid): plan in the
           // grid CRS and gather through the warp reader — the WarpedVRT
@@ -163,21 +166,16 @@ object Pixetl {
           // job (90/27008 fed from 10/40000 output — the catalog's
           // depends_on chains) matches CRS but not lattice, and a source
           // spanning several tiles or offset by part of a block matches
-          // resolution but not block corners. Probe EVERY distinct
-          // source's profile at plan time (the reference opens every
-          // source, sources.py:179-210 — these are metadata-only reads,
-          // distributed here): a mixed source set must not take the
-          // aligned shortcut just because one sampled source happens to
-          // sit on the grid's blocks; the rest warp in the same CRS.
-          val aligned = srcEpsg == gridEpsg && {
-            import spark.implicits._
-            val distinctUris = catalog0.select("uri").distinct().as[String].collect()
-            require(distinctUris.nonEmpty,
-              s"no sources found for ${spec.dataset}/${spec.version}: " +
-                s"catalog resolved from ${uris.mkString(", ")} is empty")
-            GeoTiffSpark.harvestResolutions(spark, distinctUris.toSeq)
+          // resolution but not block corners. Check EVERY source's lattice
+          // (the reference opens every source, sources.py:179-210): a mixed
+          // source set must not take the aligned shortcut just because one
+          // source sits on the grid's blocks; the rest warp in the same CRS.
+          // A manifest's sources are harvested for their lattices
+          val aligned = srcEpsg == gridEpsg &&
+            (if (geojson) GeoTiffSpark.harvestCatalog(spark,
+              catalog0.select("uri").as[String].collect().distinct.toSeq) else catalog0)
+              .select("lattice.*").as[GeoTiffSpark.SourceLattice].collect()
               .forall(GeoTiffSpark.onBlockLattice(_, grid))
-          }
           val (catalog, reader) =
             if (aligned) (catalog0, GeoTiffSpark.reader)
             else if (srcEpsg == gridEpsg)

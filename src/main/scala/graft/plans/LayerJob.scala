@@ -5,7 +5,7 @@ import graft.core.grid.Bounds
 import graft.functions.{GeoFunctions, GeomUnionAgg}
 import graft.operators.Raster
 import graft.operators.Raster.{BandStats, StatsPartial}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.Geometry
 import scala.jdk.CollectionConverters._
@@ -26,7 +26,9 @@ import scala.jdk.CollectionConverters._
   * shuffles are (a) the block groupBy for mosaic overlap — keyed
   * (tile, band, block), map-side combined — and (b) the final per-tile
   * metadata aggregation, whose input is already 5-number partials per block.
-  * The catalog side of every join is broadcast.
+  * The source catalog is collected once on the driver ([[prioritize]]);
+  * priority, per-band uri counts and the layer geometry come from its
+  * rows, and it joins the tiles as a broadcast local relation.
   */
 object LayerJob {
 
@@ -58,7 +60,7 @@ object LayerJob {
       import spark.implicits._
       val manifest = Vector.newBuilder[(String, Double, Double, Double, Double, String, String)]
       val stats = Vector.newBuilder[(String, Int, Double, Double, Double, Double, Long)]
-      val (extent, status) = derive(spec, tiles, foldTiles(partials)) { t =>
+      val (extent, status) = derive(spec, tiles, foldTiles(partials), PassTiles) { t =>
         val b = t.bounds
         manifest += ((t.tileId, b.left, b.bottom, b.right, b.top, t.uri, t.geometry))
         for ((s, i) <- t.stats.zipWithIndex)
@@ -77,11 +79,10 @@ object LayerJob {
   def run(spark: SparkSession, spec: LayerSpec, catalog: DataFrame,
           reader: BlockReader, subset: Option[Seq[String]] = None,
           existing: Option[DataFrame] = None, overwrite: Boolean = false): Result = {
+    import spark.implicits._
     val grid = spec.gridDef
-    // J4 alignment: `band` is the GLOBAL band position (A, B, C…);
-    // `file_band` the index inside the source file (layers.py:171-237)
-    val cat = if (catalog.columns.contains("file_band")) catalog
-      else catalog.withColumn("file_band", col("band"))
+    // the catalog, collected once: free for a local relation
+    val sources = prioritize(catalog)
 
     // --- plan: tiles after F1/F2/F3 -------------------------------------
     val seed = grid.tilesDF(spark)
@@ -92,22 +93,19 @@ object LayerJob {
     // reference default) of the per-band footprint unions
     // (layers.py:239-258, utils/utils.py:187-225). Single-band layers and
     // union semantics shortcut to the any-footprint broadcast semi-join
-    // (identical result, no plan-time aggregation job); the predicate is
-    // the interiors-intersect test of raster_src_tile.py:155-161.
+    // (identical result, no geometry fold); the predicate is the
+    // interiors-intersect test of raster_src_tile.py:155-161.
     val tileEnv = GeoFunctions.st_makeEnvelope(col("left"), col("bottom"), col("right"), col("top"))
     val inBandCount = spec.sourceUri.map(_.length).getOrElse(1)
     // pinned: the sink reads it (through `pending`), and so does the
-    // status count after it — without a second catalog broadcast
+    // status count after it
     val withSource = Caching.shared(
       if (spec.unionBands || inBandCount == 1)
-        subsetted.join(broadcast(cat.select(col("footprint").as("src_fp"))),
+        subsetted.join(broadcast(sources.map(_.footprint).toDF("src_fp")),
           GeoFunctions.st_intersectsInterior(tileEnv, col("src_fp")), "left_semi")
       else {
-        // per-band unions aggregate distributed (partial-combined); the
-        // band intersection folds on the driver over ≤bandCount geometries
-        val bandGeoms = cat.groupBy("band")
-          .agg(GeomUnionAgg.column(col("footprint")).as("g"))
-          .collect().map(r => GeoFunctions.read(r.getAs[Array[Byte]]("g")))
+        val bandGeoms = sources.groupBy(_.band).values
+          .map(ss => GeomUnionAgg.unionAll(ss.map(s => GeoFunctions.read(s.footprint))))
         require(bandGeoms.nonEmpty, "Input bands do not overlap") // empty catalog
         val layerGeom = bandGeoms.reduce(GeoFunctions.intersectionPolygonal)
         require(!layerGeom.isEmpty, "Input bands do not overlap") // layers.py:255-257
@@ -123,22 +121,10 @@ object LayerJob {
       case _ => withSource
     }
 
-    // J2: file assignment — which files feed which tile, per band.
-    // Priority = manifest order (layers.py:196-228) under gdalbuildvrt
-    // overlay semantics (utils/gdal.py:56-95): LATER-listed files override
-    // earlier ones, so the last file per band gets rank 1 and wins the J3
-    // fold. Catalogs may carry an explicit `manifest_idx` (tiles.geojson
-    // feature order); otherwise (band, uri) order stands in for it.
-    val ordered =
-      if (cat.columns.contains("manifest_idx")) cat
-      else cat.withColumn("manifest_idx", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy("band", "uri")))
-    val prioritized = ordered
-      .select(col("uri"), col("band"), col("file_band"), col("footprint"), col("manifest_idx"))
-      .withColumn("priority", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band")
-          .orderBy(col("manifest_idx").desc)))
-      .drop("manifest_idx")
+    // J2: file assignment — which files feed which tile, per band
+    val prioritized = sources
+      .map(s => (s.uri, s.band, s.fileBand, s.footprint, s.priority))
+      .toDF("uri", "band", "file_band", "footprint", "priority")
     val work = pending.join(broadcast(prioritized),
       GeoFunctions.st_intersectsInterior(tileEnv, col("footprint")))
 
@@ -174,17 +160,17 @@ object LayerJob {
     // (ADVICE r15): the common tiled layout — many non-overlapping uris
     // per band, one per tile — has catalog-wide counts ≫ 1 but exactly one
     // layer per block, and must bypass. TWO-TIER probe (VERDICT r16 #2):
-    // a band with ≤1 uri catalog-wide can never overlay, so the cheap
-    // catalog-only count (no tile join, no window fan-out — the job that
-    // r15 ran) settles the common single-source case outright; only a
-    // multi-uri band escalates to the exact per-(tile,band) probe over the
-    // tile⋈catalog join (ids only, no pixels). Run unconditionally, that
-    // exact probe's extra Spark job doubled the bench pipeline's build
-    // constant (the r15→r16 drift).
-    val anyBandMulti = prioritized.groupBy("band").count()
-      .filter(col("count") > 1).limit(1).count() > 0
-    val multiSource = anyBandMulti &&
-      work.groupBy(col("tile_id"), col("band"))
+    // a band with ≤1 uri catalog-wide can never overlay, so the collected
+    // catalog's per-band uri count settles the common single-source case
+    // outright; only multi-uri bands escalate to the exact per-(tile,band)
+    // probe over the tile⋈catalog join (ids only, no pixels). Run
+    // unconditionally, that exact probe's extra Spark job doubled the
+    // bench pipeline's build constant (the r15→r16 drift).
+    val multiUri = sources.groupBy(_.band)
+      .collect { case (b, ss) if ss.map(_.uri).distinct.size > 1 => b }.toSeq
+    val multiSource = multiUri.nonEmpty &&
+      work.filter(col("band").isin(multiUri: _*))
+        .groupBy(col("tile_id"), col("band"))
         .agg(countDistinct(col("uri")).as("n"))
         .filter(col("n") > 1).limit(1).count() > 0
     val mosaicked = if (!multiSource) {
@@ -208,9 +194,8 @@ object LayerJob {
 
     // J4: band alignment zip — full outer join across bands on the block
     // key; a band with no coverage contributes null pixels (K4 padding).
-    val bandCount = spec.sourceUri.map(_.length).getOrElse(1)
     val key = Seq("tile_id", "block_row", "block_col", "width", "height")
-    val perBand = (1 to bandCount).map { b =>
+    val perBand = (1 to inBandCount).map { b =>
       mosaicked.filter(col("band") === b)
         .select(key.map(col) :+ col("values").as(s"v$b") :+ col("valid").as(s"k$b"): _*)
     }
@@ -221,8 +206,8 @@ object LayerJob {
     // same per-pixel formula — the intermediate calc-typed array never
     // materializes (it was a full block write + read per band).
     val calcExpr = spec.calc.getOrElse("A")
-    val bandVals = (1 to bandCount).map(b => col(s"v$b"))
-    val bandOks  = (1 to bandCount).map(b => col(s"k$b"))
+    val bandVals = (1 to inBandCount).map(b => col(s"v$b"))
+    val bandOks  = (1 to inBandCount).map(b => col(s"k$b"))
     val pt = spec.pixelType
     val outBands = Raster.blockCalcThen(calcExpr, bandVals, bandOks) { v =>
       (pt.noData match {
@@ -280,6 +265,33 @@ object LayerJob {
         .as("stats")), tileHist)
   }
 
+  /** One catalog source as the joins see it: its GLOBAL `band` (A, B, C…),
+    * `fileBand` inside the file (J4, layers.py:171-237) and its J3
+    * `priority` within the band (1 wins). */
+  private[plans] final case class Source(uri: String, band: Int, fileBand: Int,
+                                         footprint: Array[Byte], priority: Int)
+
+  /** J2 file assignment from ONE collect of `catalog` (`uri`, `band`,
+    * `footprint`; optional `file_band` and `manifest_idx`). Priority =
+    * manifest order (layers.py:196-228) under gdalbuildvrt overlay
+    * semantics (utils/gdal.py:56-95): the LAST-listed file per band gets
+    * rank 1 and wins the J3 fold. Without a `manifest_idx` (tiles.geojson
+    * feature order), (band, uri) order stands in for it. */
+  private[plans] def prioritize(catalog: DataFrame): Seq[Source] = {
+    import catalog.sparkSession.implicits._
+    def opt(c: String, default: Column): Column =
+      if (catalog.columns.contains(c)) col(c) else default
+    val rows = catalog.select(col("uri"), col("band"), opt("file_band", col("band")),
+        col("footprint"), opt("manifest_idx", lit(0L)).cast("long"))
+      .as[(String, Int, Int, Array[Byte], Long)].collect().toSeq
+    val ordered =
+      if (catalog.columns.contains("manifest_idx")) rows
+      else rows.sortBy(r => (r._2, r._1)).zipWithIndex.map { case (r, i) => r.copy(_5 = i + 1L) }
+    ordered.groupBy(_._2).toSeq.sortBy(_._1).flatMap { case (_, band) =>
+      band.sortBy(-_._5).zipWithIndex.map { case ((u, b, fb, fp, _), i) => Source(u, b, fb, fp, i + 1) }
+    }
+  }
+
   /** Per-tile fold of per-block band partials (`tile_id`, `stats`:
     * [[Raster.bandPartials]]) into the tile sink's row shape: one row per
     * tile, `stats` finalized per band ([[StatsPartial.finish]]). */
@@ -304,7 +316,7 @@ object LayerJob {
 
   /** Tiles per partition of [[derive]]'s pass: the driver holds at most
     * this many (tile_id, stats) rows at a time. */
-  private val PassTiles = 1L << 20
+  private[plans] val PassTiles = 1L << 20
 
   /** Footprints buffered per union step of the extent fold. */
   private val UnionBatch = 4096
@@ -318,7 +330,8 @@ object LayerJob {
     *    to `onTile` (K3 manifest, A3 stats), folds the A6 extent — the
     *    union of the tile footprints, [[GeomUnionAgg.unionAll]] over
     *    batches — and counts the processed tiles. The pass streams: the
-    *    driver holds one partition of at most [[PassTiles]] rows at a time.
+    *    driver holds one partition of at most `passTiles` rows
+    *    ([[PassTiles]] in a publish) at a time.
     *
     * Returns the extent (one `geometry` row, null when nothing was
     * processed) and the A8 status tally (`status`, `n`; pipe.py:137-168,
@@ -326,12 +339,13 @@ object LayerJob {
     * comes from counts: processed; empty = |pending| − processed;
     * does-not-intersect = |seed| − |withSource|; existing = |withSource| −
     * |pending|. Zero tallies are omitted and the rest sorted by status. */
-  def derive(spec: LayerSpec, tiles: Tiles, processed: DataFrame)
-            (onTile: Published => Unit): (DataFrame, DataFrame) = {
+  private[plans] def derive(spec: LayerSpec, tiles: Tiles, processed: DataFrame,
+                            passTiles: Long)
+                           (onTile: Published => Unit): (DataFrame, DataFrame) = {
     val spark = processed.sparkSession
     import spark.implicits._
     val (seed, withSource, pending) = tileCounts(tiles)
-    val parts = ((pending + PassTiles - 1) / PassTiles).toInt
+    val parts = ((pending + passTiles - 1) / passTiles).toInt
     val rows = processed.select("tile_id", "stats")
     val ordered =
       if (parts <= 1) rows.coalesce(1) else rows.repartitionByRange(parts, col("tile_id"))
@@ -428,8 +442,13 @@ object LayerJob {
     * (extent, status). */
   def writeTilesGeojson(spec: LayerSpec, tiles: Tiles, processed: DataFrame,
                         path: String): (DataFrame, DataFrame) =
+    writeTilesGeojson(spec, tiles, processed, path, PassTiles)
+
+  /** [[writeTilesGeojson]] with [[derive]]'s pass size. */
+  private[plans] def writeTilesGeojson(spec: LayerSpec, tiles: Tiles, processed: DataFrame,
+                                       path: String, passTiles: Long): (DataFrame, DataFrame) =
     writeCollection(processed.sparkSession, path) { emit =>
-      derive(spec, tiles, processed) { t =>
+      derive(spec, tiles, processed, passTiles) { t =>
         emit(feature(t.geometry, t.uri,
           if (spec.computeStats) Some(t.stats.zipWithIndex.map { case (s, i) => (i + 1, s) })
           else None))

@@ -10,8 +10,9 @@ import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
   *
   * The file catalog is the control-plane relation every raster job plans
   * against: one row per (uri, band) with a footprint geometry and profile.
-  * It is small (hundreds–thousands of rows) and always broadcast into the
-  * tile joins (J1/J2).
+  * It is small (hundreds–thousands of rows), so it is collected once and
+  * planned on the driver, and broadcast into the tile joins (J1/J2) as a
+  * local relation.
   */
 object Catalog {
 

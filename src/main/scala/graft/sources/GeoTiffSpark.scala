@@ -1,9 +1,9 @@
 package graft.sources
 
-import graft.core.LayerSpec
+import graft.core.{Caching, LayerSpec}
 import graft.core.grid.Grid
 import graft.operators.Raster.{BandStats, StatsPartial}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Spark integration of the GeoTIFF codec.
@@ -14,43 +14,12 @@ import org.apache.spark.sql.functions._
   * single-writer-per-tile shape is exactly the reference's per-tile GeoTIFF
   * assembly, minus the process pool.
   *
-  * Source (S4/S5): driver-side metadata harvest for the catalog (small,
-  * like parquet footer reads) + a distributed block reader for LayerJob.
+  * Source (S4/S5): a metadata harvest for the catalog — one job of header
+  * reads (small, like parquet footer reads) whose rows stay on the driver —
+  * + a distributed block reader for LayerJob.
   */
 object GeoTiffSpark {
 
-  /** Write one GeoTIFF per tile under `outDir` (`<tile_id>.tif`), returning
-    * (tile_id, path, n_blocks, stats) rows. `blocks` must carry tile_id,
-    * left/top, block_row, block_col, width, height and band_1..band_N
-    * arrays. `stats` holds each band's A3 statistics over the tile's base
-    * blocks ([[graft.operators.Raster.BandStats]], band order), folded and
-    * finalized in the task that writes the tile: the reference takes a
-    * tile's stats from the tile it just wrote (`tiles/tile.py:143-172`).
-    * With `spec.computeStats` the same task writes the tile's PAM sidecar
-    * `<tile_id>.tif.aux.xml` ([[pamXml]]) right after the `.tif`, so a
-    * sidecar never exists without its tile. Manifests need no second pass
-    * over the pixels ([[graft.plans.LayerJob.derive]]).
-    *
-    * Blocks reach the writer sorted by (tile, level, block row, block
-    * column), so a tile's byte layout does not depend on shuffle order.
-    *
-    * K2 upload: a scheme-qualified `outDir` (s3a://, file://, …) routes
-    * each tile through a local temp file then a Hadoop-FS
-    * `copyFromLocalFile` INSIDE the same task — the reference's
-    * write-local-then-upload step (`tiles/tile.py:143-172`) without a
-    * driver round-trip. Plain paths keep the direct POSIX writer.
-    *
-    * `overviewFactors` (ascending powers of 2) adds INTERNAL overview
-    * levels (chained IFDs, the gdaladdo layout) — a step beyond the
-    * reference, whose COGs ship without overviews (README.md:6). The
-    * build is the k5 dataflow: per-block map-side
-    * [[graft.operators.Resample.downsample]] (4× data reduction, no
-    * shuffle) then [[graft.operators.Resample.regroup2x]] (ONE keyed
-    * exchange per halving, moving only reduced quarters), unioned into
-    * the same single-pass-per-tile writer — task memory stays one block
-    * even for the 10-Gpx tile. `overviewMethod` is any [[Resample]]
-    * kernel; nodata masks to null so kernels exclude it, and nulls
-    * write back as nodata. */
   /** The k5 overview dataflow, one DataFrame per declared factor (with a
     * 1-based `level` column): per-halving map-side
     * [[graft.operators.Resample.downsample]] (4× data reduction, no
@@ -198,6 +167,32 @@ object GeoTiffSpark {
       java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(localPath))
   }
 
+  /** Write one GeoTIFF per tile under `outDir` (`<tile_id>.tif`), returning
+    * (tile_id, path, n_blocks, stats) rows. `blocks` must carry tile_id,
+    * left/top, block_row, block_col, width, height and band_1..band_N
+    * arrays. `stats` holds each band's A3 statistics over the tile's base
+    * blocks ([[graft.operators.Raster.BandStats]], band order), folded and
+    * finalized in the task that writes the tile: the reference takes a
+    * tile's stats from the tile it just wrote (`tiles/tile.py:143-172`).
+    * With `spec.computeStats` the same task writes the tile's PAM sidecar
+    * `<tile_id>.tif.aux.xml` ([[pamXml]]) right after the `.tif`, so a
+    * sidecar never exists without its tile. Manifests need no second pass
+    * over the pixels ([[graft.plans.LayerJob.derive]]).
+    *
+    * Blocks reach the writer sorted by (tile, level, block row, block
+    * column), so a tile's byte layout does not depend on shuffle order.
+    *
+    * K2 upload: a scheme-qualified `outDir` (s3a://, file://, …) routes
+    * each tile through a local temp file then a Hadoop-FS
+    * `copyFromLocalFile` INSIDE the same task — the reference's
+    * write-local-then-upload step (`tiles/tile.py:143-172`) without a
+    * driver round-trip. Plain paths keep the direct POSIX writer.
+    *
+    * `overviewFactors` (ascending powers of 2) adds INTERNAL overview
+    * levels (chained IFDs, the gdaladdo layout) — a step beyond the
+    * reference, whose COGs ship without overviews (README.md:6). The
+    * levels ([[overviewLevels]]) and the base level read one pinned
+    * evaluation of `blocks`, so read, warp and calc run once. */
   def writeTiles(blocks: DataFrame, spec: LayerSpec, outDir: String,
                  overviewFactors: Seq[Int] = Nil,
                  overviewMethod: String = "average",
@@ -231,52 +226,26 @@ object GeoTiffSpark {
       s"overview factors must be distinct ascending powers of 2: $overviewFactors")
     val bandCols = (1 to bandCount).map(i => s"band_$i")
     val keyCols = Seq("tile_id", "left", "top")
-    val base = blocks.select(cols0.map(col): _*).withColumn("level", lit(0))
-    val sinkMode = packMode(pt)
-    val regroupPack = noData.filter(packSafeNoData(sinkMode, _)).map(_ => sinkMode)
+    // pinned only where two branches read it
+    val plane =
+      if (overviewFactors.isEmpty) blocks.select(cols0.map(col): _*)
+      else Caching.shared(blocks.select(cols0.map(col): _*))
+    val base = plane.withColumn("level", lit(0))
+    val mode = packMode(pt)
+    val regroupPack = noData.filter(packSafeNoData(mode, _)).map(_ => mode)
     val leveled =
       if (overviewFactors.isEmpty) base
-      else (base +: overviewLevels(blocks.select(cols0.map(col): _*), block,
+      else (base +: overviewLevels(plane, block,
         bandCols, keyCols, noData, overviewFactors, overviewMethod,
         overviewSeamExact, regroupPack))
         .reduce(_ unionByName _)
     val confBytes = HadoopConfs.capture(spark.sparkContext.hadoopConfiguration)
-    // Sink shuffle WITHOUT per-pixel boxing: the old Row-typed
-    // groupByKey/mapGroups deserialized every band array through a
-    // MapObjects SafeProjection — one java.lang.Double per pixel, twice
-    // (key extraction map-side, group values reduce-side) — the allocation
-    // wall the 2.62-Gpx soak hit. Instead: (1) resolve masked nulls to the
-    // nodata fill per BLOCK ([[graft.functions.FillNulls]] primitive loop
-    // — the writer padded the same value per PIXEL anyway), which makes
-    // the element type non-nullable so the typed decode below is a
-    // primitive toDoubleArray copy; (2) hash-repartition on tile_id (pure
-    // UnsafeRow exchange, no map-side decode at all) + an in-partition
-    // sort on tile_id — the same sort mapGroups ran internally — and
-    // stream tile runs through the writer with one decode per row. */
-    val ndFill = noData.getOrElse(0.0)
-    val bandCols0 = (1 to bandCount).map(i => s"band_$i")
-    // dtype-width pack BEFORE the exchange (PackBand): the shuffle then
-    // moves ~file bytes, not 8 B/px doubles — 4× less wire+spill volume
-    // for uint16 layers, 8× for uint8. Found the hard way: a 10-Gpx
-    // incompressible soak spilled ~80 GB of shuffled doubles for what is
-    // a 20 GB uint16 file. Bit-parity is the kernel's contract (the
-    // writer re-applies the same idempotent clamp).
-    val mode = sinkMode
     // A3 partials of the base blocks ride the same projection, taken
     // BEFORE fillNulls: without a nodata value a null pixel and a 0 look
     // alike once filled
-    val stats = graft.operators.Raster.bandPartials(bandCols0.map(col), noData)
-    val packed = leveled
-      .select((Seq(col("tile_id"), col("left"), col("top"),
-        col("block_row"), col("block_col"), col("level")) ++
-        bandCols0.map(b => graft.functions.BlockKernels.packBand(
-          graft.functions.BlockKernels.fillNulls(col(b), ndFill), mode).as(b)) :+
-        when(col("level") === 0, stats).as("stats")): _*)
-      .repartition(col("tile_id"))
-      .sortWithinPartitions("tile_id", "level", "block_row", "block_col")
-      .select(col("tile_id"), col("left"), col("top"), col("block_row"),
-        col("block_col"), col("level"),
-        array(bandCols0.map(col): _*).as("bands"), col("stats"))
+    val stats = graft.operators.Raster.bandPartials(bandCols.map(col), noData)
+    val packed = sinkExchange(leveled, bandCols, noData, mode,
+        "stats" -> when(col("level") === 0, stats))
       .as[(String, Double, Double, Int, Int, Int, Seq[Array[Byte]],
         Seq[StatsPartial])]
     val sidecars = spec.computeStats
@@ -336,6 +305,36 @@ object GeoTiffSpark {
         }
       }
       .toDF("tile_id", "path", "n_blocks", "stats")
+  }
+
+  /** The exchange in front of both tile writers, WITHOUT per-pixel
+    * boxing (the old Row-typed groupByKey/mapGroups deserialized every band
+    * array through a MapObjects SafeProjection — one java.lang.Double per
+    * pixel, twice — the allocation wall the 2.62-Gpx soak hit):
+    *  - each band's masked nulls resolve to the nodata fill per BLOCK
+    *    ([[graft.functions.FillNulls]] primitive loop — the writer padded
+    *    the same value per PIXEL anyway), so the writer's typed decode is
+    *    a primitive copy;
+    *  - the band packs to its dtype width `mode` BEFORE the exchange
+    *    (PackBand): the shuffle moves ~file bytes, not 8 B/px doubles — a
+    *    10-Gpx incompressible soak spilled ~80 GB of shuffled doubles for
+    *    a 20 GB uint16 file. Bit-parity is the kernel's contract (the
+    *    writer re-applies the same idempotent clamp);
+    *  - a pure UnsafeRow hash exchange on tile_id, then an in-partition
+    *    sort on (tile, level, block row, block column), so writers stream
+    *    tile runs in a shuffle-order-independent layout.
+    * Rows: the block keys and `level`, the packed `bands` array, then the
+    * `extra` columns. */
+  private def sinkExchange(leveled: DataFrame, bandCols: Seq[String], noData: Option[Double],
+                           mode: String, extra: (String, Column)*): DataFrame = {
+    val keys = Seq("tile_id", "left", "top", "block_row", "block_col", "level").map(col)
+    leveled
+      .select(keys ++ bandCols.map(b => graft.functions.BlockKernels.packBand(
+          graft.functions.BlockKernels.fillNulls(col(b), noData.getOrElse(0.0)), mode).as(b)) ++
+        extra.map { case (n, c) => c.as(n) }: _*)
+      .repartition(col("tile_id"))
+      .sortWithinPartitions("tile_id", "level", "block_row", "block_col")
+      .select((keys :+ array(bandCols.map(col): _*).as("bands")) ++ extra.map(e => col(e._1)): _*)
   }
 
   /** `gdaladdo -ro` twin: build EXTERNAL `.ovr` overview sidecars for an
@@ -415,30 +414,15 @@ object GeoTiffSpark {
     val blocks = bandCols.zipWithIndex.foldLeft(blocks0) { case (df, (b, i)) =>
       df.withColumn(b, element_at(col("__bands"), i + 1))
     }.drop("__bands")
-    val ovrMode = packMode(pt)
+    val mode = packMode(pt) // dtype-width wire format, same as writeTiles
     val leveled = overviewLevels(blocks, block, bandCols,
       Seq("tile_id", "left", "top"), noData, factors, method, seamExact,
-      noData.filter(packSafeNoData(ovrMode, _)).map(_ => ovrMode))
+      noData.filter(packSafeNoData(mode, _)).map(_ => mode))
       .reduce(_ unionByName _)
     val f1 = factors.head
     val relFactors = factors.tail.map(_ / f1)
     def ceilDiv(a: Int, f: Int): Int = (a + f - 1) / f
-    // same boxing-free sink shuffle as writeTiles: per-block null→nodata
-    // resolution (non-nullable element type ⇒ primitive array decode),
-    // pure UnsafeRow repartition on tile_id, in-partition key sort,
-    // streamed tile runs
-    val ndFill = noData.getOrElse(0.0)
-    val mode = packMode(pt) // dtype-width wire format, same as writeTiles
-    val packed = leveled
-      .select((Seq(col("tile_id"), col("left"), col("top"),
-        col("block_row"), col("block_col"), col("level")) ++
-        bandCols.map(b => graft.functions.BlockKernels.packBand(
-          graft.functions.BlockKernels.fillNulls(col(b), ndFill), mode).as(b))): _*)
-      .repartition(col("tile_id"))
-      .sortWithinPartitions("tile_id", "level", "block_row", "block_col")
-      .select(col("tile_id"), col("left"), col("top"), col("block_row"),
-        col("block_col"), col("level"),
-        array(bandCols.map(col): _*).as("bands"))
+    val packed = sinkExchange(leveled, bandCols, noData, mode)
       .as[(String, Double, Double, Int, Int, Int, Seq[Array[Byte]])]
     packed
       .mapPartitions { it0 =>
@@ -570,10 +554,10 @@ object GeoTiffSpark {
     import spark.implicits._
     val confBytes = HadoopConfs.capture(spark.sparkContext.hadoopConfiguration)
     // ONE task per file (ADVICE r15): -stats/-mm/-hist folds read every
-    // pixel of a raster, so the /16 batching the header-only harvesters
-    // use would serialize 16 exact folds inside one task. Header-only
-    // probes (harvestCatalog/harvestResolutions) keep the batching —
-    // their per-file cost is a ~KB ranged read where scheduling dominates.
+    // pixel of a raster, so the /16 batching of the header-only harvest
+    // ([[harvestCatalog]]) would serialize 16 exact folds inside one task;
+    // the harvest keeps it: its per-file cost is a ~KB ranged read where
+    // scheduling dominates.
     spark.sparkContext.parallelize(uris, math.max(1, uris.length))
       .map { uri =>
         HadoopConfs.install(confBytes)
@@ -616,27 +600,27 @@ object GeoTiffSpark {
           p.nbits.foreach(nb =>
             sb.append(s""","metadata":{"IMAGE_STRUCTURE":{"NBITS":"$nb"}}"""))
           if (computeStats || computeHistogram) {
-            // exact fold over every block window of this band — nodata and
+            // exact folds over every block window of this band — nodata and
             // NaN excluded, matching gdalinfo -stats -mm (exact, not
             // approx_ok) on a PAM-less file
+            def eachValid(f: Double => Unit): Unit =
+              for (tr <- 0 until p.tilesDown; tc <- 0 until p.tilesAcross) {
+                val px = t.readTile(band, tr, tc)
+                var i = 0
+                while (i < px.length) {
+                  val v = px(i)
+                  if (tc * p.tileWidth + i % p.tileWidth < p.width &&
+                      tr * p.tileHeight + i / p.tileWidth < p.height &&
+                      !v.isNaN && !p.noData.exists(_ == v)) f(v)
+                  i += 1
+                }
+              }
             var n = 0L; var sum = 0.0; var sumSq = 0.0
             var mn = Double.NaN; var mx = Double.NaN
-            for (tr <- 0 until p.tilesDown; tc <- 0 until p.tilesAcross) {
-              val px = t.readTile(band, tr, tc)
-              var i = 0
-              while (i < px.length) {
-                val x = tc * p.tileWidth + i % p.tileWidth
-                val y = tr * p.tileHeight + i / p.tileWidth
-                if (x < p.width && y < p.height) {
-                  val v = px(i)
-                  if (!v.isNaN && !p.noData.exists(_ == v)) {
-                    n += 1; sum += v; sumSq += v * v
-                    if (mn.isNaN || v < mn) mn = v
-                    if (mx.isNaN || v > mx) mx = v
-                  }
-                }
-                i += 1
-              }
+            eachValid { v =>
+              n += 1; sum += v; sumSq += v * v
+              if (mn.isNaN || v < mn) mn = v
+              if (mx.isNaN || v > mx) mx = v
             }
             if (computeStats && n > 0) {
               val mean = sum / n
@@ -651,23 +635,7 @@ object GeoTiffSpark {
               val nb = 256
               val counts = new Array[Long](nb)
               val span = math.max(hi - lo, java.lang.Double.MIN_NORMAL)
-              for (tr <- 0 until p.tilesDown; tc <- 0 until p.tilesAcross) {
-                val px = t.readTile(band, tr, tc)
-                var i = 0
-                while (i < px.length) {
-                  val x = tc * p.tileWidth + i % p.tileWidth
-                  val y = tr * p.tileHeight + i / p.tileWidth
-                  if (x < p.width && y < p.height) {
-                    val v = px(i)
-                    if (!v.isNaN && !p.noData.exists(_ == v)) {
-                      val bucket = math.min(nb - 1,
-                        math.max(0, ((v - lo) / span * nb).toInt))
-                      counts(bucket) += 1
-                    }
-                  }
-                  i += 1
-                }
-              }
+              eachValid(v => counts(math.min(nb - 1, math.max(0, ((v - lo) / span * nb).toInt))) += 1)
               sb.append(s""","histogram":{"count":$nb,"min":${num(lo)},"max":${num(hi)},"buckets":[${counts.mkString(",")}]}""")
             }
           }
@@ -685,46 +653,52 @@ object GeoTiffSpark {
       .toDF("uri", "metadata_json")
   }
 
-  /** S4: harvest (uri, band, footprint, profile) catalog rows from files —
-    * the plan-time metadata job of `layers.py:196-228`. */
-  def harvestCatalog(spark: SparkSession, uris: Seq[String]): DataFrame = {
-    import graft.functions.GeoFunctions
-    import spark.implicits._
-    val confBytes = HadoopConfs.capture(spark.sparkContext.hadoopConfiguration)
-    spark.sparkContext.parallelize(uris, math.max(1, uris.length / 16))
-      .flatMap { uri =>
-        HadoopConfs.install(confBytes)
-        val t = GeoTiff.open(uri)
-        val (l, b, r, tp) = t.bounds
-        (1 to t.profile.bands).map { band =>
-          (uri, band, band, GeoFunctions.write(GeoFunctions.envelope(l, b, r, tp)),
-            t.profile.dataType, t.profile.noData, t.profile.epsg)
-        }
-      }
-      .toDF("uri", "band", "file_band", "footprint", "data_type", "no_data", "epsg")
-  }
+  /** A source that could not be opened or parsed, named by its uri. */
+  final class UnreadableSource(val uri: String, cause: Throwable)
+    extends java.io.IOException(s"cannot read source $uri: $cause", cause)
 
   /** A source's pixel lattice: resolution, origin and internal tiling. */
   final case class SourceLattice(xres: Double, yres: Double, originX: Double,
                                  originY: Double, tileWidth: Int, tileHeight: Int)
 
-  /** Distinct pixel lattices across sources — metadata-only reads,
-    * distributed like [[harvestCatalog]]. Used by the plan-time aligned-
-    * reader probe: the aligned shortcut is only safe when EVERY source sits
-    * on the grid's block lattice ([[onBlockLattice]]), so the probe must
-    * see all profiles, not a sample (the reference opens every source,
-    * sources.py:179-210). */
-  def harvestResolutions(spark: SparkSession, uris: Seq[String]): Seq[SourceLattice] = {
+  /** S4: harvest catalog rows from file metadata — the plan-time metadata
+    * job of `layers.py:196-228`: ONE Spark job of header reads, returned as
+    * a local relation on the driver. One row per (uri, band) with the
+    * footprint, profile (`data_type`, `no_data`, `epsg`) and `lattice`
+    * ([[SourceLattice]]). A source that fails to open fails the job with
+    * an [[UnreadableSource]] naming it. */
+  def harvestCatalog(spark: SparkSession, uris: Seq[String]): DataFrame =
+    harvest(spark, uris.map((_, 0)))
+
+  /** [[harvestCatalog]] of a folder layer: the `.tif` sources under
+    * `folders(i)` ([[Catalog.listFolder]]) are global band i + 1 (A, B, C…
+    * — the reference's band concatenation, layers.py:171-237). */
+  def harvestFolders(spark: SparkSession, folders: Seq[String]): DataFrame =
+    harvest(spark, folders.zipWithIndex.flatMap { case (f, i) =>
+      Catalog.listFolder(spark, f).collect().map(r => (r.getString(0), i + 1))
+    })
+
+  /** The harvest of (uri, global band) pairs; band 0 keeps the file's own
+    * band numbers. */
+  private def harvest(spark: SparkSession, uris: Seq[(String, Int)]): DataFrame = {
+    import graft.functions.GeoFunctions
     import spark.implicits._
     val confBytes = HadoopConfs.capture(spark.sparkContext.hadoopConfiguration)
     spark.sparkContext.parallelize(uris, math.max(1, uris.length / 16))
-      .map { uri =>
+      .flatMap { case (uri, band) =>
         HadoopConfs.install(confBytes)
-        val p = GeoTiff.open(uri).profile
-        SourceLattice(p.xres, p.yres, p.originX, p.originY, p.tileWidth, p.tileHeight)
+        val (p, fp) =
+          try {
+            val t = GeoTiff.open(uri)
+            val (l, b, r, tp) = t.bounds
+            (t.profile, GeoFunctions.write(GeoFunctions.envelope(l, b, r, tp)))
+          } catch { case scala.util.control.NonFatal(e) => throw new UnreadableSource(uri, e) }
+        (1 to p.bands).map(fb => (uri, if (band > 0) band else fb, fb, fp, p.dataType,
+          p.noData, p.epsg,
+          SourceLattice(p.xres, p.yres, p.originX, p.originY, p.tileWidth, p.tileHeight)))
       }
-      .distinct()
       .collect().toSeq
+      .toDF("uri", "band", "file_band", "footprint", "data_type", "no_data", "epsg", "lattice")
   }
 
   /** True when a source's blocks ARE grid blocks: same resolution, internal

@@ -86,7 +86,8 @@ final class ParquetScanRows extends SparkListener {
 
 /** The session's jobs in start order: the SQL execution id and the call
   * site of the action that started each — the execution's for SQL jobs
-  * (which may run on broadcast or AQE threads), the job's own otherwise. */
+  * (which may run on broadcast or AQE threads), the job's own otherwise
+  * (an RDD action's, kept in its stages' details). */
 final class JobLog extends SparkListener {
   private val execSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
   private val started = new java.util.concurrent.ConcurrentLinkedQueue[(Option[Long], String)]()
@@ -97,7 +98,8 @@ final class JobLog extends SparkListener {
   override def onJobStart(js: SparkListenerJobStart): Unit = {
     val p = Option(js.properties)
     started.add((p.flatMap(x => Option(x.getProperty("spark.sql.execution.id"))).map(_.toLong),
-      p.flatMap(x => Option(x.getProperty("callSite.long"))).getOrElse("")))
+      p.flatMap(x => Option(x.getProperty("callSite.long"))).filter(_.nonEmpty)
+        .orElse(js.stageInfos.headOption.map(_.details)).getOrElse("")))
   }
   def jobs: Seq[(Option[Long], String)] = started.asScala.toSeq.map { case (e, site) =>
     (e, e.flatMap(id => Option(execSites.get(id))).getOrElse(site))
@@ -176,11 +178,13 @@ class PixetlSpec extends SparkSpec {
       """"std_dev":null,"count":0}]"""), manifest)
   }
 
-  test("a raster publish reads its sources once: harvest + one tile sink") {
+  /** A whole-world EPSG:4326 uint16 source (`world.tif`, 1° pixels) under
+    * `name`, served through the counting `onepass://` file system. Returns
+    * the folder's uri. */
+  private def worldSource(name: String): String = {
     spark.sparkContext.hadoopConfiguration.set(s"fs.${CountingFileSystem.Scheme}.impl",
       classOf[CountingFileSystem].getName)
-    // a whole-world EPSG:4326 source warped onto the 1-tile, 4-block zoom_1 grid
-    val src = fresh("onepass/src")
+    val src = fresh(name)
     val profile = GeoTiff.Profile(width = 360, height = 180, bands = 1, dataType = "uint16",
       tileWidth = 64, tileHeight = 64, noData = Some(0.0), epsg = 4326,
       originX = -180, originY = 90, xres = 1.0, yres = 1.0)
@@ -188,12 +192,19 @@ class PixetlSpec extends SparkSpec {
     for (tr <- 0 until profile.tilesDown; tc <- 0 until profile.tilesAcross)
       w.writeTile(1, tr, tc, Array.tabulate(64 * 64)(i => (1 + (tr * 64 + i / 64 + tc + i) % 900).toDouble))
     w.close()
-    val srcUri = CountingFileSystem.uriOf(src)
-    val spec = LayerSpec.fromJson(
-      s"""{"dataset": "onepass", "version": "v1", "source_type": "raster",
-         |"pixel_meaning": "x", "data_type": "uint16", "no_data": 0, "grid": "zoom_1",
-         |"resampling": "bilinear", "calc": "A * 2", "compute_stats": true,
-         |"source_uri": ["$srcUri"]}""".stripMargin)
+    CountingFileSystem.uriOf(src)
+  }
+
+  /** A layer warping `srcUri` onto the 1-tile, 4-block zoom_1 grid. */
+  private def warpLayer(srcUri: String, extra: String = ""): LayerSpec = LayerSpec.fromJson(
+    s"""{"dataset": "onepass", "version": "v1", "source_type": "raster",
+       |"pixel_meaning": "x", "data_type": "uint16", "no_data": 0, "grid": "zoom_1",
+       |"resampling": "bilinear", "calc": "A * 2", "compute_stats": true,$extra
+       |"source_uri": ["$srcUri"]}""".stripMargin)
+
+  test("a raster publish reads its sources once: harvest + one tile sink") {
+    val srcUri = worldSource("onepass/src")
+    val spec = warpLayer(srcUri)
 
     CountingFileSystem.take()
     val dest = fresh("onepass/dest")
@@ -219,6 +230,87 @@ class PixetlSpec extends SparkSpec {
     assert(sink._1 > 0 && sink._2 > 0)
     assert(publish == ((harvest._1 + sink._1, harvest._2 + sink._2)),
       s"publish read (opens, bytes) $publish; harvest $harvest + one sink $sink")
+  }
+
+  test("internal overviews do not re-read the sources") {
+    val srcUri = worldSource("ovr/src")
+    def opens(name: String, spec: LayerSpec): Long = {
+      CountingFileSystem.take()
+      Pixetl.run(spark, spec, fresh(name).toString, overwrite = false, sub = None)
+      CountingFileSystem.take()._1
+    }
+    val plain = opens("ovr/plain", warpLayer(srcUri))
+    val pyramid = opens("ovr/cog", warpLayer(srcUri, """ "overviews": [2], "cog": true,"""))
+    info(s"source opens: $plain plain, $pyramid with overviews")
+    assert(plain > 0 && pyramid == plain, s"source opens: $plain plain, $pyramid with overviews")
+  }
+
+  /** The jobs a publish of `spec` starts before its tile sink's SQL
+    * execution, as (execution id, call site). */
+  private def jobsBeforeSink(spec: LayerSpec, dest: Path): Seq[(Option[Long], String)] = {
+    val log = new JobLog
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(log)
+    try {
+      Pixetl.run(spark, spec, dest.toString, overwrite = false, sub = None)
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(log)
+    val jobs = log.jobs
+    val sink = jobs.indexWhere(_._2.contains("graft.Pixetl$.writeWithPyramid"))
+    assert(sink >= 0)
+    jobs.take(sink)
+  }
+
+  test("a one-band folder publish starts one Spark job before the sink: the harvest") {
+    val warp = warpLayer(worldSource("prologue/warp"))
+    // one 512x256 source on the 90/256 block lattice: the aligned reader
+    val grid = graft.core.grid.GridFactory("90/256")
+    val src = fresh("prologue/aligned")
+    val w = new GeoTiff.Writer(src.resolve("span.tif").toString, GeoTiff.Profile(
+      width = 512, height = 256, bands = 1, dataType = "uint16",
+      tileWidth = grid.blockSize, tileHeight = grid.blockSize, noData = Some(0.0),
+      epsg = 4326, originX = -180, originY = 90, xres = grid.xres, yres = grid.yres))
+    w.writeTile(1, 0, 0, Array.fill(256 * 256)(5.0))
+    w.writeTile(1, 0, 1, Array.fill(256 * 256)(7.0))
+    w.close()
+    val aligned = statsLayer(src, """ "no_data": 0,""")
+    for ((name, spec) <- Seq("warp" -> warp, "aligned" -> aligned)) {
+      val before = jobsBeforeSink(spec, fresh(s"prologue/$name-dest"))
+      info(s"$name prologue: ${before.size} jobs")
+      assert(before.size == 1 && before.head._2.contains("graft.sources.GeoTiffSpark$.harvest"),
+        s"$name: jobs before the sink:\n" +
+          before.map(_._2.linesIterator.take(4).mkString(" | ")).mkString("\n"))
+    }
+  }
+
+  test("a folder that lists no source fails the plan on every reader path") {
+    val empty = fresh("nosrc/src")
+    Files.writeString(empty.resolve("readme.txt"), "no rasters here")
+    // 90/256 shares the sources' CRS; zoom_1 is a cross-CRS (warp) layer
+    for (grid <- Seq("90/256", "zoom_1")) {
+      val spec = LayerSpec.fromJson(
+        s"""{"dataset": "nosrc", "version": "v1", "source_type": "raster",
+           |"pixel_meaning": "x", "data_type": "uint16", "no_data": 0, "grid": "$grid",
+           |"source_uri": ["$empty"]}""".stripMargin)
+      val e = intercept[IllegalArgumentException](
+        Pixetl.run(spark, spec, fresh("nosrc/dest").toString, overwrite = false, sub = None))
+      assert(e.getMessage.contains(
+        s"no sources found for nosrc/v1: catalog resolved from $empty is empty"), e.getMessage)
+    }
+  }
+
+  test("an unreadable source fails the publish with its uri") {
+    for ((name, bytes) <- Seq("empty" -> Array.emptyByteArray,
+        "text" -> "not a tiff at all".getBytes("UTF-8"))) {
+      val src = fresh(s"badsrc/$name")
+      val bad = src.resolve(s"$name.tif")
+      Files.write(bad, bytes)
+      val spec = statsLayer(src, """ "no_data": 0,""")
+      val e = intercept[Exception](
+        Pixetl.run(spark, spec, fresh("badsrc/dest").toString, overwrite = false, sub = None))
+      val text = Pixetl.failure("pixetl", e)
+      assert(text.contains(s"cannot read source file:$bad"), text)
+    }
   }
 
   test("a vector publish scans its features once") {

@@ -173,6 +173,76 @@ class LayerJobSpec extends SparkSpec {
     assert(e2.getMessage.contains("Input bands do not overlap"))
   }
 
+  /** Two bands, three uris each, listed out of uri order. */
+  private def threeByTwo: DataFrame = Seq(
+    ("s3://b/c.tif", 1, 3, -170.0, -80.0, -20.0, 70.0),
+    ("s3://b/a.tif", 1, 1, -120.0, -60.0, 10.0, 50.0),
+    ("s3://b/b.tif", 1, 2, -60.0, -30.0, 40.0, 85.0),
+    ("s3://b/z.tif", 2, 2, -100.0, -70.0, -5.0, 20.0),
+    ("s3://b/x.tif", 2, 3, -30.0, -10.0, 170.0, 60.0),
+    ("s3://b/y.tif", 2, 1, -150.0, 15.0, -40.0, 80.0))
+    .map { case (u, b, i, l, bo, r, t) =>
+      (u, b, i, GeoFunctions.write(GeoFunctions.envelope(l, bo, r, t))) }
+    .toDF("uri", "band", "manifest_idx", "footprint")
+
+  test("driver-side priority matches the catalog Window formulas") {
+    import org.apache.spark.sql.expressions.Window
+    // the Window derivation the driver-side one replaced, kept as the oracle
+    def oracle(cat: DataFrame): Set[(String, Int, Int)] = {
+      val ordered =
+        if (cat.columns.contains("manifest_idx")) cat
+        else cat.withColumn("manifest_idx", row_number().over(Window.orderBy("band", "uri")))
+      ordered.withColumn("priority", row_number().over(
+          Window.partitionBy("band").orderBy(col("manifest_idx").desc)))
+        .select("uri", "band", "priority").as[(String, Int, Int)].collect().toSet
+    }
+    for (cat <- Seq(threeByTwo, threeByTwo.drop("manifest_idx"))) {
+      val got = LayerJob.prioritize(cat)
+      assert(got.map(s => (s.uri, s.band, s.priority)).toSet == oracle(cat), cat.columns.toSeq)
+      assert(got.forall(s => s.fileBand == s.band)) // no file_band: the band stands in
+    }
+    // with manifest_idx the last-listed file wins; without, the last uri
+    assert(LayerJob.prioritize(threeByTwo).filter(_.priority == 1).map(_.uri).toSet ==
+      Set("s3://b/c.tif", "s3://b/x.tif"))
+    assert(LayerJob.prioritize(threeByTwo.drop("manifest_idx")).filter(_.priority == 1)
+      .map(_.uri).toSet == Set("s3://b/c.tif", "s3://b/z.tif"))
+  }
+
+  test("a two-band intersection layer selects the tiles of the aggregated band unions") {
+    val spec2 = spec.copy(grid = "10/40000", calc = Some("A + B"),
+      sourceUri = Some(Seq("s3://b/a.tif", "s3://b/b.tif")))
+    val cat = threeByTwo
+    // the distributed per-band union aggregate the driver-side fold replaced
+    val layerGeom = cat.groupBy("band")
+      .agg(graft.functions.GeomUnionAgg.column(col("footprint")).as("g"))
+      .collect().map(r => GeoFunctions.read(r.getAs[Array[Byte]]("g")))
+      .reduce(GeoFunctions.intersectionPolygonal)
+    val grid = spec2.gridDef
+    val expected = grid.tilesDF(spark)
+      .filter(GeoFunctions.st_intersectsInterior(
+        GeoFunctions.st_makeEnvelope(col("left"), col("bottom"), col("right"), col("top")),
+        lit(GeoFunctions.write(layerGeom))))
+      .select("tile_id").as[String].collect().toSet
+    val got = LayerJob.run(spark, spec2, cat, reader).tiles.withSource
+      .select("tile_id").as[String].collect().toSet
+    assert(expected.size > 10 && got == expected, s"${got.size} tiles vs ${expected.size}")
+  }
+
+  test("tiles.geojson from a range-partitioned pass equals the one-partition pass") {
+    val written = graft.core.Caching.shared(graft.sources.GeoTiffSpark.writeTiles(
+      result.blocks, spec.copy(computeStats = true), "target/tmp/layerjob_pass"))
+    assert(written.count() >= 3)
+    def manifest(name: String, passTiles: Long): Array[Byte] = {
+      val path = s"target/tmp/layerjob_pass_$name.geojson"
+      LayerJob.writeTilesGeojson(spec.copy(computeStats = true), result.tiles, written,
+        path, passTiles)
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+    }
+    val one = manifest("one", LayerJob.PassTiles)
+    val ranged = manifest("ranged", 2)
+    assert(one.nonEmpty && java.util.Arrays.equals(one, ranged))
+  }
+
   test("J3 mosaic: higher-priority file wins where files overlap") {
     // reader that encodes the uri priority into the pixel value
     val priorityReader: LayerJob.BlockReader = blocks =>
