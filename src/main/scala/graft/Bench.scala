@@ -1,9 +1,6 @@
 package graft
 
-import graft.core.{GraftSession, LayerSpec}
-import graft.operators.Raster
-import graft.plans.LayerJob
-import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":"total","value":…,"queries":{…}}.
@@ -240,12 +237,10 @@ object Bench {
         Thread.sleep(15000); waited += 15
       }
     }
-    val known = SparkEntry.queries.keySet +
-      "layer_pipeline_199mpx" + "layer_pipeline_2gpx"
-    val unknown = only -- known
+    val unknown = only -- SparkEntry.queries.keySet
     if (unknown.nonEmpty) {
       System.err.println(s"[bench] unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
-      System.err.println(s"[bench] valid names: any SparkEntry.queries key, layer_pipeline_199mpx, or layer_pipeline_2gpx")
+      System.err.println(s"[bench] valid names: any SparkEntry.queries key")
       sys.exit(2)
     }
     // explicit names may reach ANY ledger query (local iteration on a
@@ -266,42 +261,6 @@ object Bench {
     spark.sparkContext.addSparkListener(taskMetrics)
     val qMetrics = scala.collection.mutable.LinkedHashMap
       .empty[(String, String), (Long, Long, Long, Long, Long)]
-
-    // Pipeline throughput: the full LayerJob (seed → spatial join → block
-    // read → mosaic → calc → cast/fill → stats) over 2 tiles of the
-    // 90/9984 grid with the synthetic reader — ~199 Mpx end to end, the
-    // shape the reference's 648-tile envelope is quoted against. Counts
-    // blocks AND folds stats so every stage executes.
-    def layerPipeline(grid: String = "90/9984",
-        subset: Seq[String] = Seq("90N_180W", "90N_090W")): (Double, Double, Double) = {
-      val spec = LayerSpec(dataset = "bench", version = "v1", sourceType = "raster",
-        pixelMeaning = "x", dataType = "uint16", calc = Some("A * 2 + 1"),
-        grid = grid, sourceUri = Some(Seq("mem")), noData = Some(Seq(0.0)))
-      val catalog = {
-        import spark.implicits._
-        Seq(("mem://bench.tif", 1,
-          graft.functions.GeoFunctions.write(
-            graft.functions.GeoFunctions.envelope(-180, -90, 180, 90))))
-          .toDF("uri", "band", "footprint")
-      }
-      val reader: LayerJob.BlockReader = b => Raster.synthesizeBand(b.drop("band"), band = 1)
-      val t0 = System.nanoTime()
-      val r = LayerJob.run(spark, spec, catalog, reader,
-        subset = Some(subset))
-      val tb = System.nanoTime()
-      r.blocks.queryExecution.executedPlan // plan = analysis + optimization
-      val t1 = System.nanoTime()
-      // FORCE the pixel plane: count() lets Catalyst column-prune every
-      // band computation (generation, mask, calc, cast — the aggregate's
-      // unused value expressions too), so a count-driven "199 Mpx" run
-      // measured shuffle bookkeeping, not pixels (discovered r15 — the
-      // earlier per-core MB/s figures overstate real pixel throughput).
-      // size() forces each band array to materialize (computing every
-      // element); the stats fold is forced by consuming its aggregates.
-      r.blocks.agg(sum(size(col("band_1")))).collect()
-      r.tileStats.agg(sum(col("n") + col("stat_min") + col("stat_max"))).collect()
-      ((tb - t0) / 1e9, (t1 - tb) / 1e9, (System.nanoTime() - t1) / 1e9)
-    }
 
     /** Dispersion-guarded measurement: 3 timed runs, each COLD (graft-
       * registered caches released between runs, so a run never reads a
@@ -372,8 +331,7 @@ object Bench {
           }
         }
       }
-    } ++ (if (only.isEmpty || only("layer_pipeline_199mpx"))
-      Seq("layer_pipeline_199mpx" -> measure(() => layerPipeline())) else Nil)
+    }
     def render(f: ((String, (Double, Double, Double, Double, Double, Double))) => Double): String =
       results.map { case kv @ (k, _) => "\"" + k + "\":" + f"${f(kv)}%.3f" }
         .mkString("{", ",", "}")
@@ -411,7 +369,6 @@ object Bench {
     // per-round invocation stays safe; queries past the budget are recorded
     // in sf1_skipped, never silently dropped. Runs AFTER the post-run
     // calibration spin so the sf0.1 contention verdict is unaffected.
-    // layer_pipeline is excluded (synthetic raster — SF-independent).
     val sf1Budget = sys.env.getOrElse("SPARK_GRAFT_SF1_BUDGET_SECS", "600").toDouble
     val sf1Enabled = only.isEmpty &&
       !sys.env.get("SPARK_GRAFT_SF1").contains("off")
@@ -529,20 +486,6 @@ object Bench {
         100.0 * (sf10Steal1 - sf10Steal0) / (sf10Jiffies1 - sf10Jiffies0)
       else 0.0
 
-    // 2-Gpx pipeline decade leg (VERDICT r17 #7): the baseline-parity
-    // claim rests on the 199-Mpx forced pipeline; this leg runs the SAME
-    // pipeline at ~11x the pixels — 3 tiles of the 90/27008 grid =
-    // 2,188 Mpx — so the Mpx/s/core figure gets its own scale curve (flat
-    // within ~1.3x = the map phase really is linear). CANONICAL since
-    // round 19 (VERDICT r18 #5): every full run records it — the decade
-    // curve (3.04 → 4.79 Mpx/s/core in r18) is the repo's strongest
-    // baseline evidence and must not live behind an opt-in flag. Costs
-    // ~45 s per full run; SPARK_GRAFT_PIPE2G=off opts out.
-    val pipe2gEnabled = only("layer_pipeline_2gpx") ||
-      (only.isEmpty && !sys.env.get("SPARK_GRAFT_PIPE2G").contains("off"))
-    val pipe2g = if (!pipe2gEnabled) None else Some(measure(() =>
-      layerPipeline("90/27008", Seq("90N_180W", "90N_090W", "00N_180W"))))
-
     val sf1Total = sf1Results.map { case (_, (b, p, e)) => b + p + e }.sum
     def sf1Render(f: ((Double, Double, Double)) => Double): String =
       sf1Results.map { case (k, t) => "\"" + k + "\":" + f"${f(t)}%.3f" }
@@ -570,13 +513,6 @@ object Bench {
           f"""{"shuffle_read_mb":${r / 1e6}%.1f,"shuffle_write_mb":${w / 1e6}%.1f,"mem_spill_mb":${ms / 1e6}%.1f,"disk_spill_mb":${ds / 1e6}%.1f,"tasks":$tk%d}"""
       }).mkString("{", ",", "}")
     val nCores = cpus.toInt
-    val pipe2gTag = pipe2g.map { case (tot, _, _, b, pl, ex) =>
-      val mpx2g = 3.0 * 27008L * 27008L / 1e6
-      val mpx199 = 2.0 * 9984L * 9984L / 1e6
-      val p199 = results.toMap.get("layer_pipeline_199mpx")
-      f""","pipe2g_total":$tot%.3f,"pipe2g_build":$b%.3f,"pipe2g_plan":$pl%.3f,"pipe2g_exec":$ex%.3f,"pipe2g_mpx":$mpx2g%.1f,"pipe2g_mpx_per_core_exec":${mpx2g / ex / nCores}%.2f""" +
-        p199.map(t => f""","pipe199_mpx_per_core_exec":${mpx199 / t._6 / nCores}%.2f""").getOrElse("")
-    }.getOrElse("")
     val sf10Tag = if (!sf10Enabled) "" else
       f""","sf10_total":$sf10Total%.3f,"sf10_n":${sf10Results.size},"sf10_skipped":${sf1List(sf10Skipped)},"sf10_failed":${sf1List(sf10Failed)},"sf10_loadavg_start":$sf10LoadStart%.2f,"sf10_loadavg_end":$sf10LoadEnd%.2f,"sf10_steal_pct":$sf10StealPct%.2f"""
     val sf10Names = sf10Results.map(_._1)
@@ -637,14 +573,14 @@ object Bench {
       (if (only.isEmpty) ""
        else s""","partial":true,"filter":[${only.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}]""")
     val full =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$nCores%d,"loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"steal_pct":$stealPct%.2f,"calib_spin_ms":$calibMs%.1f,"calib_spin_end_ms":$calibEndMs%.1f$partialTag,"queries":$qs,"queries_min":$qsMin,"queries_max":$qsMax,"queries_build":$qsBuild,"queries_plan":$qsPlan,"queries_exec":$qsExec$sf01Shuffle$sf1Full$sf10Full$pipe2gTag,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$nCores%d,"loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"steal_pct":$stealPct%.2f,"calib_spin_ms":$calibMs%.1f,"calib_spin_end_ms":$calibEndMs%.1f$partialTag,"queries":$qs,"queries_min":$qsMin,"queries_max":$qsMax,"queries_build":$qsBuild,"queries_plan":$qsPlan,"queries_exec":$qsExec$sf01Shuffle$sf1Full$sf10Full,"sf":"$sfDir"}"""
     // The driver tails stdout with a ~3 KB byte cap; rounds 7 AND 8 lost the
     // head of the full (min/max-bearing) line to that cap even with the
     // file fallback. Keep the full record in BENCH_LATEST.json, but print a
     // COMPACT medians-only line to stdout — ~1.5 KB, which survives the tail
     // cap together with sbt's trailing [success] line.
     val compact =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$nCores%d,"loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"steal_pct":$stealPct%.2f,"calib_spin_ms":$calibMs%.1f,"calib_spin_end_ms":$calibEndMs%.1f$partialTag$sf1Tag$sf10Tag$pipe2gTag,"queries":$qs,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$nCores%d,"loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"steal_pct":$stealPct%.2f,"calib_spin_ms":$calibMs%.1f,"calib_spin_end_ms":$calibEndMs%.1f$partialTag$sf1Tag$sf10Tag,"queries":$qs,"sf":"$sfDir"}"""
     // a contended full run must NOT become the canonical baseline: r12's
     // contended record overwrote BENCH_LATEST and poisoned a round of
     // regression detection (ADVICE r12 medium)

@@ -187,6 +187,11 @@ object Pixetl {
           val existing = Catalog.existingTiles(spark, outDir)
           val result = LayerJob.run(spark, spec, catalog, reader,
             subset = sub, existing = Some(existing), overwrite = overwrite)
+          // pinned: the sink reads the tile sets (through `pending`), and
+          // so does the status count after it
+          val LayerJob.Tiles(_, withSource, pending, _) = result.tiles
+          Caching.shared(withSource)
+          if (pending ne withSource) Caching.shared(pending)
           (result.blocks, result.tiles)
         case "vector" =>
           // S7: features from a live PostGIS via ONE partitioned JDBC scan
@@ -253,7 +258,7 @@ object Pixetl {
         s"$outDir/tiles.geojson")
       Files.writeString(Paths.get(s"$outDir/extent.geojson"),
         LayerJob.renderExtentGeojson(extent))
-      status.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      status
     } finally pins.close()
   }
 }

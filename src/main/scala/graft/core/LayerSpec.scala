@@ -36,6 +36,9 @@ final case class LayerSpec(
     order: Option[String] = None,       // "asc" | "desc"
     symbology: Option[Symbology] = None,
     computeStats: Boolean = false,
+    // `compute_histogram`: parsed, but a publish ignores it (tiles.geojson
+    // carries no per-band histogram); per-tile histograms come only from
+    // `GeoTiffSpark.fetchMetadata(computeHistogram = true)`, gdalinfo -hist
     computeHistogram: Boolean = false,
     photometric: Option[String] = None,
     // COG-driver-style destination options — a step beyond the reference,

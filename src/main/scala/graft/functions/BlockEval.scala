@@ -333,31 +333,3 @@ case class BlockStats(values: Expression, valid: Option[Expression],
       newChildren: IndexedSeq[Expression]): Expression =
     copy(values = newChildren(0), valid = newChildren.lift(1))
 }
-
-/** Valid-pixel count (A5) as a primitive loop — counts TRUE mask elements
-  * (null mask elements count 0, like `when(ok, 1).otherwise(0)`). */
-case class BlockValidCount(valid: Expression)
-  extends Expression with CodegenFallback {
-  override def prettyName: String = "block_valid_count"
-  override def children: Seq[Expression] = Seq(valid)
-  override def nullable: Boolean = valid.nullable
-  override def foldable: Boolean = false
-  override def dataType: DataType = IntegerType
-
-  override def eval(input: InternalRow): Any = {
-    val ka = valid.eval(input)
-    if (ka == null) return null
-    val k = ka.asInstanceOf[ArrayData]
-    var c = 0; var i = 0
-    val n = k.numElements()
-    while (i < n) {
-      if (!k.isNullAt(i) && k.getBoolean(i)) c += 1
-      i += 1
-    }
-    c
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(valid = newChildren(0))
-}

@@ -104,10 +104,6 @@ object Raster {
       .withColumn("valid", masked)
   }
 
-  /** Apply a masked scalar op elementwise over a (values, valid) pair. */
-  def maskedMap(values: Column, valid: Column)(f: Column => Column): (Column, Column) =
-    (zip_with(values, valid, (v, ok) => when(ok, f(v))), valid)
-
   /** Null masked pixels out of a value array (`when(ok, v)` per pixel) —
     * compiled block kernel. */
   def maskValues(values: Column, valid: Column): Column = {
@@ -166,30 +162,6 @@ object Raster {
     }
   }
 
-  /** Cast + nodata fill (operator P2): masked → sentinel, then cast
-    * (`array_utils.py:12-41`) — compiled block kernel. `elemType` is the
-    * input's element type (the calc's output type; double for raw reads). */
-  def castFill(values: Column, noData: Option[Double], sparkType: String,
-               elemType: org.apache.spark.sql.types.DataType =
-                 org.apache.spark.sql.types.DoubleType): Column = {
-    import graft.functions.BlockEval
-    BlockEval.zip(Seq(values -> elemType)) { case Seq(v, _) =>
-      val filled = noData match {
-        case Some(nd) => coalesce(v, lit(nd))
-        case None     => v
-      }
-      filled.cast(sparkType)
-    }
-  }
-
-  /** Valid-pixel count per block (A5) — drives the empty-block filter F5
-    * (`array_utils.py:44-58`). Primitive block kernel over the mask. */
-  def validCount(valid: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(graft.functions.BlockValidCount(
-      ColumnBridge.expression(valid)))
-  }
-
   /** Per-block partial stats (min/max/sum/sumsq/count) in ONE array pass.
     * This is the map-side combine of operator A3: per-band stats over a
     * 10-Gpx tile never explode pixels into rows — blocks fold to 5 numbers
@@ -214,26 +186,5 @@ object Raster {
       lit(0.0).as("sum"), lit(0.0).as("sumsq"), lit(0L).as("cnt"))
     array(bands.map(b => coalesce(ColumnBridge.column(graft.functions.BlockStats(
       ColumnBridge.expression(b), None, noData)), empty)): _*)
-  }
-
-  /** Per-pixel histogram bucket index (A4 map side; `gdalinfo -hist`
-    * semantics: n equal buckets over [lo, hi], out-of-range clamps to the
-    * edge buckets). Pure zip_with arithmetic — invalid/nodata pixels map
-    * to null — so the consumer's explode + count hash-aggregate builds
-    * the histogram entirely inside whole-stage codegen, map-side combined
-    * to ≤ n rows per task before any shuffle. This replaced the last UDF
-    * on the raster hot path: the per-block boxed-Seq UDF paid more in
-    * (de)serializing a 100k-element Seq[java.lang.Double] than its
-    * imperative fill ever saved. */
-  def bucketIndex(values: Column, valid: Column, lo: Double, hi: Double, n: Int): Column = {
-    import graft.functions.BlockEval
-    import org.apache.spark.sql.types.{BooleanType, DoubleType}
-    val width = (hi - lo) / n
-    BlockEval.zip(Seq(values -> DoubleType, valid -> BooleanType)) {
-      case Seq(v, ok, _) =>
-        when(ok && v.isNotNull,
-          least(greatest(floor((v - lo) / width), lit(0.0)),
-            lit((n - 1).toDouble)).cast("int"))
-    }
   }
 }

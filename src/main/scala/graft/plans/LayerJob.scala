@@ -1,40 +1,47 @@
 package graft.plans
 
-import graft.core.{Caching, LayerSpec}
+import graft.core.LayerSpec
 import graft.core.grid.Bounds
 import graft.functions.{GeoFunctions, GeomUnionAgg}
 import graft.operators.Raster
-import graft.operators.Raster.{BandStats, StatsPartial}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import graft.operators.Raster.BandStats
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.Geometry
 import scala.jdk.CollectionConverters._
 
-/** The end-to-end raster layer job — the Spark re-expression of the pixetl
-  * CLI lifecycle (SURVEY §3.1). All of the reference's process boundaries
+/** The raster layer job — the Spark re-expression of the pixetl CLI
+  * lifecycle (SURVEY §3.1). All of the reference's process boundaries
   * (parallelpipe stages, per-window forks, GDAL subprocesses) collapse into
-  * ONE lazy DataFrame program:
+  * ONE lazy DataFrame program, from the tile seed to the output blocks:
   *
   *   tiles seed (S1) → subset filter (F1) → source-intersect semi-join (F2/J1,
   *   catalog broadcast) → existing anti-join (F3/J6) → file assignment (J2) →
   *   block expansion → block read (S5, pluggable reader) → mosaic coalesce
   *   (J3) → band zip (J4) → calc (P1) → cast/fill (P2) → empty-block filter
-  *   (F5) → sinks: block store (K1 stand-in), per-tile stats (A3), manifests
-  *   (A6/A7/K3), status tally (A8).
+  *   (F5).
   *
-  * Scale design: everything partitions by tile_id from the seed on; the only
-  * shuffles are (a) the block groupBy for mosaic overlap — keyed
-  * (tile, band, block), map-side combined — and (b) the final per-tile
-  * metadata aggregation, whose input is already 5-number partials per block.
-  * The source catalog is collected once on the driver ([[prioritize]]);
-  * priority, per-band uri counts and the layer geometry come from its
-  * rows, and it joins the tiles as a broadcast local relation.
+  * A publish (`Pixetl.run`) sinks the blocks as tiles
+  * ([[graft.sources.GeoTiffSpark.writeTiles]], which also folds each
+  * tile's A3 stats), then [[writeTilesGeojson]] derives the manifest (K3),
+  * extent (A6) and status tally (A8) from the sink's per-tile rows.
+  *
+  * Scale design: everything partitions by tile_id from the seed on; the
+  * only shuffles before the sink are the spread of the block work list
+  * (narrow descriptors, no pixels) and, when some (tile, band) has more
+  * than one source, the block groupBy for mosaic overlap — keyed (tile,
+  * band, block), map-side combined. The source catalog is collected once
+  * on the driver ([[prioritize]]); priority, per-band uri counts and the
+  * layer geometry come from its rows, and it joins the tiles as a
+  * broadcast local relation.
   */
 object LayerJob {
 
   /** A block reader turns (tile_id, band, block_row, block_col, width,
     * height, uri, priority) work rows into pixel rows (+values, +valid).
-    * Production: a GeoTIFF decoder; tests/bench: Raster.synthesizeBand. */
+    * Production: [[graft.sources.GeoTiffSpark.reader]] for sources on the
+    * grid's block lattice, [[graft.sources.WarpReader.reader]] otherwise;
+    * tests and perfbench's calc kernel leg: Raster.synthesizeBand. */
   type BlockReader = DataFrame => DataFrame
 
   /** The plan-side tile sets of a publish — footprint joins, no pixels:
@@ -45,37 +52,16 @@ object LayerJob {
   final case class Tiles(seed: DataFrame, withSource: DataFrame, pending: DataFrame,
                          emptyStatus: String)
 
-  /** A layer job's plan (raster here, vector in [[VectorJob]]): `blocks`
-    * are the output pixel blocks (post calc/fill). `tileStats`,
-    * `manifest`, `extent` and `status` are small local frames, [[derive]]d
-    * on first use from a per-tile fold of `partials` (per-block
-    * [[Raster.bandPartials]] of the non-empty blocks), which re-runs the
-    * pixel plane. A publish derives them from its sink's rows instead
-    * (`Pixetl.run`). */
-  final class Result(val blocks: DataFrame, val tiles: Tiles, spec: LayerSpec,
-                     partials: DataFrame,
-                     val tileHistogram: Option[DataFrame]) { // per (tile_id, band) A4 buckets
-    private lazy val derived = {
-      val spark = blocks.sparkSession
-      import spark.implicits._
-      val manifest = Vector.newBuilder[(String, Double, Double, Double, Double, String, String)]
-      val stats = Vector.newBuilder[(String, Int, Double, Double, Double, Double, Long)]
-      val (extent, status) = derive(spec, tiles, foldTiles(partials), PassTiles) { t =>
-        val b = t.bounds
-        manifest += ((t.tileId, b.left, b.bottom, b.right, b.top, t.uri, t.geometry))
-        for ((s, i) <- t.stats.zipWithIndex)
-          stats += ((t.tileId, i + 1, s.min, s.max, s.mean, s.std, s.n))
-      }
-      (manifest.result().toDF("tile_id", "left", "bottom", "right", "top", "uri", "geometry"),
-        stats.result().toDF("tile_id", "band", "stat_min", "stat_max", "stat_mean", "stat_std", "n"),
-        extent, status)
-    }
-    def manifest: DataFrame = derived._1  // per-tile footprint + uri (tiles.geojson rows)
-    def tileStats: DataFrame = derived._2 // per (tile_id, band) A3 stats
-    def extent: DataFrame = derived._3    // 1-row geometric union (extent.geojson)
-    def status: DataFrame = derived._4    // status tally (A8)
-  }
+  /** A layer job's plan (raster here, vector in [[VectorJob]]): the
+    * output pixel `blocks` (post calc/fill, empty blocks dropped) and the
+    * plan-side [[Tiles]]. A publish sinks the blocks
+    * ([[graft.sources.GeoTiffSpark.writeTiles]]) and derives manifests,
+    * extent and status from the sink's rows ([[writeTilesGeojson]]). */
+  final case class Result(blocks: DataFrame, tiles: Tiles)
 
+  /** The plan of `spec` over `catalog` read through `reader`. It pins
+    * nothing: a caller that consumes the tile sets more than once pins
+    * `withSource` and `pending` itself (`Pixetl.run`). */
   def run(spark: SparkSession, spec: LayerSpec, catalog: DataFrame,
           reader: BlockReader, subset: Option[Seq[String]] = None,
           existing: Option[DataFrame] = None, overwrite: Boolean = false): Result = {
@@ -97,9 +83,7 @@ object LayerJob {
     // interiors-intersect test of raster_src_tile.py:155-161.
     val tileEnv = GeoFunctions.st_makeEnvelope(col("left"), col("bottom"), col("right"), col("top"))
     val inBandCount = spec.sourceUri.map(_.length).getOrElse(1)
-    // pinned: the sink reads it (through `pending`), and so does the
-    // status count after it
-    val withSource = Caching.shared(
+    val withSource =
       if (spec.unionBands || inBandCount == 1)
         subsetted.join(broadcast(sources.map(_.footprint).toDF("src_fp")),
           GeoFunctions.st_intersectsInterior(tileEnv, col("src_fp")), "left_semi")
@@ -111,13 +95,11 @@ object LayerJob {
         require(!layerGeom.isEmpty, "Input bands do not overlap") // layers.py:255-257
         subsetted.filter(
           GeoFunctions.st_intersectsInterior(tileEnv, lit(GeoFunctions.write(layerGeom))))
-      })
+      }
 
-    // F3/J6: skip already-materialized tiles unless overwrite (pinned
-    // like withSource)
+    // F3/J6: skip already-materialized tiles unless overwrite
     val pending = existing match {
-      case Some(ex) if !overwrite =>
-        Caching.shared(withSource.join(broadcast(ex), Seq("tile_id"), "left_anti"))
+      case Some(ex) if !overwrite => withSource.join(broadcast(ex), Seq("tile_id"), "left_anti")
       case _ => withSource
     }
 
@@ -232,37 +214,7 @@ object LayerJob {
     val nonEmpty = nonEmptyBare.join(
       broadcast(pending.select("tile_id", "left", "bottom", "right", "top")), "tile_id")
 
-    val tiles = Tiles(subsetted, withSource, pending, "skipped (has no data)")
-
-    // A4 per (tile, band) when requested: per-block bucket partials summed
-    // elementwise — the gdalinfo -hist shape {count, min, max, buckets[]}
-    // (models/pydantic.py:81-85) over the pixel type's storage range.
-    val tileHist =
-      if (!spec.computeHistogram) None
-      else {
-        val (lo, hi) = pt.range
-        val nb = 256
-        val histIn = (1 to spec.bandCount).map { i =>
-          computed.select(col("tile_id"), lit(i).as("band"),
-            explode(Raster.bucketIndex(
-              col(s"band_$i").cast("array<double>"),
-              Raster.validMask(col(s"band_$i"), pt.sparkType, pt.noData),
-              lo, math.min(hi, 65536.0), nb)).as("pos"))
-            .where(col("pos").isNotNull)
-        }.reduce(_ unionByName _)
-        Some(histIn
-          .groupBy("tile_id", "band", "pos").agg(count(lit(1)).as("n"))
-          .groupBy("tile_id", "band")
-          .agg(map_from_arrays(collect_list("pos"), collect_list("n")).as("m"))
-          .select(col("tile_id"), col("band"),
-            transform(sequence(lit(0), lit(nb - 1)),
-              i => coalesce(element_at(col("m"), i), lit(0L))).as("buckets"))
-          .drop("m"))
-      }
-
-    new Result(nonEmpty, tiles, spec, nonEmptyBare.select(col("tile_id"),
-      Raster.bandPartials((1 to spec.bandCount).map(i => col(s"band_$i")), pt.noData)
-        .as("stats")), tileHist)
+    Result(nonEmpty, Tiles(subsetted, withSource, pending, "skipped (has no data)"))
   }
 
   /** One catalog source as the joins see it: its GLOBAL `band` (A, B, C…),
@@ -292,19 +244,6 @@ object LayerJob {
     }
   }
 
-  /** Per-tile fold of per-block band partials (`tile_id`, `stats`:
-    * [[Raster.bandPartials]]) into the tile sink's row shape: one row per
-    * tile, `stats` finalized per band ([[StatsPartial.finish]]). */
-  private def foldTiles(partials: DataFrame): DataFrame = {
-    val spark = partials.sparkSession
-    import spark.implicits._
-    partials.select("tile_id", "stats").as[(String, Seq[StatsPartial])]
-      .groupByKey(_._1)
-      .reduceGroups((a, b) => (a._1, a._2.zip(b._2).map { case (x, y) => x.merge(y) }))
-      .map { case (id, (_, ps)) => (id, ps.map(_.finish)) }
-      .toDF("tile_id", "stats")
-  }
-
   /** One processed tile as [[derive]] hands it on: its K3 manifest fields
     * and its A3 stats (band order). */
   final case class Published(tileId: String, bounds: Bounds, uri: String,
@@ -322,9 +261,8 @@ object LayerJob {
   private val UnionBatch = 4096
 
   /** The one derivation of what a publish reports beside its tiles, from
-    * `processed`: one row per tile with `tile_id` and `stats` (finalized
-    * per-band [[BandStats]]) — the tile sink's rows, or [[foldTiles]] of
-    * block partials. Two Spark jobs:
+    * `processed`, the tile sink's rows: one row per tile with `tile_id`
+    * and `stats` (finalized per-band [[BandStats]]). Two Spark jobs:
     *  - one count over the plan-side [[Tiles]] ([[tileCounts]]);
     *  - one pass over `processed` in tile_id order, which hands each tile
     *    to `onTile` (K3 manifest, A3 stats), folds the A6 extent — the
@@ -333,15 +271,15 @@ object LayerJob {
     *    driver holds one partition of at most `passTiles` rows
     *    ([[PassTiles]] in a publish) at a time.
     *
-    * Returns the extent (one `geometry` row, null when nothing was
-    * processed) and the A8 status tally (`status`, `n`; pipe.py:137-168,
-    * skip reasons raster_pipe.py:62-81) as small local frames. The tally
-    * comes from counts: processed; empty = |pending| − processed;
-    * does-not-intersect = |seed| − |withSource|; existing = |withSource| −
-    * |pending|. Zero tallies are omitted and the rest sorted by status. */
+    * Returns the extent's GeoJSON geometry (None when nothing was
+    * processed) and the A8 status tally (status, count; pipe.py:137-168,
+    * skip reasons raster_pipe.py:62-81). The tally comes from counts:
+    * processed; empty = |pending| − processed; does-not-intersect =
+    * |seed| − |withSource|; existing = |withSource| − |pending|. Zero
+    * tallies are omitted and the rest sorted by status. */
   private[plans] def derive(spec: LayerSpec, tiles: Tiles, processed: DataFrame,
                             passTiles: Long)
-                           (onTile: Published => Unit): (DataFrame, DataFrame) = {
+                           (onTile: Published => Unit): (Option[String], Seq[(String, Long)]) = {
     val spark = processed.sparkSession
     import spark.implicits._
     val (seed, withSource, pending) = tileCounts(tiles)
@@ -373,8 +311,7 @@ object LayerJob {
         "skipped (does not intersect)" -> (seed - withSource),
         "existing" -> (withSource - pending))
       .groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > 0).toSeq.sorted
-    (Seq(Option(extent).map(GeoFunctions.toGeoJson)).toDF("geometry"),
-      status.toDF("status", "n"))
+    (Option(extent).map(GeoFunctions.toGeoJson), status)
   }
 
   /** |seed|, |withSource| and |pending| of a publish in ONE Spark job: an
@@ -409,21 +346,8 @@ object LayerJob {
     s"""{"type":"Feature","geometry":$geometry,"properties":{"name":"$uri"$props}}"""
   }
 
-  /** A FeatureCollection written to `out`: `body` emits its features. */
-  private def featureCollection[T](out: java.io.Writer)(body: (String => Unit) => T): T = {
-    out.write("{\"type\":\"FeatureCollection\",\"features\":[")
-    var first = true
-    val result = body { f =>
-      if (!first) out.write(",")
-      out.write(f)
-      first = false
-    }
-    out.write("]}")
-    result
-  }
-
-  /** [[featureCollection]] streamed to a file; scheme-qualified paths go
-    * through Hadoop FS. */
+  /** A FeatureCollection streamed to the file at `path`: `body` emits its
+    * features. Scheme-qualified paths go through Hadoop FS. */
   private def writeCollection[T](spark: SparkSession, path: String)
                                 (body: (String => Unit) => T): T = {
     val hp = new org.apache.hadoop.fs.Path(
@@ -433,7 +357,17 @@ object LayerJob {
     fs.setWriteChecksum(false) // no .crc droppings next to manifests
     val out = new java.io.BufferedWriter(
       new java.io.OutputStreamWriter(fs.create(hp, true), "UTF-8"), 1 << 20)
-    try featureCollection(out)(body) finally out.close()
+    try {
+      out.write("{\"type\":\"FeatureCollection\",\"features\":[")
+      var first = true
+      val result = body { f =>
+        if (!first) out.write(",")
+        out.write(f)
+        first = false
+      }
+      out.write("]}")
+      result
+    } finally out.close()
   }
 
   /** A publish's K3 sink: [[derive]] over the tile sink's rows, streaming
@@ -441,12 +375,13 @@ object LayerJob {
     * its per-band stats when the spec computes them. Returns derive's
     * (extent, status). */
   def writeTilesGeojson(spec: LayerSpec, tiles: Tiles, processed: DataFrame,
-                        path: String): (DataFrame, DataFrame) =
+                        path: String): (Option[String], Seq[(String, Long)]) =
     writeTilesGeojson(spec, tiles, processed, path, PassTiles)
 
   /** [[writeTilesGeojson]] with [[derive]]'s pass size. */
   private[plans] def writeTilesGeojson(spec: LayerSpec, tiles: Tiles, processed: DataFrame,
-                                       path: String, passTiles: Long): (DataFrame, DataFrame) =
+                                       path: String, passTiles: Long)
+      : (Option[String], Seq[(String, Long)]) =
     writeCollection(processed.sparkSession, path) { emit =>
       derive(spec, tiles, processed, passTiles) { t =>
         emit(feature(t.geometry, t.uri,
@@ -455,49 +390,18 @@ object LayerJob {
       }
     }
 
-  /** The features of a manifest frame (`tile_id`, `uri`, `geometry`) in
-    * tile_id order, each with its `tileStats` rows (per (tile_id, band)
-    * `stat_min`, `stat_max`, `stat_mean`, `stat_std`, `n`) when given —
-    * streamed via `toLocalIterator`, one partition of driver memory. */
-  private def manifestFeatures(manifest: DataFrame,
-                               tileStats: Option[DataFrame]): Iterator[String] = {
-    val withBands = tileStats match {
-      case None => manifest.withColumn("bands", lit(null))
-      case Some(st) => manifest.join(st.groupBy("tile_id").agg(sort_array(collect_list(
-        struct(col("band"), col("stat_min"), col("stat_max"), col("stat_mean"),
-          col("stat_std"), col("n")))).as("bands")), Seq("tile_id"), "left")
-    }
-    withBands.orderBy("tile_id").select("geometry", "uri", "bands")
-      .toLocalIterator().asScala.map { r =>
-        feature(r.getString(0), r.getString(1), Option(r.getSeq[Row](2)).map(_.map(b =>
-          (b.getInt(0), BandStats(b.getDouble(1), b.getDouble(2), b.getDouble(3),
-            b.getDouble(4), b.getLong(5))))))
-      }
-  }
-
-  /** Manifest sink (K3) for a manifest frame: the tiles.geojson string of
-    * [[writeTilesGeojson]]. The string is the caller's ask and bounded
-    * only by driver heap; deep-zoom manifests (WM z≥14) should stream to
-    * a path instead. */
-  def renderTilesGeojson(manifest: DataFrame, tileStats: Option[DataFrame] = None): String = {
-    val out = new java.io.StringWriter
-    featureCollection(out)(emit => manifestFeatures(manifest, tileStats).foreach(emit))
-    out.toString
-  }
-
-  /** Streamed K3 sink for a manifest frame: features stream to the file
-    * via `toLocalIterator` — one partition of driver memory instead of one
-    * giant string, so a zoom-22 manifest (268 M tiles) writes without
-    * materializing. Scheme-qualified paths go through Hadoop FS. */
-  def writeTilesGeojson(manifest: DataFrame, path: String,
-                        tileStats: Option[DataFrame] = None): Unit =
+  /** K3 sink for a manifest frame (`tile_id`, `uri`, `geometry`): one
+    * feature per row in tile_id order, without stats, streamed to the
+    * file via `toLocalIterator` — one partition of driver memory, so a
+    * zoom-22 manifest (268 M tiles) writes without materializing. */
+  def writeTilesGeojson(manifest: DataFrame, path: String): Unit =
     writeCollection(manifest.sparkSession, path) { emit =>
-      manifestFeatures(manifest, tileStats).foreach(emit)
+      manifest.orderBy("tile_id").select("geometry", "uri").toLocalIterator().asScala
+        .foreach(r => emit(feature(r.getString(0), r.getString(1), None)))
     }
 
-  def renderExtentGeojson(extent: DataFrame): String = {
-    val rows = extent.collect()
-    val geom = if (rows.isEmpty || rows(0).isNullAt(0)) "null" else rows(0).getString(0)
-    s"""{"type":"FeatureCollection","features":[{"type":"Feature","geometry":$geom,"properties":{}}]}"""
-  }
+  /** extent.geojson: one feature whose geometry is [[derive]]'s extent
+    * (null when nothing was processed). */
+  def renderExtentGeojson(extent: Option[String]): String =
+    s"""{"type":"FeatureCollection","features":[{"type":"Feature","geometry":${extent.getOrElse("null")},"properties":{}}]}"""
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.core.LayerSpec
 import graft.functions.GeoFunctions
-import graft.operators.{Raster, Rasterize}
+import graft.operators.Rasterize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -110,8 +110,6 @@ object VectorJob {
 
     // K3 manifests for vector layers too (pipes/pipe.py:163-167); a tile
     // without burnt pixels does not intersect (vector_pipe.py:62)
-    val tileSets = LayerJob.Tiles(tiles, tiles, tiles, "skipped (does not intersect)")
-    new LayerJob.Result(withTile, tileSets, spec, withTile.select(col("tile_id"),
-      Raster.bandPartials(Seq(col("band_1")), spec.pixelType.noData).as("stats")), None)
+    LayerJob.Result(withTile, LayerJob.Tiles(tiles, tiles, tiles, "skipped (does not intersect)"))
   }
 }

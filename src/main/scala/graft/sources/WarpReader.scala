@@ -27,10 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object WarpReader {
 
-  /** Same-CRS warp (origin/resolution change only). */
-  def reader(targetXres: Double, targetYres: Double, blockSize: Int): LayerJob.BlockReader =
-    reader(targetXres, targetYres, blockSize, "EPSG:4326", "EPSG:4326")
-
   /** Tap radius per interpolating kernel — shared with the integer-
     * decimation block kernel so both resampling paths blend identical
     * weights (see [[graft.functions.ResampleTaps]]). */

@@ -7,8 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session on the production profile, pinned to 4 cores (one
   * per JVM, lazily built). Pins a suite leaves in the session registry
-  * (`Caching.shared` outside a scope, e.g. `LayerJob.run`'s tile sets) are
-  * released after the suite. */
+  * (`Caching.shared` outside a scope) are released after the suite. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.local(getClass.getSimpleName, "4")
 

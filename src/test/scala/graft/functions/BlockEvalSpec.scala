@@ -110,12 +110,6 @@ class BlockEvalSpec extends SparkSpec {
     }
   }
 
-  test("BlockValidCount equals the HOF aggregate count") {
-    val hof = aggregate(col("k"), lit(0), (acc, ok) => acc + when(ok, 1).otherwise(0))
-    df.select(graft.operators.Raster.validCount(col("k")).as("a"), hof.as("b"))
-      .collect().foreach(r => assert(r.getInt(0) == r.getInt(1)))
-  }
-
   test("multiband calc kernel equals the lambda form on masked semantics") {
     val two = df.withColumn("v2", transform(col("v"), x => x * 2))
       .withColumn("k2", col("k"))

@@ -21,7 +21,8 @@ class RasterSpec extends SparkSpec {
 
   test("identity transform: output == input (test_raster_src_tile.py:36-79)") {
     val in = Raster.synthesizeBand(blocks, band = 1)
-    val out = in.withColumn("out", Raster.castFill(col("values"), None, "double"))
+    val out = in.withColumn("out",
+      Raster.blockCalcThen("A", Seq(col("values")), Seq(col("valid")))(_.cast("double")).head)
     val bad = out.filter(col("out") =!= col("values")).count()
     assert(bad == 0)
   }
@@ -62,23 +63,23 @@ class RasterSpec extends SparkSpec {
 
   test("masked pixels null out and fill with nodata (set_datatype, array_utils.py:12-41)") {
     val in = Raster.synthesizeBand(blocks, band = 1, nodataEvery = 7)
-    val calced = in.withColumn("out",
-      Raster.blockCalc("A + 1", Seq(col("values")), Seq(col("valid"))).head)
-    val filled = calced.withColumn("f", Raster.castFill(col("out"), Some(255), "int"))
+    // calc + cast/fill fused in one kernel, the form LayerJob.run uses
+    val filled = in.withColumn("f", Raster.blockCalcThen("A + 1", Seq(col("values")),
+      Seq(col("valid")))(v => coalesce(v, lit(255.0)).cast("int")).head)
     // every invalid position got the sentinel; valid positions got v+1
-    val checked = filled.select(
-      Raster.validCount(col("valid")).as("nvalid"),
-      size(filter(col("f"), x => x === 255)).as("nfilled"),
-      size(col("f")).as("n")).collect()
-    checked.foreach { r =>
-      assert(r.getInt(1) >= r.getInt(2) - r.getInt(0)) // filled ≥ masked count
-    }
+    val bad = filled.select(explode(arrays_zip(col("values"), col("valid"), col("f"))).as("p"))
+      .filter(when(col("p.valid"), col("p.f") =!= col("p.values") + 1)
+        .otherwise(col("p.f") =!= 255))
+    assert(filled.filter(array_contains(col("valid"), false)).count() > 0)
+    assert(bad.count() == 0)
   }
 
   test("empty-block filter F5 + valid count A5 (array_utils.py:44-58)") {
     val in = Raster.synthesizeBand(blocks, band = 1, nodataEvery = 1) // all masked
-    val nonEmpty = in.filter(Raster.validCount(col("valid")) > 0)
-    assert(nonEmpty.count() == 0)
+    // the F5 filter of LayerJob.run: a block survives if any pixel is valid
+    val calced = in.withColumn("out",
+      Raster.blockCalc("A", Seq(col("values")), Seq(col("valid"))).head)
+    assert(calced.filter(size(filter(col("out"), _.isNotNull)) > 0).count() == 0)
   }
 
   test("partial block stats fold + combine == global stats (A3)") {
@@ -95,19 +96,5 @@ class RasterSpec extends SparkSpec {
     assert(stats.max == truth.getDouble(1))
     assert(math.abs(stats.mean - truth.getDouble(2)) < 1e-9)
     assert(stats.n == truth.getLong(3))
-  }
-
-  test("bucket indexes cover every valid pixel and clamp to edges (A4)") {
-    val in = Raster.synthesizeBand(blocks, band = 1)
-    val total = in
-      .select(explode(Raster.bucketIndex(col("values"), col("valid"), 0, 255, 8)).as("b"))
-      .where(col("b").isNotNull).count()
-    assert(total == 9L * 336 * 336)
-    // out-of-range values clamp to the edge buckets; invalid → null
-    val r = spark.range(1).select(Raster.bucketIndex(
-      array(lit(-5.0), lit(10.0), lit(255.0), lit(300.0), lit(null).cast("double"), lit(40.0)),
-      array(lit(true), lit(true), lit(true), lit(true), lit(true), lit(false)),
-      0, 255, 8).as("b")).collect()(0).getSeq[Any](0)
-    assert(r == Seq(0, 0, 7, 7, null, null))
   }
 }

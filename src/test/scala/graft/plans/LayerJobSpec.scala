@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end layer job: the status algebra + filters + stats + manifests of
   * the reference pipe tests (tests/test_pipe.py, tests/test_raster_pipe.py),
-  * driven fully inside Spark with a synthetic block reader. */
+  * driven fully inside Spark with a synthetic block reader and published
+  * through the tile sink ([[Publish]]). */
 class LayerJobSpec extends SparkSpec {
   import spark.implicits._
 
@@ -31,9 +32,14 @@ class LayerJobSpec extends SparkSpec {
   private lazy val result =
     LayerJob.run(spark, spec, catalog, reader)
 
+  private def dir(name: String): String = s"target/tmp/layerjob/$name"
+
+  /** `result` published with stats. */
+  private lazy val published = Publish(result, spec.copy(computeStats = true), dir("stats"))
+
   test("F2 prunes tiles outside the source extent") {
     // grid 90/1008 has 8 tiles; eastern-north/south pair (90..180) has no coverage
-    val tiles = result.manifest.select("tile_id").as[String].collect().toSet
+    val tiles = published.tileIds
     assert(tiles.size == 6)
     assert(!tiles.exists(t => t.endsWith("090E")))
   }
@@ -44,34 +50,41 @@ class LayerJobSpec extends SparkSpec {
   }
 
   test("A3 stats exist per processed tile and are sane") {
-    val st = result.tileStats.collect()
-    assert(st.length == 6) // one band per tile
-    st.foreach { r =>
-      assert(r.getAs[Double]("stat_max") <= 2 * 255)
-      assert(r.getAs[Long]("n") > 0)
+    val bands = published.features.map(_.get("properties").get("bands"))
+    assert(bands.length == 6)
+    bands.foreach { b =>
+      assert(b.size == 1) // one band per tile
+      assert(b.get(0).get("max").asDouble <= 2 * 255)
+      assert(b.get(0).get("count").asLong > 0)
     }
   }
 
   test("manifest + extent render as FeatureCollections (K3)") {
-    val tiles = LayerJob.renderTilesGeojson(result.manifest)
+    val tiles = published.tilesGeojson
     assert(tiles.startsWith("""{"type":"FeatureCollection""""))
     assert(tiles.contains("d/v1/raster/epsg-4326/90x1008/x/geotiff/"))
-    val extent = LayerJob.renderExtentGeojson(result.extent)
+    val extent = LayerJob.renderExtentGeojson(published.extent)
     assert(extent.contains("\"type\":\"Polygon\"") || extent.contains("\"type\":\"MultiPolygon\""))
   }
 
   test("manifest with stats carries per-band properties (Metadata.bands shape)") {
-    val js = LayerJob.renderTilesGeojson(result.manifest, Some(result.tileStats))
+    val js = published.tilesGeojson
     assert(js.contains("\"bands\":[{\"band\":1,"))
     assert(js.contains("\"std_dev\":"))
   }
 
-  test("streamed tiles.geojson equals the driver-rendered string (with stats)") {
-    val path = "target/tmp/layerjob_tiles.geojson"
-    LayerJob.writeTilesGeojson(result.manifest, path, Some(result.tileStats))
-    val streamed = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
-    assert(streamed == LayerJob.renderTilesGeojson(result.manifest, Some(result.tileStats)))
+  test("a manifest frame's tiles.geojson equals the publish's without stats") {
+    val plain = Publish(result, spec, dir("plain"))
+    assert(!plain.tilesGeojson.contains("\"bands\""))
+    val grid = spec.gridDef
+    val manifest = plain.tileIds.toSeq.map { id =>
+      val b = grid.tileBounds(id)
+      (id, s"${spec.prefix()}/$id.tif",
+        GeoFunctions.toGeoJson(GeoFunctions.envelope(b.left, b.bottom, b.right, b.top)))
+    }.toDF("tile_id", "uri", "geometry")
+    val path = s"${dir("plain")}/frame.geojson"
+    LayerJob.writeTilesGeojson(manifest, path)
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(path)) == plain.tilesGeojson)
   }
 
   test("PAM stats sidecars: one aux.xml per tile with per-band statistics") {
@@ -88,23 +101,8 @@ class LayerJobSpec extends SparkSpec {
     assert(xml.contains("STATISTICS_MINIMUM") && xml.contains("STATISTICS_VALID_PERCENT"))
   }
 
-  test("A4 per-tile histogram: bucket mass equals valid pixel count") {
-    val r = LayerJob.run(spark, spec.copy(computeHistogram = true), catalog, reader)
-    val hist = r.tileHistogram.get
-    val h = hist.collect()
-    assert(h.length == 6)
-    val statByTile = r.tileStats.collect()
-      .map(x => x.getAs[String]("tile_id") -> x.getAs[Long]("n")).toMap
-    h.foreach { row =>
-      val total = row.getSeq[Long](2).sum
-      assert(total == statByTile(row.getString(0)),
-        s"tile ${row.getString(0)}: hist mass $total != n ${statByTile(row.getString(0))}")
-      assert(row.getSeq[Long](2).length == 256)
-    }
-  }
-
   test("status algebra: processed counts (pipe.py:137-168)") {
-    val tally = result.status.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val tally = published.status
     assert(tally("processed") == 6)
     // the eastern pair has no source coverage (raster_pipe.py:62-68)
     assert(tally("skipped (does not intersect)") == 2)
@@ -114,17 +112,25 @@ class LayerJobSpec extends SparkSpec {
   test("F3: existing tiles skipped unless overwrite (test_pipe.py:50-107)") {
     val existing = Seq("90N_180W").toDF("tile_id")
     val r2 = LayerJob.run(spark, spec, catalog, reader, existing = Some(existing))
-    val tally2 = r2.status.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val tally2 = Publish(r2, spec, dir("existing")).status
     assert(tally2("processed") == 5 && tally2("existing") == 1)
     val r3 = LayerJob.run(spark, spec, catalog, reader, existing = Some(existing),
       overwrite = true)
-    val tally3 = r3.status.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val tally3 = Publish(r3, spec, dir("overwrite")).status
     assert(tally3("processed") == 6)
   }
 
   test("F1: subset restricts the seed (pipe.py:77-88)") {
     val r = LayerJob.run(spark, spec, catalog, reader, subset = Some(Seq("90N_180W")))
-    assert(r.manifest.count() == 1)
+    assert(Publish(r, spec, dir("subset")).features.size == 1)
+  }
+
+  test("a bare LayerJob.run pins nothing") {
+    spark.catalog.clearCache()
+    val r = LayerJob.run(spark, spec, catalog, reader,
+      existing = Some(Seq("90N_180W").toDF("tile_id")))
+    assert(r.blocks.count() > 0)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("union_bands: default intersects per-band footprints, true unions them") {
@@ -142,11 +148,13 @@ class LayerJobSpec extends SparkSpec {
           transform(sequence(lit(0), col("width") * col("height") - 1), _ => lit(1.0)))
         .withColumn("valid",
           transform(sequence(lit(0), col("width") * col("height") - 1), _ => lit(true)))
-    val inter = LayerJob.run(spark, spec2, cat2, constReader)
-      .manifest.select("tile_id").as[String].collect().toSet
+    val inter = Publish(LayerJob.run(spark, spec2, cat2, constReader), spec2,
+      dir("intersection")).tileIds
     assert(inter == Set("90N_090W", "00N_090W"), s"intersection got $inter")
+    // the union's F2 set, unpublished: a union tile that only one band
+    // covers has null band arrays, on which the tile sink's unpackBand throws
     val uni = LayerJob.run(spark, spec2.copy(unionBands = true), cat2, constReader)
-      .manifest.select("tile_id").as[String].collect().toSet
+      .tiles.withSource.select("tile_id").as[String].collect().toSet
     assert(uni.size == 6 && inter.subsetOf(uni), s"union got $uni")
   }
 

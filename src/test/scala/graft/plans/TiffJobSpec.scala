@@ -136,7 +136,7 @@ class TiffJobSpec extends SparkSpec {
     val result = LayerJob.run(spark, mbSpec, cat, GeoTiffSpark.reader,
       subset = Some(Seq(grid.tileId(0))))
     val outDir = dir("outMb")
-    GeoTiffSpark.writeTiles(result.blocks, mbSpec, outDir).collect()
+    val written = GeoTiffSpark.writeTiles(result.blocks, mbSpec, outDir).collect()
     val t = GeoTiff.open(s"$outDir/${grid.tileId(0)}.tif")
     assert(t.profile.bands == 3)
     assert(t.profile.photometric.contains("RGB")) // PHOTOMETRIC creation option (tile.py:68-71)
@@ -145,7 +145,7 @@ class TiffJobSpec extends SparkSpec {
     b1.indices.filter(i => b1(i) != 0.0).take(100).foreach { i =>
       assert(b3(i) == b1(i) + b2(i))
     }
-    assert(result.tileStats.count() == 3) // stats per output band
+    assert(written.map(_.getAs[Seq[_]]("stats").length).toSeq == Seq(3)) // stats per output band
   }
 
   test("writeTiles overviewFactors=Seq(2) sinks an internal pyramid per tile") {

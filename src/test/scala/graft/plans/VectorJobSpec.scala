@@ -34,11 +34,12 @@ class VectorJobSpec extends SparkSpec {
   test("vector job emits K3 manifests (pipes/pipe.py:163-167)") {
     val g = GeoFunctions.write(GeoFunctions.envelope(-170, 10, -150, 30))
     val r = VectorJob.run(spark, spec, Seq((g, 7L)).toDF("geom", "value"))
-    val m = r.manifest.collect()
-    assert(m.length == 1 && m(0).getAs[String]("tile_id") == "90N_180W")
-    assert(m(0).getAs[String]("uri").endsWith("/90N_180W.tif"))
-    assert(m(0).getAs[String]("geometry").contains("\"type\":\"Polygon\""))
-    assert(LayerJob.renderExtentGeojson(r.extent).contains("Polygon"))
+    val out = Publish(r, spec, "target/tmp/vectorjob/manifest")
+    val m = out.features
+    assert(m.length == 1 && out.tileIds == Set("90N_180W"))
+    assert(m(0).get("properties").get("name").asText.endsWith("/90N_180W.tif"))
+    assert(m(0).get("geometry").get("type").asText == "Polygon")
+    assert(LayerJob.renderExtentGeojson(out.extent).contains("Polygon"))
   }
 
   test("burn-count mode adds overlapping features") {
@@ -75,7 +76,7 @@ class VectorJobSpec extends SparkSpec {
   test("status tally counts processed tiles") {
     val g = GeoFunctions.write(GeoFunctions.envelope(-170, 10, -150, 30))
     val r = VectorJob.run(spark, spec, Seq((g, 1L)).toDF("geom", "value"))
-    assert(r.status.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+    assert(Publish(r, spec, "target/tmp/vectorjob/status").status
       == Map("processed" -> 1L, "skipped (does not intersect)" -> 7L))
   }
 }

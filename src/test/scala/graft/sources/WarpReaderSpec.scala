@@ -48,7 +48,8 @@ class WarpReaderSpec extends SparkSpec {
     val src = writeFineSource()
     val catalog = GeoTiffSpark.harvestCatalog(spark, Seq(src))
       .selectExpr("uri", "band", "footprint")
-    val reader = WarpReader.reader(grid.xres, grid.yres, grid.blockSize)
+    val reader = WarpReader.reader(grid.xres, grid.yres, grid.blockSize,
+      "EPSG:4326", "EPSG:4326")
     val result = LayerJob.run(spark, spec, catalog, reader)
     val blocks = result.blocks.filter(col("tile_id") === "90N_180W").cache()
     assert(blocks.count() == 9)
@@ -332,7 +333,8 @@ class WarpReaderSpec extends SparkSpec {
     }
     val catalog = GeoTiffSpark.harvestCatalog(spark, strips)
       .selectExpr("uri", "band", "footprint")
-    val reader = WarpReader.reader(grid.xres, grid.yres, grid.blockSize)
+    val reader = WarpReader.reader(grid.xres, grid.yres, grid.blockSize,
+      "EPSG:4326", "EPSG:4326")
     val counts = LayerJob.run(spark, spec, catalog, reader,
         subset = Some(Seq("90N_180W"))).blocks
       .select(explode(col("band_1")).as("v"))
@@ -347,7 +349,8 @@ class WarpReaderSpec extends SparkSpec {
     val src = s"${dir()}/fine.tif"
     val catalog = GeoTiffSpark.harvestCatalog(spark, Seq(src))
       .selectExpr("uri", "band", "footprint")
-    val reader = WarpReader.reader(grid.xres, grid.yres, grid.blockSize)
+    val reader = WarpReader.reader(grid.xres, grid.yres, grid.blockSize,
+      "EPSG:4326", "EPSG:4326")
     val r1 = LayerJob.run(spark, spec, catalog, reader).blocks
       .agg(sum(expr("aggregate(band_1, 0L, (a, x) -> a + x)"))).collect()(0).getLong(0)
     val r2 = LayerJob.run(spark, spec, catalog, reader).blocks
