@@ -14,51 +14,7 @@ object Bench {
   /** Headline set: one per operator family, weighted toward the shapes that
     * dominate at 100 TB (scan+agg, 3-way join, window, dedup shuffle,
     * similarity, text scoring, rasterize-style pixel agg). */
-  val headline: Seq[String] = Seq(
-    "q1_pricing_summary", "q5_local_supplier", "j5_join3_revenue", "j2_file_catalog_join",
-    "a1_rasterize_count", "a3_band_stats", "a4_histogram",
-    "w1_ordered_burn_rank", "st1_window_agg", "st2_sessionize",
-    "f3_exists_antijoin", "o1_topk", "x5_asof_join",
-    "t3_quality_score", "t4_fingerprint",
-    "d2_minhash_sig", "d3_lsh_candidates", "d5_jaccard_pairs",
-    "d6_dedup_groups", "t7_tfidf", "c1_curation_pipeline", "c2_quality_gate",
-    "e1_knn_brute", "e2_knn_lsh", "e6_semantic_dedup",
-    "s1_grid_seed", "m1_media_features", "r3_warp_3857",
-    "r6_focal_mean", "t16_posting_lists", "g1_distance_join",
-    "g4_pagerank", "t20_bm25", "x10_funnel", "a10_region_label",
-    "b1_bloom_join", "q4_order_priority", "q6_forecast_revenue",
-    // round-8 additions: the heaviest new TPC-H shapes (5-table join,
-    // double-correlated anti/semi, nested-agg profit), the maintained-
-    // stats BM25, and the mixture-balancing window
-    "q7_nation_volume", "q21_waiting_supplier", "q9_product_profit",
-    "t22_bm25_incremental", "t24_mixture_sample",
-    // round-9 additions: the corpus-rewrite scrub, the two new iterative
-    // graph ops, and the histogram quantile sketch
-    "t25_span_scrub", "g7_label_prop", "g8_kcore", "x20_approx_quantile",
-    "e12_kmeans_exact",
-    // round-9 second batch: the frequency sketch, the second iterative
-    // eigen-style graph op, subspace codebook training, and the
-    // window-cumsum compaction planner
-    "t29_count_min", "g9_hits", "e13_pq_train", "x22_compaction_plan",
-    // round-9 third batch: the halo-exchange multi-index terrain pass,
-    // sparse-frontier personalized pagerank, wedge-capped link prediction,
-    // the bitmap-index overlap matrix, and native session windows
-    "r12_terrain_idx", "g10_ppr", "g11_link_pred", "x26_bitmap_overlap",
-    "st5_session_window",
-    // round-9 fourth batch: sequence patterns (collect-and-regex shape),
-    // modularity (labeling + census over one pinned edge relation)
-    "x27_event_pattern", "g12_modularity",
-    // round-9 batch 8/9: GNN message passing (two dst-keyed hop rounds)
-    // and the real-decode perceptual-hash pass over 5000 PNGs.
-    // d17_prefix_filter is deliberately NOT headline: its sf0.1 output is
-    // the complete 8.9M-pair Jaccard≥0.5 set (~56 s of exact verify) —
-    // gate-checked at both SFs instead
-    "g13_neigh_agg", "m6_ahash",
-    // round-9 batches 10–18: two-stage retrieval, DSIR scoring, the
-    // rolling-distinct WAU explode, bucket-ranked gini, watershed
-    // pointer doubling, and the corpus-entropy diagnostic
-    "e22_rerank", "t34_importance_weights", "x39_rolling_wau",
-    "x36_gini", "r16_watershed", "t35_token_entropy")
+  val headline: Seq[String] = SparkEntry.ledger.filter(_.headline).map(_.id)
 
   /** The RDD-fixpoint / iterative family whose single-run sf1 numbers swing
     * ±30-100% between quiet runs (VERDICT r16 #4, COVERAGE.md caveat):
@@ -67,15 +23,8 @@ object Bench {
     * SECOND sf1 run (budget permitting); the record carries the min (what
     * a warmed cluster job sees) plus the max/min spread per entry, so a
     * reader can tell a real regression from run-to-run variance. */
-  val sf1MinOf2: Set[String] = Set(
-    "d5_jaccard_pairs", "d6_dedup_groups", "r16_watershed", "g9_hits",
-    "g7_label_prop", "g8_kcore", "g10_ppr", "g12_modularity",
-    "g4_pagerank", "g13_neigh_agg", "e12_kmeans_exact", "e13_pq_train",
-    // round 19 (VERDICT r18 #1): a10 swung 4.49 → 7.21 s between r18's own
-    // quiet runs — the widest observed fixpoint swinger was not in the
-    // spread set; q21 is not a fixpoint but its 256-partition third-decade
-    // shuffle showed the same single-draw sensitivity.
-    "a10_region_label", "q21_waiting_supplier")
+  val sf1MinOf2: Set[String] =
+    SparkEntry.ledger.filter(_.sf1MinOf2).map(_.id).toSet
 
   /** 1-minute load average from /proc/loadavg — recorded at start and end
     * so a contention-polluted run identifies itself in the record (the
@@ -237,12 +186,7 @@ object Bench {
         Thread.sleep(15000); waited += 15
       }
     }
-    val unknown = only -- SparkEntry.queries.keySet
-    if (unknown.nonEmpty) {
-      System.err.println(s"[bench] unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
-      System.err.println(s"[bench] valid names: any SparkEntry.queries key")
-      sys.exit(2)
-    }
+    SparkEntry.exitOnUnknown("bench", only)
     // explicit names may reach ANY ledger query (local iteration on a
     // non-headline query is the whole point of args); a no-args run is
     // exactly the headline set
@@ -410,12 +354,11 @@ object Bench {
           System.err.println(s"[bench] sf1 build failed: $e"); null }
       if (sf1Dir == null) (Nil, Seq("<build-failed>"), Nil) else {
         val t0 = System.nanoTime()
-        val names = headline.filter(SparkEntry.queries.contains)
         val done = scala.collection.mutable.ArrayBuffer.empty[(String, (Double, Double, Double))]
         val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
         val failed = scala.collection.mutable.ArrayBuffer.empty[String]
         def withinBudget = (System.nanoTime() - t0) / 1e9 <= sf1Budget
-        names.foreach { name =>
+        headline.foreach { name =>
           if (!withinBudget) skipped += name
           else timedOne(sf1Dir, name, "sf1") match {
             // a failed query must not masquerade as a timing (ADVICE r14

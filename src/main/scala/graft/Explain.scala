@@ -10,6 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSeq else Bench.headline
+    SparkEntry.exitOnUnknown("explain", names)
     val spark = GraftSession.local("explain")
     // GRAFT_EXPLAIN_EXEC=1: execute the query THROUGH ITS OWN
     // QueryExecution first (toRdd + foreach — no driver collect), so the
@@ -19,16 +20,14 @@ object Explain {
     // plan, which cannot show those.
     val exec = sys.env.get("GRAFT_EXPLAIN_EXEC").contains("1")
     names.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        println(s"\n========== $name ==========")
-        val df = fn(spark, sfDir)
-        if (exec) {
-          spark.sparkContext.setJobDescription(s"explain-exec $name")
-          df.queryExecution.toRdd.foreach(_ => ())
-        }
-        df.explain("formatted")
-        graft.core.Caching.release(spark)
+      println(s"\n========== $name ==========")
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      if (exec) {
+        spark.sparkContext.setJobDescription(s"explain-exec $name")
+        df.queryExecution.toRdd.foreach(_ => ())
       }
+      df.explain("formatted")
+      graft.core.Caching.release(spark)
     }
     spark.stop()
   }

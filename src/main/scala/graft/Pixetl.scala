@@ -114,7 +114,6 @@ object Pixetl {
           overwrite: Boolean, sub: Option[Seq[String]]): Seq[(String, Long)] = {
     val spec = resolvePixetlUris(spec0, dest)
     val outDir = s"$dest/${spec.prefix()}"
-    Files.createDirectories(Paths.get(outDir))
     // the run's pins (tile sets, sink rows) are released when it
     // returns; an explicit scope rather than a `Caching.scoped` closure
     // keeps each Spark job's call site on its own line of `run`, which is
@@ -154,14 +153,6 @@ object Pixetl {
           // role of tiles/raster_src_tile.py:188-210
           val grid = spec.gridDef
           val gridEpsg = if (grid.crs == "EPSG:3857") 3857 else 4326
-          // every spec kernel runs in the warp gather: interpolating ones
-          // as separable taps, aggregates as footprint-box folds
-          val kernel = spec.resampling match {
-            case r @ ("nearest" | "bilinear" | "cubic" | "cubic_spline" |
-                      "lanczos" | "gauss" | "average" | "sum" | "min" | "max" |
-                      "mode" | "med" | "q1" | "q3" | "rms") => r
-            case _ => "nearest"
-          }
           // same CRS is NOT enough for the aligned block reader: a resample
           // job (90/27008 fed from 10/40000 output — the catalog's
           // depends_on chains) matches CRS but not lattice, and a source
@@ -176,14 +167,16 @@ object Pixetl {
               catalog0.select("uri").as[String].collect().distinct.toSeq) else catalog0)
               .select("lattice.*").as[GeoTiffSpark.SourceLattice].collect()
               .forall(GeoTiffSpark.onBlockLattice(_, grid))
+          // every spec kernel runs in the warp gather: interpolating ones
+          // as separable taps, aggregates as footprint-box folds
           val (catalog, reader) =
             if (aligned) (catalog0, GeoTiffSpark.reader)
             else if (srcEpsg == gridEpsg)
               (catalog0, graft.sources.WarpReader.reader(grid.xres, grid.yres,
-                grid.blockSize, grid.crs, grid.crs, kernel))
+                grid.blockSize, grid.crs, grid.crs, spec.resampling))
             else (Catalog.reprojectFootprints(catalog0, s"EPSG:$srcEpsg", grid.crs),
               graft.sources.WarpReader.reader(grid.xres, grid.yres, grid.blockSize,
-                grid.crs, s"EPSG:$srcEpsg", kernel))
+                grid.crs, s"EPSG:$srcEpsg", spec.resampling))
           val existing = Catalog.existingTiles(spark, outDir)
           val result = LayerJob.run(spark, spec, catalog, reader,
             subset = sub, existing = Some(existing), overwrite = overwrite)
@@ -256,8 +249,8 @@ object Pixetl {
       // and folds the extent; the status tally comes from counts
       val (extent, status) = LayerJob.writeTilesGeojson(spec, tiles, written,
         s"$outDir/tiles.geojson")
-      Files.writeString(Paths.get(s"$outDir/extent.geojson"),
-        LayerJob.renderExtentGeojson(extent))
+      val out = LayerJob.createText(spark, s"$outDir/extent.geojson")
+      try out.write(LayerJob.renderExtentGeojson(extent)) finally out.close()
       status
     } finally pins.close()
   }

@@ -1,12 +1,7 @@
 package graft
 
-import graft.core.Tables
-import graft.core.grid.{GridFactory, LatLngGrid, WebMercatorGrid}
-import graft.functions.{Calc, PortableHash, Reproject}
-import graft.operators.{Dedup, Multimodal, Similarity, TextOps}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import graft.ledger._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract: every operator of SURVEY.md §2, expressed as a
   * DataFrame query over the driver's test tables, with a DuckDB oracle.
@@ -15,9853 +10,36 @@ import org.apache.spark.sql.functions._
   * w1…, o1…, st…, plus the beyond-reference t/d/e/m families). Column names
   * and row order match the oracle exactly (the driver sorts columns by name
   * then hashes values). All floating aggregates are rounded identically on
-  * both sides.
+  * both sides. Each query is declared once, as a [[graft.ledger.QueryDef]]
+  * in its family's file under `graft/ledger/`.
   */
 object SparkEntry {
 
+  /** Every ledger query, families concatenated in declaration order. */
+  val ledger: Seq[QueryDef] = Seq(
+    SourceQueries.all, PixelQueries.all, RasterQueries.all, TpchQueries.all,
+    TextQueries.all, DedupQueries.all, EmbeddingQueries.all, GraphQueries.all,
+    MediaQueries.all, StreamQueries.all, AnalyticsQueries.all).flatten
+  require(ledger.map(_.id).distinct.size == ledger.size,
+    s"duplicate ledger ids: ${ledger.map(_.id).diff(ledger.map(_.id).distinct)}")
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Q.j5_join3_revenue(spark, "/root/testdata/sf0.001")
+    queries("j5_join3_revenue")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s1_grid_seed"        -> (Q.s1_grid_seed(_, _)),
-    "s5_tiff_roundtrip"   -> (Q.s5_tiff_roundtrip(_, _)),
-    "s4_gdalinfo_meta"    -> (Q.s4_gdalinfo_meta(_, _)),
-    "k5_pyramid_sink"     -> (Q.k5_pyramid_sink(_, _)),
-    "k6_ovr_sidecar"      -> (Q.k6_ovr_sidecar(_, _)),
-    "s2_manifest_chain"   -> (Q.s2_manifest_chain(_, _)),
-    "p5_reproject"        -> (Q.p5_reproject(_, _)),
-    "s3_listing_scan"     -> (Q.s3_listing_scan(_, _)),
-    "s7_jdbc_pushdown"    -> (Q.s7_jdbc_pushdown(_, _)),
-    "p5_utm_grid"         -> (Q.p5_utm_grid(_, _)),
-    "p5_conic_polar"      -> (Q.p5_conic_polar(_, _)),
-    "s1_wm_grid_seed"     -> (Q.s1_wm_grid_seed(_, _)),
-    "z1_zorder"           -> (Q.z1_zorder(_, _)),
-    "f1_subset_filter"    -> (Q.f1_subset_filter(_, _)),
-    "f2_range_filter"     -> (Q.f2_range_filter(_, _)),
-    "f3_exists_antijoin"  -> (Q.f3_exists_antijoin(_, _)),
-    "p1_calc_arith"       -> (Q.p1_calc_arith(_, _)),
-    "p1_calc_multiband"   -> (Q.p1_calc_multiband(_, _)),
-    "p2_cast_fill"        -> (Q.p2_cast_fill(_, _)),
-    "p3_vector_calc"      -> (Q.p3_vector_calc(_, _)),
-    "p6_snap"             -> (Q.p6_snap(_, _)),
-    "p7_symbology"        -> (Q.p7_symbology(_, _)),
-    "j1_spatial_semijoin" -> (Q.j1_spatial_semijoin(_, _)),
-    "j2_file_catalog_join" -> (Q.j2_file_catalog_join(_, _)),
-    "j4_band_align_join"  -> (Q.j4_band_align_join(_, _)),
-    "j5_join3_revenue"    -> (Q.j5_join3_revenue(_, _)),
-    "j6_spatial_features" -> (Q.j6_spatial_features(_, _)),
-    "r1_resample_avg"     -> (Q.r1_resample_avg(_, _)),
-    "r3_warp_3857"        -> (Q.r3_warp_3857(_, _)),
-    "r4_resample_med"     -> (Q.r4_resample_med(_, _)),
-    "r5_pyramid"          -> (Q.r5_pyramid(_, _)),
-    "r17_resample_bilinear" -> (Q.r17_resample_bilinear(_, _)),
-    "r19_resample_gauss" -> (Q.r19_resample_gauss(_, _)),
-    "r18_resample_seam"   -> (Q.r18_resample_seam(_, _)),
-    "r6_focal_mean"       -> (Q.r6_focal_mean(_, _)),
-    "r7_convolve"         -> (Q.r7_convolve(_, _)),
-    "r8_slope"            -> (Q.r8_slope(_, _)),
-    "r9_hillshade"        -> (Q.r9_hillshade(_, _)),
-    "g1_distance_join"    -> (Q.g1_distance_join(_, _)),
-    "g2_dbscan"           -> (Q.g2_dbscan(_, _)),
-    "g3_triangle_count"   -> (Q.g3_triangle_count(_, _)),
-    "g4_pagerank"         -> (Q.g4_pagerank(_, _)),
-    "g5_sssp"             -> (Q.g5_sssp(_, _)),
-    "g6_pagerank_dangling" -> (Q.g6_pagerank_dangling(_, _)),
-    "b1_bloom_join"       -> (Q.b1_bloom_join(_, _)),
-    "r2_resample_mode"    -> (Q.r2_resample_mode(_, _)),
-    "a1_rasterize_count"  -> (Q.a1_rasterize_count(_, _)),
-    "a2_rasterize_value"  -> (Q.a2_rasterize_value(_, _)),
-    "a3_band_stats"       -> (Q.a3_band_stats(_, _)),
-    "a4_histogram"        -> (Q.a4_histogram(_, _)),
-    "a5_valid_count"      -> (Q.a5_valid_count(_, _)),
-    "a6_extent_union"     -> (Q.a6_extent_union(_, _)),
-    "a7_manifest_collect" -> (Q.a7_manifest_collect(_, _)),
-    "a8_status_tally"     -> (Q.a8_status_tally(_, _)),
-    "a9_zonal_stats"      -> (Q.a9_zonal_stats(_, _)),
-    "a10_region_label"    -> (Q.a10_region_label(_, _)),
-    "a11_proximity"       -> (Q.a11_proximity(_, _)),
-    "a12_sieve"           -> (Q.a12_sieve(_, _)),
-    "a13_sieve_absorb"    -> (Q.a13_sieve_absorb(_, _)),
-    "w1_ordered_burn_rank" -> (Q.w1_ordered_burn_rank(_, _)),
-    "w2_running_sum"      -> (Q.w2_running_sum(_, _)),
-    "w3_lag_delta"        -> (Q.w3_lag_delta(_, _)),
-    "w5_range_frame"      -> (Q.w5_range_frame(_, _)),
-    "o1_topk"             -> (Q.o1_topk(_, _)),
-    "o3_set_ops"          -> (Q.o3_set_ops(_, _)),
-    "o4_tile_dedup"       -> (Q.o4_tile_dedup(_, _)),
-    "st1_window_agg"      -> (Q.st1_window_agg(_, _)),
-    "st2_sessionize"      -> (Q.st2_sessionize(_, _)),
-    "st3_hopping"         -> (Q.st3_hopping(_, _)),
-    "st4_dedup_first"     -> (Q.st4_dedup_first(_, _)),
-    "t1_token_count"      -> (Q.t1_token_count(_, _)),
-    "t2_lang_id"          -> (Q.t2_lang_id(_, _)),
-    "t3_quality_score"    -> (Q.t3_quality_score(_, _)),
-    "t4_fingerprint"      -> (Q.t4_fingerprint(_, _)),
-    "t6_hash_split"       -> (Q.t6_hash_split(_, _)),
-    "t7_tfidf"            -> (Q.t7_tfidf(_, _)),
-    "t8_top_terms"        -> (Q.t8_top_terms(_, _)),
-    "c1_curation_pipeline" -> (Q.c1_curation_pipeline(_, _)),
-    "c2_quality_gate"     -> (Q.c2_quality_gate(_, _)),
-    "c3_diversity_sample" -> (Q.c3_diversity_sample(_, _)),
-    "t14_token_budget"    -> (Q.t14_token_budget(_, _)),
-    "t15_unigram_surprisal" -> (Q.t15_unigram_surprisal(_, _)),
-    "e6_semantic_dedup"   -> (Q.e6_semantic_dedup(_, _)),
-    "d1_exact_dedup"      -> (Q.d1_exact_dedup(_, _)),
-    "d2_minhash_sig"      -> (Q.d2_minhash_sig(_, _)),
-    "d3_lsh_candidates"   -> (Q.d3_lsh_candidates(_, _)),
-    "d4_simhash"          -> (Q.d4_simhash(_, _)),
-    "d5_jaccard_pairs"    -> (Q.d5_jaccard_pairs(_, _)),
-    "d6_dedup_groups"     -> (Q.d6_dedup_groups(_, _)),
-    "d7_simhash_pairs"    -> (Q.d7_simhash_pairs(_, _)),
-    "d8_span_dedup"       -> (Q.d8_span_dedup(_, _)),
-    "d9_contamination"    -> (Q.d9_contamination(_, _)),
-    "t9_rep_signals"      -> (Q.t9_rep_signals(_, _)),
-    "t18_dedup_report"    -> (Q.t18_dedup_report(_, _)),
-    "t19_bpe_pairs"       -> (Q.t19_bpe_pairs(_, _)),
-    "t23_collocations"    -> (Q.t23_collocations(_, _)),
-    "t20_bm25"            -> (Q.t20_bm25(_, _)),
-    "t22_bm25_incremental" -> (Q.t22_bm25_incremental(_, _)),
-    "t24_mixture_sample"  -> (Q.t24_mixture_sample(_, _)),
-    "e8_rrf"              -> (Q.e8_rrf(_, _)),
-    "t10_stratified_sample" -> (Q.t10_stratified_sample(_, _)),
-    "t11_pii_scrub"       -> (Q.t11_pii_scrub(_, _)),
-    "t12_domain_stats"    -> (Q.t12_domain_stats(_, _)),
-    "t13_pack_sequences"  -> (Q.t13_pack_sequences(_, _)),
-    "d10_incremental_dedup" -> (Q.d10_incremental_dedup(_, _)),
-    "d11_substring_dup"   -> (Q.d11_substring_dup(_, _)),
-    "d12_near_dedup"      -> (Q.d12_near_dedup(_, _)),
-    "d13_edit_distance"   -> (Q.d13_edit_distance(_, _)),
-    "d14_minhash_est"     -> (Q.d14_minhash_est(_, _)),
-    "d15_ngram_jaccard"   -> (Q.d15_ngram_jaccard(_, _)),
-    "t16_posting_lists"   -> (Q.t16_posting_lists(_, _)),
-    "t17_bigram_surprisal" -> (Q.t17_bigram_surprisal(_, _)),
-    "e1_knn_brute"        -> (Q.e1_knn_brute(_, _)),
-    "e2_knn_lsh"          -> (Q.e2_knn_lsh(_, _)),
-    "e3_embedding_dup"    -> (Q.e3_embedding_dup(_, _)),
-    "e4_embedding_quantize" -> (Q.e4_embedding_quantize(_, _)),
-    "e5_knn_ivf"          -> (Q.e5_knn_ivf(_, _)),
-    "e7_ivf_fixed"        -> (Q.e7_ivf_fixed(_, _)),
-    "e9_pq_adc"           -> (Q.e9_pq_adc(_, _)),
-    "e10_ivf_pq"          -> (Q.e10_ivf_pq(_, _)),
-    "t5_chunk_windows"    -> (Q.t5_chunk_windows(_, _)),
-    "x1_approx_distinct"  -> (Q.x1_approx_distinct(_, _)),
-    "x2_salted_rasterize" -> (Q.x2_salted_rasterize(_, _)),
-    "x3_rollup"           -> (Q.x3_rollup(_, _)),
-    "x4_correlated_sub"   -> (Q.x4_correlated_sub(_, _)),
-    "x5_asof_join"        -> (Q.x5_asof_join(_, _)),
-    "x6_percentile"       -> (Q.x6_percentile(_, _)),
-    "x7_interval_join"    -> (Q.x7_interval_join(_, _)),
-    "x8_pivot"            -> (Q.x8_pivot(_, _)),
-    "x9_gap_fill"         -> (Q.x9_gap_fill(_, _)),
-    "x10_funnel"          -> (Q.x10_funnel(_, _)),
-    "x11_retention"       -> (Q.x11_retention(_, _)),
-    "x12_cube"            -> (Q.x12_cube(_, _)),
-    "w4_rank_family"      -> (Q.w4_rank_family(_, _)),
-    "o5_set_except"       -> (Q.o5_set_except(_, _)),
-    "t21_json_extract"    -> (Q.t21_json_extract(_, _)),
-    "x13_upsert"          -> (Q.x13_upsert(_, _)),
-    "x14_snapshot_diff"   -> (Q.x14_snapshot_diff(_, _)),
-    "x15_scd2"            -> (Q.x15_scd2(_, _)),
-    "x16_grouping_sets"   -> (Q.x16_grouping_sets(_, _)),
-    "x17_transitions"     -> (Q.x17_transitions(_, _)),
-    "x18_first_touch"     -> (Q.x18_first_touch(_, _)),
-    "x19_unpivot"         -> (Q.x19_unpivot(_, _)),
-    "q3_topk_revenue"     -> (Q.q3_topk_revenue(_, _)),
-    "q4_order_priority"   -> (Q.q4_order_priority(_, _)),
-    "q13_custdist"        -> (Q.q13_custdist(_, _)),
-    "q18_big_orders"      -> (Q.q18_big_orders(_, _)),
-    "q6_forecast_revenue" -> (Q.q6_forecast_revenue(_, _)),
-    "q19_disjunctive"     -> (Q.q19_disjunctive(_, _)),
-    "q14_promo_share"     -> (Q.q14_promo_share(_, _)),
-    "q7_nation_volume"    -> (Q.q7_nation_volume(_, _)),
-    "q8_market_share"     -> (Q.q8_market_share(_, _)),
-    "q10_returned_items"  -> (Q.q10_returned_items(_, _)),
-    "q15_top_supplier"    -> (Q.q15_top_supplier(_, _)),
-    "q17_small_qty"       -> (Q.q17_small_qty(_, _)),
-    "q21_waiting_supplier" -> (Q.q21_waiting_supplier(_, _)),
-    "q22_idle_customers"  -> (Q.q22_idle_customers(_, _)),
-    "q2_min_cost_supp"    -> (Q.q2_min_cost_supp(_, _)),
-    "q9_product_profit"   -> (Q.q9_product_profit(_, _)),
-    "q11_important_stock" -> (Q.q11_important_stock(_, _)),
-    "q12_ship_priority"   -> (Q.q12_ship_priority(_, _)),
-    "q16_supplier_cnt"    -> (Q.q16_supplier_cnt(_, _)),
-    "q20_workhorse_supp"  -> (Q.q20_workhorse_supp(_, _)),
-    "m1_media_features"   -> (Q.m1_media_features(_, _)),
-    "m2_image_decode"     -> (Q.m2_image_decode(_, _)),
-    "m3_audio_frames"     -> (Q.m3_audio_frames(_, _)),
-    "m4_frame_plan"       -> (Q.m4_frame_plan(_, _)),
-    "q1_pricing_summary"  -> (Q.q1_pricing_summary(_, _)),
-    "q5_local_supplier"   -> (Q.q5_local_supplier(_, _)),
-    "t25_span_scrub"      -> (Q.t25_span_scrub(_, _)),
-    "t26_heavy_hitters"   -> (Q.t26_heavy_hitters(_, _)),
-    "t27_quality_rules"   -> (Q.t27_quality_rules(_, _)),
-    "t28_normalize"       -> (Q.t28_normalize(_, _)),
-    "g7_label_prop"       -> (Q.g7_label_prop(_, _)),
-    "g8_kcore"            -> (Q.g8_kcore(_, _)),
-    "x20_approx_quantile" -> (Q.x20_approx_quantile(_, _)),
-    "e11_ann_recall"      -> (Q.e11_ann_recall(_, _)),
-    "e12_kmeans_exact"    -> (Q.e12_kmeans_exact(_, _)),
-    "e13_pq_train"        -> (Q.e13_pq_train(_, _)),
-    "t29_count_min"       -> (Q.t29_count_min(_, _)),
-    "g9_hits"             -> (Q.g9_hits(_, _)),
-    "x21_covariance"      -> (Q.x21_covariance(_, _)),
-    "x22_compaction_plan" -> (Q.x22_compaction_plan(_, _)),
-    "x23_hll_registers"   -> (Q.x23_hll_registers(_, _)),
-    "x24_zonemap_prune"   -> (Q.x24_zonemap_prune(_, _)),
-    "t30_sparse_retrieval" -> (Q.t30_sparse_retrieval(_, _)),
-    "d16_cdc_chunks"      -> (Q.d16_cdc_chunks(_, _)),
-    "e14_pca_power"       -> (Q.e14_pca_power(_, _)),
-    "r10_aspect"          -> (Q.r10_aspect(_, _)),
-    "m5_image_resize"     -> (Q.m5_image_resize(_, _)),
-    "r11_curvature"       -> (Q.r11_curvature(_, _)),
-    "r12_terrain_idx"     -> (Q.r12_terrain_idx(_, _)),
-    "g10_ppr"             -> (Q.g10_ppr(_, _)),
-    "g11_link_pred"       -> (Q.g11_link_pred(_, _)),
-    "x25_skyline"         -> (Q.x25_skyline(_, _)),
-    "x26_bitmap_overlap"  -> (Q.x26_bitmap_overlap(_, _)),
-    "st5_session_window"  -> (Q.st5_session_window(_, _)),
-    "e15_sq_recall"       -> (Q.e15_sq_recall(_, _)),
-    "r13_flow_dir"        -> (Q.r13_flow_dir(_, _)),
-    "g12_modularity"      -> (Q.g12_modularity(_, _)),
-    "x27_event_pattern"   -> (Q.x27_event_pattern(_, _)),
-    "e16_mrl_recall"      -> (Q.e16_mrl_recall(_, _)),
-    "t31_bpe_round2"      -> (Q.t31_bpe_round2(_, _)),
-    "r14_flow_accum"      -> (Q.r14_flow_accum(_, _)),
-    "r15_majority"        -> (Q.r15_majority(_, _)),
-    "e17_hamming_recall"  -> (Q.e17_hamming_recall(_, _)),
-    "x28_position_attr"   -> (Q.x28_position_attr(_, _)),
-    "x29_dq_audit"        -> (Q.x29_dq_audit(_, _)),
-    "x30_cohens_kappa"    -> (Q.x30_cohens_kappa(_, _)),
-    "t32_feature_hash"    -> (Q.t32_feature_hash(_, _)),
-    "x31_scd2_lookup"     -> (Q.x31_scd2_lookup(_, _)),
-    "d17_prefix_filter"   -> (Q.d17_prefix_filter(_, _)),
-    "e18_ndcg"            -> (Q.e18_ndcg(_, _)),
-    "x32_macro_f1"        -> (Q.x32_macro_f1(_, _)),
-    "x33_iqr_outliers"    -> (Q.x33_iqr_outliers(_, _)),
-    "m6_ahash"            -> (Q.m6_ahash(_, _)),
-    "g13_neigh_agg"       -> (Q.g13_neigh_agg(_, _)),
-    "e19_cluster_purity"  -> (Q.e19_cluster_purity(_, _)),
-    "x34_chi_square"      -> (Q.x34_chi_square(_, _)),
-    "a14_change_matrix"   -> (Q.a14_change_matrix(_, _)),
-    "x35_cdc_apply"       -> (Q.x35_cdc_apply(_, _)),
-    "d18_lsh_recall"      -> (Q.d18_lsh_recall(_, _)),
-    "m7_vad_segments"     -> (Q.m7_vad_segments(_, _)),
-    "m10_dft_energy"      -> (Q.m10_dft_energy(_, _)),
-    "t33_zipf_slope"      -> (Q.t33_zipf_slope(_, _)),
-    "x36_gini"            -> (Q.x36_gini(_, _)),
-    "t34_importance_weights" -> (Q.t34_importance_weights(_, _)),
-    "st6_latest_event"    -> (Q.st6_latest_event(_, _)),
-    "st7_stream_neardup"  -> (Q.st7_stream_neardup(_, _)),
-    "x37_rollup_topk"     -> (Q.x37_rollup_topk(_, _)),
-    "r16_watershed"       -> (Q.r16_watershed(_, _)),
-    "m8_image_dup_groups" -> (Q.m8_image_dup_groups(_, _)),
-    "e20_abtt"            -> (Q.e20_abtt(_, _)),
-    "g14_closeness"       -> (Q.g14_closeness(_, _)),
-    "d19_containment"     -> (Q.d19_containment(_, _)),
-    "t35_token_entropy"   -> (Q.t35_token_entropy(_, _)),
-    "x38_conversion_latency" -> (Q.x38_conversion_latency(_, _)),
-    "x39_rolling_wau"     -> (Q.x39_rolling_wau(_, _)),
-    "e21_ivf_balance"     -> (Q.e21_ivf_balance(_, _)),
-    "x40_hll_merge"       -> (Q.x40_hll_merge(_, _)),
-    "x41_debounce"        -> (Q.x41_debounce(_, _)),
-    "e22_rerank"          -> (Q.e22_rerank(_, _)),
-    "p4_clip_area"        -> (Q.p4_clip_area(_, _)),
-    "j3_mosaic_priority"  -> (Q.j3_mosaic_priority(_, _)),
-    "x42_quantile_binning" -> (Q.x42_quantile_binning(_, _)),
-    "e23_recall_curve"    -> (Q.e23_recall_curve(_, _)),
-    "t37_cross_contamination" -> (Q.t37_cross_contamination(_, _)),
-    "m9_ahash_pairs"      -> (Q.m9_ahash_pairs(_, _)),
-    "x44_psi_drift"       -> (Q.x44_psi_drift(_, _)),
-    "x45_watermark_audit" -> (Q.x45_watermark_audit(_, _)),
-    "w6_rolling_median"   -> (Q.w6_rolling_median(_, _)),
-    "t39_readability"     -> (Q.t39_readability(_, _)),
-    "x48_new_vs_returning" -> (Q.x48_new_vs_returning(_, _)),
-    "e24_mmr"             -> (Q.e24_mmr(_, _)),
-    "x49_bounce_rate"     -> (Q.x49_bounce_rate(_, _)),
-    "e25_threshold_sweep" -> (Q.e25_threshold_sweep(_, _)),
-    "g15_degree_hist"     -> (Q.g15_degree_hist(_, _)),
-    "x50_pareto"          -> (Q.x50_pareto(_, _)),
-    "g16_assortativity"   -> (Q.g16_assortativity(_, _)),
-    "t40_novelty"         -> (Q.t40_novelty(_, _)),
-    "t41_perplexity"      -> (Q.t41_perplexity(_, _)),
-    "e26_nprobe_sweep"    -> (Q.e26_nprobe_sweep(_, _)),
-    "x51_mad"             -> (Q.x51_mad(_, _)))
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    ledger.map(q => q.id -> q.body).toMap
 
-  def oracleSql: Map[String, String] = Oracles.sql
+  def oracleSql: Map[String, String] = ledger.map(q => q.id -> q.oracle).toMap
 
-  // ================================================================= Spark
-  private[graft] object Q {
-    private def li(s: SparkSession, d: String) = Tables.lineitem(s, d)
-
-    /** S1: lat/lng grid seed — all 648 tiles of grid 10/40000, distributed
-      * generation (no driver collect). */
-    def s1_grid_seed(s: SparkSession, d: String): DataFrame =
-      LatLngGrid(10, 40000).tilesDF(s).orderBy("tile_idx")
-
-    /** S1 (WebMercator): zoom_12 → 16×16 tiles; bounds rounded to mm. */
-    def s1_wm_grid_seed(s: SparkSession, d: String): DataFrame = {
-      val g = WebMercatorGrid(12)
-      g.tilesDF(s)
-        .select(col("tile_idx"), col("tile_id"),
-          round(col("left"), 4).as("left"), round(col("bottom"), 4).as("bottom"),
-          round(col("right"), 4).as("right"), round(col("top"), 4).as("top"))
-        .orderBy("tile_idx")
-    }
-
-    /** Fixture temp dir removed recursively at JVM exit — the manifest/
-      * listing fixture queries write real files the returned (lazy) plan
-      * still reads, so cleanup can't happen inside the query; without the
-      * hook every Verify/Bench invocation leaves ~50 files in /tmp and a
-      * long-lived driver host accumulates them unboundedly. */
-    private def tempFixtureDir(prefix: String): java.nio.file.Path = {
-      val dir = java.nio.file.Files.createTempDirectory(prefix)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(p: java.io.File): Unit = {
-          val kids = p.listFiles(); if (kids != null) kids.foreach(rm)
-          p.delete(); ()
-        }
-        rm(dir.toFile)
-      }))
-      dir
-    }
-
-    /** S3 as a LEDGER row — the object-store/folder listing scan
-      * ([[graft.sources.Catalog.listFolder]], `layers.py:131-161`) over a
-      * fixture prefix: 41 `.tif` keys with deterministic sizes plus
-      * decoy non-`.tif` keys the suffix filter must exclude. The oracle
-      * replays names and byte sizes in closed form, so the Hadoop-FS glob
-      * → filter → (uri, size) relation is value-checked. */
-    def s3_listing_scan(s: SparkSession, d: String): DataFrame = {
-      import graft.sources.Catalog
-      val tmp = tempFixtureDir("graft_s3_list")
-      for (k <- 0 to 40) {
-        java.nio.file.Files.write(tmp.resolve(f"part_$k%03d.tif"),
-          Array.fill[Byte](k * 7 + 13)(0x5a))
-        if (k % 10 == 0) // decoys: wrong suffix, must not list
-          java.nio.file.Files.write(tmp.resolve(f"part_$k%03d.tif.aux.xml"),
-            Array.fill[Byte](99)(0x5a))
-      }
-      Catalog.listFolder(s, tmp.toString, ".tif")
-        .select(regexp_extract(col("uri"), "([^/]+)$", 1).as("name"), col("size"))
-        .orderBy("name")
-    }
-
-    /** S7 as a LEDGER row — the partitioned-JDBC vector scan
-      * ([[graft.sources.VectorSource.readPartitioned]], the reader wiring
-      * under the PostGIS `readJdbc`; ref
-      * `gfw_pixetl/tiles/vector_src_tile.py:87-156`) driven END TO END
-      * against an embedded Derby database (the one JDBC engine in the
-      * sandbox): a deterministic bbox-feature table derived from
-      * `customer` is loaded through Spark's JDBC writer, the layer-
-      * envelope intersection predicate is pushed INTO the database in the
-      * portable SQL-92 form of the renderer's `ST_Intersects(envelope)`
-      * shape, and the scan returns as 8 key-range partitions. The bucketed
-      * integer fold replays in closed form over `customer`, so the row
-      * checks exactly "did the DB evaluate the pushed predicate, and did
-      * every key range come back complete, exactly once". */
-    def s7_jdbc_pushdown(s: SparkSession, d: String): DataFrame = {
-      import graft.sources.VectorSource
-      if (System.getProperty("derby.system.home") == null) // derby.log home
-        System.setProperty("derby.system.home", tempFixtureDir("graft_s7_derby").toString)
-      val feat = Tables.customer(s, d).select(
-        col("c_custkey").as("fid"),
-        (col("c_custkey") % 360 - 180).cast("int").as("xmin"),
-        (col("c_custkey") % 180 - 90).cast("int").as("ymin"),
-        (col("c_custkey") % 360 - 180 + col("c_custkey") % 7 + 1).cast("int").as("xmax"),
-        (col("c_custkey") % 180 - 90 + col("c_custkey") % 5 + 1).cast("int").as("ymax"),
-        ((col("c_custkey") * 13) % 1000).as("val"))
-      val url = "jdbc:derby:memory:graft_s7;create=true"
-      feat.write.mode("overwrite").jdbc(url, "features", new java.util.Properties())
-      val maxFid = feat.agg(max("fid")).head().getLong(0)
-      // quoted idents: Spark's JDBC writer creates case-preserved columns
-      val sub = """(SELECT "fid" AS FID, "xmin" AS XMIN, "ymin" AS YMIN, "val" AS VAL
-                   | FROM features
-                   | WHERE NOT ("xmax" < -60 OR "xmin" > 60 OR "ymax" < -45 OR "ymin" > 45)) src""".stripMargin
-      VectorSource.readPartitioned(s, url, sub, "FID", Some((1L, maxFid + 1)), numPartitions = 8)
-        .groupBy((col("FID") % 16).as("bucket"))
-        .agg(count(lit(1)).as("n_feat"), sum("FID").as("sum_fid"),
-          sum(col("XMIN") + col("YMIN")).as("sum_ll"), sum("VAL").as("sum_val"))
-        .orderBy("bucket")
-    }
-
-    /** P5 as a LEDGER row — the registry's forward transforms for the
-      * spherical closed-form families (WebMercator, world sinusoidal,
-      * plate-carrée eqc, orthographic incl. its horizon-rim clamp),
-      * applied to every grid tile center through the real
-      * [[graft.functions.Projection.forCrs]] dispatch (EPSG, ESRI and
-      * proj-string authorities all exercised). Rounded to dm: Java Math
-      * and DuckDB libm agree to a few ulps (≤ ~2e-7 m at the worst
-      * high-latitude Mercator y), six orders below the compare precision.
-      * The ellipsoidal families (TM, LCC, AEA, stere) stay spec-pinned
-      * via Snyder worked examples — their series have no one-line SQL
-      * replay. Ref: `gfw_pixetl/sources.py:137-168` (pyproj transform). */
-    def p5_reproject(s: SparkSession, d: String): DataFrame = {
-      import graft.functions.Projection
-      val crss = Seq("EPSG:3857", "ESRI:54008", "EPSG:32662",
-        "+proj=ortho +lat_0=0 +lon_0=0 +a=6378137")
-      val fwd = udf { (crs: String, lng: Double, lat: Double) =>
-        val (x, y) = Projection.forCrs(crs).get.forward(lng, lat)
-        (x, y)
-      }
-      LatLngGrid(10, 40000).tilesDF(s)
-        .select(col("tile_id"),
-          ((col("left") + col("right")) / 2).as("lng"),
-          ((col("bottom") + col("top")) / 2).as("lat"))
-        .withColumn("crs", explode(array(crss.map(lit): _*)))
-        .withColumn("__p", fwd(col("crs"), col("lng"), col("lat")))
-        .select(col("tile_id"), col("crs"),
-          round(col("__p._1"), 1).as("x"), round(col("__p._2"), 1).as("y"))
-        .orderBy("tile_id", "crs")
-    }
-
-    /** P5's ELLIPSOIDAL leg as a LEDGER row — every grid tile center
-      * forward-projected into its canonical UTM zone through the EPSG
-      * registry dispatch (`forEpsg(326xx/327xx)` — the WGS84 ellipsoidal
-      * Transverse Mercator series, Snyder §8, exercising all 120 zone
-      * codes' parameterization). The oracle transcribes the SAME series
-      * term-for-term with identical association, so the only cross-engine
-      * divergence is libm ulps (~1e-9 m) — six orders below the mm
-      * rounding. The polar clamp (±84°) replays in SQL. */
-    def p5_utm_grid(s: SparkSession, d: String): DataFrame = {
-      import graft.functions.Projection
-      val fwd = udf { (lng: Double, lat: Double) =>
-        val zone = math.min(60, (math.floor((lng + 180) / 6) + 1).toInt)
-        val epsg = (if (lat >= 0) 32600 else 32700) + zone
-        val (x, y) = Projection.forEpsg(epsg).get.forward(lng, lat)
-        (zone, x, y)
-      }
-      LatLngGrid(10, 40000).tilesDF(s)
-        .select(col("tile_id"),
-          ((col("left") + col("right")) / 2).as("lng"),
-          ((col("bottom") + col("top")) / 2).as("lat"))
-        .withColumn("__u", fwd(col("lng"), col("lat")))
-        .select(col("tile_id"), col("__u._1").as("zone"),
-          round(col("__u._2"), 3).as("easting"),
-          round(col("__u._3"), 3).as("northing"))
-        .orderBy("tile_id")
-    }
-
-    /** P5's CONIC + POLAR ellipsoidal legs as a LEDGER row — grid tile
-      * centers inside each projection's working domain forward-projected
-      * through the registry: Albers equal-area CONUS (EPSG:5070, Snyder
-      * §14), Lambert conformal conic 2SP Lambert-93 (EPSG:2154, §15), and
-      * Antarctic polar stereographic variant B (EPSG:3031, §21). Same
-      * discipline as p5_utm_grid: the oracle transcribes each series
-      * term-for-term with identical association, so divergence is libm
-      * ulps, six orders below the mm rounding. With this row every
-      * registry projection family is value-checked. */
-    def p5_conic_polar(s: SparkSession, d: String): DataFrame = {
-      import graft.functions.Projection
-      val fwd = udf { (epsg: Int, lng: Double, lat: Double) =>
-        val (x, y) = Projection.forEpsg(epsg).get.forward(lng, lat)
-        (x, y)
-      }
-      val centers = LatLngGrid(10, 40000).tilesDF(s)
-        .select(col("tile_id"),
-          ((col("left") + col("right")) / 2).as("lng"),
-          ((col("bottom") + col("top")) / 2).as("lat"))
-      val legs = Seq(
-        (5070, col("lng").between(-125, -65) && col("lat").between(15, 55)),
-        (2154, col("lng").between(-5, 15) && col("lat").between(35, 55)),
-        (3031, col("lat") <= -55))
-      legs.map { case (epsg, dom) =>
-        centers.filter(dom)
-          .withColumn("epsg", lit(epsg))
-          .withColumn("__p", fwd(col("epsg"), col("lng"), col("lat")))
-          .select(col("tile_id"), col("epsg"),
-            round(col("__p._1"), 3).as("x"), round(col("__p._2"), 3).as("y"))
-      }.reduce(_ union _).orderBy("tile_id", "epsg")
-    }
-
-    /** F1: subset filter (tile_id ∈ subset). */
-    /** Z-order (Morton) tile ordering — the spatial-locality sort/partition
-      * key for sink writes and co-located spatial work at scale. */
-    def z1_zorder(s: SparkSession, d: String): DataFrame = {
-      val tiles = LatLngGrid(10, 40000).tilesDF(s)
-      val r = (col("tile_idx") / 36).cast("long")
-      val c = (col("tile_idx") % 36).cast("long")
-      tiles.select(col("tile_id"), col("tile_idx"),
-          graft.functions.ZOrder.morton(c, r).as("zorder"))
-        .orderBy("zorder", "tile_id")
-    }
-
-    def f1_subset_filter(s: SparkSession, d: String): DataFrame =
-      li(s, d)
-        .filter(col("l_orderkey").isin(1L, 7L, 32L, 100L, 501L, 1234L, 2500L))
-        .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
-        .orderBy("l_orderkey", "l_linenumber")
-
-    /** F2: source-intersection-style range filter (pushed to parquet). */
-    def f2_range_filter(s: SparkSession, d: String): DataFrame =
-      li(s, d)
-        .filter(col("l_shipdate") >= lit("1999-01-01") && col("l_shipdate") < lit("1999-02-01")
-          && col("l_quantity") > 45)
-        .select("l_orderkey", "l_linenumber", "l_shipdate", "l_quantity")
-        .orderBy("l_orderkey", "l_linenumber")
-
-    /** F3/J6: target-exists anti-join — parts with no high-quantity lineitem
-      * (models skipping already-materialized tiles). */
-    def f3_exists_antijoin(s: SparkSession, d: String): DataFrame = {
-      val existing = li(s, d).filter(col("l_quantity") > 49).select(col("l_partkey"))
-      Tables.part(s, d)
-        .join(existing, col("p_partkey") === col("l_partkey"), "left_anti")
-        .select("p_partkey", "p_name")
-        .orderBy("p_partkey")
-    }
-
-    /** P1: the calc DSL compiled to Catalyst — `(A + B) * (C + 2)`
-      * (reference test case, tests/tiles/utils/test_array_utils.py:118). */
-    def p1_calc_arith(s: SparkSession, d: String): DataFrame = {
-      val bands = Map("A" -> col("l_quantity"), "B" -> col("l_discount"), "C" -> col("l_tax"))
-      li(s, d)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          round(Calc.column("(A + B) * (C + 2)", bands), 4).as("calc_value"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }
-
-    /** P1 multiband: `np.ma.array([A, B, A+B])` → 3 band columns
-      * (tests/test_raster_src_tile.py:177). */
-    def p1_calc_multiband(s: SparkSession, d: String): DataFrame = {
-      val bands = Map("A" -> col("l_quantity"), "B" -> col("l_extendedprice"))
-      val out = Calc.compile("np.ma.array([A, B, A + B])", bands)
-      li(s, d)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          round(out(0), 4).as("band0"), round(out(1), 4).as("band1"), round(out(2), 4).as("band2"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }
-
-    /** P2: masked → nodata fill + cast (`set_datatype`,
-      * array_utils.py:12-41): mask pixels where discount>0.05, fill -1. */
-    def p2_cast_fill(s: SparkSession, d: String): DataFrame = {
-      val masked = when(col("l_discount") > 0.05, lit(null)).otherwise(col("l_quantity"))
-      li(s, d)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          coalesce(masked, lit(-1.0)).cast("long").as("filled"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }
-
-    /** P3: vector calc = SQL CASE expression (vector_src_tile.py:139-143). */
-    def p3_vector_calc(s: SparkSession, d: String): DataFrame =
-      Tables.events(s, d)
-        .select(col("event_id"),
-          expr("CASE WHEN event_type = 'purchase' THEN 3 WHEN event_type = 'click' THEN 2 " +
-            "WHEN event_type = 'view' THEN 1 ELSE 0 END").as("burn_value"))
-        .orderBy("event_id")
-
-    /** P6: snap values to a 0.25 lattice, top-left bias (grid.py:71-97). */
-    def p6_snap(s: SparkSession, d: String): DataFrame =
-      Tables.events(s, d)
-        .select(col("event_id"),
-          (floor(col("value") / 0.25) * 0.25).as("snapped"))
-        .orderBy("event_id")
-
-    /** P7: the SYMBOLOGY bake — value band → RGBA channel bands through
-      * [[graft.functions.ColorMaps.applyColormap]], both reference
-      * colormap types (`models/pydantic.py:30-33`, `enums.py:19-24`):
-      * `discrete` exact-key lookup (unmapped keys → transparent 0s) and
-      * `gradient` piecewise-linear interpolation with end-clamping (the
-      * gdaldem color-relief rule). Per pixel the interp is
-      * floor(c0 + (c1-c0)·(v-k0)/(k1-k0) + 0.5) in a fixed association,
-      * so DuckDB replays the same IEEE doubles bit-for-bit. Nodata pixels
-      * ((i % 11) = 0 → null) must come out (0,0,0,0) — fully transparent,
-      * never a phantom color. All channels are codegen'd when-ladders
-      * inside one `transform`; no UDF, no shuffle, one partial-agg fold
-      * per asset. */
-    def p7_symbology(s: SparkSession, d: String): DataFrame = {
-      import graft.core.{RGBA, Symbology}
-      import graft.functions.ColorMaps
-      val N = 576
-      val discrete = Symbology("discrete", Map(
-        0.0 -> RGBA(12, 34, 56), 1.0 -> RGBA(200, 10, 0),
-        2.0 -> RGBA(0, 128, 64, 128), 3.0 -> RGBA(255, 255, 0, 64),
-        4.0 -> RGBA(7, 7, 7, 7))) // dv = 5 stays unmapped → transparent
-      val gradient = Symbology("gradient", Map(
-        0.0 -> RGBA(10, 0, 200), 250.0 -> RGBA(255, 40, 0),
-        600.0 -> RGBA(20, 255, 60, 180), 1000.0 -> RGBA(0, 12, 255, 90)))
-      val base = Tables.part(s, d).filter(col("p_partkey") <= 8)
-        .select(col("p_partkey").cast("long").as("asset_id"))
-        .withColumn("band_1", transform(sequence(lit(0), lit(N - 1)), i =>
-          when(pmod(i, lit(11)) === 0, lit(null).cast("double"))
-            .otherwise(pmod(lit(37) * col("asset_id") + lit(13) * i, lit(1001))
-              .cast("double"))))
-      def leg(df: DataFrame, bandCol: String, sym: Symbology, mode: String) = {
-        val withC = ColorMaps.applyColormap(col(bandCol), sym)
-          .foldLeft(df) { case (acc, (n, c)) => acc.withColumn(s"ch_$n", c) }
-        def total(n: String) = aggregate(col(s"ch_$n"), lit(0L),
-          (acc, x) => acc + x.cast("long")).as(s"sum_$n")
-        val wsumR = aggregate(
-          zip_with(col("ch_r"), sequence(lit(0), lit(N - 1)),
-            (c, i) => c.cast("long") * i),
-          lit(0L), (acc, x) => acc + x).as("wsum_r")
-        withC.select(col("asset_id"), lit(mode).as("mode"),
-          total("r"), total("g"), total("b"), total("a"), wsumR)
-      }
-      val disc = leg(base.withColumn("band_d",
-          transform(col("band_1"), v => pmod(v, lit(6.0)))),
-        "band_d", discrete, "discrete")
-      val grad = leg(base, "band_1", gradient, "gradient")
-      disc.unionByName(grad).orderBy("asset_id", "mode")
-    }
-
-    /** Synthetic file-catalog footprints: rectangles derived from part —
-      * stands in for the raster source manifest (layers.py:114-128). */
-    private def footprints(s: SparkSession, d: String): DataFrame =
-      Tables.part(s, d).select(
-        concat(lit("file_"), col("p_partkey"), lit(".tif")).as("uri"),
-        ((col("p_partkey") % 36) * 10 - 180).cast("double").as("f_left"),
-        ((col("p_partkey") % 18) * 10 - 90).cast("double").as("f_bottom"),
-        ((col("p_partkey") % 36) * 10 - 165).cast("double").as("f_right"),
-        ((col("p_partkey") % 18) * 10 - 75).cast("double").as("f_top"))
-
-    /** P4: geometry clip through the REAL JTS path — every footprint
-      * intersected with a fixed window via `st_intersection` (the same
-      * function the vector pipeline clips with), area of the clipped
-      * geometry out. The oracle cross-checks JTS against closed-form
-      * axis-aligned arithmetic (integer-valued lattice bounds ⇒ the
-      * doubles are exact); empty intersections surface as area 0, the
-      * K4 pad discipline. */
-    def p4_clip_area(s: SparkSession, d: String): DataFrame = {
-      import graft.functions.GeoFunctions
-      val win = GeoFunctions.st_makeEnvelope(
-        lit(-60.0), lit(-40.0), lit(60.0), lit(40.0))
-      footprints(s, d)
-        .withColumn("__clip", GeoFunctions.st_intersection(
-          GeoFunctions.st_makeEnvelope(col("f_left"), col("f_bottom"),
-            col("f_right"), col("f_top")), win))
-        .select(col("uri"),
-          round(when(col("__clip").isNull, 0.0)
-            .otherwise(GeoFunctions.st_area(col("__clip"))), 4).as("clip_area"))
-        .orderBy("uri")
-    }
-
-    /** J3: mosaic overlay — priority-ordered first-non-null coalesce per
-      * pixel over three source layers (the VRT overlay semantic the
-      * raster pipeline runs inside LayerJob, here as an oracle-checkable
-      * lattice query): layer 1 = first-line items, layer 2 = discounted
-      * items, layer 3 = everything; a pixel takes the highest-priority
-      * layer that has data there, and reports WHICH. One conditional
-      * pixel aggregate computes all three layers in a single pass. */
-    def j3_mosaic_priority(s: SparkSession, d: String): DataFrame =
-      li(s, d)
-        .select((col("l_partkey") % 40).as("px"), (col("l_suppkey") % 10).as("py"),
-          col("l_quantity").as("v"), col("l_linenumber"), col("l_discount"))
-        .groupBy("px", "py")
-        .agg(
-          max(when(col("l_linenumber") === 1, col("v"))).as("__b1"),
-          max(when(col("l_discount") > 0.05, col("v"))).as("__b2"),
-          max(col("v")).as("__b3"))
-        .select(col("px"), col("py"),
-          coalesce(col("__b1"), col("__b2"), col("__b3")).cast("long").as("value"),
-          when(col("__b1").isNotNull, 1L).when(col("__b2").isNotNull, 2L)
-            .otherwise(3L).as("src_priority"))
-        .orderBy("px", "py")
-
-    /** J1/F2: tile ⋉ source-extent spatial semi-join — tiles whose interior
-      * intersects any footprint; file catalog broadcast (SURVEY §4). */
-    def j1_spatial_semijoin(s: SparkSession, d: String): DataFrame = {
-      val tiles = LatLngGrid(10, 40000).tilesDF(s)
-      val fp = broadcast(footprints(s, d))
-      tiles.join(fp,
-          col("left") < col("f_right") && col("f_left") < col("right") &&
-            col("bottom") < col("f_top") && col("f_bottom") < col("top"), "left_semi")
-        .select("tile_id", "left", "bottom", "right", "top")
-        .orderBy("tile_id")
-    }
-
-    /** J5 spatial form — the ACTUAL `st_intersects` tile ⋈ features join
-      * VectorJob runs (`plans/VectorJob.scala` — real JTS geometries via
-      * `st_makeEnvelope`/`st_intersects`/`st_intersection`, broadcast tile
-      * seed), where j1/j2 exercise only the bbox-arithmetic twin. Per
-      * tile: intersecting-feature count and summed CLIPPED area (P4 on
-      * the join output). The oracle replays it as closed-form axis-
-      * aligned overlap products — integer lattice bounds keep every
-      * double exact, and JTS's touch-counts-as-intersecting semantics
-      * map to `<=` (touch-only pairs clip to a zero-area line, the p4
-      * empty→0 discipline). Reference: tiles/vector_src_tile.py:122-147. */
-    def j6_spatial_features(s: SparkSession, d: String): DataFrame = {
-      import graft.functions.GeoFunctions
-      val tiles = LatLngGrid(10, 40000).tilesDF(s)
-        .withColumn("tile_env", GeoFunctions.st_makeEnvelope(
-          col("left"), col("bottom"), col("right"), col("top")))
-      val feats = footprints(s, d)
-        .withColumn("geom", GeoFunctions.st_makeEnvelope(
-          col("f_left"), col("f_bottom"), col("f_right"), col("f_top")))
-      feats.join(broadcast(tiles),
-          GeoFunctions.st_intersects(col("geom"), col("tile_env")))
-        .withColumn("__clip",
-          GeoFunctions.st_intersection(col("geom"), col("tile_env")))
-        .groupBy("tile_id")
-        .agg(count(lit(1)).as("n_feat"),
-          round(sum(when(col("__clip").isNull, 0.0)
-            .otherwise(GeoFunctions.st_area(col("__clip")))), 4)
-            .as("sum_clip_area"))
-        .orderBy("tile_id")
-    }
-
-    /** J2: tile ⋈ source-files inner spatial join → (tile, file) work list.
-      *
-      * Cell-keyed equi-join (round 16 — was a broadcast nested-loop bbox
-      * join, O(tiles × files) predicate evals: 130M at sf1 and the wrong
-      * curve entirely for a 100-TB catalog): each footprint explodes to
-      * the 10°-lattice cells its bbox overlaps (bounded fan-out — a
-      * footprint spans ⌈w/10⌉+1 × ⌈h/10⌉+1 cells), each tile lives in
-      * exactly ONE cell, so candidate pairs meet in precisely one cell
-      * (no dedup) and the exact bbox predicate runs only on candidates.
-      * Work drops from |tiles|·|files| to |files|·cells + |candidates|,
-      * and both sides shuffle-join on the cell key at any scale. Strict
-      * (<) overlap semantics preserved by the residual predicate —
-      * touching-only footprints land in a cell but never match. */
-    def j2_file_catalog_join(s: SparkSession, d: String): DataFrame = {
-      val tiles = LatLngGrid(10, 40000).tilesDF(s)
-        .withColumn("cx", floor((col("left") + 180) / 10).cast("int"))
-        .withColumn("cy", floor((col("bottom") + 90) / 10).cast("int"))
-      // Guarded lattice explode (ADVICE r16): clamping start to the domain
-      // floor and stop to the domain ceiling makes start > stop for a
-      // footprint lying entirely OUTSIDE the grid domain, and Spark's
-      // sequence() then yields a DESCENDING range — spurious candidate
-      // cells (the residual bbox filter removed them, but out-of-domain
-      // rows should produce ZERO candidates, not a lattice-wide fan-out).
-      def cells(start: Column, stop: Column): Column =
-        explode(when(start <= stop, sequence(start, stop))
-          .otherwise(array().cast("array<int>")))
-      val fp = footprints(s, d)
-        .withColumn("cx", cells(
-          greatest(floor((col("f_left") + 180) / 10).cast("int"), lit(0)),
-          least(floor((col("f_right") + 180) / 10).cast("int"), lit(35))))
-        .withColumn("cy", cells(
-          greatest(floor((col("f_bottom") + 90) / 10).cast("int"), lit(0)),
-          least(floor((col("f_top") + 90) / 10).cast("int"), lit(17))))
-      tiles.join(fp, Seq("cx", "cy"))
-        .filter(col("left") < col("f_right") && col("f_left") < col("right") &&
-          col("bottom") < col("f_top") && col("f_bottom") < col("top"))
-        .groupBy("tile_id")
-        .agg(count(lit(1)).as("n_files"))
-        .orderBy("tile_id")
-    }
-
-    /** J4: band alignment zip — two per-band relations full-outer-joined on
-      * the key, absent side = null band (empty padding, K4). */
-    def j4_band_align_join(s: SparkSession, d: String): DataFrame = {
-      val l = li(s, d)
-      val bandA = l.filter(col("l_returnflag") === "R").groupBy("l_orderkey")
-        .agg(round(sum("l_quantity"), 2).as("band_a"))
-      val bandB = l.filter(col("l_returnflag") === "A").groupBy("l_orderkey")
-        .agg(round(sum("l_quantity"), 2).as("band_b"))
-      bandA.join(bandB, Seq("l_orderkey"), "full_outer")
-        .select(col("l_orderkey"),
-          coalesce(col("band_a"), lit(0.0)).as("band_a"),
-          coalesce(col("band_b"), lit(0.0)).as("band_b"))
-        .orderBy("l_orderkey")
-    }
-
-    /** J5 + flagship: 3-way equi-join + agg (customer⋈orders⋈lineitem). */
-    def j5_join3_revenue(s: SparkSession, d: String): DataFrame = {
-      val c = Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING")
-      val o = Tables.orders(s, d).filter(col("o_orderdate") >= lit("2000-01-01"))
-      val l = li(s, d)
-      c.join(o, col("c_custkey") === col("o_custkey"))
-        .join(l, col("o_orderkey") === col("l_orderkey"))
-        .groupBy("o_orderkey", "o_orderdate")
-        // +5e-7 before rounding: the true sum is an exact 4-decimal rational,
-        // but fp accumulation order differs across engines; the epsilon
-        // pushes exact .xx5 boundary sums off the round-half edge the same
-        // way on both sides (non-boundary sums are ≥1e-4 away, unaffected).
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))) + lit(5e-7), 2)
-          .as("revenue"))
-        .orderBy("o_orderkey")
-    }
-
-    private def pixels(s: SparkSession, d: String): DataFrame =
-      li(s, d).select(
-        (col("l_partkey") % 40).as("px"),
-        (col("l_suppkey") % 10).as("py"),
-        col("l_quantity").as("value"))
-
-    /** Resampling-as-aggregation (SURVEY §2.9): average kernel = each coarse
-      * pixel averages the k×k fine pixels it covers (GDAL `average`). */
-    def r1_resample_avg(s: SparkSession, d: String): DataFrame =
-      pixels(s, d)
-        .groupBy("px", "py").agg(avg("value").as("v")) // fine raster
-        .groupBy(expr("px div 2").as("cx"), expr("py div 2").as("cy"))
-        .agg(round(avg("v"), 4).as("value"))
-        .orderBy("cx", "cy")
-
-    /** Mode kernel: most frequent fine value per coarse pixel, ties to the
-      * smallest value (deterministic; GDAL scan-order tie is not). */
-    def r2_resample_mode(s: SparkSession, d: String): DataFrame = {
-      val fine = pixels(s, d).groupBy("px", "py").agg(max("value").as("v"))
-      val counted = fine
-        .groupBy(expr("px div 2").as("cx"), expr("py div 2").as("cy"), col("v"))
-        .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy("cx", "cy").orderBy(col("cnt").desc, col("v").asc)
-      counted.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("cx"), col("cy"), col("v").as("value"))
-        .orderBy("cx", "cy")
-    }
-
-    /** R4: median (nearest-rank) resample kernel — the quantile semantics
-      * of `Resample.downsample("med")` (`ceil(n·q)` over the sorted valid
-      * window) in row form so DuckDB can oracle it exactly (approximate
-      * percentiles would not hash-match). */
-    def r4_resample_med(s: SparkSession, d: String): DataFrame = {
-      val fine = pixels(s, d).groupBy("px", "py").agg(max("value").as("v"))
-      fine
-        .groupBy(expr("px div 2").as("cx"), expr("py div 2").as("cy"))
-        .agg(sort_array(collect_list("v")).as("vs"))
-        .select(col("cx"), col("cy"),
-          element_at(col("vs"),
-            greatest(lit(1), ceil(size(col("vs")) * 0.5).cast("int"))).as("med"))
-        .orderBy("cx", "cy")
-    }
-
-    /** R17: TRUE interpolating decimation (round 16 — closes the r15 alias
-      * where bilinear/cubic decimation silently ran as box average,
-      * `resampling.py:9-25` exposes the full rasterio enum). Three legs of
-      * the real [[graft.operators.Resample.downsample]] tap kernel over
-      * deterministic 8×8 blocks with a nodata mask: `bilinear4` (k=4 —
-      * phase-0.5 taps select the central 2×2, provably ≠ box average),
-      * `cubic2` (k=2 cubic convolution, half-phase taps ∓0.0625/±0.5625
-      * with negative lobes), `bspline2` (k=2 B-spline smoothing, 1/48 and
-      * 23/48). Masked taps drop out and renormalize; the oracle replays
-      * the exact tap weights in closed form. The mask pattern guarantees
-      * ≥3 valid bilinear taps per window (adjacent formula values differ
-      * by 5 mod 19), so no leg exercises the nearest-fallback here — that
-      * path is unit-tested in ResampleSpec. */
-    def r17_resample_bilinear(s: SparkSession, d: String): DataFrame = {
-      val blocks = Tables.part(s, d).filter(col("p_partkey") <= 4)
-        .select(col("p_partkey").cast("long").as("asset_id"))
-        .withColumn("values", transform(sequence(lit(0), lit(63)),
-          i => ((lit(3) * col("asset_id") + lit(5) * (i % lit(8)) +
-            lit(7) * (i / lit(8)).cast("int")) % 19).cast("double")))
-      def leg(k: Int, m: String, name: String, outW: Int): DataFrame =
-        blocks.select(col("asset_id"), posexplode(
-            graft.operators.Resample.downsample(col("values"), 8, 8, k, m,
-              noData = Some(0.0))))
-          .select(col("asset_id"), lit(name).as("kernel"),
-            (col("pos") % outW).as("ox"), (col("pos") / outW).cast("int").as("oy"),
-            round(col("col") + lit(5e-7), 4).as("val"))
-      leg(4, "bilinear", "bilinear4", 2)
-        .unionAll(leg(2, "cubic", "cubic2", 4))
-        .unionAll(leg(2, "cubic_spline", "bspline2", 4))
-        .orderBy("asset_id", "kernel", "oy", "ox")
-    }
-
-    /** §2.9 SEAM-EXACT interpolating decimation (VERDICT r16 #5): a 16×16
-      * raster split into four 8×8 blocks on a 2×2 lattice decimates ×2
-      * under cubic, lanczos and gauss with a REAL cross-block halo
-      * ([[graft.operators.Resample.downsampleSeamExact]]), and the oracle
-      * computes the WHOLE-raster convolution — the two agree
-      * pixel-for-pixel including the band within kernel radius of every
-      * block seam, which the block-local contract (r17) renormalizes
-      * differently by design. Raster edges drop-and-renormalize
-      * identically on both sides; the formula keeps every pixel ≥ 1 so no
-      * leg exercises masking (unit-tested in ResampleSpec instead). */
-    def r18_resample_seam(s: SparkSession, d: String): DataFrame = {
-      val blocks = Tables.part(s, d)
-        .filter(col("p_partkey") >= 1 && col("p_partkey") <= 4)
-        .select(((col("p_partkey") - 1) % 2).cast("int").as("block_x"),
-          floor((col("p_partkey") - 1) / 2).cast("int").as("block_y"))
-      val withV = blocks.withColumn("values",
-        transform(sequence(lit(0), lit(63)), i => {
-          val gx = col("block_x") * 8 + (i % lit(8))
-          val gy = col("block_y") * 8 + (i / lit(8)).cast("int")
-          ((lit(3) + lit(5) * gx + lit(7) * gy + gx * gy) % 19 + 1).cast("double")
-        }))
-      def leg(m: String): DataFrame =
-        graft.operators.Resample.downsampleSeamExact(withV, 8, 8, 2, m)
-          .select(col("block_x"), col("block_y"), posexplode(col("values")))
-          .select(lit(m).as("kernel"),
-            (col("block_x") * 4 + col("pos") % 4).cast("int").as("ox"),
-            (col("block_y") * 4 + (col("pos") / 4).cast("int")).cast("int").as("oy"),
-            round(col("col") + lit(5e-7), 4).as("val"))
-      leg("cubic").unionAll(leg("lanczos")).unionAll(leg("gauss"))
-        .orderBy("kernel", "oy", "ox")
-    }
-
-    /** §2.9 `gauss` resampling — the last rasterio `Resampling` member
-      * (`gfw_pixetl/resampling.py:9-15`) to land: truncated 2^(−t²)
-      * separable taps, radius 2, which reproduce GDAL's binomial (1,2,1)
-      * gauss overview matrix exactly on the integer lattice (see
-      * [[graft.functions.ResampleTaps]]). Two block-local decimation legs
-      * (k = 2 and k = 4, both half-phase — per-axis tap vectors exactly
-      * (1,4,4,1)/10) over deterministic masked 8×8 blocks; the oracle
-      * replays the SAME tap doubles (shortest-repr literals round-trip
-      * exactly) under the identical drop-and-renormalize rule. Gauss taps
-      * are non-negative, so the negative-lobe nearest-fallback never
-      * triggers (and the mask formula leaves ≥ 3 valid taps per window
-      * row anyway: adjacent values differ by 5 mod 19). */
-    def r19_resample_gauss(s: SparkSession, d: String): DataFrame = {
-      val blocks = Tables.part(s, d).filter(col("p_partkey") <= 4)
-        .select(col("p_partkey").cast("long").as("asset_id"))
-        .withColumn("values", transform(sequence(lit(0), lit(63)),
-          i => ((lit(3) * col("asset_id") + lit(5) * (i % lit(8)) +
-            lit(7) * (i / lit(8)).cast("int")) % 19).cast("double")))
-      def leg(k: Int, outW: Int): DataFrame =
-        blocks.select(col("asset_id"), posexplode(
-            graft.operators.Resample.downsample(col("values"), 8, 8, k, "gauss",
-              noData = Some(0.0))))
-          .select(col("asset_id"), lit(k).as("k"),
-            (col("pos") % outW).as("ox"), (col("pos") / outW).cast("int").as("oy"),
-            round(col("col") + lit(5e-7), 4).as("val"))
-      leg(2, 4).unionAll(leg(4, 2)).orderBy("asset_id", "k", "oy", "ox")
-    }
-
-    /** §2.9 overview pyramid: 3 factor-2 SUM reductions of the count
-      * raster, each level built from the previous (partial reaggregation —
-      * the gdaladdo pattern at O(N) total work). */
-    def r5_pyramid(s: SparkSession, d: String): DataFrame =
-      graft.operators.Resample.pyramidSum(
-          pixels(s, d).groupBy("px", "py").agg(count(lit(1)).as("value")),
-          levels = 3)
-        .orderBy("level", "px", "py")
-
-    /** Focal 3×3 mean via the halo-exchange block operator: the 40×10 grid
-      * is packed into 8×5 blocks on a 5×2 lattice, so every interior kernel
-      * window crosses at least one block seam — the oracle (a plain
-      * neighbor self-join in DuckDB) proves the exchange is seamless. */
-    /** r6/r7 shared packing: rasterize to the 40×10 grid, then pack cells
-      * into 8×5 row-major block arrays on a 5×2 lattice (absent cells stay
-      * invalid), so every interior kernel window crosses a block seam. */
-    private val (fbw, fbh) = (8, 5)
-    private def focalBlocks(s: SparkSession, d: String): DataFrame =
-      pixels(s, d).groupBy("px", "py").agg(max("value").as("v"))
-        .groupBy((col("px") / fbw).cast("int").as("block_x"),
-          (col("py") / fbh).cast("int").as("block_y"))
-        .agg(map_from_entries(collect_list(struct(
-          ((col("py") % fbh) * fbw + col("px") % fbw).cast("int"), col("v")))).as("m"))
-        .select(col("block_x"), col("block_y"),
-          lit(fbw).as("width"), lit(fbh).as("height"),
-          transform(sequence(lit(0), lit(fbw * fbh - 1)),
-            i => element_at(col("m"), i.cast("int"))).as("values"),
-          transform(sequence(lit(0), lit(fbw * fbh - 1)),
-            i => element_at(col("m"), i.cast("int")).isNotNull).as("valid"))
-
-    /** Explode a focal result lattice back to (px, py, rounded value). */
-    private def focalCells(out: DataFrame, as: String): DataFrame =
-      out.select(col("block_x"), col("block_y"),
-          posexplode(arrays_zip(col("values"), col("valid"))))
-        .filter(col("col.valid"))
-        .select(
-          (col("block_x") * fbw + col("pos") % fbw).cast("long").as("px"),
-          (col("block_y") * fbh + floor(col("pos") / fbw)).cast("long").as("py"),
-          round(col("col.values") + lit(5e-7), 4).as(as))
-        .orderBy("px", "py")
-
-    def r6_focal_mean(s: SparkSession, d: String): DataFrame =
-      focalCells(graft.operators.Focal.focalMean(focalBlocks(s, d), radius = 1),
-        "focal")
-
-    /** Weighted 3×3 binomial blur through the same halo exchange — weights
-      * are dyadic rationals and values integer-valued, so both engines'
-      * sums are EXACT and the renormalized quotient is bit-identical. */
-    def r7_convolve(s: SparkSession, d: String): DataFrame = {
-      val blur = Seq(Seq(1.0, 2.0, 1.0), Seq(2.0, 4.0, 2.0), Seq(1.0, 2.0, 1.0))
-        .map(_.map(_ / 16))
-      focalCells(graft.operators.Focal.convolve(focalBlocks(s, d), blur), "blur")
-    }
-
-    /** Distance join (ST_DWithin-class) via the 2-D cell binning: small
-      * parts paired with large parts within distance 2 on a synthetic
-      * 97×89 plane — an equi-join on the cell key, never the O(n²)
-      * nested loop the raw predicate would plan. Integral coordinates ⇒
-      * the squared-distance verify is exact in both engines. */
-    def g1_distance_join(s: SparkSession, d: String): DataFrame = {
-      val pts = Tables.part(s, d).select(col("p_partkey").as("id"),
-        (col("p_partkey") % 97).cast("double").as("x"),
-        ((col("p_partkey") * 31) % 89).cast("double").as("y"),
-        col("p_size"))
-      graft.operators.DistanceJoin.join(
-          pts.filter(col("p_size") < 10), pts.filter(col("p_size") >= 45), d = 2.0)
-        .withColumn("dist", round(col("dist") + lit(5e-7), 4))
-        .orderBy("lid", "rid")
-    }
-
-    /** DBSCAN over the synthetic plane — DistanceJoin (cell-binned
-      * eps-neighbors) → core count ≥ 6 → components over core-core edges →
-      * deterministic border attach (min core cluster id). 142 clusters,
-      * all three roles populated at sf0.01. */
-    def g2_dbscan(s: SparkSession, d: String): DataFrame = {
-      val pts = Tables.part(s, d).select(col("p_partkey").as("id"),
-        (col("p_partkey") % 97).cast("double").as("x"),
-        ((col("p_partkey") * 31) % 89).cast("double").as("y"))
-      graft.operators.Cluster.dbscan(pts, eps = 2.5, minPts = 6).orderBy("id")
-    }
-
-    /** Per-vertex triangle counts over the eps-proximity graph (the local
-      * density signal that separates clustered near-dup groups from chains
-      * of borderline pairs). Edges from the cell-binned distance join;
-      * every triangle enumerates once via the a<b<c total order. */
-    def g3_triangle_count(s: SparkSession, d: String): DataFrame = {
-      val pts = Tables.part(s, d).select(col("p_partkey").as("id"),
-        (col("p_partkey") % 97).cast("double").as("x"),
-        ((col("p_partkey") * 31) % 89).cast("double").as("y"))
-      val edges = graft.operators.DistanceJoin.join(pts, pts, d = 2.5)
-        .filter(col("lid") < col("rid"))
-        .select(col("lid").as("doc1"), col("rid").as("doc2"))
-      graft.operators.Graph.triangles(edges).orderBy("id")
-    }
-
-    /** PageRank over a deterministic citation graph (each doc links to two
-      * hash-derived targets, so both engines build the identical edge set
-      * from the corpus alone). Five exact integer-micro iterations — see
-      * [[graft.operators.Graph.pagerank]]; the oracle replays them as five
-      * unrolled CTEs. */
-    def g4_pagerank(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d).select("doc_id")
-      val n = docs.agg(count(lit(1)).as("__n"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"),
-          explode(array((col("doc_id") * 31 + 7) % col("__n"),
-            (col("doc_id") * 17 + 3) % col("__n"))).as("dst"))
-      graft.operators.Graph.pagerank(edges, iters = 5)
-        .select(col("id").as("doc_id"), col("rank").as("rank_micro"))
-        .orderBy("doc_id")
-    }
-
-    /** PageRank with dangling-mass redistribution over a graph where a
-      * third of the docs never cite (doc_id % 3 == 0 emits no edges —
-      * the cited-but-never-citing shape real curation graphs are full
-      * of). Each round the damped dangling mass is split evenly with
-      * exact integer remainder accounting — see
-      * [[graft.operators.Graph.pagerank]] `redistributeDangling`; the
-      * oracle replays the five rounds with the dangling share as a
-      * 1-row cross-joined scalar. */
-    def g6_pagerank_dangling(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d).select("doc_id")
-      val n = docs.agg(count(lit(1)).as("__n"))
-      val edges = docs.filter(col("doc_id") % 3 =!= 0).crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"),
-          explode(array((col("doc_id") * 31 + 7) % col("__n"),
-            (col("doc_id") * 17 + 3) % col("__n"))).as("dst"))
-      graft.operators.Graph.pagerank(edges, iters = 5, redistributeDangling = true)
-        .select(col("id").as("doc_id"), col("rank").as("rank_micro"))
-        .orderBy("doc_id")
-    }
-
-    /** Community detection by 3 rounds of deterministic synchronous label
-      * propagation over the same hash-derived citation graph as g4, taken
-      * undirected — the clustering pass that separates communities where
-      * connected components would merge everything through bridge edges.
-      * Ties break to the smallest label, so the fixed point is exact and
-      * the oracle replays the rounds as unrolled CTEs. See
-      * [[graft.operators.Graph.labelPropagation]]. */
-    def g7_label_prop(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d).select("doc_id")
-      val n = docs.agg(count(lit(1)).as("__n"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("doc1"),
-          explode(array((col("doc_id") * 31 + 7) % col("__n"),
-            (col("doc_id") * 17 + 3) % col("__n"))).as("doc2"))
-      graft.operators.Graph.labelPropagation(edges, iters = 3)
-        .select(col("id").as("doc_id"), col("label"))
-        .orderBy("doc_id")
-    }
-
-    /** k-core of the g4 citation graph (k=4, 4 peel rounds): the density
-      * filter that isolates mutually-dense subgraphs (spam farms, template
-      * clusters) from incidental connectivity. Deterministic fixed-round
-      * peeling — the oracle unrolls the rounds. See
-      * [[graft.operators.Graph.kcorePeel]]. */
-    def g8_kcore(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d).select("doc_id")
-      val n = docs.agg(count(lit(1)).as("__n"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("doc1"),
-          explode(array((col("doc_id") * 31 + 7) % col("__n"),
-            (col("doc_id") * 17 + 3) % col("__n"))).as("doc2"))
-      graft.operators.Graph.kcorePeel(edges, k = 4, rounds = 4)
-        .select(col("id").as("doc_id"), col("deg"))
-        .orderBy("doc_id")
-    }
-
-    /** Single-source shortest paths over a layered DAG derived from the
-      * orders table (every edge advances ≥ 12 of 60 node slots, so no
-      * shortest path exceeds 5 hops — 6 relaxation rounds converge by
-      * construction). Integer weights make min() exact; the oracle
-      * enumerates all paths with a recursive CTE. See
-      * [[graft.operators.Graph.sssp]]. */
-    def g5_sssp(s: SparkSession, d: String): DataFrame = {
-      val edges = Tables.orders(s, d)
-        .select((col("o_orderkey") % 60).as("src"),
-          (col("o_orderkey") % 60 + lit(12) + col("o_custkey") % 13).as("dst"),
-          (lit(1) + col("o_orderkey") % 7).as("w"))
-        .filter(col("dst") < 60)
-      graft.operators.Graph.sssp(edges, sourceId = 0L, iters = 6)
-        .orderBy("id")
-    }
-
-    /** Bloom-pruned dimension join — the runtime-filter shape for
-      * selective fact⋈dim joins at 100 TB: an 8 KB bitset over the
-      * filtered part keys prunes lineitem BEFORE any shuffle; the exact
-      * join then removes Bloom false positives, so the result is
-      * identical to the plain join the oracle runs. Pure codegen probe,
-      * no UDF — see [[graft.functions.Bloom]]. */
-    def b1_bloom_join(s: SparkSession, d: String): DataFrame =
-      graft.functions.Bloom.prunedEquiJoin(
-          li(s, d), "l_partkey",
-          Tables.part(s, d).filter(col("p_size") <= 2), "p_partkey")
-        .groupBy("p_brand")
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-            + lit(5e-7), 2).as("revenue"))
-        .orderBy("p_brand")
-
-    /** Horn slope over the packed grid (cellSize 1): both gradients are
-      * exact dyadic sums; atan/sqrt agree across engines within the
-      * epsilon-guarded 4-decimal round. Full-window cells only (n = 9). */
-    def r8_slope(s: SparkSession, d: String): DataFrame =
-      focalCells(graft.operators.Focal.slope(focalBlocks(s, d), cellSize = 1.0),
-        "slope")
-
-    /** Horn aspect (downslope bearing, degrees clockwise from north) over
-      * the same exchanged window as r8/r9 — completes the terrain-family
-      * oracle coverage (slope/hillshade had gate queries; aspect was
-      * spec-only). Flat cells (both gradients zero) have no bearing and
-      * drop, like partial windows. */
-    def r10_aspect(s: SparkSession, d: String): DataFrame =
-      focalCells(graft.operators.Focal.aspect(focalBlocks(s, d), cellSize = 1.0),
-        "aspect")
-
-    /** Hillshade with the default NW sun. The sun's trig folds to the same
-      * Scala-computed literals on both sides (see the oracle), so only
-      * sqrt + division run cross-engine. */
-    def r9_hillshade(s: SparkSession, d: String): DataFrame =
-      focalCells(graft.operators.Focal.hillshade(focalBlocks(s, d), cellSize = 1.0),
-        "shade")
-
-    /** R3: cross-CRS warp gather — WarpReader's per-pixel math in
-      * declarative form so DuckDB can oracle it. Each pixel of a 128×128
-      * WebMercator world raster inverse-projects its center to 4326
-      * (closed-form, `Reproject.invMercator*`) and floor-indexes a 10°
-      * source lattice built from `part`; cells with no source data
-      * nodata-fill with -1 (the K4 pad). This is rasterio WarpedVRT
-      * nearest-kernel semantics (`tiles/raster_src_tile.py:188-210`). */
-    def r3_warp_3857(s: SparkSession, d: String): DataFrame = {
-      val ext = Reproject.webMercatorMax
-      val n = 128
-      val res = 2 * ext / n
-      val cells = Tables.part(s, d)
-        .groupBy((col("p_partkey") % 36).as("cx"), (col("p_partkey") % 18).as("cy"))
-        .agg(count(lit(1)).as("n_parts"), round(max("p_retailprice"), 2).as("max_price"))
-      s.range(n.toLong * n)
-        .select((col("id") % n).as("i"), expr(s"id DIV $n").as("j"))
-        .withColumn("lng", Reproject.invMercatorLng(lit(-ext) + (col("i") + 0.5) * res))
-        .withColumn("lat", Reproject.invMercatorLat(lit(ext) - (col("j") + 0.5) * res))
-        .withColumn("cx", floor((col("lng") + 180.0) / 10.0))
-        .withColumn("cy", floor((lit(90.0) - col("lat")) / 10.0))
-        .join(broadcast(cells), Seq("cx", "cy"), "left")
-        .select(col("i"), col("j"),
-          coalesce(col("n_parts"), lit(-1L)).as("n_parts"),
-          coalesce(col("max_price"), lit(-1.0)).as("max_price"))
-        .orderBy("i", "j")
-    }
-
-    /** A1: rasterize burn-count — pixel = COUNT of covering features. */
-    def a1_rasterize_count(s: SparkSession, d: String): DataFrame =
-      pixels(s, d).groupBy("px", "py").agg(count(lit(1)).as("value"))
-        .orderBy("px", "py")
-
-    /** A2: rasterize burn-value — ordered burn ≡ max(field). */
-    def a2_rasterize_value(s: SparkSession, d: String): DataFrame =
-      pixels(s, d).groupBy("px", "py").agg(max("value").as("value"))
-        .orderBy("px", "py")
-
-    /** A3: per-band statistics (gdalinfo -stats). */
-    def a3_band_stats(s: SparkSession, d: String): DataFrame =
-      li(s, d).groupBy("l_returnflag")
-        .agg(
-          round(min("l_extendedprice"), 4).as("stat_min"),
-          round(max("l_extendedprice"), 4).as("stat_max"),
-          round(avg("l_extendedprice"), 4).as("stat_mean"),
-          round(stddev_samp(col("l_extendedprice")), 4).as("stat_std"),
-          count(lit(1)).as("n"))
-        .orderBy("l_returnflag")
-
-    /** A4: histogram — 10 equal buckets over [900, 105000]. */
-    def a4_histogram(s: SparkSession, d: String): DataFrame = {
-      val lo = 900.0; val hi = 105000.0; val n = 10
-      val w = (hi - lo) / n
-      li(s, d)
-        .select(least(greatest(floor((col("l_extendedprice") - lo) / w), lit(0)), lit(n - 1))
-          .cast("long").as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).as("n"))
-        .orderBy("bucket")
-    }
-
-    /** A5: valid-pixel count (masked semantics: nullif → count non-null). */
-    def a5_valid_count(s: SparkSession, d: String): DataFrame =
-      li(s, d).groupBy("l_returnflag")
-        .agg(
-          count(when(col("l_discount") =!= 0, 1)).as("n_valid"),
-          count(lit(1)).as("n_total"))
-        .orderBy("l_returnflag")
-
-    /** A6: extent union — axis-aligned union of all footprints (the bbox
-      * form of unary_union; full JTS union covered by GeomUnionAgg tests). */
-    def a6_extent_union(s: SparkSession, d: String): DataFrame =
-      footprints(s, d).agg(
-        min("f_left").as("ext_left"), min("f_bottom").as("ext_bottom"),
-        max("f_right").as("ext_right"), max("f_top").as("ext_top"),
-        count(lit(1)).as("n_files"))
-
-    /** A7: manifest collect — deterministic ordered concatenation of
-      * per-group manifest entries (collect_list + sort). */
-    def a7_manifest_collect(s: SparkSession, d: String): DataFrame =
-      li(s, d).groupBy("l_returnflag", "l_linestatus").agg(count(lit(1)).as("n"))
-        .select(concat(col("l_returnflag"), lit("|"), col("l_linestatus"), lit("|"), col("n")).as("entry"))
-        .agg(array_join(array_sort(collect_list(col("entry"))), ",").as("manifest"))
-
-    /** A9 (beyond-parity): zonal statistics — per-ZONE stats of a value
-      * raster, zones themselves a raster (the classic zonal-stats GIS op).
-      * One equi-join on the pixel key (both rasters share the grid
-      * partitioning, so at scale this is co-located) + one hash aggregate. */
-    def a9_zonal_stats(s: SparkSession, d: String): DataFrame = {
-      val values = pixels(s, d).groupBy("px", "py").agg(count(lit(1)).as("v"))
-      // floor, not a bare cast: DuckDB's double→BIGINT cast ROUNDS where
-      // Spark's truncates — floor on both sides removes the divergence
-      val zones = pixels(s, d).groupBy("px", "py")
-        .agg(floor(max("value") / 10).cast("long").as("zone"))
-      values.join(zones, Seq("px", "py"))
-        .groupBy("zone")
-        .agg(count(lit(1)).as("n_cells"), min("v").as("z_min"), max("v").as("z_max"),
-          round(avg("v"), 4).as("z_mean"), sum("v").as("z_sum"))
-        .orderBy("zone")
-    }
-
-    /** A14 (beyond-parity): change-detection cross-tabulation — the
-      * landcover-transition matrix of raster change analysis: per
-      * (class_from, class_to) pixel counts and area share between the
-      * pre-1997H2 and post-1997H2 classifications of a 200×50 lattice;
-      * a pixel with no observations in an epoch takes the nodata class
-      * −1 (the K4 pad). Both epoch rasters derive from one fact scan, so
-      * a single conditional pixel aggregate computes both classes in one
-      * pass; two materialized rasters co-locate on the grid key and the
-      * same cross-tab is one equi-join + this aggregate. The share
-      * divides once per matrix cell (|classes|² rows), total rides as a
-      * 1-row broadcast. */
-    def a14_change_matrix(s: SparkSession, d: String): DataFrame = {
-      val split = "1997-06-01"
-      val base = graft.core.Caching.shared(
-        li(s, d).select(
-            (col("l_partkey") % 200).as("px"), (col("l_suppkey") % 50).as("py"),
-            col("l_quantity").as("value"), col("l_shipdate"))
-          .groupBy("px", "py")
-          .agg(
-            coalesce(floor(max(when(col("l_shipdate") < lit(split), col("value"))) / 10),
-              lit(-1)).cast("long").as("c_from"),
-            coalesce(floor(max(when(col("l_shipdate") >= lit(split), col("value"))) / 10),
-              lit(-1)).cast("long").as("c_to")))
-      val total = base.agg(count(lit(1)).as("__t"))
-      base.groupBy("c_from", "c_to").agg(count(lit(1)).as("n_px"))
-        .crossJoin(broadcast(total))
-        .select(col("c_from"), col("c_to"), col("n_px"),
-          expr("n_px * 1000000 div __t").as("share_micro"))
-        .orderBy("c_from", "c_to")
-    }
-
-    /** A10 (beyond-parity): connected-component labeling of same-valued
-      * zones on the a9 raster — GDAL's region-group/sieve primitive as
-      * shifted-key equi-joins + [[graft.operators.Dedup.components]];
-      * deterministic min-pixel-id labels, recursive-CTE closure oracle. */
-    def a10_region_label(s: SparkSession, d: String): DataFrame = {
-      val zones = pixels(s, d).groupBy("px", "py")
-        .agg(floor(max("value") / 10).cast("long").as("v"))
-      graft.operators.Regions.label(zones).orderBy("px", "py")
-    }
-
-    /** GDAL-sieve over the zone raster: regions under 3 px drop to nodata
-      * (null), survivors keep their value; n_px rides along so the oracle
-      * checks the census too. See [[graft.operators.Regions.sieve]]. */
-    def a12_sieve(s: SparkSession, d: String): DataFrame = {
-      val zones = pixels(s, d).groupBy("px", "py")
-        .agg(floor(max("value") / 10).cast("long").as("v"))
-      graft.operators.Regions.sieve(zones, minPx = 3).orderBy("px", "py")
-    }
-
-    /** GDAL-sieve, absorb form (gdal_sieve's DEFAULT): regions under 3 px
-      * take the value of their largest 4-connected neighbor region (ties
-      * to the smaller region id), instead of dropping to nodata like a12.
-      * One absorb pass over original labels — see
-      * [[graft.operators.Regions.sieveAbsorb]]. */
-    def a13_sieve_absorb(s: SparkSession, d: String): DataFrame = {
-      val zones = pixels(s, d).groupBy("px", "py")
-        .agg(floor(max("value") / 10).cast("long").as("v"))
-      graft.operators.Regions.sieveAbsorb(zones, minPx = 3).orderBy("px", "py")
-    }
-
-    /** Raster proximity (GDAL gdal_proximity with maxdist): per pixel, the
-      * min SQUARED distance to the nearest high-value pixel within radius
-      * 3, null beyond — via the binned distance join's min-aggregate form
-      * ([[graft.operators.DistanceJoin.nearestWithinSq]]); exact integer
-      * d², so the min is order-independent. The cell relation is pinned
-      * once and feeds both join sides and the final left join. */
-    def a11_proximity(s: SparkSession, d: String): DataFrame = {
-      val cells = graft.core.Caching.shared(
-        pixels(s, d).groupBy("px", "py")
-          .agg(floor(max("value") / 10).cast("long").as("v"))
-          .withColumn("id", col("px") * 1048576 + col("py")))
-      val targets = cells.filter(col("v") >= 5)
-      val near = graft.operators.DistanceJoin.nearestWithinSq(
-        cells, targets, d = 3.0, idCol = "id", xCol = "px", yCol = "py")
-      cells.join(near, Seq("id"), "left")
-        .select(col("px"), col("py"), col("v"), col("d2"))
-        .orderBy("px", "py")
-    }
-
-    /** A8: status tally (pipe.py:137-168 status algebra). */
-    def a8_status_tally(s: SparkSession, d: String): DataFrame =
-      Tables.orders(s, d)
-        .select(when(col("o_orderkey") % 10 === 0, "existing")
-          .when(col("o_orderkey") % 10 === 1, "failed")
-          .when(col("o_orderkey") % 10 === 2, "skipped")
-          .otherwise("processed").as("status"))
-        .groupBy("status").agg(count(lit(1)).as("n"))
-        .orderBy("status")
-
-    /** W1: ordered burn — first feature per pixel by (value desc, key asc).
-      * The row_number window form sorts every partition's 600 k rows to keep
-      * one row per pixel; the argmax aggregate (`max` over an ordered
-      * struct, map-side combined) yields the identical row for a fraction of
-      * the cost and survives 400-key parallelism limits. The general window
-      * surface stays covered by w2. */
-    def w1_ordered_burn_rank(s: SparkSession, d: String): DataFrame = {
-      // Two-phase argmax (round 20, VERDICT r19 #7): max(struct(...)) uses
-      // a struct aggregation buffer, which HashAggregate cannot hold, so
-      // Spark planned SortAggregate — a full per-partition sort of the
-      // fact table ahead of the partial aggregate. Phase 1 takes the plain
-      // per-pixel max(value) (hash-aggregated, map-side combined); phase 2
-      // joins the 400-row max relation back (broadcast) and min-aggregates
-      // the winning key. Identical rows: lexicographic max of
-      // (value, -okey, -oline) outputs (max value, min okey among ties) —
-      // the -oline leg never reached the output. Two hash aggregates +
-      // one broadcast join, zero sorts, no value-bounds assumption.
-      val base = li(s, d).select(
-        (col("l_partkey") % 40).as("px"), (col("l_suppkey") % 10).as("py"),
-        col("l_quantity").as("value"), col("l_orderkey"))
-      val best = base.groupBy("px", "py").agg(max("value").as("value"))
-      base.join(broadcast(best), Seq("px", "py", "value"))
-        .groupBy("px", "py", "value")
-        .agg(min("l_orderkey").as("l_orderkey"))
-        .select("px", "py", "value", "l_orderkey")
-        .orderBy("px", "py")
-    }
-
-    /** W2: running sum per key (frame: unbounded preceding → current). */
-    def w2_running_sum(s: SparkSession, d: String): DataFrame = {
-      val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.orders(s, d)
-        .filter(col("o_custkey") < 100)
-        .select(col("o_custkey"), col("o_orderkey"),
-          round(sum("o_totalprice").over(w), 2).as("running_total"))
-        .orderBy("o_custkey", "o_orderkey")
-    }
-
-    /** W3: offset window functions — per-user deltas between consecutive
-      * events (lag) and the session's first value (first_value). */
-    def w3_lag_delta(s: SparkSession, d: String): DataFrame = {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      Tables.events(s, d)
-        .filter(col("user_id") < 100 && col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"),
-          round(col("value") - coalesce(lag("value", 1).over(w), lit(0.0)), 4).as("delta"),
-          round(first("value").over(w), 4).as("first_v"))
-        .orderBy("user_id", "event_id")
-    }
-
-    /** W5: event-time RANGE frame — trailing 1-hour per-user count and
-      * integer sum. Unlike w2's ROWS frame, the frame bound is a VALUE
-      * offset on the ordering key (epoch seconds), so frame width varies
-      * per row with event density; peers at the same instant are all
-      * in-frame by definition. Integer sum (floor) keeps the varying
-      * accumulation order exact across engines; the DuckDB twin casts its
-      * HUGEINT window sum back to BIGINT. */
-    def w5_range_frame(s: SparkSession, d: String): DataFrame = {
-      val w = Window.partitionBy("user_id")
-        .orderBy(unix_timestamp(col("ts")))
-        .rangeBetween(-3600, Window.currentRow)
-      Tables.events(s, d).filter(col("user_id") < 50)
-        .select(col("event_id"), col("user_id"),
-          count(lit(1)).over(w).as("n_1h"),
-          sum(floor(col("value")).cast("long")).over(w).as("sum_1h"))
-        .orderBy("event_id")
-    }
-
-    /** O1: deterministic top-k (order + limit with total tiebreak). */
-    def o1_topk(s: SparkSession, d: String): DataFrame =
-      Tables.orders(s, d)
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        .limit(20)
-        .select("o_orderkey", "o_totalprice")
-
-    /** O3: set ops — nations having customers ∩ nations having suppliers,
-      * minus nations of low-balance suppliers (INTERSECT/EXCEPT). */
-    def o3_set_ops(s: SparkSession, d: String): DataFrame = {
-      val custNations = Tables.customer(s, d).select(col("c_nationkey").as("nationkey"))
-      val suppNations = Tables.supplier(s, d).select(col("s_nationkey").as("nationkey"))
-      val poor = Tables.supplier(s, d).filter(col("s_acctbal") < 0)
-        .select(col("s_nationkey").as("nationkey"))
-      custNations.intersect(suppNations).except(poor).orderBy("nationkey")
-    }
-
-    /** O4: tile-set dedup (dropDuplicates on the derived tile key). */
-    def o4_tile_dedup(s: SparkSession, d: String): DataFrame =
-      Tables.events(s, d)
-        .select((col("user_id") % 10).as("tile_x"), col("event_type"))
-        .dropDuplicates("tile_x", "event_type")
-        .orderBy("tile_x", "event_type")
-
-    /** ST1: event-time window aggregation (batch form of the streaming
-      * surface; same plan shape under readStream + watermark). */
-    def st1_window_agg(s: SparkSession, d: String): DataFrame =
-      Tables.events(s, d)
-        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-        .orderBy("hour", "event_type")
-
-    /** UNPIVOT (melt) — the inverse of x8's pivot, proving the round trip:
-      * the wide per-cohort count table folds back to (cohort, event_type,
-      * n) rows. Spark plans `unpivot` as an Expand (one input row → five
-      * output rows, no shuffle); the only exchanges are the pivot
-      * aggregate's own. */
-    def x19_unpivot(s: SparkSession, d: String): DataFrame = {
-      val wide = Tables.events(s, d)
-        .groupBy((col("user_id") % 10).as("cohort"))
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(count(lit(1)))
-        .na.fill(0)
-      wide.unpivot(
-          Array(col("cohort")),
-          Array(col("click"), col("error"), col("purchase"),
-            col("signup"), col("view")),
-          "event_type", "n")
-        .orderBy("cohort", "event_type")
-    }
-
-    /** ST3: hopping (sliding) event-time windows — 1-hour windows every
-      * 30 min, so each event lands in exactly duration/slide = 2 windows.
-      * Spark's `window()` plans this as a 2-row Expand before the
-      * aggregate (no self-join, no range join); the distinct-user count
-      * adds the usual two-phase distinct aggregate. The streaming form is
-      * the same expression under a watermark — this is its batch twin,
-      * and the oracle pins the epoch-aligned bucket boundaries. */
-    def st3_hopping(s: SparkSession, d: String): DataFrame =
-      Tables.events(s, d)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"), countDistinct("user_id").as("n_users"))
-        .select(col("window.start").as("w_start"), col("event_type"),
-          col("n"), col("n_users"))
-        .orderBy("w_start", "event_type")
-
-    /** ST4: dedup-on-ingest batch twin — first event per
-      * (user, type, hour): the deterministic batch semantics of
-      * [[graft.streaming.StreamJob.streamingDedup]]'s
-      * dropDuplicatesWithinWatermark (key + bounded event-time horizon;
-      * the hour bucket stands in for the watermark window, making
-      * first-writer-wins replayable). The argmin is a struct-min — one
-      * map-side-combined aggregate, no per-key sort. */
-    def st4_dedup_first(s: SparkSession, d: String): DataFrame =
-      Tables.events(s, d)
-        .groupBy(col("user_id"), col("event_type"),
-          date_trunc("hour", col("ts")).as("hour"))
-        .agg(min(struct(col("ts"), col("event_id"))).as("__f"))
-        .select(col("user_id"), col("event_type"), col("hour"),
-          col("__f.ts").as("first_ts"), col("__f.event_id").as("first_event_id"))
-        .orderBy("user_id", "event_type", "hour")
-
-    /** ST2: sessionization — 30-min inactivity gap via lag + running sum
-      * (the batch twin of flatMapGroupsWithState session windows). */
-    def st2_sessionize(s: SparkSession, d: String): DataFrame = {
-      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val newSession = when(
-        unix_timestamp(col("ts")) - unix_timestamp(lag("ts", 1).over(byUser)) > 1800, 1)
-        .when(lag("ts", 1).over(byUser).isNull, 1)
-        .otherwise(0)
-      Tables.events(s, d)
-        .withColumn("new_s", newSession)
-        .withColumn("session_id", sum("new_s").over(
-          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("user_id")
-        .agg(max("session_id").as("n_sessions"), count(lit(1)).as("n_events"))
-        .orderBy("user_id")
-    }
-
-    /** Daily bounce rate — single-event sessions over all sessions (the
-      * engagement-quality headline): st2's gaps-and-islands
-      * sessionization (30-min gap), sessions keyed to the day they
-      * START, bounce = 1-event session. Two window passes over ONE
-      * user-keyed sort + a per-day fold; rate is one integer division. */
-    def x49_bounce_rate(s: SparkSession, d: String): DataFrame = {
-      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val newSession = when(
-        unix_timestamp(col("ts")) - unix_timestamp(lag("ts", 1).over(byUser)) > 1800, 1)
-        .when(lag("ts", 1).over(byUser).isNull, 1)
-        .otherwise(0)
-      Tables.events(s, d)
-        .withColumn("new_s", newSession)
-        .withColumn("session_id", sum("new_s").over(
-          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("user_id", "session_id")
-        .agg(to_date(min("ts")).as("day"), count(lit(1)).as("__n"))
-        .groupBy("day")
-        .agg(count(lit(1)).as("n_sessions"),
-          sum(when(col("__n") === 1, 1L).otherwise(0L)).as("n_bounce"))
-        .withColumn("bounce_micro", expr("n_bounce * 1000000 div n_sessions"))
-        .orderBy("day")
-    }
-
-    // ---------------------------------------------- text analysis (north star)
-    def t1_token_count(s: SparkSession, d: String): DataFrame =
-      Tables.documents(s, d)
-        .select(col("doc_id"), TextOps.tokenCount(col("text")).as("n_tokens"),
-          TextOps.subwordCount(col("text")).as("n_subwords"))
-        .orderBy("doc_id")
-
-    def t2_lang_id(s: SparkSession, d: String): DataFrame =
-      Tables.documents(s, d)
-        .select(col("doc_id"), TextOps.langId(col("text")).as("lang_pred"))
-        .orderBy("doc_id")
-
-    def t3_quality_score(s: SparkSession, d: String): DataFrame =
-      TextOps.withQuality(Tables.documents(s, d))
-        .select(col("doc_id"), col("quality"))
-        .orderBy("doc_id")
-
-    def t4_fingerprint(s: SparkSession, d: String): DataFrame =
-      Tables.documents(s, d)
-        .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")
-
-    /** Deterministic train/val/test split (stable across engines and
-      * appends — no RNG, no partition-order dependence). */
-    def t6_hash_split(s: SparkSession, d: String): DataFrame =
-      TextOps.hashSplit(Tables.documents(s, d))
-        .select("doc_id", "bucket", "split")
-        .orderBy("doc_id")
-
-    /** TF-IDF term weights (epsilon-guarded rounding for the cross-engine
-      * float compare, as in q1/j5). */
-    def t7_tfidf(s: SparkSession, d: String): DataFrame =
-      TextOps.tfidf(Tables.documents(s, d))
-        .withColumn("tfidf", round(col("tfidf") + lit(5e-7), 4))
-        .orderBy("doc_id", "tok")
-
-    /** Per-group heavy hitters: top-3 tokens per language by corpus
-      * frequency (vocab inspection / stopword mining). Two map-side-combined
-      * aggregates shrink the relation to (lang, token, count) before the
-      * per-group rank — the window sorts vocabulary rows, never token
-      * occurrences. Deterministic ties: count desc, then token asc. */
-    def t8_top_terms(s: SparkSession, d: String): DataFrame = {
-      import org.apache.spark.sql.expressions.Window
-      val tok = Tables.documents(s, d)
-        .select(col("lang"), explode(Dedup.tokens(col("text"))).as("tok"))
-        .groupBy("lang", "tok").agg(count(lit(1)).as("n"))
-      tok
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("lang").orderBy(col("n").desc, col("tok"))))
-        .filter(col("rank") <= 3)
-        .select("lang", "rank", "tok", "n")
-        .orderBy("lang", "rank")
-    }
-
-    /** Zipf rank-frequency diagnostic — OLS slope of ln(freq) on ln(rank)
-      * over the top-100 vocabulary (a healthy natural corpus fits slope
-      * ≈ −1; template/boilerplate corpora flatten it). Logs of integer
-      * counts/ranks micro-quantize BEFORE the sums (the bm25 float
-      * discipline), so the normal-equation folds are exact integers; the
-      * one slope division is sign-safe magnitude division lifted to
-      * DECIMAL(38) (the numerator exceeds 2⁶³ by design). Top-100 is
-      * TakeOrdered + the bounded single-partition rank (o1 pattern). */
-    def t33_zipf_slope(s: SparkSession, d: String): DataFrame = {
-      val freq = Tables.documents(s, d)
-        .select(explode(Dedup.tokens(col("text"))).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("tok").asc).limit(100)
-      val pts = freq
-        .withColumn("r", row_number().over(
-          Window.orderBy(col("cnt").desc, col("tok").asc)))
-        .select(
-          floor(log(col("r").cast("double")) * 1e6 + 0.5).cast("long").as("x"),
-          floor(log(col("cnt").cast("double")) * 1e6 + 0.5).cast("long").as("y"))
-      pts
-        .agg(count(lit(1)).as("n_terms"), sum("x").as("__sx"), sum("y").as("__sy"),
-          sum(col("x") * col("y")).as("__sxy"), sum(col("x") * col("x")).as("__sxx"))
-        .withColumn("__num",
-          (col("__sxy").cast("decimal(38,0)") * col("n_terms") -
-            col("__sx").cast("decimal(38,0)") * col("__sy")) * lit(1000000L))
-        .withColumn("__den",
-          col("__sxx").cast("decimal(38,0)") * col("n_terms") -
-            col("__sx").cast("decimal(38,0)") * col("__sx"))
-        .select(col("n_terms"),
-          when(col("__den") === 0, 0L)
-            .when(col("__num") < 0, -expr("(-__num) div __den"))
-            .otherwise(expr("__num div __den")).as("slope_micro"))
-    }
-
-    /** Bigram-LM surprisal (order-aware perplexity filter; t15's unigram
-      * model is order-blind). Docs need ≥ 2 tokens to have any bigram. */
-    def t17_bigram_surprisal(s: SparkSession, d: String): DataFrame =
-      TextOps.bigramSurprisal(Tables.documents(s, d)).orderBy("doc_id")
-
-    /** Inverted index: token → document frequency + numeric-ordered
-      * posting list (df ≥ 5 prunes the hapax tail — at 100 TB most of the
-      * vocabulary — right at the aggregate). */
-    def t16_posting_lists(s: SparkSession, d: String): DataFrame =
-      TextOps.invertedIndex(Tables.documents(s, d), minDf = 5)
-        .orderBy("tok")
-
-    /** Composed curation pipeline — the end-to-end shape a training-data
-      * user actually runs: quality-score → exact-dedup keepers →
-      * deterministic split → train shard. One lazy plan: the scoring map
-      * fuses with the scan, dedup is the only shuffle, split is free. */
-    def c1_curation_pipeline(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d)
-      val scored = TextOps.withQuality(docs).select(col("doc_id"), col("text"), col("quality"))
-      val keepers = Dedup.exact(docs).select(col("keep_id").as("doc_id"))
-      TextOps.hashSplit(scored.join(keepers, "doc_id"))
-        .filter(col("quality") >= 0.5 && col("split") === "train")
-        .select("doc_id", "quality", "bucket")
-        .orderBy("doc_id")
-    }
-
-    // ---------------------------------------------------- dedup (north star)
-    def d1_exact_dedup(s: SparkSession, d: String): DataFrame =
-      Dedup.exact(Tables.documents(s, d)).orderBy("digest")
-
-    def d2_minhash_sig(s: SparkSession, d: String): DataFrame =
-      Dedup.minhashSignatures(Tables.documents(s, d), k = 4).orderBy("doc_id")
-
-    /** LSH candidate cap shared by d3/d5 and their oracles: buckets larger
-      * than this are degenerate (no discriminating signal) and would make
-      * the within-bucket self-join O(n²) on boilerplate-heavy corpora. */
-    val lshCap = 64
-
-    def d3_lsh_candidates(s: SparkSession, d: String): DataFrame = {
-      val sigs = Dedup.minhashSignatures(Tables.documents(s, d), k = 4)
-      Dedup.lshCandidates(Dedup.lshBuckets(sigs, k = 4, rowsPerBand = 2),
-          maxBucketSize = lshCap)
-        .orderBy("doc1", "doc2")
-    }
-
-    def d4_simhash(s: SparkSession, d: String): DataFrame =
-      Dedup.simhash(Tables.documents(s, d), bits = 16).orderBy("doc_id")
-
-    /** Jaccard verify on LSH candidates ONLY — the scalable two-stage
-      * pipeline (`lshCandidates → Dedup.jaccard`) instead of a full token
-      * self-join, which a single hot token turns quadratic at 100 TB. */
-    def d5_jaccard_pairs(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d)
-      val sigs = Dedup.minhashSignatures(docs, k = 4)
-      // jaccard consumes the pair relation twice (intersection counts +
-      // the outer re-attach); persisting the tiny candidate set keeps the
-      // whole minhash→bucket→self-join pipeline from running twice
-      val cands = graft.core.Caching.shared(
-        Dedup.lshCandidates(Dedup.lshBuckets(sigs, k = 4, rowsPerBand = 2),
-          maxBucketSize = lshCap))
-      Dedup.jaccard(docs, cands)
-        .withColumn("jaccard", round(col("jaccard"), 4))
-        .filter(col("jaccard") >= 0.5)
-        .select("doc1", "doc2", "inter", "jaccard")
-        .orderBy("doc1", "doc2")
-    }
-
-    /** Character-level near-dup verify over the LSH candidates: the
-      * levenshtein builtin on 80-char prefixes. The candidate relation is
-      * what bounds the O(L²)-per-pair scalar — it never runs all-pairs. */
-    def d13_edit_distance(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d)
-      val sigs = Dedup.minhashSignatures(docs, k = 4)
-      val cands = Dedup.lshCandidates(Dedup.lshBuckets(sigs, k = 4, rowsPerBand = 2),
-        maxBucketSize = lshCap)
-      Dedup.editVerify(docs, cands, prefixLen = 80)
-        .select(col("doc1"), col("doc2"), col("edit_dist").cast("long").as("edit_dist"))
-        .orderBy("doc1", "doc2")
-    }
-
-    /** Sketch-side Jaccard ESTIMATE on the candidates — the cheap decision
-      * layer that picks which pairs earn d5's exact verify. Fraction of
-      * equal minhash components: integer-exact across engines. The
-      * signature relation feeds both the buckets and the estimate, so it
-      * is persisted across the two consumers. */
-    def d14_minhash_est(s: SparkSession, d: String): DataFrame = {
-      val sigs = graft.core.Caching.shared(
-        Dedup.minhashSignatures(Tables.documents(s, d), k = 4))
-      val cands = Dedup.lshCandidates(Dedup.lshBuckets(sigs, k = 4, rowsPerBand = 2),
-        maxBucketSize = lshCap)
-      Dedup.minhashEstimate(sigs, cands, k = 4)
-        .withColumn("jaccard_est", round(col("jaccard_est"), 4))
-        .orderBy("doc1", "doc2")
-    }
-
-    /** Word-trigram (n=3) Jaccard over the LSH candidates — the n-gram
-      * variant of d5's verify. Trigram sets punish token reorders that
-      * unigram Jaccard can't see (same bag, different order → near-zero
-      * trigram overlap), so the two scores bracket edit locality. Shares
-      * the candidate machinery: the corpus shingles once per n, the pair
-      * relation is LSH-bounded, never all-pairs. */
-    def d15_ngram_jaccard(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d)
-      val sigs = Dedup.minhashSignatures(docs, k = 4)
-      val cands = graft.core.Caching.shared(
-        Dedup.lshCandidates(Dedup.lshBuckets(sigs, k = 4, rowsPerBand = 2),
-          maxBucketSize = lshCap))
-      Dedup.jaccard(docs, cands, n = 3)
-        .withColumn("jaccard", round(col("jaccard"), 4))
-        .select("doc1", "doc2", "inter", "jaccard")
-        .orderBy("doc1", "doc2")
-    }
-
-    /** EXACT all-pairs similarity join via prefix filtering (AllPairs /
-      * PPJoin) at Jaccard ≥ 0.5 — the zero-false-negative sibling of the
-      * LSH path: candidates meet in a rarest-token prefix inverted index
-      * instead of minhash buckets, so the result is the complete ≥ 0.5
-      * pair set, deterministically. See
-      * [[graft.operators.Dedup.prefixFilterJoin]]. */
-    def d17_prefix_filter(s: SparkSession, d: String): DataFrame =
-      Dedup.prefixFilterJoin(Tables.documents(s, d), minJaccard = 0.5)
-        .withColumn("jaccard", round(col("jaccard"), 4))
-        .select("doc1", "doc2", "inter", "jaccard")
-        .orderBy("doc1", "doc2")
-
-    /** Directional containment over the LSH candidates — |A∩B|/|A| and
-      * |A∩B|/|B| (quote/superset detection: a doc mostly CONTAINED in a
-      * longer one scores near 10⁶ on its side while Jaccard stays low —
-      * the asymmetric near-dup relation d5's symmetric score misses).
-      * Shares the candidate machinery and the exact intersection fold;
-      * thresholds compare in integer micros. */
-    def d19_containment(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d)
-      val sigs = Dedup.minhashSignatures(docs, k = 4)
-      val cands = Dedup.lshCandidates(Dedup.lshBuckets(sigs, k = 4, rowsPerBand = 2),
-        maxBucketSize = lshCap)
-      Dedup.jaccard(docs, cands)
-        .select(col("doc1"), col("doc2"), col("inter"),
-          expr("inter * 1000000 div sz1").as("cont1_micro"),
-          expr("inter * 1000000 div sz2").as("cont2_micro"))
-        .filter(col("cont1_micro") >= 800000 || col("cont2_micro") >= 800000)
-        .orderBy("doc1", "doc2")
-    }
-
-    /** SimHash Hamming-ball near-dup pairs (pigeonhole band join + exact
-      * bit_count verify; signatures persisted across the three consumers).
-      * Two 8-bit bands / Hamming ≤ 1: wide enough band keys that buckets
-      * discriminate — the 4-bit-band variant measured 36× more candidate
-      * pairs on the shared-vocab corpus. */
-    def d7_simhash_pairs(s: SparkSession, d: String): DataFrame = {
-      val sigs = graft.core.Caching.shared(
-        Dedup.simhash(Tables.documents(s, d), bits = 16))
-      Dedup.simhashCandidates(sigs, bits = 16, bands = 2, maxHamming = 1)
-        .orderBy("doc1", "doc2")
-    }
-
-    /** Dedup grouping: LSH candidate pairs clustered into connected
-      * components — the keep-one-per-group step of a production dedup
-      * pipeline. group_id = the group's min doc_id (the canonical keeper). */
-    def d6_dedup_groups(s: SparkSession, d: String): DataFrame = {
-      val sigs = Dedup.minhashSignatures(Tables.documents(s, d), k = 4)
-      // persist: the symmetric-edge union inside components reads the pair
-      // relation twice — don't run the LSH pipeline twice for it
-      val cands = graft.core.Caching.shared(
-        Dedup.lshCandidates(Dedup.lshBuckets(sigs, k = 4, rowsPerBand = 2),
-          maxBucketSize = lshCap))
-      Dedup.components(cands).orderBy("doc_id")
-    }
-
-    /** Span-level (paragraph-analog) duplicate stats: 16-token spans,
-      * corpus-wide distinct-doc counts, per-doc boilerplate fraction. */
-    def d8_span_dedup(s: SparkSession, d: String): DataFrame =
-      Dedup.spanDupStats(Tables.documents(s, d), window = 16).orderBy("doc_id")
-
-    /** End-to-end near-dedup keep/drop decision over the whole corpus:
-      * LSH candidates → Jaccard ≥ 0.5 verify → components → keepers. */
-    def d12_near_dedup(s: SparkSession, d: String): DataFrame =
-      Dedup.nearDedupKeepers(Tables.documents(s, d), k = 4, rowsPerBand = 2,
-        minJaccard = 0.5, maxBucketSize = lshCap).orderBy("doc_id")
-
-    /** Exact duplicated-substring coverage: overlapping 8-token rolling-hash
-      * windows, corpus-wide repeat filter, per-doc interval union — docs
-      * with at least one duplicated passage and the token fraction it
-      * covers. */
-    def d11_substring_dup(s: SparkSession, d: String): DataFrame =
-      Dedup.substringDupCoverage(Tables.documents(s, d), window = 8).orderBy("doc_id")
-
-    /** N-gram NOVELTY rate per document — the ingest-order diagnostic
-      * (how much genuinely new content each arriving doc contributes):
-      * a 5-gram is novel for doc d iff NO lower-id doc carries it, i.e.
-      * d owns the gram's corpus-wide min doc_id. One gram census keyed
-      * on the 32-byte hash (the d8 discipline) + one join-back; the
-      * novelty compare is pure integers. */
-    /** CCNet-style LM perplexity gate — per-doc perplexity under the
-      * corpus-trained interpolated unigram/bigram model, keep decided on
-      * integer micro-nat sums (no float threshold boundary). See
-      * [[graft.operators.TextOps.perplexityFilter]]. */
-    def t41_perplexity(s: SparkSession, d: String): DataFrame =
-      TextOps.perplexityFilter(Tables.documents(s, d)).orderBy("doc_id")
-
-    def t40_novelty(s: SparkSession, d: String): DataFrame = {
-      val grams = graft.core.Caching.shared(
-        Tables.documents(s, d)
-          .select(col("doc_id"), Dedup.tokens(col("text")).as("__toks"))
-          .filter(size(col("__toks")) >= 5)
-          .select(col("doc_id"), explode(array_distinct(transform(
-            sequence(lit(1), size(col("__toks")) - 4),
-            i => PortableHash.hash32(
-              concat_ws(" ", slice(col("__toks"), i, lit(5))))))).as("g")))
-      val firstSeen = grams.groupBy("g").agg(min("doc_id").as("__first"))
-      grams.join(firstSeen, "g")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_grams"),
-          sum(when(col("doc_id") === col("__first"), 1L).otherwise(0L))
-            .as("n_novel"))
-        .withColumn("novelty_micro", expr("n_novel * 1000000 div n_grams"))
-        .orderBy("doc_id")
-    }
-
-    /** Cross-SOURCE contamination matrix — pairwise distinct-5-gram
-      * overlap between every pair of corpus sources (d9 resolves one
-      * benchmark against the corpus; this is the full provenance
-      * matrix that finds which feeds share pipelines/mirrors). The gram
-      * relation collapses to (source, gram) DISTINCT rows — vocabulary-
-      * sized per source — and the pair intersection is one gram-keyed
-      * self-join + count; source pair count is |sources|², never docs².
-      * Hashes, not raw grams, cross the shuffle (32 bytes/row). */
-    def t37_cross_contamination(s: SparkSession, d: String): DataFrame = {
-      val grams = graft.core.Caching.shared(
-        Tables.documents(s, d)
-          .select(col("source"), Dedup.tokens(col("text")).as("__toks"))
-          .filter(size(col("__toks")) >= 5)
-          .select(col("source"), explode(array_distinct(transform(
-            sequence(lit(1), size(col("__toks")) - 4),
-            i => PortableHash.hash32(
-              concat_ws(" ", slice(col("__toks"), i, lit(5))))))).as("g"))
-          .distinct())
-      grams.select(col("source").as("src1"), col("g"))
-        .join(grams.select(col("source").as("src2"), col("g")), "g")
-        .filter(col("src1") < col("src2"))
-        .groupBy("src1", "src2").agg(count(lit(1)).as("n_shared"))
-        .orderBy("src1", "src2")
-    }
-
-    /** Benchmark decontamination: distinct 5-gram overlap of every corpus
-      * doc against the `src0` slice standing in for an eval suite. */
-    def d9_contamination(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d)
-      Dedup.contamination(
-          docs.filter(col("source") =!= "src0"),
-          docs.filter(col("source") === "src0"), n = 5)
-        .orderBy("doc_id")
-    }
-
-    /** BPE merge-candidate counting — the first round of tokenizer
-      * training: corpus-wide counts of adjacent character pairs within
-      * words, top-15 by frequency (ties by pair). One explode chain into
-      * a map-side-combined count; each additional BPE round is the same
-      * query over re-segmented words. */
-    def t19_bpe_pairs(s: SparkSession, d: String): DataFrame = {
-      val words = Tables.documents(s, d)
-        .select(explode(Dedup.tokens(col("text"))).as("word"))
-        .filter(length(col("word")) >= 2)
-      val pairs = words.select(explode(transform(
-        sequence(lit(1), length(col("word")) - 1),
-        i => col("word").substr(i, lit(2)))).as("pair"))
-      pairs.groupBy("pair").agg(count(lit(1)).as("n"))
-        // top-15 via orderBy+limit (distributed TakeOrdered), THEN rank
-        // the 15 survivors — never a global window over the pair vocab
-        .orderBy(col("n").desc, col("pair")).limit(15)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("n").desc, col("pair"))))
-        .select("rank", "pair", "n")
-        .orderBy("rank")
-    }
-
-    /** PMI collocations: top-20 bigram associations, micro-nat integer
-      * scores, total tiebreak — see [[graft.operators.TextOps.collocations]]. */
-    def t23_collocations(s: SparkSession, d: String): DataFrame =
-      graft.operators.TextOps.collocations(Tables.documents(s, d))
-
-    /** Mixture resampling toward target domain weights under a global doc
-      * budget ([[graft.operators.TextOps.mixtureSample]]): weights
-      * src0:5 src1:3 src2:2 src3:1, budget 120. With 25 docs per source at
-      * sf0.01 this exercises both regimes — src0/src1 quotas (54/32)
-      * exceed availability so the whole domain passes and the shortfall
-      * stays visible, src2/src3 quotas (21/10) bind and the salted
-      * hash-rank picks the deterministic subset. */
-    def t24_mixture_sample(s: SparkSession, d: String): DataFrame =
-      TextOps.mixtureSample(Tables.documents(s, d),
-          Map("src0" -> 5L, "src1" -> 3L, "src2" -> 2L, "src3" -> 1L),
-          budget = 120L)
-        .select("doc_id", "source", "mix_rank", "mix_quota")
-        .orderBy("doc_id")
-
-    /** BM25 retrieval: the whole corpus ranked against a fixed 3-term
-      * query, top 20. Ranking key = the integer micro-unit score (ties by
-      * doc_id), so rank is replayable bit-for-bit; top-k goes through
-      * orderBy+limit (distributed TakeOrdered — no single-partition sort
-      * of the scored corpus), then the 20 survivors get rank numbers. */
-    def t20_bm25(s: SparkSession, d: String): DataFrame = {
-      val scored = TextOps.bm25(Tables.documents(s, d),
-        Seq("spark", "vector", "merge"))
-      scored.orderBy(col("score_micro").desc, col("doc_id").asc).limit(20)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score_micro").desc, col("doc_id").asc)))
-        .select(col("doc_id"), col("n_terms").cast("long").as("n_terms"),
-          col("bm25"), col("rank"))
-        .orderBy("rank")
-    }
-
-    /** Incremental BM25: build the statistics table from the even-id half
-      * of the corpus, MERGE-fold the odd-id half in as a batch
-      * ([[graft.operators.TextOps.bm25MergeStats]], the x13 machinery),
-      * then score with the MAINTAINED table. The oracle is the FULL
-      * recompute — hash equality proves batch-maintained stats ≡ rebuild,
-      * exactly (integer df/dl_total/n_docs; avgdl derived by one exact
-      * division on both sides). */
-    def t22_bm25_incremental(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d)
-      // the maintained table is STORED state in the real shape — pin it so
-      // the two broadcast consumers (corpus row, query-term df) read the
-      // materialized table instead of re-running the merge lineage each
-      // time. (The PRE-merge table's two consumers inside bm25MergeStats
-      // re-read the pinned tf relation, so pinning it too only adds a
-      // materialization barrier — measured, not guessed.)
-      val stats = graft.core.Caching.shared(graft.operators.TextOps.bm25MergeStats(
-        graft.operators.TextOps.bm25Stats(docs.filter(col("doc_id") % 2 === 0)),
-        docs.filter(col("doc_id") % 2 =!= 0)))
-      val scored = graft.operators.TextOps.bm25WithStats(docs, stats,
-        Seq("spark", "vector", "merge"))
-      scored.orderBy(col("score_micro").desc, col("doc_id").asc).limit(20)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score_micro").desc, col("doc_id").asc)))
-        .select(col("doc_id"), col("n_terms").cast("long").as("n_terms"),
-          col("bm25"), col("rank"))
-        .orderBy("rank")
-    }
-
-    /** Hybrid retrieval via reciprocal-rank fusion: dense ranker = brute
-      * cosine top-50 around query vector 0, lexical ranker = BM25 top-50
-      * for the fixed term query (doc ids and vec ids share the id space).
-      * Fusion is exact integer nano-unit arithmetic (see
-      * [[Similarity.rrfFuse]]); output = fused top 20 with consensus
-      * count. */
-    def e8_rrf(s: SparkSession, d: String): DataFrame = {
-      val emb = Tables.embeddings(s, d)
-      val dense = Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") === 0), k = 50)
-        .select(col("neighbor_id").as("id"), col("rank"))
-      val lexical = TextOps.bm25(Tables.documents(s, d), Seq("spark", "vector", "merge"))
-        .orderBy(col("score_micro").desc, col("doc_id").asc).limit(50)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score_micro").desc, col("doc_id").asc)))
-        .select(col("doc_id").as("id"), col("rank"))
-      Similarity.rrfFuse(Seq(dense, lexical))
-        .filter(col("rank") <= 20)
-        .select(col("id"), col("rrf_nano"), col("n_lists"), col("rank"))
-        .orderBy("rank")
-    }
-
-    /** Integer-exact k-means (2 Lloyd rounds, e7's fixed seeding) — the
-      * oracle-checkable sibling of e5's float clustering: micro-quantized
-      * vectors, BIGINT distance folds, floor(Σ/n) centroid updates. The
-      * full trajectory replays bit-for-bit in DuckDB, so the clustering
-      * itself (not just fixed-centroid probes) is hash-checked. See
-      * [[graft.operators.Similarity.kmeansExact]]. */
-    def e12_kmeans_exact(s: SparkSession, d: String): DataFrame = {
-      val q = Tables.embeddings(s, d)
-        .select(col("vec_id"), Similarity.quantizeMicro(col("embedding")).as("qv"))
-      val init = q.filter(col("vec_id") % 37 === 0 && col("vec_id") < 260)
-        .select((col("vec_id") / 37).cast("int").as("cid"), col("qv").as("c"))
-      Similarity.kmeansExact(q, init, iters = 2).orderBy("vec_id")
-    }
-
-    /** PQ codebook TRAINING (e9/e10 use fixed codebooks; this learns
-      * them): integer Lloyd per 16-dim subspace, all four codebooks in
-      * the same two jobs per round. Output is each vector's
-      * trained-codebook code word per subspace — the full trajectory
-      * replays in SQL. See [[graft.operators.Similarity.pqTrain]]. */
-    def e13_pq_train(s: SparkSession, d: String): DataFrame = {
-      val q = Tables.embeddings(s, d)
-        .select(col("vec_id"), Similarity.quantizeMicro(col("embedding")).as("qv"))
-      val init = q.filter(col("vec_id") % 37 === 0 && col("vec_id") < 148)
-        .select((col("vec_id") / 37).cast("int").as("cid"),
-          posexplode(array((0 until 4).map(s1 =>
-            slice(col("qv"), s1 * 16 + 1, 16)): _*)).as(Seq("sub", "c")))
-        .select(col("sub"), col("cid"), col("c"))
-      Similarity.pqTrain(q, m = 4, dsub = 16, init = init, iters = 2)
-        .orderBy("vec_id", "sub")
-    }
-
-    /** Cluster-quality evaluation — per-cluster purity of e12's exact
-      * k-means assignment against the embedding `label` column: the
-      * metrology a clustering deployment runs before trusting its
-      * partitions (and the unsupervised twin of x32's classifier eval).
-      * One (cid, label) census feeds sizes AND majority labels; ties on
-      * the majority count go to the smallest label via a struct-max
-      * (never a window sort); purity is a single integer division. */
-    def e19_cluster_purity(s: SparkSession, d: String): DataFrame = {
-      val emb = Tables.embeddings(s, d)
-      val q = emb.select(col("vec_id"), Similarity.quantizeMicro(col("embedding")).as("qv"))
-      val init = q.filter(col("vec_id") % 37 === 0 && col("vec_id") < 260)
-        .select((col("vec_id") / 37).cast("int").as("cid"), col("qv").as("c"))
-      val assigned = Similarity.kmeansExact(q, init, iters = 2).select("vec_id", "cid")
-      val census = graft.core.Caching.shared(
-        assigned.join(emb.select(col("vec_id"), col("label")), "vec_id")
-          .groupBy("cid", "label").agg(count(lit(1)).as("c")))
-      val top = census
-        .groupBy("cid")
-        .agg(max(struct(col("c"), (-col("label")).as("__nl"))).as("__m"))
-        .select(col("cid"), col("__m.c").as("top_cnt"), (-col("__m.__nl")).as("top_label"))
-      census.groupBy("cid").agg(sum("c").as("n"))
-        .join(top, "cid")
-        .select(col("cid"), col("n"), col("top_label"), col("top_cnt"),
-          expr("top_cnt * 1000000 div n").as("purity_micro"))
-        .orderBy("cid")
-    }
-
-    /** Principal component of the embedding corpus — integer-exact power
-      * iteration over the micro-quantized scatter matrix (3 rounds, L∞
-      * gauge): the whitening/drift-analysis primitive, with covariance
-      * build, matrix-vector products, and normalizations all replaying
-      * bit-for-bit in SQL. See
-      * [[graft.operators.Similarity.pcaPower]]. */
-    def e14_pca_power(s: SparkSession, d: String): DataFrame = {
-      val q = Tables.embeddings(s, d)
-        .select(col("vec_id"), Similarity.quantizeMicro(col("embedding")).as("qv"))
-      Similarity.pcaPower(q, iters = 3).orderBy("dim")
-    }
-
-    /** All-but-the-top post-processing — every embedding's projection
-      * onto e14's principal component removed, exact residual norms (the
-      * isotropization step before similarity search). See
-      * [[graft.operators.Similarity.abttResiduals]]. */
-    def e20_abtt(s: SparkSession, d: String): DataFrame = {
-      val q = Tables.embeddings(s, d)
-        .select(col("vec_id"), Similarity.quantizeMicro(col("embedding")).as("qv"))
-      Similarity.abttResiduals(q, Similarity.pcaPower(q, iters = 3))
-        .orderBy("vec_id")
-    }
-
-    /** Closeness centrality of 5 seed docs over the synthetic doc graph —
-      * multi-source BFS in shared rounds (one shuffle per round covers
-      * ALL seeds), then one aggregate: reach, distance mass, and
-      * closeness = (reach−1)·10⁶ div Σdist over ≤ 4-hop paths. See
-      * [[graft.operators.Graph.multiSourceBfs]]. */
-    def g14_closeness(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d).select("doc_id")
-      val n = docs.agg(count(lit(1)).as("__n"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"),
-          explode(array((col("doc_id") * 31 + 7) % col("__n"),
-            (col("doc_id") * 17 + 3) % col("__n"))).as("dst"))
-      val seeds = docs.filter(col("doc_id") < 5).select(col("doc_id").as("seed"))
-      graft.operators.Graph.multiSourceBfs(edges, seeds, rounds = 4)
-        .groupBy("seed")
-        .agg(count(lit(1)).as("n_reached"), sum("dist").as("dist_sum"))
-        .select(col("seed"), col("n_reached"), col("dist_sum"),
-          when(col("dist_sum") === 0, 0L)
-            .otherwise(expr("(n_reached - 1) * 1000000 div dist_sum"))
-            .as("closeness_micro"))
-        .orderBy("seed")
-    }
-
-    /** Count-Min sketch over the token stream + point queries for the 30
-      * most frequent terms, est vs exact side by side (the e11 metrology
-      * discipline: the error column itself is part of the gate —
-      * overcount is provably ≥ 0, never under). Width 4×8 is sized to the
-      * synthetic corpus's 31-term vocabulary so collisions — the thing
-      * the min-over-rows exists for — actually occur; production widths
-      * scale the same plan, shuffling ≤ depth·width cells per partition
-      * regardless of vocabulary size. See
-      * [[graft.operators.Sketch.countMin]]. */
-    def t29_count_min(s: SparkSession, d: String): DataFrame = {
-      val toks = graft.core.Caching.shared(
-        Tables.documents(s, d).select(explode(Dedup.tokens(col("text"))).as("term")))
-      val sketch = graft.operators.Sketch.countMin(toks, "term", depth = 4, width = 8)
-      val probes = toks.groupBy("term").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("term").asc).limit(30)
-      graft.operators.Sketch.countMinLookup(sketch, probes, "term", depth = 4, width = 8)
-        .withColumn("overcount", col("est") - col("cnt"))
-        .orderBy(col("cnt").desc, col("term").asc)
-    }
-
-    /** HITS hubs & authorities over the same synthetic citation graph as
-      * g4 (two fixed iterations, exact integer arithmetic, L∞
-      * normalization — the top hub/authority pins at exactly 10⁶). See
-      * [[graft.operators.Graph.hits]]. */
-    def g9_hits(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d).select("doc_id")
-      val n = docs.agg(count(lit(1)).as("__n"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"),
-          explode(array((col("doc_id") * 31 + 7) % col("__n"),
-            (col("doc_id") * 17 + 3) % col("__n"))).as("dst"))
-      graft.operators.Graph.hits(edges, iters = 2)
-        .select(col("id").as("doc_id"), col("hub"), col("auth"))
-        .orderBy("doc_id")
-    }
-
-    /** Exact integer covariance/variance numerators per group — the
-      * distributed one-pass sufficient-statistics form (n·Σxy − Σx·Σy =
-      * n²·covar_pop): five map-side-combined sums, one exchange, zero
-      * floats, so accumulation order can never perturb the result.
-      * Price rides in integral hundreds to keep every product inside
-      * BIGINT through sf1-class cardinalities; a 100 TB deployment lifts
-      * the same expressions to DECIMAL(38,0) unchanged. */
-    def x21_covariance(s: SparkSession, d: String): DataFrame =
-      Tables.lineitem(s, d)
-        .select(col("l_returnflag"),
-          col("l_quantity").cast("long").as("x"),
-          floor(col("l_extendedprice") / 100).cast("long").as("y"))
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
-          sum(col("x") * col("y")).as("sxy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y") * col("y")).as("syy"))
-        .select(col("l_returnflag"), col("n"),
-          (col("n") * col("sxy") - col("sx") * col("sy")).as("covar_num"),
-          (col("n") * col("sxx") - col("sx") * col("sx")).as("varx_num"),
-          (col("n") * col("syy") - col("sy") * col("sy")).as("vary_num"))
-        .orderBy("l_returnflag")
-
-    /** Equal-frequency (quantile) binning of a numeric feature — the ML
-      * preprocessing transform (decile features, WoE binning): 10 bins
-      * whose boundaries are exact order statistics, each bin reporting
-      * its value range and population. The global rank uses the x36
-      * bucket-offset shape (range buckets + per-bucket windows +
-      * broadcast cumulative offsets — never a single-partition window);
-      * bin = (rank−1)·10 div n. Deterministic under ties (value, then
-      * key), so bin populations are exact on both engines. */
-    def x42_quantile_binning(s: SparkSession, d: String): DataFrame = {
-      val v = li(s, d).select(col("l_orderkey"), col("l_linenumber"),
-        floor(col("l_extendedprice") * 100 + lit(0.5)).cast("long").as("cents"))
-      val ranked = graft.operators.Ranks.globalRank(v, col("cents"),
-        Seq(col("l_orderkey"), col("l_linenumber")), expr("cents div 100000"))
-      val n = v.agg(count(lit(1)).as("__n"))
-      ranked
-        .crossJoin(broadcast(n))
-        .withColumn("bin", expr("(__rank - 1) * 10 div __n"))
-        .groupBy("bin")
-        .agg(min("cents").as("lo_cents"), max("cents").as("hi_cents"),
-          count(lit(1)).as("n_rows"))
-        .orderBy("bin")
-    }
-
-    /** Recall@k CURVE of the LSH ranker — e11 resolved at k = 1, 3, 5 in
-      * one pass (the operating-curve view an ANN deployment tunes
-      * against, not a single point): per (query, k) hits over the same
-      * two rankers, rank columns gate membership. All relations are
-      * queries×k-sized; one bounded explode per side. */
-    def e23_recall_curve(s: SparkSession, d: String): DataFrame = {
-      val ks = Seq(1, 3, 5)
-      val truth = graft.core.Caching.shared(e1_knn_brute(s, d)
-        .select(col("query_id"), col("neighbor_id"), col("rank")))
-      val approx = graft.core.Caching.shared(e2_knn_lsh(s, d)
-        .select(col("query_id"), col("neighbor_id"), col("rank").as("arank")))
-      val kdf = explode(array(ks.map(lit): _*)).as("k")
-      truth.select(col("query_id"), col("neighbor_id"), col("rank"), kdf)
-        .filter(col("rank") <= col("k"))
-        .join(approx.withColumn("__hit", lit(1L)),
-          Seq("query_id", "neighbor_id"), "left")
-        // found-but-beyond-k counts as a MISS at that k, not a dropped row
-        .withColumn("__h2",
-          when(col("__hit").isNotNull && col("arank") <= col("k"), 1L)
-            .otherwise(0L))
-        .groupBy("query_id", "k")
-        .agg(count(lit(1)).as("n_true"), sum("__h2").as("n_hits"))
-        .withColumn("recall_micro", expr("n_hits * 1000000 div n_true"))
-        .orderBy("query_id", "k")
-    }
-
-    /** Rolling (windowed) median — the robust smoother over each user's
-      * last 5 observations (outlier-resistant trend lines, sensor
-      * despiking). Spark has no native windowed median: collect the ROWS
-      * frame, sort, take the LOWER median (element ⌈n/2⌉ — integer-exact
-      * and engine-identical, unlike the interpolated even-n form). Frame
-      * state is ≤ 5 values per row; the window is user-keyed. */
-    def w6_rolling_median(s: SparkSession, d: String): DataFrame = {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        .rowsBetween(-4, Window.currentRow)
-      Tables.events(s, d).filter(col("user_id") < 20)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          floor(col("value")).cast("long").as("v"))
-        .withColumn("__fr", sort_array(collect_list("v").over(w)))
-        .select(col("event_id"), col("user_id"), col("v"),
-          element_at(col("__fr"),
-            expr("CAST((size(__fr) + 1) div 2 AS INT)")).as("med5"))
-        .orderBy("event_id")
-    }
-
-    /** Watermark-lateness audit — for each event, how far behind the
-      * stream's high-water mark (max event time seen over earlier
-      * ARRIVALS — event_id is the arrival order) it arrived, and what a
-      * 1-hour watermark would therefore drop: the sizing analysis run
-      * BEFORE picking a Structured Streaming watermark. The global
-      * running max never uses a single-partition window — the x36/x42
-      * bucket shape: per-bucket running maxes + a broadcast cumulative
-      * bucket-prefix table. Integer seconds; first arrival is 0 late. */
-    def x45_watermark_audit(s: SparkSession, d: String): DataFrame = {
-      val ev = graft.core.Caching.shared(Tables.events(s, d)
-        .select(col("event_id"), col("event_type"), col("ts"),
-          expr("event_id div 1000").as("__b")))
-      val pre = ev.groupBy("__b").agg(max("ts").as("__bm"))
-        .withColumn("__pre", max("__bm").over(Window.orderBy("__b")
-          .rowsBetween(Window.unboundedPreceding, -1)))
-        .select("__b", "__pre")
-      val wb = Window.partitionBy("__b").orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      ev.join(broadcast(pre), "__b")
-        .withColumn("__hwm", greatest(
-          coalesce(max("ts").over(wb), col("__pre"), col("ts")),
-          coalesce(col("__pre"), col("ts"))))
-        .withColumn("__late_sec",
-          greatest(expr("(unix_micros(__hwm) - unix_micros(ts)) div 1000000"),
-            lit(0L)))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("__late_sec") > 3600, 1L).otherwise(0L)).as("n_dropped_1h"),
-          max("__late_sec").as("max_late_sec"))
-        .orderBy("event_type")
-    }
-
-    /** Pareto concentration (the 80/20 readout) — the minimal number of
-      * top customers whose revenue reaches 80% of the total. Ranks
-      * DESCEND via [[graft.operators.Ranks.globalRank]] on the negated
-      * value (bucket stays monotone); the global running sum extends the
-      * same two-pass shape — per-bucket window cumsums + a broadcast
-      * cumulative bucket-sum prefix — so no single-partition window
-      * appears at any size. The 80% compare is integer
-      * cross-multiplication (5·cum ≥ 4·total). */
-    def x50_pareto(s: SparkSession, d: String): DataFrame = {
-      val rev = Tables.orders(s, d).groupBy("o_custkey")
-        .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long")).as("cents"))
-        .withColumn("__neg", -col("cents"))
-      val ranked = graft.core.Caching.shared(
-        graft.operators.Ranks.globalRank(rev, col("__neg"),
-          Seq(col("o_custkey")), expr("__neg div 1000000")))
-      val bsums = ranked.groupBy(expr("__neg div 1000000").as("__sb"))
-        .agg(sum("cents").as("__bs"))
-        .withColumn("__pre", coalesce(
-          sum("__bs").over(Window.orderBy("__sb")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("__sb", "__pre")
-      val wb = Window.partitionBy(expr("__neg div 1000000"))
-        .orderBy(col("__neg"), col("o_custkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ranked
-        .join(broadcast(bsums), expr("__neg div 1000000") === col("__sb"))
-        .withColumn("__cum", sum("cents").over(wb) + col("__pre"))
-        .crossJoin(broadcast(ranked.agg(sum("cents").as("__tot"),
-          count(lit(1)).as("__n"))))
-        .agg(max("__n").as("n_customers"), max("__tot").as("total_cents"),
-          min(when(col("__cum") * 5 >= col("__tot") * 4, col("__rank")))
-            .as("k_80"))
-    }
-
-    /** Population-stability-index drift report — THE ML-monitoring
-      * metric between a feature's two epochs: per-bin
-      * (p_A − p_B)·ln(p_A/p_B) with add-one smoothing (zero-count bins
-      * stay finite), fixed equal-width bins (the a4 histogram lattice in
-      * cents, integer-div binning), epochs split at 1997-06-01. One
-      * conditional aggregate computes both epoch counts; totals ride as
-      * a 1-row broadcast; PSI = Σ of the per-bin column. Smoothed
-      * probabilities are single exact-int divisions evaluated once in
-      * IEEE doubles — deterministic cross-engine (the bm25 float
-      * discipline). */
-    def x44_psi_drift(s: SparkSession, d: String): DataFrame = {
-      val split = "1997-06-01"
-      val lo = 90000L; val w = 1041000L // 10 bins over [0.9k, 105k] dollars
-      val cnt = li(s, d).select(
-          (col("l_shipdate") < lit(split)).as("__a"),
-          least(greatest(
-            expr(s"(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) - $lo) div $w"),
-            lit(0L)), lit(9L)).as("bin"))
-        .groupBy("bin").agg(
-          sum(when(col("__a"), 1L).otherwise(0L)).as("n_a"),
-          sum(when(!col("__a"), 1L).otherwise(0L)).as("n_b"))
-      val tot = cnt.agg(sum("n_a").as("__na"), sum("n_b").as("__nb"))
-      cnt.crossJoin(broadcast(tot))
-        .withColumn("__pa", (col("n_a") + 1).cast("double") / (col("__na") + 10))
-        .withColumn("__pb", (col("n_b") + 1).cast("double") / (col("__nb") + 10))
-        .select(col("bin"), col("n_a"), col("n_b"),
-          floor((col("__pa") - col("__pb")) * log(col("__pa") / col("__pb"))
-            * 1e6 + 0.5).cast("long").as("psi_term_micro"))
-        .orderBy("bin")
-    }
-
-    /** Gini coefficient of per-customer revenue — the inequality/skew
-      * diagnostic (applied to tokens-per-source it measures corpus
-      * concentration; here revenue concentration). Exact integers: cent
-      * revenue, G = (2Σi·xᵢ − (n+1)Σx)/(n·Σx) over the ascending rank i.
-      * The GLOBAL rank never uses a single-partition window: values
-      * bucket by range (monotone in the value), ranks are per-bucket
-      * windows plus cumulative bucket offsets — the two-pass
-      * zipWithIndex shape, declaratively; the offset table is |buckets|
-      * rows and broadcasts. The final division lifts to DECIMAL(38)
-      * (numerator ≈ 2·Σi·x·10⁶ exceeds 2⁶³ by design). */
-    def x36_gini(s: SparkSession, d: String): DataFrame = {
-      val rev = Tables.orders(s, d).groupBy("o_custkey")
-        .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long")).as("cents"))
-      graft.operators.Ranks.globalRank(rev, col("cents"), Seq(col("o_custkey")),
-          expr("cents div 1000000"))
-        .agg(count(lit(1)).as("n"), sum("cents").as("total_cents"),
-          sum(col("__rank") * col("cents")).as("__s2"))
-        .withColumn("__num",
-          (col("__s2").cast("decimal(38,0)") * 2 -
-            (col("n") + 1) * col("total_cents").cast("decimal(38,0)")) * lit(1000000L))
-        .withColumn("__den", col("n") * col("total_cents").cast("decimal(38,0)"))
-        .select(col("n"), col("total_cents"),
-          when(col("__den") === 0, 0L)
-            .otherwise(expr("__num div __den")).as("gini_micro"))
-    }
-
-    /** Content-defined chunking + chunk-level dedup census — the
-      * insertion-robust dedup granularity (rsync/FastCDC boundaries from
-      * rolling content hashes, so an inserted token disturbs one chunk,
-      * not every downstream window). See
-      * [[graft.operators.Dedup.cdcChunkStats]]. */
-    def d16_cdc_chunks(s: SparkSession, d: String): DataFrame =
-      Dedup.cdcChunkStats(Tables.documents(s, d), window = 4, mask = 16)
-        .orderBy("doc_id")
-
-    /** Sparse VSM retrieval — rank the corpus against doc 0's TF-IDF
-      * vector by integer sparse dot product (the DSIR
-      * similarity-to-seed-corpus shape). See
-      * [[graft.operators.TextOps.sparseRetrieval]]. */
-    def t30_sparse_retrieval(s: SparkSession, d: String): DataFrame =
-      TextOps.sparseRetrieval(Tables.documents(s, d), queryDocId = 0L, k = 20)
-        .orderBy("rank")
-
-    /** Zone-map data skipping — the planning-time pruning a 100 TB scan
-      * lives on: per-bucket min/max statistics (the parquet row-group /
-      * Iceberg manifest shape) decide which buckets a date-range
-      * predicate can touch; `n_match` proves soundness (pruned ⇒ zero
-      * matching rows). The stats build is one map-side-combined
-      * aggregate; the decision is a scalar comparison per bucket row. */
-    def x24_zonemap_prune(s: SparkSession, d: String): DataFrame = {
-      val lo = lit("1997-01-01")
-      val hi = lit("1997-12-31")
-      Tables.orders(s, d)
-        .select(expr("o_orderkey div 1024").as("bucket"),
-          col("o_orderdate"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n_rows"),
-          min("o_orderdate").as("min_date"), max("o_orderdate").as("max_date"),
-          sum(when(col("o_orderdate") >= lo && col("o_orderdate") <= hi, 1L)
-            .otherwise(0L)).as("n_match"))
-        .select(col("bucket"), col("n_rows"), col("n_match"),
-          (col("max_date") >= lo && col("min_date") <= hi).cast("int")
-            .as("survives"))
-        .orderBy("bucket")
-    }
-
-    /** HLL register table over the distinct-orderkey stream — the
-      * oracle-checkable sibling of x1's opaque built-in sketch: portable
-      * md5 hash, bin()-based rank arithmetic, 64 max-registers that
-      * replay bit-for-bit in SQL. The float estimator stays driver-side
-      * post-processing over these 64 integers. See
-      * [[graft.operators.Sketch.hllRegisters]]. */
-    def x23_hll_registers(s: SparkSession, d: String): DataFrame =
-      graft.operators.Sketch.hllRegisters(
-        Tables.lineitem(s, d).select(col("l_orderkey").cast("string").as("k")),
-        "k", m = 64)
-        .orderBy("bucket")
-
-    /** HLL register MERGEABILITY, hash-proven — per-returnflag register
-      * tables max-merge into exactly the whole-corpus register table:
-      * the property that lets a lake keep per-partition sketches and
-      * answer any union cardinality without rescanning. The per-group
-      * build costs the same two jobs as one sketch (the group key rides
-      * in the aggregate); the merge is a 64·|groups|-row fold. See
-      * [[graft.operators.Sketch.hllRegistersBy]]. */
-    def x40_hll_merge(s: SparkSession, d: String): DataFrame = {
-      val src = graft.core.Caching.shared(li(s, d)
-        .select(col("l_returnflag").as("grp"),
-          col("l_orderkey").cast("string").as("k")))
-      val merged = graft.operators.Sketch.hllRegistersBy(src, "grp", "k", m = 64)
-        .groupBy("bucket").agg(max("register").as("merged_register"))
-      graft.operators.Sketch.hllRegisters(src.select("k"), "k", m = 64)
-        .withColumnRenamed("register", "global_register")
-        .join(merged, Seq("bucket"), "left")
-        .na.fill(0, Seq("merged_register"))
-        .orderBy("bucket")
-    }
-
-    /** Consecutive-duplicate collapse (debounce) — the event-stream
-      * hygiene pass that drops an event repeating its user's immediately
-      * previous type (double-click/retry noise) before any funnel or
-      * transition analysis. One user-keyed window (lag compare), then a
-      * per-user census. */
-    def x41_debounce(s: SparkSession, d: String): DataFrame = {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      Tables.events(s, d)
-        .withColumn("__prev", lag("event_type", 1).over(w))
-        .withColumn("__keep",
-          when(col("__prev").isNull || col("__prev") =!= col("event_type"), 1L)
-            .otherwise(0L))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"), sum("__keep").as("n_kept"))
-        .orderBy("user_id")
-    }
-
-    /** Small-file compaction planning over a synthetic file catalog
-      * (deterministic pseudo-sizes from the part table): sequential
-      * greedy packing into 64 KB rewrite bins, one window cumsum per
-      * partition directory — the lakehouse maintenance work list. See
-      * [[graft.operators.Compaction]]. */
-    def x22_compaction_plan(s: SparkSession, d: String): DataFrame = {
-      val files = Tables.part(s, d).select(
-        col("p_brand").as("dir"), col("p_partkey").as("file"),
-        (col("p_size") * 1000 + col("p_partkey") % 977).cast("long").as("bytes"))
-      graft.operators.Compaction.plan(files, targetBytes = 64000L)
-        .orderBy("dir", "bin")
-    }
-
-    /** S4/S5/K1 in the hash-checked ledger — the GeoTIFF CODEC round
-      * trip, oracled via the m5 fixture recipe: per (asset, codec leg) a
-      * formula-valued 24×24 raster (2×2 tiles of 16 — padding exercised)
-      * is ENCODED through the real `GeoTiff.Writer` (K1) and re-DECODED
-      * through the real IFD parse + tile read (S4/S5), and the decoded
-      * pixels fold to position-weighted integer sums the oracle computes
-      * straight from the generating formula. Sixteen legs cover the
-      * codec matrix: uint16+DEFLATE, uint8 raw, NBITS=4 bit-packing,
-      * CCITT-G4 bilevel, float32 (SampleFormat=IEEE, integer-valued ⇒
-      * exact), int16 (signed narrow), LZW (the common public-file codec),
-      * PackBits RLE, LZW+predictor-2 horizontal differencing, a
-      * forced-BigTIFF container (magic 43, 8-byte offsets), a STRIPPED
-      * layout (unpadded last strip) through the strip writer, a 2-band
-      * PIXEL-INTERLEAVED (chunky, PlanarConfiguration=1) plane with
-      * predictor 2 (per-component lag), a SPARSE_OK file
-      * (tile.py:65) whose 3 all-nodata tiles become unallocated holes
-      * the reader refills, a COG (head-first IFD chain, asserted on the
-      * raw header bytes), ZSTD (tag 50000, via Spark's own zstd-jni),
-      * and new-style JPEG (tag 7) with per-8×8-block-constant pixels —
-      * flat DCT blocks are DC-only at quantization step 1, so even the
-      * lossy codec round-trips bit-exactly and stays hash-checkable.
-      * Encode/decode run inside `mapPartitions`
-      * (the multimodal discipline — codecs never in expressions); temp
-      * files are per-task and deleted in `finally`. Any bit the codec
-      * chain drops or shifts breaks the wsum hash. */
-    def s5_tiff_roundtrip(s: SparkSession, d: String): DataFrame = {
-      import s.implicits._
-      import graft.sources.GeoTiff
-      val W = 24; val T = 16
-      val legs = Seq("ccitt1", "f32", "i16", "nbits4", "rgb_jpeg", "u16_big",
-        "u16_chunky2", "u16_cog", "u16_deflate", "u16_lzw", "u16_lzw_pred2",
-        "u16_sparse", "u16_zstd", "u8_jpeg", "u8_packbits", "u8_raw",
-        "u8_stripped")
-      Tables.part(s, d)
-        .filter(col("p_partkey") <= 12)
-        .select(col("p_partkey").cast("long").as("asset_id")).as[Long]
-        .repartition(4)
-        .mapPartitions { ids =>
-          ids.flatMap { a =>
-            legs.map { leg =>
-              def v(b: Int, x: Int, y: Int): Double = leg match {
-                case "u16_deflate"   => ((7 * a + 3 * x + 5 * y) % 60000).toDouble
-                case "u8_raw"        => ((a + x * y) % 256).toDouble
-                case "nbits4"        => ((3 * x + 5 * y + 7 * a) % 16).toDouble
-                case "ccitt1"        => ((x + y + a) % 2).toDouble
-                case "f32"           => (a * 100 + x - y).toDouble
-                case "i16"           => (((x * y + a) % 200) - 100).toDouble
-                case "u16_lzw"       => ((11 * a + 3 * x + 7 * y) % 60000).toDouble
-                case "u16_lzw_pred2" => ((5 * a + 2 * x + 3 * y) % 60000).toDouble
-                case "u8_packbits"   => ((a + 2 * x + y) % 256).toDouble
-                case "u16_big"       => ((9 * a + x + 13 * y) % 60000).toDouble
-                case "u8_stripped"   => ((3 * a + x + 2 * y) % 256).toDouble
-                case "u16_chunky2"   => ((b * 1000 + 5 * a + 2 * x + 3 * y) % 60000).toDouble
-                // data only in the (0,0) tile quadrant; everything else is
-                // the nodata 42 -> 3 of 4 tiles become SPARSE_OK holes
-                case "u16_sparse"    =>
-                  if (x < 16 && y < 16) ((13 * a + 4 * x + 9 * y) % 60000).toDouble
-                  else 42.0
-                case "u16_zstd"      => ((17 * a + 6 * x + 11 * y) % 60000).toDouble
-                case "u16_cog"       => ((19 * a + 8 * x + 5 * y) % 60000).toDouble
-                // constant per 8x8 DCT block ⇒ baseline JPEG at max quality
-                // round-trips EXACTLY (flat blocks are DC-only, q-step 1)
-                case "u8_jpeg"       => ((31 * a + 5 * (x / 8) + 11 * (y / 8)) % 256).toDouble
-                // 3-band YCbCr color JPEG: GRAY flat blocks (r=g=b) are
-                // exact — Cb=Cr=128 survives the color transform
-                case "rgb_jpeg"      => ((29 * a + 5 * (x / 8) + 7 * (y / 8)) % 256).toDouble
-              }
-              def prof(dt: String, defl: Boolean = true, nb: Option[Int] = None,
-                       cc: Boolean = false) =
-                GeoTiff.Profile(W, W, 1, dt, T, T, None, 4326, 0.0, 0.0, 1.0, 1.0,
-                  deflate = defl, nbits = nb, ccitt = cc)
-              val p = leg match {
-                case "u16_deflate"   => prof("uint16")
-                case "u8_raw"        => prof("uint8", defl = false)
-                case "nbits4"        => prof("uint8", nb = Some(4))
-                case "ccitt1"        => prof("uint8", nb = Some(1), cc = true)
-                case "f32"           => prof("float32")
-                case "i16"           => prof("int16")
-                case "u16_lzw"       => prof("uint16", defl = false).copy(lzw = true)
-                case "u16_lzw_pred2" =>
-                  prof("uint16", defl = false).copy(lzw = true, predictor = 2)
-                case "u8_packbits"   => prof("uint8", defl = false).copy(packbits = true)
-                case "u16_big"       => prof("uint16")
-                // stripped: full-width strips of T rows, last strip short
-                case "u8_stripped"   =>
-                  prof("uint8", defl = false).copy(tileWidth = W, lzw = true)
-                // chunky: 2 bands pixel-interleaved + predictor 2
-                case "u16_chunky2"   => prof("uint16").copy(bands = 2, predictor = 2)
-                case "u16_sparse"    => prof("uint16").copy(noData = Some(42.0))
-                case "u16_zstd"      => prof("uint16", defl = false).copy(zstd = true)
-                case "u16_cog"       => prof("uint16")
-                case "u8_jpeg"       => prof("uint8", defl = false).copy(jpeg = true)
-                case "rgb_jpeg"      => prof("uint8", defl = false)
-                  .copy(jpeg = true, bands = 3, photometric = Some("YCBCR"))
-              }
-              val f = java.io.File.createTempFile(s"graft_s5_${a}_$leg", ".tif")
-              try {
-                val w = new GeoTiff.Writer(f.getAbsolutePath, p,
-                  bigtiff = leg == "u16_big",
-                  stripped = leg == "u8_stripped",
-                  pixelInterleave = leg == "u16_chunky2" || leg == "rgb_jpeg",
-                  sparse = leg == "u16_sparse",
-                  cogLayout = leg == "u16_cog")
-                val tw = p.tileWidth; val th = p.tileHeight
-                // tile pad (gx/gy >= W) stores the leg's fill: 42 for the
-                // sparse leg (so all-nodata tiles stay holes), else 0
-                val pad = if (leg == "u16_sparse") 42.0 else 0.0
-                def plane(b: Int, tr: Int, tc: Int): Array[Double] =
-                  Array.tabulate(tw * th) { i =>
-                    val gx = tc * tw + i % tw; val gy = tr * th + i / tw
-                    if (gx < W && gy < W) v(b, gx, gy) else pad
-                  }
-                for (tr <- 0 until p.tilesDown; tc <- 0 until p.tilesAcross)
-                  if (leg == "u16_chunky2" || leg == "rgb_jpeg")
-                    w.writeTileInterleaved(tr, tc,
-                      (1 to p.bands).map(b => plane(b, tr, tc)))
-                  else w.writeTile(1, tr, tc, plane(1, tr, tc))
-                w.close()
-                val t = GeoTiff.open(f.getAbsolutePath)
-                // the sparse leg must actually produce holes — 3 of the 4
-                // tiles are all-42; a silent dense write would still hash
-                // right, so assert the layout too
-                if (leg == "u16_sparse")
-                  require(t.tileCounts.count(_ == 0L) == 3,
-                    s"expected 3 sparse holes, got ${t.tileCounts.toSeq}")
-                // the COG leg must actually be head-first — a plain
-                // IFD-last file would still hash right
-                if (leg == "u16_cog") {
-                  val hraf = new java.io.RandomAccessFile(f, "r")
-                  val hd = new Array[Byte](8); hraf.readFully(hd); hraf.close()
-                  val fi = java.nio.ByteBuffer.wrap(hd, 4, 4)
-                    .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt & 0xffffffffL
-                  require(fi == 8L, s"COG leg first IFD at $fi, expected 8")
-                }
-                var sum = 0L; var wsum = 0L
-                for (band <- 1 to t.profile.bands;
-                     tr <- 0 until t.profile.tilesDown;
-                     tc <- 0 until t.profile.tilesAcross) {
-                  val px = t.readTile(band, tr, tc)
-                  var i = 0
-                  while (i < px.length) {
-                    val gx = tc * tw + i % tw; val gy = tr * th + i / tw
-                    if (gx < W && gy < W) {
-                      val lv = px(i).toLong
-                      sum += lv; wsum += lv * (gx + W.toLong * gy)
-                    }
-                    i += 1
-                  }
-                }
-                (a, leg, sum, wsum)
-              } finally f.delete()
-            }
-          }
-        }
-        .toDF("asset_id", "leg", "sum_v", "wsum_v")
-        .orderBy("asset_id", "leg")
-    }
-
-    /** S4 gdalinfo-JSON twin (`utils/gdal.py:170-238`): write one
-      * deterministic uint16 raster per asset inside executor tasks, run
-      * [[graft.sources.GeoTiffSpark.fetchMetadata]] with `-stats -mm` and
-      * `-hist`, and extract the fields the reference's `get_metadata`
-      * parses — size, band dtype (GDAL spelling), exact nodata-excluded
-      * min/max, valid count and exact sum (recovered from mean·n), the
-      * 256-bucket histogram envelope and its occupied-bucket count — all
-      * replayed by the oracle in closed form from the generating formula.
-      * The JSON itself is pulled apart with Spark's native
-      * `get_json_object`/`from_json`, so the document SHAPE is also under
-      * test, not just the numbers. */
-    def s4_gdalinfo_meta(s: SparkSession, d: String): DataFrame = {
-      import s.implicits._
-      import graft.sources.{GeoTiff, GeoTiffSpark}
-      val W = 32; val T = 16
-      val dir = java.nio.file.Files.createTempDirectory("graft_s4meta").toString
-      // control-plane file build: 6 tiny rasters, written inside tasks,
-      // collected as a 6-row path list (same class as a manifest collect)
-      val paths = Tables.part(s, d).filter(col("p_partkey") <= 6)
-        .select(col("p_partkey").cast("long").as("asset_id")).as[Long]
-        .repartition(3)
-        .map { a =>
-          val p = GeoTiff.Profile(W, W, 1, "uint16", T, T, Some(0.0), 4326,
-            0.0, 0.0, 1.0, 1.0, deflate = true)
-          val path = s"$dir/asset_$a.tif"
-          val w = new GeoTiff.Writer(path, p)
-          for (tr <- 0 until p.tilesDown; tc <- 0 until p.tilesAcross)
-            w.writeTile(1, tr, tc, Array.tabulate(T * T) { i =>
-              val gx = tc * T + i % T; val gy = tr * T + i / T
-              ((3 * a + 5 * gx + 7 * gy) % 97).toDouble // 0 = nodata
-            })
-          w.close()
-          path
-        }
-        .collect().toSeq.sorted
-      val meta = GeoTiffSpark.fetchMetadata(s, paths,
-        computeStats = true, computeHistogram = true)
-      def j(p: String) = get_json_object(col("metadata_json"), p)
-      val buckets = from_json(j("$.bands[0].histogram.buckets"),
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))
-      meta.select(
-        regexp_extract(col("uri"), "asset_(\\d+)\\.tif", 1).cast("long").as("asset_id"),
-        j("$.size[0]").cast("int").as("width"),
-        j("$.size[1]").cast("int").as("height"),
-        j("$.bands[0].type").as("dtype"),
-        j("$.bands[0].minimum").cast("double").as("mn"),
-        j("$.bands[0].maximum").cast("double").as("mx"),
-        aggregate(buckets, lit(0L), (acc, x) => acc + x).as("valid_n"),
-        // mean·n rounds back to the exact integer sum (sum ≪ 2^53)
-        round(j("$.bands[0].mean").cast("double") *
-          aggregate(buckets, lit(0L), (acc, x) => acc + x)).cast("long").as("sum_v"),
-        j("$.bands[0].histogram.min").cast("double").as("hist_lo"),
-        j("$.bands[0].histogram.max").cast("double").as("hist_hi"),
-        j("$.bands[0].histogram.count").cast("int").as("hist_n"),
-        size(filter(buckets, x => x > 0)).cast("long").as("nz_buckets"))
-        .orderBy("asset_id")
-    }
-
-    /** K1 + §2.9 OVERVIEW PYRAMID sink — the distributed overview build,
-      * end to end, at the dataflow shape that survives 100 TB: base
-      * blocks → per-block factor-2 [[graft.operators.Resample.downsample]]
-      * (map-side, 4× data reduction, NO shuffle; `nearest` and masked
-      * mean-floor `average` legs) → [[graft.operators.Resample.regroup2x]]
-      * (the ONE keyed exchange of the build, moving only the reduced
-      * quarters) → per-(asset, mode) [[graft.sources.GeoTiff.Writer]]
-      * with a DECLARED factor-2 overview (chained IFDs, gdaladdo layout,
-      * NewSubfileType=1) → `openAll` readback of BOTH pyramid levels from
-      * the file. The oracle replays the generating formula, the nearest
-      * decimation, and the nodata-excluded floor-mean in closed form, so
-      * the whole chain — downsample arithmetic, quarter assembly, IFD
-      * chaining, per-level offsets — is hash-checked. The `average` leg's
-      * floor(mean of non-nodata) is the deterministic twin of GDAL's
-      * nodata-excluding average (both engines floor the same IEEE double,
-      * sums < 4000 ⇒ exact). Nodata pixels ((x·y) % 7 = 0 → 0) thread
-      * the masked-pixel convention through every stage. */
-    def k5_pyramid_sink(s: SparkSession, d: String): DataFrame = {
-      import s.implicits._
-      import graft.operators.Resample
-      import graft.sources.GeoTiff
-      val B = 16 // block = tile size; base image 32×32 = 2×2 blocks
-      val assets = Tables.part(s, d).filter(col("p_partkey") <= 6)
-        .select(col("p_partkey").cast("long").as("asset_id"))
-      val blockIdx = s.range(4).select(
-        (col("id") / 2).cast("int").as("block_row"),
-        (col("id") % 2).cast("int").as("block_col"))
-      // stored base: nodata 0 where (gx·gy)%7=0, else 1 + (7a+5x+3y)%997
-      val base = assets.crossJoin(broadcast(blockIdx))
-        .withColumn("band_1", transform(sequence(lit(0), lit(B * B - 1)), i => {
-          val gx = col("block_col") * B + pmod(i, lit(B))
-          val gy = col("block_row") * B + (i / B).cast("int")
-          when(pmod(gx * gy, lit(7)) === 0, lit(0.0))
-            .otherwise((pmod(lit(7) * col("asset_id") + lit(5) * gx + lit(3) * gy,
-              lit(997)) + 1).cast("double"))
-        }))
-      // masked-pixel convention: nodata → null through the kernels
-      val masked = base.withColumn("band_1",
-        transform(col("band_1"), v => when(v =!= 0.0, v)))
-      def halves(method: String) = masked.withColumn("band_1",
-        Resample.downsample(col("band_1"), B, B, 2, method))
-      val ovrN = Resample.regroup2x(halves("nearest"), B, Seq("band_1"), Seq("asset_id"))
-        .withColumn("mode", lit("nearest"))
-      // deterministic floor-mean: floor map-side, BEFORE the exchange
-      val ovrA = Resample.regroup2x(
-          halves("average").withColumn("band_1",
-            transform(col("band_1"), v => floor(v).cast("double"))),
-          B, Seq("band_1"), Seq("asset_id"))
-        .withColumn("mode", lit("average"))
-      val modes = s.range(2).select(
-        when(col("id") === 0, "nearest").otherwise("average").as("mode"))
-      val lvl0 = base.crossJoin(broadcast(modes)).withColumn("level", lit(0))
-      val lvl1 = ovrN.unionByName(ovrA)
-        .withColumn("band_1", transform(col("band_1"), v => coalesce(v, lit(0.0))))
-        .withColumn("level", lit(1))
-      val cols5 = Seq("asset_id", "mode", "level", "block_row", "block_col", "band_1")
-      lvl0.select(cols5.map(col): _*).unionByName(lvl1.select(cols5.map(col): _*))
-        .as[(Long, String, Int, Int, Int, Seq[Double])]
-        .groupByKey { case (a, m, _, _, _, _) => (a, m) }
-        .flatMapGroups { (key: (Long, String), it: Iterator[(Long, String, Int, Int, Int, Seq[Double])]) =>
-          val (a, m) = key
-          val f = java.io.File.createTempFile(s"graft_k5_${a}_$m", ".tif")
-          try {
-            val p = GeoTiff.Profile(2 * B, 2 * B, 1, "uint16", B, B, Some(0.0),
-              4326, 0.0, 0.0, 1.0, 1.0, deflate = true)
-            val w = new GeoTiff.Writer(f.getAbsolutePath, p, overviewFactors = Seq(2))
-            it.foreach { case (_, _, lvl, br, bc, px) =>
-              if (lvl == 0) w.writeTile(1, br, bc, px.toArray)
-              else w.writeOverviewTile(1, 1, br, bc, px.toArray)
-            }
-            w.close()
-            GeoTiff.openAll(f.getAbsolutePath).zipWithIndex.map { case (t, lvl) =>
-              val wd = t.profile.width
-              var sum = 0L; var wsum = 0L
-              for (tr <- 0 until t.profile.tilesDown;
-                   tc <- 0 until t.profile.tilesAcross) {
-                val px = t.readTile(1, tr, tc)
-                var i = 0
-                while (i < px.length) {
-                  val gx = tc * B + i % B; val gy = tr * B + i / B
-                  if (gx < wd && gy < wd) {
-                    val lv = px(i).toLong
-                    sum += lv; wsum += lv * (gx + wd.toLong * gy)
-                  }
-                  i += 1
-                }
-              }
-              (a, m, lvl, sum, wsum)
-            }
-          } finally f.delete()
-        }
-        .toDF("asset_id", "mode", "level", "sum_v", "wsum_v")
-        .orderBy("asset_id", "mode", "level")
-    }
-
-    /** K1+`addo` — the gdaladdo -ro twin oracle-checked END TO END through
-      * the PRODUCTION surfaces: publish plain tiles with
-      * [[graft.sources.GeoTiffSpark.writeTiles]] (3 real grid tiles of the
-      * custom 90/544 lattice, 2×2 blocks each), build external `.ovr`
-      * sidecars with the distributed
-      * [[graft.sources.GeoTiffSpark.addOverviewSidecars]] job (masked
-      * `max` kernel — integer-exact, no rounding ambiguity cross-engine),
-      * then read BOTH pyramid levels back through
-      * [[graft.sources.GeoTiff.openWithOverviews]] and fold
-      * sum/weighted-sum per level. The oracle replays the base formula
-      * and the nodata-excluded 2×2 max in closed form, so the published
-      * bytes, the sidecar build's one-exchange dataflow, and the
-      * combined-chain open are all hash-checked. */
-    def k6_ovr_sidecar(s: SparkSession, d: String): DataFrame = {
-      import s.implicits._
-      import graft.sources.{GeoTiff, GeoTiffSpark}
-      val grid = graft.core.grid.GridFactory("90/544")
-      val B = grid.blockSize // 272: 2x2 blocks per 544-px tile
-      require(B * 2 == grid.cols, s"k6 expects a 2x2-block tile, got block $B of ${grid.cols}")
-      val spec = graft.core.LayerSpec(dataset = "k6", version = "v1",
-        sourceType = "raster", pixelMeaning = "x", dataType = "uint16",
-        grid = "90/544", sourceUri = Some(Seq("mem")), noData = Some(Seq(0.0)))
-      val dir = tempFixtureDir("graft_k6_addo").resolve("tiles")
-      java.nio.file.Files.createDirectories(dir)
-      val ids = (0 until 3).map(grid.tileId(_))
-      val tiles = ids.zipWithIndex.map { case (id, i) =>
-        val b = grid.tileBounds(id); (i, id, b.left, b.top)
-      }
-      val blockIdx = s.range(4).select(
-        (col("id") / 2).cast("int").as("block_row"),
-        (col("id") % 2).cast("int").as("block_col"))
-      // base: nodata 0 where (gx·gy)%7=0, else 1 + (7i + 5gx + 3gy) % 997
-      val base = s.createDataset(tiles).toDF("i", "tile_id", "left", "top")
-        .crossJoin(broadcast(blockIdx))
-        .withColumn("band_1", transform(sequence(lit(0), lit(B * B - 1)), j => {
-          val gx = col("block_col") * B + pmod(j, lit(B)).cast("int")
-          val gy = col("block_row") * B + (j / B).cast("int")
-          when(pmod(gx * gy, lit(7)) === 0, lit(0.0))
-            .otherwise((lit(1) +
-              pmod(col("i") * 7 + gx * 5 + gy * 3, lit(997))).cast("double"))
-        }))
-      val dirS = dir.toString // Path itself is not serializable
-      GeoTiffSpark.writeTiles(base.drop("i"), spec, dirS).count()
-      GeoTiffSpark.addOverviewSidecars(s, dirS, spec,
-        factors = Seq(2), method = "max").count()
-      s.createDataset(ids).repartition(3).flatMap { id =>
-        GeoTiff.openWithOverviews(s"$dirS/$id.tif").zipWithIndex.map {
-          case (t, lvl) =>
-            val wd = t.profile.width; val bs = t.profile.tileWidth
-            var sum = 0L; var wsum = 0L
-            for (tr <- 0 until t.profile.tilesDown;
-                 tc <- 0 until t.profile.tilesAcross) {
-              val px = t.readTile(1, tr, tc)
-              var k = 0
-              while (k < px.length) {
-                val gx = tc * bs + k % bs; val gy = tr * bs + k / bs
-                if (gx < wd && gy < t.profile.height) {
-                  val lv = px(k).toLong
-                  sum += lv; wsum += lv * (gx + wd.toLong * gy)
-                }
-                k += 1
-              }
-            }
-            (id, lvl, sum, wsum)
-        }
-      }.toDF("tile_id", "level", "sum_v", "wsum_v")
-        .orderBy("tile_id", "level")
-    }
-
-    /** S2/S8/K2 manifest CHAIN — the control-plane round trip a chained
-      * job runs: render tiles.geojson through the K3 sink
-      * ([[graft.plans.LayerJob.writeTilesGeojson]]) for every 7th grid
-      * tile, upload real (tiny-profile) GeoTIFFs for every 21st tile via
-      * the K2 in-task temp+copy Hadoop-FS route
-      * (`tiles/tile.py:143-172`), re-scan the manifest with S2's
-      * dest-relative name resolution
-      * ([[graft.sources.Catalog.fromTilesGeojson]],
-      * `gfw_pixetl/layers.py:114-128`), list existing outputs (S8,
-      * [[graft.sources.Catalog.existingTiles]], `sources.py:254-263`),
-      * and anti-join to the remaining work list. The oracle replays tile
-      * ids, manifest order, footprints, and the existence predicate in
-      * closed form, so the whole chain (JSON render → parse → WKB →
-      * envelope → anti-join) is hash-checked, not just spec-asserted.
-      * Every relation is catalog-sized (≤ 93 rows) by construction. */
-    def s2_manifest_chain(s: SparkSession, d: String): DataFrame = {
-      import s.implicits._
-      import graft.sources.{Catalog, GeoTiff}
-      import graft.plans.LayerJob
-      val tmp = tempFixtureDir("graft_s2_chain")
-      val destDir = tmp.resolve("tiles")
-      java.nio.file.Files.createDirectories(destDir)
-      val sel = LatLngGrid(10, 40000).tilesDF(s).filter(col("tile_idx") % 7 === 0)
-      // K3 render: dest-relative names (the sink contract), GeoJSON rings
-      val manifest = sel.select(col("tile_id"),
-        concat(lit("tiles/"), col("tile_id"), lit(".tif")).as("uri"),
-        concat(lit("{\"type\":\"Polygon\",\"coordinates\":[[["),
-          col("left"), lit(","), col("bottom"), lit("],["),
-          col("right"), lit(","), col("bottom"), lit("],["),
-          col("right"), lit(","), col("top"), lit("],["),
-          col("left"), lit(","), col("top"), lit("],["),
-          col("left"), lit(","), col("bottom"), lit("]]]}")).as("geometry"))
-      LayerJob.writeTilesGeojson(manifest, s"$tmp/tiles.geojson")
-      // K2 upload: real Writer bytes through local temp + Hadoop-FS copy
-      // INSIDE the task (21 | tile_idx ⊂ 7 | tile_idx, so existing ⊂ manifest)
-      val destUri = s"file://$destDir"
-      sel.filter(col("tile_idx") % 21 === 0).select("tile_id").as[String]
-        .repartition(4)
-        .mapPartitions { ids =>
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI("file:///"), new org.apache.hadoop.conf.Configuration())
-          ids.map { id =>
-            val f = java.io.File.createTempFile(s"graft_s2_$id", ".tif")
-            val w = new GeoTiff.Writer(f.getAbsolutePath,
-              GeoTiff.Profile(16, 16, 1, "uint8", 16, 16, None, 4326, 0, 0, 1, 1))
-            w.writeTile(1, 0, 0, Array.tabulate(256)(i => (i % 7).toDouble))
-            w.close()
-            fs.copyFromLocalFile(true, true,
-              new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-              new org.apache.hadoop.fs.Path(s"$destUri/$id.tif"))
-            id
-          }
-        }.count()
-      // S2 re-scan (relative names resolve against the manifest dir) +
-      // S8 listing + the F3-shape anti-join to the remaining work list
-      val cat = Catalog.fromTilesGeojson(s, s"$tmp/tiles.geojson")
-      val existing = Catalog.existingTiles(s, destDir.toString)
-      val envCols = udf { (wkb: Array[Byte]) =>
-        val e = graft.functions.GeoFunctions.read(wkb).getEnvelopeInternal
-        (e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)
-      }
-      cat.withColumn("tile_id", regexp_extract(col("uri"), "([^/]+)\\.tif$", 1))
-        .join(existing, Seq("tile_id"), "left_anti")
-        .withColumn("__e", envCols(col("footprint")))
-        .select(col("tile_id"), col("manifest_idx"),
-          col("__e._1").as("left"), col("__e._2").as("bottom"),
-          col("__e._3").as("right"), col("__e._4").as("top"))
-        .orderBy("tile_id")
-    }
-
-    /** Nearest-neighbor resize of the real-decode PNG corpus to a fixed
-      * 8×8 thumbnail — the standardize-before-embed step; the oracle
-      * replays the integer floor sampling from the generating formula
-      * while Spark decodes real bytes. See
-      * [[graft.operators.Multimodal.resizeNearestFeatures]]. */
-    def m5_image_resize(s: SparkSession, d: String): DataFrame =
-      Multimodal.resizeNearestFeatures(
-        Multimodal.syntheticPngs(Tables.documents(s, d), "doc_id"),
-        outW = 8, outH = 8)
-        .orderBy("asset_id")
-
-    /** Perceptual average-hash (aHash) fingerprints over the real-decode
-      * PNG corpus — the visual near-dup key of an image dedup pipeline;
-      * the oracle replays decode + resize + mean-threshold bits from the
-      * generating formula in pure SQL while Spark decodes real bytes. See
-      * [[graft.operators.Multimodal.averageHash]]. */
-    def m6_ahash(s: SparkSession, d: String): DataFrame =
-      Multimodal.averageHash(
-        Multimodal.syntheticPngs(Tables.documents(s, d), "doc_id"), size = 8)
-        .orderBy("asset_id")
-
-    /** Visual exact-dup groups over the aHash fingerprints — d1's
-      * digest-group shape on the perceptual key: images whose 64-bit
-      * average hash collides form a dup group (keeper = min asset id).
-      * One hash aggregate over m6's shuffle-free decode pass; only
-      * multi-member groups survive (the dedup work list). */
-    def m8_image_dup_groups(s: SparkSession, d: String): DataFrame =
-      Multimodal.averageHash(
-        Multimodal.syntheticPngs(Tables.documents(s, d), "doc_id"), size = 8)
-        .groupBy("hash_hi", "hash_lo")
-        .agg(min("asset_id").as("keep_id"), count(lit(1)).as("n_copies"))
-        .filter(col("n_copies") > 1)
-        .orderBy("keep_id")
-
-    /** Visual NEAR-dup pairs — aHash Hamming ≤ 1 via the d7 pigeonhole:
-      * a pair within Hamming 1 of a 64-bit hash must agree EXACTLY on at
-      * least one 32-bit half, so candidates meet in a half-keyed band
-      * join (never all-pairs) and bit_count verifies. Extends m8's
-      * exact-collision groups to the near ring. */
-    def m9_ahash_pairs(s: SparkSession, d: String): DataFrame = {
-      val hashes = graft.core.Caching.shared(
-        Multimodal.averageHash(
-          Multimodal.syntheticPngs(Tables.documents(s, d), "doc_id"), size = 8))
-      def side(n: Int) = hashes.select(col("asset_id").as(s"a$n"),
-        col("hash_hi").as(s"h$n"), col("hash_lo").as(s"l$n"))
-      // two EQUI band joins (hi band, lo band) — an OR-joined predicate
-      // would plan a nested loop over all pairs; the union of equi-joins
-      // keeps both legs hash-joinable (the d7 shape)
-      def band(k: String) = side(1).join(side(2),
-        col(s"${k}1") === col(s"${k}2") && col("a1") < col("a2"))
-        .select("a1", "a2", "h1", "h2", "l1", "l2")
-      band("h").unionAll(band("l")).distinct()
-        .withColumn("hamming",
-          expr("bit_count(h1 ^ h2) + bit_count(l1 ^ l2)"))
-        .filter(col("hamming") <= 1)
-        .select(col("a1"), col("a2"), col("hamming"))
-        .orderBy("a1", "a2")
-    }
-
-    /** ANN evaluation — recall@5 of the LSH index (e2) against exhaustive
-      * ground truth (e1), per query. The metrology operator every ANN
-      * deployment runs on a sampled query set before trusting the index;
-      * both inputs are deterministic, so recall itself is oracle-exact.
-      * The ground-truth side is small (queries × k), so the hit probe is
-      * a broadcast left join — no shuffle beyond the two rankers'. */
-    def e11_ann_recall(s: SparkSession, d: String): DataFrame = {
-      val truth = e1_knn_brute(s, d).select(col("query_id"), col("neighbor_id"))
-      val approx = e2_knn_lsh(s, d)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("__hit"))
-      truth.join(broadcast(approx), Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("k"),
-          coalesce(sum("__hit"), lit(0L)).as("n_hits"))
-        .withColumn("recall_pct", (col("n_hits") * 100 / col("k")).cast("long"))
-        .orderBy("query_id")
+  /** Ends a ledger tool (`[tool]` in its message) with exit status 2 when
+    * `names` holds an id the ledger does not declare: a typo'd name must
+    * fail, not run or write nothing and pass. */
+  def exitOnUnknown(tool: String, names: Iterable[String]): Unit = {
+    val unknown = names.toSet -- ledger.map(_.id)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[$tool] unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
     }
-
-    /** Rank-aware ANN evaluation — NDCG@5 of the LSH ranker against e1's
-      * exhaustive ground truth, the position-weighted sibling of e11's
-      * recall (a hit at rank 1 is worth more than a hit at rank 5).
-      * Binary relevance (in the true top-5 or not); per-position discount
-      * floor(10⁶·ln2/ln(i+1)+0.5) micro-quantized BEFORE summing (the
-      * bm25/surprisal float discipline — both engines fold exact
-      * integers); IDCG puts all hits first, computed per query from
-      * n_hits alone by an in-row sequence fold (no second ranker pass).
-      * Ground truth is queries×k rows, so both probes broadcast. */
-    def e18_ndcg(s: SparkSession, d: String): DataFrame = {
-      val ln2 = log(lit(2.0))
-      def disc(i: Column) =
-        floor(lit(1e6) * ln2 / log(i.cast("double") + 1) + 0.5).cast("long")
-      // pinned: the truth relation feeds the hit probe AND the query list
-      val truth = graft.core.Caching.shared(
-        e1_knn_brute(s, d).select(col("query_id"), col("neighbor_id")))
-      val scored = e2_knn_lsh(s, d)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-        .join(broadcast(truth.withColumn("__hit", lit(1L))),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(
-          sum(when(col("__hit").isNotNull, disc(col("rank"))).otherwise(0L))
-            .as("dcg_micro"),
-          sum(when(col("__hit").isNotNull, 1L).otherwise(0L)).as("n_hits"))
-      truth.select("query_id").distinct()
-        .join(broadcast(scored), Seq("query_id"), "left")
-        .na.fill(0L, Seq("dcg_micro", "n_hits"))
-        .withColumn("idcg_micro",
-          when(col("n_hits") === 0, lit(0L)).otherwise(
-            aggregate(sequence(lit(1L), col("n_hits")), lit(0L),
-              (acc, i) => acc + disc(i))))
-        .withColumn("ndcg_micro",
-          when(col("idcg_micro") === 0, lit(0L))
-            .otherwise(expr("dcg_micro * 1000000 div idcg_micro")))
-        .orderBy("query_id")
-    }
-
-    /** Per-source duplication report — the corpus-health summary a curation
-      * run publishes: doc counts, distinct-text counts (distinct on the
-      * 32-byte digest, never the text), and the dup rate. */
-    def t18_dedup_report(s: SparkSession, d: String): DataFrame =
-      Tables.documents(s, d)
-        // digest is internal (only countDistinct sees it): 16-byte binary
-        // halves the distinct-state bytes vs the 32-hex string
-        .select(col("source"), unhex(md5(col("text"))).as("digest"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), countDistinct("digest").as("n_unique"))
-        .withColumn("dup_rate",
-          round(lit(1.0) - col("n_unique").cast("double") / col("n_docs"), 4))
-        .orderBy("source")
-
-    /** Gopher-style repetition quality signals. */
-    def t9_rep_signals(s: SparkSession, d: String): DataFrame =
-      TextOps.repetitionSignals(Tables.documents(s, d)).orderBy("doc_id")
-
-    /** Span-level dedup SCRUB — the removal step d8 only measures:
-      * corpus-duplicated 16-token spans are deleted from every carrier,
-      * and the gate hashes the REWRITTEN text itself (md5 per doc), not
-      * just counts. See [[graft.operators.Dedup.scrubDupSpans]]. */
-    def t25_span_scrub(s: SparkSession, d: String): DataFrame =
-      graft.operators.Dedup.scrubDupSpans(Tables.documents(s, d), window = 16)
-        .orderBy("doc_id")
-
-    /** Corpus heavy hitters — terms with frequency ≥ 1/64 of all tokens.
-      * Two-pass sketch discipline: a Misra-Gries summary (128 counters,
-      * mergeable across partitions) nominates candidates WITHOUT a
-      * vocabulary-sized shuffle, then one exact count over the candidate
-      * set alone confirms — the exact output the oracle replays with a
-      * plain GROUP BY. See [[graft.operators.TextOps.heavyHitters]]. */
-    def t26_heavy_hitters(s: SparkSession, d: String): DataFrame =
-      TextOps.heavyHitters(Tables.documents(s, d), support = 64)
-
-    /** Gopher-style hard rule flags — the per-rule boolean table a
-      * curation pipeline audits before gating (distinct from t3's blended
-      * score: rules are individually actionable). Integer comparisons
-      * only, so every flag replays exactly. See
-      * [[graft.operators.TextOps.gopherRules]]. */
-    def t27_quality_rules(s: SparkSession, d: String): DataFrame =
-      TextOps.gopherRules(Tables.documents(s, d)).orderBy("doc_id")
-
-    /** Canonical normalization pass (C4/CCNet shape): the gate hashes the
-      * normalized text itself, proving the rewrite. Seeded with mixed
-      * case + punctuation + whitespace runs so the pass has real work on
-      * the synthetic corpus (both engines build the identical seed). See
-      * [[graft.operators.TextOps.normalizeText]]. */
-    def t28_normalize(s: SparkSession, d: String): DataFrame = {
-      val seeded = Tables.documents(s, d).select(col("doc_id"),
-        concat(upper(substring(col("text"), 1, 10)), lit("  ... "),
-          substring(col("text"), 11, 1000000), lit("!?  [END]")).as("text"))
-      seeded
-        .select(col("doc_id"), TextOps.normalizeText(col("text")).as("norm"))
-        .select(col("doc_id"), length(col("norm")).cast("long").as("n_chars"),
-          md5(col("norm")).as("norm_md5"))
-        .orderBy("doc_id")
-    }
-
-    /** Deterministic per-language stratified sample (data-mix rebalance):
-      * keep 50% of en, 30% of es/fr/de, 10% of anything else. */
-    def t10_stratified_sample(s: SparkSession, d: String): DataFrame =
-      TextOps.stratifiedSample(Tables.documents(s, d),
-          Map("en" -> 50, "es" -> 30, "fr" -> 30, "de" -> 30), defaultPct = 10)
-        .select("doc_id", "lang", "bucket")
-        .orderBy("doc_id")
-
-    /** PII detect + scrub. The synthetic corpus carries no PII, so each doc
-      * is deterministically seeded with one email, one IPv4, and one
-      * phone-shaped number first (both engines build the same string); the
-      * hash compares counts AND the md5 of the redacted text, proving the
-      * replacement itself is identical without shipping full documents
-      * through the gate. */
-    def t11_pii_scrub(s: SparkSession, d: String): DataFrame = {
-      val seeded = Tables.documents(s, d).select(col("doc_id"),
-        concat(col("text"),
-          lit(" contact u"), col("doc_id"), lit("@example.com via 10."),
-          pmod(col("doc_id"), lit(200)), lit(".0.1 ext 555-"),
-          lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0")).as("text"))
-      TextOps.piiSignals(seeded)
-        .withColumn("redacted_md5", md5(TextOps.scrubPii(col("text"))))
-        .select("doc_id", "n_emails", "n_ips", "n_phones", "redacted_md5")
-        .orderBy("doc_id")
-    }
-
-    /** C4-style per-domain quality/dedup profile (source stands in for the
-      * registrable domain the real pipeline extracts from the url). */
-    def t12_domain_stats(s: SparkSession, d: String): DataFrame =
-      TextOps.domainStats(Tables.documents(s, d)).orderBy("domain")
-
-    /** Concat-then-chunk packing of each source shard into 512-token
-      * training sequences. */
-    def t13_pack_sequences(s: SparkSession, d: String): DataFrame =
-      TextOps.packSequences(Tables.documents(s, d), seqLen = 512)
-        .orderBy("doc_id")
-
-    /** Incremental dedup probe: the `src0` slice plays the new ingest
-      * batch, everything else the already-curated corpus; candidates are
-      * batch-vs-corpus bucket collisions only — neither side self-joins. */
-    def d10_incremental_dedup(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d)
-      val corpus = docs.filter(col("source") =!= "src0")
-      val batch = docs.filter(col("source") === "src0")
-      def buckets(df: DataFrame) =
-        Dedup.lshBuckets(Dedup.minhashSignatures(df, k = 4), k = 4, rowsPerBand = 2)
-      Dedup.lshCandidatesCross(buckets(batch), buckets(corpus), maxBucketSize = lshCap)
-        .orderBy("probe_id", "corpus_id")
-    }
-
-    /** Quality-based corpus pruning: keep the top-30% quality documents per
-      * language. The keep count is the exact rational max(1, 3n/10) — no
-      * float threshold to flip between engines — and ties break on doc_id. */
-    def c2_quality_gate(s: SparkSession, d: String): DataFrame =
-      TextOps.qualityGate(Tables.documents(s, d), keepNum = 3, keepDen = 10)
-        .orderBy("doc_id")
-
-    /** Cluster-balanced diversity sampling — the curation step between
-      * dedup and training: embed-cluster the corpus (e7's fixed-centroid
-      * assignment, a pure expression over the broadcast codebook), join
-      * per-doc quality (t3), keep each cluster's top-25 by quality. The
-      * semantic-cluster quota prevents the quality cut from collapsing
-      * the corpus onto one dominant mode; one window rank per cluster is
-      * the only wide op after the doc-keyed join. */
-    def c3_diversity_sample(s: SparkSession, d: String): DataFrame = {
-      val emb = Tables.embeddings(s, d)
-      val cents = emb.filter(col("vec_id") % 37 === 0 && col("vec_id") < 260)
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .collect()
-        .map(r => ((r.getLong(0) / 37).toInt, r.getSeq[Double](1).toSeq))
-        .sortBy(_._1).toSeq
-      val assigned = emb.select(col("vec_id"),
-        Similarity.nearestCentroid(col("embedding").cast("array<double>"), cents)
-          .as("cid"))
-      val quality = TextOps.withQuality(Tables.documents(s, d))
-        .select(col("doc_id"), col("quality"))
-      val w = Window.partitionBy(col("cid"))
-        .orderBy(col("quality").desc, col("doc_id").asc)
-      quality.join(assigned, col("vec_id") === col("doc_id"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 25)
-        .select(col("doc_id"), col("cid"), col("quality"), col("rank"))
-        .orderBy("cid", "rank")
-    }
-
-    /** Per-source token-budget downsampling: greedy keep in portable-hash
-      * order until each source reaches its 800-token allocation. */
-    def t14_token_budget(s: SparkSession, d: String): DataFrame =
-      TextOps.tokenBudgetSample(Tables.documents(s, d), budget = 800L)
-        .orderBy("doc_id")
-
-    /** Corpus-unigram surprisal score (CCNet-style LM quality proxy);
-      * per-token micro-nat quantization keeps the aggregate exact. */
-    def t15_unigram_surprisal(s: SparkSession, d: String): DataFrame =
-      TextOps.unigramSurprisal(Tables.documents(s, d)).orderBy("doc_id")
-
-    /** Flesch-style readability score — the classic text-quality feature
-      * (reading-ease gates in curation): 206.835 − 1.015·(words/sent) −
-      * 84.6·(syll/words), with sentences = [.!?]+ runs (min 1), words =
-      * whitespace tokens, syllables = [aeiouy]+ vowel groups per word
-      * (min 1/word — the standard heuristic). All three counts are exact
-      * integers from regex extraction; the formula evaluates once in
-      * IEEE doubles and micro-quantizes (the bm25 discipline). Fused
-      * into the scan — no shuffle before the output sort. */
-    def t39_readability(s: SparkSession, d: String): DataFrame =
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          greatest(size(filter(split(lower(col("text")), "[.!?]+"),
-            t => length(trim(t)) > 0)), lit(1)).cast("long").as("n_sent"),
-          Dedup.tokens(col("text")).as("__toks"))
-        .withColumn("n_words", greatest(size(col("__toks")), lit(1)).cast("long"))
-        .withColumn("n_syll",
-          aggregate(transform(col("__toks"),
-            t => greatest(size(filter(split(t, "[^aeiouy]+"),
-              g => length(g) > 0)), lit(1)).cast("long")),
-            lit(0L), (acc, x) => acc + x))
-        .select(col("doc_id"), col("n_sent"), col("n_words"), col("n_syll"),
-          floor((lit(206.835) -
-            lit(1.015) * col("n_words") / col("n_sent") -
-            lit(84.6) * col("n_syll") / col("n_words")) * 1e6 + 0.5)
-            .cast("long").as("flesch_micro"))
-        .orderBy("doc_id")
-
-    /** New-vs-returning daily split — each day's actives partitioned by
-      * whether this is their FIRST day ever (the acquisition/retention
-      * headline every growth dashboard opens with). First-seen day is
-      * one user-keyed argmin; the daily census joins presence against
-      * it user-keyed — co-partitioned at scale. */
-    def x48_new_vs_returning(s: SparkSession, d: String): DataFrame = {
-      val pres = graft.core.Caching.shared(Tables.events(s, d)
-        .select(to_date(col("ts")).as("day"), col("user_id")).distinct())
-      val first = pres.groupBy("user_id").agg(min("day").as("__first"))
-      pres.join(first, "user_id")
-        .groupBy("day")
-        .agg(sum(when(col("day") === col("__first"), 1L).otherwise(0L)).as("n_new"),
-          sum(when(col("day") =!= col("__first"), 1L).otherwise(0L)).as("n_returning"))
-        .orderBy("day")
-    }
-
-    /** Per-source token-distribution Shannon entropy — the vocabulary-
-      * diversity diagnostic next to t33's Zipf slope (low entropy flags
-      * template/boilerplate sources before they flood a mixture).
-      * H = ln N − (Σ c·ln c)/N with per-term ln c micro-quantized
-      * BEFORE the weighted sum (exact integer folds); the one division
-      * truncates identically on both engines. One (source, token)
-      * aggregate — map-side combined — then a per-source fold. */
-    def t35_token_entropy(s: SparkSession, d: String): DataFrame =
-      Tables.documents(s, d)
-        .select(col("source"), explode(Dedup.tokens(col("text"))).as("tok"))
-        .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-        .groupBy("source")
-        .agg(sum("c").as("n"), count(lit(1)).as("vocab"),
-          sum(col("c") *
-            floor(log(col("c").cast("double")) * 1e6 + 0.5).cast("long")).as("__s"))
-        .select(col("source"), col("n"), col("vocab"),
-          (floor(log(col("n").cast("double")) * 1e6 + 0.5).cast("long") -
-            expr("__s div n")).as("entropy_micro"))
-        .orderBy("source")
-
-    /** DSIR importance weights against the src0 slice as the target
-      * domain — the reweighting score that tilts a general corpus toward
-      * a target distribution before sampling. See
-      * [[graft.operators.TextOps.importanceWeights]]. */
-    def t34_importance_weights(s: SparkSession, d: String): DataFrame =
-      TextOps.importanceWeights(Tables.documents(s, d),
-        col("source") === "src0").orderBy("doc_id")
-
-    /** Latest-event-per-user materialized view — the BATCH twin of
-      * [[graft.streaming.StreamJob.streamingLatest]]'s mapGroupsWithState
-      * update stream: one struct-argmax per user, (ts, event_id)
-      * tiebreak ⇒ order-independent, so stream and batch converge to the
-      * identical view (StreamingSpec proves it). */
-    def st6_latest_event(s: SparkSession, d: String): DataFrame =
-      Tables.events(s, d)
-        .groupBy("user_id")
-        .agg(max(struct(col("ts"), col("event_id"), col("event_type"))).as("__m"))
-        .select(col("user_id"), col("__m.ts").as("ts"),
-          col("__m.event_id").as("event_id"), col("__m.event_type").as("event_type"))
-        .orderBy("user_id")
-
-    /** Within-stream near-dup verdicts — the BATCH twin of
-      * [[graft.streaming.StreamJob.streamingNearDup]]'s stateful
-      * (band, bucket)-keyed filter: every signed doc gets the smallest-id
-      * EARLIER doc (doc_id = arrival order) sharing an LSH bucket and
-      * agreeing on ≥3 of 4 minhash components, NULL = kept. In-order
-      * streaming converges to this exact relation ON BUCKETS UNDER BOTH
-      * CAPS (StreamingSpec, fuses disarmed); the degenerate-bucket fuses
-      * themselves differ by design — this twin's `maxBucketSize` drops an
-      * over-cap bucket wholesale, the streaming op's `maxReps` keeps the
-      * newest 256 reps, because an online operator cannot know a bucket's
-      * final size (ADVICE r17). */
-    def st7_stream_neardup(s: SparkSession, d: String): DataFrame =
-      graft.operators.Dedup.nearDupVerdicts(Tables.documents(s, d),
-          k = 4, rowsPerBand = 2, minMatch = 3, maxBucketSize = lshCap)
-        .orderBy("doc_id")
-
-    // ---------------------------------------- similarity search (north star)
-    def e1_knn_brute(s: SparkSession, d: String): DataFrame = {
-      val emb = Tables.embeddings(s, d)
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5), k = 5)
-        .withColumn("cosine", round(col("cosine"), 4))
-        .orderBy("query_id", "rank")
-    }
-
-    def e2_knn_lsh(s: SparkSession, d: String): DataFrame = {
-      val emb = Tables.embeddings(s, d)
-      Similarity.lshTopK(emb, emb.filter(col("vec_id") < 5), dim = 64, bits = 8, k = 5)
-        .withColumn("cosine", round(col("cosine"), 4))
-        .orderBy("query_id", "rank")
-    }
-
-    /** Threshold-calibration sweep — the near-dup pair count at every
-      * candidate cosine cutoff in ONE pass (conditional sums over the
-      * bounded pairwise relation): the tuning curve read before fixing
-      * e3/e6's τ. Micro-quantized cosines make the threshold compares
-      * integer-exact; thresholds 0.30 … 0.90 by 0.10. */
-    def e25_threshold_sweep(s: SparkSession, d: String): DataFrame = {
-      val e = Tables.embeddings(s, d).filter(col("vec_id") < 200)
-        .select(col("vec_id"), col("embedding"))
-      val pairs = e.select(col("vec_id").as("id1"), col("embedding").as("v1"))
-        .join(broadcast(e.select(col("vec_id").as("id2"), col("embedding").as("v2"))),
-          col("id1") < col("id2"))
-        .select(floor(graft.functions.VectorExpressions.vec_cosine(
-          col("v1").cast("array<double>"), col("v2").cast("array<double>"))
-          * 1e6 + 0.5).cast("long").as("c"))
-      val ts = (3 to 9).map(_ * 100000L)
-      pairs.agg(count(lit(1)).as("n_pairs"),
-          ts.map(t => sum(when(col("c") >= t, 1L).otherwise(0L))
-            .as(s"n_ge_${t / 100000}0pct")): _*)
-        .select(col("n_pairs") +: ts.map(t => col(s"n_ge_${t / 100000}0pct")): _*)
-    }
-
-    /** Embedding-cosine near-dup pairs (the embedding flavor of dedup):
-      * exact pairwise verify over a bounded candidate set, scored by the
-      * native single-pass CosineSim expression. */
-    def e3_embedding_dup(s: SparkSession, d: String): DataFrame = {
-      val e = Tables.embeddings(s, d).filter(col("vec_id") < 200)
-        .select(col("vec_id"), col("embedding"))
-      val a = e.select(col("vec_id").as("id1"), col("embedding").as("v1"))
-      val b = e.select(col("vec_id").as("id2"), col("embedding").as("v2"))
-      a.join(broadcast(b), col("id1") < col("id2"))
-        .withColumn("cosine",
-          graft.functions.VectorExpressions.vec_cosine(
-            col("v1").cast("array<double>"), col("v2").cast("array<double>")))
-        .filter(col("cosine") >= 0.3)
-        .select(col("id1"), col("id2"), round(col("cosine"), 4).as("cosine"))
-        .orderBy("id1", "id2")
-    }
-
-    /** e12's TRAINED integer centroids collected as [[Similarity.ivfTopK]]'s
-      * driver-side centroid seq (k rows — never corpus-sized). Micro-unit
-      * longs convert to double via one exact widening (< 2⁵³) + one
-      * correctly-rounded IEEE division by 1e6 — bit-identical to DuckDB's
-      * `x / 1000000.0`, which is what lets a TRAINED index stay on the
-      * hash ledger. Shared by e5's probe search and e26's operating curve
-      * (the index a deployment would actually build and then sweep). */
-    private def trainedIvfCentroids(s: SparkSession, d: String): Seq[(Int, Seq[Double])] = {
-      val q = Tables.embeddings(s, d)
-        .select(col("vec_id"), Similarity.quantizeMicro(col("embedding")).as("qv"))
-      val init = q.filter(col("vec_id") % 37 === 0 && col("vec_id") < 260)
-        .select((col("vec_id") / 37).cast("int").as("cid"), col("qv").as("c"))
-      Similarity.kmeansExactCentroids(q, init, iters = 2)
-        .collect()
-        .map(r => (r.getInt(0), r.getSeq[Long](1).map(_.toDouble / 1e6).toSeq))
-        .sortBy(_._1).toSeq
-    }
-
-    /** IVF ANN (the coarse-quantizer scale path next to e2's LSH): k-means
-      * inverted lists, nprobe-of-k probe search, exact cosine inside the
-      * probed lists. The coarse quantizer is TRAINED — e12's integer-exact
-      * Lloyd rounds (micro-quantized vectors, BIGINT folds, floor(Σ/n)
-      * updates) — so unlike float Lloyd the full train→probe trajectory
-      * replays bit-for-bit in the oracle; `e7_ivf_fixed` keeps the
-      * untrained fixed-centroid variant. */
-    def e5_knn_ivf(s: SparkSession, d: String): DataFrame = {
-      val emb = Tables.embeddings(s, d)
-      val cents = trainedIvfCentroids(s, d)
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 5), cents, nprobe = 2, k = 5)
-        .withColumn("cosine", round(col("cosine"), 4))
-        .orderBy("query_id", "rank")
-    }
-
-    /** IVF with FIXED data-derived centroids (the 8 vectors at vec_id ∈
-      * 37ℤ) — the same inverted-list probe machinery as e5, but fully
-      * oracle-checkable: centroid choice, euclidean list assignment (ties
-      * to the lower cid), nprobe ranking, and the in-list cosine top-k all
-      * replay exactly in DuckDB. e5 keeps the k-means variant — since its
-      * centroids come from integer-exact Lloyd rounds it is hash-checked
-      * too; this fixed-centroid twin isolates the probe machinery from
-      * the training trajectory. */
-    def e7_ivf_fixed(s: SparkSession, d: String): DataFrame = {
-      val emb = Tables.embeddings(s, d)
-      val cents = emb.filter(col("vec_id") % 37 === 0 && col("vec_id") < 260)
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .collect()
-        .map(r => ((r.getLong(0) / 37).toInt, r.getSeq[Double](1).toSeq))
-        .sortBy(_._1).toSeq
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 5), cents, nprobe = 2, k = 5)
-        .withColumn("cosine", round(col("cosine"), 4))
-        .orderBy("query_id", "rank")
-    }
-
-    /** Product-quantization ADC ranking on e7's fixed codebook: 8 sub-space
-      * codes per vector, query 0 answered from the codes + a literal
-      * micro-unit lookup table (see [[Similarity.pqTopK]]). Encode fuses
-      * into the scan; the only wide op is the TakeOrdered top-20. */
-    def e9_pq_adc(s: SparkSession, d: String): DataFrame = {
-      val emb = Tables.embeddings(s, d)
-      val cents = emb.filter(col("vec_id") % 37 === 0 && col("vec_id") < 260)
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .collect()
-        .map(r => ((r.getLong(0) / 37).toInt, r.getSeq[Double](1).toSeq))
-        .sortBy(_._1).map(_._2).toSeq
-      val query = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .collect()(0).getSeq[Double](0).toSeq
-      Similarity.pqTopK(emb, cents, query, m = 8, k = 20).orderBy("rank")
-    }
-
-    /** IVF-PQ end to end — the architecture a billion-vector index actually
-      * runs: corpus inverted-listed by nearest centroid (the partition key
-      * at scale), the query probes its nprobe nearest lists, and ranking
-      * inside the probed lists is PQ/ADC over the codes. Pure composition
-      * of [[Similarity.nearestCentroid]] + [[Similarity.pqTopK]]: the list
-      * filter prunes the scan BEFORE encode, so a probe touches
-      * nprobe/nlist of the corpus. */
-    def e10_ivf_pq(s: SparkSession, d: String): DataFrame = {
-      val emb = Tables.embeddings(s, d)
-      val cents = emb.filter(col("vec_id") % 37 === 0 && col("vec_id") < 260)
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .collect()
-        .map(r => ((r.getLong(0) / 37).toInt, r.getSeq[Double](1).toSeq))
-        .sortBy(_._1).toSeq
-      val query = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .collect()(0).getSeq[Double](0).toSeq
-      // the query's nprobe nearest lists, driver-side with the engines'
-      // fold order; (d, cid) tuple sort = distance then lowest cid
-      val probed = cents.map { case (cid, c) =>
-        (query.zip(c).foldLeft(0.0) { case (a, (x, y)) => a + (x - y) * (x - y) }, cid)
-      }.sorted.take(2).map(_._2)
-      val listed = emb.withColumn("cid",
-        Similarity.nearestCentroid(col("embedding").cast("array<double>"), cents))
-      Similarity.pqTopK(listed.filter(col("cid").isin(probed: _*)),
-          cents.map(_._2), query, m = 8, k = 10)
-        .select("vec_id", "adc_micro", "rank")
-        .orderBy("rank")
-    }
-
-    /** SemDeDup over the embedding corpus: deterministic LSH sign-bucket
-      * clusters, every vector labeled with the lowest-id cosine-τ duplicate
-      * in its bucket (null = kept representative). */
-    /** e6 bucket-granularity dials, shared with the oracle generator so the
-      * two sides replay the identical integer ladder. */
-    val E6TargetBucket = 24
-    val E6MinBits = 4
-    val E6MaxBits = 16
-    val E6BucketCap = 192
-
-    def e6_semantic_dedup(s: SparkSession, d: String): DataFrame = {
-      // Adaptive bucket granularity + skew fuse (VERDICT r16 #1): the old
-      // fixed bits=6 held the bucket COUNT constant while the corpus grew,
-      // so within-bucket pairwise work was quadratic in n (measured 14.7×
-      // exec for 10× data at sf1). bits now scales with corpus size so
-      // expected occupancy stays ≤ E6TargetBucket (pairs ~ n·target,
-      // linear), and maxBucketSize drops degenerate hash-skew buckets
-      // exactly like d3/d6 do. The sizing integer comes from the cached
-      // driver-side footer sweep (Tables.rowCount) — ZERO extra Spark
-      // jobs, where the earlier count() scheduled one per invocation
-      // (VERDICT r17 #6); with a real catalog, table statistics play
-      // this role.
-      val emb = Tables.embeddings(s, d)
-      val bits = Similarity.adaptiveBits(Tables.rowCount(s, d, "embeddings"),
-        E6TargetBucket, E6MinBits, E6MaxBits)
-      Similarity.semanticDup(emb, dim = 64, bits = bits, tau = 0.3,
-          maxBucketSize = E6BucketCap)
-        .orderBy("vec_id")
-    }
-
-    /** Symmetric int8 quantization of embeddings (storage path of a 100 TB
-      * vector corpus): scale = max|x|, q = ⌊127x/scale + 0.5⌋. Summarized
-      * per vector (sum/min/max of the quantized codes) so the oracle diff
-      * stays compact while still pinning every element. */
-    def e4_embedding_quantize(s: SparkSession, d: String): DataFrame =
-      Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .withColumn("scale", Similarity.absMax(col("v")))
-        .withColumn("q", Similarity.quantizeInt8(col("v"), col("scale")))
-        .select(col("vec_id"), round(col("scale"), 6).as("scale"),
-          aggregate(col("q"), lit(0L), (a, x) => a + x).as("q_sum"),
-          array_min(col("q")).as("q_min"), array_max(col("q")).as("q_max"))
-        .orderBy("vec_id")
-
-    /** Overlapping token-window chunking (context packing): windows of 32
-      * tokens every 24 — the explode-shaped op a pretraining pipeline runs
-      * over every document. */
-    def t5_chunk_windows(s: SparkSession, d: String): DataFrame =
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          filter(split(col("text"), "\\s+"), t => length(t) > 0).as("toks"))
-        .select(col("doc_id"),
-          posexplode(TextOps.chunkTexts(col("toks"), window = 32, stride = 24)))
-        .select(col("doc_id"), col("pos").cast("int").as("chunk_idx"),
-          col("col").as("chunk_text"))
-        .orderBy("doc_id", "chunk_idx")
-
-    /** Approx distinct (HLL) from the PORTABLE register table — the raw
-      * Flajolet estimator α·m²/Σ2^(−M_j) evaluated in EXACT integer
-      * arithmetic over [[graft.operators.Sketch.hllRegistersBy]]'s m=64
-      * registers (α_64 = 0.709 as the rational 709/1000; Σ2^(−M_j)
-      * cleared by the common denominator 2²⁷, so z_num ≤ 64·2²⁷ and the
-      * quotient 709·m²·2²⁷ div (1000·z_num) is one positive BIGINT floor
-      * division — replayable bit-for-bit in SQL, unlike the opaque
-      * built-in `approx_count_distinct`). The exact distinct rides along
-      * for drift eyeballing. n_zero_registers is the linear-counting
-      * trigger input (V); at this cardinality V=0 and the raw path is the
-      * published estimator, no float ln anywhere. */
-    def x1_approx_distinct(s: SparkSession, d: String): DataFrame = {
-      val src = graft.core.Caching.shared(li(s, d)
-        .select(col("l_returnflag").as("grp"),
-          col("l_partkey").cast("string").as("k")))
-      val regs = graft.operators.Sketch.hllRegistersBy(src, "grp", "k", m = 64)
-      // zero-fill the grid: |groups|·64 rows, broadcast-sized both sides
-      val grid = src.select("grp").distinct()
-        .crossJoin(s.range(64).select(col("id").as("bucket")))
-      val est = grid.join(regs, Seq("grp", "bucket"), "left")
-        .select(col("grp"), coalesce(col("register"), lit(0)).as("register"))
-        .groupBy("grp")
-        .agg(
-          sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(27 - register AS INT))"))
-            .as("z_num"),
-          sum(when(col("register") === 0, 1L).otherwise(0L))
-            .as("n_zero_registers"))
-        // 709 · 64² · 2²⁷ = 389,776,872,046,592 — fits BIGINT with room
-        .select(col("grp"),
-          expr("389776872046592 div (1000 * z_num)").as("hll_est"),
-          col("n_zero_registers"))
-      val exact = src.groupBy("grp").agg(countDistinct("k").as("exact_parts"))
-      est.join(exact, Seq("grp"))
-        .select(col("grp").as("l_returnflag"), col("hll_est"),
-          col("n_zero_registers"), col("exact_parts"))
-        .orderBy("l_returnflag")
-    }
-
-    /** Salted two-phase rasterize-count: must equal the plain A1 aggregate
-      * (the skew-mitigation path, verified against the unsalted oracle). */
-    def x2_salted_rasterize(s: SparkSession, d: String): DataFrame =
-      graft.operators.Skew.saltedCount(pixels(s, d), Seq("px", "py"), saltBuckets = 16)
-        .orderBy("px", "py")
-
-    /** ROLLUP aggregation (grouping-sets family). */
-    def x3_rollup(s: SparkSession, d: String): DataFrame =
-      li(s, d)
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(round(sum("l_quantity"), 2).as("sum_qty"), count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-
-    /** Rank-over-rollup (the TPC-DS Q67 shape): cent-exact revenue per
-      * (shipmode, returnflag) ROLLUP level, then the top 3 WITHIN each
-      * aggregation level — one aggregate pass + one window over the
-      * |groups|-sized rollup output (the window never sees fact rows).
-      * Levels derive from nullness (both columns non-null in the data)
-      * and sentinel-coalesce to 'ALL' so set identity crosses engines
-      * without grouping_id bit-order assumptions. */
-    def x37_rollup_topk(s: SparkSession, d: String): DataFrame = {
-      val agg = li(s, d)
-        .withColumn("shipyear", year(col("l_shipdate")).cast("long"))
-        .rollup("shipyear", "l_returnflag")
-        .agg(sum(floor(col("l_extendedprice") * 100 + lit(0.5)).cast("long"))
-          .as("rev_cents"))
-        .withColumn("lvl",
-          when(col("shipyear").isNull && col("l_returnflag").isNull, 2L)
-            .when(col("l_returnflag").isNull, 1L).otherwise(0L))
-        .select(col("lvl"), coalesce(col("shipyear"), lit(-1L)).as("shipyear"),
-          coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"), col("rev_cents"))
-      agg
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("lvl")
-            .orderBy(col("rev_cents").desc, col("shipyear"), col("returnflag"))))
-        .filter(col("rank") <= 3)
-        .orderBy("lvl", "rank")
-    }
-
-    /** Exact distributed percentiles (sort-based aggregate; the shape of
-      * the reference's per-band statistics taken to quantiles). Linear
-      * interpolation matches DuckDB's quantile_cont; epsilon-guarded
-      * rounding as in q1/j5. */
-    def x6_percentile(s: SparkSession, d: String): DataFrame =
-      Tables.events(s, d)
-        .groupBy("event_type")
-        .agg(
-          round(expr("percentile(value, 0.25)") + lit(5e-7), 4).as("p25"),
-          round(expr("percentile(value, 0.5)") + lit(5e-7), 4).as("p50"),
-          round(expr("percentile(value, 0.75)") + lit(5e-7), 4).as("p75"),
-          count(lit(1)).as("n"))
-        .orderBy("event_type")
-
-    /** Fixed-grid approximate quantiles per event type — the mergeable
-      * histogram-sketch shape a 100 TB percentile actually runs (x6's
-      * exact `percentile()` holds every value per group in memory).
-      * Deterministic: the estimate is a pure IEEE function of exact bucket
-      * counts and per-group min/max, so the oracle replays it bit-for-bit.
-      * See [[graft.operators.Sketch.gridQuantiles]]. */
-    def x20_approx_quantile(s: SparkSession, d: String): DataFrame =
-      graft.operators.Sketch.gridQuantiles(
-          Tables.events(s, d), "value", "event_type", buckets = 128)
-        .orderBy("event_type")
-
-    /** Interval-containment join via bucketization (RangeJoin): follow-on
-      * clicks within one hour of each view, per user — the equi-join-on-bin
-      * form of what a raw BETWEEN predicate would plan as an O(n²) nested
-      * loop. */
-    def x7_interval_join(s: SparkSession, d: String): DataFrame = {
-      val ev = Tables.events(s, d)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("event_id"), col("user_id"), col("ts").as("w_start"),
-          (col("ts") + expr("INTERVAL 1 HOUR")).as("w_end"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"))
-      graft.operators.RangeJoin
-        .intervalJoin(views, clicks, Seq("user_id"),
-          "w_start", "w_end", "click_ts", binWidthSec = 3600)
-        .groupBy("event_id").agg(count(lit(1)).as("n_clicks"))
-        .orderBy("event_id")
-    }
-
-    /** Correlated-subquery shape: parts priced above their brand average. */
-    def x4_correlated_sub(s: SparkSession, d: String): DataFrame = {
-      val p = Tables.part(s, d)
-      val brandAvg = p.groupBy("p_brand").agg(avg("p_retailprice").as("brand_avg"))
-      p.join(brandAvg, "p_brand")
-        .filter(col("p_retailprice") > col("brand_avg"))
-        .select(col("p_partkey"), col("p_brand"), round(col("p_retailprice"), 2).as("price"))
-        .orderBy("p_partkey")
-    }
-
-    /** Time-bucket gap fill (resample): per-user hourly event counts with
-      * ZERO rows for silent hours — the time-series twin of K4's padding
-      * semantics. The hour spine generates per key from its own min/max
-      * (`sequence` + `explode`, no driver loop, no global calendar), so a
-      * key's row count is bounded by its own activity span. */
-    def x9_gap_fill(s: SparkSession, d: String): DataFrame = {
-      val ev = Tables.events(s, d).filter(col("user_id") < 50)
-        .select(col("user_id"), date_trunc("hour", col("ts")).as("h"))
-      val counts = ev.groupBy("user_id", "h").agg(count(lit(1)).as("n"))
-      val spine = ev.groupBy("user_id").agg(min("h").as("h0"), max("h").as("h1"))
-        .select(col("user_id"),
-          explode(sequence(col("h0"), col("h1"), expr("interval 1 hour"))).as("h"))
-      spine.join(counts, Seq("user_id", "h"), "left")
-        .na.fill(0, Seq("n"))
-        .orderBy("user_id", "h")
-    }
-
-    /** Funnel: view → click → purchase with a 24 h per-step conversion
-      * window; first-touch anchors, strictly-increasing timestamps. All
-      * shuffles keyed on user_id (see [[graft.operators.Funnel]]). */
-    def x10_funnel(s: SparkSession, d: String): DataFrame =
-      graft.operators.Funnel.counts(Tables.events(s, d),
-          stages = Seq("view", "click", "purchase"), withinSeconds = 86400L)
-        .orderBy("stage_idx")
-
-    /** Cohort retention: cohort = calendar day of each user's first event;
-      * n_users = distinct users of that cohort active again `day_offset`
-      * days later. Two aggregates and one user-keyed join — the cohort
-      * relation is user-cardinality, never event-cardinality; the day is
-      * projected once so the distinct is over (user, cohort, offset)
-      * triples. Cohort serializes as VARCHAR so the driver hash never
-      * rides on engine DATE encodings. */
-    def x11_retention(s: SparkSession, d: String): DataFrame = {
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), col("ts").cast("date").as("day"))
-      val cohorts = ev.groupBy("user_id").agg(min("day").as("cohort"))
-      ev.join(cohorts, "user_id")
-        .select(col("user_id"), col("cohort"),
-          datediff(col("day"), col("cohort")).as("day_offset"))
-        .distinct()
-        .groupBy("cohort", "day_offset")
-        .agg(count(lit(1)).as("n_users"))
-        .select(col("cohort").cast("string").as("cohort"),
-          col("day_offset").cast("int").as("day_offset"), col("n_users"))
-        .orderBy("cohort", "day_offset")
-    }
-
-    /** CUBE: all 2^2 grouping combinations over (returnflag, linestatus)
-      * in ONE aggregate pass (Catalyst expands the grouping sets map-side;
-      * no union of four scans). Rollup-null cells surface as 'ALL' so the
-      * oracle never compares engine NULL orderings; the grouping id
-      * disambiguates a genuine 'ALL' value from a rolled-up one.
-      * l_quantity values are integral doubles, so the BIGINT-cast sum is
-      * exact in any accumulation order. */
-    def x12_cube(s: SparkSession, d: String): DataFrame =
-      li(s, d)
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(grouping_id().cast("long").as("gid"),
-          count(lit(1)).as("n"),
-          sum("l_quantity").cast("long").as("sum_qty"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("rf"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("ls"),
-          col("gid"), col("n"), col("sum_qty"))
-        .orderBy("gid", "rf", "ls")
-
-    /** The full rank-function family in one pass: rank/dense_rank/
-      * percent_rank/cume_dist over a TIED ordering (coarse value buckets —
-      * real peer groups) plus ntile/row_number over the unique tiebroken
-      * ordering (ntile depends on physical row order, so it only
-      * determinizes over a total order). One window sort per ordering. */
-    def w4_rank_family(s: SparkSession, d: String): DataFrame = {
-      val ev = Tables.events(s, d).filter(col("user_id") < 10)
-        .select(col("event_id"), col("event_type"),
-          floor(col("value")).cast("long").as("bucket"))
-      val wTies = Window.partitionBy("event_type").orderBy("bucket")
-      val wUnique = Window.partitionBy("event_type").orderBy("bucket", "event_id")
-      ev.select(col("event_id"), col("event_type"), col("bucket"),
-          rank().over(wTies).as("rnk"),
-          dense_rank().over(wTies).as("drnk"),
-          round(percent_rank().over(wTies), 6).as("pct_rank"),
-          round(cume_dist().over(wTies), 6).as("cume"),
-          ntile(4).over(wUnique).as("quartile"),
-          row_number().over(wUnique).as("rn"))
-        .orderBy("event_id")
-    }
-
-    /** Relational EXCEPT (distinct set difference): parts never shipped in
-      * bulk (quantity > 45) — Catalyst plans EXCEPT as an aggregate +
-      * left-anti join, the shuffle-minimal form; the filter pushes to the
-      * lineitem scan. */
-    def o5_set_except(s: SparkSession, d: String): DataFrame =
-      Tables.part(s, d).select(col("p_partkey"))
-        .except(li(s, d).filter(col("l_quantity") > 45)
-          .select(col("l_partkey").as("p_partkey")))
-        .orderBy("p_partkey")
-
-    /** JSON property extraction over the events payload column —
-      * `get_json_object` fused into the scan (no UDF, no parse step
-      * materialized), then an ordinary aggregate. */
-    def t21_json_extract(s: SparkSession, d: String): DataFrame =
-      Tables.events(s, d)
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("k").as("sum_k"),
-          round(avg("k") + lit(5e-7), 4).as("avg_k"))
-        .orderBy("event_type")
-
-    /** MERGE upsert: a deterministic update batch (changed rows, identical
-      * re-deliveries, fresh inserts) applied to the corpus in one
-      * full-outer join — see [[graft.operators.Merge.upsert]]. */
-    def x13_upsert(s: SparkSession, d: String): DataFrame = {
-      val t = Tables.documents(s, d).select("doc_id", "source", "n_chars")
-      val batch = t.filter(col("doc_id") % 10 === 0)
-        .withColumn("n_chars", col("n_chars") + 7)
-        .unionAll(t.filter(col("doc_id") % 10 === 1))
-        .unionAll(t.filter(col("doc_id") % 17 === 0)
-          .withColumn("doc_id", col("doc_id") + 1000000))
-      graft.operators.Merge.upsert(t, batch, "doc_id", Seq("source", "n_chars"))
-        .orderBy("doc_id")
-    }
-
-    /** Full-CRUD CDC apply — the Debezium-feed step x13's upsert can't
-      * express: a pre-compacted I/U/D batch applied in ONE full-outer
-      * join (deletes are a filter on the joined relation, not a second
-      * anti-join pass). See [[graft.operators.Merge.applyChanges]]. */
-    def x35_cdc_apply(s: SparkSession, d: String): DataFrame = {
-      val t = Tables.documents(s, d).select("doc_id", "source", "n_chars")
-      val changes = t.filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id"), col("source"), col("n_chars"), lit("D").as("op"))
-        .unionAll(t.filter(col("doc_id") % 10 === 1)
-          .select(col("doc_id"), col("source"),
-            (col("n_chars") + 11).as("n_chars"), lit("U").as("op")))
-        .unionAll(t.filter(col("doc_id") % 17 === 0)
-          .select((col("doc_id") + 1000000).as("doc_id"), col("source"),
-            col("n_chars"), lit("I").as("op")))
-      graft.operators.Merge.applyChanges(t, changes, "doc_id",
-        Seq("source", "n_chars")).orderBy("doc_id")
-    }
-
-    /** Dedup-pipeline metrology — recall of the LSH near-dup pipeline
-      * (d3 candidates → exact ≥ 0.5 verify) against the COMPLETE ground
-      * truth d17's prefix-filter join provides: the measurement that
-      * decides whether the probabilistic path's bands/rows are tuned
-      * tightly enough to ship. Both pair sets use the identical integer
-      * cross-multiplied threshold, so found ⊆ true by construction and
-      * the recall is exact. */
-    def d18_lsh_recall(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d)
-      val exact = Dedup.prefixFilterJoin(docs, minJaccard = 0.5)
-        .select("doc1", "doc2")
-      val sigs = Dedup.minhashSignatures(docs, k = 4)
-      val cands = Dedup.lshCandidates(Dedup.lshBuckets(sigs, k = 4, rowsPerBand = 2),
-        maxBucketSize = lshCap)
-      val lsh = Dedup.jaccard(docs, cands)
-        .filter(col("inter") * 1000000L >= col("uni") * 500000L)
-        .select(col("doc1"), col("doc2"), lit(1L).as("__hit"))
-      exact.join(lsh, Seq("doc1", "doc2"), "left")
-        .agg(count(lit(1)).as("n_true"),
-          coalesce(sum("__hit"), lit(0L)).as("n_found"))
-        .select(col("n_true"), col("n_found"),
-          when(col("n_true") === 0, 1000000L)
-            .otherwise(expr("n_found * 1000000 div n_true")).as("recall_micro"))
-    }
-
-    /** Snapshot diff (CDC): removals, in-place changes, and additions
-      * between two corpus versions as a delta-sized report — see
-      * [[graft.operators.Merge.diff]]. */
-    def x14_snapshot_diff(s: SparkSession, d: String): DataFrame = {
-      val old = Tables.documents(s, d).select("doc_id", "n_chars")
-      val nw = old.filter(col("doc_id") % 13 =!= 0)
-        .withColumn("n_chars",
-          when(col("doc_id") % 10 === 0, col("n_chars") + 5).otherwise(col("n_chars")))
-        .unionAll(old.filter(col("doc_id") % 29 === 0)
-          .withColumn("doc_id", col("doc_id") + 2000000))
-      graft.operators.Merge.diff(old, nw, "doc_id", Seq("n_chars"))
-        .orderBy("doc_id")
-    }
-
-    /** SCD Type-2 dimension build — the versioned-attribute shape that
-      * completes the CDC family (x13 upsert, x14 diff): the order-status
-      * history of each customer as half-open validity intervals. The log
-      * is first made unique per (custkey, date) with the max_by(orderkey)
-      * discipline so both engines see the identical change sequence —
-      * see [[graft.operators.Merge.scd2]]. */
-    def x15_scd2(s: SparkSession, d: String): DataFrame = {
-      val log = Tables.orders(s, d)
-        .groupBy(col("o_custkey").as("custkey"), col("o_orderdate").as("d"))
-        .agg(max_by(col("o_orderstatus"), col("o_orderkey")).as("status"))
-      graft.operators.Merge.scd2(log, "custkey", "d", Seq("status"))
-        .orderBy("custkey", "valid_from")
-    }
-
-    /** Explicit GROUPING SETS — the reporting shape between x3's ROLLUP
-      * and x12's CUBE: exactly the requested grouping combinations in ONE
-      * aggregate pass (Catalyst expands rows once, no per-set rescans).
-      * Spark's and DuckDB's grouping_id bit conventions differ, so the
-      * sentinel-coalesce carries the set identity portably. */
-    def x16_grouping_sets(s: SparkSession, d: String): DataFrame =
-      li(s, d)
-        .groupingSets(
-          Seq(Seq(col("l_returnflag"), col("l_linestatus")),
-            Seq(col("l_returnflag")), Seq.empty),
-          col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"),
-          sum("l_quantity").cast("long").as("sum_qty"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("rf"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("ls"),
-          col("n"), col("sum_qty"))
-        .orderBy("rf", "ls")
-
-    /** Next-event transition counts (the Markov matrix behavioral
-      * pipelines fit): one window lead per user's time-ordered event
-      * stream, then an ordinary count aggregate. event_id tiebreaks equal
-      * timestamps so the sequence is total-ordered in any engine. */
-    def x17_transitions(s: SparkSession, d: String): DataFrame = {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      Tables.events(s, d)
-        .select(col("event_type"), col("user_id"), col("ts"), col("event_id"))
-        .withColumn("next_type", lead(col("event_type"), 1).over(w))
-        .filter(col("next_type").isNotNull)
-        .groupBy("event_type", "next_type")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("event_type", "next_type")
-    }
-
-    /** First-touch attribution: each purchase credits the user's EARLIEST
-      * event in the preceding 7 days. One user-keyed equi join with the
-      * time window as a residual predicate, then an argmin via struct-min
-      * ((ts, event_id) is unique, so the lexicographic min IS the
-      * earliest-then-lowest-id event — order-independent and map-side
-      * combined). The purchase relation is user-keyed too, so at scale
-      * both sides co-partition. */
-    def x18_first_touch(s: SparkSession, d: String): DataFrame = {
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("pid"), col("user_id"), col("ts").as("pts"))
-      p.join(ev.select(col("user_id"), col("ts"), col("event_id"), col("event_type")),
-          Seq("user_id"))
-        .filter(col("ts") >= col("pts") - expr("INTERVAL 7 DAYS") &&
-          col("ts") < col("pts"))
-        .groupBy(col("pid").as("purchase_id"), col("user_id"), col("pts"))
-        .agg(min(struct(col("ts"), col("event_id"), col("event_type"))).as("f"))
-        .select(col("purchase_id"), col("user_id"),
-          col("f.event_type").as("first_touch"), col("f.ts").as("touch_ts"))
-        .orderBy("purchase_id")
-    }
-
-    /** TPC-H Q3 shape — the selective 3-table join feeding a top-k: both
-      * date filters push to the scans, the aggregate is partial+final, and
-      * the LIMIT plans as TakeOrderedAndProject (a per-partition top-k +
-      * single-reduce merge — no global sort materializes). revenue ties
-      * are broken by l_orderkey so the cut is deterministic. */
-    def q3_topk_revenue(s: SparkSession, d: String): DataFrame =
-      Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING")
-        .join(Tables.orders(s, d), col("o_custkey") === col("c_custkey"))
-        .filter(col("o_orderdate") < lit("1995-03-15"))
-        .join(li(s, d), col("l_orderkey") === col("o_orderkey"))
-        .filter(col("l_shipdate") > lit("1995-03-15"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          + lit(5e-7), 2).as("revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-
-    /** TPC-H Q4 shape — EXISTS over a correlated non-equi predicate, the
-      * late-shipped-orders tally. The EXISTS plans as a LEFT SEMI join:
-      * equi key (l_orderkey = o_orderkey) drives the shuffle/broadcast,
-      * the interval arithmetic rides along as a residual condition, and
-      * each order is counted at most once no matter how many late lines it
-      * has — no distinct pass needed. Both date filters push to the orders
-      * scan. */
-    def q4_order_priority(s: SparkSession, d: String): DataFrame = {
-      val o = Tables.orders(s, d)
-        .filter(col("o_orderdate") >= lit("1995-01-01") &&
-          col("o_orderdate") < lit("1995-04-01"))
-        .select("o_orderkey", "o_orderdate", "o_orderpriority")
-      val l = Tables.lineitem(s, d).select("l_orderkey", "l_shipdate")
-      o.join(l, col("l_orderkey") === col("o_orderkey") &&
-          col("l_shipdate") >= col("o_orderdate") + expr("INTERVAL 60 DAYS"),
-          "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy("o_orderpriority")
-    }
-
-    /** TPC-H Q6 shape — the pure scan benchmark: every predicate reaches
-      * the parquet scan's PushedFilters (date range, discount band,
-      * quantity cap), the read schema prunes to the filter + aggregate
-      * columns, and the global aggregate is a partial+final pair — the
-      * query IS the scan. The +5e-7 epsilon before round guards the
-      * half-even boundary against accumulation-order differences (q1's
-      * discipline). */
-    def q6_forecast_revenue(s: SparkSession, d: String): DataFrame =
-      li(s, d)
-        .filter(col("l_shipdate") >= lit("1995-01-01") &&
-          col("l_shipdate") < lit("1996-01-01") &&
-          col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-        .agg(round(sum(col("l_extendedprice") * col("l_discount")) + lit(5e-7), 2)
-          .as("revenue"),
-          count(lit(1)).as("n_lines"))
-
-    /** TPC-H Q19 shape — disjunctive OR-of-ANDs predicate spanning both
-      * join sides. Catalyst CNF-converts the disjunction and pushes the
-      * single-table factors to each scan (brand/size bounds to part,
-      * the union quantity envelope to lineitem); the full predicate stays
-      * as the join residual. The plan to check: PushedFilters on BOTH
-      * scans despite every branch mixing tables. */
-    def q19_disjunctive(s: SparkSession, d: String): DataFrame = {
-      val branch = (b: String, sizeHi: Int, qLo: Int, qHi: Int) =>
-        col("p_brand") === b && col("p_size").between(1, sizeHi) &&
-          col("l_quantity").between(qLo, qHi)
-      li(s, d).join(Tables.part(s, d), col("p_partkey") === col("l_partkey"))
-        .filter(branch("Brand#1", 15, 1, 11) ||
-          branch("Brand#2", 25, 10, 20) ||
-          branch("Brand#3", 35, 20, 30))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          + lit(5e-7), 2).as("revenue"),
-          count(lit(1)).as("n_lines"))
-    }
-
-    /** TPC-H Q14 shape — conditional-aggregation ratio (promo revenue
-      * share). Revenue quantizes to integer cents PER ROW (floor + 0.5 of
-      * the identical per-row product), so both sums are exact integers and
-      * the ratio is deterministic regardless of accumulation order — the
-      * cross-engine discipline for ratios of float sums. Date filter
-      * pushes to the lineitem scan; one join, one global aggregate. */
-    def q14_promo_share(s: SparkSession, d: String): DataFrame = {
-      val j = li(s, d)
-        .filter(col("l_shipdate") >= lit("1995-09-01") &&
-          col("l_shipdate") < lit("1995-10-01"))
-        .join(Tables.part(s, d), col("p_partkey") === col("l_partkey"))
-        .select(col("p_type"),
-          floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100
-            + lit(0.5)).cast("long").as("cents"))
-      j.agg(
-        round(lit(100.0) *
-          sum(when(col("p_type") === "PROMO", col("cents")).otherwise(0L)) /
-          sum(col("cents")) + lit(5e-7), 4).as("promo_pct"),
-        sum(col("cents")).as("total_cents"),
-        count(lit(1)).as("n_lines"))
-    }
-
-    /** TPC-H Q7 shape — two-nation volume shipping: the symmetric
-      * nation-pair predicate over a 5-table join, revenue per
-      * (supp_nation, cust_nation, ship year). The nation dimension
-      * broadcasts twice under different roles; per-row cent quantization
-      * keeps the yearly sums integer-exact. */
-    def q7_nation_volume(s: SparkSession, d: String): DataFrame = {
-      val sn = Tables.nation(s, d)
-        .select(col("n_nationkey").as("__snk"), col("n_name").as("supp_nation"))
-      val cn = Tables.nation(s, d)
-        .select(col("n_nationkey").as("__cnk"), col("n_name").as("cust_nation"))
-      li(s, d)
-        .filter(col("l_shipdate") >= lit("1996-01-01") &&
-          col("l_shipdate") < lit("1998-01-01"))
-        .join(Tables.orders(s, d), col("o_orderkey") === col("l_orderkey"))
-        .join(Tables.customer(s, d), col("c_custkey") === col("o_custkey"))
-        .join(Tables.supplier(s, d), col("s_suppkey") === col("l_suppkey"))
-        .join(broadcast(sn), col("__snk") === col("s_nationkey"))
-        .join(broadcast(cn), col("__cnk") === col("c_nationkey"))
-        .filter((col("supp_nation") === "NATION_1" && col("cust_nation") === "NATION_2") ||
-          (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
-        .select(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).cast("long").as("l_year"),
-          floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100
-            + lit(0.5)).cast("long").as("__c"))
-        .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(sum("__c").as("rev_cents"), count(lit(1)).as("n_lines"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    }
-
-    /** TPC-H Q8 shape — national market share: one nation's fraction of
-      * ASIA-customer STANDARD-part revenue per order year. The share is a
-      * conditional-sum ratio over per-row cent quantization, so the float
-      * division is one deterministic op over two exact integers. */
-    def q8_market_share(s: SparkSession, d: String): DataFrame = {
-      val asiaNations = Tables.nation(s, d)
-        .join(Tables.region(s, d), col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name") === "ASIA").select(col("n_nationkey").as("__cnk"))
-      val sn = Tables.nation(s, d)
-        .select(col("n_nationkey").as("__snk"), col("n_name").as("supp_nation"))
-      li(s, d)
-        .join(Tables.part(s, d).filter(col("p_type") === "STANDARD"),
-          col("p_partkey") === col("l_partkey"))
-        .join(Tables.orders(s, d)
-          .filter(col("o_orderdate") >= lit("1996-01-01") &&
-            col("o_orderdate") < lit("1998-01-01")),
-          col("o_orderkey") === col("l_orderkey"))
-        .join(Tables.customer(s, d), col("c_custkey") === col("o_custkey"))
-        .join(broadcast(asiaNations), col("__cnk") === col("c_nationkey"), "left_semi")
-        .join(Tables.supplier(s, d), col("s_suppkey") === col("l_suppkey"))
-        .join(broadcast(sn), col("__snk") === col("s_nationkey"))
-        .select(year(col("o_orderdate")).cast("long").as("o_year"),
-          col("supp_nation"),
-          floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100
-            + lit(0.5)).cast("long").as("__c"))
-        .groupBy("o_year")
-        .agg(round(sum(when(col("supp_nation") === "NATION_3", col("__c"))
-            .otherwise(0L)).cast("double") / sum("__c") + lit(5e-7), 4).as("mkt_share"),
-          sum("__c").as("total_cents"))
-        .orderBy("o_year")
-    }
-
-    /** TPC-H Q10 shape — returned-item revenue: top 20 customers by
-      * returned (R-flag) revenue over one quarter of orders. Classic
-      * fact-to-dim join funnel ending in TakeOrdered, not a global sort. */
-    def q10_returned_items(s: SparkSession, d: String): DataFrame =
-      Tables.customer(s, d)
-        .join(Tables.orders(s, d)
-          .filter(col("o_orderdate") >= lit("1996-10-01") &&
-            col("o_orderdate") < lit("1997-01-01")),
-          col("o_custkey") === col("c_custkey"))
-        .join(li(s, d).filter(col("l_returnflag") === "R"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(Tables.nation(s, d)), col("n_nationkey") === col("c_nationkey"))
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"),
-          floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100
-            + lit(0.5)).cast("long").as("__c"))
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(sum("__c").as("rev_cents"))
-        .orderBy(col("rev_cents").desc, col("c_custkey")).limit(20)
-
-    /** TPC-H Q15 shape — top supplier: quarterly revenue per supplier,
-      * keep the max (the VIEW + scalar-max subquery form: aggregate once,
-      * broadcast the 1-row max back as a filter). */
-    def q15_top_supplier(s: SparkSession, d: String): DataFrame = {
-      // pinned: the revenue view feeds BOTH the scalar max and the join —
-      // without the pin the quarter's lineitem scan-aggregate runs twice
-      val rev = graft.core.Caching.shared(li(s, d)
-        .filter(col("l_shipdate") >= lit("1996-01-01") &&
-          col("l_shipdate") < lit("1996-04-01"))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100
-          + lit(0.5)).cast("long")).as("total_cents")))
-      val mx = rev.agg(max("total_cents").as("__mx"))
-      rev.join(broadcast(mx), col("total_cents") === col("__mx"))
-        .join(Tables.supplier(s, d), col("s_suppkey") === col("l_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), col("total_cents"))
-        .orderBy("s_suppkey")
-    }
-
-    /** TPC-H Q17 shape — small-quantity revenue: lineitems under 20% of
-      * their part's average quantity, for one brand's SMALL parts. The
-      * correlated AVG subquery becomes one aggregate + key join over the
-      * pinned part-lineitem relation (consumed by both the average and
-      * the filter). */
-    def q17_small_qty(s: SparkSession, d: String): DataFrame = {
-      val pts = Tables.part(s, d)
-        .filter(col("p_brand") === "Brand#23" && col("p_type") === "SMALL")
-        .select(col("p_partkey"))
-      val lp = graft.core.Caching.shared(
-        li(s, d).join(broadcast(pts), col("p_partkey") === col("l_partkey"))
-          .select(col("p_partkey"), col("l_quantity"),
-            floor(col("l_extendedprice") * 100 + lit(0.5)).cast("long").as("__c")))
-      val avgQ = lp.groupBy("p_partkey").agg(avg("l_quantity").as("__avgq"))
-      lp.join(avgQ, "p_partkey")
-        .filter(col("l_quantity") < lit(0.2) * col("__avgq"))
-        .agg(coalesce(sum("__c"), lit(0L)).as("sum_cents"),
-          count(lit(1)).as("n_lines"))
-        .select(round(col("sum_cents").cast("double") / 100.0 / 7.0 + lit(5e-7), 2)
-          .as("avg_yearly"), col("sum_cents"), col("n_lines"))
-    }
-
-    /** TPC-H Q21 shape (adapted to the reduced schema) — suppliers who
-      * kept multi-supplier orders waiting: this supplier shipped > 60 days
-      * after the order date, some OTHER supplier shares the order
-      * (EXISTS → left-semi), and NO other supplier was also late
-      * (NOT EXISTS → left-anti). The late relation is pinned: it feeds
-      * the probe side and both correlated legs. */
-    def q21_waiting_supplier(s: SparkSession, d: String): DataFrame = {
-      // The EXISTS/NOT-EXISTS pair is ONE per-order aggregate in disguise
-      // (round 16 — was a triple self-join paying two extra full-fact
-      // probe shuffles, the slowest honest sf1 entry): a (supplier, order)
-      // wins iff the supplier is late on the order, the order has ≥2
-      // distinct suppliers, and exactly ONE distinct supplier is late —
-      // and with nlate = 1 the winning supplier is recoverable from the
-      // same aggregate as max(late supplier).
-      //
-      // Round 19 collapsed the two aggregate levels (distinct (order,
-      // supplier, late) pairs, then per-order counts) into ONE per-order
-      // hash aggregate: over totally-ordered supplier keys, "≥2 distinct
-      // suppliers" is min(skey) != max(skey) and "exactly one distinct
-      // late supplier" is min(late skey) == max(late skey) (non-null ==
-      // is null-rejecting, so zero-late orders drop exactly as nlate=1
-      // did), with the winner = max(late skey) unchanged. A line is late
-      // iff l_shipdate > o_orderdate + 60d, so the per-line when() feeds
-      // the same supplier set the pair-level any-line-late flag induced.
-      // One less exchange at broadcast-join SFs, one less aggregate level
-      // everywhere, map-side partial state one row per order instead of
-      // one per (order, supplier) (guide §2.3/§2.4). Row-for-row identical
-      // to the correlated form; the oracle is unchanged.
-      val late = col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS")
-      val perOrder = li(s, d)
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-        .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_orderdate")),
-          col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("l_orderkey"))
-        .agg(min(col("l_suppkey")).as("__smin"),
-          max(col("l_suppkey")).as("__smax"),
-          min(when(late, col("l_suppkey"))).as("__lmin"),
-          max(when(late, col("l_suppkey"))).as("late_sk"))
-      perOrder
-        .filter(col("__smin") =!= col("__smax") && col("__lmin") === col("late_sk"))
-        .join(broadcast(Tables.supplier(s, d)), col("s_suppkey") === col("late_sk"))
-        .groupBy("s_name").agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name")).limit(20)
-    }
-
-    /** TPC-H Q22 shape (adapted) — idle high-balance customers: balance
-      * above the positive-balance average (scalar subquery → 1-row
-      * broadcast) with no high-value order (anti-join), tallied per
-      * nation with cent-exact balance sums. */
-    def q22_idle_customers(s: SparkSession, d: String): DataFrame = {
-      val c = Tables.customer(s, d)
-      val avgBal = c.filter(col("c_acctbal") > 0).agg(avg("c_acctbal").as("__ab"))
-      val high = Tables.orders(s, d).filter(col("o_totalprice") > 400000)
-        .select(col("o_custkey")).distinct()
-      c.crossJoin(broadcast(avgBal))
-        .filter(col("c_acctbal") > col("__ab"))
-        .join(high, col("o_custkey") === col("c_custkey"), "left_anti")
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("numcust"),
-          sum(floor(col("c_acctbal") * 100 + lit(0.5)).cast("long")).as("bal_cents"))
-        .orderBy("c_nationkey")
-    }
-
-    /** TPC-H Q2 shape (adapted — no partsupp in the reduced schema, so
-      * lineitem's observed unit price stands in for ps_supplycost): for
-      * each small STANDARD part, the EUROPE suppliers whose minimum
-      * observed unit price equals the part's EUROPE-wide minimum. The
-      * correlated-min subquery becomes aggregate + join-back on the PINNED
-      * offers relation (it feeds both the per-part min and the equality
-      * probe); unit price cent-quantizes per row so min/equality are
-      * integer-exact. */
-    def q2_min_cost_supp(s: SparkSession, d: String): DataFrame = {
-      val es = Tables.supplier(s, d)
-        .join(broadcast(Tables.nation(s, d)
-          .join(Tables.region(s, d), col("n_regionkey") === col("r_regionkey"))
-          .filter(col("r_name") === "EUROPE")
-          .select(col("n_nationkey"), col("n_name"))),
-          col("n_nationkey") === col("s_nationkey"))
-      val pts = Tables.part(s, d)
-        .filter(col("p_type") === "STANDARD" && col("p_size") < 10)
-        .select(col("p_partkey"), col("p_brand"))
-      val offers = graft.core.Caching.shared(li(s, d)
-        .join(broadcast(pts.select("p_partkey")),
-          col("p_partkey") === col("l_partkey"), "left_semi")
-        .join(broadcast(es.select(col("s_suppkey").as("__esk"))),
-          col("__esk") === col("l_suppkey"), "left_semi")
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(min(floor(col("l_extendedprice") / col("l_quantity") * 100
-          + lit(0.5)).cast("long")).as("unit_cents")))
-      val minc = offers.groupBy(col("l_partkey").as("__pk"))
-        .agg(min("unit_cents").as("__minc"))
-      offers
-        .join(minc, col("__pk") === col("l_partkey") &&
-          col("unit_cents") === col("__minc"))
-        .join(es, col("s_suppkey") === col("l_suppkey"))
-        .join(broadcast(pts), col("p_partkey") === col("l_partkey"))
-        .select(col("s_acctbal"), col("s_name"), col("n_name"), col("s_suppkey"),
-          col("p_partkey"), col("p_brand"), col("unit_cents"))
-        .orderBy(col("s_acctbal").desc, col("n_name"), col("s_name"),
-          col("p_partkey")).limit(20)
-    }
-
-    /** TPC-H Q9 shape (adapted — p_retailprice·0.6·qty stands in for the
-      * partsupp supply cost): per-nation-per-year profit on color-named
-      * parts. LIKE filter prunes the broadcast part dim; profit
-      * cent-quantizes per row (one identically-associated expression both
-      * engines evaluate bit-for-bit), so yearly sums are exact. */
-    def q9_product_profit(s: SparkSession, d: String): DataFrame =
-      li(s, d)
-        .join(broadcast(Tables.part(s, d).filter(col("p_name").like("red%"))
-          .select("p_partkey", "p_retailprice")),
-          col("p_partkey") === col("l_partkey"))
-        .join(Tables.supplier(s, d), col("s_suppkey") === col("l_suppkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("n_nationkey") === col("s_nationkey"))
-        .select(col("n_name").as("nation"),
-          year(col("l_shipdate")).cast("long").as("o_year"),
-          floor((col("l_extendedprice") * (lit(1) - col("l_discount"))
-            - col("p_retailprice") * lit(0.6) * col("l_quantity")) * 100
-            + lit(0.5)).cast("long").as("__c"))
-        .groupBy("nation", "o_year")
-        .agg(sum("__c").as("profit_cents"), count(lit(1)).as("n_lines"))
-        .orderBy(col("nation"), col("o_year").desc)
-
-    /** TPC-H Q11 shape (adapted — one nation's lineitem revenue per part
-      * stands in for partsupp stock value): parts whose value exceeds
-      * 1/1000 of the nation total. The pinned per-part aggregate feeds
-      * both the scalar total (1-row broadcast) and the filter; the
-      * threshold compares integers (value·1000 > total), no float
-      * fraction. */
-    def q11_important_stock(s: SparkSession, d: String): DataFrame = {
-      val ns = Tables.supplier(s, d)
-        .join(broadcast(Tables.nation(s, d).filter(col("n_name") === "NATION_7")),
-          col("n_nationkey") === col("s_nationkey"))
-        .select(col("s_suppkey").as("__sk"))
-      val vals = graft.core.Caching.shared(li(s, d)
-        .join(broadcast(ns), col("__sk") === col("l_suppkey"), "left_semi")
-        .groupBy(col("l_partkey"))
-        .agg(sum(floor(col("l_extendedprice") * 100 + lit(0.5)).cast("long"))
-          .as("val_cents")))
-      val tot = vals.agg(sum("val_cents").as("__tot"))
-      vals.crossJoin(broadcast(tot))
-        .filter(col("val_cents") * 1000 > col("__tot"))
-        .select(col("l_partkey").as("p_partkey"), col("val_cents"))
-        .orderBy(col("val_cents").desc, col("p_partkey"))
-    }
-
-    /** TPC-H Q12 shape (adapted — the reduced lineitem has no
-      * shipmode/commit/receipt dates, so ship delay classes stand in for
-      * shipmode): high- vs low-priority order counts per delay bucket.
-      * One fact-fact join; the CASE bucketing and priority split are pure
-      * conditional aggregation — map-side combined, two shuffle keys
-      * total. Dates are midnight-aligned so datediff is engine-exact. */
-    def q12_ship_priority(s: SparkSession, d: String): DataFrame = {
-      val delay = datediff(col("l_shipdate"), col("o_orderdate"))
-      li(s, d)
-        .join(Tables.orders(s, d), col("o_orderkey") === col("l_orderkey"))
-        .select(
-          when(delay <= 30, "1-fast").when(delay <= 90, "2-normal")
-            .otherwise("3-slow").as("ship_class"),
-          col("o_orderpriority"))
-        .groupBy("ship_class")
-        .agg(
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L)).as("high_count"),
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 0L)
-            .otherwise(1L)).as("low_count"))
-        .orderBy("ship_class")
-    }
-
-    /** TPC-H Q16 shape (adapted — lineitem part-supplier pairs stand in
-      * for partsupp; negative-balance suppliers stand in for the
-      * complaints exclusion): supplier counts per (brand, type, size)
-      * slice, excluded suppliers anti-joined out BEFORE the distinct
-      * count. Both dims broadcast; countDistinct dedups the repeated
-      * lineitem pairs in the aggregate itself. */
-    def q16_supplier_cnt(s: SparkSession, d: String): DataFrame = {
-      val excl = Tables.supplier(s, d).filter(col("s_acctbal") < 0)
-        .select(col("s_suppkey").as("__xk"))
-      val pts = Tables.part(s, d)
-        .filter(col("p_brand") =!= "Brand#1" && col("p_type") =!= "PROMO" &&
-          col("p_size").isin(1, 4, 9, 14, 19, 23, 36, 45))
-        .select("p_partkey", "p_brand", "p_type", "p_size")
-      li(s, d).select("l_partkey", "l_suppkey")
-        .join(broadcast(pts), col("p_partkey") === col("l_partkey"))
-        .join(broadcast(excl), col("__xk") === col("l_suppkey"), "left_anti")
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(countDistinct("l_suppkey").as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
-          col("p_size"))
-    }
-
-    /** TPC-H Q20 shape (adapted — no ps_availqty, so the part's total
-      * 1996 shipped volume is the stock proxy): suppliers who carried
-      * MORE THAN HALF of some blue part's 1996 volume. Nested aggregation
-      * (per part-supplier, then per part) over the pinned shipped
-      * relation, integer half-compare (2·qty > total), then a semi-join
-      * back to the supplier dim — the original's correlated-subquery
-      * chain, shuffle-minimal. */
-    def q20_workhorse_supp(s: SparkSession, d: String): DataFrame = {
-      val pts = Tables.part(s, d).filter(col("p_name").like("blue%"))
-        .select(col("p_partkey"))
-      val shipped = graft.core.Caching.shared(li(s, d)
-        .filter(col("l_shipdate") >= lit("1996-01-01") &&
-          col("l_shipdate") < lit("1997-01-01"))
-        .join(broadcast(pts), col("p_partkey") === col("l_partkey"), "left_semi")
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(sum(col("l_quantity").cast("long")).as("qty")))
-      val tot = shipped.groupBy(col("l_partkey").as("__pk"))
-        .agg(sum("qty").as("__tot"))
-      val workhorse = shipped.join(tot, col("__pk") === col("l_partkey"))
-        .filter(col("qty") * 2 > col("__tot"))
-        .select(col("l_suppkey")).distinct()
-      Tables.supplier(s, d)
-        .join(workhorse, col("l_suppkey") === col("s_suppkey"), "left_semi")
-        .join(broadcast(Tables.nation(s, d)),
-          col("n_nationkey") === col("s_nationkey"))
-        .select(col("s_suppkey"), col("s_name"), col("n_name"))
-        .orderBy("s_suppkey")
-    }
-
-    /** TPC-H Q13 shape — customer order-count distribution: a LEFT OUTER
-      * join whose predicate touches only the right side (so it pushes to
-      * the orders scan, preserving outer rows), a per-customer count that
-      * keeps zero-order customers via count(col) null-skipping, then a
-      * re-aggregate of the aggregate. Two shuffles by construction:
-      * custkey, then c_count — the second input is one row per customer,
-      * already partial-aggregated map-side. */
-    def q13_custdist(s: SparkSession, d: String): DataFrame = {
-      val c = Tables.customer(s, d).select("c_custkey")
-      val o = Tables.orders(s, d)
-        .filter(col("o_orderpriority") =!= "1-URGENT")
-        .select("o_custkey", "o_orderkey")
-      c.join(o, col("o_custkey") === col("c_custkey"), "left")
-        .groupBy("c_custkey").agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy("c_count").agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }
-
-    /** TPC-H Q18 shape — large-volume orders: HAVING on a grouped sum
-      * feeds a join back to orders/customer and a top-k. The HAVING
-      * filter runs on the aggregate OUTPUT (one row per order, partials
-      * map-side combined), so the join probe side is already tiny; the
-      * LIMIT plans as TakeOrderedAndProject. l_quantity is integral-valued,
-      * so the sum is exact and casts to BIGINT on both engines. */
-    def q18_big_orders(s: SparkSession, d: String): DataFrame = {
-      val big = li(s, d).groupBy("l_orderkey")
-        .agg(sum("l_quantity").as("__sq"))
-        .filter(col("__sq") > 150)
-        .select(col("l_orderkey"), col("__sq").cast("long").as("sum_qty"))
-      big.join(Tables.orders(s, d), col("o_orderkey") === col("l_orderkey"))
-        .join(Tables.customer(s, d), col("c_custkey") === col("o_custkey"))
-        .select(col("c_custkey"), col("o_orderkey"), col("o_totalprice"),
-          col("sum_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(10)
-    }
-
-    /** Pivot: per-user-cohort event-type counts as columns — the wide
-      * reporting shape. Explicit pivot values keep the plan a single
-      * aggregate pass (no distinct-values pre-query). */
-    def x8_pivot(s: SparkSession, d: String): DataFrame =
-      Tables.events(s, d)
-        .groupBy((col("user_id") % 10).as("cohort"))
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(count(lit(1)))
-        .na.fill(0)
-        .orderBy("cohort")
-
-    /** As-of join: each event enriched with the latest order (by date) of
-      * the same customer — the union-scan implementation, oracle-checked
-      * against DuckDB's native ASOF JOIN. Right side pre-deduped per
-      * (key, time) so tie-breaking is unambiguous in both engines. */
-    def x5_asof_join(s: SparkSession, d: String): DataFrame = {
-      val ev = Tables.events(s, d).select("event_id", "ts", "user_id")
-      val ord = Tables.orders(s, d)
-        .groupBy("o_custkey", "o_orderdate")
-        .agg(max("o_orderkey").as("o_orderkey"))
-      graft.operators.AsOfJoin.asof(ev, ord,
-          leftKey = "user_id", rightKey = "o_custkey",
-          leftTime = "ts", rightTime = "o_orderdate",
-          rightCols = Seq("o_orderkey", "o_orderdate"))
-        .select("event_id", "o_orderkey", "o_orderdate")
-        .orderBy("event_id")
-    }
-
-    // ----------------------------------------------- multimodal (north star)
-    def m1_media_features(s: SparkSession, d: String): DataFrame =
-      Multimodal.syntheticFromText(Tables.documents(s, d), "doc_id", "text")
-        .select(col("asset_id"), col("modality"),
-          length(col("payload")).cast("long").as("n_bytes"),
-          col("meta.width").as("width"), col("meta.height").as("height"))
-        .orderBy("asset_id")
-
-    /** REAL image decode: deterministic synthetic PNGs (pixel value is a
-      * closed-form function of id/x/y) encoded AND decoded through
-      * javax.imageio, with integer-exact pixel aggregates the oracle
-      * recomputes from the generating formula — no codec on the DuckDB
-      * side, so any decode drift breaks the hash. */
-    def m2_image_decode(s: SparkSession, d: String): DataFrame =
-      Multimodal.imagePixelFeatures(
-        Multimodal.syntheticPngs(Tables.documents(s, d), "doc_id"))
-        .orderBy("asset_id")
-
-    /** REAL audio-frame plumbing: deterministic 16-bit PCM payloads packed
-      * AND re-parsed through actual bytes (ByteBuffer, little-endian),
-      * integer-exact per-frame energy/peak aggregates the oracle
-      * recomputes from the generating formula — any endianness or framing
-      * slip breaks the hash. */
-    def m3_audio_frames(s: SparkSession, d: String): DataFrame =
-      Multimodal.audioFrameFeatures(
-        Multimodal.syntheticPcm(
-          Tables.documents(s, d).filter(col("doc_id") % 20 === 0), "doc_id"))
-        .orderBy("asset_id", "frame_idx")
-
-    /** Voice-activity segmentation over the real-parse PCM corpus — m3's
-      * frame energies folded into voiced segments (silence trimming, the
-      * step before transcription). Gaps-and-islands per asset; the
-      * oracle replays frame energies from the generating formula and the
-      * identical island window. See
-      * [[graft.operators.Multimodal.vadSegments]]. */
-    /** Frame-level DFT bin energies (harmonics 1/2/4/8 of the 160-sample
-      * frame) over the real-parse PCM corpus — the spectral gate next to
-      * m3's time-domain energies. Integer-quantized trig correlation, so
-      * the fold replays exactly; the oracle regenerates samples from the
-      * formula and the identical quantized tables. See
-      * [[graft.operators.Multimodal.dftBinEnergy]]. */
-    def m10_dft_energy(s: SparkSession, d: String): DataFrame =
-      Multimodal.dftBinEnergy(
-        Multimodal.syntheticPcm(
-          Tables.documents(s, d).filter(col("doc_id") % 20 === 0), "doc_id"))
-        .orderBy("asset_id", "frame_idx", "bin")
-
-    def m7_vad_segments(s: SparkSession, d: String): DataFrame =
-      Multimodal.vadSegments(
-        Multimodal.audioFrameFeatures(
-          Multimodal.syntheticPcm(
-            Tables.documents(s, d).filter(col("doc_id") % 20 === 0), "doc_id")),
-        minEnergy = 170000000L)
-        .orderBy("asset_id", "start_frame")
-
-    /** Video frame-sampling plan from metadata only (no decode): every
-      * 250 ms per asset — `sequence` + `explode`, pure Catalyst, the work
-      * list a downstream decoder fans out over. */
-    def m4_frame_plan(s: SparkSession, d: String): DataFrame =
-      Multimodal.sampleFramePlan(
-        Tables.documents(s, d).select(
-          col("doc_id").as("asset_id"), lit("video").as("modality"),
-          struct(lit(null).cast("int").as("width"),
-            lit(null).cast("int").as("height"),
-            (lit(500) + (col("doc_id") % 7) * 333).cast("long").as("duration_ms"),
-            lit(null).cast("int").as("sample_rate")).as("meta")),
-        everyMs = 250L)
-        .orderBy("asset_id", "frame_idx")
-
-    /** TPC-H Q5 shape — the 6-table join with the local-supplier
-      * correlation (supplier and customer share a nation). Region/nation
-      * broadcast; the orders⋈lineitem⋈supplier chain shuffles on its keys;
-      * Catalyst owns the join order. */
-    def q5_local_supplier(s: SparkSession, d: String): DataFrame =
-      Tables.region(s, d).filter(col("r_name") === "ASIA")
-        .join(Tables.nation(s, d), col("n_regionkey") === col("r_regionkey"))
-        .join(Tables.customer(s, d), col("c_nationkey") === col("n_nationkey"))
-        .join(Tables.orders(s, d), col("o_custkey") === col("c_custkey"))
-        .filter(col("o_orderdate") >= lit("1996-01-01") && col("o_orderdate") < lit("1998-01-01"))
-        .join(li(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.supplier(s, d),
-          col("s_suppkey") === col("l_suppkey") && col("s_nationkey") === col("c_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))) + lit(5e-7), 2)
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-
-    /** TPC-H Q1 shape — the headline scan+agg benchmark. */
-    def q1_pricing_summary(s: SparkSession, d: String): DataFrame =
-      li(s, d)
-        .filter(col("l_shipdate") <= lit("2000-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))) + lit(5e-7), 2)
-            .as("sum_disc_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax")))
-            + lit(5e-7), 2).as("sum_charge"),
-          round(avg("l_quantity"), 4).as("avg_qty"),
-          round(avg("l_extendedprice"), 4).as("avg_price"),
-          round(avg("l_discount"), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-
-    /** Zevenbergen–Thorne general curvature over the r8/r9 focal lattice —
-      * a pure second-difference cross, so every output is an exact decimal
-      * rational (no trig at all; the one terrain measure that needs no
-      * epsilon). Same single halo exchange as slope. */
-    def r11_curvature(s: SparkSession, d: String): DataFrame =
-      focalCells(graft.operators.Focal.curvature(focalBlocks(s, d), cellSize = 1.0),
-        "curv")
-
-    /** The gdaldem index family — TPI, Riley TRI, roughness — in ONE
-      * window pass over the shared focal lattice: the struct-valued kernel
-      * proves the halo-exchange skeleton amortizes across co-computed
-      * outputs (three indices, one exchange — never three). TPI and
-      * roughness are exact (dyadic /8 resp. max−min over integers); only
-      * TRI's sqrt runs cross-engine. */
-    def r12_terrain_idx(s: SparkSession, d: String): DataFrame =
-      graft.operators.Focal.terrainIndices(focalBlocks(s, d))
-        .select(col("block_x"), col("block_y"),
-          posexplode(arrays_zip(col("values"), col("valid"))))
-        .filter(col("col.valid"))
-        .select(
-          (col("block_x") * fbw + col("pos") % fbw).cast("long").as("px"),
-          (col("block_y") * fbh + floor(col("pos") / fbw)).cast("long").as("py"),
-          round(col("col.values.tpi") + lit(5e-7), 4).as("tpi"),
-          round(col("col.values.tri") + lit(5e-7), 4).as("tri"),
-          col("col.values.rough").cast("long").as("rough"))
-        .orderBy("px", "py")
-
-    /** Personalized PageRank from a trusted seed set (doc_id % 50 == 0)
-      * over the g4 citation graph — 4 rounds of the exact integer-micro
-      * recurrence with all teleport mass returning to the seeds. The
-      * oracle unrolls the same recurrence; the sparse-frontier filter in
-      * [[graft.operators.Graph.personalizedPagerank]] is invisible to it
-      * (zero ranks contribute zero mass). */
-    def g10_ppr(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d).select("doc_id")
-      val n = docs.agg(count(lit(1)).as("__n"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"),
-          explode(array((col("doc_id") * 31 + 7) % col("__n"),
-            (col("doc_id") * 17 + 3) % col("__n"))).as("dst"))
-      val seeds = docs.filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("id"))
-      graft.operators.Graph.personalizedPagerank(edges, seeds, iters = 4)
-        .select(col("id").as("doc_id"), col("rank").as("rank_micro"))
-        .orderBy("doc_id")
-    }
-
-    /** Common-neighbor / Jaccard link prediction over the g7 doc graph:
-      * non-adjacent pairs sharing ≥2 neighbors, wedges enumerated only
-      * through centers of degree ≤ 8 (the hub cap the oracle mirrors —
-      * the SQL applies the identical degree gate). */
-    def g11_link_pred(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d).select("doc_id")
-      val n = docs.agg(count(lit(1)).as("__n"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("doc1"),
-          explode(array((col("doc_id") * 31 + 7) % col("__n"),
-            (col("doc_id") * 17 + 3) % col("__n"))).as("doc2"))
-      graft.operators.Graph.linkPrediction(edges, maxDeg = 8, minCommon = 2)
-        .orderBy("a", "b")
-    }
-
-    /** 2-D skyline (Pareto frontier: minimize price, maximize size) by the
-      * SWEEP algorithm: per-price max size (one map-side-combined
-      * aggregate over the data), then a running-max window over the
-      * DISTINCT-price relation — O(distinct prices) sweep rows, never the
-      * O(n²) dominance self-join the oracle's NOT EXISTS formulation runs.
-      * The sweep runs the RANGE-PARTITIONED two-pass merge (dollar
-      * buckets): per-bucket windows in parallel, one prefix-max over the
-      * |buckets|-row maxima relation. Two different algorithms,
-      * hash-identical frontiers. */
-    def x25_skyline(s: SparkSession, d: String): DataFrame =
-      graft.operators.Pareto.skyline2d(
-          Tables.part(s, d)
-            .select(col("p_partkey"), col("p_retailprice"), col("p_size")),
-          minCol = "p_retailprice", maxCol = "p_size",
-          bucket = Some(v => floor(v / 100)))
-        .orderBy("p_partkey")
-
-    /** Exact audience-overlap matrix via 64-bit WORD BITMAPS — the
-      * groupBitmapAnd shape (ClickHouse/Druid) that makes pairwise
-      * distinct-user intersections tractable at 100 TB: users fold into
-      * (word = id div 64, bit = id mod 64) masks per segment, so a
-      * segment's membership is |users|/64 longs, intersections are
-      * popcount(AND) over a word-keyed equi-join of the TINY bitmap
-      * relations, and no (segment, user) pair ever shuffles twice. All
-      * integer, no sketch error — the oracle recomputes with plain
-      * COUNT(DISTINCT) joins. */
-    def x26_bitmap_overlap(s: SparkSession, d: String): DataFrame =
-      graft.operators.Sketch.bitmapOverlap(
-          Tables.events(s, d), segCol = "event_type", idCol = "user_id")
-        .orderBy("seg1", "seg2")
-
-    /** ST5: native session windows — `session_window(ts, 30 min)` is the
-      * batch twin of [[graft.streaming.StreamJob.eventSessions]] (the SAME
-      * expression runs under a watermark in streaming, where the gap
-      * bounds state). Emits the actual merged windows (start, last+gap)
-      * st2's lag/cumsum form only counts; microsecond-exact, so the
-      * oracle's gaps-and-islands replay hashes identically. */
-    def st5_session_window(s: SparkSession, d: String): DataFrame =
-      Tables.events(s, d)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"), col("session_window.start").as("s_start"),
-          col("session_window.end").as("s_end"), col("n_events"))
-        .orderBy("user_id", "s_start")
-
-    /** Recall@5 of GLOBAL-scale symmetric int8 quantization against the
-      * float brute-force truth (e1) — the measurement that licenses
-      * shipping the 4×-smaller codes at 100 TB. One corpus absmax (1-row
-      * broadcast) scales every vector; dot products and norms over the
-      * int8 codes are EXACT integers (≤127²·64 per term), so the quantized
-      * ranking is bit-replayable and only the final cosine normalization
-      * touches floats — identically on both engines. */
-    def e15_sq_recall(s: SparkSession, d: String): DataFrame = {
-      val emb = Tables.embeddings(s, d)
-      val scale = emb.agg(max(Similarity.absMax(col("embedding"))).as("__scale"))
-      val codes = emb.crossJoin(broadcast(scale))
-        .select(col("vec_id"),
-          Similarity.quantizeInt8(col("embedding"), col("__scale")).as("q"))
-        .select(col("vec_id"), col("q"),
-          aggregate(transform(col("q"), x => x * x), lit(0L), _ + _).as("nrm"))
-      val qs = codes.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("q").as("qq"), col("nrm").as("nq"))
-      val scored = broadcast(qs).join(codes, col("query_id") =!= col("vec_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          aggregate(zip_with(col("qq"), col("q"), _ * _), lit(0L), _ + _).as("dot"),
-          (col("nq") * col("nrm")).cast("double").as("nn"))
-      val w = Window.partitionBy("query_id")
-        .orderBy((col("dot") / sqrt(col("nn"))).desc, col("neighbor_id").asc)
-      val approx = scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("__hit"))
-      val truth = e1_knn_brute(s, d).select(col("query_id"), col("neighbor_id"))
-      truth.join(broadcast(approx), Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("k"),
-          coalesce(sum("__hit"), lit(0L)).as("n_hits"))
-        .withColumn("recall_pct", (col("n_hits") * 100 / col("k")).cast("long"))
-        .orderBy("query_id")
-    }
-
-    /** D8 flow direction over the shared focal lattice — drop² cross-
-      * multiplied compares (no sqrt), smallest-code ties, sinks/flats 0.
-      * See [[graft.operators.Focal.flowDirD8]]. */
-    def r13_flow_dir(s: SparkSession, d: String): DataFrame =
-      focalCells(graft.operators.Focal.flowDirD8(focalBlocks(s, d)), "flow_dir")
-
-    /** Flow ACCUMULATION over r13's direction lattice: cells become a
-      * functional acyclic graph (one downhill out-edge each; drops are
-      * strictly positive so no cycles), and the upstream-cell count
-      * relaxes via [[graft.operators.Graph.ancestorCount]]. Values are
-      * integers in [1, 50], so every flow path strictly descends through
-      * < 50 distinct values — 50 rounds provably converge. The oracle
-      * computes the true transitive closure (recursive CTE) instead. */
-    def r14_flow_accum(s: SparkSession, d: String): DataFrame = {
-      val fd = focalCells(
-        graft.operators.Focal.flowDirD8(focalBlocks(s, d)), "flow_dir")
-      val dxc = when(col("flow_dir").isin(1.0, 2.0, 128.0), 1L)
-        .when(col("flow_dir").isin(8.0, 16.0, 32.0), -1L).otherwise(0L)
-      val dyc = when(col("flow_dir").isin(2.0, 4.0, 8.0), 1L)
-        .when(col("flow_dir").isin(32.0, 64.0, 128.0), -1L).otherwise(0L)
-      val edges = fd.filter(col("flow_dir") > 0)
-        .select((col("py") * 100 + col("px")).as("src"),
-          ((col("py") + dyc) * 100 + (col("px") + dxc)).as("dst"))
-      graft.operators.Graph.ancestorCount(edges, iters = 50)
-        .select((col("id") % 100).as("px"), expr("id div 100").as("py"),
-          col("acc"))
-        .orderBy("px", "py")
-    }
-
-    /** Majority (focal mode) filter — categorical smoothing with pinned
-      * smallest-value ties. See
-      * [[graft.operators.Focal.majorityFilter]]. */
-    def r15_majority(s: SparkSession, d: String): DataFrame =
-      focalCells(graft.operators.Focal.majorityFilter(focalBlocks(s, d)),
-        "majority")
-
-    /** Watershed delineation over r13's D8 flow lattice — each cell
-      * labeled by the sink (outlet) its flow path reaches, completing
-      * the hydrology family (direction → accumulation → basins). Flow
-      * paths strictly descend through < 50 integer values, so 6 pointer-
-      * doubling rounds (2⁶ = 64) provably cover every path. See
-      * [[graft.operators.Graph.terminalLabel]]. */
-    def r16_watershed(s: SparkSession, d: String): DataFrame = {
-      // pinned: the direction lattice feeds the edge build AND the
-      // cell-set join-back that drops synthetic off-grid outlet nodes
-      val fd = graft.core.Caching.shared(focalCells(
-        graft.operators.Focal.flowDirD8(focalBlocks(s, d)), "flow_dir"))
-      val dxc = when(col("flow_dir").isin(1.0, 2.0, 128.0), 1L)
-        .when(col("flow_dir").isin(8.0, 16.0, 32.0), -1L).otherwise(0L)
-      val dyc = when(col("flow_dir").isin(2.0, 4.0, 8.0), 1L)
-        .when(col("flow_dir").isin(32.0, 64.0, 128.0), -1L).otherwise(0L)
-      // sinks/flats (flow_dir = 0) carry a self-edge so every lattice
-      // cell appears in the node set with itself as terminal; border
-      // cells draining off-lattice keep the off-grid id as their basin
-      // ("drains off-map"), but only REAL cells emit rows
-      val edges = fd.select(
-        (col("py") * 100 + col("px")).as("src"),
-        when(col("flow_dir") > 0,
-          (col("py") + dyc) * 100 + (col("px") + dxc))
-          .otherwise(col("py") * 100 + col("px")).as("dst"))
-      val cells = fd.select((col("py") * 100 + col("px")).as("id"))
-      graft.operators.Graph.terminalLabel(edges, rounds = 6)
-        .join(cells, "id")
-        .select((col("id") % 100).as("px"), expr("id div 100").as("py"),
-          col("basin"))
-        .orderBy("px", "py")
-    }
-
-    /** Recall@5 of 1-bit (sign) binary embedding codes under Hamming
-      * distance — the 32×-compression extreme of the quantization ladder
-      * (e4 int8 → e15 SQ recall → this): 64 dims pack into TWO longs
-      * (32 sign bits each, positive — no sign-bit edge cases cross-
-      * engine), distance is popcount(xor) — pure integer, bit-replayable,
-      * and the candidate scan reads 16 bytes per vector instead of 256.
-      * Ranked against the e1 float truth through the audited recall
-      * join. */
-    def e17_hamming_recall(s: SparkSession, d: String): DataFrame = {
-      def half(lo: Int): Column = (0 until 32).map { j =>
-        when(element_at(col("embedding"), lo + j + 1) >= 0, lit(1L << j))
-          .otherwise(lit(0L))
-      }.reduce(_ + _)
-      val codes = Tables.embeddings(s, d)
-        .select(col("vec_id"), half(0).as("c0"), half(32).as("c1"))
-      val q = broadcast(codes.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("c0").as("q0"),
-          col("c1").as("q1")))
-      val scored = q.join(codes, col("query_id") =!= col("vec_id"))
-        .withColumn("ham", expr("bit_count(q0 ^ c0) + bit_count(q1 ^ c1)"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("ham").asc, col("vec_id").asc)
-      val approx = scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          lit(1L).as("__hit"))
-      val truth = e1_knn_brute(s, d).select(col("query_id"), col("neighbor_id"))
-      truth.join(broadcast(approx), Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("k"),
-          coalesce(sum("__hit"), lit(0L)).as("n_hits"))
-        .withColumn("recall_pct", (col("n_hits") * 100 / col("k")).cast("long"))
-        .orderBy("query_id")
-    }
-
-    /** Maximal-marginal-relevance re-ranking (Carbonell & Goldstein,
-      * SIGIR'98) — the diversity stage of a retrieval pipeline: from
-      * each query's brute top-10 pool, greedily select 5 results
-      * maximizing λ·sim(q,d) − (1−λ)·max_{s∈S} sim(d,s) with λ = 0.7.
-      * Greedy selection is inherently sequential in k — the 5 rounds
-      * unroll at plan time (the BPE-round-2 discipline), each round one
-      * anti-join + one max-sim join + one argmax struct-min over the
-      * pool-sized relation. Cosines micro-quantize BEFORE the MMR
-      * arithmetic, so scores are exact integers (7·cq − 3·ms, no
-      * division) and ties pin to the smallest id — the whole greedy
-      * trajectory replays in SQL. Pool and pairwise-sim relations are
-      * queries×10 and queries×90 rows; everything broadcasts. */
-    def e24_mmr(s: SparkSession, d: String): DataFrame = {
-      import graft.functions.VectorExpressions.vec_cosine
-      val ev = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val qs = ev.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
-      val pool = graft.core.Caching.shared(
-        broadcast(qs).join(ev, col("vec_id") =!= col("query_id"))
-          .withColumn("__cos", vec_cosine(col("qv"), col("v")))
-          .withColumn("__pr", row_number().over(Window.partitionBy("query_id")
-            .orderBy(col("__cos").desc, col("vec_id").asc)))
-          .filter(col("__pr") <= 10)
-          .select(col("query_id"), col("vec_id").as("id"),
-            floor(col("__cos") * 1e6 + 0.5).cast("long").as("cq")))
-      val withVec = pool.join(ev.withColumnRenamed("vec_id", "id"), "id")
-      val ps = graft.core.Caching.shared(
-        withVec.select(col("query_id"), col("id").as("a"), col("v").as("va"))
-          .join(withVec.select(col("query_id"), col("id").as("b"),
-            col("v").as("vb")), Seq("query_id"))
-          .filter(col("a") =!= col("b"))
-          .select(col("query_id"), col("a"), col("b"),
-            floor(vec_cosine(col("va"), col("vb")) * 1e6 + 0.5)
-              .cast("long").as("s")))
-      def pick(cands: DataFrame, score: Column): DataFrame = cands
-        .withColumn("__sc", score)
-        .groupBy("query_id")
-        .agg(min(struct((-col("__sc")).as("ns"), col("id").as("id"))).as("__p"))
-        .select(col("query_id"), col("__p.id").as("id"))
-      var sel = pick(pool, col("cq")).withColumn("rank", lit(1))
-      for (k <- 2 to 5) {
-        val cands = pool.join(sel.select("query_id", "id"),
-            Seq("query_id", "id"), "left_anti")
-          .join(ps.join(broadcast(sel.select(col("query_id"), col("id").as("b"))),
-              Seq("query_id", "b"))
-            .groupBy(col("query_id"), col("a").as("id"))
-            .agg(max("s").as("__ms")), Seq("query_id", "id"))
-        sel = sel.unionAll(
-          pick(cands, col("cq") * 7 - col("__ms") * 3).withColumn("rank", lit(k)))
-      }
-      sel.select(col("query_id"), col("rank"), col("id")).orderBy("query_id", "rank")
-    }
-
-    /** TWO-STAGE retrieval — the production ANN architecture: a cheap
-      * 1-bit Hamming shortlist over the whole corpus (e17's 16-byte
-      * codes) gates an exact float-cosine rerank that only ever touches
-      * the ≤ 20 shortlisted vectors per query. Coarse filter scans
-      * everything at 32× compression; exact math runs on a constant-size
-      * set — the cost model that holds at a billion vectors. Both stages
-      * are deterministic (Hamming ties → smallest id; cosine ties →
-      * smallest id), so the composed pipeline hash-checks. */
-    def e22_rerank(s: SparkSession, d: String): DataFrame = {
-      def half(lo: Int): Column = (0 until 32).map { j =>
-        when(element_at(col("embedding"), lo + j + 1) >= 0, lit(1L << j))
-          .otherwise(lit(0L))
-      }.reduce(_ + _)
-      val emb = Tables.embeddings(s, d)
-      val codes = emb.select(col("vec_id"), half(0).as("c0"), half(32).as("c1"))
-      val q = broadcast(codes.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("c0").as("q0"),
-          col("c1").as("q1")))
-      val shortlist = q.join(codes, col("query_id") =!= col("vec_id"))
-        .withColumn("ham", expr("bit_count(q0 ^ c0) + bit_count(q1 ^ c1)"))
-        .withColumn("srank", row_number().over(Window.partitionBy("query_id")
-          .orderBy(col("ham").asc, col("vec_id").asc)))
-        .filter(col("srank") <= 20)
-        .select("query_id", "vec_id")
-      val qv = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").cast("array<double>").as("qv"))
-      val rer = shortlist
-        .join(broadcast(qv), "query_id")
-        .join(emb.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("cv")), "vec_id")
-        .withColumn("__cos", graft.functions.VectorExpressions.vec_cosine(
-          col("qv"), col("cv")))
-      rer
-        .withColumn("rank", row_number().over(Window.partitionBy("query_id")
-          .orderBy(col("__cos").desc, col("vec_id").asc)))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(col("__cos"), 4).as("cosine"), col("rank"))
-        .orderBy("query_id", "rank")
-    }
-
-    /** SCD2 point-in-time lookup — the QUERY half of the x15 dimension
-      * build, and the join pattern every feature-store / training-data
-      * backfill runs ("the customer's status AS OF the ship date"):
-      * facts as-of join the versioned dimension on (key, valid_from ≤
-      * fact time). Runs through [[graft.operators.AsOfJoin]]'s union-scan
-      * (ONE shuffle on the key, no inequality join, no per-fact version
-      * scan) while the oracle uses DuckDB's native ASOF JOIN — two
-      * engines, two algorithms, one result. Facts predating their key's
-      * first version surface as 'NONE' (the left-join semantics a
-      * backfill must preserve, never silently dropped). */
-    def x31_scd2_lookup(s: SparkSession, d: String): DataFrame = {
-      val dim = graft.operators.Merge.scd2(
-        Tables.orders(s, d)
-          .groupBy(col("o_custkey").as("custkey"), col("o_orderdate").as("d"))
-          .agg(max_by(col("o_orderstatus"), col("o_orderkey")).as("status")),
-        "custkey", "d", Seq("status"))
-      val facts = li(s, d)
-        .join(Tables.orders(s, d).select(col("o_orderkey").as("l_orderkey"),
-          col("o_custkey").as("custkey")), "l_orderkey")
-        .select(col("custkey"), col("l_shipdate"))
-      graft.operators.AsOfJoin.asof(facts,
-          dim.select(col("custkey"), col("valid_from"), col("status")),
-          "custkey", "custkey", "l_shipdate", "valid_from",
-          Seq("valid_from", "status"))
-        .groupBy(coalesce(col("status"), lit("NONE")).as("status_at_ship"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("status_at_ship")
-    }
-
-    /** Data-quality constraint audit — the dbt-tests/Deequ shape: every
-      * constraint is ONE conditional aggregate (referential checks as a
-      * left join + null flag, never a second counting pass; uniqueness as
-      * count − countDistinct in the same fold), unioned into the report a
-      * pipeline publishes before training data ships. All counts exact
-      * integers; a clean TPC-H derivative proves zeros, the date/range
-      * rules catch real rows. */
-    def x29_dq_audit(s: SparkSession, d: String): DataFrame = {
-      // all of a fact table's constraints fold in ONE pass (a 100 TB audit
-      // cannot afford a scan per rule): lineitem's four rules share one
-      // aggregate over the dim-key left join, orders' two likewise; the
-      // per-rule rows explode out of the single-row fold afterwards
-      def rows(folded: DataFrame, rules: (String, String)*): DataFrame =
-        folded.select(explode(array(rules.map { case (name, vcol) =>
-            struct(lit(name).as("check_name"),
-              col(vcol).as("n_violations"), col("n").as("n_checked"))
-          }: _*)).as("r"))
-          .select("r.*")
-      val liFold = li(s, d)
-        .join(Tables.orders(s, d).select(col("o_orderkey").as("l_orderkey"))
-          .distinct().withColumn("__ok", lit(1)), Seq("l_orderkey"), "left")
-        .agg(
-          sum(when(col("__ok").isNull, 1L).otherwise(0L)).as("v_orphan"),
-          (count(lit(1)) -
-            countDistinct(col("l_orderkey"), col("l_linenumber"))).as("v_dup"),
-          sum(when(col("l_quantity").isNull, 1L).otherwise(0L)).as("v_null"),
-          sum(when(col("l_discount") < 0 || col("l_discount") > 1, 1L)
-            .otherwise(0L)).as("v_disc"),
-          count(lit(1)).as("n"))
-      val ordFold = Tables.orders(s, d)
-        .join(Tables.customer(s, d).select(col("c_custkey").as("o_custkey"))
-          .distinct().withColumn("__ok", lit(1)), Seq("o_custkey"), "left")
-        .agg(
-          sum(when(col("__ok").isNull, 1L).otherwise(0L)).as("v_orphan"),
-          sum(when(col("o_orderdate") >= lit("1998-01-01"), 1L).otherwise(0L))
-            .as("v_date"),
-          count(lit(1)).as("n"))
-      val partFold = Tables.part(s, d).agg(
-        sum(when(col("p_retailprice") <= 0, 1L).otherwise(0L)).as("v_neg"),
-        count(lit(1)).as("n"))
-      rows(liFold,
-          "lineitem.orphan_orderkey" -> "v_orphan",
-          "lineitem.dup_pk" -> "v_dup",
-          "lineitem.null_quantity" -> "v_null",
-          "lineitem.bad_discount" -> "v_disc")
-        .unionAll(rows(ordFold,
-          "orders.orphan_custkey" -> "v_orphan",
-          "orders.date_after_1997" -> "v_date"))
-        .unionAll(rows(partFold, "part.negative_price" -> "v_neg"))
-        .orderBy("check_name")
-    }
-
-    /** Cohen's kappa between the gold `lang` column and the t2 language-
-      * id prediction — the label-agreement score a curation pipeline
-      * publishes when a model re-annotates training data. Exact integer
-      * form over the common denominator: kappa = (N·agree − Σ n1ₖn2ₖ) /
-      * (N² − Σ n1ₖn2ₖ), micro-quantized with sign-safe magnitude
-      * division. Marginals are two tiny per-class aggregates joined on
-      * the class key; the observed-agreement fold is one conditional
-      * aggregate over the rated relation. */
-    def x30_cohens_kappa(s: SparkSession, d: String): DataFrame = {
-      val rated = graft.core.Caching.shared(Tables.documents(s, d)
-        .select(col("lang").as("gold"), TextOps.langId(col("text")).as("pred")))
-      val n1 = rated.groupBy(col("gold").as("k")).agg(count(lit(1)).as("c1"))
-      val n2 = rated.groupBy(col("pred").as("k")).agg(count(lit(1)).as("c2"))
-      val pe = n1.join(n2, Seq("k"))
-        .agg(coalesce(sum(col("c1") * col("c2")), lit(0L)).as("pe_num"))
-      rated
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("gold") === col("pred"), 1L).otherwise(0L)).as("n_agree"))
-        .crossJoin(broadcast(pe))
-        .withColumn("__num", col("n") * col("n_agree") - col("pe_num"))
-        .withColumn("__den", col("n") * col("n") - col("pe_num"))
-        .select(col("n"), col("n_agree"),
-          when(col("__den") === 0, lit(1000000L))
-            .when(col("__num") >= 0, expr("__num * 1000000 div __den"))
-            .otherwise(-expr("(-__num) * 1000000 div __den"))
-            .as("kappa_micro"))
-    }
-
-    /** Per-class precision/recall/F1 of the t2 language-id against gold —
-      * the class-resolved sibling of x30's single-number kappa (macro-F1
-      * is the mean of the f1_micro column). ONE pass: the (gold, pred)
-      * confusion census is the only corpus-sized aggregate; per-class
-      * marginals and the diagonal all derive from those ≤|classes|² rows.
-      * F1 never divides twice: f1 = 2·tp/(n_gold + n_pred) exactly, so
-      * all three metrics are single integer divisions (micro units). */
-    def x32_macro_f1(s: SparkSession, d: String): DataFrame = {
-      val census = graft.core.Caching.shared(
-        Tables.documents(s, d)
-          .select(col("lang").as("gold"), TextOps.langId(col("text")).as("pred"))
-          .groupBy("gold", "pred").agg(count(lit(1)).as("c")))
-      val goldTot = census.groupBy(col("gold").as("k")).agg(sum("c").as("n_gold"))
-      val predTot = census.groupBy(col("pred").as("k")).agg(sum("c").as("n_pred"))
-      val tp = census.filter(col("gold") === col("pred"))
-        .select(col("gold").as("k"), col("c").as("tp"))
-      goldTot.join(predTot, Seq("k"), "full")
-        .join(tp, Seq("k"), "left")
-        .na.fill(0L, Seq("n_gold", "n_pred", "tp"))
-        .select(col("k"), col("n_gold"), col("n_pred"), col("tp"),
-          when(col("n_pred") === 0, 0L)
-            .otherwise(expr("tp * 1000000 div n_pred")).as("prec_micro"),
-          when(col("n_gold") === 0, 0L)
-            .otherwise(expr("tp * 1000000 div n_gold")).as("rec_micro"),
-          when(col("n_gold") + col("n_pred") === 0, 0L)
-            .otherwise(expr("2 * tp * 1000000 div (n_gold + n_pred)")).as("f1_micro"))
-        .orderBy("k")
-    }
-
-    /** Robust outlier detection — Tukey IQR fences per group over exact
-      * cent-quantized revenue: quartiles as true order statistics (the
-      * value at rank ⌈p·n⌉ — percentile_disc semantics, deterministic
-      * regardless of tie order), fences at Q1 − 1.5·IQR / Q3 + 1.5·IQR
-      * compared in DOUBLED integers (2x < 2·Q1 − 3·IQR) so the half-cent
-      * never floats. The quartile table is |groups| rows and broadcasts
-      * back into the scan — the fact table shuffles once for the ranking
-      * window and never again. The anomaly-filter gate every curation
-      * pipeline runs over numeric features. */
-    def x33_iqr_outliers(s: SparkSession, d: String): DataFrame = {
-      val v = li(s, d).select(col("l_returnflag").as("grp"),
-        floor(col("l_extendedprice") * 100 + lit(0.5)).cast("long").as("cents"))
-      val w = Window.partitionBy("grp").orderBy("cents")
-      val ranked = v
-        .withColumn("__rn", row_number().over(w))
-        .withColumn("__n", count(lit(1)).over(Window.partitionBy("grp")))
-      val quart = ranked
-        .groupBy("grp")
-        .agg(
-          min(when(col("__rn") * 4 >= col("__n"), col("cents"))).as("q1"),
-          min(when(col("__rn") * 4 >= col("__n") * 3, col("cents"))).as("q3"),
-          max("__n").as("n"))
-      v.join(broadcast(quart), "grp")
-        .withColumn("__out",
-          when(col("cents") * 2 < col("q1") * 2 - (col("q3") - col("q1")) * 3 ||
-               col("cents") * 2 > col("q3") * 2 + (col("q3") - col("q1")) * 3, 1L)
-            .otherwise(0L))
-        .groupBy("grp")
-        .agg(max("q1").as("q1"), max("q3").as("q3"), max("n").as("n"),
-          sum("__out").as("n_outliers"),
-          min(when(col("__out") === 1, col("cents"))).as("min_outlier_cents"),
-          max(when(col("__out") === 1, col("cents"))).as("max_outlier_cents"))
-        .orderBy("grp")
-    }
-
-    /** Conversion-latency distribution — seconds from each user's FIRST
-      * view to their first purchase AFTER it, summarized as exact order
-      * statistics (the x33 rank-⌈p·n⌉ discipline: p50/p90 are true data
-      * values, not interpolations). Two argmin folds (map-side combined)
-      * + one user-keyed join; the percentile pass ranks the |converters|
-      * relation via [[graft.operators.Ranks.globalRank]] on hour-of-
-      * latency buckets — parallel per-bucket windows + a broadcast
-      * offset census, NEVER a partition-less window over every
-      * converting user (the r11 scale-killer). The time-to-convert
-      * readout every funnel ships with. */
-    def x38_conversion_latency(s: SparkSession, d: String): DataFrame = {
-      val ev = Tables.events(s, d)
-      val firstView = ev.filter(col("event_type") === "view")
-        .groupBy("user_id").agg(min("ts").as("vts"))
-      val lat = firstView.join(
-          ev.filter(col("event_type") === "purchase")
-            .select(col("user_id"), col("ts").as("pts")), "user_id")
-        .filter(col("pts") >= col("vts"))
-        .groupBy("user_id")
-        .agg((unix_micros(min("pts")) - unix_micros(max("vts")))
-          .as("__us"))
-        .select(col("user_id"), expr("__us div 1000000").as("lat_sec"))
-      val ranked = graft.operators.Ranks.globalRank(lat, col("lat_sec"),
-        Seq(col("user_id")), expr("lat_sec div 3600"))
-      val n = lat.agg(count(lit(1)).as("__n"))
-      ranked
-        .crossJoin(broadcast(n))
-        .agg(count(lit(1)).as("n_conversions"),
-          min(when(col("__rank") * 2 >= col("__n"), col("lat_sec"))).as("p50_sec"),
-          min(when(col("__rank") * 10 >= col("__n") * 9, col("lat_sec"))).as("p90_sec"),
-          min("lat_sec").as("min_sec"), max("lat_sec").as("max_sec"))
-    }
-
-    /** Rolling 7-day active users per day (WAU) next to the daily count
-      * (DAU) and the stickiness ratio — the engagement triple every
-      * product dashboard leads with. Exact sliding DISTINCT without a
-      * range-window distinct (unsupported) or a self-join: each (day,
-      * user) presence row contributes to its 7 target days via one
-      * bounded explode, then per-day count_distinct. 7× amplification of
-      * the |days × users| presence relation (not the event stream) — the
-      * scale-safe shape. Days with zero trailing activity are absent. */
-    def x39_rolling_wau(s: SparkSession, d: String): DataFrame = {
-      val pres = Tables.events(s, d)
-        .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-      val dau = pres.groupBy("day").agg(count(lit(1)).as("dau"))
-      val wau = pres
-        .select(explode(sequence(col("day"), date_add(col("day"), 6))).as("day"),
-          col("user_id"))
-        .groupBy("day").agg(count_distinct(col("user_id")).as("wau"))
-      // only days that actually occur in the stream report (trailing
-      // phantom days past the last event would under-count their window)
-      dau.join(wau, "day")
-        .select(col("day"), col("dau"), col("wau"),
-          expr("dau * 1000000 div wau").as("stickiness_micro"))
-        .orderBy("day")
-    }
-
-    /** IVF nprobe OPERATING CURVE — corpus-wide recall@5 vs the e1 truth
-      * at nprobe = 1..4 over e5's TRAINED integer-Lloyd coarse centroids,
-      * in one pass: the probe ranks compute once, every nprobe tier
-      * filters the same relation (the e23 discipline applied to the probe
-      * axis — the curve an IVF deployment reads before fixing its
-      * latency/recall point, measured on the index it would actually
-      * build). Assignment folds once; candidates per tier rank by exact
-      * cosine. */
-    def e26_nprobe_sweep(s: SparkSession, d: String): DataFrame = {
-      import s.implicits._
-      import graft.functions.VectorExpressions.vec_cosine
-      val emb = Tables.embeddings(s, d)
-      val cents = trainedIvfCentroids(s, d)
-      val assigned = graft.core.Caching.shared(
-        emb.select(col("vec_id").as("neighbor_id"),
-          col("embedding").cast("array<double>").as("v"),
-          Similarity.nearestCentroid(col("embedding").cast("array<double>"), cents)
-            .as("cid")))
-      val cdf = broadcast(cents.toDF("cid", "c"))
-      val qs = graft.core.Caching.shared(
-        emb.filter(col("vec_id") < 5).select(col("vec_id").as("query_id"),
-          col("embedding").cast("array<double>").as("qv")))
-      val pranks = qs.crossJoin(cdf)
-        .withColumn("__d2", aggregate(
-          zip_with(col("qv"), col("c"), (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x))
-        .withColumn("__pr", row_number().over(Window.partitionBy("query_id")
-          .orderBy(col("__d2"), col("cid"))))
-      val tiers = pranks
-        .select(col("query_id"), col("cid"), col("__pr"),
-          explode(array((1 to 4).map(lit): _*)).as("np"))
-        .filter(col("__pr") <= col("np"))
-      val approx = tiers
-        .join(assigned, "cid")
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .join(broadcast(qs), "query_id")
-        .withColumn("__cos", vec_cosine(col("qv"), col("v")))
-        .withColumn("__rk", row_number().over(
-          Window.partitionBy("query_id", "np")
-            .orderBy(col("__cos").desc, col("neighbor_id"))))
-        .filter(col("__rk") <= 5)
-        .select(col("query_id"), col("np"), col("neighbor_id"), lit(1L).as("__hit"))
-      val truth = e1_knn_brute(s, d).select(col("query_id"), col("neighbor_id"))
-      truth.crossJoin(broadcast((1 to 4).toDF("np")))
-        .join(broadcast(approx), Seq("query_id", "np", "neighbor_id"), "left")
-        .groupBy("np")
-        .agg(count(lit(1)).as("n_true"),
-          coalesce(sum("__hit"), lit(0L)).as("n_hits"))
-        .withColumn("recall_micro", expr("n_hits * 1000000 div n_true"))
-        .orderBy("np")
-    }
-
-    /** IVF index-health report — per-list vector counts over e7's fixed
-      * coarse centroids plus the imbalance factor (max·k/n micro): the
-      * list-balance metrology that decides whether an IVF index needs
-      * re-training before it ships (a hot list breaks the nprobe cost
-      * model). One assignment fold (centroids broadcast) + one
-      * |k|-row aggregate. */
-    def e21_ivf_balance(s: SparkSession, d: String): DataFrame = {
-      val emb = Tables.embeddings(s, d)
-      val cents = emb.filter(col("vec_id") % 37 === 0 && col("vec_id") < 260)
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .collect()
-        .map(r => ((r.getLong(0) / 37).toInt, r.getSeq[Double](1).toSeq))
-        .sortBy(_._1).toSeq
-      val assigned = emb.select(col("vec_id"),
-        Similarity.nearestCentroid(col("embedding").cast("array<double>"), cents)
-          .as("cid"))
-      val lists = graft.core.Caching.shared(
-        assigned.groupBy("cid").agg(count(lit(1)).as("n_vecs")))
-      val tot = lists.agg(sum("n_vecs").as("__n"), count(lit(1)).as("__k"),
-        max("n_vecs").as("__mx"))
-      lists.crossJoin(broadcast(tot))
-        .select(col("cid"), col("n_vecs"),
-          expr("n_vecs * __k * 1000000 div __n").as("load_micro"),
-          expr("__mx * __k * 1000000 div __n").as("imbalance_micro"))
-        .orderBy("cid")
-    }
-
-    /** Median absolute deviation — the robust scale estimate next to
-      * x33's IQR fences (outlier-resistant σ for feature standardization):
-      * per group, the LOWER median of |x − median(x)|, both medians as
-      * exact rank-⌈n/2⌉ order statistics (two grp-keyed ranking windows,
-      * the |groups|-row median table broadcasting back between them).
-      * All integers in cents — engine-identical. */
-    def x51_mad(s: SparkSession, d: String): DataFrame = {
-      val v = graft.core.Caching.shared(li(s, d).select(
-        col("l_returnflag").as("grp"),
-        floor(col("l_extendedprice") * 100 + lit(0.5)).cast("long").as("cents")))
-      def lowerMedian(df: DataFrame, valueCol: String, out: String): DataFrame = {
-        val w = Window.partitionBy("grp").orderBy(valueCol)
-        df.withColumn("__rn", row_number().over(w))
-          .withColumn("__n", count(lit(1)).over(Window.partitionBy("grp")))
-          .groupBy("grp")
-          .agg(min(when(col("__rn") * 2 >= col("__n"), col(valueCol))).as(out))
-      }
-      val med = lowerMedian(v, "cents", "median_cents")
-      val dev = v.join(broadcast(med), "grp")
-        .select(col("grp"), col("median_cents"),
-          abs(col("cents") - col("median_cents")).as("adev"))
-      lowerMedian(dev, "adev", "mad_cents")
-        .join(broadcast(med), "grp")
-        .select(col("grp"), col("median_cents"), col("mad_cents"))
-        .orderBy("grp")
-    }
-
-    /** A/B experiment readout — 2×2 chi-square over per-user conversion
-      * (any purchase event) with deterministic portable-hash variant
-      * assignment, the analysis every experimentation pipeline runs.
-      * χ² = N·(ad−bc)²/((a+b)(c+d)(a+c)(b+d)) entirely in integers:
-      * N·det² and the marginal product lift to DECIMAL(38,0) (paired
-      * with HUGEINT in the oracle — det can reach n²/4, so the products
-      * pass 2⁶³ near a few hundred thousand users; decimal headroom
-      * holds to ~7·10⁷), and the micro-scaling splits the division
-      * (q·10⁶ + r·10⁶ div den) to keep the 10⁶ factor off the big
-      * product. One
-      * user-keyed aggregate (conversion flag is a max fold, map-side
-      * combined) and a 4-cell fold — nothing else touches the stream. */
-    def x34_chi_square(s: SparkSession, d: String): DataFrame = {
-      val users = Tables.events(s, d)
-        .groupBy("user_id")
-        .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv"))
-        .withColumn("variant",
-          PortableHash.hash32(col("user_id").cast("string")) % 2)
-      users.agg(
-          sum(when(col("variant") === 0 && col("conv") === 1, 1L).otherwise(0L)).as("conv_a"),
-          sum(when(col("variant") === 0 && col("conv") === 0, 1L).otherwise(0L)).as("nonconv_a"),
-          sum(when(col("variant") === 1 && col("conv") === 1, 1L).otherwise(0L)).as("conv_b"),
-          sum(when(col("variant") === 1 && col("conv") === 0, 1L).otherwise(0L)).as("nonconv_b"))
-        .withColumn("n_users",
-          col("conv_a") + col("nonconv_a") + col("conv_b") + col("nonconv_b"))
-        .withColumn("__det",
-          col("conv_a") * col("nonconv_b") - col("nonconv_a") * col("conv_b"))
-        .withColumn("__num",
-          col("n_users").cast("decimal(38,0)") * col("__det") * col("__det"))
-        .withColumn("__den",
-          (col("conv_a") + col("nonconv_a")).cast("decimal(38,0)") *
-            (col("conv_b") + col("nonconv_b")) *
-            (col("conv_a") + col("conv_b")) * (col("nonconv_a") + col("nonconv_b")))
-        .select(col("n_users"), col("conv_a"), col("nonconv_a"),
-          col("conv_b"), col("nonconv_b"),
-          when(col("__den") === 0, 0L)
-            .otherwise(expr("(__num div __den) * 1000000 + (__num % __den) * 1000000 div __den"))
-            .as("chi2_micro"))
-    }
-
-    /** Hashing-trick featurization into 64 slots — see
-      * [[graft.operators.TextOps.featureHash]]. */
-    def t32_feature_hash(s: SparkSession, d: String): DataFrame =
-      TextOps.featureHash(Tables.documents(s, d), dim = 64)
-        .orderBy("doc_id", "idx")
-
-    /** Position-based (U-shaped) multi-touch attribution — the marketing
-      * sibling of x18's first-touch: every view/click in the 7 days
-      * before a purchase shares that conversion's credit 40/20/40 (first
-      * 400k micro, last 400k, middles 200000 div (n−2); n=1 → 10⁶, n=2 →
-      * 500k each). All credits are exact integer micros, so the per-
-      * channel totals hash. User-keyed equi join with the window as a
-      * residual (x18's co-partitioned shape); position/count are one
-      * window pair per conversion. */
-    def x28_position_attr(s: SparkSession, d: String): DataFrame = {
-      val ev = Tables.events(s, d)
-      val conv = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("cts"), col("event_id").as("cid"))
-      val touch = ev.filter(col("event_type").isin("view", "click"))
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      val joined = touch.join(conv, Seq("user_id"))
-        .filter(col("ts") < col("cts") &&
-          col("ts") >= col("cts") - expr("INTERVAL 7 DAYS"))
-      val part = Window.partitionBy("user_id", "cid")
-      val ranked = joined
-        .withColumn("rn", row_number().over(part.orderBy("ts", "event_id")))
-        .withColumn("n", count(lit(1)).over(part))
-      ranked
-        .withColumn("credit",
-          when(col("n") === 1, lit(1000000L))
-            .when(col("n") === 2, lit(500000L))
-            .when(col("rn") === 1 || col("rn") === col("n"), lit(400000L))
-            .otherwise(expr("200000 div (n - 2)")))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_touches"), sum("credit").as("credit_micro"))
-        .orderBy("event_type")
-    }
-
-    /** Newman modularity of g7's labeling over the same doc graph — the
-      * did-LPA-find-structure score, exact to the micro-unit. See
-      * [[graft.operators.Graph.modularity]]. */
-    def g12_modularity(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d).select("doc_id")
-      val n = docs.agg(count(lit(1)).as("__n"))
-      // pinned: the edge relation feeds BOTH the labeling rounds and the
-      // modularity census
-      val edges = graft.core.Caching.shared(docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("doc1"),
-          explode(array((col("doc_id") * 31 + 7) % col("__n"),
-            (col("doc_id") * 17 + 3) % col("__n"))).as("doc2")))
-      val labels = graft.operators.Graph.labelPropagation(edges, iters = 3)
-      graft.operators.Graph.modularity(edges, labels).orderBy("label")
-    }
-
-    /** Degree histogram of the undirected doc graph — the first
-      * diagnostic read on ANY graph (power-law tail ⇒ hub caps and skew
-      * salting are mandatory downstream). Symmetrize + distinct, one
-      * vertex-keyed degree aggregate, one |degrees|-row fold. */
-    def g15_degree_hist(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d).select("doc_id")
-      val n = docs.agg(count(lit(1)).as("__n"))
-      val und = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"),
-          explode(array((col("doc_id") * 31 + 7) % col("__n"),
-            (col("doc_id") * 17 + 3) % col("__n"))).as("dst"))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-      und.select(col("a").as("id")).unionAll(und.select(col("b").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("deg"))
-        .groupBy("deg").agg(count(lit(1)).as("n_vertices"))
-        .orderBy("deg")
-    }
-
-    /** Degree assortativity numerators — does the graph wire hubs to
-      * hubs (assortative) or hubs to leaves (disassortative)? Pearson
-      * correlation of endpoint degrees over the undirected edge list,
-      * reported as the exact integer sufficient-statistic numerators
-      * (the x21 discipline — no float division to drift): r = covar_num
-      * / √(varx_num·vary_num) downstream. Each edge contributes BOTH
-      * orientations so the correlation is symmetric. */
-    def g16_assortativity(s: SparkSession, d: String): DataFrame = {
-      val docs = Tables.documents(s, d).select("doc_id")
-      val n = docs.agg(count(lit(1)).as("__n"))
-      val und = graft.core.Caching.shared(docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"),
-          explode(array((col("doc_id") * 31 + 7) % col("__n"),
-            (col("doc_id") * 17 + 3) % col("__n"))).as("dst"))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct())
-      val deg = graft.core.Caching.shared(
-        und.select(col("a").as("id")).unionAll(und.select(col("b").as("id")))
-          .groupBy("id").agg(count(lit(1)).as("deg")))
-      und.select(col("a").as("x"), col("b").as("y"))
-        .unionAll(und.select(col("b").as("x"), col("a").as("y")))
-        .join(deg.select(col("id").as("x"), col("deg").as("dx")), "x")
-        .join(deg.select(col("id").as("y"), col("deg").as("dy")), "y")
-        .agg(count(lit(1)).as("n_arcs"), sum("dx").as("sx"), sum("dy").as("sy"),
-          sum(col("dx") * col("dy")).as("sxy"),
-          sum(col("dx") * col("dx")).as("sxx"),
-          sum(col("dy") * col("dy")).as("syy"))
-        .select(col("n_arcs"),
-          (col("n_arcs") * col("sxy") - col("sx") * col("sy")).as("covar_num"),
-          (col("n_arcs") * col("sxx") - col("sx") * col("sx")).as("varx_num"),
-          (col("n_arcs") * col("syy") - col("sy") * col("sy")).as("vary_num"))
-    }
-
-    /** GraphSAGE-style 2-hop neighbor feature aggregation over the doc
-      * graph: each vertex's 8-dim micro-quantized embedding prefix is
-      * replaced, hop by hop, with the truncated mean of its out-neighbors' —
-      * the message-passing featurization a GNN training pipeline
-      * precomputes at corpus scale. Exact integers end to end (sign-safe
-      * magnitude division), so the 2-hop trajectory hash-checks. See
-      * [[graft.operators.Graph.neighborMeanAgg]]. */
-    def g13_neigh_agg(s: SparkSession, d: String): DataFrame = {
-      val emb = Tables.embeddings(s, d)
-      val n = emb.agg(count(lit(1)).as("__n"))
-      val edges = emb.select("vec_id").crossJoin(broadcast(n))
-        .select(col("vec_id").as("src"),
-          explode(array((col("vec_id") * 31 + 7) % col("__n"),
-            (col("vec_id") * 17 + 3) % col("__n"))).as("dst"))
-      val feats = emb.select(col("vec_id").as("id"),
-        slice(Similarity.quantizeMicro(col("embedding")), 1, 8).as("f"))
-      graft.operators.Graph.neighborMeanAgg(edges, feats, hops = 2)
-        .orderBy("id", "dim")
-    }
-
-    /** MATCH_RECOGNIZE-lite sequence pattern matching: each user's event
-      * stream folds to a compact per-event character string (one
-      * ObjectHashAggregate whose state is one char per event — the t25
-      * reassembly discipline; a production run bounds it per session),
-      * then the funnel pattern `v+cp` (views, click, purchase) counts as
-      * non-overlapping regex matches — the same greedy left-to-right
-      * semantics in Java and DuckDB regex for this alternation-free
-      * pattern. No self-join per stage (x10's shape), no state machine
-      * UDF. */
-    def x27_event_pattern(s: SparkSession, d: String): DataFrame = {
-      val ch = when(col("event_type") === "click", "c")
-        .when(col("event_type") === "error", "e")
-        .when(col("event_type") === "purchase", "p")
-        .when(col("event_type") === "signup", "s")
-        .otherwise("v")
-      Tables.events(s, d)
-        .select(col("user_id"),
-          struct(col("ts"), col("event_id"), ch.as("ch")).as("ev"))
-        .groupBy("user_id")
-        .agg(array_join(
-          transform(array_sort(collect_list(col("ev"))), e => e("ch")), "")
-          .as("seq"))
-        .select(col("user_id"), length(col("seq")).cast("long").as("seq_len"),
-          expr("size(regexp_extract_all(seq, 'v+cp', 0))").cast("long")
-            .as("n_funnels"))
-        .orderBy("user_id")
-    }
-
-    /** Matryoshka-style prefix-dimension recall: rank by cosine over the
-      * FIRST 16 of 64 dims (`slice` — the MRL truncation that cuts ANN
-      * memory 4× when embeddings are trained nested) and measure
-      * recall@5 against the full-dim float truth (e1). Same audited
-      * recall-join shape as e11/e15. */
-    def e16_mrl_recall(s: SparkSession, d: String): DataFrame = {
-      val pre = Tables.embeddings(s, d)
-        .select(col("vec_id"),
-          slice(col("embedding").cast("array<double>"), 1, 16).as("v"))
-      val q = broadcast(pre.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("v").as("qv")))
-      val scored = q.join(pre, col("query_id") =!= col("vec_id"))
-        .withColumn("cos", graft.functions.VectorExpressions.vec_cosine(
-          col("qv"), col("v")))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      val approx = scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          lit(1L).as("__hit"))
-      val truth = e1_knn_brute(s, d).select(col("query_id"), col("neighbor_id"))
-      truth.join(broadcast(approx), Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("k"),
-          coalesce(sum("__hit"), lit(0L)).as("n_hits"))
-        .withColumn("recall_pct", (col("n_hits") * 100 / col("k")).cast("long"))
-        .orderBy("query_id")
-    }
-
-    /** BPE round 2 — the step that makes t19 a TRAINING loop, not a
-      * census: the round-1 winner pair (a 1-row broadcast) merges into a
-      * single symbol via plain left-to-right `replace` (identical
-      * non-regex semantics in both engines), words re-segment, and
-      * adjacent SYMBOL pairs re-count — merged symbols expand back in the
-      * display key (`ab+c` = symbols "ab","c"). Each further round is
-      * this same query over the re-segmented words. */
-    def t31_bpe_round2(s: SparkSession, d: String): DataFrame = {
-      val words = Tables.documents(s, d)
-        .select(explode(Dedup.tokens(col("text"))).as("word"))
-      val pairs1 = words.filter(length(col("word")) >= 2)
-        .select(explode(transform(
-          sequence(lit(1), length(col("word")) - 1),
-          i => col("word").substr(i, lit(2)))).as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("n"))
-      val top = pairs1.orderBy(col("n").desc, col("pair")).limit(1)
-        .select(col("pair").as("top_pair"))
-      val seg = words.crossJoin(broadcast(top))
-        .select(expr("replace(word, top_pair, chr(1))").as("seg"),
-          col("top_pair"))
-      def sym(at: Column): Column =
-        when(at === "\u0001", col("top_pair")).otherwise(at)
-      seg.filter(length(col("seg")) >= 2)
-        .select(explode(transform(
-          sequence(lit(1), length(col("seg")) - 1),
-          i => concat(sym(col("seg").substr(i, lit(1))), lit("+"),
-            sym(col("seg").substr(i + 1, lit(1)))))).as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("n"))
-        // t19 discipline: TakeOrdered top-15 first, rank the survivors
-        .orderBy(col("n").desc, col("pair")).limit(15)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("n").desc, col("pair"))))
-        .select("rank", "pair", "n")
-        .orderBy("rank")
-    }
-  }
-
-  // ================================================================ Oracles
-  private[graft] object Oracles {
-    private val P = PortableHash.prime // 2147483647
-
-    /** DuckDB token pipeline shared by text/dedup oracles. */
-    private val tokExpr =
-      "list_filter(string_split_regex(lower(text), '\\s+'), t -> len(t) > 0)"
-    private def h(e: String) = s"CAST(('0x' || substr(md5($e), 1, 8)) AS BIGINT)"
-
-    private def minhashTerms(k: Int): String =
-      (0 until k).map { i =>
-        val (a, b) = PortableHash.perm(i)
-        s"min((h * $a + $b) % $P) AS mh$i"
-      }.mkString(", ")
-
-    /** Shared BM25 CTE chain — the DuckDB twin of `TextOps.bm25` for the
-      * fixed query ('spark','vector','merge'): identical float evaluation
-      * order, per-term micro quantization before the per-doc sum. Feeds
-      * t20 and the lexical leg of e8. */
-    private val bm25Ctes: String =
-      s"""tok AS (SELECT doc_id, unnest($tokExpr) AS tok FROM documents),
-         |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok GROUP BY 1, 2),
-         |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-         |stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-         |dfq AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-         |bm AS (SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_terms,
-         |    sum(CAST(floor(ln(1.0 + (s.n_docs - d2.df + 0.5) / (d2.df + 0.5))
-         |        * t.tf * (1.2 + 1.0)
-         |        / (t.tf + 1.2 * ((1.0 - 0.75) + (0.75 * l.dl) / s.avgdl))
-         |        * 1e6 + 0.5) AS BIGINT)) AS score_micro
-         |  FROM tf t JOIN dfq d2 USING (tok) JOIN dl l USING (doc_id) CROSS JOIN stats s
-         |  WHERE t.tok IN ('spark', 'vector', 'merge')
-         |  GROUP BY 1)""".stripMargin
-
-    /** Shared CTE chain documents → minhash `sigs` → capped LSH buckets →
-      * candidate pairs `cand` (doc1 < doc2) — the DuckDB twin of
-      * `minhashSignatures → lshBuckets → lshCandidates` at k=4 / 2 bands,
-      * used by every oracle that consumes the candidate relation. */
-    private val candCtes: String =
-      s"""tok AS (SELECT doc_id, unnest(list_distinct($tokExpr)) AS tok FROM documents),
-         |hashed AS (SELECT doc_id, ${h("tok")} AS h FROM tok),
-         |sigs AS (SELECT doc_id, ${minhashTerms(4)} FROM hashed GROUP BY doc_id),
-         |b AS (
-         |  SELECT doc_id, 0 AS band, mh0 AS v0, mh1 AS v1 FROM sigs
-         |  UNION ALL
-         |  SELECT doc_id, 1, mh2, mh3 FROM sigs),
-         |keep AS (SELECT band, v0, v1 FROM b GROUP BY 1, 2, 3 HAVING count(*) <= ${Q.lshCap}),
-         |bk AS (SELECT b.* FROM b JOIN keep USING (band, v0, v1)),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc1, b2.doc_id AS doc2
-         |  FROM bk a JOIN bk b2 ON a.band = b2.band AND a.v0 = b2.v0 AND a.v1 = b2.v1
-         |    AND a.doc_id < b2.doc_id)""".stripMargin
-
-    /** e1/e2 ranker SQL, shared verbatim with the e11 recall evaluation. */
-    // three unrolled rounds of synchronous LPA: each vertex adopts the
-    // most frequent neighbor label, ties to the SMALLEST label — shared
-    // verbatim by g7's own entry and g12's modularity scoring
-    private val g7LabelSql: String = {
-      val rounds = (1 to 3).map { k =>
-        s"""c$k AS (SELECT nbr.src, l.label, count(*) AS c
-           |  FROM nbr JOIN l${k - 1} l ON l.id = nbr.dst GROUP BY 1, 2),
-           |l$k AS (SELECT src AS id, label FROM (
-           |    SELECT src, label,
-           |      row_number() OVER (PARTITION BY src ORDER BY c DESC, label ASC) AS rn
-           |    FROM c$k) WHERE rn = 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-         |e0 AS (
-         |  SELECT doc_id AS u, (doc_id * 31 + 7) % nn.n AS v FROM documents, nn
-         |  UNION ALL SELECT doc_id, (doc_id * 17 + 3) % nn.n FROM documents, nn),
-         |und AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b
-         |        FROM e0 WHERE u <> v),
-         |nbr AS (SELECT a AS src, b AS dst FROM und
-         |        UNION ALL SELECT b, a FROM und),
-         |l0 AS (SELECT DISTINCT src AS id, src AS label FROM nbr),
-         |$rounds
-         |SELECT CAST(id AS BIGINT) AS doc_id, CAST(label AS BIGINT) AS label
-         |FROM l3 ORDER BY doc_id""".stripMargin
-    }
-
-    // D8 argmax shared by r13 itself and r14's accumulation closure
-    private val r13FlowSql: String =
-      """WITH grid AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, max(l_quantity) AS v
-          |  FROM lineitem GROUP BY 1, 2),
-          |g AS (
-          |  SELECT a.px, a.py, b.px - a.px AS dx, b.py - a.py AS dy,
-          |    a.v - b.v AS drop
-          |  FROM grid a JOIN grid b
-          |    ON b.px BETWEEN a.px - 1 AND a.px + 1 AND b.py BETWEEN a.py - 1 AND a.py + 1
-          |    AND NOT (b.px = a.px AND b.py = a.py)),
-          |scored AS (
-          |  SELECT px, py,
-          |    CASE WHEN drop > 0
-          |      THEN drop * drop * (CASE WHEN dx = 0 OR dy = 0 THEN 2 ELSE 1 END)
-          |      ELSE -1 END AS k,
-          |    CASE WHEN dx = 1 AND dy = 0 THEN 1 WHEN dx = 1 AND dy = 1 THEN 2
-          |      WHEN dx = 0 AND dy = 1 THEN 4 WHEN dx = -1 AND dy = 1 THEN 8
-          |      WHEN dx = -1 AND dy = 0 THEN 16 WHEN dx = -1 AND dy = -1 THEN 32
-          |      WHEN dx = 0 AND dy = -1 THEN 64 ELSE 128 END AS code,
-          |    count(*) OVER (PARTITION BY px, py) AS nn
-          |  FROM g),
-          |r AS (SELECT px, py, k, code, nn,
-          |    row_number() OVER (PARTITION BY px, py ORDER BY k DESC, code ASC) AS rn
-          |  FROM scored)
-          |SELECT px, py,
-          |  round(CASE WHEN k > 0 THEN code ELSE 0 END + 5e-7, 4) AS flow_dir
-          |FROM r WHERE rn = 1 AND nn = 8 ORDER BY px, py""".stripMargin
-
-    // stopword-argmax language id shared by t2 itself and x30's kappa
-    private val t2LangSql: String = {
-        // argmax over (score, lang) with ties to the lexicographically LAST
-        // lang — matching Spark's greatest() over (score, lang) structs.
-        val langs = TextOps.stopwords.toSeq.sortBy(_._1)
-        val scoreCols = langs.map { case (lang, words) =>
-          val pat = words.mkString("\\b(", "|", ")\\b")
-          s"len(regexp_extract_all(lower(text), '$pat')) AS s_$lang"
-        }.mkString(", ")
-        val mx = langs.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
-        val pick = langs.reverse.dropRight(1)
-          .map { case (l, _) => s"WHEN s_$l = mx THEN '$l'" }
-          .mkString(" ")
-        s"""WITH m AS (SELECT doc_id, $scoreCols FROM documents),
-           |g AS (SELECT *, $mx AS mx FROM m)
-           |SELECT doc_id,
-           | CASE WHEN mx > 0 THEN (CASE $pick ELSE '${langs.head._1}' END) ELSE 'und' END AS lang_pred
-           |FROM g ORDER BY doc_id""".stripMargin
-      }
-
-    // SCD2 dimension build shared by x15 itself and x31's PIT lookup
-    private val x15Scd2Sql: String =
-      """WITH snap AS (
-          |  SELECT o_custkey AS custkey, o_orderdate AS d,
-          |         arg_max(o_orderstatus, o_orderkey) AS status
-          |  FROM orders GROUP BY 1, 2),
-          |chg AS (
-          |  SELECT custkey, d, status,
-          |         lag(status) OVER (PARTITION BY custkey ORDER BY d) AS prev
-          |  FROM snap),
-          |ver AS (
-          |  SELECT custkey, status, d AS valid_from FROM chg
-          |  WHERE prev IS NULL OR status <> prev)
-          |SELECT custkey, status, valid_from,
-          |  lead(valid_from) OVER (PARTITION BY custkey ORDER BY valid_from) AS valid_to,
-          |  (lead(valid_from) OVER (PARTITION BY custkey ORDER BY valid_from) IS NULL) AS is_current
-          |FROM ver ORDER BY custkey, valid_from""".stripMargin
-
-    // integer-exact Lloyd rounds: micro-quantized vectors, BIGINT
-    // distance folds, floor(sum/n) centroid update — assign(c0) →
-    // update → assign(c1), mirroring kmeansExact(iters=2) exactly.
-    // Shared by e12 itself and e19's purity scoring.
-    private val e12KmeansSql: String =
-      """WITH q AS (SELECT vec_id,
-        |    list_transform(embedding::DOUBLE[],
-        |      x -> CAST(floor(x * 1e6 + 0.5) AS BIGINT)) AS v FROM embeddings),
-        |c0 AS (SELECT CAST(vec_id // 37 AS INT) AS cid, v AS c FROM q
-        |       WHERE vec_id % 37 = 0 AND vec_id < 260),
-        |d1 AS (SELECT q.vec_id, c0.cid,
-        |    CAST(list_sum(list_transform(list_zip(q.v, c0.c),
-        |      p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS d
-        |  FROM q, c0),
-        |a1 AS (SELECT vec_id, cid FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |    FROM d1) WHERE rn = 1),
-        |m1 AS (SELECT cid, dim,
-        |    CAST(floor(sum(val) * 1.0 / count(*)) AS BIGINT) AS cv FROM (
-        |      SELECT a1.cid, generate_subscripts(q.v, 1) AS dim,
-        |             unnest(q.v) AS val
-        |      FROM a1 JOIN q USING (vec_id)) GROUP BY 1, 2),
-        |c1 AS (SELECT cid, list(cv ORDER BY dim) AS c FROM m1 GROUP BY cid),
-        |d2 AS (SELECT q.vec_id, c1.cid,
-        |    CAST(list_sum(list_transform(list_zip(q.v, c1.c),
-        |      p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS d
-        |  FROM q, c1)
-        |SELECT vec_id, cid, d FROM (
-        |  SELECT vec_id, cid, d,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |  FROM d2) WHERE rn = 1 ORDER BY vec_id""".stripMargin
-
-    // e12's trained integer centroids as an IVF coarse quantizer: one
-    // assign → floor-mean update round (the kmeansExact(iters=2)
-    // trajectory), then micro-unit BIGINTs → doubles via /1000000.0 —
-    // the same single correctly-rounded IEEE division the Spark side
-    // does driver-side, so probe distances replay exactly. Yields a
-    // `cent(cid, c: DOUBLE[])` CTE; shared by e5 and e26.
-    private val trainedCentCtes: String =
-      """kq AS (SELECT vec_id,
-        |    list_transform(embedding::DOUBLE[],
-        |      x -> CAST(floor(x * 1e6 + 0.5) AS BIGINT)) AS qv FROM embeddings),
-        |kc0 AS (SELECT CAST(vec_id // 37 AS INT) AS cid, qv AS c FROM kq
-        |       WHERE vec_id % 37 = 0 AND vec_id < 260),
-        |kd1 AS (SELECT kq.vec_id, kc0.cid,
-        |    CAST(list_sum(list_transform(list_zip(kq.qv, kc0.c),
-        |      p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS d
-        |  FROM kq, kc0),
-        |ka1 AS (SELECT vec_id, cid FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        |    FROM kd1) WHERE rn = 1),
-        |km1 AS (SELECT cid, dim,
-        |    CAST(floor(sum(val) * 1.0 / count(*)) AS BIGINT) AS cv FROM (
-        |      SELECT ka1.cid, generate_subscripts(kq.qv, 1) AS dim,
-        |             unnest(kq.qv) AS val
-        |      FROM ka1 JOIN kq USING (vec_id)) GROUP BY 1, 2),
-        |cent AS (SELECT cid,
-        |    list_transform(list(cv ORDER BY dim), x -> x / 1000000.0) AS c
-        |  FROM km1 GROUP BY cid)""".stripMargin
-
-    // power-iteration replay shared by e14 itself and e20's residuals
-    private val e14PcaSql: String = {
-      val iters = (1 to 3).map { k =>
-        s"""r$k AS (SELECT sc.i, sum(sc.m * x${k - 1}.x) AS r
-           |  FROM sc JOIN x${k - 1} ON sc.j = x${k - 1}.j GROUP BY 1),
-           |u$k AS (SELECT greatest(1, max(abs(r)) // 1000000) AS u FROM r$k),
-           |x$k AS (SELECT i AS j,
-           |    CAST(CASE WHEN r < 0 THEN -(abs(r) // u) ELSE r // u END AS BIGINT) AS x
-           |  FROM r$k, u$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH q AS (SELECT vec_id,
-         |    list_transform(embedding::DOUBLE[],
-         |      x -> CAST(floor(x * 1e6 + 0.5) AS BIGINT)) AS v FROM embeddings),
-         |comp AS (SELECT vec_id, generate_subscripts(v, 1) - 1 AS i,
-         |    unnest(v) AS val FROM q),
-         |mean AS (SELECT i, CASE WHEN sum(val) < 0
-         |      THEN -(abs(sum(val)) // count(*)) ELSE sum(val) // count(*) END AS mu
-         |  FROM comp GROUP BY 1),
-         |cc AS (SELECT comp.vec_id, comp.i, val - mu AS cv
-         |  FROM comp JOIN mean USING (i)),
-         |m0 AS (SELECT a.i, b.i AS j, sum(a.cv * b.cv) AS m
-         |  FROM cc a JOIN cc b USING (vec_id) GROUP BY 1, 2),
-         |sc AS (SELECT i, j, CASE WHEN m < 0
-         |      THEN -(abs(m) // 1000000000) ELSE m // 1000000000 END AS m FROM m0),
-         |x0 AS (SELECT DISTINCT j, CAST(1000000 AS BIGINT) AS x FROM sc),
-         |$iters
-         |SELECT j AS dim, x AS eig_micro FROM x3 ORDER BY dim""".stripMargin
-    }
-
-    // aHash replay shared by m6 itself and m8's dup grouping
-    private val m6AhashSql: String =
-      """WITH ids AS (SELECT doc_id AS asset_id, doc_id % 5 + 4 AS w,
-        |    doc_id % 3 + 4 AS h FROM documents),
-        |cells AS (SELECT asset_id, i.i AS i,
-        |    (7 * asset_id + 3 * (((i.i % 8) * w) // 8)
-        |      + 5 * (((i.i // 8) * h) // 8)) % 256 AS v
-        |  FROM ids CROSS JOIN generate_series(0, 63) i(i)),
-        |s AS (SELECT asset_id, sum(v) AS sumv FROM cells GROUP BY 1)
-        |SELECT c.asset_id,
-        |  CAST(sum(CASE WHEN c.i >= 32 AND c.v * 64 >= s.sumv
-        |    THEN (CAST(1 AS BIGINT) << (c.i - 32)) ELSE 0 END) AS BIGINT) AS hash_hi,
-        |  CAST(sum(CASE WHEN c.i < 32 AND c.v * 64 >= s.sumv
-        |    THEN (CAST(1 AS BIGINT) << c.i) ELSE 0 END) AS BIGINT) AS hash_lo
-        |FROM cells c JOIN s USING (asset_id)
-        |GROUP BY 1 ORDER BY asset_id""".stripMargin
-
-    private val e1KnnSql =
-      """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 5),
-        |c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings),
-        |s AS (SELECT query_id, neighbor_id,
-        |  list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS rawcos
-        |  FROM q CROSS JOIN c WHERE query_id != neighbor_id),
-        |r AS (SELECT query_id, neighbor_id, round(rawcos, 4) AS cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY rawcos DESC, neighbor_id ASC) AS INT) AS rank
-        |  FROM s)
-        |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin
-
-    private val e2KnnSql = {
-      def planeLit(p: Int): String =
-        (0 until 64).map(dd => Similarity.planeComponent(p, dd).toString).mkString("[", ", ", "]")
-      val bucketOf = (v: String) => (0 until 8).map { p =>
-        s"CASE WHEN list_dot_product($v, ${planeLit(p)}) >= 0 THEN CAST(${1L << p} AS BIGINT) ELSE 0 END"
-      }.mkString(" + ")
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |be AS (SELECT vec_id, v, ${bucketOf("v")} AS bucket FROM e),
-         |q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM be WHERE vec_id < 5),
-         |s AS (SELECT query_id, be.vec_id AS neighbor_id,
-         |  list_dot_product(qv, v) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))) AS rawcos
-         |  FROM q JOIN be USING (bucket) WHERE query_id != be.vec_id),
-         |r AS (SELECT query_id, neighbor_id, round(rawcos, 4) AS cosine,
-         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY rawcos DESC, neighbor_id ASC) AS INT) AS rank
-         |  FROM s)
-         |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin
-    }
-
-    val sql: Map[String, String] = Map(
-      "s1_grid_seed" ->
-        """SELECT CAST(r*36 + c AS BIGINT) AS tile_idx,
-          | (CASE WHEN 90 - r*10 >= 0 THEN printf('%02dN', 90 - r*10) ELSE printf('%02dS', r*10 - 90) END
-          |  || '_' ||
-          |  CASE WHEN c*10 - 180 >= 0 THEN printf('%03dE', c*10 - 180) ELSE printf('%03dW', 180 - c*10) END) AS tile_id,
-          | CAST(c*10 - 180 AS DOUBLE) AS "left", CAST(80 - r*10 AS DOUBLE) AS bottom,
-          | CAST(c*10 - 170 AS DOUBLE) AS "right", CAST(90 - r*10 AS DOUBLE) AS top
-          |FROM generate_series(0, 17) t1(r) CROSS JOIN generate_series(0, 35) t2(c)
-          |ORDER BY tile_idx""".stripMargin,
-
-      // listing replay: names + byte sizes in closed form; the .aux.xml
-      // decoys prove the suffix filter
-      "s3_listing_scan" ->
-        """SELECT printf('part_%03d.tif', k) AS name,
-          |  CAST(k*7 + 13 AS BIGINT) AS size
-          |FROM generate_series(0, 40) t(k) ORDER BY name""".stripMargin,
-
-      // the Derby-backed partitioned-JDBC scan replayed in closed form
-      // over customer: same bbox derivation, same envelope predicate,
-      // same bucketed fold — green means the pushed predicate and the
-      // 8 key ranges returned the complete relation exactly once
-      "s7_jdbc_pushdown" ->
-        """WITH feat AS (
-          |  SELECT c_custkey AS fid,
-          |    CAST(c_custkey % 360 - 180 AS INT) AS xmin,
-          |    CAST(c_custkey % 180 - 90 AS INT) AS ymin,
-          |    CAST(c_custkey % 360 - 180 + c_custkey % 7 + 1 AS INT) AS xmax,
-          |    CAST(c_custkey % 180 - 90 + c_custkey % 5 + 1 AS INT) AS ymax,
-          |    (c_custkey * 13) % 1000 AS val
-          |  FROM customer),
-          |kept AS (SELECT * FROM feat
-          |  WHERE NOT (xmax < -60 OR xmin > 60 OR ymax < -45 OR ymin > 45))
-          |SELECT fid % 16 AS bucket,
-          |  CAST(count(*) AS BIGINT) AS n_feat,
-          |  CAST(sum(fid) AS BIGINT) AS sum_fid,
-          |  CAST(sum(xmin + ymin) AS BIGINT) AS sum_ll,
-          |  CAST(sum(val) AS BIGINT) AS sum_val
-          |FROM kept GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-      // conic + polar ellipsoidal forwards (Snyder §14/§15/§21) transcribed
-      // with the implementation's exact association (q/m/tConf auxiliaries
-      // expanded inline — recomputing sin(phi) is bitwise identical to
-      // Scala's let-bound reuse); domains match the Spark filters
-      "p5_conic_polar" -> {
-        // Snyder auxiliaries over a free `phi` SQL expression; e/e2 come
-        // from the surrounding SELECT scope
-        def qS(phi: String) =
-          s"((1 - e2) * (sin($phi) / (1 - e2 * sin($phi) * sin($phi)) - (1 / (2 * e)) * ln((1 - e * sin($phi)) / (1 + e * sin($phi)))))"
-        def mS(phi: String) =
-          s"(cos($phi) / sqrt(1 - e2 * sin($phi) * sin($phi)))"
-        def tS(phi: String) =
-          s"(tan(pi() / 4 - $phi / 2) / pow((1 - e * sin($phi)) / (1 + e * sin($phi)), e / 2))"
-        val grs80 = "(1.0/298.257222101) * (2 - (1.0/298.257222101))"
-        val wgs84 = "(1.0/298.257223563) * (2 - (1.0/298.257223563))"
-        s"""WITH t AS (
-           |  SELECT (CASE WHEN 90 - r*10 >= 0 THEN printf('%02dN', 90 - r*10) ELSE printf('%02dS', r*10 - 90) END
-           |     || '_' ||
-           |     CASE WHEN c*10 - 180 >= 0 THEN printf('%03dE', c*10 - 180) ELSE printf('%03dW', 180 - c*10) END) AS tile_id,
-           |    CAST(c*10 - 175 AS DOUBLE) AS lng, CAST(85 - r*10 AS DOUBLE) AS lat
-           |  FROM generate_series(0, 17) t1(r) CROSS JOIN generate_series(0, 35) t2(c)),
-           |aea0 AS (SELECT tile_id, lng, lat, $grs80 AS e2, sqrt($grs80) AS e,
-           |    radians(lat) AS phi, radians(lng) - radians(-96.0) AS dlam
-           |  FROM t WHERE lng BETWEEN -125 AND -65 AND lat BETWEEN 15 AND 55),
-           |aea1 AS (SELECT *,
-           |    (${mS("radians(29.5)")} * ${mS("radians(29.5)")} - ${mS("radians(45.5)")} * ${mS("radians(45.5)")})
-           |      / (${qS("radians(45.5)")} - ${qS("radians(29.5)")}) AS n,
-           |    ${mS("radians(29.5)")} * ${mS("radians(29.5)")} AS m1sq,
-           |    ${qS("radians(29.5)")} AS q1 FROM aea0),
-           |aea2 AS (SELECT *, m1sq + n * q1 AS bigc FROM aea1),
-           |aea AS (SELECT tile_id, CAST(5070 AS INT) AS epsg,
-           |    6378137.0 * sqrt(greatest(0.0, bigc - n * ${qS("phi")})) / n * sin(n * dlam) AS x,
-           |    6378137.0 * sqrt(bigc - n * ${qS("radians(23.0)")}) / n
-           |      - 6378137.0 * sqrt(greatest(0.0, bigc - n * ${qS("phi")})) / n * cos(n * dlam) AS y
-           |  FROM aea2),
-           |lcc0 AS (SELECT tile_id, lng, lat, $grs80 AS e2, sqrt($grs80) AS e,
-           |    radians(lat) AS phi, radians(lng) - radians(3.0) AS dlam
-           |  FROM t WHERE lng BETWEEN -5 AND 15 AND lat BETWEEN 35 AND 55),
-           |lcc1 AS (SELECT *,
-           |    (ln(${mS("radians(49.0)")}) - ln(${mS("radians(44.0)")}))
-           |      / (ln(${tS("radians(49.0)")}) - ln(${tS("radians(44.0)")})) AS n,
-           |    ${mS("radians(49.0)")} AS m1, ${tS("radians(49.0)")} AS t1 FROM lcc0),
-           |lcc2 AS (SELECT *, m1 / (n * pow(t1, n)) AS bigf FROM lcc1),
-           |lcc3 AS (SELECT *, 6378137.0 * bigf * pow(${tS("radians(46.5)")}, n) AS rho0,
-           |    CASE WHEN ${tS("phi")} <= 0 THEN 0.0
-           |         ELSE 6378137.0 * bigf * pow(${tS("phi")}, n) END AS r FROM lcc2),
-           |lcc AS (SELECT tile_id, CAST(2154 AS INT) AS epsg,
-           |    700000.0 + r * sin(n * dlam) AS x,
-           |    6600000.0 + rho0 - r * cos(n * dlam) AS y FROM lcc3),
-           |ps0 AS (SELECT tile_id, lng, lat, $wgs84 AS e2, sqrt($wgs84) AS e,
-           |    (-1.0) * radians(lat) AS phi, radians(lng) AS dlam
-           |  FROM t WHERE lat <= -55),
-           |ps1 AS (SELECT *,
-           |    6378137.0 * ${mS("radians(71.0)")} * ${tS("phi")} / ${tS("radians(71.0)")} AS rho FROM ps0),
-           |ps AS (SELECT tile_id, CAST(3031 AS INT) AS epsg,
-           |    rho * sin(dlam) AS x,
-           |    0.0 - (-1.0) * rho * cos(dlam) AS y FROM ps1),
-           |allp AS (SELECT * FROM aea UNION ALL SELECT * FROM lcc UNION ALL SELECT * FROM ps)
-           |SELECT tile_id, epsg, round(x, 3) AS x, round(y, 3) AS y
-           |FROM allp ORDER BY tile_id, epsg""".stripMargin
-      },
-
-      // the ellipsoidal UTM forward series (Snyder §8) transcribed with
-      // the implementation's exact association, so doubles match to libm
-      // ulps; zone choice, hemisphere false northing, and the ±84° polar
-      // clamp all replay
-      "p5_utm_grid" ->
-        """WITH t AS (
-          |  SELECT (CASE WHEN 90 - r*10 >= 0 THEN printf('%02dN', 90 - r*10) ELSE printf('%02dS', r*10 - 90) END
-          |     || '_' ||
-          |     CASE WHEN c*10 - 180 >= 0 THEN printf('%03dE', c*10 - 180) ELSE printf('%03dW', 180 - c*10) END) AS tile_id,
-          |    CAST(c*10 - 175 AS DOUBLE) AS lng, CAST(85 - r*10 AS DOUBLE) AS lat
-          |  FROM generate_series(0, 17) t1(r) CROSS JOIN generate_series(0, 35) t2(c)),
-          |z AS (SELECT tile_id, lng, lat,
-          |    CAST(least(60, floor((lng + 180) / 6) + 1) AS INT) AS zone FROM t),
-          |e AS (SELECT *,
-          |    (1.0/298.257223563) * (2 - (1.0/298.257223563)) AS e2,
-          |    radians(greatest(-84.0, least(84.0, lat))) AS phi,
-          |    radians(lng) - radians(CAST(zone*6 - 183 AS DOUBLE)) AS d FROM z),
-          |e1 AS (SELECT *, e2*e2 AS e4, e2*e2*e2 AS e6, e2/(1 - e2) AS ep2,
-          |    sin(phi) AS sinp, cos(phi) AS cosp, tan(phi) AS tanp FROM e),
-          |e2t AS (SELECT *,
-          |    6378137.0 / sqrt(1 - e2*sinp*sinp) AS n,
-          |    tanp*tanp AS tt, ep2*cosp*cosp AS cc, cosp*d AS biga,
-          |    6378137.0 * ((1 - e2/4 - 3*e4/64 - 5*e6/256)*phi
-          |      - (3*e2/8 + 3*e4/32 + 45*e6/1024)*sin(2*phi)
-          |      + (15*e4/256 + 45*e6/1024)*sin(4*phi)
-          |      - (35*e6/3072)*sin(6*phi)) AS arc FROM e1),
-          |res AS (SELECT tile_id, zone,
-          |    500000.0 + 0.9996*n*(biga
-          |      + (1 - tt + cc)*pow(biga, 3)/6
-          |      + (5 - 18*tt + tt*tt + 72*cc - 58*ep2)*pow(biga, 5)/120) AS easting,
-          |    (CASE WHEN lat >= 0 THEN 0.0 ELSE 10000000.0 END)
-          |      + 0.9996*(arc + n*tanp*(biga*biga/2
-          |        + (5 - tt + 9*cc + 4*cc*cc)*pow(biga, 4)/24
-          |        + (61 - 58*tt + tt*tt + 600*cc - 330*ep2)*pow(biga, 6)/720)) AS northing
-          |  FROM e2t)
-          |SELECT tile_id, zone, round(easting, 3) AS easting,
-          |  round(northing, 3) AS northing
-          |FROM res ORDER BY tile_id""".stripMargin,
-
-      // the four spherical forward transforms in closed form (Snyder §12,
-      // §20, §21, §30); ortho replays the horizon-rim clamp for far-
-      // hemisphere points; dm rounding absorbs libm ulp differences
-      "p5_reproject" ->
-        """WITH t AS (
-          |  SELECT (CASE WHEN 90 - r*10 >= 0 THEN printf('%02dN', 90 - r*10) ELSE printf('%02dS', r*10 - 90) END
-          |     || '_' ||
-          |     CASE WHEN c*10 - 180 >= 0 THEN printf('%03dE', c*10 - 180) ELSE printf('%03dW', 180 - c*10) END) AS tile_id,
-          |    CAST(c*10 - 175 AS DOUBLE) AS lng, CAST(85 - r*10 AS DOUBLE) AS lat
-          |  FROM generate_series(0, 17) t1(r) CROSS JOIN generate_series(0, 35) t2(c)),
-          |proj AS (
-          |  SELECT tile_id, 'EPSG:3857' AS crs,
-          |      lng * 20037508.342789244 / 180.0 AS x,
-          |      6378137.0 * ln(tan(pi()/4 + radians(lat)/2)) AS y FROM t
-          |  UNION ALL
-          |  SELECT tile_id, 'ESRI:54008',
-          |      6378137.0 * radians(lng) * cos(radians(lat)),
-          |      6378137.0 * radians(lat) FROM t
-          |  UNION ALL
-          |  SELECT tile_id, 'EPSG:32662',
-          |      6378137.0 * radians(lng), 6378137.0 * radians(lat) FROM t
-          |  UNION ALL
-          |  SELECT tile_id, '+proj=ortho +lat_0=0 +lon_0=0 +a=6378137',
-          |      CASE WHEN cos(radians(lat)) * cos(radians(lng)) >= 0 THEN xo
-          |           ELSE xo * 6378137.0 / sqrt(xo*xo + yo*yo) END,
-          |      CASE WHEN cos(radians(lat)) * cos(radians(lng)) >= 0 THEN yo
-          |           ELSE yo * 6378137.0 / sqrt(xo*xo + yo*yo) END
-          |    FROM (SELECT tile_id, lng, lat,
-          |        6378137.0 * cos(radians(lat)) * sin(radians(lng)) AS xo,
-          |        6378137.0 * sin(radians(lat)) AS yo FROM t))
-          |SELECT tile_id, crs, round(x, 1) AS x, round(y, 1) AS y
-          |FROM proj ORDER BY tile_id, crs""".stripMargin,
-
-      // the manifest chain replayed in closed form: grid tile ids/bounds,
-      // manifest order = tile_id string sort (the K3 render order, which
-      // posexplode re-surfaces as manifest_idx), existence = 21 | tile_idx
-      "s2_manifest_chain" ->
-        """WITH t AS (
-          |  SELECT CAST(r*36 + c AS BIGINT) AS tile_idx,
-          |    (CASE WHEN 90 - r*10 >= 0 THEN printf('%02dN', 90 - r*10) ELSE printf('%02dS', r*10 - 90) END
-          |     || '_' ||
-          |     CASE WHEN c*10 - 180 >= 0 THEN printf('%03dE', c*10 - 180) ELSE printf('%03dW', 180 - c*10) END) AS tile_id,
-          |    CAST(c*10 - 180 AS DOUBLE) AS "left", CAST(80 - r*10 AS DOUBLE) AS bottom,
-          |    CAST(c*10 - 170 AS DOUBLE) AS "right", CAST(90 - r*10 AS DOUBLE) AS top
-          |  FROM generate_series(0, 17) t1(r) CROSS JOIN generate_series(0, 35) t2(c)),
-          |sel AS (SELECT * FROM t WHERE tile_idx % 7 = 0),
-          |m AS (SELECT tile_id, "left", bottom, "right", top,
-          |    CAST(row_number() OVER (ORDER BY tile_id) - 1 AS INT) AS manifest_idx
-          |  FROM sel)
-          |SELECT m.tile_id, m.manifest_idx, m."left", m.bottom, m."right", m.top
-          |FROM m WHERE m.tile_id NOT IN (SELECT tile_id FROM sel WHERE tile_idx % 21 = 0)
-          |ORDER BY m.tile_id""".stripMargin,
-
-      "z1_zorder" -> {
-        import graft.functions.ZOrder
-        s"""WITH t AS (
-           |  SELECT CAST(r*36 + c AS BIGINT) AS tile_idx,
-           |    (CASE WHEN 90 - r*10 >= 0 THEN printf('%02dN', 90 - r*10) ELSE printf('%02dS', r*10 - 90) END
-           |     || '_' ||
-           |     CASE WHEN c*10 - 180 >= 0 THEN printf('%03dE', c*10 - 180) ELSE printf('%03dW', 180 - c*10) END) AS tile_id,
-           |    r, c
-           |  FROM generate_series(0, 17) t1(r) CROSS JOIN generate_series(0, 35) t2(c))
-           |SELECT tile_id, tile_idx, ${ZOrder.mortonSql("c", "r")} AS zorder
-           |FROM t ORDER BY zorder, tile_id""".stripMargin
-      },
-
-      "s1_wm_grid_seed" -> {
-        val ext = 20037508.342789244
-        val span = 2 * ext / 16
-        s"""SELECT CAST(r*16 + c AS BIGINT) AS tile_idx,
-           | printf('%03dR_%03dC', r, c) AS tile_id,
-           | round(c * $span - $ext, 4) AS "left", round($ext - (r+1) * $span, 4) AS bottom,
-           | round((c+1) * $span - $ext, 4) AS "right", round($ext - r * $span, 4) AS top
-           |FROM generate_series(0, 15) t1(r) CROSS JOIN generate_series(0, 15) t2(c)
-           |ORDER BY tile_idx""".stripMargin
-      },
-
-      "f1_subset_filter" ->
-        """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity FROM lineitem
-          |WHERE l_orderkey IN (1, 7, 32, 100, 501, 1234, 2500)
-          |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-      "f2_range_filter" ->
-        """SELECT l_orderkey, l_linenumber, l_shipdate, l_quantity FROM lineitem
-          |WHERE l_shipdate >= TIMESTAMP '1999-01-01' AND l_shipdate < TIMESTAMP '1999-02-01'
-          |  AND l_quantity > 45
-          |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-      "f3_exists_antijoin" ->
-        """SELECT p_partkey, p_name FROM part p
-          |WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_partkey = p.p_partkey AND l.l_quantity > 49)
-          |ORDER BY p_partkey""".stripMargin,
-
-      "p1_calc_arith" ->
-        """SELECT l_orderkey, l_linenumber,
-          | round((l_quantity + l_discount) * (l_tax + 2), 4) AS calc_value
-          |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-      "p1_calc_multiband" ->
-        """SELECT l_orderkey, l_linenumber,
-          | round(l_quantity, 4) AS band0, round(l_extendedprice, 4) AS band1,
-          | round(l_quantity + l_extendedprice, 4) AS band2
-          |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-      "p2_cast_fill" ->
-        """SELECT l_orderkey, l_linenumber,
-          | CAST(coalesce(CASE WHEN l_discount > 0.05 THEN NULL ELSE l_quantity END, -1.0) AS BIGINT) AS filled
-          |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-      "p3_vector_calc" ->
-        """SELECT event_id,
-          | CAST(CASE WHEN event_type = 'purchase' THEN 3 WHEN event_type = 'click' THEN 2
-          |      WHEN event_type = 'view' THEN 1 ELSE 0 END AS INT) AS burn_value
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      "p6_snap" ->
-        """SELECT event_id, floor(value / 0.25) * 0.25 AS snapped
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      // symbology bake: discrete exact-key lookup (dv=5 unmapped -> 0s,
-      // null -> 0s) and gradient piecewise-linear interp replayed with the
-      // SAME association floor(c0 + dc*(v-k0)/dk + 0.5) -> identical IEEE
-      // doubles in both engines
-      "p7_symbology" ->
-        """WITH a AS (SELECT CAST(p_partkey AS BIGINT) AS asset_id FROM part
-          |           WHERE p_partkey <= 8),
-          |px AS (SELECT asset_id, i,
-          |         CASE WHEN i % 11 = 0 THEN NULL
-          |              ELSE (37*asset_id + 13*i) % 1001 END AS v
-          |       FROM a CROSS JOIN generate_series(0, 575) gs(i)),
-          |d AS (SELECT asset_id, 'discrete' AS mode, i, v % 6 AS dv FROM px),
-          |dch AS (SELECT asset_id, mode, i,
-          |  CASE WHEN dv IS NULL THEN 0 WHEN dv=0 THEN 12 WHEN dv=1 THEN 200
-          |       WHEN dv=2 THEN 0 WHEN dv=3 THEN 255 WHEN dv=4 THEN 7 ELSE 0 END AS r,
-          |  CASE WHEN dv IS NULL THEN 0 WHEN dv=0 THEN 34 WHEN dv=1 THEN 10
-          |       WHEN dv=2 THEN 128 WHEN dv=3 THEN 255 WHEN dv=4 THEN 7 ELSE 0 END AS g,
-          |  CASE WHEN dv IS NULL THEN 0 WHEN dv=0 THEN 56 WHEN dv=1 THEN 0
-          |       WHEN dv=2 THEN 64 WHEN dv=3 THEN 0 WHEN dv=4 THEN 7 ELSE 0 END AS b,
-          |  CASE WHEN dv IS NULL THEN 0 WHEN dv=0 THEN 255 WHEN dv=1 THEN 255
-          |       WHEN dv=2 THEN 128 WHEN dv=3 THEN 64 WHEN dv=4 THEN 7 ELSE 0 END AS al
-          |  FROM d),
-          |gch AS (SELECT asset_id, 'gradient' AS mode, i,
-          |  CASE WHEN v IS NULL THEN 0 WHEN v <= 0 THEN 10
-          |       WHEN v <= 250 THEN CAST(FLOOR(10 + 245*(v-0)/250 + 0.5) AS INT)
-          |       WHEN v <= 600 THEN CAST(FLOOR(255 + -235*(v-250)/350 + 0.5) AS INT)
-          |       WHEN v <= 1000 THEN CAST(FLOOR(20 + -20*(v-600)/400 + 0.5) AS INT)
-          |       ELSE 0 END AS r,
-          |  CASE WHEN v IS NULL THEN 0 WHEN v <= 0 THEN 0
-          |       WHEN v <= 250 THEN CAST(FLOOR(0 + 40*(v-0)/250 + 0.5) AS INT)
-          |       WHEN v <= 600 THEN CAST(FLOOR(40 + 215*(v-250)/350 + 0.5) AS INT)
-          |       WHEN v <= 1000 THEN CAST(FLOOR(255 + -243*(v-600)/400 + 0.5) AS INT)
-          |       ELSE 12 END AS g,
-          |  CASE WHEN v IS NULL THEN 0 WHEN v <= 0 THEN 200
-          |       WHEN v <= 250 THEN CAST(FLOOR(200 + -200*(v-0)/250 + 0.5) AS INT)
-          |       WHEN v <= 600 THEN CAST(FLOOR(0 + 60*(v-250)/350 + 0.5) AS INT)
-          |       WHEN v <= 1000 THEN CAST(FLOOR(60 + 195*(v-600)/400 + 0.5) AS INT)
-          |       ELSE 255 END AS b,
-          |  CASE WHEN v IS NULL THEN 0 WHEN v <= 0 THEN 255
-          |       WHEN v <= 250 THEN CAST(FLOOR(255 + 0*(v-0)/250 + 0.5) AS INT)
-          |       WHEN v <= 600 THEN CAST(FLOOR(255 + -75*(v-250)/350 + 0.5) AS INT)
-          |       WHEN v <= 1000 THEN CAST(FLOOR(180 + -90*(v-600)/400 + 0.5) AS INT)
-          |       ELSE 90 END AS al
-          |  FROM px),
-          |legs AS (SELECT * FROM dch UNION ALL SELECT * FROM gch)
-          |SELECT asset_id, mode,
-          |  CAST(SUM(r) AS BIGINT) AS sum_r, CAST(SUM(g) AS BIGINT) AS sum_g,
-          |  CAST(SUM(b) AS BIGINT) AS sum_b, CAST(SUM(al) AS BIGINT) AS sum_a,
-          |  CAST(SUM(r*i) AS BIGINT) AS wsum_r
-          |FROM legs GROUP BY 1, 2 ORDER BY asset_id, mode""".stripMargin,
-
-      "j1_spatial_semijoin" ->
-        """WITH tiles AS (
-          |  SELECT (CASE WHEN 90 - r*10 >= 0 THEN printf('%02dN', 90 - r*10) ELSE printf('%02dS', r*10 - 90) END
-          |    || '_' ||
-          |    CASE WHEN c*10 - 180 >= 0 THEN printf('%03dE', c*10 - 180) ELSE printf('%03dW', 180 - c*10) END) AS tile_id,
-          |   CAST(c*10 - 180 AS DOUBLE) AS tl, CAST(80 - r*10 AS DOUBLE) AS tb,
-          |   CAST(c*10 - 170 AS DOUBLE) AS tr, CAST(90 - r*10 AS DOUBLE) AS tt
-          |  FROM generate_series(0, 17) t1(r) CROSS JOIN generate_series(0, 35) t2(c)),
-          |fp AS (
-          |  SELECT CAST((p_partkey % 36) * 10 - 180 AS DOUBLE) AS fl, CAST((p_partkey % 18) * 10 - 90 AS DOUBLE) AS fb,
-          |         CAST((p_partkey % 36) * 10 - 165 AS DOUBLE) AS fr, CAST((p_partkey % 18) * 10 - 75 AS DOUBLE) AS ft
-          |  FROM part)
-          |SELECT tile_id, tl AS "left", tb AS bottom, tr AS "right", tt AS top FROM tiles
-          |WHERE EXISTS (SELECT 1 FROM fp WHERE tl < fr AND fl < tr AND tb < ft AND fb < tt)
-          |ORDER BY tile_id""".stripMargin,
-
-      // the REAL JTS st_intersects/st_intersection join replayed as
-      // closed-form axis-aligned overlap products; JTS touch-counts-as-
-      // intersecting ⇒ <=, touch-only pairs contribute area 0
-      "j6_spatial_features" ->
-        """WITH tiles AS (
-          |  SELECT (CASE WHEN 90 - r*10 >= 0 THEN printf('%02dN', 90 - r*10) ELSE printf('%02dS', r*10 - 90) END
-          |    || '_' ||
-          |    CASE WHEN c*10 - 180 >= 0 THEN printf('%03dE', c*10 - 180) ELSE printf('%03dW', 180 - c*10) END) AS tile_id,
-          |   CAST(c*10 - 180 AS DOUBLE) AS tl, CAST(80 - r*10 AS DOUBLE) AS tb,
-          |   CAST(c*10 - 170 AS DOUBLE) AS tr, CAST(90 - r*10 AS DOUBLE) AS tt
-          |  FROM generate_series(0, 17) t1(r) CROSS JOIN generate_series(0, 35) t2(c)),
-          |fp AS (
-          |  SELECT CAST((p_partkey % 36) * 10 - 180 AS DOUBLE) AS fl, CAST((p_partkey % 18) * 10 - 90 AS DOUBLE) AS fb,
-          |         CAST((p_partkey % 36) * 10 - 165 AS DOUBLE) AS fr, CAST((p_partkey % 18) * 10 - 75 AS DOUBLE) AS ft
-          |  FROM part)
-          |SELECT tile_id, count(*) AS n_feat,
-          |  round(sum(
-          |    greatest(0, least(fr, tr) - greatest(fl, tl)) *
-          |    greatest(0, least(ft, tt) - greatest(fb, tb))), 4) AS sum_clip_area
-          |FROM tiles JOIN fp
-          |  ON tl <= fr AND fl <= tr AND tb <= ft AND fb <= tt
-          |GROUP BY tile_id ORDER BY tile_id""".stripMargin,
-
-      "j2_file_catalog_join" ->
-        """WITH tiles AS (
-          |  SELECT (CASE WHEN 90 - r*10 >= 0 THEN printf('%02dN', 90 - r*10) ELSE printf('%02dS', r*10 - 90) END
-          |    || '_' ||
-          |    CASE WHEN c*10 - 180 >= 0 THEN printf('%03dE', c*10 - 180) ELSE printf('%03dW', 180 - c*10) END) AS tile_id,
-          |   CAST(c*10 - 180 AS DOUBLE) AS tl, CAST(80 - r*10 AS DOUBLE) AS tb,
-          |   CAST(c*10 - 170 AS DOUBLE) AS tr, CAST(90 - r*10 AS DOUBLE) AS tt
-          |  FROM generate_series(0, 17) t1(r) CROSS JOIN generate_series(0, 35) t2(c)),
-          |fp AS (
-          |  SELECT CAST((p_partkey % 36) * 10 - 180 AS DOUBLE) AS fl, CAST((p_partkey % 18) * 10 - 90 AS DOUBLE) AS fb,
-          |         CAST((p_partkey % 36) * 10 - 165 AS DOUBLE) AS fr, CAST((p_partkey % 18) * 10 - 75 AS DOUBLE) AS ft
-          |  FROM part)
-          |SELECT tile_id, count(*) AS n_files FROM tiles JOIN fp
-          |  ON tl < fr AND fl < tr AND tb < ft AND fb < tt
-          |GROUP BY tile_id ORDER BY tile_id""".stripMargin,
-
-      "j4_band_align_join" ->
-        """WITH a AS (SELECT l_orderkey, round(sum(l_quantity), 2) AS band_a FROM lineitem
-          |           WHERE l_returnflag = 'R' GROUP BY l_orderkey),
-          |     b AS (SELECT l_orderkey, round(sum(l_quantity), 2) AS band_b FROM lineitem
-          |           WHERE l_returnflag = 'A' GROUP BY l_orderkey)
-          |SELECT coalesce(a.l_orderkey, b.l_orderkey) AS l_orderkey,
-          |       coalesce(band_a, 0.0) AS band_a, coalesce(band_b, 0.0) AS band_b
-          |FROM a FULL OUTER JOIN b ON a.l_orderkey = b.l_orderkey
-          |ORDER BY l_orderkey""".stripMargin,
-
-      "j5_join3_revenue" ->
-        """SELECT o_orderkey, o_orderdate,
-          | round(sum(l_extendedprice * (1 - l_discount)) + 5e-7, 2) AS revenue
-          |FROM customer JOIN orders ON c_custkey = o_custkey
-          |  JOIN lineitem ON o_orderkey = l_orderkey
-          |WHERE c_mktsegment = 'BUILDING' AND o_orderdate >= TIMESTAMP '2000-01-01'
-          |GROUP BY o_orderkey, o_orderdate ORDER BY o_orderkey""".stripMargin,
-
-      "r1_resample_avg" ->
-        """WITH fine AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, avg(l_quantity) AS v
-          |  FROM lineitem GROUP BY 1, 2)
-          |SELECT px // 2 AS cx, py // 2 AS cy, round(avg(v), 4) AS value
-          |FROM fine GROUP BY 1, 2 ORDER BY cx, cy""".stripMargin,
-
-      "r2_resample_mode" ->
-        """WITH fine AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, max(l_quantity) AS v
-          |  FROM lineitem GROUP BY 1, 2),
-          |counted AS (
-          |  SELECT px // 2 AS cx, py // 2 AS cy, v, count(*) AS cnt
-          |  FROM fine GROUP BY 1, 2, 3),
-          |r AS (SELECT cx, cy, v,
-          |  row_number() OVER (PARTITION BY cx, cy ORDER BY cnt DESC, v ASC) AS rn FROM counted)
-          |SELECT cx, cy, v AS value FROM r WHERE rn = 1 ORDER BY cx, cy""".stripMargin,
-
-      // closed-form replay of the interpolating decimation taps: bilinear
-      // k=4 = renormalized mean of the valid central 2×2 (phase 0.5);
-      // cubic/bspline k=2 = the exact half-phase tap weights (dyadic
-      // -0.0625/0.5625; 1/48 and 23/48 — correctly-rounded division gives
-      // the same doubles the JVM kernel computes), out-of-block and masked
-      // taps dropped by the inner join, renormalized by sum(w)
-      "r17_resample_bilinear" ->
-        """WITH a AS (SELECT CAST(p_partkey AS BIGINT) AS asset_id FROM part
-          |  WHERE p_partkey <= 4),
-          |xs AS (SELECT unnest(range(0, 8)) AS x),
-          |ys AS (SELECT unnest(range(0, 8)) AS y),
-          |px AS (SELECT asset_id, x, y,
-          |    CAST((3*asset_id + 5*x + 7*y) % 19 AS DOUBLE) AS v FROM a, xs, ys),
-          |valid AS (SELECT * FROM px WHERE v <> 0),
-          |o2 AS (SELECT asset_id, ox.o AS ox, oy.o AS oy FROM a,
-          |  (SELECT unnest(range(0, 2)) AS o) ox, (SELECT unnest(range(0, 2)) AS o) oy),
-          |o4 AS (SELECT asset_id, ox.o AS ox, oy.o AS oy FROM a,
-          |  (SELECT unnest(range(0, 4)) AS o) ox, (SELECT unnest(range(0, 4)) AS o) oy),
-          |w AS (SELECT * FROM (VALUES
-          |  ('cubic2', -1, -0.0625), ('cubic2', 0, 0.5625),
-          |  ('cubic2', 1, 0.5625),  ('cubic2', 2, -0.0625),
-          |  ('bspline2', -1, 1.0/48), ('bspline2', 0, 23.0/48),
-          |  ('bspline2', 1, 23.0/48), ('bspline2', 2, 1.0/48)) t(kernel, d, w)),
-          |bl AS (SELECT o.asset_id, 'bilinear4' AS kernel, o.ox, o.oy,
-          |    avg(v.v) AS val
-          |  FROM o2 o JOIN valid v ON v.asset_id = o.asset_id
-          |    AND v.x BETWEEN 4*o.ox + 1 AND 4*o.ox + 2
-          |    AND v.y BETWEEN 4*o.oy + 1 AND 4*o.oy + 2
-          |  GROUP BY 1, 2, 3, 4),
-          |cu AS (SELECT o.asset_id, wx.kernel, o.ox, o.oy,
-          |    sum(wx.w * wy.w * v.v) / sum(wx.w * wy.w) AS val
-          |  FROM o4 o
-          |  CROSS JOIN w wx
-          |  JOIN w wy ON wy.kernel = wx.kernel
-          |  JOIN valid v ON v.asset_id = o.asset_id
-          |    AND v.x = 2*o.ox + wx.d AND v.y = 2*o.oy + wy.d
-          |  GROUP BY 1, 2, 3, 4)
-          |SELECT asset_id, kernel, CAST(ox AS INTEGER) AS ox,
-          |  CAST(oy AS INTEGER) AS oy, round(val + 5e-7, 4) AS val
-          |FROM (SELECT * FROM bl UNION ALL SELECT * FROM cu)
-          |ORDER BY asset_id, kernel, oy, ox""".stripMargin,
-
-      "r18_resample_seam" -> {
-        // Whole-raster convolution mirror of Q.r18_resample_seam: pixels
-        // exist only for blocks PRESENT in `part` (a missing block is a
-        // masked region on both sides), taps come from the SAME
-        // ResampleTaps the kernel runs (shortest-repr double literals
-        // round-trip exactly), k = 2 ⇒ phase 0.5, offsets d = 1-R..R
-        // relative to 2·ox. Out-of-raster taps drop out of the join and
-        // the sum renormalizes — the identical raster-edge rule.
-        val tapRows = Seq("cubic", "lanczos", "gauss").flatMap { m =>
-          val r = graft.functions.ResampleTaps.radius(m)
-          val wf = graft.functions.ResampleTaps.weight(m)
-          (0 until 2 * r).map { i =>
-            val d0 = 1 - r + i
-            s"('$m', $d0, ${wf(d0 - 0.5)})"
-          }
-        }.mkString(", ")
-        s"""WITH a AS (SELECT CAST(p_partkey AS BIGINT) AS id FROM part
-           |  WHERE p_partkey BETWEEN 1 AND 4),
-           |blk AS (SELECT CAST((id-1) % 2 AS INT) AS bx,
-           |  CAST((id-1) // 2 AS INT) AS by FROM a),
-           |px AS (SELECT bx*8 + xs.x AS gx, by*8 + ys.y AS gy,
-           |    CAST((3 + 5*(bx*8 + xs.x) + 7*(by*8 + ys.y)
-           |      + (bx*8 + xs.x)*(by*8 + ys.y)) % 19 + 1 AS DOUBLE) AS v
-           |  FROM blk, (SELECT unnest(range(0, 8)) AS x) xs,
-           |       (SELECT unnest(range(0, 8)) AS y) ys),
-           |o AS (SELECT bx*4 + i.i AS ox, by*4 + j.j AS oy FROM blk,
-           |  (SELECT unnest(range(0, 4)) AS i) i,
-           |  (SELECT unnest(range(0, 4)) AS j) j),
-           |w AS (SELECT * FROM (VALUES $tapRows) t(kernel, d, w)),
-           |t AS (SELECT o.ox, o.oy, wx.kernel,
-           |    sum(wx.w * wy.w * px.v) AS acc, sum(wx.w * wy.w) AS wsum
-           |  FROM o CROSS JOIN w wx JOIN w wy ON wy.kernel = wx.kernel
-           |  JOIN px ON px.gx = 2*o.ox + wx.d AND px.gy = 2*o.oy + wy.d
-           |  GROUP BY 1, 2, 3)
-           |SELECT kernel, CAST(ox AS INTEGER) AS ox, CAST(oy AS INTEGER) AS oy,
-           |  round(acc / wsum + 5e-7, 4) AS val
-           |FROM t ORDER BY kernel, oy, ox""".stripMargin
-      },
-
-      "r19_resample_gauss" -> {
-        // same programmatic tap replay as r18: weights come from the SAME
-        // ResampleTaps.gauss the kernel runs (shortest-repr double
-        // literals round-trip exactly); both legs are even factors, so
-        // the phase is 0.5 and the per-axis offsets d = -1..2 sit at
-        // k*ox + tapBase + d (tapBase = (k-1)>>1). Out-of-block and
-        // masked (v = 0) taps drop out of the join; sum(w) renormalizes.
-        val wf = graft.functions.ResampleTaps.weight("gauss")
-        val tapRows = (0 until 4).map { i =>
-          val d0 = -1 + i
-          s"($d0, ${wf(d0 - 0.5)})"
-        }.mkString(", ")
-        s"""WITH a AS (SELECT CAST(p_partkey AS BIGINT) AS asset_id FROM part
-           |  WHERE p_partkey <= 4),
-           |px AS (SELECT asset_id, xs.x, ys.y,
-           |    CAST((3*asset_id + 5*xs.x + 7*ys.y) % 19 AS DOUBLE) AS v
-           |  FROM a, (SELECT unnest(range(0, 8)) AS x) xs,
-           |       (SELECT unnest(range(0, 8)) AS y) ys),
-           |valid AS (SELECT * FROM px WHERE v <> 0),
-           |ks AS (SELECT * FROM (VALUES (2, 0, 4), (4, 1, 2)) t(k, tb, outw)),
-           |o AS (SELECT a.asset_id, ks.k, ks.tb, i.i AS ox, j.j AS oy
-           |  FROM a, ks, (SELECT unnest(range(0, 4)) AS i) i,
-           |       (SELECT unnest(range(0, 4)) AS j) j
-           |  WHERE i.i < ks.outw AND j.j < ks.outw),
-           |w AS (SELECT * FROM (VALUES $tapRows) t(d, w)),
-           |t AS (SELECT o.asset_id, o.k, o.ox, o.oy,
-           |    sum(wx.w * wy.w * v.v) AS acc, sum(wx.w * wy.w) AS wsum
-           |  FROM o CROSS JOIN w wx CROSS JOIN w wy
-           |  JOIN valid v ON v.asset_id = o.asset_id
-           |    AND v.x = o.k*o.ox + o.tb + wx.d AND v.y = o.k*o.oy + o.tb + wy.d
-           |  GROUP BY 1, 2, 3, 4)
-           |SELECT asset_id, CAST(k AS INTEGER) AS k, CAST(ox AS INTEGER) AS ox,
-           |  CAST(oy AS INTEGER) AS oy, round(acc / wsum + 5e-7, 4) AS val
-           |FROM t ORDER BY asset_id, k, oy, ox""".stripMargin
-      },
-
-      "r5_pyramid" ->
-        """WITH b AS (SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, count(*) AS value
-          |           FROM lineitem GROUP BY 1, 2)
-          |SELECT 0 AS level, px, py, value FROM b
-          |UNION ALL SELECT 1, px // 2, py // 2, CAST(sum(value) AS BIGINT) FROM b GROUP BY 2, 3
-          |UNION ALL SELECT 2, px // 4, py // 4, CAST(sum(value) AS BIGINT) FROM b GROUP BY 2, 3
-          |UNION ALL SELECT 3, px // 8, py // 8, CAST(sum(value) AS BIGINT) FROM b GROUP BY 2, 3
-          |ORDER BY level, px, py""".stripMargin,
-
-      "r6_focal_mean" ->
-        """WITH grid AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, max(l_quantity) AS v
-          |  FROM lineitem GROUP BY 1, 2)
-          |SELECT a.px, a.py, round(avg(b.v) + 5e-7, 4) AS focal
-          |FROM grid a JOIN grid b
-          |  ON b.px BETWEEN a.px - 1 AND a.px + 1 AND b.py BETWEEN a.py - 1 AND a.py + 1
-          |GROUP BY a.px, a.py ORDER BY a.px, a.py""".stripMargin,
-
-      "r7_convolve" ->
-        """WITH grid AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, max(l_quantity) AS v
-          |  FROM lineitem GROUP BY 1, 2),
-          |j AS (
-          |  SELECT a.px, a.py,
-          |    (2 - abs(b.px - a.px)) * (2 - abs(b.py - a.py)) / 16.0 AS w, b.v
-          |  FROM grid a JOIN grid b
-          |    ON b.px BETWEEN a.px - 1 AND a.px + 1 AND b.py BETWEEN a.py - 1 AND a.py + 1)
-          |SELECT px, py, round(sum(w * v) / sum(w) + 5e-7, 4) AS blur
-          |FROM j GROUP BY px, py ORDER BY px, py""".stripMargin,
-
-      // Horn aspect: same neighbor self-join gradients as r8; bearing =
-      // atan2(−gx, gy) normalized to [0, 360); flat cells have no bearing
-      "r10_aspect" ->
-        """WITH grid AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, max(l_quantity) AS v
-          |  FROM lineitem GROUP BY 1, 2),
-          |g AS (
-          |  SELECT a.px, a.py, count(*) AS n,
-          |    sum((b.px - a.px) * (2 - abs(b.py - a.py)) * b.v) AS sx,
-          |    sum((b.py - a.py) * (2 - abs(b.px - a.px)) * b.v) AS sy
-          |  FROM grid a JOIN grid b
-          |    ON b.px BETWEEN a.px - 1 AND a.px + 1 AND b.py BETWEEN a.py - 1 AND a.py + 1
-          |  GROUP BY a.px, a.py)
-          |SELECT px, py,
-          |  round((degrees(atan2(-(sx / 8.0), sy / 8.0)) % 360 + 360) % 360 + 5e-7, 4)
-          |    AS aspect
-          |FROM g WHERE n = 9 AND NOT (sx = 0 AND sy = 0) ORDER BY px, py""".stripMargin,
-
-      "r8_slope" ->
-        """WITH grid AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, max(l_quantity) AS v
-          |  FROM lineitem GROUP BY 1, 2),
-          |g AS (
-          |  SELECT a.px, a.py, count(*) AS n,
-          |    sum((b.px - a.px) * (2 - abs(b.py - a.py)) * b.v) AS sx,
-          |    sum((b.py - a.py) * (2 - abs(b.px - a.px)) * b.v) AS sy
-          |  FROM grid a JOIN grid b
-          |    ON b.px BETWEEN a.px - 1 AND a.px + 1 AND b.py BETWEEN a.py - 1 AND a.py + 1
-          |  GROUP BY a.px, a.py)
-          |SELECT px, py,
-          |  round(degrees(atan(sqrt(power(sx / 8.0, 2) + power(sy / 8.0, 2)))) + 5e-7, 4) AS slope
-          |FROM g WHERE n = 9 ORDER BY px, py""".stripMargin,
-
-      "r9_hillshade" -> {
-        // the same plan-time sun constants the Spark side folds in
-        val az = math.toRadians(315.0); val alt = math.toRadians(45.0)
-        val (sa, ca) = (math.sin(alt), math.cos(alt))
-        val (sz, cz) = (math.sin(az), math.cos(az))
-        s"""WITH grid AS (
-           |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, max(l_quantity) AS v
-           |  FROM lineitem GROUP BY 1, 2),
-           |g AS (
-           |  SELECT a.px, a.py, count(*) AS n,
-           |    sum((b.px - a.px) * (2 - abs(b.py - a.py)) * b.v) / 8.0 AS gx,
-           |    sum((b.py - a.py) * (2 - abs(b.px - a.px)) * b.v) / 8.0 AS gy
-           |  FROM grid a JOIN grid b
-           |    ON b.px BETWEEN a.px - 1 AND a.px + 1 AND b.py BETWEEN a.py - 1 AND a.py + 1
-           |  GROUP BY a.px, a.py)
-           |SELECT px, py,
-           |  round(greatest(0.0, ($sa + (gy * $cz - gx * $sz) * $ca)
-           |    / sqrt(gx*gx + gy*gy + 1)) * 255.0 + 5e-7, 4) AS shade
-           |FROM g WHERE n = 9 ORDER BY px, py""".stripMargin
-      },
-
-      "g1_distance_join" ->
-        """WITH pts AS (
-          |  SELECT p_partkey AS id, CAST(p_partkey % 97 AS DOUBLE) AS x,
-          |    CAST((p_partkey * 31) % 89 AS DOUBLE) AS y, p_size
-          |  FROM part)
-          |SELECT l.id AS lid, r.id AS rid,
-          |  round(sqrt(power(l.x - r.x, 2) + power(l.y - r.y, 2)) + 5e-7, 4) AS dist
-          |FROM pts l JOIN pts r
-          |  ON power(l.x - r.x, 2) + power(l.y - r.y, 2) <= 4.0
-          |WHERE l.p_size < 10 AND r.p_size >= 45
-          |ORDER BY lid, rid""".stripMargin,
-
-      "g2_dbscan" ->
-        """WITH RECURSIVE pts AS (
-          |  SELECT p_partkey AS id, CAST(p_partkey % 97 AS DOUBLE) AS x,
-          |    CAST((p_partkey * 31) % 89 AS DOUBLE) AS y FROM part),
-          |nb AS (SELECT a.id AS lid, b.id AS rid FROM pts a JOIN pts b
-          |       ON power(a.x - b.x, 2) + power(a.y - b.y, 2) <= 6.25),
-          |cnt AS (SELECT lid, count(*) AS n FROM nb GROUP BY 1),
-          |core AS (SELECT lid AS id FROM cnt WHERE n >= 6),
-          |ce AS (SELECT nb.lid AS src, nb.rid AS dst FROM nb
-          |       JOIN core c1 ON c1.id = nb.lid JOIN core c2 ON c2.id = nb.rid
-          |       WHERE nb.lid <> nb.rid),
-          |reach AS (SELECT src, dst FROM ce
-          |          UNION SELECT r.src, e.dst FROM reach r JOIN ce e ON r.dst = e.src),
-          |lab AS (SELECT src AS id, least(src, min(dst)) AS cluster FROM reach GROUP BY src),
-          |corelab AS (SELECT c.id, coalesce(l.cluster, c.id) AS cluster
-          |            FROM core c LEFT JOIN lab l USING (id)),
-          |borderlab AS (SELECT nb.lid AS id, min(cl.cluster) AS cluster
-          |  FROM nb JOIN corelab cl ON cl.id = nb.rid
-          |  LEFT JOIN core co ON co.id = nb.lid WHERE co.id IS NULL GROUP BY nb.lid)
-          |SELECT p.id, coalesce(cl.cluster, bl.cluster) AS cluster,
-          |  CASE WHEN cl.id IS NOT NULL THEN 'core'
-          |       WHEN bl.id IS NOT NULL THEN 'border' ELSE 'noise' END AS role
-          |FROM pts p LEFT JOIN corelab cl ON cl.id = p.id
-          |           LEFT JOIN borderlab bl ON bl.id = p.id
-          |ORDER BY p.id""".stripMargin,
-
-      "g3_triangle_count" ->
-        """WITH pts AS (
-          |  SELECT p_partkey AS id, CAST(p_partkey % 97 AS DOUBLE) AS x,
-          |    CAST((p_partkey * 31) % 89 AS DOUBLE) AS y FROM part),
-          |e AS (SELECT a.id AS a, b.id AS b FROM pts a JOIN pts b
-          |      ON power(a.x - b.x, 2) + power(a.y - b.y, 2) <= 6.25 AND a.id < b.id),
-          |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-          |        FROM e e1 JOIN e e2 ON e2.a = e1.b
-          |                  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-          |v AS (SELECT x AS id FROM tri UNION ALL SELECT y FROM tri UNION ALL SELECT z FROM tri)
-          |SELECT id, count(*) AS n_triangles FROM v GROUP BY id ORDER BY id""".stripMargin,
-
-      "g5_sssp" ->
-        """WITH RECURSIVE e AS (
-          |  SELECT src, dst, CAST(min(w) AS BIGINT) AS w FROM (
-          |    SELECT o_orderkey % 60 AS src,
-          |           o_orderkey % 60 + 12 + o_custkey % 13 AS dst,
-          |           1 + o_orderkey % 7 AS w
-          |    FROM orders) WHERE dst < 60 GROUP BY src, dst),
-          |paths AS (
-          |  SELECT CAST(0 AS BIGINT) AS id, CAST(0 AS BIGINT) AS dist
-          |  UNION
-          |  SELECT e.dst, p.dist + e.w FROM paths p JOIN e ON e.src = p.id)
-          |SELECT id, CAST(min(dist) AS BIGINT) AS dist
-          |FROM paths GROUP BY id ORDER BY id""".stripMargin,
-
-      "b1_bloom_join" ->
-        """SELECT p_brand, count(*) AS n,
-          |  round(sum(l_extendedprice * (1 - l_discount)) + 5e-7, 2) AS revenue
-          |FROM part JOIN lineitem ON l_partkey = p_partkey
-          |WHERE p_size <= 2 GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-
-      "a10_region_label" ->
-        """WITH RECURSIVE cells AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py,
-          |    CAST(floor(max(l_quantity) / 10) AS BIGINT) AS v
-          |  FROM lineitem GROUP BY 1, 2),
-          |ids AS (SELECT px, py, v, px * 1048576 + py AS id FROM cells),
-          |e AS (
-          |  SELECT a.id AS src, b.id AS dst FROM ids a JOIN ids b
-          |    ON b.px = a.px + 1 AND b.py = a.py AND b.v = a.v
-          |  UNION ALL
-          |  SELECT a.id, b.id FROM ids a JOIN ids b
-          |    ON b.px = a.px AND b.py = a.py + 1 AND b.v = a.v),
-          |ee AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-          |reach AS (
-          |  SELECT src, dst FROM ee
-          |  UNION
-          |  SELECT r.src, e2.dst FROM reach r JOIN ee e2 ON r.dst = e2.src),
-          |lbl AS (SELECT src AS id, least(src, min(dst)) AS region FROM reach GROUP BY src)
-          |SELECT i.px, i.py, i.v, coalesce(l.region, i.id) AS region_id
-          |FROM ids i LEFT JOIN lbl l ON i.id = l.id
-          |ORDER BY px, py""".stripMargin,
-
-      // a10's labeling + a size census + CASE: regions under 3 px → NULL
-      "a12_sieve" ->
-        """WITH RECURSIVE cells AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py,
-          |    CAST(floor(max(l_quantity) / 10) AS BIGINT) AS v
-          |  FROM lineitem GROUP BY 1, 2),
-          |ids AS (SELECT px, py, v, px * 1048576 + py AS id FROM cells),
-          |e AS (
-          |  SELECT a.id AS src, b.id AS dst FROM ids a JOIN ids b
-          |    ON b.px = a.px + 1 AND b.py = a.py AND b.v = a.v
-          |  UNION ALL
-          |  SELECT a.id, b.id FROM ids a JOIN ids b
-          |    ON b.px = a.px AND b.py = a.py + 1 AND b.v = a.v),
-          |ee AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-          |reach AS (
-          |  SELECT src, dst FROM ee
-          |  UNION
-          |  SELECT r.src, e2.dst FROM reach r JOIN ee e2 ON r.dst = e2.src),
-          |lbl AS (SELECT src AS id, least(src, min(dst)) AS region FROM reach GROUP BY src),
-          |labeled AS (
-          |  SELECT i.px, i.py, i.v, coalesce(l.region, i.id) AS region_id
-          |  FROM ids i LEFT JOIN lbl l ON i.id = l.id),
-          |sz AS (SELECT v, region_id, count(*) AS n_px FROM labeled GROUP BY 1, 2)
-          |SELECT labeled.px, labeled.py,
-          |  CASE WHEN sz.n_px >= 3 THEN labeled.v END AS v, sz.n_px
-          |FROM labeled JOIN sz ON sz.v = labeled.v AND sz.region_id = labeled.region_id
-          |ORDER BY 1, 2""".stripMargin,
-
-      // a10's labeling + census + cross-region adjacency: sub-3px regions
-      // take the largest neighbor's value (tie: smaller region id)
-      "a13_sieve_absorb" ->
-        """WITH RECURSIVE cells AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py,
-          |    CAST(floor(max(l_quantity) / 10) AS BIGINT) AS v
-          |  FROM lineitem GROUP BY 1, 2),
-          |ids AS (SELECT px, py, v, px * 1048576 + py AS id FROM cells),
-          |e AS (
-          |  SELECT a.id AS src, b.id AS dst FROM ids a JOIN ids b
-          |    ON b.px = a.px + 1 AND b.py = a.py AND b.v = a.v
-          |  UNION ALL
-          |  SELECT a.id, b.id FROM ids a JOIN ids b
-          |    ON b.px = a.px AND b.py = a.py + 1 AND b.v = a.v),
-          |ee AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-          |reach AS (
-          |  SELECT src, dst FROM ee
-          |  UNION
-          |  SELECT r.src, e2.dst FROM reach r JOIN ee e2 ON r.dst = e2.src),
-          |lbl AS (SELECT src AS id, least(src, min(dst)) AS region FROM reach GROUP BY src),
-          |labeled AS (
-          |  SELECT i.px, i.py, i.v, coalesce(l.region, i.id) AS region_id
-          |  FROM ids i LEFT JOIN lbl l ON i.id = l.id),
-          |sz AS (SELECT region_id, count(*) AS n_px FROM labeled GROUP BY 1),
-          |rv AS (SELECT region_id, min(v) AS rv FROM labeled GROUP BY 1),
-          |tch AS (
-          |  SELECT a.region_id AS ra, b.region_id AS rb FROM labeled a JOIN labeled b
-          |    ON b.px = a.px + 1 AND b.py = a.py
-          |  UNION ALL
-          |  SELECT a.region_id, b.region_id FROM labeled a JOIN labeled b
-          |    ON b.px = a.px AND b.py = a.py + 1),
-          |pairs AS (SELECT DISTINCT ra, rb FROM
-          |  (SELECT ra, rb FROM tch UNION ALL SELECT rb AS ra, ra AS rb FROM tch)
-          |  WHERE ra <> rb),
-          |ns AS (SELECT p.ra, p.rb, sz.n_px FROM pairs p JOIN sz ON sz.region_id = p.rb),
-          |mx AS (SELECT ra, max(n_px) AS mx FROM ns GROUP BY 1),
-          |pick AS (SELECT ns.ra, min(ns.rb) AS rb FROM ns JOIN mx
-          |  ON mx.ra = ns.ra AND ns.n_px = mx.mx GROUP BY 1),
-          |ab AS (SELECT pick.ra AS region_id, rv.rv AS absorb_v
-          |  FROM pick JOIN rv ON rv.region_id = pick.rb)
-          |SELECT l.px, l.py,
-          |  CASE WHEN sz.n_px >= 3 THEN l.v ELSE coalesce(ab.absorb_v, l.v) END AS v
-          |FROM labeled l JOIN sz ON sz.region_id = l.region_id
-          |LEFT JOIN ab ON ab.region_id = l.region_id
-          |ORDER BY 1, 2""".stripMargin,
-
-      "a11_proximity" ->
-        """WITH cells AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py,
-          |    CAST(floor(max(l_quantity) / 10) AS BIGINT) AS v
-          |  FROM lineitem GROUP BY 1, 2),
-          |t AS (SELECT px AS tx, py AS ty FROM cells WHERE v >= 5),
-          |near AS (
-          |  SELECT c.px, c.py,
-          |    min((c.px - t.tx)*(c.px - t.tx) + (c.py - t.ty)*(c.py - t.ty)) AS d2
-          |  FROM cells c JOIN t ON abs(c.px - t.tx) <= 3 AND abs(c.py - t.ty) <= 3
-          |  WHERE (c.px - t.tx)*(c.px - t.tx) + (c.py - t.ty)*(c.py - t.ty) <= 9
-          |  GROUP BY c.px, c.py)
-          |SELECT c.px, c.py, c.v, n.d2 FROM cells c LEFT JOIN near n
-          |  ON c.px = n.px AND c.py = n.py
-          |ORDER BY c.px, c.py""".stripMargin,
-
-      "g4_pagerank" -> {
-        // five unrolled iterations of the exact integer-micro recurrence —
-        // teleport 10^6/8 = 125000, contribution (rank*7) // (8*outdeg)
-        val iters = (1 to 5).map { k =>
-          s"""r$k AS (SELECT n2.id, CAST(125000 + coalesce(m.mass, 0) AS BIGINT) AS rank
-             |  FROM nodes n2 LEFT JOIN (
-             |    SELECT adj.dst AS id, sum(r${k - 1}.rank * 7 // (8 * adj.outdeg)) AS mass
-             |    FROM adj JOIN r${k - 1} ON adj.src = r${k - 1}.id GROUP BY 1) m
-             |  ON n2.id = m.id)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-           |e AS (SELECT DISTINCT src, dst FROM (
-           |  SELECT doc_id AS src, (doc_id * 31 + 7) % nn.n AS dst FROM documents, nn
-           |  UNION ALL SELECT doc_id, (doc_id * 17 + 3) % nn.n FROM documents, nn)),
-           |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-           |adj AS (SELECT e.src, e.dst, deg.outdeg FROM e JOIN deg USING (src)),
-           |nodes AS (SELECT DISTINCT id FROM (
-           |  SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-           |r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS rank FROM nodes),
-           |$iters
-           |SELECT id AS doc_id, rank AS rank_micro FROM r5 ORDER BY doc_id""".stripMargin
-      },
-
-      "g7_label_prop" -> g7LabelSql,
-
-      "g8_kcore" -> {
-        // four unrolled peel rounds: drop vertices with degree < 4, then
-        // restrict the edge relation to surviving endpoints
-        val rounds = (1 to 4).map { k =>
-          s"""d$k AS (SELECT src, count(*) AS deg FROM n${k - 1} GROUP BY 1),
-             |v$k AS (SELECT src AS id FROM d$k WHERE deg >= 4),
-             |n$k AS (SELECT n.src, n.dst FROM n${k - 1} n
-             |        JOIN v$k x ON n.src = x.id JOIN v$k y ON n.dst = y.id)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-           |e0 AS (
-           |  SELECT doc_id AS u, (doc_id * 31 + 7) % nn.n AS v FROM documents, nn
-           |  UNION ALL SELECT doc_id, (doc_id * 17 + 3) % nn.n FROM documents, nn),
-           |und AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b
-           |        FROM e0 WHERE u <> v),
-           |n0 AS (SELECT a AS src, b AS dst FROM und
-           |       UNION ALL SELECT b, a FROM und),
-           |$rounds
-           |SELECT CAST(src AS BIGINT) AS doc_id, count(*) AS deg
-           |FROM n4 GROUP BY 1 ORDER BY doc_id""".stripMargin
-      },
-
-      "g6_pagerank_dangling" -> {
-        // same exact integer-micro recurrence as g4 plus the per-round
-        // dangling share: sum((rank*7)//8) over no-out-edge vertices,
-        // // N, cross-joined as a 1-row scalar into the rank update
-        val iters = (1 to 5).map { k =>
-          s"""r$k AS (SELECT n2.id,
-             |    CAST(125000 + coalesce(m.mass, 0) + ds.share AS BIGINT) AS rank
-             |  FROM nodes n2 LEFT JOIN (
-             |    SELECT adj.dst AS id, sum((r${k - 1}.rank * 7) // (8 * adj.outdeg)) AS mass
-             |    FROM adj JOIN r${k - 1} ON adj.src = r${k - 1}.id GROUP BY 1) m
-             |  ON n2.id = m.id
-             |  CROSS JOIN (
-             |    SELECT coalesce(sum((r${k - 1}.rank * 7) // 8), 0) // (SELECT n FROM nv) AS share
-             |    FROM r${k - 1} JOIN dang ON r${k - 1}.id = dang.id) ds)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-           |e AS (SELECT DISTINCT src, dst FROM (
-           |  SELECT doc_id AS src, (doc_id * 31 + 7) % nn.n AS dst FROM documents, nn
-           |    WHERE doc_id % 3 <> 0
-           |  UNION ALL SELECT doc_id, (doc_id * 17 + 3) % nn.n FROM documents, nn
-           |    WHERE doc_id % 3 <> 0)),
-           |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-           |adj AS (SELECT e.src, e.dst, deg.outdeg FROM e JOIN deg USING (src)),
-           |nodes AS (SELECT DISTINCT id FROM (
-           |  SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-           |nv AS (SELECT count(*) AS n FROM nodes),
-           |dang AS (SELECT id FROM nodes WHERE id NOT IN (SELECT src FROM e)),
-           |r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS rank FROM nodes),
-           |$iters
-           |SELECT id AS doc_id, rank AS rank_micro FROM r5 ORDER BY doc_id""".stripMargin
-      },
-
-      "r4_resample_med" ->
-        """WITH fine AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, max(l_quantity) AS v
-          |  FROM lineitem GROUP BY 1, 2),
-          |g AS (SELECT px // 2 AS cx, py // 2 AS cy, list_sort(list(v)) AS vs
-          |      FROM fine GROUP BY 1, 2)
-          |SELECT cx, cy, vs[greatest(1, CAST(ceil(len(vs) * 0.5) AS INT))] AS med
-          |FROM g ORDER BY cx, cy""".stripMargin,
-
-      "r3_warp_3857" ->
-        """WITH px AS (SELECT v % 128 AS i, v // 128 AS j FROM generate_series(0, 16383) t(v)),
-          |ll AS (SELECT i, j,
-          |  (-20037508.342789244 + (i + 0.5) * (2 * 20037508.342789244 / 128)) / 20037508.342789244 * 180.0 AS lng,
-          |  degrees(2 * atan(exp((20037508.342789244 - (j + 0.5) * (2 * 20037508.342789244 / 128)) / 6378137.0)) - pi() / 2) AS lat
-          |  FROM px),
-          |cells AS (SELECT p_partkey % 36 AS cx, p_partkey % 18 AS cy, count(*) AS n_parts,
-          |  round(max(p_retailprice), 2) AS max_price FROM part GROUP BY 1, 2)
-          |SELECT i, j, coalesce(n_parts, -1) AS n_parts, coalesce(max_price, -1.0) AS max_price
-          |FROM ll LEFT JOIN cells ON cells.cx = floor((lng + 180.0) / 10.0) AND cells.cy = floor((90.0 - lat) / 10.0)
-          |ORDER BY i, j""".stripMargin,
-
-      "a1_rasterize_count" ->
-        """SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, count(*) AS value
-          |FROM lineitem GROUP BY 1, 2 ORDER BY px, py""".stripMargin,
-
-      "a2_rasterize_value" ->
-        """SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, max(l_quantity) AS value
-          |FROM lineitem GROUP BY 1, 2 ORDER BY px, py""".stripMargin,
-
-      "a3_band_stats" ->
-        """SELECT l_returnflag,
-          | round(min(l_extendedprice), 4) AS stat_min, round(max(l_extendedprice), 4) AS stat_max,
-          | round(avg(l_extendedprice), 4) AS stat_mean, round(stddev_samp(l_extendedprice), 4) AS stat_std,
-          | count(*) AS n
-          |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-      "a4_histogram" ->
-        """SELECT CAST(least(greatest(floor((l_extendedprice - 900.0) / 10410.0), 0), 9) AS BIGINT) AS bucket,
-          | count(*) AS n
-          |FROM lineitem GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-      "a5_valid_count" ->
-        """SELECT l_returnflag, count(CASE WHEN l_discount != 0 THEN 1 END) AS n_valid,
-          | count(*) AS n_total
-          |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-      "a6_extent_union" ->
-        """SELECT min(CAST((p_partkey % 36) * 10 - 180 AS DOUBLE)) AS ext_left,
-          | min(CAST((p_partkey % 18) * 10 - 90 AS DOUBLE)) AS ext_bottom,
-          | max(CAST((p_partkey % 36) * 10 - 165 AS DOUBLE)) AS ext_right,
-          | max(CAST((p_partkey % 18) * 10 - 75 AS DOUBLE)) AS ext_top,
-          | count(*) AS n_files
-          |FROM part""".stripMargin,
-
-      "a7_manifest_collect" ->
-        """WITH e AS (SELECT l_returnflag || '|' || l_linestatus || '|' || count(*) AS entry
-          |           FROM lineitem GROUP BY l_returnflag, l_linestatus)
-          |SELECT string_agg(entry, ',' ORDER BY entry) AS manifest FROM e""".stripMargin,
-
-      "a9_zonal_stats" ->
-        """WITH v AS (SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, count(*) AS v
-          |           FROM lineitem GROUP BY 1, 2),
-          |z AS (SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py,
-          |        CAST(floor(max(l_quantity) / 10) AS BIGINT) AS zone
-          |      FROM lineitem GROUP BY 1, 2)
-          |SELECT zone, count(*) AS n_cells, min(v.v) AS z_min, max(v.v) AS z_max,
-          |  round(avg(v.v), 4) AS z_mean, CAST(sum(v.v) AS BIGINT) AS z_sum
-          |FROM v JOIN z USING (px, py)
-          |GROUP BY zone ORDER BY zone""".stripMargin,
-
-      "a8_status_tally" ->
-        """SELECT CASE WHEN o_orderkey % 10 = 0 THEN 'existing'
-          |            WHEN o_orderkey % 10 = 1 THEN 'failed'
-          |            WHEN o_orderkey % 10 = 2 THEN 'skipped'
-          |            ELSE 'processed' END AS status, count(*) AS n
-          |FROM orders GROUP BY 1 ORDER BY status""".stripMargin,
-
-      "w1_ordered_burn_rank" ->
-        """WITH r AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, l_quantity AS value, l_orderkey,
-          |    row_number() OVER (PARTITION BY l_partkey % 40, l_suppkey % 10
-          |                       ORDER BY l_quantity DESC, l_orderkey ASC, l_linenumber ASC) AS rn
-          |  FROM lineitem)
-          |SELECT px, py, value, l_orderkey FROM r WHERE rn = 1 ORDER BY px, py""".stripMargin,
-
-      "w2_running_sum" ->
-        """SELECT o_custkey, o_orderkey,
-          | round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-          |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_total
-          |FROM orders WHERE o_custkey < 100
-          |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-      "w3_lag_delta" ->
-        """SELECT user_id, event_id,
-          |  round(value - coalesce(lag(value, 1) OVER w, 0.0), 4) AS delta,
-          |  round(first_value(value) OVER w, 4) AS first_v
-          |FROM events WHERE user_id < 100 AND event_type = 'purchase'
-          |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-          |ORDER BY user_id, event_id""".stripMargin,
-
-      "w5_range_frame" ->
-        """SELECT event_id, user_id,
-          |  count(*) OVER w AS n_1h,
-          |  CAST(sum(CAST(floor(value) AS BIGINT)) OVER w AS BIGINT) AS sum_1h
-          |FROM events
-          |WHERE user_id < 50
-          |WINDOW w AS (PARTITION BY user_id
-          |  ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-          |  RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-          |ORDER BY event_id""".stripMargin,
-
-      "o1_topk" ->
-        """SELECT o_orderkey, o_totalprice FROM orders
-          |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 20""".stripMargin,
-
-      "o3_set_ops" ->
-        """(SELECT c_nationkey AS nationkey FROM customer
-          | INTERSECT SELECT s_nationkey FROM supplier)
-          |EXCEPT SELECT s_nationkey FROM supplier WHERE s_acctbal < 0
-          |ORDER BY nationkey""".stripMargin,
-
-      "o4_tile_dedup" ->
-        """SELECT DISTINCT user_id % 10 AS tile_x, event_type FROM events
-          |ORDER BY tile_x, event_type""".stripMargin,
-
-      "st1_window_agg" ->
-        """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-          | round(sum(value), 2) AS sum_value
-          |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
-
-      // FILTERed counts build the same wide table x8 pivots to; UNPIVOT
-      // folds it back — column names become the event_type values
-      "x19_unpivot" ->
-        """WITH p AS (
-          |  SELECT user_id % 10 AS cohort,
-          |    count(*) FILTER (event_type = 'click') AS click,
-          |    count(*) FILTER (event_type = 'error') AS error,
-          |    count(*) FILTER (event_type = 'purchase') AS purchase,
-          |    count(*) FILTER (event_type = 'signup') AS signup,
-          |    count(*) FILTER (event_type = 'view') AS view
-          |  FROM events GROUP BY 1)
-          |SELECT cohort, event_type, n FROM p
-          |UNPIVOT (n FOR event_type IN (click, error, purchase, signup, view))
-          |ORDER BY cohort, event_type""".stripMargin,
-
-      // epoch-aligned 30-min buckets; each event expands to its bucket
-      // and the one before (window [start, start+1h) covers both)
-      "st3_hopping" ->
-        """WITH e AS (
-          |  SELECT TIMESTAMP '1970-01-01'
-          |    + (CAST(floor(epoch(ts)) AS BIGINT) // 1800 * 1800)
-          |      * INTERVAL 1 SECOND AS b,
-          |    event_type, user_id FROM events),
-          |w AS (
-          |  SELECT unnest([b, b - INTERVAL 30 MINUTE]) AS w_start,
-          |    event_type, user_id FROM e)
-          |SELECT w_start, event_type, count(*) AS n,
-          |  count(DISTINCT user_id) AS n_users
-          |FROM w GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-      "st4_dedup_first" ->
-        """WITH r AS (SELECT user_id, event_type, date_trunc('hour', ts) AS hour,
-          |    ts, event_id,
-          |    row_number() OVER (PARTITION BY user_id, event_type, date_trunc('hour', ts)
-          |                       ORDER BY ts, event_id) AS rn
-          |  FROM events)
-          |SELECT user_id, event_type, hour, ts AS first_ts, event_id AS first_event_id
-          |FROM r WHERE rn = 1 ORDER BY user_id, event_type, hour""".stripMargin,
-
-      "st2_sessionize" ->
-        """WITH g AS (
-          |  SELECT user_id, ts, event_id,
-          |    CASE WHEN lag(ts) OVER w IS NULL THEN 1
-          |         WHEN CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800 THEN 1
-          |         ELSE 0 END AS new_s
-          |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          |s AS (
-          |  SELECT user_id,
-          |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-          |  FROM g)
-          |SELECT user_id, CAST(max(session_id) AS BIGINT) AS n_sessions, count(*) AS n_events
-          |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-      "t1_token_count" ->
-        s"""SELECT doc_id, CAST(len($tokExpr) AS INT) AS n_tokens,
-           | CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+')) AS INT) AS n_subwords
-           |FROM documents ORDER BY doc_id""".stripMargin,
-
-      // the scrub replays span-by-span: aligned 16-token spans, md5 census
-      // key, spans in >1 doc dropped everywhere, kept spans re-joined in
-      // position order and the rewrite itself hashed
-      "t25_span_scrub" ->
-        s"""WITH t AS (SELECT doc_id, $tokExpr AS toks FROM documents),
-           |t2 AS (SELECT doc_id, toks FROM t WHERE len(toks) > 0),
-           |s AS (SELECT doc_id, unnest(range(0, len(toks), 16)) AS st, toks FROM t2),
-           |sp AS (SELECT doc_id, CAST(st // 16 AS INT) AS pos,
-           |  array_to_string(list_slice(toks, st + 1, st + 16), ' ') AS span,
-           |  least(CAST(16 AS BIGINT), len(toks) - st) AS span_len FROM s),
-           |dg AS (SELECT doc_id, pos, span, span_len, md5(span) AS dig FROM sp),
-           |fr AS (SELECT dig, count(DISTINCT doc_id) AS nd FROM dg GROUP BY 1)
-           |SELECT doc_id, count(*) AS n_spans,
-           |  CAST(sum(CASE WHEN nd = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           |  CAST(sum(CASE WHEN nd = 1 THEN span_len ELSE 0 END) AS BIGINT) AS n_tokens_kept,
-           |  md5(coalesce(string_agg(CASE WHEN nd = 1 THEN span END, ' ' ORDER BY pos), '')) AS scrubbed_md5
-           |FROM dg JOIN fr USING (dig) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      "t26_heavy_hitters" ->
-        s"""WITH tok AS (SELECT unnest($tokExpr) AS term FROM documents),
-           |tot AS (SELECT count(*) AS n FROM tok),
-           |c AS (SELECT term, count(*) AS cnt FROM tok GROUP BY 1)
-           |SELECT term, cnt,
-           |  CAST(row_number() OVER (ORDER BY cnt DESC, term ASC) AS INT) AS rank
-           |FROM c, tot WHERE cnt * 64 >= n ORDER BY rank""".stripMargin,
-
-      "t27_quality_rules" -> {
-        val en = TextOps.stopwords("en").mkString("\\b(", "|", ")\\b")
-        s"""WITH c AS (SELECT doc_id,
-           |  CAST(len($tokExpr) AS BIGINT) AS ntok,
-           |  CAST(length(text) AS BIGINT) AS nchars,
-           |  CAST(len(regexp_extract_all(lower(text), '$en')) AS BIGINT) AS nstop,
-           |  CAST(len(regexp_extract_all(text, '[#@<>\\[\\]{}|\\\\]')) AS BIGINT) AS nsym
-           |FROM documents)
-           |SELECT doc_id,
-           |  CAST(ntok >= 50 AND ntok <= 100000 AS INT) AS ok_n_tokens,
-           |  CAST(nchars >= ntok * 3 AND nchars <= ntok * 10 AS INT) AS ok_word_len,
-           |  CAST(nsym * 10 <= ntok AS INT) AS ok_symbols,
-           |  CAST(nstop >= 2 AS INT) AS ok_stopwords,
-           |  CAST((ntok >= 50 AND ntok <= 100000) AND (nchars >= ntok * 3 AND nchars <= ntok * 10)
-           |    AND nsym * 10 <= ntok AND nstop >= 2 AS INT) AS keep
-           |FROM c ORDER BY doc_id""".stripMargin
-      },
-
-      // same seed construction, same regexp chain: lowercase → strip
-      // non-[a-z0-9 ] → collapse spaces → trim; hash proves the rewrite
-      "t28_normalize" ->
-        """WITH s AS (SELECT doc_id,
-          |    upper(substr(text, 1, 10)) || '  ... ' || substr(text, 11) || '!?  [END]' AS text
-          |  FROM documents),
-          |n AS (SELECT doc_id,
-          |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
-          |      ' +', ' ', 'g')) AS norm
-          |  FROM s)
-          |SELECT doc_id, CAST(length(norm) AS BIGINT) AS n_chars, md5(norm) AS norm_md5
-          |FROM n ORDER BY doc_id""".stripMargin,
-
-      "t2_lang_id" -> t2LangSql,
-
-      "t8_top_terms" ->
-        s"""WITH tok AS (SELECT lang, unnest($tokExpr) AS tok FROM documents),
-           |tf AS (SELECT lang, tok, count(*) AS n FROM tok GROUP BY 1, 2),
-           |r AS (SELECT lang, tok, n,
-           |  row_number() OVER (PARTITION BY lang ORDER BY n DESC, tok) AS rank FROM tf)
-           |SELECT lang, rank, tok, n FROM r WHERE rank <= 3
-           |ORDER BY lang, rank""".stripMargin,
-
-      "c1_curation_pipeline" -> {
-        val en = TextOps.stopwords("en").mkString("\\b(", "|", ")\\b")
-        s"""WITH m AS (
-           |  SELECT doc_id,
-           |    CAST(length(text) AS DOUBLE) AS n_chars,
-           |    CAST(len($tokExpr) AS DOUBLE) AS n_tokens,
-           |    CAST(len(regexp_extract_all(text, '[\\.,;:!\\?]')) AS DOUBLE) AS n_punct,
-           |    CAST(len(regexp_extract_all(lower(text), '$en')) AS DOUBLE) AS n_stop
-           |  FROM documents),
-           |q AS (SELECT doc_id, round(
-           |  least(n_tokens / 50.0, 1.0) * 0.4 +
-           |  least(n_punct / greatest(n_tokens / 10.0, 1.0), 1.0) * 0.2 +
-           |  least(n_stop / greatest(n_tokens / 20.0, 1.0), 1.0) * 0.2 +
-           |  (CASE WHEN n_chars / greatest(n_tokens, 1.0) BETWEEN 3 AND 10 THEN 1.0 ELSE 0.5 END) * 0.2, 4) AS quality
-           |FROM m),
-           |k AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-           |b AS (SELECT doc_id,
-           |  CAST(${h("CAST(doc_id AS VARCHAR)")} % 100 AS INT) AS bucket FROM documents)
-           |SELECT q.doc_id, q.quality, b.bucket
-           |FROM q JOIN k USING (doc_id) JOIN b USING (doc_id)
-           |WHERE q.quality >= 0.5 AND b.bucket < 90
-           |ORDER BY doc_id""".stripMargin
-      },
-
-      "c3_diversity_sample" -> {
-        val en = TextOps.stopwords("en").mkString("\\b(", "|", ")\\b")
-        s"""WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |cent AS (SELECT CAST(vec_id // 37 AS INT) AS cid, v AS c FROM emb
-           |         WHERE vec_id % 37 = 0 AND vec_id < 260),
-           |dist AS (SELECT e.vec_id, cent.cid,
-           |    list_sum(list_transform(list_zip(e.v, cent.c),
-           |      p -> (p[1] - p[2]) * (p[1] - p[2]))) AS d
-           |  FROM emb e CROSS JOIN cent),
-           |assigned AS (SELECT vec_id, cid FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-           |    FROM dist)
-           |  WHERE rn = 1),
-           |m AS (
-           |  SELECT doc_id,
-           |    CAST(length(text) AS DOUBLE) AS n_chars,
-           |    CAST(len($tokExpr) AS DOUBLE) AS n_tokens,
-           |    CAST(len(regexp_extract_all(text, '[\\.,;:!\\?]')) AS DOUBLE) AS n_punct,
-           |    CAST(len(regexp_extract_all(lower(text), '$en')) AS DOUBLE) AS n_stop
-           |  FROM documents),
-           |q AS (SELECT doc_id, round(
-           |    least(n_tokens / 50.0, 1.0) * 0.4 +
-           |    least(n_punct / greatest(n_tokens / 10.0, 1.0), 1.0) * 0.2 +
-           |    least(n_stop / greatest(n_tokens / 20.0, 1.0), 1.0) * 0.2 +
-           |    (CASE WHEN n_chars / greatest(n_tokens, 1.0) BETWEEN 3 AND 10
-           |      THEN 1.0 ELSE 0.5 END) * 0.2, 4) AS quality
-           |  FROM m),
-           |r AS (SELECT doc_id, cid, quality,
-           |    CAST(row_number() OVER (PARTITION BY cid
-           |      ORDER BY quality DESC, doc_id) AS INT) AS rank
-           |  FROM q JOIN assigned ON vec_id = doc_id)
-           |SELECT doc_id, cid, quality, rank FROM r WHERE rank <= 25
-           |ORDER BY cid, rank""".stripMargin
-      },
-
-      "t3_quality_score" -> {
-        val en = TextOps.stopwords("en").mkString("\\b(", "|", ")\\b")
-        s"""WITH m AS (
-           |  SELECT doc_id,
-           |    CAST(length(text) AS DOUBLE) AS n_chars,
-           |    CAST(len($tokExpr) AS DOUBLE) AS n_tokens,
-           |    CAST(len(regexp_extract_all(text, '[\\.,;:!\\?]')) AS DOUBLE) AS n_punct,
-           |    CAST(len(regexp_extract_all(lower(text), '$en')) AS DOUBLE) AS n_stop
-           |  FROM documents)
-           |SELECT doc_id, round(
-           |  least(n_tokens / 50.0, 1.0) * 0.4 +
-           |  least(n_punct / greatest(n_tokens / 10.0, 1.0), 1.0) * 0.2 +
-           |  least(n_stop / greatest(n_tokens / 20.0, 1.0), 1.0) * 0.2 +
-           |  (CASE WHEN n_chars / greatest(n_tokens, 1.0) BETWEEN 3 AND 10 THEN 1.0 ELSE 0.5 END) * 0.2, 4) AS quality
-           |FROM m ORDER BY doc_id""".stripMargin
-      },
-
-      "c2_quality_gate" -> {
-        val en = TextOps.stopwords("en").mkString("\\b(", "|", ")\\b")
-        s"""WITH m AS (
-           |  SELECT doc_id, lang,
-           |    CAST(length(text) AS DOUBLE) AS n_chars,
-           |    CAST(len($tokExpr) AS DOUBLE) AS n_tokens,
-           |    CAST(len(regexp_extract_all(text, '[\\.,;:!\\?]')) AS DOUBLE) AS n_punct,
-           |    CAST(len(regexp_extract_all(lower(text), '$en')) AS DOUBLE) AS n_stop
-           |  FROM documents),
-           |q AS (SELECT doc_id, lang, round(
-           |  least(n_tokens / 50.0, 1.0) * 0.4 +
-           |  least(n_punct / greatest(n_tokens / 10.0, 1.0), 1.0) * 0.2 +
-           |  least(n_stop / greatest(n_tokens / 20.0, 1.0), 1.0) * 0.2 +
-           |  (CASE WHEN n_chars / greatest(n_tokens, 1.0) BETWEEN 3 AND 10 THEN 1.0 ELSE 0.5 END) * 0.2, 4) AS quality
-           | FROM m),
-           |r AS (SELECT doc_id, lang, quality,
-           |  row_number() OVER (PARTITION BY lang ORDER BY quality DESC, doc_id ASC) AS rk,
-           |  count(*) OVER (PARTITION BY lang) AS n FROM q)
-           |SELECT doc_id, lang, quality FROM r
-           |WHERE rk <= greatest(1, (n * 3) // 10) ORDER BY doc_id""".stripMargin
-      },
-
-      "t15_unigram_surprisal" ->
-        s"""WITH tok AS (SELECT doc_id, unnest($tokExpr) AS tok FROM documents),
-           |freq AS (SELECT tok, count(*) AS tf FROM tok GROUP BY 1),
-           |tot AS (SELECT sum(tf) AS total FROM freq),
-           |m AS (SELECT doc_id,
-           |    CAST(floor(-ln(tf * 1.0 / total) * 1e6 + 0.5) AS BIGINT) AS micro
-           |  FROM tok JOIN freq USING (tok) CROSS JOIN tot)
-           |SELECT doc_id, count(*) AS n_tokens,
-           |  round(sum(micro) * 1.0 / count(*) / 1e6, 4) AS surprisal
-           |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      "t14_token_budget" ->
-        s"""WITH t AS (SELECT doc_id, source,
-           |  CAST(len($tokExpr) AS BIGINT) AS n_tokens,
-           |  ${h("CAST(doc_id AS VARCHAR)")} AS hh
-           | FROM documents),
-           |c AS (SELECT doc_id, source, n_tokens,
-           |  CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY hh ASC, doc_id ASC
-           |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-           | FROM t)
-           |SELECT doc_id, source, n_tokens, cum_tokens FROM c
-           |WHERE cum_tokens <= 800 ORDER BY doc_id""".stripMargin,
-
-      "t4_fingerprint" ->
-        s"""WITH t AS (SELECT doc_id, $tokExpr AS toks FROM documents),
-           |e AS (SELECT doc_id, unnest(range(len(toks))) AS i, toks FROM t)
-           |SELECT doc_id, CAST(sum((${h("toks[i+1]")} * (2*i+1)) % $P) % $P AS BIGINT) AS fp
-           |FROM e GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      "t6_hash_split" ->
-        s"""WITH b AS (SELECT doc_id,
-           |  CAST(${h("CAST(doc_id AS VARCHAR)")} % 100 AS INT) AS bucket FROM documents)
-           |SELECT doc_id, bucket,
-           |  CASE WHEN bucket < 90 THEN 'train'
-           |       WHEN bucket < 95 THEN 'val'
-           |       ELSE 'test' END AS split
-           |FROM b ORDER BY doc_id""".stripMargin,
-
-      "t7_tfidf" ->
-        s"""WITH tok AS (SELECT doc_id, unnest($tokExpr) AS tok FROM documents),
-           |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok GROUP BY 1, 2),
-           |dfreq AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-           |n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents)
-           |SELECT t.doc_id, t.tok, t.tf, d.df,
-           |  round(t.tf * (ln((n.n_docs + 1.0) / (d.df + 1.0)) + 1) + 5e-7, 4) AS tfidf
-           |FROM tf t JOIN dfreq d USING (tok) CROSS JOIN n
-           |ORDER BY doc_id, tok""".stripMargin,
-
-      "d1_exact_dedup" ->
-        """SELECT md5(text) AS digest, min(doc_id) AS keep_id, count(*) AS n_copies
-          |FROM documents GROUP BY 1 ORDER BY digest""".stripMargin,
-
-      "d2_minhash_sig" ->
-        s"""WITH tok AS (SELECT doc_id, unnest(list_distinct($tokExpr)) AS tok FROM documents),
-           |hashed AS (SELECT doc_id, ${h("tok")} AS h FROM tok)
-           |SELECT doc_id, ${minhashTerms(4)} FROM hashed GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      "d3_lsh_candidates" ->
-        s"""WITH tok AS (SELECT doc_id, unnest(list_distinct($tokExpr)) AS tok FROM documents),
-           |hashed AS (SELECT doc_id, ${h("tok")} AS h FROM tok),
-           |sigs AS (SELECT doc_id, ${minhashTerms(4)} FROM hashed GROUP BY doc_id),
-           |b AS (
-           |  SELECT doc_id, 0 AS band, mh0 AS v0, mh1 AS v1 FROM sigs
-           |  UNION ALL
-           |  SELECT doc_id, 1, mh2, mh3 FROM sigs),
-           |keep AS (SELECT band, v0, v1 FROM b GROUP BY 1, 2, 3 HAVING count(*) <= ${Q.lshCap}),
-           |bk AS (SELECT b.* FROM b JOIN keep USING (band, v0, v1))
-           |SELECT DISTINCT a.doc_id AS doc1, b2.doc_id AS doc2
-           |FROM bk a JOIN bk b2 ON a.band = b2.band AND a.v0 = b2.v0 AND a.v1 = b2.v1
-           |  AND a.doc_id < b2.doc_id
-           |ORDER BY doc1, doc2""".stripMargin,
-
-      "st7_stream_neardup" -> {
-        // Mirrors Q.st7_stream_neardup / Dedup.nearDupVerdicts: the d3
-        // bucket chain (same cap), then per candidate pair a 4-component
-        // signature agreement count ≥ 3, min earlier doc per doc, every
-        // signed doc kept with nullable dup_of.
-        val simSum = (0 until 4).map(i =>
-          s"CASE WHEN sa.mh$i = sb.mh$i THEN 1 ELSE 0 END").mkString(" + ")
-        s"""WITH tok AS (SELECT doc_id, unnest(list_distinct($tokExpr)) AS tok FROM documents),
-           |hashed AS (SELECT doc_id, ${h("tok")} AS h FROM tok),
-           |sigs AS (SELECT doc_id, ${minhashTerms(4)} FROM hashed GROUP BY doc_id),
-           |b AS (
-           |  SELECT doc_id, 0 AS band, mh0 AS v0, mh1 AS v1 FROM sigs
-           |  UNION ALL
-           |  SELECT doc_id, 1, mh2, mh3 FROM sigs),
-           |keep AS (SELECT band, v0, v1 FROM b GROUP BY 1, 2, 3 HAVING count(*) <= ${Q.lshCap}),
-           |bk AS (SELECT b.* FROM b JOIN keep USING (band, v0, v1)),
-           |p AS (SELECT DISTINCT a.doc_id AS cand, b2.doc_id AS doc_id
-           |  FROM bk a JOIN bk b2 ON a.band = b2.band AND a.v0 = b2.v0 AND a.v1 = b2.v1
-           |    AND a.doc_id < b2.doc_id),
-           |q AS (SELECT p.doc_id, p.cand FROM p
-           |  JOIN sigs sa ON sa.doc_id = p.cand
-           |  JOIN sigs sb ON sb.doc_id = p.doc_id
-           |  WHERE ($simSum) >= 3),
-           |d AS (SELECT doc_id, min(cand) AS dup_of FROM q GROUP BY doc_id)
-           |SELECT s.doc_id, d.dup_of FROM sigs s LEFT JOIN d USING (doc_id)
-           |ORDER BY s.doc_id""".stripMargin
-      },
-
-      "d7_simhash_pairs" -> {
-        val votes = (0 until 16).map(b =>
-          s"sum(CASE WHEN (h >> $b) % 2 = 1 THEN 1 ELSE -1 END) AS v$b").mkString(", ")
-        val sig = (0 until 16).map(b =>
-          s"CASE WHEN v$b > 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END").mkString(" + ")
-        s"""WITH tok AS (SELECT doc_id, unnest(list_distinct($tokExpr)) AS tok FROM documents),
-           |hashed AS (SELECT doc_id, ${h("tok")} AS h FROM tok),
-           |v AS (SELECT doc_id, $votes FROM hashed GROUP BY doc_id),
-           |sig AS (SELECT doc_id, CAST($sig AS BIGINT) AS simhash FROM v),
-           |b AS (SELECT doc_id, simhash, band, (simhash >> (band*8)) % 256 AS key
-           |      FROM sig CROSS JOIN (SELECT unnest([0,1]) AS band) t),
-           |p AS (SELECT DISTINCT a.doc_id AS doc1, c.doc_id AS doc2, a.simhash AS sh1, c.simhash AS sh2
-           |      FROM b a JOIN b c ON a.band = c.band AND a.key = c.key AND a.doc_id < c.doc_id)
-           |SELECT doc1, doc2, CAST(bit_count(xor(sh1, sh2)) AS INT) AS hamming FROM p
-           |WHERE bit_count(xor(sh1, sh2)) <= 1 ORDER BY doc1, doc2""".stripMargin
-      },
-
-      // transitive closure via recursive CTE, then min over the reach set —
-      // tractable at oracle scale (closure is O(n · component size))
-      "d6_dedup_groups" ->
-        s"""WITH RECURSIVE tok AS (SELECT doc_id, unnest(list_distinct($tokExpr)) AS tok FROM documents),
-           |hashed AS (SELECT doc_id, ${h("tok")} AS h FROM tok),
-           |sigs AS (SELECT doc_id, ${minhashTerms(4)} FROM hashed GROUP BY doc_id),
-           |b AS (
-           |  SELECT doc_id, 0 AS band, mh0 AS v0, mh1 AS v1 FROM sigs
-           |  UNION ALL
-           |  SELECT doc_id, 1, mh2, mh3 FROM sigs),
-           |keep AS (SELECT band, v0, v1 FROM b GROUP BY 1, 2, 3 HAVING count(*) <= ${Q.lshCap}),
-           |bk AS (SELECT b.* FROM b JOIN keep USING (band, v0, v1)),
-           |pairs AS (
-           |  SELECT DISTINCT a.doc_id AS doc1, b2.doc_id AS doc2
-           |  FROM bk a JOIN bk b2 ON a.band = b2.band AND a.v0 = b2.v0 AND a.v1 = b2.v1
-           |    AND a.doc_id < b2.doc_id),
-           |edges AS (SELECT doc1 AS src, doc2 AS dst FROM pairs
-           |          UNION SELECT doc2, doc1 FROM pairs),
-           |reach AS (
-           |  SELECT src, dst FROM edges
-           |  UNION
-           |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-           |SELECT src AS doc_id, least(src, min(dst)) AS group_id
-           |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin,
-
-      "d4_simhash" -> {
-        val votes = (0 until 16).map(b =>
-          s"sum(CASE WHEN (h >> $b) % 2 = 1 THEN 1 ELSE -1 END) AS v$b").mkString(", ")
-        val sig = (0 until 16).map(b =>
-          s"CASE WHEN v$b > 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END").mkString(" + ")
-        s"""WITH tok AS (SELECT doc_id, unnest(list_distinct($tokExpr)) AS tok FROM documents),
-           |hashed AS (SELECT doc_id, ${h("tok")} AS h FROM tok),
-           |v AS (SELECT doc_id, $votes FROM hashed GROUP BY doc_id)
-           |SELECT doc_id, CAST($sig AS BIGINT) AS simhash FROM v ORDER BY doc_id""".stripMargin
-      },
-
-      "d13_edit_distance" ->
-        s"""WITH $candCtes
-           |SELECT doc1, doc2,
-           |  CAST(levenshtein(substr(a.text, 1, 80), substr(b2.text, 1, 80)) AS BIGINT) AS edit_dist
-           |FROM cand JOIN documents a ON a.doc_id = doc1
-           |          JOIN documents b2 ON b2.doc_id = doc2
-           |ORDER BY doc1, doc2""".stripMargin,
-
-      "d14_minhash_est" ->
-        s"""WITH $candCtes
-           |SELECT doc1, doc2,
-           |  ((CASE WHEN s1.mh0 = s2.mh0 THEN 1 ELSE 0 END) +
-           |   (CASE WHEN s1.mh1 = s2.mh1 THEN 1 ELSE 0 END) +
-           |   (CASE WHEN s1.mh2 = s2.mh2 THEN 1 ELSE 0 END) +
-           |   (CASE WHEN s1.mh3 = s2.mh3 THEN 1 ELSE 0 END)) AS eq_k,
-           |  round(((CASE WHEN s1.mh0 = s2.mh0 THEN 1 ELSE 0 END) +
-           |   (CASE WHEN s1.mh1 = s2.mh1 THEN 1 ELSE 0 END) +
-           |   (CASE WHEN s1.mh2 = s2.mh2 THEN 1 ELSE 0 END) +
-           |   (CASE WHEN s1.mh3 = s2.mh3 THEN 1 ELSE 0 END)) / 4.0, 4) AS jaccard_est
-           |FROM cand JOIN sigs s1 ON s1.doc_id = doc1
-           |          JOIN sigs s2 ON s2.doc_id = doc2
-           |ORDER BY doc1, doc2""".stripMargin,
-
-      // word trigrams: list slice toks[i:i+2] is inclusive (3 tokens),
-      // clamped for docs shorter than n — mirrors slice(toks, i+1, 3)
-      "d15_ngram_jaccard" ->
-        s"""WITH $candCtes,
-           |tokl AS (SELECT doc_id, $tokExpr AS toks FROM documents),
-           |tri AS (SELECT doc_id,
-           |  unnest(list_distinct([array_to_string(toks[i:i+2], ' ')
-           |    FOR i IN range(1, greatest(len(toks)-2, 1)+1)])) AS tok FROM tokl),
-           |sz AS (SELECT doc_id, count(*) AS s FROM tri GROUP BY doc_id),
-           |i AS (SELECT doc1, doc2, count(*) AS inter
-           |      FROM cand JOIN tri a ON a.doc_id = doc1
-           |        JOIN tri b ON b.doc_id = doc2 AND b.tok = a.tok
-           |      GROUP BY 1, 2)
-           |SELECT cand.doc1, cand.doc2,
-           |  CAST(coalesce(i.inter, 0) AS BIGINT) AS inter,
-           |  round(coalesce(i.inter, 0) * 1.0
-           |    / (s1.s + s2.s - coalesce(i.inter, 0)), 4) AS jaccard
-           |FROM cand LEFT JOIN i ON i.doc1 = cand.doc1 AND i.doc2 = cand.doc2
-           |  JOIN sz s1 ON s1.doc_id = cand.doc1
-           |  JOIN sz s2 ON s2.doc_id = cand.doc2
-           |ORDER BY 1, 2""".stripMargin,
-
-      "t20_bm25" ->
-        s"""WITH $bm25Ctes,
-           |ranked AS (SELECT doc_id, n_terms, round(score_micro / 1e6, 4) AS bm25,
-           |    CAST(row_number() OVER (ORDER BY score_micro DESC, doc_id) AS INT) AS rank
-           |  FROM bm)
-           |SELECT doc_id, n_terms, bm25, rank FROM ranked
-           |WHERE rank <= 20 ORDER BY rank""".stripMargin,
-
-      // full recompute — equality with the Spark side's batch-maintained
-      // stats table IS the t22 claim. avgdl via one exact integer-sum
-      // division (not avg()), matching the maintained dl_total / n_docs.
-      "t22_bm25_incremental" ->
-        s"""WITH tok AS (SELECT doc_id, unnest($tokExpr) AS tok FROM documents),
-           |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok GROUP BY 1, 2),
-           |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-           |stats AS (SELECT count(*) AS n_docs,
-           |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-           |dfq AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-           |bm AS (SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_terms,
-           |    sum(CAST(floor(ln(1.0 + (s.n_docs - d2.df + 0.5) / (d2.df + 0.5))
-           |        * t.tf * (1.2 + 1.0)
-           |        / (t.tf + 1.2 * ((1.0 - 0.75) + (0.75 * l.dl) / s.avgdl))
-           |        * 1e6 + 0.5) AS BIGINT)) AS score_micro
-           |  FROM tf t JOIN dfq d2 USING (tok) JOIN dl l USING (doc_id) CROSS JOIN stats s
-           |  WHERE t.tok IN ('spark', 'vector', 'merge')
-           |  GROUP BY 1),
-           |ranked AS (SELECT doc_id, n_terms, round(score_micro / 1e6, 4) AS bm25,
-           |    CAST(row_number() OVER (ORDER BY score_micro DESC, doc_id) AS INT) AS rank
-           |  FROM bm)
-           |SELECT doc_id, n_terms, bm25, rank FROM ranked
-           |WHERE rank <= 20 ORDER BY rank""".stripMargin,
-
-      "e8_rrf" ->
-        s"""WITH $bm25Ctes,
-           |dq AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-           |dc AS (SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings WHERE vec_id != 0),
-           |dsc AS (SELECT vec_id AS id,
-           |    list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS rawcos
-           |  FROM dq CROSS JOIN dc),
-           |dr AS (SELECT id, row_number() OVER (ORDER BY rawcos DESC, id) AS rank FROM dsc),
-           |lr AS (SELECT doc_id AS id, row_number() OVER (ORDER BY score_micro DESC, doc_id) AS rank FROM bm),
-           |u AS (SELECT id, 1000000000 // (60 + rank) AS c FROM dr WHERE rank <= 50
-           |      UNION ALL SELECT id, 1000000000 // (60 + rank) FROM lr WHERE rank <= 50),
-           |f AS (SELECT id, CAST(sum(c) AS BIGINT) AS rrf_nano, CAST(count(*) AS BIGINT) AS n_lists
-           |      FROM u GROUP BY 1),
-           |fr AS (SELECT id, rrf_nano, n_lists,
-           |    CAST(row_number() OVER (ORDER BY rrf_nano DESC, id) AS INT) AS rank FROM f)
-           |SELECT id, rrf_nano, n_lists, rank FROM fr WHERE rank <= 20 ORDER BY rank""".stripMargin,
-
-      "t16_posting_lists" ->
-        s"""WITH tok AS (SELECT doc_id, unnest(list_distinct($tokExpr)) AS tok FROM documents)
-           |SELECT tok, count(*) AS df,
-           |  string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings
-           |FROM tok GROUP BY tok HAVING count(*) >= 5 ORDER BY tok""".stripMargin,
-
-      "t17_bigram_surprisal" ->
-        s"""WITH t AS (SELECT doc_id, $tokExpr AS toks FROM documents),
-           |bi AS (SELECT doc_id, unnest(toks[1:-2]) AS w1, unnest(toks[2:-1]) AS w2
-           |       FROM t WHERE len(toks) >= 2),
-           |bfreq AS (SELECT w1, w2, count(*) AS bc FROM bi GROUP BY 1, 2),
-           |pfx AS (SELECT w1, sum(bc) AS pc FROM bfreq GROUP BY 1),
-           |voc AS (SELECT count(DISTINCT tok) AS v
-           |        FROM (SELECT unnest(toks) AS tok FROM t)),
-           |m AS (SELECT doc_id,
-           |    CAST(floor(-ln((bc + 1.0) / (pc + v)) * 1e6 + 0.5) AS BIGINT) AS micro
-           |  FROM bi JOIN bfreq USING (w1, w2) JOIN pfx USING (w1) CROSS JOIN voc)
-           |SELECT doc_id, count(*) AS n_bigrams,
-           |  round(sum(micro) * 1.0 / count(*) / 1e6, 4) AS surprisal
-           |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      "t18_dedup_report" ->
-        """SELECT source, count(*) AS n_docs, count(DISTINCT md5(text)) AS n_unique,
-          |  round(1.0 - count(DISTINCT md5(text)) * 1.0 / count(*), 4) AS dup_rate
-          |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-      // PMI argument is the exact rational c12·N²/(M·c1·c2); micro-nat
-      // quantization with the +0.5 floor, ranked with a total tiebreak
-      "t23_collocations" ->
-        s"""WITH tokl AS (SELECT doc_id, $tokExpr AS toks FROM documents),
-           |uni AS (SELECT unnest(toks) AS tok FROM tokl),
-           |uc AS (SELECT tok, count(*) AS c FROM uni GROUP BY tok),
-           |n AS (SELECT count(*) AS n FROM uni),
-           |bi AS (SELECT unnest([struct_pack(w1 := toks[i], w2 := toks[i+1])
-           |         FOR i IN range(1, len(toks))]) AS bg
-           |       FROM tokl WHERE len(toks) >= 2),
-           |bc AS (SELECT bg.w1 AS w1, bg.w2 AS w2, count(*) AS c12 FROM bi GROUP BY 1, 2),
-           |m AS (SELECT CAST(sum(c12) AS BIGINT) AS m FROM bc),
-           |pmi AS (
-           |  SELECT w1, w2, c12,
-           |    CAST(floor(ln(c12 * n.n * n.n * 1.0 / (m.m * u1.c * u2.c)) * 1e6 + 0.5) AS BIGINT) AS pmi_micro
-           |  FROM bc, n, m
-           |  JOIN uc u1 ON u1.tok = bc.w1
-           |  JOIN uc u2 ON u2.tok = bc.w2
-           |  WHERE c12 >= 5)
-           |SELECT w1, w2, c12, pmi_micro FROM pmi
-           |ORDER BY pmi_micro DESC, w1, w2 LIMIT 20""".stripMargin,
-
-      "t24_mixture_sample" ->
-        s"""WITH r AS (SELECT doc_id, source,
-           |  row_number() OVER (PARTITION BY source
-           |    ORDER BY ${h("'mix:' || CAST(doc_id AS VARCHAR)")} ASC, doc_id ASC)
-           |    AS mix_rank,
-           |  CAST(CASE source WHEN 'src0' THEN 54 WHEN 'src1' THEN 32
-           |    WHEN 'src2' THEN 21 WHEN 'src3' THEN 10 ELSE 0 END AS BIGINT)
-           |    AS mix_quota
-           |  FROM documents)
-           |SELECT doc_id, source, mix_rank, mix_quota FROM r
-           |WHERE mix_rank <= mix_quota ORDER BY doc_id""".stripMargin,
-
-      "t19_bpe_pairs" ->
-        s"""WITH words AS (SELECT unnest($tokExpr) AS word FROM documents),
-           |idx AS (SELECT word, unnest(generate_series(1, len(word) - 1)) AS i
-           |        FROM words WHERE len(word) >= 2),
-           |pairs AS (SELECT substr(word, CAST(i AS INT), 2) AS pair FROM idx),
-           |c AS (SELECT pair, count(*) AS n FROM pairs GROUP BY pair),
-           |r AS (SELECT pair, n,
-           |    CAST(row_number() OVER (ORDER BY n DESC, pair) AS INT) AS rank FROM c)
-           |SELECT rank, pair, n FROM r WHERE rank <= 15 ORDER BY rank""".stripMargin,
-
-      "d5_jaccard_pairs" ->
-        s"""WITH tok AS (SELECT doc_id, unnest(list_distinct($tokExpr)) AS tok FROM documents),
-           |hashed AS (SELECT doc_id, ${h("tok")} AS h FROM tok),
-           |sigs AS (SELECT doc_id, ${minhashTerms(4)} FROM hashed GROUP BY doc_id),
-           |b AS (
-           |  SELECT doc_id, 0 AS band, mh0 AS v0, mh1 AS v1 FROM sigs
-           |  UNION ALL
-           |  SELECT doc_id, 1, mh2, mh3 FROM sigs),
-           |keep AS (SELECT band, v0, v1 FROM b GROUP BY 1, 2, 3 HAVING count(*) <= ${Q.lshCap}),
-           |bk AS (SELECT b.* FROM b JOIN keep USING (band, v0, v1)),
-           |cand AS (SELECT DISTINCT a.doc_id AS doc1, b2.doc_id AS doc2
-           |  FROM bk a JOIN bk b2 ON a.band = b2.band AND a.v0 = b2.v0 AND a.v1 = b2.v1
-           |    AND a.doc_id < b2.doc_id),
-           |sz AS (SELECT doc_id, count(*) AS s FROM tok GROUP BY doc_id),
-           |i AS (SELECT doc1, doc2, count(*) AS inter
-           |      FROM cand JOIN tok a ON a.doc_id = doc1 JOIN tok b ON b.doc_id = doc2 AND b.tok = a.tok
-           |      GROUP BY 1, 2)
-           |SELECT doc1, doc2, inter,
-           |  round(inter * 1.0 / (s1.s + s2.s - inter), 4) AS jaccard
-           |FROM i JOIN sz s1 ON s1.doc_id = doc1 JOIN sz s2 ON s2.doc_id = doc2
-           |WHERE round(inter * 1.0 / (s1.s + s2.s - inter), 4) >= 0.5
-           |ORDER BY doc1, doc2""".stripMargin,
-
-      // span chunking mirrors chunkTexts(window=16, stride=16): starts
-      // 0,16,… (range excludes its stop like sequence(0, len-1, 16) for
-      // len ≥ 1), spans are inclusive 1-based list slices rejoined
-      "d12_near_dedup" ->
-        s"""WITH RECURSIVE tok AS (SELECT doc_id, unnest(list_distinct($tokExpr)) AS tok FROM documents),
-           |hashed AS (SELECT doc_id, ${h("tok")} AS h FROM tok),
-           |sigs AS (SELECT doc_id, ${minhashTerms(4)} FROM hashed GROUP BY doc_id),
-           |b AS (
-           |  SELECT doc_id, 0 AS band, mh0 AS v0, mh1 AS v1 FROM sigs
-           |  UNION ALL
-           |  SELECT doc_id, 1, mh2, mh3 FROM sigs),
-           |keep AS (SELECT band, v0, v1 FROM b GROUP BY 1, 2, 3 HAVING count(*) <= ${Q.lshCap}),
-           |bk AS (SELECT b.* FROM b JOIN keep USING (band, v0, v1)),
-           |cand AS (SELECT DISTINCT a.doc_id AS doc1, b2.doc_id AS doc2
-           |  FROM bk a JOIN bk b2 ON a.band = b2.band AND a.v0 = b2.v0 AND a.v1 = b2.v1
-           |    AND a.doc_id < b2.doc_id),
-           |sz AS (SELECT doc_id, count(*) AS s FROM tok GROUP BY doc_id),
-           |i AS (SELECT doc1, doc2, count(*) AS inter
-           |      FROM cand JOIN tok a ON a.doc_id = doc1 JOIN tok b ON b.doc_id = doc2 AND b.tok = a.tok
-           |      GROUP BY 1, 2),
-           |ver AS (SELECT doc1, doc2 FROM i
-           |  JOIN sz s1 ON s1.doc_id = doc1 JOIN sz s2 ON s2.doc_id = doc2
-           |  WHERE round(inter * 1.0 / (s1.s + s2.s - inter), 4) >= 0.5),
-           |edges AS (SELECT doc1 AS src, doc2 AS dst FROM ver
-           |          UNION SELECT doc2, doc1 FROM ver),
-           |reach AS (
-           |  SELECT src, dst FROM edges
-           |  UNION
-           |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-           |comp AS (SELECT src AS doc_id, least(src, min(dst)) AS group_id
-           |         FROM reach GROUP BY src)
-           |SELECT d.doc_id, coalesce(c.group_id, d.doc_id) AS group_id,
-           |  CAST(d.doc_id = coalesce(c.group_id, d.doc_id) AS INT) AS keep
-           |FROM documents d LEFT JOIN comp c USING (doc_id) ORDER BY d.doc_id""".stripMargin,
-
-      "d11_substring_dup" ->
-        s"""WITH t AS (SELECT doc_id, $tokExpr AS toks FROM documents),
-           |tt AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n FROM t WHERE len(toks) >= 8),
-           |w AS (SELECT doc_id, n, CAST(i AS BIGINT) AS i,
-           |    ${h("array_to_string(toks[CAST(i AS INT):CAST(i + 7 AS INT)], ' ')")} AS h
-           |  FROM tt, unnest(range(1, CAST(n - 6 AS INT))) AS u(i)),
-           |dup AS (SELECT h FROM w GROUP BY h HAVING count(*) > 1),
-           |d AS (SELECT doc_id, n, i FROM w JOIN dup USING (h)),
-           |c AS (SELECT doc_id, n, i,
-           |  max(i + 7) OVER (PARTITION BY doc_id ORDER BY i
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pme FROM d),
-           |s AS (SELECT doc_id, n,
-           |  greatest(0, (i + 7) - greatest(coalesce(pme, i - 1), i - 1)) AS cov FROM c)
-           |SELECT doc_id, n AS n_tokens, CAST(sum(cov) AS BIGINT) AS dup_tokens,
-           |  round(sum(cov) * 1.0 / n, 4) AS dup_frac
-           |FROM s GROUP BY doc_id, n ORDER BY doc_id""".stripMargin,
-
-      "d8_span_dedup" ->
-        s"""WITH t AS (SELECT doc_id, $tokExpr AS toks FROM documents),
-           |sp AS (SELECT doc_id,
-           |    array_to_string(toks[CAST(st + 1 AS INT):CAST(st + 16 AS INT)], ' ') AS span
-           |  FROM t, unnest(range(0, greatest(len(toks), 1), 16)) AS u(st)
-           |  WHERE len(toks) > 0),
-           |hs AS (SELECT doc_id, ${h("span")} AS h FROM sp),
-           |freq AS (SELECT h, count(DISTINCT doc_id) AS n_docs FROM hs GROUP BY 1)
-           |SELECT hs.doc_id, count(*) AS n_spans,
-           |  CAST(sum(CASE WHEN f.n_docs > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_spans,
-           |  round(sum(CASE WHEN f.n_docs > 1 THEN 1 ELSE 0 END) * 1.0 / count(*), 4) AS dup_frac
-           |FROM hs JOIN freq f USING (h)
-           |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-      "d9_contamination" ->
-        s"""WITH t AS (SELECT doc_id, source, $tokExpr AS toks FROM documents),
-           |g AS (SELECT doc_id, source, unnest(list_distinct(list_transform(
-           |    range(1, greatest(len(toks) - 4, 0) + 1),
-           |    i -> array_to_string(toks[CAST(i AS INT):CAST(i + 4 AS INT)], ' ')))) AS gram
-           |  FROM t WHERE len(toks) >= 5),
-           |hg AS (SELECT doc_id, source, ${h("gram")} AS g FROM g),
-           |bench AS (SELECT DISTINCT g FROM hg WHERE source = 'src0')
-           |SELECT hg.doc_id, count(*) AS n_grams,
-           |  CAST(sum(CASE WHEN b.g IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           |  round(sum(CASE WHEN b.g IS NOT NULL THEN 1 ELSE 0 END) * 1.0 / count(*), 4) AS contamination
-           |FROM hg LEFT JOIN bench b ON hg.g = b.g
-           |WHERE hg.source <> 'src0'
-           |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-      "t9_rep_signals" ->
-        s"""WITH t AS (SELECT doc_id, $tokExpr AS toks FROM documents),
-           |ts AS (SELECT doc_id, len(toks) AS n_tokens,
-           |    round(len(list_distinct(toks)) * 1.0 / greatest(len(toks), 1), 4) AS uniq_token_ratio
-           |  FROM t),
-           |bg AS (SELECT doc_id, ${h("bgs")} AS h FROM (
-           |    SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-           |      i -> toks[CAST(i AS INT)] || ' ' || toks[CAST(i + 1 AS INT)])) AS bgs
-           |    FROM t WHERE len(toks) >= 2)),
-           |pb AS (SELECT doc_id, h, count(*) AS n FROM bg GROUP BY 1, 2),
-           |st AS (SELECT doc_id, sum(n) AS nb, count(*) AS nd, max(n) AS tn FROM pb GROUP BY 1)
-           |SELECT ts.doc_id, ts.n_tokens, ts.uniq_token_ratio,
-           |  round((st.nb - st.nd) * 1.0 / st.nb, 4) AS dup_bigram_frac,
-           |  round(st.tn * 1.0 / st.nb, 4) AS top_bigram_frac
-           |FROM ts LEFT JOIN st USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-      "t10_stratified_sample" ->
-        s"""WITH b AS (SELECT doc_id, lang,
-           |  CAST(${h("'strat:' || CAST(doc_id AS VARCHAR)")} % 100 AS INT) AS bucket
-           |  FROM documents)
-           |SELECT doc_id, lang, bucket FROM b
-           |WHERE bucket < (CASE lang WHEN 'en' THEN 50 WHEN 'es' THEN 30
-           |  WHEN 'fr' THEN 30 WHEN 'de' THEN 30 ELSE 10 END)
-           |ORDER BY doc_id""".stripMargin,
-
-      "t11_pii_scrub" -> {
-        import TextOps.{emailRe, ipRe, phoneRe}
-        s"""WITH seeded AS (SELECT doc_id,
-           |    text || ' contact u' || doc_id || '@example.com via 10.' ||
-           |    (doc_id % 200) || '.0.1 ext 555-' ||
-           |    lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS text
-           |  FROM documents)
-           |SELECT doc_id,
-           |  CAST(len(regexp_extract_all(text, '$emailRe')) AS INT) AS n_emails,
-           |  CAST(len(regexp_extract_all(text, '$ipRe')) AS INT) AS n_ips,
-           |  CAST(len(regexp_extract_all(text, '$phoneRe')) AS INT) AS n_phones,
-           |  md5(regexp_replace(regexp_replace(regexp_replace(text,
-           |    '$emailRe', '[EMAIL]', 'g'), '$ipRe', '[IP]', 'g'),
-           |    '$phoneRe', '[PHONE]', 'g')) AS redacted_md5
-           |FROM seeded ORDER BY doc_id""".stripMargin
-      },
-
-      "t12_domain_stats" -> {
-        val en = TextOps.stopwords("en").mkString("\\b(", "|", ")\\b")
-        s"""WITH m AS (
-           |  SELECT source AS domain, md5(text) AS digest,
-           |    CAST(length(text) AS DOUBLE) AS n_chars,
-           |    CAST(len($tokExpr) AS DOUBLE) AS n_tokens,
-           |    CAST(len(regexp_extract_all(text, '[\\.,;:!\\?]')) AS DOUBLE) AS n_punct,
-           |    CAST(len(regexp_extract_all(lower(text), '$en')) AS DOUBLE) AS n_stop
-           |  FROM documents),
-           |q AS (SELECT domain, digest,
-           |  CAST(round(
-           |    least(n_tokens / 50.0, 1.0) * 0.4 +
-           |    least(n_punct / greatest(n_tokens / 10.0, 1.0), 1.0) * 0.2 +
-           |    least(n_stop / greatest(n_tokens / 20.0, 1.0), 1.0) * 0.2 +
-           |    (CASE WHEN n_chars / greatest(n_tokens, 1.0) BETWEEN 3 AND 10 THEN 1.0 ELSE 0.5 END) * 0.2,
-           |    4) AS DECIMAL(18,4)) AS q,
-           |  CAST(n_tokens AS BIGINT) AS nt FROM m),
-           |c AS (SELECT digest, count(*) AS nc FROM q GROUP BY 1)
-           |SELECT domain, count(*) AS n_docs,
-           |  round(CAST(sum(q) AS DOUBLE) / count(*), 4) AS mean_quality,
-           |  round(CAST(sum(nt) AS DOUBLE) / count(*), 2) AS mean_tokens,
-           |  round(sum(CASE WHEN nc > 1 THEN 1.0 ELSE 0.0 END) / count(*), 4) AS dup_frac
-           |FROM q JOIN c USING (digest)
-           |GROUP BY domain ORDER BY domain""".stripMargin
-      },
-
-      "t13_pack_sequences" ->
-        s"""WITH t AS (SELECT doc_id, source AS shard,
-           |    CAST(len($tokExpr) AS INT) AS n_tokens FROM documents),
-           |o AS (SELECT doc_id, shard, n_tokens,
-           |    CAST(coalesce(sum(n_tokens + 1) OVER (PARTITION BY shard ORDER BY doc_id
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tok_offset
-           |  FROM t)
-           |SELECT doc_id, shard, n_tokens, tok_offset,
-           |  CAST(floor(tok_offset / 512.0) AS BIGINT) AS first_seq,
-           |  CAST(floor((tok_offset + n_tokens) / 512.0) AS BIGINT) AS last_seq,
-           |  CAST(floor((tok_offset + n_tokens) / 512.0) AS BIGINT)
-           |    - CAST(floor(tok_offset / 512.0) AS BIGINT) + 1 AS n_seqs
-           |FROM o ORDER BY doc_id""".stripMargin,
-
-      "d10_incremental_dedup" ->
-        s"""WITH tok AS (SELECT doc_id, source, unnest(list_distinct($tokExpr)) AS tok FROM documents),
-           |hashed AS (SELECT doc_id, source, ${h("tok")} AS h FROM tok),
-           |sigs AS (SELECT doc_id, source, ${minhashTerms(4)} FROM hashed GROUP BY doc_id, source),
-           |b AS (
-           |  SELECT doc_id, source, 0 AS band, mh0 AS v0, mh1 AS v1 FROM sigs
-           |  UNION ALL
-           |  SELECT doc_id, source, 1, mh2, mh3 FROM sigs),
-           |cb AS (SELECT * FROM b WHERE source <> 'src0'),
-           |pb AS (SELECT * FROM b WHERE source = 'src0'),
-           |keep AS (SELECT band, v0, v1 FROM cb GROUP BY 1, 2, 3 HAVING count(*) <= ${Q.lshCap}),
-           |ck AS (SELECT cb.* FROM cb JOIN keep USING (band, v0, v1))
-           |SELECT DISTINCT p.doc_id AS probe_id, c.doc_id AS corpus_id
-           |FROM pb p JOIN ck c ON p.band = c.band AND p.v0 = c.v0 AND p.v1 = c.v1
-           |ORDER BY probe_id, corpus_id""".stripMargin,
-
-      "e10_ivf_pq" ->
-        """WITH emb2 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          |cent AS (SELECT CAST(vec_id // 37 AS INT) AS cid, v AS c FROM emb2
-          |         WHERE vec_id % 37 = 0 AND vec_id < 260),
-          |adist AS (SELECT e.vec_id, cent.cid,
-          |    list_sum(list_transform(list_zip(e.v, cent.c),
-          |      p -> (p[1] - p[2]) * (p[1] - p[2]))) AS d
-          |  FROM emb2 e CROSS JOIN cent),
-          |assigned AS (SELECT vec_id, cid FROM (
-          |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-          |    FROM adist) WHERE rn = 1),
-          |probes AS (SELECT cid FROM (
-          |    SELECT cid, row_number() OVER (ORDER BY d, cid) AS rn
-          |    FROM adist WHERE vec_id = 0) WHERE rn <= 2),
-          |sub AS (SELECT a.vec_id FROM assigned a JOIN probes p ON a.cid = p.cid),
-          |subs AS (SELECT CAST(range AS INT) AS m FROM range(8)),
-          |pqd AS (SELECT e2.vec_id, s2.m, cb.cid AS j,
-          |    CAST(floor(list_dot_product(
-          |      list_transform(range(1, 9), i -> e2.v[s2.m * 8 + i] - cb.c[s2.m * 8 + i]),
-          |      list_transform(range(1, 9), i -> e2.v[s2.m * 8 + i] - cb.c[s2.m * 8 + i]))
-          |      * 1e6 + 0.5) AS BIGINT) AS micro
-          |  FROM emb2 e2, subs s2, cent cb),
-          |codes AS (SELECT vec_id, m, j AS code FROM (
-          |    SELECT vec_id, m, j,
-          |      row_number() OVER (PARTITION BY vec_id, m ORDER BY micro, j) AS rn
-          |    FROM pqd) WHERE rn = 1),
-          |lut AS (SELECT m, j, micro FROM pqd WHERE vec_id = 0),
-          |adc AS (SELECT c2.vec_id, CAST(sum(l.micro) AS BIGINT) AS adc_micro
-          |        FROM codes c2 JOIN lut l ON l.m = c2.m AND l.j = c2.code
-          |        JOIN sub ON sub.vec_id = c2.vec_id GROUP BY 1),
-          |ranked AS (SELECT vec_id, adc_micro,
-          |    CAST(row_number() OVER (ORDER BY adc_micro, vec_id) AS INT) AS rank FROM adc)
-          |SELECT vec_id, adc_micro, rank FROM ranked WHERE rank <= 10
-          |ORDER BY rank""".stripMargin,
-
-      "e9_pq_adc" -> {
-        val codeCols = (0 until 8).map(ms =>
-          s"CAST(max(CASE WHEN m = $ms THEN code END) AS INT) AS code$ms").mkString(", ")
-        s"""WITH emb2 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |cents AS (SELECT CAST(vec_id // 37 AS INT) AS j, embedding::DOUBLE[] AS cv
-           |          FROM embeddings WHERE vec_id % 37 = 0 AND vec_id < 260),
-           |subs AS (SELECT CAST(range AS INT) AS m FROM range(8)),
-           |dists AS (
-           |  SELECT vec_id, m, j,
-           |    CAST(floor(list_dot_product(
-           |      list_transform(range(1, 9), i -> v[m * 8 + i] - cv[m * 8 + i]),
-           |      list_transform(range(1, 9), i -> v[m * 8 + i] - cv[m * 8 + i]))
-           |      * 1e6 + 0.5) AS BIGINT) AS micro
-           |  FROM emb2, subs, cents),
-           |codes AS (SELECT vec_id, m, j AS code FROM (
-           |  SELECT vec_id, m, j,
-           |    row_number() OVER (PARTITION BY vec_id, m ORDER BY micro, j) AS rn
-           |  FROM dists) WHERE rn = 1),
-           |lut AS (SELECT m, j, micro FROM dists WHERE vec_id = 0),
-           |adc AS (SELECT c.vec_id, CAST(sum(l.micro) AS BIGINT) AS adc_micro
-           |        FROM codes c JOIN lut l ON l.m = c.m AND l.j = c.code GROUP BY 1),
-           |cw AS (SELECT vec_id, $codeCols FROM codes GROUP BY vec_id),
-           |ranked AS (SELECT a.vec_id, cw.code0, cw.code1, cw.code2, cw.code3,
-           |    cw.code4, cw.code5, cw.code6, cw.code7, a.adc_micro,
-           |    CAST(row_number() OVER (ORDER BY a.adc_micro, a.vec_id) AS INT) AS rank
-           |  FROM adc a JOIN cw USING (vec_id))
-           |SELECT * FROM ranked WHERE rank <= 20 ORDER BY rank""".stripMargin
-      },
-
-      // trained-centroid IVF: e12's integer Lloyd round builds the coarse
-      // quantizer, then e7's probe replay (euclidean list assignment,
-      // nprobe=2 ranking, in-list cosine top-5) runs against it
-      "e5_knn_ivf" ->
-        s"""WITH $trainedCentCtes,
-           |emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |dist AS (SELECT e.vec_id, e.v, cent.cid,
-           |    list_sum(list_transform(list_zip(e.v, cent.c),
-           |      p -> (p[1] - p[2]) * (p[1] - p[2]))) AS d
-           |  FROM emb e CROSS JOIN cent),
-           |assigned AS (SELECT vec_id, v, cid FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn FROM dist)
-           |  WHERE rn = 1),
-           |probes AS (SELECT vec_id AS query_id, v AS qv, cid FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-           |    FROM dist WHERE vec_id < 5)
-           |  WHERE rn <= 2),
-           |scored AS (SELECT p.query_id, a.vec_id AS neighbor_id,
-           |    list_dot_product(p.qv, a.v) /
-           |      (sqrt(list_dot_product(p.qv, p.qv)) * sqrt(list_dot_product(a.v, a.v))) AS rawcos
-           |  FROM probes p JOIN assigned a USING (cid) WHERE a.vec_id != p.query_id),
-           |r AS (SELECT query_id, neighbor_id, round(rawcos, 4) AS cosine,
-           |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY rawcos DESC, neighbor_id) AS INT) AS rank
-           |  FROM scored)
-           |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 5
-           |ORDER BY query_id, rank""".stripMargin,
-
-      "e7_ivf_fixed" ->
-        """WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          |cent AS (SELECT CAST(vec_id // 37 AS INT) AS cid, v AS c FROM emb
-          |         WHERE vec_id % 37 = 0 AND vec_id < 260),
-          |dist AS (SELECT e.vec_id, e.v, cent.cid,
-          |    list_sum(list_transform(list_zip(e.v, cent.c),
-          |      p -> (p[1] - p[2]) * (p[1] - p[2]))) AS d
-          |  FROM emb e CROSS JOIN cent),
-          |assigned AS (SELECT vec_id, v, cid FROM (
-          |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn FROM dist)
-          |  WHERE rn = 1),
-          |probes AS (SELECT vec_id AS query_id, v AS qv, cid FROM (
-          |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-          |    FROM dist WHERE vec_id < 5)
-          |  WHERE rn <= 2),
-          |scored AS (SELECT p.query_id, a.vec_id AS neighbor_id,
-          |    list_dot_product(p.qv, a.v) /
-          |      (sqrt(list_dot_product(p.qv, p.qv)) * sqrt(list_dot_product(a.v, a.v))) AS rawcos
-          |  FROM probes p JOIN assigned a USING (cid) WHERE a.vec_id != p.query_id),
-          |r AS (SELECT query_id, neighbor_id, round(rawcos, 4) AS cosine,
-          |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY rawcos DESC, neighbor_id) AS INT) AS rank
-          |  FROM scored)
-          |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 5
-          |ORDER BY query_id, rank""".stripMargin,
-
-      "e1_knn_brute" -> e1KnnSql,
-
-      "e2_knn_lsh" -> e2KnnSql,
-
-      // recall@5 of the LSH ranker against exhaustive ground truth — both
-      // rankers' SQL shared verbatim with their own oracle entries
-      "e11_ann_recall" ->
-        s"""WITH truth AS (SELECT query_id, neighbor_id FROM ($e1KnnSql)),
-           |appr AS (SELECT query_id, neighbor_id FROM ($e2KnnSql))
-           |SELECT t.query_id, count(*) AS k,
-           |  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           |  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) * 100
-           |    // count(*) AS BIGINT) AS recall_pct
-           |FROM truth t LEFT JOIN appr a
-           |  ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
-           |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin,
-
-      "e12_kmeans_exact" -> e12KmeansSql,
-
-      // power iteration replays: sign-safe |x| div d re-signed (Spark div
-      // truncates, SQL // floors — negatives never reach either), unit-
-      // divisor L∞ gauge, 3 unrolled matrix-vector rounds
-      "e14_pca_power" -> e14PcaSql,
-
-      // PQ training: e12's unrolled integer Lloyd with the subspace id as
-      // an extra key everywhere — assign(c0) → floor-avg update → assign(c1)
-      "e13_pq_train" ->
-        """WITH q AS (SELECT vec_id,
-          |    list_transform(embedding::DOUBLE[],
-          |      x -> CAST(floor(x * 1e6 + 0.5) AS BIGINT)) AS v FROM embeddings),
-          |subs AS (SELECT vec_id, CAST(s.sub AS INT) AS sub,
-          |    list_slice(v, s.sub * 16 + 1, s.sub * 16 + 16) AS sv
-          |  FROM q, (SELECT unnest(range(0, 4)) AS sub) s),
-          |c0 AS (SELECT sub, CAST(vec_id // 37 AS INT) AS cid, sv AS c
-          |       FROM subs WHERE vec_id % 37 = 0 AND vec_id < 148),
-          |d1 AS (SELECT subs.vec_id, subs.sub, c0.cid,
-          |    CAST(list_sum(list_transform(list_zip(subs.sv, c0.c),
-          |      p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS d
-          |  FROM subs JOIN c0 ON subs.sub = c0.sub),
-          |a1 AS (SELECT vec_id, sub, cid FROM (
-          |    SELECT vec_id, sub, cid,
-          |      row_number() OVER (PARTITION BY vec_id, sub ORDER BY d, cid) AS rn
-          |    FROM d1) WHERE rn = 1),
-          |m1 AS (SELECT sub, cid, dim,
-          |    CAST(floor(sum(val) * 1.0 / count(*)) AS BIGINT) AS cv FROM (
-          |      SELECT a1.sub, a1.cid, generate_subscripts(subs.sv, 1) AS dim,
-          |             unnest(subs.sv) AS val
-          |      FROM a1 JOIN subs ON a1.vec_id = subs.vec_id AND a1.sub = subs.sub)
-          |    GROUP BY 1, 2, 3),
-          |c1 AS (SELECT sub, cid, list(cv ORDER BY dim) AS c FROM m1 GROUP BY 1, 2),
-          |d2 AS (SELECT subs.vec_id, subs.sub, c1.cid,
-          |    CAST(list_sum(list_transform(list_zip(subs.sv, c1.c),
-          |      p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS d
-          |  FROM subs JOIN c1 ON subs.sub = c1.sub)
-          |SELECT vec_id, sub, cid, d FROM (
-          |  SELECT vec_id, sub, cid, d,
-          |    row_number() OVER (PARTITION BY vec_id, sub ORDER BY d, cid) AS rn
-          |  FROM d2) WHERE rn = 1 ORDER BY vec_id, sub""".stripMargin,
-
-      // the whole sketch replays: same md5-affine hash rows, same cells,
-      // same min-over-rows estimate; overcount ≥ 0 by construction
-      "t29_count_min" -> {
-        val params = (0 until 4).map { i =>
-          val (a, b) = PortableHash.perm(i); s"($i, $a, $b)"
-        }.mkString(", ")
-        s"""WITH tok AS (SELECT unnest($tokExpr) AS term FROM documents),
-           |hh AS (SELECT term, ${h("term")} AS hv FROM tok),
-           |p AS (SELECT * FROM (VALUES $params) v(i, a, b)),
-           |sk AS (SELECT p.i AS "row", ((hh.hv * p.a + p.b) % $P) % 8 AS cell,
-           |         count(*) AS ccnt
-           |       FROM hh, p GROUP BY 1, 2),
-           |c AS (SELECT term, count(*) AS cnt FROM tok GROUP BY 1),
-           |probe AS (SELECT term, cnt FROM c ORDER BY cnt DESC, term LIMIT 30),
-           |pc AS (SELECT probe.term, probe.cnt, p.i AS "row",
-           |         ((${h("probe.term")} * p.a + p.b) % $P) % 8 AS cell
-           |       FROM probe, p),
-           |est AS (SELECT pc.term, pc.cnt, min(sk.ccnt) AS est
-           |        FROM pc JOIN sk USING ("row", cell) GROUP BY 1, 2)
-           |SELECT term, cnt, est, est - cnt AS overcount
-           |FROM est ORDER BY cnt DESC, term""".stripMargin
-      },
-
-      // two unrolled HITS iterations: auth ← Σ in-hub, hub ← Σ out-auth,
-      // each L∞-normalized by integer floor division to 10⁶
-      "g9_hits" -> {
-        val iters = (1 to 2).map { k =>
-          s"""a${k}r AS (SELECT nodes.id, CAST(coalesce(s.a, 0) AS BIGINT) AS raw
-             |  FROM nodes LEFT JOIN (
-             |    SELECT e.dst AS id, sum(h${k - 1}.hub) AS a
-             |    FROM e JOIN h${k - 1} ON e.src = h${k - 1}.id GROUP BY 1) s
-             |  ON nodes.id = s.id),
-             |a${k}m AS (SELECT max(raw) AS mx FROM a${k}r),
-             |a$k AS (SELECT id, CAST(CASE WHEN mx > 0
-             |    THEN raw * 1000000 // mx ELSE 0 END AS BIGINT) AS auth
-             |  FROM a${k}r, a${k}m),
-             |h${k}r AS (SELECT nodes.id, CAST(coalesce(s.hh, 0) AS BIGINT) AS raw
-             |  FROM nodes LEFT JOIN (
-             |    SELECT e.src AS id, sum(a$k.auth) AS hh
-             |    FROM e JOIN a$k ON e.dst = a$k.id GROUP BY 1) s
-             |  ON nodes.id = s.id),
-             |h${k}m AS (SELECT max(raw) AS mx FROM h${k}r),
-             |h$k AS (SELECT id, CAST(CASE WHEN mx > 0
-             |    THEN raw * 1000000 // mx ELSE 0 END AS BIGINT) AS hub
-             |  FROM h${k}r, h${k}m)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-           |e AS (SELECT DISTINCT src, dst FROM (
-           |  SELECT doc_id AS src, (doc_id * 31 + 7) % nn.n AS dst FROM documents, nn
-           |  UNION ALL SELECT doc_id, (doc_id * 17 + 3) % nn.n FROM documents, nn)),
-           |nodes AS (SELECT DISTINCT id FROM (
-           |  SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-           |h0 AS (SELECT id, CAST(1000000 AS BIGINT) AS hub FROM nodes),
-           |$iters
-           |SELECT h2.id AS doc_id, h2.hub, a2.auth
-           |FROM h2 JOIN a2 USING (id) ORDER BY doc_id""".stripMargin
-      },
-
-      "x21_covariance" ->
-        """WITH b AS (SELECT l_returnflag,
-          |    CAST(l_quantity AS BIGINT) AS x,
-          |    CAST(floor(l_extendedprice / 100) AS BIGINT) AS y
-          |  FROM lineitem)
-          |SELECT l_returnflag, count(*) AS n,
-          |  CAST(count(*) * sum(x * y) - sum(x) * sum(y) AS BIGINT) AS covar_num,
-          |  CAST(count(*) * sum(x * x) - sum(x) * sum(x) AS BIGINT) AS varx_num,
-          |  CAST(count(*) * sum(y * y) - sum(y) * sum(y) AS BIGINT) AS vary_num
-          |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      // content-defined boundaries replay: same last-4-token context
-      // through the portable hash, same cumsum chunk ids, same md5 chunk
-      // identity — then an ordinary digest census
-      "d16_cdc_chunks" ->
-        s"""WITH t AS (SELECT doc_id, $tokExpr AS toks FROM documents),
-           |t2 AS (SELECT doc_id, toks FROM t WHERE len(toks) > 0),
-           |p AS (SELECT doc_id, toks, unnest(range(0, len(toks))) AS pos FROM t2),
-           |tk AS (SELECT doc_id, pos, toks[pos + 1] AS tok,
-           |    CASE WHEN pos >= 3 AND
-           |      ${h("array_to_string(list_slice(toks, pos - 2, pos + 1), ' ')")} % 16 = 0
-           |      THEN 1 ELSE 0 END AS b
-           |  FROM p),
-           |ck AS (SELECT doc_id, pos, tok,
-           |    coalesce(sum(b) OVER (PARTITION BY doc_id ORDER BY pos
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk
-           |  FROM tk),
-           |ch AS (SELECT doc_id, chunk, count(*) AS n_tokens,
-           |    md5(string_agg(tok, ' ' ORDER BY pos)) AS digest
-           |  FROM ck GROUP BY 1, 2),
-           |cs AS (SELECT digest, count(DISTINCT doc_id) AS nd FROM ch GROUP BY 1)
-           |SELECT doc_id, count(*) AS n_chunks,
-           |  CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_chunks,
-           |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-           |  CAST(sum(CASE WHEN nd > 1 THEN n_tokens ELSE 0 END) AS BIGINT) AS n_dup_tokens
-           |FROM ch JOIN cs USING (digest) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      // integer sparse dot product over shared terms; idf quantized
-      // per-term before any sum (the t20 discipline); ln = natural log
-      "t30_sparse_retrieval" ->
-        s"""WITH tok AS (SELECT doc_id, unnest($tokExpr) AS tok FROM documents),
-           |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok GROUP BY 1, 2),
-           |dfq AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-           |nn AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-           |w AS (SELECT tf.doc_id, tf.tok,
-           |    tf.tf * CAST(floor((ln((nn.n_docs + 1) * 1.0 / (dfq.df + 1)) + 1)
-           |      * 1e6 + 0.5) AS BIGINT) AS w
-           |  FROM tf JOIN dfq USING (tok), nn),
-           |qv AS (SELECT tok, w AS wq FROM w WHERE doc_id = 0),
-           |sc AS (SELECT w.doc_id, CAST(sum(w.w * qv.wq) AS BIGINT) AS score_micro2
-           |  FROM w JOIN qv USING (tok) WHERE w.doc_id <> 0 GROUP BY 1)
-           |SELECT doc_id, score_micro2,
-           |  CAST(row_number() OVER (ORDER BY score_micro2 DESC, doc_id) AS INT) AS rank
-           |FROM sc ORDER BY rank LIMIT 20""".stripMargin,
-
-      // per-bucket min/max stats decide survival; n_match proves pruned
-      // buckets contain zero qualifying rows
-      "x24_zonemap_prune" ->
-        """SELECT o_orderkey // 1024 AS bucket, count(*) AS n_rows,
-          |  CAST(sum(CASE WHEN o_orderdate >= TIMESTAMP '1997-01-01'
-          |      AND o_orderdate <= TIMESTAMP '1997-12-31' THEN 1 ELSE 0 END)
-          |    AS BIGINT) AS n_match,
-          |  CAST(max(o_orderdate) >= TIMESTAMP '1997-01-01'
-          |    AND min(o_orderdate) <= TIMESTAMP '1997-12-31' AS INT) AS survives
-          |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-      // the raw HLL estimator over the portable register table: Σ2^(−M_j)
-      // cleared by 2²⁷ (z_num), then one positive BIGINT floor division
-      // 709·m²·2²⁷ // (1000·z_num) — α_64 = 709/1000 kept rational
-      "x1_approx_distinct" ->
-        """WITH hh AS (SELECT l_returnflag AS grp,
-          |    CAST(('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1, 8))
-          |      AS BIGINT) AS h, l_partkey FROM lineitem),
-          |r AS (SELECT grp, h % 64 AS bucket, h // 64 AS sfx FROM hh),
-          |k AS (SELECT grp, bucket,
-          |    CASE WHEN sfx = 0 THEN 27 ELSE 27 - length(bin(sfx)) END AS rank FROM r),
-          |reg AS (SELECT grp, bucket, max(rank) AS register FROM k GROUP BY 1, 2),
-          |grid AS (SELECT g.grp, t.bucket FROM (SELECT DISTINCT grp FROM hh) g,
-          |    (SELECT unnest(range(0, 64)) AS bucket) t),
-          |filled AS (SELECT grid.grp,
-          |    CAST(coalesce(reg.register, 0) AS INT) AS register
-          |  FROM grid LEFT JOIN reg ON reg.grp = grid.grp AND reg.bucket = grid.bucket),
-          |z AS (SELECT grp,
-          |    CAST(sum(CAST(1 AS BIGINT) << (27 - register)) AS BIGINT) AS z_num,
-          |    CAST(sum(CASE WHEN register = 0 THEN 1 ELSE 0 END) AS BIGINT)
-          |      AS n_zero_registers
-          |  FROM filled GROUP BY 1),
-          |ex AS (SELECT grp, count(DISTINCT l_partkey) AS exact_parts FROM hh GROUP BY 1)
-          |SELECT z.grp AS l_returnflag,
-          |  CAST(389776872046592 // (1000 * z_num) AS BIGINT) AS hll_est,
-          |  n_zero_registers, CAST(exact_parts AS BIGINT) AS exact_parts
-          |FROM z JOIN ex ON ex.grp = z.grp ORDER BY l_returnflag""".stripMargin,
-
-      // the HLL state replays: same portable hash, same bucket/suffix
-      // split, same bin()-length rank — both engines strip leading zeros
-      "x23_hll_registers" ->
-        """WITH hh AS (SELECT CAST(('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 8))
-          |      AS BIGINT) AS h FROM lineitem),
-          |r AS (SELECT h % 64 AS bucket, h // 64 AS sfx FROM hh),
-          |k AS (SELECT bucket,
-          |    CASE WHEN sfx = 0 THEN 27 ELSE 27 - length(bin(sfx)) END AS rank FROM r),
-          |reg AS (SELECT bucket, max(rank) AS register FROM k GROUP BY 1)
-          |SELECT t.bucket, CAST(coalesce(reg.register, 0) AS INT) AS register
-          |FROM (SELECT unnest(range(0, 64)) AS bucket) t LEFT JOIN reg USING (bucket)
-          |ORDER BY bucket""".stripMargin,
-
-      // sequential greedy packing: bin = running-bytes-before // target,
-      // per directory in file order — pure integer, window cumsum replays
-      "x22_compaction_plan" ->
-        """WITH f AS (SELECT p_brand AS dir, p_partkey AS file,
-          |    CAST(p_size * 1000 + p_partkey % 977 AS BIGINT) AS bytes FROM part),
-          |b AS (SELECT dir, file, bytes,
-          |    coalesce(sum(bytes) OVER (PARTITION BY dir ORDER BY file
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-          |  FROM f)
-          |SELECT dir, CAST(cum_before // 64000 AS BIGINT) AS bin,
-          |  count(*) AS n_files, CAST(sum(bytes) AS BIGINT) AS total_bytes,
-          |  CAST(count(*) > 1 AS INT) AS needs_rewrite
-          |FROM b GROUP BY 1, 2 ORDER BY dir, bin""".stripMargin,
-
-      // gdalinfo -json twin: Spark writes the raster, runs fetchMetadata
-      // (-stats -mm -hist), and pulls the document apart with
-      // get_json_object; the oracle replays every figure — including the
-      // 256-bucket occupancy under GDAL's integer [min-0.5, max+0.5]
-      // envelope — in closed form from the generating formula
-      "s4_gdalinfo_meta" ->
-        """WITH a AS (SELECT CAST(p_partkey AS BIGINT) AS asset_id FROM part
-          |  WHERE p_partkey <= 6),
-          |xs AS (SELECT unnest(range(0, 32)) AS x),
-          |ys AS (SELECT unnest(range(0, 32)) AS y),
-          |px AS (SELECT asset_id, (3*asset_id + 5*x + 7*y) % 97 AS v
-          |  FROM a, xs, ys),
-          |valid AS (SELECT asset_id, v FROM px WHERE v <> 0),
-          |g AS (SELECT asset_id, MIN(v) AS mnv, MAX(v) AS mxv,
-          |  COUNT(*) AS valid_n, SUM(v) AS sum_v FROM valid GROUP BY 1),
-          |nz AS (SELECT v.asset_id, COUNT(DISTINCT LEAST(255, GREATEST(0,
-          |    CAST(FLOOR((v.v - (g.mnv - 0.5)) / (g.mxv - g.mnv + 1.0) * 256)
-          |      AS INTEGER)))) AS nz_buckets
-          |  FROM valid v JOIN g ON v.asset_id = g.asset_id GROUP BY 1)
-          |SELECT g.asset_id, 32 AS width, 32 AS height, 'UInt16' AS dtype,
-          |  CAST(g.mnv AS DOUBLE) AS mn, CAST(g.mxv AS DOUBLE) AS mx,
-          |  g.valid_n, CAST(g.sum_v AS BIGINT) AS sum_v,
-          |  CAST(g.mnv AS DOUBLE) - 0.5 AS hist_lo,
-          |  CAST(g.mxv AS DOUBLE) + 0.5 AS hist_hi,
-          |  256 AS hist_n, nz.nz_buckets
-          |FROM g JOIN nz ON g.asset_id = nz.asset_id
-          |ORDER BY g.asset_id""".stripMargin,
-
-      // decoded-pixel sums from the generating formula; Spark runs the
-      // REAL GeoTIFF encode (Writer: DEFLATE/NBITS/CCITT-G4/raw) then the
-      // real IFD-parse + tile decode — any dropped/shifted bit breaks wsum
-      "s5_tiff_roundtrip" ->
-        """WITH a AS (SELECT CAST(p_partkey AS BIGINT) AS asset_id FROM part
-          |  WHERE p_partkey <= 12),
-          |xs AS (SELECT unnest(range(0, 24)) AS x),
-          |ys AS (SELECT unnest(range(0, 24)) AS y),
-          |px AS (SELECT asset_id, x, y FROM a, xs, ys),
-          |legs AS (
-          |  SELECT asset_id, 'ccitt1' AS leg, (x + y + asset_id) % 2 AS v, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'f32', asset_id * 100 + x - y, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'i16', ((x * y + asset_id) % 200) - 100, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'nbits4', (3*x + 5*y + 7*asset_id) % 16, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'u16_deflate', (7*asset_id + 3*x + 5*y) % 60000, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'u8_raw', (asset_id + x*y) % 256, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'u16_lzw', (11*asset_id + 3*x + 7*y) % 60000, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'u16_lzw_pred2', (5*asset_id + 2*x + 3*y) % 60000, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'u8_packbits', (asset_id + 2*x + y) % 256, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'u16_big', (9*asset_id + x + 13*y) % 60000, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'u8_stripped', (3*asset_id + x + 2*y) % 256, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'u16_chunky2', (bt.b*1000 + 5*asset_id + 2*x + 3*y) % 60000, x, y
-          |    FROM px, (VALUES (1), (2)) AS bt(b)
-          |  UNION ALL SELECT asset_id, 'u16_sparse',
-          |    CASE WHEN x < 16 AND y < 16 THEN (13*asset_id + 4*x + 9*y) % 60000 ELSE 42 END, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'u16_zstd', (17*asset_id + 6*x + 11*y) % 60000, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'u16_cog', (19*asset_id + 8*x + 5*y) % 60000, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'u8_jpeg',
-          |    (31*asset_id + 5*(x // 8) + 11*(y // 8)) % 256, x, y FROM px
-          |  UNION ALL SELECT asset_id, 'rgb_jpeg',
-          |    (29*asset_id + 5*(x // 8) + 7*(y // 8)) % 256, x, y
-          |    FROM px, (VALUES (1), (2), (3)) AS bt(b))
-          |SELECT asset_id, leg, CAST(sum(v) AS BIGINT) AS sum_v,
-          |  CAST(sum(v * (x + 24*y)) AS BIGINT) AS wsum_v
-          |FROM legs GROUP BY 1, 2 ORDER BY asset_id, leg""".stripMargin,
-
-      // distributed overview pyramid: base 32×32 per asset, nodata 0 where
-      // (x·y)%7=0; level 1 = nearest decimation (base at 2x,2y) and the
-      // nodata-excluded floor-mean — both replayed in closed form, weights
-      // use each level's own width (32 base, 16 overview)
-      "k5_pyramid_sink" ->
-        """WITH ids AS (SELECT CAST(p_partkey AS BIGINT) AS a FROM part
-          |             WHERE p_partkey <= 6),
-          |px AS (SELECT a, x, y,
-          |         CASE WHEN (x*y) % 7 = 0 THEN 0
-          |              ELSE (7*a + 5*x + 3*y) % 997 + 1 END AS v
-          |       FROM ids CROSS JOIN generate_series(0, 31) gx(x)
-          |                CROSS JOIN generate_series(0, 31) gy(y)),
-          |ovn AS (SELECT a, x // 2 AS ox, y // 2 AS oy, v FROM px
-          |        WHERE x % 2 = 0 AND y % 2 = 0),
-          |ova AS (SELECT a, x // 2 AS ox, y // 2 AS oy,
-          |          CASE WHEN COUNT(*) FILTER (WHERE v <> 0) = 0 THEN 0
-          |               ELSE CAST(FLOOR(SUM(v) FILTER (WHERE v <> 0)
-          |                    / COUNT(*) FILTER (WHERE v <> 0)) AS BIGINT) END AS v
-          |        FROM px GROUP BY 1, 2, 3),
-          |legs AS (
-          |  SELECT a, m, 0 AS lvl, v, x + 32*y AS wt
-          |  FROM px CROSS JOIN (VALUES ('nearest'), ('average')) mm(m)
-          |  UNION ALL SELECT a, 'nearest', 1, v, ox + 16*oy FROM ovn
-          |  UNION ALL SELECT a, 'average', 1, v, ox + 16*oy FROM ova)
-          |SELECT a AS asset_id, m AS mode, lvl AS level,
-          |  CAST(SUM(v) AS BIGINT) AS sum_v, CAST(SUM(v*wt) AS BIGINT) AS wsum_v
-          |FROM legs GROUP BY 1, 2, 3 ORDER BY asset_id, mode, level""".stripMargin,
-
-      // the gdaladdo twin: base formula + nodata-excluded 2x2 max replayed
-      // in closed form over the 3 published 544-px tiles and their .ovr
-      // level (272 px, one block)
-      "k6_ovr_sidecar" ->
-        """WITH ids(i, tile_id) AS (VALUES (0, '90N_180W'), (1, '90N_090W'),
-          |                                (2, '90N_000E')),
-          |base AS (SELECT i, tile_id, x, y,
-          |    CASE WHEN (x*y) % 7 = 0 THEN 0
-          |         ELSE 1 + (7*i + 5*x + 3*y) % 997 END AS v
-          |  FROM ids CROSS JOIN generate_series(0, 543) gx(x)
-          |           CROSS JOIN generate_series(0, 543) gy(y)),
-          |l0 AS (SELECT tile_id, 0 AS level, SUM(v) AS s,
-          |         SUM(v * (x + 544*y)) AS ws FROM base GROUP BY 1),
-          |q AS (SELECT tile_id, x // 2 AS qx, y // 2 AS qy,
-          |        COALESCE(MAX(CASE WHEN v = 0 THEN NULL ELSE v END), 0) AS m
-          |      FROM base GROUP BY 1, 2, 3),
-          |l1 AS (SELECT tile_id, 1 AS level, SUM(m) AS s,
-          |         SUM(m * (qx + 272*qy)) AS ws FROM q GROUP BY 1)
-          |SELECT tile_id, level, CAST(s AS BIGINT) AS sum_v,
-          |  CAST(ws AS BIGINT) AS wsum_v
-          |FROM (SELECT * FROM l0 UNION ALL SELECT * FROM l1) u
-          |ORDER BY tile_id, level""".stripMargin,
-
-      // resized-raster sums from the generating formula; Spark decodes the
-      // real PNGs and floor-samples — src = (dst · srcDim) // out
-      "m5_image_resize" ->
-        """WITH d AS (SELECT doc_id, CAST(doc_id % 5 + 4 AS INT) AS w,
-          |             CAST(doc_id % 3 + 4 AS INT) AS h FROM documents),
-          |xs AS (SELECT doc_id, w, h, unnest(range(0, 8)) AS x FROM d),
-          |px AS (SELECT doc_id, w, h, x, unnest(range(0, 8)) AS y FROM xs),
-          |v AS (SELECT doc_id, x, y,
-          |    (7 * doc_id + 3 * ((x * w) // 8) + 5 * ((y * h) // 8)) % 256 AS v
-          |  FROM px)
-          |SELECT doc_id AS asset_id, CAST(8 AS INT) AS out_w, CAST(8 AS INT) AS out_h,
-          |  CAST(sum(v) AS BIGINT) AS sum_v,
-          |  CAST(sum(v * (x + 8 * y)) AS BIGINT) AS wsum_v
-          |FROM v GROUP BY doc_id ORDER BY asset_id""".stripMargin,
-
-      "x2_salted_rasterize" ->
-        """SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, count(*) AS value
-          |FROM lineitem GROUP BY 1, 2 ORDER BY px, py""".stripMargin,
-
-      "x3_rollup" ->
-        """SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-          |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-          |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-
-      "x6_percentile" ->
-        """SELECT event_type,
-          |  round(quantile_cont(value, 0.25) + 5e-7, 4) AS p25,
-          |  round(quantile_cont(value, 0.5) + 5e-7, 4) AS p50,
-          |  round(quantile_cont(value, 0.75) + 5e-7, 4) AS p75,
-          |  count(*) AS n
-          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-      // fixed-grid histogram quantile: the estimate is a pure IEEE function
-      // of exact bucket counts and per-group min/max — every arithmetic
-      // step below mirrors the Spark expression order exactly
-      "x20_approx_quantile" -> {
-        def est(qn: Int) =
-          s"""max(CASE WHEN cum >= ceil(n * $qn / 4) AND cum - cnt < ceil(n * $qn / 4)
-             |  THEN lo + (bb + CAST(ceil(n * $qn / 4) - (cum - cnt) AS DOUBLE) / cnt)
-             |    * ((hi - lo) / 128) END)""".stripMargin
-        s"""WITH b AS (SELECT event_type, min(value) AS lo, max(value) AS hi,
-           |             count(*) AS n FROM events GROUP BY 1),
-           |bin AS (SELECT e.event_type,
-           |    CASE WHEN b.hi = b.lo THEN 0
-           |         ELSE CAST(least(floor((e.value - b.lo) / (b.hi - b.lo) * 128), 127) AS INT)
-           |    END AS bb
-           |  FROM events e JOIN b USING (event_type)),
-           |h AS (SELECT event_type, bb, count(*) AS cnt FROM bin GROUP BY 1, 2),
-           |c AS (SELECT event_type, bb, cnt,
-           |    sum(cnt) OVER (PARTITION BY event_type ORDER BY bb) AS cum FROM h),
-           |j AS (SELECT c.*, b.lo, b.hi, b.n FROM c JOIN b USING (event_type))
-           |SELECT event_type,
-           |  CAST(floor(${est(1)} * 1000 + 0.5) AS BIGINT) AS q25_milli,
-           |  CAST(floor(${est(2)} * 1000 + 0.5) AS BIGINT) AS q50_milli,
-           |  CAST(floor(${est(3)} * 1000 + 0.5) AS BIGINT) AS q75_milli,
-           |  n
-           |FROM j GROUP BY event_type, n ORDER BY event_type""".stripMargin
-      },
-
-      "x7_interval_join" ->
-        """SELECT a.event_id, count(*) AS n_clicks
-          |FROM events a JOIN events b
-          |  ON a.user_id = b.user_id AND b.event_type = 'click'
-          | AND b.ts >= a.ts AND b.ts < a.ts + INTERVAL 1 HOUR
-          |WHERE a.event_type = 'view'
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "x8_pivot" ->
-        """SELECT user_id % 10 AS cohort,
-          |  count(*) FILTER (event_type = 'click') AS click,
-          |  count(*) FILTER (event_type = 'error') AS error,
-          |  count(*) FILTER (event_type = 'purchase') AS purchase,
-          |  count(*) FILTER (event_type = 'signup') AS signup,
-          |  count(*) FILTER (event_type = 'view') AS view
-          |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "x9_gap_fill" ->
-        """WITH ev AS (
-          |  SELECT user_id, date_trunc('hour', ts) AS h FROM events WHERE user_id < 50),
-          |c AS (SELECT user_id, h, count(*) AS n FROM ev GROUP BY 1, 2),
-          |s AS (SELECT user_id, min(h) AS h0, max(h) AS h1 FROM ev GROUP BY 1),
-          |spine AS (SELECT user_id, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM s)
-          |SELECT spine.user_id, spine.h, coalesce(c.n, 0) AS n
-          |FROM spine LEFT JOIN c USING (user_id, h)
-          |ORDER BY 1, 2""".stripMargin,
-
-      "x10_funnel" ->
-        """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-          |            WHERE event_type = 'view' GROUP BY 1),
-          |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-          |       JOIN s1 ON e.user_id = s1.user_id
-          |        AND e.ts > s1.t1 AND e.ts <= s1.t1 + INTERVAL 86400 SECOND
-          |       WHERE e.event_type = 'click' GROUP BY 1),
-          |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-          |       JOIN s2 ON e.user_id = s2.user_id
-          |        AND e.ts > s2.t2 AND e.ts <= s2.t2 + INTERVAL 86400 SECOND
-          |       WHERE e.event_type = 'purchase' GROUP BY 1)
-          |SELECT stage_idx, stage, n_entities FROM (
-          |  SELECT CAST(1 AS INT) AS stage_idx, 'view' AS stage,
-          |         CAST(count(*) AS BIGINT) AS n_entities FROM s1
-          |  UNION ALL SELECT CAST(2 AS INT), 'click', CAST(count(*) AS BIGINT) FROM s2
-          |  UNION ALL SELECT CAST(3 AS INT), 'purchase', CAST(count(*) AS BIGINT) FROM s3)
-          |ORDER BY stage_idx""".stripMargin,
-
-      "x11_retention" ->
-        """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
-          |c AS (SELECT user_id, min(day) AS cohort FROM ev GROUP BY 1),
-          |act AS (SELECT DISTINCT ev.user_id, c.cohort,
-          |               datediff('day', c.cohort, ev.day) AS day_offset
-          |        FROM ev JOIN c ON ev.user_id = c.user_id)
-          |SELECT CAST(cohort AS VARCHAR) AS cohort,
-          |       CAST(day_offset AS INT) AS day_offset,
-          |       CAST(count(*) AS BIGINT) AS n_users
-          |FROM act GROUP BY cohort, day_offset
-          |ORDER BY cohort, day_offset""".stripMargin,
-
-      "x12_cube" ->
-        """SELECT coalesce(l_returnflag, 'ALL') AS rf,
-          |       coalesce(l_linestatus, 'ALL') AS ls,
-          |       CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-          |       CAST(count(*) AS BIGINT) AS n,
-          |       CAST(sum(l_quantity) AS BIGINT) AS sum_qty
-          |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-          |ORDER BY gid, rf, ls""".stripMargin,
-
-      "w4_rank_family" ->
-        """WITH ev AS (SELECT event_id, event_type, CAST(floor(value) AS BIGINT) AS bucket
-          |           FROM events WHERE user_id < 10)
-          |SELECT event_id, event_type, bucket,
-          |  CAST(rank() OVER wt AS INT) AS rnk,
-          |  CAST(dense_rank() OVER wt AS INT) AS drnk,
-          |  round(percent_rank() OVER wt, 6) AS pct_rank,
-          |  round(cume_dist() OVER wt, 6) AS cume,
-          |  CAST(ntile(4) OVER wu AS INT) AS quartile,
-          |  CAST(row_number() OVER wu AS INT) AS rn
-          |FROM ev
-          |WINDOW wt AS (PARTITION BY event_type ORDER BY bucket),
-          |       wu AS (PARTITION BY event_type ORDER BY bucket, event_id)
-          |ORDER BY event_id""".stripMargin,
-
-      "o5_set_except" ->
-        """SELECT p_partkey FROM part
-          |EXCEPT SELECT l_partkey FROM lineitem WHERE l_quantity > 45
-          |ORDER BY p_partkey""".stripMargin,
-
-      "t21_json_extract" ->
-        """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-          |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-          |  round(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)) + 5e-7, 4) AS avg_k
-          |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "x13_upsert" ->
-        """WITH t AS (SELECT doc_id, source, n_chars FROM documents),
-          |s AS (
-          |  SELECT doc_id, source, n_chars + 7 AS n_chars FROM documents WHERE doc_id % 10 = 0
-          |  UNION ALL SELECT doc_id, source, n_chars FROM documents WHERE doc_id % 10 = 1
-          |  UNION ALL SELECT doc_id + 1000000, source, n_chars FROM documents WHERE doc_id % 17 = 0)
-          |SELECT coalesce(s.doc_id, t.doc_id) AS doc_id,
-          |  CASE WHEN s.doc_id IS NOT NULL THEN s.source ELSE t.source END AS source,
-          |  CASE WHEN s.doc_id IS NOT NULL THEN s.n_chars ELSE t.n_chars END AS n_chars,
-          |  CASE WHEN t.doc_id IS NULL THEN 'inserted'
-          |       WHEN s.doc_id IS NULL THEN 'kept'
-          |       WHEN s.source IS DISTINCT FROM t.source
-          |         OR s.n_chars IS DISTINCT FROM t.n_chars THEN 'updated'
-          |       ELSE 'unchanged' END AS action
-          |FROM t FULL OUTER JOIN s ON t.doc_id = s.doc_id
-          |ORDER BY doc_id""".stripMargin,
-
-      "x14_snapshot_diff" ->
-        """WITH o AS (SELECT doc_id, n_chars FROM documents),
-          |n AS (
-          |  SELECT doc_id, CASE WHEN doc_id % 10 = 0 THEN n_chars + 5 ELSE n_chars END AS n_chars
-          |  FROM documents WHERE doc_id % 13 != 0
-          |  UNION ALL SELECT doc_id + 2000000, n_chars FROM documents WHERE doc_id % 29 = 0)
-          |SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-          |  o.n_chars AS old_n_chars, n.n_chars AS new_n_chars,
-          |  CASE WHEN o.doc_id IS NULL THEN 'added'
-          |       WHEN n.doc_id IS NULL THEN 'removed'
-          |       ELSE 'changed' END AS action
-          |FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-          |WHERE o.doc_id IS NULL OR n.doc_id IS NULL
-          |   OR o.n_chars IS DISTINCT FROM n.n_chars
-          |ORDER BY doc_id""".stripMargin,
-
-      "x15_scd2" -> x15Scd2Sql,
-
-      "x16_grouping_sets" ->
-        """SELECT coalesce(l_returnflag, 'ALL') AS rf,
-          |  coalesce(l_linestatus, 'ALL') AS ls,
-          |  count(*) AS n, CAST(sum(l_quantity) AS BIGINT) AS sum_qty
-          |FROM lineitem
-          |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-          |ORDER BY rf, ls""".stripMargin,
-
-      "x17_transitions" ->
-        """WITH seq AS (
-          |  SELECT user_id, event_type,
-          |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-          |  FROM events)
-          |SELECT event_type, next_type, count(*) AS n
-          |FROM seq WHERE next_type IS NOT NULL
-          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-      // two-step min (earliest ts, then lowest event_id at that ts) ==
-      // Spark's lexicographic struct-min, since (ts, event_id) is unique
-      "x18_first_touch" ->
-        """WITH p AS (
-          |  SELECT event_id AS pid, user_id, ts AS pts FROM events
-          |  WHERE event_type = 'purchase'),
-          |w AS (
-          |  SELECT p.pid, min(e.ts) AS fts
-          |  FROM p JOIN events e ON e.user_id = p.user_id
-          |    AND e.ts >= p.pts - INTERVAL 7 DAY AND e.ts < p.pts
-          |  GROUP BY p.pid),
-          |f AS (
-          |  SELECT p.pid, p.user_id, w.fts, min(e.event_id) AS feid
-          |  FROM p JOIN w ON w.pid = p.pid
-          |    JOIN events e ON e.user_id = p.user_id AND e.ts = w.fts
-          |  GROUP BY 1, 2, 3)
-          |SELECT f.pid AS purchase_id, f.user_id,
-          |  e.event_type AS first_touch, f.fts AS touch_ts
-          |FROM f JOIN events e ON e.event_id = f.feid
-          |ORDER BY purchase_id""".stripMargin,
-
-      "q3_topk_revenue" ->
-        """SELECT l_orderkey,
-          |  round(sum(l_extendedprice * (1 - l_discount)) + 5e-7, 2) AS revenue,
-          |  o_orderdate, o_orderpriority
-          |FROM customer JOIN orders ON c_custkey = o_custkey
-          |  JOIN lineitem ON l_orderkey = o_orderkey
-          |WHERE c_mktsegment = 'BUILDING' AND o_orderdate < DATE '1995-03-15'
-          |  AND l_shipdate > DATE '1995-03-15'
-          |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-          |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-      "q4_order_priority" ->
-        """SELECT o_orderpriority, count(*) AS order_count
-          |FROM orders o
-          |WHERE o.o_orderdate >= DATE '1995-01-01'
-          |  AND o.o_orderdate < DATE '1995-04-01'
-          |  AND EXISTS (SELECT 1 FROM lineitem l
-          |              WHERE l.l_orderkey = o.o_orderkey
-          |                AND l.l_shipdate >= o.o_orderdate + INTERVAL 60 DAY)
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "q13_custdist" ->
-        """SELECT c_count, count(*) AS custdist FROM (
-          |  SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-          |  FROM customer c LEFT JOIN orders o
-          |    ON o.o_custkey = c.c_custkey AND o.o_orderpriority <> '1-URGENT'
-          |  GROUP BY c.c_custkey) t
-          |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-      "q18_big_orders" ->
-        """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice,
-          |  CAST(t.sum_qty AS BIGINT) AS sum_qty
-          |FROM (SELECT l_orderkey, sum(l_quantity) AS sum_qty FROM lineitem
-          |      GROUP BY 1 HAVING sum(l_quantity) > 150) t
-          |JOIN orders o ON o.o_orderkey = t.l_orderkey
-          |JOIN customer c ON c.c_custkey = o.o_custkey
-          |ORDER BY o.o_totalprice DESC, o.o_orderkey LIMIT 10""".stripMargin,
-
-      "q6_forecast_revenue" ->
-        """SELECT round(sum(l_extendedprice * l_discount) + 5e-7, 2) AS revenue,
-          |  count(*) AS n_lines
-          |FROM lineitem
-          |WHERE l_shipdate >= DATE '1995-01-01' AND l_shipdate < DATE '1996-01-01'
-          |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-
-      "q19_disjunctive" ->
-        """SELECT round(sum(l_extendedprice * (1 - l_discount)) + 5e-7, 2) AS revenue,
-          |  count(*) AS n_lines
-          |FROM lineitem JOIN part ON p_partkey = l_partkey
-          |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
-          |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
-          |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-
-      // per-row cent quantization makes both sums exact integers — the
-      // ratio can't drift with accumulation order
-      "q14_promo_share" ->
-        """WITH j AS (
-          |  SELECT p_type,
-          |    CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT) AS cents
-          |  FROM lineitem JOIN part ON p_partkey = l_partkey
-          |  WHERE l_shipdate >= DATE '1995-09-01' AND l_shipdate < DATE '1995-10-01')
-          |SELECT round(100.0 * sum(CASE WHEN p_type = 'PROMO' THEN cents ELSE 0 END)
-          |         / sum(cents) + 5e-7, 4) AS promo_pct,
-          |  CAST(sum(cents) AS BIGINT) AS total_cents, count(*) AS n_lines
-          |FROM j""".stripMargin,
-
-      "x4_correlated_sub" ->
-        """SELECT p_partkey, p_brand, round(p_retailprice, 2) AS price FROM part p
-          |WHERE p_retailprice > (SELECT avg(p_retailprice) FROM part b WHERE b.p_brand = p.p_brand)
-          |ORDER BY p_partkey""".stripMargin,
-
-      "q7_nation_volume" ->
-        """SELECT supp_nation, cust_nation, l_year,
-          |  CAST(sum(c) AS BIGINT) AS rev_cents, count(*) AS n_lines
-          |FROM (
-          |  SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
-          |    year(l_shipdate) AS l_year,
-          |    CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT) AS c
-          |  FROM lineitem
-          |  JOIN orders ON o_orderkey = l_orderkey
-          |  JOIN customer ON c_custkey = o_custkey
-          |  JOIN supplier ON s_suppkey = l_suppkey
-          |  JOIN nation ns ON ns.n_nationkey = s_nationkey
-          |  JOIN nation nc ON nc.n_nationkey = c_nationkey
-          |  WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1998-01-01'
-          |    AND ((ns.n_name = 'NATION_1' AND nc.n_name = 'NATION_2')
-          |      OR (ns.n_name = 'NATION_2' AND nc.n_name = 'NATION_1')))
-          |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-      "q8_market_share" ->
-        """WITH v AS (
-          |  SELECT year(o_orderdate) AS o_year, ns.n_name AS supp_nation,
-          |    CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT) AS c
-          |  FROM lineitem
-          |  JOIN part ON p_partkey = l_partkey
-          |  JOIN orders ON o_orderkey = l_orderkey
-          |  JOIN customer ON c_custkey = o_custkey
-          |  JOIN supplier ON s_suppkey = l_suppkey
-          |  JOIN nation ns ON ns.n_nationkey = s_nationkey
-          |  WHERE p_type = 'STANDARD'
-          |    AND o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1998-01-01'
-          |    AND c_nationkey IN (SELECT n_nationkey FROM nation JOIN region
-          |      ON n_regionkey = r_regionkey WHERE r_name = 'ASIA'))
-          |SELECT o_year,
-          |  round(CAST(sum(CASE WHEN supp_nation = 'NATION_3' THEN c ELSE 0 END) AS DOUBLE)
-          |    / CAST(sum(c) AS DOUBLE) + 5e-7, 4) AS mkt_share,
-          |  CAST(sum(c) AS BIGINT) AS total_cents
-          |FROM v GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-      "q10_returned_items" ->
-        """SELECT c_custkey, c_name, c_acctbal, n_name,
-          |  CAST(sum(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)) AS BIGINT)
-          |    AS rev_cents
-          |FROM customer
-          |JOIN orders ON o_custkey = c_custkey
-          |JOIN lineitem ON l_orderkey = o_orderkey
-          |JOIN nation ON n_nationkey = c_nationkey
-          |WHERE o_orderdate >= DATE '1996-10-01' AND o_orderdate < DATE '1997-01-01'
-          |  AND l_returnflag = 'R'
-          |GROUP BY 1, 2, 3, 4
-          |ORDER BY rev_cents DESC, c_custkey LIMIT 20""".stripMargin,
-
-      "q15_top_supplier" ->
-        """WITH rev AS (
-          |  SELECT l_suppkey,
-          |    CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT))
-          |      AS BIGINT) AS total_cents
-          |  FROM lineitem
-          |  WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1996-04-01'
-          |  GROUP BY 1)
-          |SELECT s_suppkey, s_name, total_cents
-          |FROM rev JOIN supplier ON s_suppkey = l_suppkey
-          |WHERE total_cents = (SELECT max(total_cents) FROM rev)
-          |ORDER BY s_suppkey""".stripMargin,
-
-      "q17_small_qty" ->
-        """WITH lp AS (
-          |  SELECT l_partkey AS p_partkey, l_quantity,
-          |    CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS c
-          |  FROM lineitem JOIN part ON p_partkey = l_partkey
-          |  WHERE p_brand = 'Brand#23' AND p_type = 'SMALL'),
-          |aq AS (SELECT p_partkey, avg(l_quantity) AS avgq FROM lp GROUP BY 1),
-          |f AS (SELECT c FROM lp JOIN aq USING (p_partkey)
-          |      WHERE l_quantity < 0.2 * avgq)
-          |SELECT round(CAST(coalesce(sum(c), 0) AS DOUBLE) / 100.0 / 7.0 + 5e-7, 2)
-          |    AS avg_yearly,
-          |  CAST(coalesce(sum(c), 0) AS BIGINT) AS sum_cents,
-          |  count(*) AS n_lines
-          |FROM f""".stripMargin,
-
-      "q21_waiting_supplier" ->
-        """WITH late AS (
-          |  SELECT DISTINCT l_orderkey, l_suppkey
-          |  FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-          |  WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY)
-          |SELECT s_name, count(*) AS numwait
-          |FROM late l1 JOIN supplier ON s_suppkey = l1.l_suppkey
-          |WHERE EXISTS (SELECT 1 FROM lineitem l2
-          |    WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-          |  AND NOT EXISTS (SELECT 1 FROM late l3
-          |    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey)
-          |GROUP BY s_name
-          |ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
-
-      "q22_idle_customers" ->
-        """SELECT c_nationkey, count(*) AS numcust,
-          |  CAST(sum(floor(c_acctbal * 100 + 0.5)) AS BIGINT) AS bal_cents
-          |FROM customer c
-          |WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0)
-          |  AND NOT EXISTS (SELECT 1 FROM orders o
-          |    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
-          |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-
-      "q2_min_cost_supp" ->
-        """WITH es AS (SELECT s_suppkey, s_name, s_acctbal, n_name FROM supplier
-          |    JOIN nation ON n_nationkey = s_nationkey
-          |    JOIN region ON r_regionkey = n_regionkey WHERE r_name = 'EUROPE'),
-          |pts AS (SELECT p_partkey, p_brand FROM part
-          |        WHERE p_type = 'STANDARD' AND p_size < 10),
-          |offers AS (SELECT l_partkey, l_suppkey,
-          |    CAST(min(floor(l_extendedprice / l_quantity * 100 + 0.5)) AS BIGINT)
-          |      AS unit_cents
-          |  FROM lineitem
-          |  WHERE l_partkey IN (SELECT p_partkey FROM pts)
-          |    AND l_suppkey IN (SELECT s_suppkey FROM es)
-          |  GROUP BY 1, 2),
-          |minc AS (SELECT l_partkey, min(unit_cents) AS mc FROM offers GROUP BY 1)
-          |SELECT s_acctbal, s_name, n_name, s_suppkey, p_partkey, p_brand, unit_cents
-          |FROM offers JOIN minc USING (l_partkey)
-          |JOIN es ON s_suppkey = l_suppkey
-          |JOIN pts ON p_partkey = l_partkey
-          |WHERE unit_cents = mc
-          |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 20""".stripMargin,
-
-      "q9_product_profit" ->
-        """SELECT n_name AS nation, year(l_shipdate) AS o_year,
-          |  CAST(sum(floor((l_extendedprice * (1 - l_discount)
-          |    - p_retailprice * 0.6 * l_quantity) * 100 + 0.5)) AS BIGINT)
-          |    AS profit_cents,
-          |  count(*) AS n_lines
-          |FROM lineitem
-          |JOIN part ON p_partkey = l_partkey
-          |JOIN supplier ON s_suppkey = l_suppkey
-          |JOIN nation ON n_nationkey = s_nationkey
-          |WHERE p_name LIKE 'red%'
-          |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-
-      "q11_important_stock" ->
-        """WITH vals AS (
-          |  SELECT l_partkey AS p_partkey,
-          |    CAST(sum(floor(l_extendedprice * 100 + 0.5)) AS BIGINT) AS val_cents
-          |  FROM lineitem
-          |  WHERE l_suppkey IN (SELECT s_suppkey FROM supplier JOIN nation
-          |      ON n_nationkey = s_nationkey WHERE n_name = 'NATION_7')
-          |  GROUP BY 1)
-          |SELECT p_partkey, val_cents FROM vals
-          |WHERE val_cents * 1000 > (SELECT sum(val_cents) FROM vals)
-          |ORDER BY val_cents DESC, p_partkey""".stripMargin,
-
-      "q12_ship_priority" ->
-        """SELECT CASE WHEN date_diff('day', o_orderdate, l_shipdate) <= 30
-          |         THEN '1-fast'
-          |       WHEN date_diff('day', o_orderdate, l_shipdate) <= 90
-          |         THEN '2-normal'
-          |       ELSE '3-slow' END AS ship_class,
-          |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-          |    THEN 1 ELSE 0 END) AS BIGINT) AS high_count,
-          |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-          |    THEN 0 ELSE 1 END) AS BIGINT) AS low_count
-          |FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "q16_supplier_cnt" ->
-        """SELECT p_brand, p_type, p_size,
-          |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-          |FROM lineitem JOIN part ON p_partkey = l_partkey
-          |WHERE p_brand <> 'Brand#1' AND p_type <> 'PROMO'
-          |  AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
-          |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-          |GROUP BY 1, 2, 3
-          |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-
-      "q20_workhorse_supp" ->
-        """WITH shipped AS (
-          |  SELECT l_partkey, l_suppkey, CAST(sum(l_quantity) AS BIGINT) AS qty
-          |  FROM lineitem
-          |  WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1997-01-01'
-          |    AND l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'blue%')
-          |  GROUP BY 1, 2),
-          |tot AS (SELECT l_partkey, sum(qty) AS t FROM shipped GROUP BY 1),
-          |wh AS (SELECT DISTINCT l_suppkey FROM shipped JOIN tot USING (l_partkey)
-          |       WHERE qty * 2 > t)
-          |SELECT s_suppkey, s_name, n_name
-          |FROM supplier JOIN nation ON n_nationkey = s_nationkey
-          |WHERE s_suppkey IN (SELECT l_suppkey FROM wh)
-          |ORDER BY s_suppkey""".stripMargin,
-
-      "x5_asof_join" ->
-        """WITH o AS (SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey
-          |           FROM orders GROUP BY o_custkey, o_orderdate)
-          |SELECT event_id, o.o_orderkey, o.o_orderdate FROM events e
-          |ASOF LEFT JOIN o ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
-          |ORDER BY event_id""".stripMargin,
-
-      "e3_embedding_dup" ->
-        """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id < 200),
-          |s AS (SELECT a.vec_id AS id1, b.vec_id AS id2,
-          |  list_dot_product(a.v, b.v) / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS rawcos
-          |  FROM e a JOIN e b ON a.vec_id < b.vec_id)
-          |SELECT id1, id2, round(rawcos, 4) AS cosine FROM s WHERE rawcos >= 0.3
-          |ORDER BY id1, id2""".stripMargin,
-
-      "e6_semantic_dedup" -> {
-        // Mirrors Q.e6_semantic_dedup exactly (VERDICT r16 #1): the bit
-        // count comes from the SAME integer ladder (adaptiveBits), computed
-        // here in SQL from count(*), so the oracle stays green at every SF
-        // while the measured curve is linear; the over-cap bucket drop
-        // (maxBucketSize) is replayed as a HAVING filter on BOTH join
-        // sides — dropped vectors surface as kept representatives, same as
-        // the Spark side's left-anti.
-        def planeLit(p: Int): String =
-          (0 until 64).map(dd => Similarity.planeComponent(p, dd).toString).mkString("[", ", ", "]")
-        val ladder = (Q.E6MinBits until Q.E6MaxBits)
-          .map(b => s"WHEN cnt <= ${Q.E6TargetBucket.toLong << b} THEN $b").mkString(" ")
-        val bucketOf = (v: String) => (0 until Q.E6MaxBits).map { p =>
-          s"CASE WHEN $p < nb.bits AND list_dot_product($v, ${planeLit(p)}) >= 0 THEN CAST(${1L << p} AS BIGINT) ELSE 0 END"
-        }.mkString(" + ")
-        s"""WITH n AS (SELECT count(*) AS cnt FROM embeddings),
-           |nb AS (SELECT CASE $ladder ELSE ${Q.E6MaxBits} END AS bits FROM n),
-           |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |be AS (SELECT vec_id, v, ${bucketOf("v")} AS bucket FROM e, nb),
-           |ok AS (SELECT bucket FROM be GROUP BY bucket HAVING count(*) <= ${Q.E6BucketCap}),
-           |bp AS (SELECT be.* FROM be JOIN ok USING (bucket)),
-           |d AS (SELECT b.vec_id AS vec_id, min(a.vec_id) AS dup_of
-           |  FROM bp a JOIN bp b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-           |  WHERE list_dot_product(a.v, b.v) /
-           |    (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.3
-           |  GROUP BY b.vec_id)
-           |SELECT be.vec_id, be.bucket, d.dup_of
-           |FROM be LEFT JOIN d USING (vec_id) ORDER BY vec_id""".stripMargin
-      },
-
-      "e4_embedding_quantize" ->
-        """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          |m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS scale FROM e),
-          |q AS (SELECT vec_id, scale,
-          |  list_transform(v, x -> CASE WHEN scale = 0 THEN 0
-          |    ELSE CAST(floor(x * 127.0 / scale + 0.5) AS BIGINT) END) AS ql FROM m)
-          |SELECT vec_id, round(scale, 6) AS scale,
-          |  CAST(list_sum(ql) AS BIGINT) AS q_sum,
-          |  CAST(list_min(ql) AS BIGINT) AS q_min,
-          |  CAST(list_max(ql) AS BIGINT) AS q_max
-          |FROM q ORDER BY vec_id""".stripMargin,
-
-      "t5_chunk_windows" ->
-        """WITH t AS (SELECT doc_id,
-          |  list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks FROM documents),
-          |s AS (SELECT doc_id, unnest(range(0, greatest(len(toks), 1), 24)) AS st, toks FROM t)
-          |SELECT doc_id, CAST(st // 24 AS INT) AS chunk_idx,
-          |  array_to_string(list_slice(toks, st + 1, st + 32), ' ') AS chunk_text
-          |FROM s ORDER BY doc_id, chunk_idx""".stripMargin,
-
-      "m1_media_features" ->
-        """SELECT doc_id AS asset_id, 'image' AS modality,
-          | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-          | CAST(length(text) % 1024 + 1 AS INT) AS width,
-          | CAST(length(text) % 768 + 1 AS INT) AS height
-          |FROM documents ORDER BY asset_id""".stripMargin,
-
-      // the decode-free fixture: pixel (x, y) of asset i is
-      // (7i + 3x + 5y) mod 256 by construction, so the oracle aggregates
-      // the FORMULA while Spark aggregates the decoded PNG raster
-      "m2_image_decode" ->
-        """WITH d AS (SELECT doc_id, CAST(doc_id % 5 + 4 AS INT) AS width,
-          |             CAST(doc_id % 3 + 4 AS INT) AS height FROM documents),
-          |xs AS (SELECT doc_id, width, height, unnest(range(0, width)) AS x FROM d),
-          |px AS (SELECT doc_id, width, height, x, unnest(range(0, height)) AS y FROM xs)
-          |SELECT doc_id AS asset_id, width, height,
-          |  CAST(width AS BIGINT) * height AS n_px,
-          |  CAST(sum((7 * doc_id + 3 * x + 5 * y) % 256) AS BIGINT) AS sum_v,
-          |  CAST(sum(((7 * doc_id + 3 * x + 5 * y) % 256) * (x + width * y)) AS BIGINT) AS wsum_v
-          |FROM px GROUP BY doc_id, width, height ORDER BY asset_id""".stripMargin,
-
-      // the decode-free fixture: sample j of asset i is
-      // ((31i + 17j) mod 4096) - 2048 by construction, so the oracle
-      // aggregates the FORMULA while Spark re-parses the packed bytes
-      "m3_audio_frames" ->
-        """WITH a AS (SELECT doc_id AS id, 5 + doc_id % 5 AS n_frames
-          |           FROM documents WHERE doc_id % 20 = 0),
-          |f AS (SELECT id, unnest(range(0, n_frames)) AS frame FROM a),
-          |s AS (SELECT id, frame, unnest(range(0, 160)) AS j FROM f),
-          |v AS (SELECT id, frame,
-          |        (id*31 + (frame*160 + j)*17) % 4096 - 2048 AS val FROM s)
-          |SELECT id AS asset_id, CAST(frame AS INT) AS frame_idx,
-          |  CAST(sum(abs(val)) AS BIGINT) AS sum_abs,
-          |  CAST(sum(val*val) AS BIGINT) AS sum_sq,
-          |  CAST(max(abs(val)) AS BIGINT) AS max_abs
-          |FROM v GROUP BY id, frame ORDER BY asset_id, frame_idx""".stripMargin,
-
-      // DFT bin energies: samples from the generating formula, the same
-      // floor(trig·10³+0.5) quantized tables, exact integer folds; power
-      // from the BIGINT-cast sums so nothing touches HUGEINT overflow
-      "m10_dft_energy" ->
-        """WITH a AS (SELECT doc_id AS id, 5 + doc_id % 5 AS n_frames
-          |           FROM documents WHERE doc_id % 20 = 0),
-          |f AS (SELECT id, unnest(range(0, n_frames)) AS frame FROM a),
-          |s AS (SELECT id, frame, unnest(range(0, 160)) AS j FROM f),
-          |v AS (SELECT id, frame, j,
-          |        (id*31 + (frame*160 + j)*17) % 4096 - 2048 AS val FROM s),
-          |b AS (SELECT CAST(unnest([1, 2, 4, 8]) AS BIGINT) AS bin),
-          |t AS (SELECT v.id, v.frame, b.bin,
-          |        v.val * CAST(floor(cos(2*pi()*b.bin*v.j/160)*1000 + 0.5) AS BIGINT) AS vc,
-          |        v.val * CAST(floor(sin(2*pi()*b.bin*v.j/160)*1000 + 0.5) AS BIGINT) AS vs
-          |      FROM v, b),
-          |agg AS (SELECT id, frame, bin,
-          |          CAST(sum(vc) AS BIGINT) AS re_milli,
-          |          CAST(sum(vs) AS BIGINT) AS im_milli
-          |        FROM t GROUP BY id, frame, bin)
-          |SELECT id AS asset_id, CAST(frame AS INT) AS frame_idx,
-          |  CAST(bin AS INT) AS bin, re_milli, im_milli,
-          |  re_milli*re_milli + im_milli*im_milli AS power
-          |FROM agg ORDER BY asset_id, frame_idx, bin""".stripMargin,
-
-      "m4_frame_plan" ->
-        """WITH a AS (SELECT doc_id AS asset_id,
-          |             500 + (doc_id % 7) * 333 AS dur FROM documents),
-          |f AS (SELECT asset_id, unnest(range(0, dur, 250)) AS ts_ms FROM a)
-          |SELECT asset_id, CAST(ts_ms // 250 AS BIGINT) AS frame_idx,
-          |  CAST(ts_ms AS BIGINT) AS ts_ms
-          |FROM f ORDER BY asset_id, frame_idx""".stripMargin,
-
-      "q5_local_supplier" ->
-        """SELECT n_name,
-          |  round(sum(l_extendedprice * (1 - l_discount)) + 5e-7, 2) AS revenue
-          |FROM region, nation, customer, orders, lineitem, supplier
-          |WHERE r_name = 'ASIA' AND n_regionkey = r_regionkey
-          |  AND c_nationkey = n_nationkey AND o_custkey = c_custkey
-          |  AND o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1998-01-01'
-          |  AND l_orderkey = o_orderkey
-          |  AND s_suppkey = l_suppkey AND s_nationkey = c_nationkey
-          |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-
-      "q1_pricing_summary" ->
-        """SELECT l_returnflag, l_linestatus,
-          | round(sum(l_quantity), 2) AS sum_qty,
-          | round(sum(l_extendedprice), 2) AS sum_base_price,
-          | round(sum(l_extendedprice * (1 - l_discount)) + 5e-7, 2) AS sum_disc_price,
-          | round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) + 5e-7, 2) AS sum_charge,
-          | round(avg(l_quantity), 4) AS avg_qty,
-          | round(avg(l_extendedprice), 4) AS avg_price,
-          | round(avg(l_discount), 4) AS avg_disc,
-          | count(*) AS count_order
-          |FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-09-02'
-          |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-      // Zevenbergen–Thorne general curvature: −100·(z_W+z_E+z_N+z_S−4z_C)/L²,
-      // L = 1 — the 4-connected cross re-summed from the neighborhood join
-      "r11_curvature" ->
-        """WITH grid AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, max(l_quantity) AS v
-          |  FROM lineitem GROUP BY 1, 2),
-          |g AS (
-          |  SELECT a.px, a.py, count(*) AS n,
-          |    sum(CASE WHEN abs(b.px - a.px) + abs(b.py - a.py) = 1 THEN b.v ELSE 0 END)
-          |      AS cross_sum,
-          |    max(CASE WHEN b.px = a.px AND b.py = a.py THEN b.v END) AS z0
-          |  FROM grid a JOIN grid b
-          |    ON b.px BETWEEN a.px - 1 AND a.px + 1 AND b.py BETWEEN a.py - 1 AND a.py + 1
-          |  GROUP BY a.px, a.py)
-          |SELECT px, py, round(-100.0 * (cross_sum - 4 * z0) + 5e-7, 4) AS curv
-          |FROM g WHERE n = 9 ORDER BY px, py""".stripMargin,
-
-      // TPI = z0 − (Σ9 − z0)/8; Riley TRI = √Σ(zi − z0)² (center adds 0);
-      // roughness = max − min of the window — all from ONE neighborhood join
-      "r12_terrain_idx" ->
-        """WITH grid AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, max(l_quantity) AS v
-          |  FROM lineitem GROUP BY 1, 2),
-          |g AS (
-          |  SELECT a.px, a.py, a.v AS z0, count(*) AS n, sum(b.v) AS s9,
-          |    sum((b.v - a.v) * (b.v - a.v)) AS sq,
-          |    max(b.v) AS mx, min(b.v) AS mn
-          |  FROM grid a JOIN grid b
-          |    ON b.px BETWEEN a.px - 1 AND a.px + 1 AND b.py BETWEEN a.py - 1 AND a.py + 1
-          |  GROUP BY a.px, a.py, a.v)
-          |SELECT px, py,
-          |  round(z0 - (s9 - z0) / 8.0 + 5e-7, 4) AS tpi,
-          |  round(sqrt(sq) + 5e-7, 4) AS tri,
-          |  CAST(mx - mn AS BIGINT) AS rough
-          |FROM g WHERE n = 9 ORDER BY px, py""".stripMargin,
-
-      "g10_ppr" -> {
-        // four unrolled rounds of the seed-teleport integer recurrence:
-        // teleport 125000 ONLY on seeds (id % 50 = 0), r0 = 10^6·1[seed]
-        val iters = (1 to 4).map { k =>
-          s"""r$k AS (SELECT n2.id,
-             |  CAST(CASE WHEN n2.id % 50 = 0 THEN 125000 ELSE 0 END
-             |    + coalesce(m.mass, 0) AS BIGINT) AS rank
-             |  FROM nodes n2 LEFT JOIN (
-             |    SELECT adj.dst AS id, sum(r${k - 1}.rank * 7 // (8 * adj.outdeg)) AS mass
-             |    FROM adj JOIN r${k - 1} ON adj.src = r${k - 1}.id GROUP BY 1) m
-             |  ON n2.id = m.id)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-           |e AS (SELECT DISTINCT src, dst FROM (
-           |  SELECT doc_id AS src, (doc_id * 31 + 7) % nn.n AS dst FROM documents, nn
-           |  UNION ALL SELECT doc_id, (doc_id * 17 + 3) % nn.n FROM documents, nn)),
-           |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-           |adj AS (SELECT e.src, e.dst, deg.outdeg FROM e JOIN deg USING (src)),
-           |nodes AS (SELECT DISTINCT id FROM (
-           |  SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-           |r0 AS (SELECT id,
-           |  CAST(CASE WHEN id % 50 = 0 THEN 1000000 ELSE 0 END AS BIGINT) AS rank
-           |  FROM nodes),
-           |$iters
-           |SELECT id AS doc_id, rank AS rank_micro FROM r4 ORDER BY doc_id""".stripMargin
-      },
-
-      // wedges only through centers of degree <= 8 (the same hub cap),
-      // true degrees in the Jaccard denominator, existing edges excluded
-      "g11_link_pred" ->
-        """WITH nn AS (SELECT count(*) AS n FROM documents),
-          |e0 AS (
-          |  SELECT doc_id AS u, (doc_id * 31 + 7) % nn.n AS v FROM documents, nn
-          |  UNION ALL SELECT doc_id, (doc_id * 17 + 3) % nn.n FROM documents, nn),
-          |und AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b
-          |        FROM e0 WHERE u <> v),
-          |nbr AS (SELECT a AS c, b AS u FROM und UNION ALL SELECT b, a FROM und),
-          |deg AS (SELECT c, count(*) AS deg FROM nbr GROUP BY 1),
-          |cap AS (SELECT nbr.c, nbr.u FROM nbr JOIN deg USING (c) WHERE deg <= 8),
-          |cand AS (SELECT l.u AS a, r.u AS b, count(*) AS cn
-          |  FROM cap l JOIN cap r ON l.c = r.c AND l.u < r.u
-          |  GROUP BY 1, 2 HAVING count(*) >= 2),
-          |nc AS (SELECT * FROM cand c WHERE NOT EXISTS (
-          |  SELECT 1 FROM und WHERE und.a = c.a AND und.b = c.b))
-          |SELECT nc.a, nc.b, nc.cn, da.deg AS deg_a, db.deg AS deg_b,
-          |  round(nc.cn / (da.deg + db.deg - nc.cn) + 5e-7, 4) AS jaccard
-          |FROM nc JOIN deg da ON da.c = nc.a JOIN deg db ON db.c = nc.b
-          |ORDER BY a, b""".stripMargin,
-
-      // quadratic dominance NOT EXISTS — a different algorithm than the
-      // Spark side's distinct-price sweep, same frontier
-      "x25_skyline" ->
-        """SELECT p.p_partkey, p.p_retailprice, p.p_size FROM part p
-          |WHERE NOT EXISTS (SELECT 1 FROM part r
-          |  WHERE r.p_retailprice <= p.p_retailprice AND r.p_size >= p.p_size
-          |    AND (r.p_retailprice < p.p_retailprice OR r.p_size > p.p_size))
-          |ORDER BY p.p_partkey""".stripMargin,
-
-      // plain COUNT(DISTINCT) set algebra — no bitmaps on the oracle side
-      "x26_bitmap_overlap" ->
-        """WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
-          |card AS (SELECT event_type, count(*) AS n FROM du GROUP BY 1),
-          |inter AS (SELECT a.event_type AS seg1, b.event_type AS seg2,
-          |    count(*) AS n_common
-          |  FROM du a JOIN du b
-          |    ON a.user_id = b.user_id AND a.event_type < b.event_type
-          |  GROUP BY 1, 2)
-          |SELECT seg1, seg2, c1.n AS n1, c2.n AS n2, inter.n_common,
-          |  c1.n + c2.n - inter.n_common AS n_union
-          |FROM inter JOIN card c1 ON c1.event_type = seg1
-          |  JOIN card c2 ON c2.event_type = seg2
-          |ORDER BY seg1, seg2""".stripMargin,
-
-      // gaps-and-islands at MICROSECOND precision: a new session starts at
-      // gap >= 30 min (session_window merges only strictly-overlapping
-      // [ts, ts+gap) windows); end = last event + gap
-      "st5_session_window" ->
-        """WITH g AS (
-          |  SELECT user_id, ts,
-          |    CASE WHEN lag(ts) OVER w IS NULL THEN 1
-          |         WHEN ts - lag(ts) OVER w >= INTERVAL 30 MINUTE THEN 1
-          |         ELSE 0 END AS new_s
-          |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          |s AS (
-          |  SELECT user_id, ts,
-          |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-          |                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-          |  FROM g)
-          |SELECT user_id, min(ts) AS s_start,
-          |  max(ts) + INTERVAL 30 MINUTE AS s_end, count(*) AS n_events
-          |FROM s GROUP BY user_id, sid ORDER BY user_id, s_start""".stripMargin,
-
-      // recall@5 of the global-scale int8 ranker vs the e1 float truth —
-      // the quantized dots/norms are exact BIGINTs on both engines
-      "e15_sq_recall" ->
-        s"""WITH sc AS (SELECT max(list_max(list_transform(embedding::DOUBLE[],
-           |    x -> abs(x)))) AS s FROM embeddings),
-           |c AS (SELECT vec_id, list_transform(embedding::DOUBLE[],
-           |    x -> CASE WHEN sc.s = 0 THEN CAST(0 AS BIGINT)
-           |         ELSE CAST(floor(x * 127.0 / sc.s + 0.5) AS BIGINT) END) AS q
-           |  FROM embeddings, sc),
-           |nq AS (SELECT vec_id, q,
-           |    CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS nrm FROM c),
-           |qs AS (SELECT vec_id AS query_id, q AS qq, nrm AS qn
-           |  FROM nq WHERE vec_id < 5),
-           |s2 AS (SELECT query_id, nq.vec_id AS neighbor_id,
-           |    CAST(list_sum(list_transform(list_zip(qq, q), p -> p[1] * p[2]))
-           |      AS BIGINT) AS dot,
-           |    CAST(qn * nrm AS DOUBLE) AS nn
-           |  FROM qs, nq WHERE query_id != nq.vec_id),
-           |r AS (SELECT query_id, neighbor_id, CAST(row_number() OVER (
-           |    PARTITION BY query_id ORDER BY dot / sqrt(nn) DESC, neighbor_id ASC)
-           |    AS INT) AS rank FROM s2),
-           |appr AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 5),
-           |truth AS (SELECT query_id, neighbor_id FROM ($e1KnnSql))
-           |SELECT t.query_id, count(*) AS k,
-           |  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           |  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) * 100
-           |    // count(*) AS BIGINT) AS recall_pct
-           |FROM truth t LEFT JOIN appr a
-           |  ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
-           |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin,
-
-      // D8 argmax replayed as a window over the 8 neighbor drops: key =
-      // drop²·(2 cardinal / 1 diagonal) for positive drops, ESRI codes,
-      // ties to the smallest code, sinks/flats 0; full windows only
-      "r13_flow_dir" -> r13FlowSql,
-
-      // per-community Newman modularity from g7's labeling: the common
-      // denominator 4m² clears both terms; sign-safe magnitude // division
-      "g12_modularity" ->
-        s"""WITH lab AS (SELECT doc_id AS id, label FROM ($g7LabelSql)),
-           |nn AS (SELECT count(*) AS n FROM documents),
-           |e0 AS (
-           |  SELECT doc_id AS u, (doc_id * 31 + 7) % nn.n AS v FROM documents, nn
-           |  UNION ALL SELECT doc_id, (doc_id * 17 + 3) % nn.n FROM documents, nn),
-           |und AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b
-           |        FROM e0 WHERE u <> v),
-           |deg AS (SELECT id, count(*) AS deg FROM (
-           |  SELECT a AS id FROM und UNION ALL SELECT b FROM und) GROUP BY 1),
-           |m1 AS (SELECT count(*) AS m FROM und),
-           |ein AS (SELECT la.label, count(*) AS e_in FROM und
-           |  JOIN lab la ON la.id = und.a JOIN lab lb ON lb.id = und.b
-           |  WHERE la.label = lb.label GROUP BY 1),
-           |ds AS (SELECT lab.label, count(*) AS n_members,
-           |  CAST(sum(deg.deg) AS BIGINT) AS deg_sum
-           |  FROM lab JOIN deg ON deg.id = lab.id GROUP BY 1)
-           |SELECT ds.label, ds.n_members, coalesce(ein.e_in, 0) AS e_in, ds.deg_sum,
-           |  CAST(CASE WHEN 4 * m1.m * coalesce(ein.e_in, 0) - ds.deg_sum * ds.deg_sum >= 0
-           |    THEN (4 * m1.m * coalesce(ein.e_in, 0) - ds.deg_sum * ds.deg_sum)
-           |      * 1000000 // (4 * m1.m * m1.m)
-           |    ELSE -((ds.deg_sum * ds.deg_sum - 4 * m1.m * coalesce(ein.e_in, 0))
-           |      * 1000000 // (4 * m1.m * m1.m))
-           |  END AS BIGINT) AS contrib_micro
-           |FROM ds LEFT JOIN ein ON ein.label = ds.label, m1
-           |ORDER BY ds.label""".stripMargin,
-
-      // per-user event streams as ordered character strings; the funnel
-      // pattern counts as non-overlapping greedy regex matches
-      "x27_event_pattern" ->
-        """WITH s AS (
-          |  SELECT user_id, string_agg(
-          |    CASE event_type WHEN 'click' THEN 'c' WHEN 'error' THEN 'e'
-          |      WHEN 'purchase' THEN 'p' WHEN 'signup' THEN 's' ELSE 'v' END,
-          |    '' ORDER BY ts, event_id) AS seq
-          |  FROM events GROUP BY user_id)
-          |SELECT user_id, CAST(length(seq) AS BIGINT) AS seq_len,
-          |  CAST(len(regexp_extract_all(seq, 'v+cp')) AS BIGINT) AS n_funnels
-          |FROM s ORDER BY user_id""".stripMargin,
-
-      // recall@5 of the 16-of-64 prefix-dimension (Matryoshka) ranker
-      // against the full-dim float truth
-      "e16_mrl_recall" ->
-        s"""WITH e AS (SELECT vec_id, (embedding::DOUBLE[])[1:16] AS v FROM embeddings),
-           |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-           |s2 AS (SELECT query_id, e.vec_id AS neighbor_id,
-           |    list_dot_product(qv, v)
-           |      / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v)))
-           |      AS rawcos
-           |  FROM q CROSS JOIN e WHERE query_id != e.vec_id),
-           |r AS (SELECT query_id, neighbor_id, CAST(row_number() OVER (
-           |    PARTITION BY query_id ORDER BY rawcos DESC, neighbor_id ASC)
-           |    AS INT) AS rank FROM s2),
-           |appr AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 5),
-           |truth AS (SELECT query_id, neighbor_id FROM ($e1KnnSql))
-           |SELECT t.query_id, count(*) AS k,
-           |  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           |  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) * 100
-           |    // count(*) AS BIGINT) AS recall_pct
-           |FROM truth t LEFT JOIN appr a
-           |  ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
-           |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin,
-
-      // round-1 winner merges via plain left-to-right replace (identical
-      // non-regex semantics), words re-segment, symbol pairs re-count
-      "t31_bpe_round2" ->
-        s"""WITH words AS (SELECT unnest($tokExpr) AS word FROM documents),
-           |idx AS (SELECT word, unnest(generate_series(1, len(word) - 1)) AS i
-           |        FROM words WHERE len(word) >= 2),
-           |p1 AS (SELECT substr(word, CAST(i AS INT), 2) AS pair FROM idx),
-           |top1 AS (SELECT pair AS tp FROM (
-           |    SELECT pair, count(*) AS n FROM p1 GROUP BY 1)
-           |  ORDER BY n DESC, pair LIMIT 1),
-           |seg AS (SELECT replace(word, top1.tp, chr(1)) AS sg, top1.tp
-           |        FROM words, top1),
-           |si AS (SELECT sg, tp, unnest(generate_series(1, len(sg) - 1)) AS i
-           |       FROM seg WHERE len(sg) >= 2),
-           |adj AS (SELECT
-           |    (CASE WHEN substr(sg, CAST(i AS INT), 1) = chr(1) THEN tp
-           |          ELSE substr(sg, CAST(i AS INT), 1) END)
-           |    || '+' ||
-           |    (CASE WHEN substr(sg, CAST(i AS INT) + 1, 1) = chr(1) THEN tp
-           |          ELSE substr(sg, CAST(i AS INT) + 1, 1) END) AS pair
-           |  FROM si),
-           |c AS (SELECT pair, count(*) AS n FROM adj GROUP BY 1),
-           |r AS (SELECT pair, n,
-           |    CAST(row_number() OVER (ORDER BY n DESC, pair) AS INT) AS rank FROM c)
-           |SELECT rank, pair, n FROM r WHERE rank <= 15 ORDER BY rank""".stripMargin,
-
-      // true ancestor closure over the D8 out-edges (recursive CTE on the
-      // functional graph — each vertex has one out-edge, paths are unique)
-      "r14_flow_accum" ->
-        s"""WITH RECURSIVE fdir AS ($r13FlowSql),
-           |edges AS (SELECT
-           |    py * 100 + px AS src,
-           |    (py + CASE WHEN flow_dir IN (2, 4, 8) THEN 1
-           |               WHEN flow_dir IN (32, 64, 128) THEN -1 ELSE 0 END) * 100
-           |    + (px + CASE WHEN flow_dir IN (1, 2, 128) THEN 1
-           |                 WHEN flow_dir IN (8, 16, 32) THEN -1 ELSE 0 END) AS dst
-           |  FROM fdir WHERE flow_dir > 0),
-           |nodes AS (SELECT DISTINCT id FROM (
-           |  SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges)),
-           |paths(u, v) AS (
-           |  SELECT src, dst FROM edges
-           |  UNION
-           |  SELECT p.u, e.dst FROM paths p JOIN edges e ON e.src = p.v),
-           |anc AS (SELECT v AS id, count(*) AS acc FROM paths GROUP BY v)
-           |SELECT CAST(id % 100 AS BIGINT) AS px, CAST(id // 100 AS BIGINT) AS py,
-           |  CAST(coalesce(anc.acc, 0) AS BIGINT) AS acc
-           |FROM nodes LEFT JOIN anc USING (id) ORDER BY px, py""".stripMargin,
-
-      // per-window frequency argmax: count per value, ties to the
-      // smallest value, full windows only
-      "r15_majority" ->
-        """WITH grid AS (
-          |  SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py, max(l_quantity) AS v
-          |  FROM lineitem GROUP BY 1, 2),
-          |nb AS (
-          |  SELECT a.px, a.py, b.v
-          |  FROM grid a JOIN grid b
-          |    ON b.px BETWEEN a.px - 1 AND a.px + 1 AND b.py BETWEEN a.py - 1 AND a.py + 1),
-          |cnt AS (SELECT px, py, v, count(*) AS c FROM nb GROUP BY 1, 2, 3),
-          |tot AS (SELECT px, py, sum(c) AS n FROM cnt GROUP BY 1, 2),
-          |r AS (SELECT px, py, v,
-          |    row_number() OVER (PARTITION BY px, py ORDER BY c DESC, v ASC) AS rn
-          |  FROM cnt)
-          |SELECT r.px, r.py, round(v + 5e-7, 4) AS majority
-          |FROM r JOIN tot USING (px, py) WHERE rn = 1 AND n = 9
-          |ORDER BY px, py""".stripMargin,
-
-      // sign-bit codes packed as two positive 32-bit halves; Hamming =
-      // popcount(xor) per half — all integer
-      "e17_hamming_recall" -> {
-        def halfSql(lo: Int): String = (0 until 32).map { j =>
-          s"CASE WHEN v[${lo + j + 1}] >= 0 THEN ${1L << j} ELSE 0 END"
-        }.mkString(" + ")
-        s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |c AS (SELECT vec_id, CAST(${halfSql(0)} AS BIGINT) AS c0,
-           |    CAST(${halfSql(32)} AS BIGINT) AS c1 FROM e),
-           |q AS (SELECT vec_id AS query_id, c0 AS q0, c1 AS q1 FROM c
-           |  WHERE vec_id < 5),
-           |s2 AS (SELECT query_id, c.vec_id AS neighbor_id,
-           |    bit_count(xor(q0, c.c0)) + bit_count(xor(q1, c.c1)) AS ham
-           |  FROM q, c WHERE query_id != c.vec_id),
-           |r AS (SELECT query_id, neighbor_id, CAST(row_number() OVER (
-           |    PARTITION BY query_id ORDER BY ham ASC, neighbor_id ASC)
-           |    AS INT) AS rank FROM s2),
-           |appr AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 5),
-           |truth AS (SELECT query_id, neighbor_id FROM ($e1KnnSql))
-           |SELECT t.query_id, count(*) AS k,
-           |  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           |  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) * 100
-           |    // count(*) AS BIGINT) AS recall_pct
-           |FROM truth t LEFT JOIN appr a
-           |  ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
-           |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin
-      },
-
-      // distinct hashed 5-grams per source; one gram-keyed self-join
-      "t37_cross_contamination" ->
-        s"""WITH t AS (SELECT source, $tokExpr AS toks FROM documents),
-           |g AS (SELECT DISTINCT source, ${h("gram")} AS g FROM (
-           |    SELECT source, unnest(list_distinct(list_transform(
-           |      range(1, greatest(len(toks) - 4, 0) + 1),
-           |      i -> array_to_string(toks[CAST(i AS INT):CAST(i + 4 AS INT)], ' ')))) AS gram
-           |    FROM t WHERE len(toks) >= 5))
-           |SELECT a.source AS src1, b.source AS src2, count(*) AS n_shared
-           |FROM g a JOIN g b ON a.g = b.g AND a.source < b.source
-           |GROUP BY 1, 2 ORDER BY src1, src2""".stripMargin,
-
-      // pigeonhole: Hamming ≤ 1 must agree on a 32-bit half; union of
-      // two equi band joins + popcount verify
-      "m9_ahash_pairs" ->
-        s"""WITH ah AS ($m6AhashSql),
-           |s1 AS (SELECT asset_id AS a1, hash_hi AS h1, hash_lo AS l1 FROM ah),
-           |s2 AS (SELECT asset_id AS a2, hash_hi AS h2, hash_lo AS l2 FROM ah),
-           |cand AS (
-           |  SELECT DISTINCT a1, a2, h1, h2, l1, l2 FROM (
-           |    SELECT * FROM s1 JOIN s2 ON h1 = h2 AND a1 < a2
-           |    UNION ALL
-           |    SELECT * FROM s1 JOIN s2 ON l1 = l2 AND a1 < a2))
-           |SELECT a1, a2,
-           |  CAST(bit_count(xor(h1, h2)) + bit_count(xor(l1, l2)) AS BIGINT) AS hamming
-           |FROM cand
-           |WHERE bit_count(xor(h1, h2)) + bit_count(xor(l1, l2)) <= 1
-           |ORDER BY a1, a2""".stripMargin,
-
-      // probe ranks once, four nprobe tiers filter the same relation;
-      // per-tier cosine top-5 vs the shared e1 truth — over e5's TRAINED
-      // integer-Lloyd coarse centroids (the index a deployment builds)
-      "e26_nprobe_sweep" ->
-        s"""WITH $trainedCentCtes,
-           |emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |dist AS (SELECT e.vec_id, cent.cid,
-           |    list_sum(list_transform(list_zip(e.v, cent.c),
-           |      p -> (p[1] - p[2]) * (p[1] - p[2]))) AS d2
-           |  FROM emb e CROSS JOIN cent),
-           |assigned AS (SELECT vec_id AS neighbor_id, cid FROM (
-           |    SELECT vec_id, cid,
-           |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-           |    FROM dist) WHERE rn = 1),
-           |pranks AS (SELECT vec_id AS query_id, cid,
-           |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS pr
-           |  FROM dist WHERE vec_id < 5),
-           |ks AS (SELECT unnest([1, 2, 3, 4]) AS np),
-           |tiers AS (SELECT p.query_id, p.cid, ks.np FROM pranks p
-           |  CROSS JOIN ks WHERE p.pr <= ks.np),
-           |cand AS (SELECT t.query_id, t.np, a.neighbor_id,
-           |    list_dot_product(qe.v, ce.v) /
-           |      (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) AS rawcos
-           |  FROM tiers t JOIN assigned a ON a.cid = t.cid
-           |    AND a.neighbor_id != t.query_id
-           |  JOIN emb qe ON qe.vec_id = t.query_id
-           |  JOIN emb ce ON ce.vec_id = a.neighbor_id),
-           |appr AS (SELECT query_id, np, neighbor_id FROM (
-           |    SELECT query_id, np, neighbor_id, row_number() OVER (
-           |      PARTITION BY query_id, np ORDER BY rawcos DESC, neighbor_id) AS rk
-           |    FROM cand) WHERE rk <= 5),
-           |truth AS (SELECT query_id, neighbor_id FROM ($e1KnnSql))
-           |SELECT ks.np, count(*) AS n_true,
-           |  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_hits,
-           |  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    * 1000000 // count(*) AS BIGINT) AS recall_micro
-           |FROM truth t CROSS JOIN ks
-           |LEFT JOIN appr a ON a.query_id = t.query_id AND a.np = ks.np
-           |  AND a.neighbor_id = t.neighbor_id
-           |GROUP BY ks.np ORDER BY ks.np""".stripMargin,
-
-      // both arc orientations; exact x21-style sufficient statistics
-      "g16_assortativity" ->
-        """WITH n AS (SELECT count(*) AS n FROM documents),
-          |e0 AS (SELECT doc_id AS src, ((doc_id * 31 + 7) % n.n) AS d1,
-          |    ((doc_id * 17 + 3) % n.n) AS d2 FROM documents, n),
-          |edges AS (SELECT src, d1 AS dst FROM e0
-          |  UNION ALL SELECT src, d2 AS dst FROM e0),
-          |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          |  FROM edges WHERE src <> dst),
-          |deg AS (SELECT id, count(*) AS deg FROM (
-          |    SELECT a AS id FROM und UNION ALL SELECT b FROM und) GROUP BY 1),
-          |arcs AS (SELECT a AS x, b AS y FROM und
-          |  UNION ALL SELECT b AS x, a AS y FROM und),
-          |j AS (SELECT dx.deg AS dx, dy.deg AS dy FROM arcs
-          |  JOIN deg dx ON dx.id = arcs.x JOIN deg dy ON dy.id = arcs.y)
-          |SELECT count(*) AS n_arcs,
-          |  CAST(count(*) * sum(dx * dy) - sum(dx) * sum(dy) AS BIGINT) AS covar_num,
-          |  CAST(count(*) * sum(dx * dx) - sum(dx) * sum(dx) AS BIGINT) AS varx_num,
-          |  CAST(count(*) * sum(dy * dy) - sum(dy) * sum(dy) AS BIGINT) AS vary_num
-          |FROM j""".stripMargin,
-
-      // gram-hash census min doc_id + join-back; novelty is integer
-      // interpolated-LM perplexity: λ = 0.75 so both mixture weights are
-      // exact binary doubles; keep compares integer micro-nat sums
-      "t41_perplexity" ->
-        """WITH t AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'),
-          |                  x -> len(x) > 0) AS toks FROM documents),
-          |uc AS (SELECT tok, count(*) AS c
-          |       FROM (SELECT unnest(toks) AS tok FROM t) GROUP BY 1),
-          |tot AS (SELECT sum(c) AS n, count(*) AS v FROM uc),
-          |bi AS (SELECT doc_id, unnest(toks[1:-2]) AS w1, unnest(toks[2:-1]) AS w2
-          |       FROM t WHERE len(toks) >= 2),
-          |bfreq AS (SELECT w1, w2, count(*) AS bc FROM bi GROUP BY 1, 2),
-          |pfx AS (SELECT w1, sum(bc) AS pc FROM bfreq GROUP BY 1),
-          |m AS (SELECT doc_id,
-          |    CAST(floor(-ln(0.75 * (bc * 1.0 / pc) +
-          |                   0.25 * ((c + 1) * 1.0 / (n + v))) * 1e6 + 0.5) AS BIGINT) AS micro
-          |  FROM bi JOIN bfreq USING (w1, w2) JOIN pfx USING (w1)
-          |  JOIN uc ON uc.tok = bi.w2 CROSS JOIN tot)
-          |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-          |  round(exp(sum(micro) * 1.0 / count(*) / 1e6) + 5e-7, 2) AS ppl,
-          |  CAST(CASE WHEN sum(micro) < count(*) * 3500000 THEN 1 ELSE 0 END AS INT) AS keep
-          |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      "t40_novelty" ->
-        s"""WITH t AS (SELECT doc_id, $tokExpr AS toks FROM documents),
-           |g AS (SELECT doc_id, ${h("gram")} AS g FROM (
-           |    SELECT doc_id, unnest(list_distinct(list_transform(
-           |      range(1, greatest(len(toks) - 4, 0) + 1),
-           |      i -> array_to_string(toks[CAST(i AS INT):CAST(i + 4 AS INT)], ' ')))) AS gram
-           |    FROM t WHERE len(toks) >= 5)),
-           |f AS (SELECT g, min(doc_id) AS fd FROM g GROUP BY 1)
-           |SELECT doc_id, count(*) AS n_grams,
-           |  CAST(sum(CASE WHEN doc_id = fd THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-           |  CAST(sum(CASE WHEN doc_id = fd THEN 1 ELSE 0 END) * 1000000
-           |    // count(*) AS BIGINT) AS novelty_micro
-           |FROM g JOIN f USING (g) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      // descending rank + one window cumsum; 5·cum ≥ 4·total integer form
-      "x50_pareto" ->
-        """WITH rev AS (SELECT o_custkey,
-          |    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
-          |  FROM orders GROUP BY 1),
-          |r AS (SELECT cents,
-          |    row_number() OVER (ORDER BY cents DESC, o_custkey) AS rnk,
-          |    sum(cents) OVER (ORDER BY cents DESC, o_custkey
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-          |  FROM rev),
-          |t AS (SELECT CAST(sum(cents) AS BIGINT) AS tot, count(*) AS n FROM rev)
-          |SELECT t.n AS n_customers, t.tot AS total_cents,
-          |  CAST(min(CASE WHEN r.cum * 5 >= t.tot * 4 THEN r.rnk END) AS BIGINT) AS k_80
-          |FROM r, t GROUP BY t.n, t.tot""".stripMargin,
-
-      // st2's sessionization keyed to the start day; one division
-      "x49_bounce_rate" ->
-        """WITH l AS (SELECT user_id, ts, event_id,
-          |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-          |        IS NULL THEN 1
-          |      WHEN epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id
-          |        ORDER BY ts, event_id)) > 1800 THEN 1 ELSE 0 END AS new_s
-          |  FROM events),
-          |s2 AS (SELECT user_id, ts,
-          |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-          |  FROM l),
-          |sess AS (SELECT user_id, session_id, CAST(min(ts) AS DATE) AS day,
-          |    count(*) AS n FROM s2 GROUP BY 1, 2)
-          |SELECT day, count(*) AS n_sessions,
-          |  CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_bounce,
-          |  CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) * 1000000 // count(*)
-          |    AS BIGINT) AS bounce_micro
-          |FROM sess GROUP BY day ORDER BY day""".stripMargin,
-
-      // one pass, one conditional sum per threshold over micro cosines
-      "e25_threshold_sweep" -> {
-        val cols = (3 to 9).map(t =>
-          s"CAST(sum(CASE WHEN c >= ${t * 100000} THEN 1 ELSE 0 END) AS BIGINT) AS n_ge_${t}0pct")
-          .mkString(",\n           |  ")
-        s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-           |  WHERE vec_id < 200),
-           |p AS (SELECT CAST(floor(list_dot_product(a.v, b.v) /
-           |    (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
-           |    * 1e6 + 0.5) AS BIGINT) AS c
-           |  FROM e a JOIN e b ON a.vec_id < b.vec_id)
-           |SELECT count(*) AS n_pairs,
-           |  $cols
-           |FROM p""".stripMargin
-      },
-
-      // symmetrized simple graph, vertex degree fold, |degrees|-row
-      // census. UNION ALL of the two arithmetic edges instead of unnest:
-      // DuckDB 1.x hits an internal binder error on unnest under
-      // least/greatest+DISTINCT here
-      "g15_degree_hist" ->
-        """WITH n AS (SELECT count(*) AS n FROM documents),
-          |e0 AS (SELECT doc_id AS src, ((doc_id * 31 + 7) % n.n) AS d1,
-          |    ((doc_id * 17 + 3) % n.n) AS d2 FROM documents, n),
-          |edges AS (SELECT src, d1 AS dst FROM e0
-          |  UNION ALL SELECT src, d2 AS dst FROM e0),
-          |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          |  FROM edges WHERE src <> dst),
-          |deg AS (SELECT id, count(*) AS deg FROM (
-          |    SELECT a AS id FROM und UNION ALL SELECT b FROM und) GROUP BY 1)
-          |SELECT deg, count(*) AS n_vertices FROM deg
-          |GROUP BY 1 ORDER BY deg""".stripMargin,
-
-      // exact integer sentence/word/vowel-group counts; one IEEE
-      // evaluation of the Flesch formula, micro-quantized
-      "t39_readability" ->
-        s"""WITH t AS (SELECT doc_id,
-           |    greatest(len(list_filter(string_split_regex(lower(text), '[.!?]+'),
-           |      x -> len(trim(x)) > 0)), 1) AS n_sent,
-           |    $tokExpr AS toks
-           |  FROM documents),
-           |c AS (SELECT doc_id, CAST(n_sent AS BIGINT) AS n_sent,
-           |    CAST(greatest(len(toks), 1) AS BIGINT) AS n_words,
-           |    CAST(coalesce(list_sum(list_transform(toks,
-           |      w -> greatest(len(list_filter(string_split_regex(w, '[^aeiouy]+'),
-           |        g -> len(g) > 0)), 1))), 0) AS BIGINT) AS n_syll
-           |  FROM t)
-           |SELECT doc_id, n_sent, n_words, n_syll,
-           |  CAST(floor((206.835 - 1.015 * n_words / n_sent
-           |    - 84.6 * n_syll / n_words) * 1e6 + 0.5) AS BIGINT) AS flesch_micro
-           |FROM c ORDER BY doc_id""".stripMargin,
-
-      // first-seen argmin + user-keyed presence join
-      "x48_new_vs_returning" ->
-        """WITH pres AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id
-          |  FROM events),
-          |f AS (SELECT user_id, min(day) AS fd FROM pres GROUP BY 1)
-          |SELECT day,
-          |  CAST(sum(CASE WHEN day = fd THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
-          |  CAST(sum(CASE WHEN day <> fd THEN 1 ELSE 0 END) AS BIGINT) AS n_returning
-          |FROM pres JOIN f USING (user_id)
-          |GROUP BY day ORDER BY day""".stripMargin,
-
-      // frame-collect + lower median (element ⌈n/2⌉) — integer-exact
-      "w6_rolling_median" ->
-        """WITH e AS (SELECT event_id, user_id, ts,
-          |    CAST(floor(value) AS BIGINT) AS v FROM events WHERE user_id < 20),
-          |w AS (SELECT event_id, user_id, v,
-          |    list_sort(list(v) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)) AS fr
-          |  FROM e)
-          |SELECT event_id, user_id, v, fr[CAST((len(fr) + 1) // 2 AS INT)] AS med5
-          |FROM w ORDER BY event_id""".stripMargin,
-
-      // single global running max over arrival order (the oracle may use
-      // one window; the Spark side buckets it)
-      "x45_watermark_audit" ->
-        """WITH h AS (SELECT event_type, ts,
-          |    max(ts) OVER (ORDER BY event_id
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS hwm
-          |  FROM events),
-          |l AS (SELECT event_type,
-          |    CASE WHEN hwm IS NULL OR hwm <= ts THEN 0
-          |      ELSE (epoch_us(hwm) - epoch_us(ts)) // 1000000 END AS late_sec
-          |  FROM h)
-          |SELECT event_type, count(*) AS n_events,
-          |  CAST(sum(CASE WHEN late_sec > 3600 THEN 1 ELSE 0 END) AS BIGINT)
-          |    AS n_dropped_1h,
-          |  CAST(max(late_sec) AS BIGINT) AS max_late_sec
-          |FROM l GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-      // per-bin smoothed (pA − pB)·ln(pA/pB), epochs split mid-1997
-      "x44_psi_drift" ->
-        """WITH b AS (SELECT l_shipdate < TIMESTAMP '1997-06-01' AS a,
-          |    least(greatest((CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-          |      - 90000) // 1041000, 0), 9) AS bin
-          |  FROM lineitem),
-          |cnt AS (SELECT bin,
-          |    CAST(sum(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-          |    CAST(sum(CASE WHEN a THEN 0 ELSE 1 END) AS BIGINT) AS n_b
-          |  FROM b GROUP BY 1),
-          |tot AS (SELECT sum(n_a) AS na, sum(n_b) AS nb FROM cnt)
-          |SELECT bin, n_a, n_b,
-          |  CAST(floor(((n_a + 1) * 1.0 / (na + 10) - (n_b + 1) * 1.0 / (nb + 10))
-          |    * ln(((n_a + 1) * 1.0 / (na + 10)) / ((n_b + 1) * 1.0 / (nb + 10)))
-          |    * 1e6 + 0.5) AS BIGINT) AS psi_term_micro
-          |FROM cnt, tot ORDER BY bin""".stripMargin,
-
-      // equal-frequency bins from exact global ranks; the oracle's single
-      // window replays the bucket-offset two-pass rank exactly
-      "x42_quantile_binning" ->
-        """WITH v AS (SELECT l_orderkey, l_linenumber,
-          |    CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
-          |  FROM lineitem),
-          |r AS (SELECT cents,
-          |    row_number() OVER (ORDER BY cents, l_orderkey, l_linenumber) AS i,
-          |    count(*) OVER () AS n FROM v)
-          |SELECT CAST((i - 1) * 10 // n AS BIGINT) AS bin,
-          |  min(cents) AS lo_cents, max(cents) AS hi_cents,
-          |  count(*) AS n_rows
-          |FROM r GROUP BY 1 ORDER BY bin""".stripMargin,
-
-      // recall at k = 1, 3, 5 from the shared e1/e2 rankers; found
-      // beyond k is a miss at that k
-      "e23_recall_curve" ->
-        s"""WITH truth AS (SELECT query_id, neighbor_id, rank FROM ($e1KnnSql)),
-           |appr AS (SELECT query_id, neighbor_id, rank AS arank FROM ($e2KnnSql)),
-           |ks AS (SELECT unnest([1, 3, 5]) AS k),
-           |t2 AS (SELECT t.query_id, t.neighbor_id, ks.k FROM truth t
-           |  CROSS JOIN ks WHERE t.rank <= ks.k)
-           |SELECT t2.query_id, CAST(t2.k AS INT) AS k,
-           |  count(*) AS n_true,
-           |  CAST(sum(CASE WHEN a.arank IS NOT NULL AND a.arank <= t2.k
-           |    THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           |  CAST(sum(CASE WHEN a.arank IS NOT NULL AND a.arank <= t2.k
-           |    THEN 1 ELSE 0 END) * 1000000 // count(*) AS BIGINT) AS recall_micro
-           |FROM t2 LEFT JOIN appr a
-           |  ON a.query_id = t2.query_id AND a.neighbor_id = t2.neighbor_id
-           |GROUP BY 1, 2 ORDER BY t2.query_id, k""".stripMargin,
-
-      // closed-form axis-aligned clip area vs the Spark side's real JTS
-      // intersection — integer lattice bounds keep the doubles exact
-      "p4_clip_area" ->
-        """SELECT concat('file_', p_partkey, '.tif') AS uri,
-          |  round(
-          |    greatest(0, least((p_partkey % 36) * 10 - 165, 60)
-          |      - greatest((p_partkey % 36) * 10 - 180, -60)) *
-          |    greatest(0, least((p_partkey % 18) * 10 - 75, 40)
-          |      - greatest((p_partkey % 18) * 10 - 90, -40)), 4) AS clip_area
-          |FROM part ORDER BY uri""".stripMargin,
-
-      // one conditional pixel aggregate; priority coalesce + provenance
-      "j3_mosaic_priority" ->
-        """WITH px AS (SELECT l_partkey % 40 AS px, l_suppkey % 10 AS py,
-          |    max(CASE WHEN l_linenumber = 1 THEN l_quantity END) AS b1,
-          |    max(CASE WHEN l_discount > 0.05 THEN l_quantity END) AS b2,
-          |    max(l_quantity) AS b3
-          |  FROM lineitem GROUP BY 1, 2)
-          |SELECT px, py,
-          |  CAST(floor(coalesce(b1, b2, b3)) AS BIGINT) AS value,
-          |  CAST(CASE WHEN b1 IS NOT NULL THEN 1
-          |    WHEN b2 IS NOT NULL THEN 2 ELSE 3 END AS BIGINT) AS src_priority
-          |FROM px ORDER BY px, py""".stripMargin,
-
-      // five unrolled greedy MMR rounds over micro-quantized cosines;
-      // argmax 7·cq − 3·ms with ties to the smallest id
-      "e24_mmr" -> {
-        val rounds = (2 to 5).map { k =>
-          s"""c$k AS (SELECT p.query_id, p.id, p.cq, max(ps.s) AS ms
-             |  FROM pool p
-             |  JOIN ps ON ps.query_id = p.query_id AND ps.a = p.id
-             |  JOIN sel${k - 1} sl ON sl.query_id = ps.query_id AND sl.id = ps.b
-             |  WHERE NOT EXISTS (SELECT 1 FROM sel${k - 1} x
-             |    WHERE x.query_id = p.query_id AND x.id = p.id)
-             |  GROUP BY 1, 2, 3),
-             |p$k AS (SELECT query_id, id FROM (
-             |    SELECT query_id, id, row_number() OVER (PARTITION BY query_id
-             |      ORDER BY cq * 7 - ms * 3 DESC, id) AS rn FROM c$k) WHERE rn = 1),
-             |sel$k AS (SELECT * FROM sel${k - 1}
-             |  UNION ALL SELECT query_id, id, $k FROM p$k)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-           |sc AS (SELECT query_id, e.vec_id AS id,
-           |    list_dot_product(qv, v) /
-           |      (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))) AS rawcos
-           |  FROM q, e WHERE e.vec_id != query_id),
-           |pool AS (SELECT query_id, id,
-           |    CAST(floor(rawcos * 1e6 + 0.5) AS BIGINT) AS cq FROM (
-           |    SELECT query_id, id, rawcos, row_number() OVER (PARTITION BY query_id
-           |      ORDER BY rawcos DESC, id) AS pr FROM sc) WHERE pr <= 10),
-           |ps AS (SELECT p1.query_id, p1.id AS a, p2.id AS b,
-           |    CAST(floor(list_dot_product(ea.v, eb.v) /
-           |      (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v)))
-           |      * 1e6 + 0.5) AS BIGINT) AS s
-           |  FROM pool p1 JOIN pool p2 ON p1.query_id = p2.query_id AND p1.id != p2.id
-           |    JOIN e ea ON ea.vec_id = p1.id JOIN e eb ON eb.vec_id = p2.id),
-           |sel1 AS (SELECT query_id, id, 1 AS rank FROM (
-           |    SELECT query_id, id, row_number() OVER (PARTITION BY query_id
-           |      ORDER BY cq DESC, id) AS rn FROM pool) WHERE rn = 1),
-           |$rounds
-           |SELECT query_id, CAST(rank AS INT) AS rank, id FROM sel5
-           |ORDER BY query_id, rank""".stripMargin
-      },
-
-      // Hamming shortlist (top-20, ties to smallest id) → exact cosine
-      // rerank of the shortlist only — the two-stage pipeline replays
-      "e22_rerank" -> {
-        def halfSql(lo: Int): String = (0 until 32).map { j =>
-          s"CASE WHEN v[${lo + j + 1}] >= 0 THEN ${1L << j} ELSE 0 END"
-        }.mkString(" + ")
-        s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |c AS (SELECT vec_id, CAST(${halfSql(0)} AS BIGINT) AS c0,
-           |    CAST(${halfSql(32)} AS BIGINT) AS c1 FROM e),
-           |q AS (SELECT vec_id AS query_id, c0 AS q0, c1 AS q1 FROM c
-           |  WHERE vec_id < 5),
-           |s2 AS (SELECT query_id, c.vec_id AS neighbor_id,
-           |    bit_count(xor(q0, c.c0)) + bit_count(xor(q1, c.c1)) AS ham
-           |  FROM q, c WHERE query_id != c.vec_id),
-           |shortlist AS (SELECT query_id, neighbor_id FROM (
-           |    SELECT query_id, neighbor_id, row_number() OVER (
-           |      PARTITION BY query_id ORDER BY ham ASC, neighbor_id ASC) AS srank
-           |    FROM s2) WHERE srank <= 20),
-           |rer AS (SELECT sl.query_id, sl.neighbor_id,
-           |    list_dot_product(qe.v, ce.v) /
-           |      (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) AS rawcos
-           |  FROM shortlist sl
-           |    JOIN e qe ON qe.vec_id = sl.query_id
-           |    JOIN e ce ON ce.vec_id = sl.neighbor_id)
-           |SELECT query_id, neighbor_id, round(rawcos, 4) AS cosine,
-           |  CAST(rank AS INT) AS rank FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY query_id
-           |    ORDER BY rawcos DESC, neighbor_id ASC) AS rank FROM rer)
-           |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-      },
-
-      // U-shaped credits: 40/20/40 in exact integer micros, one
-      // rank/count window pair per conversion
-      "x28_position_attr" ->
-        """WITH conv AS (SELECT user_id, ts AS cts, event_id AS cid
-          |  FROM events WHERE event_type = 'purchase'),
-          |touch AS (SELECT user_id, ts, event_id, event_type
-          |  FROM events WHERE event_type IN ('view', 'click')),
-          |j AS (SELECT t.event_type, t.ts, t.event_id, c.user_id, c.cid
-          |  FROM touch t JOIN conv c ON t.user_id = c.user_id
-          |  WHERE t.ts < c.cts AND t.ts >= c.cts - INTERVAL 7 DAY),
-          |r AS (SELECT event_type,
-          |    row_number() OVER (PARTITION BY user_id, cid ORDER BY ts, event_id) AS rn,
-          |    count(*) OVER (PARTITION BY user_id, cid) AS n
-          |  FROM j)
-          |SELECT event_type, count(*) AS n_touches,
-          |  CAST(sum(CASE WHEN n = 1 THEN 1000000 WHEN n = 2 THEN 500000
-          |    WHEN rn = 1 OR rn = n THEN 400000
-          |    ELSE 200000 // (n - 2) END) AS BIGINT) AS credit_micro
-          |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      // each constraint is one conditional aggregate; referential checks
-      // via LEFT JOIN + null flag, uniqueness via count − count(distinct)
-      "x29_dq_audit" ->
-        """SELECT * FROM (
-          |SELECT 'lineitem.orphan_orderkey' AS check_name,
-          |  CAST(sum(CASE WHEN o.o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_violations,
-          |  count(*) AS n_checked
-          |FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o
-          |  ON l.l_orderkey = o.o_orderkey
-          |UNION ALL
-          |SELECT 'orders.orphan_custkey',
-          |  CAST(sum(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-          |  count(*)
-          |FROM orders od LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c
-          |  ON od.o_custkey = c.c_custkey
-          |UNION ALL
-          |SELECT 'lineitem.dup_pk',
-          |  CAST(count(*) - count(DISTINCT (l_orderkey, l_linenumber)) AS BIGINT),
-          |  count(*) FROM lineitem
-          |UNION ALL
-          |SELECT 'lineitem.null_quantity',
-          |  CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-          |  count(*) FROM lineitem
-          |UNION ALL
-          |SELECT 'lineitem.bad_discount',
-          |  CAST(sum(CASE WHEN l_discount < 0 OR l_discount > 1 THEN 1 ELSE 0 END) AS BIGINT),
-          |  count(*) FROM lineitem
-          |UNION ALL
-          |SELECT 'part.negative_price',
-          |  CAST(sum(CASE WHEN p_retailprice <= 0 THEN 1 ELSE 0 END) AS BIGINT),
-          |  count(*) FROM part
-          |UNION ALL
-          |SELECT 'orders.date_after_1997',
-          |  CAST(sum(CASE WHEN o_orderdate >= TIMESTAMP '1998-01-01' THEN 1 ELSE 0 END) AS BIGINT),
-          |  count(*) FROM orders
-          |) ORDER BY check_name""".stripMargin,
-
-      // exact-integer kappa over the common denominator; sign-safe //
-      "x30_cohens_kappa" ->
-        s"""WITH pred AS (SELECT doc_id, lang_pred FROM ($t2LangSql)),
-           |rated AS (SELECT d.lang AS gold, p.lang_pred AS pred
-           |  FROM documents d JOIN pred p USING (doc_id)),
-           |n1 AS (SELECT gold AS k, count(*) AS c1 FROM rated GROUP BY 1),
-           |n2 AS (SELECT pred AS k, count(*) AS c2 FROM rated GROUP BY 1),
-           |pe AS (SELECT CAST(coalesce(sum(c1 * c2), 0) AS BIGINT) AS pe_num
-           |  FROM n1 JOIN n2 USING (k)),
-           |a AS (SELECT count(*) AS n,
-           |  CAST(sum(CASE WHEN gold = pred THEN 1 ELSE 0 END) AS BIGINT) AS n_agree
-           |  FROM rated)
-           |SELECT n, n_agree,
-           |  CAST(CASE WHEN n * n - pe_num = 0 THEN 1000000
-           |    WHEN n * n_agree - pe_num >= 0
-           |      THEN (n * n_agree - pe_num) * 1000000 // (n * n - pe_num)
-           |    ELSE -((pe_num - n * n_agree) * 1000000 // (n * n - pe_num))
-           |  END AS BIGINT) AS kappa_micro
-           |FROM a, pe""".stripMargin,
-
-      // DuckDB's native ASOF JOIN vs the Spark side's union-scan — two
-      // algorithms, one point-in-time result; pre-version facts → 'NONE'
-      "x31_scd2_lookup" ->
-        s"""WITH dim AS (SELECT custkey, status, valid_from FROM ($x15Scd2Sql)),
-           |facts AS (SELECT o.o_custkey AS custkey, l.l_shipdate
-           |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-           |pit AS (SELECT coalesce(d.status, 'NONE') AS status_at_ship
-           |  FROM facts f ASOF LEFT JOIN dim d
-           |    ON f.custkey = d.custkey AND d.valid_from <= f.l_shipdate)
-           |SELECT status_at_ship, count(*) AS n FROM pit
-           |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      // portable 32-bit token hash mod 64 slots; counts fold collisions
-      "t32_feature_hash" ->
-        s"""WITH tok AS (SELECT doc_id, unnest($tokExpr) AS tok FROM documents)
-           |SELECT doc_id, ${PortableHash.hash32Sql("tok")} % 64 AS idx,
-           |  count(*) AS cnt
-           |FROM tok GROUP BY 1, 2 ORDER BY doc_id, idx""".stripMargin,
-
-      // AllPairs/PPJoin prefix-filter replay: df-ordered prefixes of
-      // length sz − ⌈t·sz⌉ + 1, token-meet candidates, exact Jaccard ≥ t
-      // by integer cross-multiplication — the complete pair set
-      "d17_prefix_filter" ->
-        s"""WITH tok AS (SELECT doc_id, unnest(list_distinct($tokExpr)) AS tok FROM documents),
-           |sz AS (SELECT doc_id, count(*) AS sz FROM tok GROUP BY 1),
-           |dfq AS (SELECT tok, count(*) AS df FROM tok GROUP BY 1),
-           |pref AS (SELECT doc_id, tok FROM (
-           |    SELECT t.doc_id, t.tok, s.sz,
-           |      row_number() OVER (PARTITION BY t.doc_id ORDER BY d.df, t.tok) AS rn
-           |    FROM tok t JOIN dfq d USING (tok) JOIN sz s USING (doc_id))
-           |  WHERE rn <= sz - ((sz * 500000 + 999999) // 1000000) + 1),
-           |cand AS (SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-           |  FROM pref a JOIN pref b ON a.tok = b.tok AND a.doc_id < b.doc_id),
-           |candf AS (SELECT c.doc1, c.doc2, s1.sz AS sz1, s2.sz AS sz2 FROM cand c
-           |  JOIN sz s1 ON s1.doc_id = c.doc1 JOIN sz s2 ON s2.doc_id = c.doc2
-           |  WHERE least(s1.sz, s2.sz) * 1000000 >= greatest(s1.sz, s2.sz) * 500000),
-           |i AS (SELECT c.doc1, c.doc2, c.sz1, c.sz2, count(*) AS inter
-           |  FROM candf c JOIN tok t1 ON t1.doc_id = c.doc1
-           |    JOIN tok t2 ON t2.doc_id = c.doc2 AND t2.tok = t1.tok
-           |  GROUP BY 1, 2, 3, 4)
-           |SELECT doc1, doc2, CAST(inter AS BIGINT) AS inter,
-           |  round(inter * 1.0 / (sz1 + sz2 - inter), 4) AS jaccard
-           |FROM i WHERE inter * 1000000 >= (sz1 + sz2 - inter) * 500000
-           |ORDER BY doc1, doc2""".stripMargin,
-
-      // rank-aware ANN eval: micro-quantized ln-based discounts folded as
-      // exact integers; IDCG from n_hits alone via a correlated series
-      "e18_ndcg" ->
-        s"""WITH truth AS (SELECT query_id, neighbor_id FROM ($e1KnnSql)),
-           |appr AS (SELECT query_id, neighbor_id, rank FROM ($e2KnnSql)),
-           |scored AS (SELECT a.query_id,
-           |    CAST(sum(CASE WHEN t.neighbor_id IS NOT NULL
-           |      THEN CAST(floor(1e6 * ln(2) / ln(a.rank + 1) + 0.5) AS BIGINT)
-           |      ELSE 0 END) AS BIGINT) AS dcg_micro,
-           |    CAST(sum(CASE WHEN t.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-           |  FROM appr a LEFT JOIN truth t
-           |    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id
-           |  GROUP BY 1),
-           |f AS (SELECT q.query_id, coalesce(s.dcg_micro, 0) AS dcg_micro,
-           |    coalesce(s.n_hits, 0) AS n_hits
-           |  FROM (SELECT DISTINCT query_id FROM truth) q
-           |  LEFT JOIN scored s USING (query_id)),
-           |cum AS (SELECT a.i AS nh,
-           |    CAST(sum(CAST(floor(1e6 * ln(2) / ln(b.i + 1) + 0.5) AS BIGINT)) AS BIGINT) AS idcg
-           |  FROM generate_series(1, 5) a(i) JOIN generate_series(1, 5) b(i) ON b.i <= a.i
-           |  GROUP BY 1),
-           |w AS (SELECT query_id, dcg_micro, n_hits,
-           |    CASE WHEN n_hits = 0 THEN 0 ELSE cum.idcg END AS idcg_micro
-           |  FROM f LEFT JOIN cum ON cum.nh = f.n_hits)
-           |SELECT query_id, dcg_micro, n_hits, idcg_micro,
-           |  CAST(CASE WHEN idcg_micro = 0 THEN 0
-           |    ELSE dcg_micro * 1000000 // idcg_micro END AS BIGINT) AS ndcg_micro
-           |FROM w ORDER BY query_id""".stripMargin,
-
-      // per-class P/R/F1 from the one confusion census; f1 = 2tp/(g+p)
-      // exactly — every metric is a single integer division
-      "x32_macro_f1" ->
-        s"""WITH pred AS (SELECT doc_id, lang_pred FROM ($t2LangSql)),
-           |rated AS (SELECT d.lang AS gold, p.lang_pred AS pred
-           |  FROM documents d JOIN pred p USING (doc_id)),
-           |census AS (SELECT gold, pred, count(*) AS c FROM rated GROUP BY 1, 2),
-           |gt AS (SELECT gold AS k, CAST(sum(c) AS BIGINT) AS n_gold FROM census GROUP BY 1),
-           |pt AS (SELECT pred AS k, CAST(sum(c) AS BIGINT) AS n_pred FROM census GROUP BY 1),
-           |tp AS (SELECT gold AS k, CAST(c AS BIGINT) AS tp FROM census WHERE gold = pred),
-           |m AS (SELECT k, coalesce(n_gold, 0) AS n_gold, coalesce(n_pred, 0) AS n_pred,
-           |    coalesce(tp, 0) AS tp
-           |  FROM gt FULL JOIN pt USING (k) LEFT JOIN tp USING (k))
-           |SELECT k, n_gold, n_pred, tp,
-           |  CAST(CASE WHEN n_pred = 0 THEN 0 ELSE tp * 1000000 // n_pred END AS BIGINT) AS prec_micro,
-           |  CAST(CASE WHEN n_gold = 0 THEN 0 ELSE tp * 1000000 // n_gold END AS BIGINT) AS rec_micro,
-           |  CAST(CASE WHEN n_gold + n_pred = 0 THEN 0
-           |    ELSE 2 * tp * 1000000 // (n_gold + n_pred) END AS BIGINT) AS f1_micro
-           |FROM m ORDER BY k""".stripMargin,
-
-      // two exact lower-median passes; the median table broadcasts back
-      "x51_mad" ->
-        """WITH v AS (SELECT l_returnflag AS grp,
-          |    CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
-          |  FROM lineitem),
-          |r1 AS (SELECT grp, cents,
-          |    row_number() OVER (PARTITION BY grp ORDER BY cents) AS rn,
-          |    count(*) OVER (PARTITION BY grp) AS n FROM v),
-          |med AS (SELECT grp,
-          |    min(CASE WHEN rn * 2 >= n THEN cents END) AS median_cents
-          |  FROM r1 GROUP BY 1),
-          |dev AS (SELECT v.grp, abs(v.cents - m.median_cents) AS adev,
-          |    m.median_cents
-          |  FROM v JOIN med m USING (grp)),
-          |r2 AS (SELECT grp, adev, median_cents,
-          |    row_number() OVER (PARTITION BY grp ORDER BY adev) AS rn,
-          |    count(*) OVER (PARTITION BY grp) AS n FROM dev)
-          |SELECT grp, max(median_cents) AS median_cents,
-          |  min(CASE WHEN rn * 2 >= n THEN adev END) AS mad_cents
-          |FROM r2 GROUP BY 1 ORDER BY grp""".stripMargin,
-
-      // Tukey IQR fences on exact order-statistic quartiles (value at
-      // rank ⌈p·n⌉); fence compare in doubled integers — no half-cent
-      "x33_iqr_outliers" ->
-        """WITH v AS (SELECT l_returnflag AS grp,
-          |    CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents FROM lineitem),
-          |r AS (SELECT grp, cents,
-          |    row_number() OVER (PARTITION BY grp ORDER BY cents) AS rn,
-          |    count(*) OVER (PARTITION BY grp) AS n FROM v),
-          |quart AS (SELECT grp,
-          |    min(CASE WHEN rn * 4 >= n THEN cents END) AS q1,
-          |    min(CASE WHEN rn * 4 >= n * 3 THEN cents END) AS q3,
-          |    max(n) AS n
-          |  FROM r GROUP BY 1),
-          |o AS (SELECT v.grp, v.cents, q.q1, q.q3, q.n,
-          |    CASE WHEN v.cents * 2 < q.q1 * 2 - (q.q3 - q.q1) * 3
-          |           OR v.cents * 2 > q.q3 * 2 + (q.q3 - q.q1) * 3
-          |      THEN 1 ELSE 0 END AS outl
-          |  FROM v JOIN quart q USING (grp))
-          |SELECT grp, max(q1) AS q1, max(q3) AS q3, CAST(max(n) AS BIGINT) AS n,
-          |  CAST(sum(outl) AS BIGINT) AS n_outliers,
-          |  min(CASE WHEN outl = 1 THEN cents END) AS min_outlier_cents,
-          |  max(CASE WHEN outl = 1 THEN cents END) AS max_outlier_cents
-          |FROM o GROUP BY 1 ORDER BY grp""".stripMargin,
-
-      // aHash replay from the generating formula: nearest-floor resize to
-      // 8×8, mean threshold by integer cross-multiplication (64·v ≥ Σv),
-      // bits packed into two signed-safe 32-bit halves
-      "m6_ahash" -> m6AhashSql,
-
-      // d1's digest-group shape over the perceptual key; only dup groups
-      "m8_image_dup_groups" ->
-        s"""WITH ah AS ($m6AhashSql)
-           |SELECT hash_hi, hash_lo, min(asset_id) AS keep_id,
-           |  count(*) AS n_copies
-           |FROM ah GROUP BY 1, 2 HAVING count(*) > 1
-           |ORDER BY keep_id""".stripMargin,
-
-      // basin = the sink each flow path reaches: recursive walk over the
-      // functional D8 out-edges, joined to the fixed points
-      "r16_watershed" ->
-        s"""WITH RECURSIVE fdir AS ($r13FlowSql),
-           |edges AS (SELECT
-           |    py * 100 + px AS src,
-           |    CASE WHEN flow_dir > 0 THEN
-           |      (py + CASE WHEN flow_dir IN (2, 4, 8) THEN 1
-           |                 WHEN flow_dir IN (32, 64, 128) THEN -1 ELSE 0 END) * 100
-           |      + (px + CASE WHEN flow_dir IN (1, 2, 128) THEN 1
-           |                   WHEN flow_dir IN (8, 16, 32) THEN -1 ELSE 0 END)
-           |    ELSE py * 100 + px END AS dst
-           |  FROM fdir),
-           |cells AS (SELECT py * 100 + px AS id FROM fdir),
-           |succ AS (SELECT c.id, coalesce(e.dst, c.id) AS s
-           |  FROM cells c LEFT JOIN edges e ON e.src = c.id),
-           |walk(id, v) AS (
-           |  SELECT id, s FROM succ
-           |  UNION
-           |  SELECT w.id, s2.s FROM walk w JOIN succ s2 ON s2.id = w.v
-           |  WHERE w.v <> s2.s),
-           |term AS (SELECT id FROM succ WHERE s = id
-           |  UNION
-           |  SELECT DISTINCT dst FROM edges
-           |  WHERE dst NOT IN (SELECT id FROM cells))
-           |SELECT CAST(w.id % 100 AS BIGINT) AS px,
-           |  CAST(w.id // 100 AS BIGINT) AS py,
-           |  CAST(w.v AS BIGINT) AS basin
-           |FROM walk w JOIN term k ON k.id = w.v
-           |ORDER BY px, py""".stripMargin,
-
-      // projection coefficient on HUGEINT (dot·10⁶ exceeds 2⁶³), then
-      // per-dim sign-safe divide-back; residual norms exact
-      "e20_abtt" ->
-        s"""WITH pc AS ($e14PcaSql),
-           |q2 AS (SELECT vec_id,
-           |    list_transform(embedding::DOUBLE[],
-           |      x -> CAST(floor(x * 1e6 + 0.5) AS BIGINT)) AS v FROM embeddings),
-           |c2 AS (SELECT vec_id, generate_subscripts(v, 1) - 1 AS dim,
-           |    unnest(v) AS val FROM q2),
-           |xx AS (SELECT CAST(sum(eig_micro * eig_micro) AS HUGEINT) AS xx FROM pc),
-           |dots AS (SELECT c2.vec_id,
-           |    CAST(sum(c2.val * pc.eig_micro) AS HUGEINT) AS dot
-           |  FROM c2 JOIN pc ON pc.dim = c2.dim GROUP BY 1),
-           |coefs AS (SELECT vec_id,
-           |    CAST(CASE WHEN xx = 0 THEN 0
-           |      WHEN dot < 0 THEN -(((-dot) * 1000000) // xx)
-           |      ELSE (dot * 1000000) // xx END AS BIGINT) AS c_micro
-           |  FROM dots, xx),
-           |res AS (SELECT c2.vec_id, co.c_micro,
-           |    c2.val - (CASE WHEN co.c_micro * pc.eig_micro < 0
-           |      THEN -((-(co.c_micro * pc.eig_micro)) // 1000000)
-           |      ELSE (co.c_micro * pc.eig_micro) // 1000000 END) AS r
-           |  FROM c2 JOIN pc ON pc.dim = c2.dim JOIN coefs co USING (vec_id))
-           |SELECT vec_id, max(c_micro) AS c_micro,
-           |  CAST(sum(r * r) AS BIGINT) AS resid_norm2
-           |FROM res GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
-      // bounded-depth multi-source BFS: recursive relaxation capped at 4
-      // hops, min-dist fold, closeness per seed
-      "g14_closeness" ->
-        """WITH RECURSIVE n AS (SELECT count(*) AS n FROM documents),
-          |e0 AS (SELECT doc_id AS src, unnest([(doc_id * 31 + 7) % n.n,
-          |    (doc_id * 17 + 3) % n.n]) AS dst FROM documents, n),
-          |arcs AS (SELECT DISTINCT src, dst FROM (
-          |    SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0)
-          |  WHERE src <> dst),
-          |walk(seed, id, dist) AS (
-          |  SELECT doc_id, doc_id, 0 FROM documents WHERE doc_id < 5
-          |  UNION
-          |  SELECT w.seed, a.dst, w.dist + 1 FROM walk w
-          |    JOIN arcs a ON a.src = w.id WHERE w.dist < 4),
-          |md AS (SELECT seed, id, min(dist) AS dist FROM walk GROUP BY 1, 2)
-          |SELECT seed, count(*) AS n_reached,
-          |  CAST(sum(dist) AS BIGINT) AS dist_sum,
-          |  CAST(CASE WHEN sum(dist) = 0 THEN 0
-          |    ELSE (count(*) - 1) * 1000000 // sum(dist) END AS BIGINT) AS closeness_micro
-          |FROM md GROUP BY seed ORDER BY seed""".stripMargin,
-
-      // asymmetric containment on the LSH candidates; inter ≥ 1 pairs
-      // only on both sides (zero-overlap pairs fail the 0.8 bar anyway)
-      "d19_containment" ->
-        s"""WITH $candCtes,
-           |sz AS (SELECT doc_id, count(*) AS s FROM tok GROUP BY doc_id),
-           |i AS (SELECT cand.doc1, cand.doc2, count(*) AS inter
-           |  FROM cand JOIN tok a ON a.doc_id = cand.doc1
-           |    JOIN tok b3 ON b3.doc_id = cand.doc2 AND b3.tok = a.tok
-           |  GROUP BY 1, 2),
-           |c AS (SELECT i.doc1, i.doc2, CAST(i.inter AS BIGINT) AS inter,
-           |    CAST(i.inter * 1000000 // s1.s AS BIGINT) AS cont1_micro,
-           |    CAST(i.inter * 1000000 // s2.s AS BIGINT) AS cont2_micro
-           |  FROM i JOIN sz s1 ON s1.doc_id = i.doc1
-           |    JOIN sz s2 ON s2.doc_id = i.doc2)
-           |SELECT * FROM c
-           |WHERE cont1_micro >= 800000 OR cont2_micro >= 800000
-           |ORDER BY doc1, doc2""".stripMargin,
-
-      // two argmin folds + exact rank-⌈p·n⌉ order statistics
-      "x38_conversion_latency" ->
-        """WITH fv AS (SELECT user_id, min(ts) AS vts FROM events
-          |  WHERE event_type = 'view' GROUP BY 1),
-          |lat AS (SELECT f.user_id,
-          |    CAST((epoch_us(min(p.ts)) - epoch_us(max(f.vts))) // 1000000
-          |      AS BIGINT) AS lat_sec
-          |  FROM fv f JOIN events p ON p.user_id = f.user_id
-          |    AND p.event_type = 'purchase' AND p.ts >= f.vts
-          |  GROUP BY 1),
-          |r AS (SELECT lat_sec,
-          |    row_number() OVER (ORDER BY lat_sec, user_id) AS rn,
-          |    count(*) OVER () AS n FROM lat)
-          |SELECT count(*) AS n_conversions,
-          |  min(CASE WHEN rn * 2 >= n THEN lat_sec END) AS p50_sec,
-          |  min(CASE WHEN rn * 10 >= n * 9 THEN lat_sec END) AS p90_sec,
-          |  min(lat_sec) AS min_sec, max(lat_sec) AS max_sec
-          |FROM r""".stripMargin,
-
-      // presence explode to 7 target days, per-day count distinct; only
-      // days that occur in the stream report
-      "x39_rolling_wau" ->
-        """WITH pres AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id
-          |  FROM events),
-          |dau AS (SELECT day, count(*) AS dau FROM pres GROUP BY 1),
-          |wau AS (SELECT p.day + CAST(o.o AS INT) AS day,
-          |    CAST(count(DISTINCT p.user_id) AS BIGINT) AS wau
-          |  FROM pres p CROSS JOIN range(0, 7) o(o) GROUP BY 1)
-          |SELECT d.day, CAST(d.dau AS BIGINT) AS dau, w.wau,
-          |  CAST(d.dau * 1000000 // w.wau AS BIGINT) AS stickiness_micro
-          |FROM dau d JOIN wau w USING (day) ORDER BY day""".stripMargin,
-
-      // e7's fixed-centroid assignment fold; k-row balance report
-      "e21_ivf_balance" ->
-        """WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          |cent AS (SELECT CAST(vec_id // 37 AS INT) AS cid, v AS c FROM emb
-          |         WHERE vec_id % 37 = 0 AND vec_id < 260),
-          |dist AS (SELECT e.vec_id, cent.cid,
-          |    list_sum(list_transform(list_zip(e.v, cent.c),
-          |      p -> (p[1] - p[2]) * (p[1] - p[2]))) AS d2
-          |  FROM emb e CROSS JOIN cent),
-          |assigned AS (SELECT vec_id, cid FROM (
-          |    SELECT vec_id, cid,
-          |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-          |    FROM dist) WHERE rn = 1),
-          |lists AS (SELECT cid, count(*) AS n_vecs FROM assigned GROUP BY 1),
-          |tot AS (SELECT CAST(sum(n_vecs) AS BIGINT) AS n, count(*) AS k,
-          |    CAST(max(n_vecs) AS BIGINT) AS mx FROM lists)
-          |SELECT l.cid, CAST(l.n_vecs AS BIGINT) AS n_vecs,
-          |  CAST(l.n_vecs * t.k * 1000000 // t.n AS BIGINT) AS load_micro,
-          |  CAST(t.mx * t.k * 1000000 // t.n AS BIGINT) AS imbalance_micro
-          |FROM lists l, tot t ORDER BY cid""".stripMargin,
-
-      // per-group registers max-merge ≡ the global register table
-      "x40_hll_merge" ->
-        """WITH hh AS (SELECT l_returnflag AS grp,
-          |    CAST(('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 8))
-          |      AS BIGINT) AS h FROM lineitem),
-          |r AS (SELECT grp, h % 64 AS bucket, h // 64 AS sfx FROM hh),
-          |k AS (SELECT grp, bucket,
-          |    CASE WHEN sfx = 0 THEN 27 ELSE 27 - length(bin(sfx)) END AS rank FROM r),
-          |per AS (SELECT grp, bucket, max(rank) AS register FROM k GROUP BY 1, 2),
-          |merged AS (SELECT bucket, max(register) AS merged_register
-          |  FROM per GROUP BY 1),
-          |whole AS (SELECT bucket, max(rank) AS register FROM k GROUP BY 1)
-          |SELECT t.bucket,
-          |  CAST(coalesce(whole.register, 0) AS INT) AS global_register,
-          |  CAST(coalesce(merged.merged_register, 0) AS INT) AS merged_register
-          |FROM (SELECT unnest(range(0, 64)) AS bucket) t
-          |LEFT JOIN whole USING (bucket) LEFT JOIN merged USING (bucket)
-          |ORDER BY bucket""".stripMargin,
-
-      // lag compare per user; census of kept vs raw
-      "x41_debounce" ->
-        """WITH l AS (SELECT user_id, event_type,
-          |    lag(event_type) OVER (PARTITION BY user_id
-          |      ORDER BY ts, event_id) AS prev
-          |  FROM events)
-          |SELECT user_id, count(*) AS n_events,
-          |  CAST(sum(CASE WHEN prev IS NULL OR prev <> event_type
-          |    THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-          |FROM l GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-      // H = ln N − (Σ c·ln c)/N; per-term micro-nat logs before the fold
-      "t35_token_entropy" ->
-        s"""WITH cnt AS (SELECT source, tok, count(*) AS c FROM (
-           |    SELECT source, unnest($tokExpr) AS tok FROM documents)
-           |  GROUP BY 1, 2),
-           |f AS (SELECT source, CAST(sum(c) AS BIGINT) AS n,
-           |    count(*) AS vocab,
-           |    CAST(sum(c * CAST(floor(ln(c) * 1e6 + 0.5) AS BIGINT)) AS BIGINT) AS s
-           |  FROM cnt GROUP BY 1)
-           |SELECT source, n, vocab,
-           |  CAST(CAST(floor(ln(n) * 1e6 + 0.5) AS BIGINT) - s // n AS BIGINT)
-           |    AS entropy_micro
-           |FROM f ORDER BY source""".stripMargin,
-
-      // two unrolled message-passing hops: dst-keyed component join +
-      // (src, dim) truncated mean, sign-safe magnitude division both engines
-      "g13_neigh_agg" ->
-        """WITH q AS (SELECT vec_id AS id,
-          |    list_transform(embedding::DOUBLE[],
-          |      x -> CAST(floor(x * 1e6 + 0.5) AS BIGINT))[1:8] AS f FROM embeddings),
-          |n AS (SELECT count(*) AS n FROM q),
-          |e AS (SELECT id AS src, unnest([(id * 31 + 7) % n.n, (id * 17 + 3) % n.n]) AS dst
-          |  FROM q, n),
-          |c0 AS (SELECT id, generate_subscripts(f, 1) - 1 AS dim, unnest(f) AS val FROM q),
-          |h1 AS (SELECT e.src AS id, c.dim,
-          |    CASE WHEN sum(c.val) < 0 THEN -((-sum(c.val)) // count(*))
-          |         ELSE sum(c.val) // count(*) END AS val
-          |  FROM e JOIN c0 c ON c.id = e.dst GROUP BY 1, 2),
-          |h2 AS (SELECT e.src AS id, c.dim,
-          |    CASE WHEN sum(c.val) < 0 THEN -((-sum(c.val)) // count(*))
-          |         ELSE sum(c.val) // count(*) END AS val
-          |  FROM e JOIN h1 c ON c.id = e.dst GROUP BY 1, 2)
-          |SELECT id, dim, CAST(val AS BIGINT) AS val FROM h2
-          |ORDER BY id, dim""".stripMargin,
-
-      // purity over the shared e12 assignment SQL; majority ties to the
-      // smallest label, purity one integer division
-      "e19_cluster_purity" ->
-        s"""WITH a AS (SELECT vec_id, cid FROM ($e12KmeansSql)),
-           |lab AS (SELECT a.cid, e.label FROM a JOIN embeddings e USING (vec_id)),
-           |census AS (SELECT cid, label, count(*) AS c FROM lab GROUP BY 1, 2),
-           |top AS (SELECT cid, label AS top_label, CAST(c AS BIGINT) AS top_cnt FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY cid ORDER BY c DESC, label ASC) AS rn
-           |    FROM census) WHERE rn = 1),
-           |sz AS (SELECT cid, CAST(sum(c) AS BIGINT) AS n FROM census GROUP BY 1)
-           |SELECT s.cid, s.n, t.top_label, t.top_cnt,
-           |  CAST(t.top_cnt * 1000000 // s.n AS BIGINT) AS purity_micro
-           |FROM sz s JOIN top t USING (cid) ORDER BY s.cid""".stripMargin,
-
-      // 2×2 chi-square in exact integers; N·det² and the marginal product
-      // lift to HUGEINT (DECIMAL(38) on the Spark side), split division
-      // keeps the 10⁶ factor off the big product
-      "x34_chi_square" -> {
-        val vh = PortableHash.hash32Sql("CAST(user_id AS VARCHAR)")
-        s"""WITH u AS (SELECT user_id,
-           |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-           |  FROM events GROUP BY 1),
-           |v AS (SELECT $vh % 2 AS variant, conv FROM u),
-           |t AS (SELECT
-           |    CAST(sum(CASE WHEN variant = 0 AND conv = 1 THEN 1 ELSE 0 END) AS BIGINT) AS conv_a,
-           |    CAST(sum(CASE WHEN variant = 0 AND conv = 0 THEN 1 ELSE 0 END) AS BIGINT) AS nonconv_a,
-           |    CAST(sum(CASE WHEN variant = 1 AND conv = 1 THEN 1 ELSE 0 END) AS BIGINT) AS conv_b,
-           |    CAST(sum(CASE WHEN variant = 1 AND conv = 0 THEN 1 ELSE 0 END) AS BIGINT) AS nonconv_b
-           |  FROM v),
-           |x AS (SELECT *, conv_a + nonconv_a + conv_b + nonconv_b AS n_users,
-           |    conv_a * nonconv_b - nonconv_a * conv_b AS det FROM t),
-           |y AS (SELECT *, CAST(n_users AS HUGEINT) * det * det AS num,
-           |    CAST(conv_a + nonconv_a AS HUGEINT) * (conv_b + nonconv_b)
-           |      * (conv_a + conv_b) * (nonconv_a + nonconv_b) AS den FROM x)
-           |SELECT n_users, conv_a, nonconv_a, conv_b, nonconv_b,
-           |  CAST(CASE WHEN den = 0 THEN 0
-           |    ELSE (num // den) * 1000000 + (num % den) * 1000000 // den
-           |  END AS BIGINT) AS chi2_micro
-           |FROM y""".stripMargin
-      },
-
-      // one-pass dual classification + |classes|²-row cross-tab; the
-      // share divides once per matrix cell against the 1-row total
-      "a14_change_matrix" ->
-        """WITH px AS (SELECT l_partkey % 200 AS px, l_suppkey % 50 AS py,
-          |    CAST(coalesce(floor(max(CASE WHEN l_shipdate < TIMESTAMP '1997-06-01'
-          |      THEN l_quantity END) / 10), -1) AS BIGINT) AS c_from,
-          |    CAST(coalesce(floor(max(CASE WHEN l_shipdate >= TIMESTAMP '1997-06-01'
-          |      THEN l_quantity END) / 10), -1) AS BIGINT) AS c_to
-          |  FROM lineitem GROUP BY 1, 2),
-          |t AS (SELECT count(*) AS t FROM px)
-          |SELECT c_from, c_to, count(*) AS n_px,
-          |  CAST(count(*) * 1000000 // t.t AS BIGINT) AS share_micro
-          |FROM px, t GROUP BY c_from, c_to, t.t
-          |ORDER BY c_from, c_to""".stripMargin,
-
-      // full-outer CRUD apply: D filters the joined relation, I/U take
-      // the change row entirely, absent keys keep the target row
-      "x35_cdc_apply" ->
-        """WITH t AS (SELECT doc_id, source AS t_source, n_chars AS t_n,
-          |    true AS t_p FROM documents),
-          |ch AS (
-          |  SELECT doc_id, source AS c_source, n_chars AS c_n, 'D' AS op,
-          |      true AS c_p FROM documents WHERE doc_id % 10 = 0
-          |  UNION ALL
-          |  SELECT doc_id, source, n_chars + 11, 'U', true
-          |    FROM documents WHERE doc_id % 10 = 1
-          |  UNION ALL
-          |  SELECT doc_id + 1000000, source, n_chars, 'I', true
-          |    FROM documents WHERE doc_id % 17 = 0),
-          |j AS (SELECT * FROM t FULL JOIN ch USING (doc_id))
-          |SELECT doc_id,
-          |  CASE WHEN c_p THEN c_source ELSE t_source END AS source,
-          |  CASE WHEN c_p THEN c_n ELSE t_n END AS n_chars,
-          |  CASE WHEN t_p IS NULL THEN 'inserted'
-          |       WHEN c_p IS NULL THEN 'kept' ELSE 'updated' END AS action
-          |FROM j WHERE coalesce(op, '') <> 'D'
-          |ORDER BY doc_id""".stripMargin,
-
-      // recall of the LSH pipeline against the complete brute-force
-      // pair set; identical integer thresholds ⇒ found ⊆ true
-      "d18_lsh_recall" ->
-        s"""WITH $candCtes,
-           |sz AS (SELECT doc_id, count(*) AS s FROM tok GROUP BY doc_id),
-           |lshp AS (SELECT j.doc1, j.doc2
-           |  FROM (SELECT cand.doc1, cand.doc2, count(*) AS inter
-           |      FROM cand JOIN tok a ON a.doc_id = cand.doc1
-           |        JOIN tok b3 ON b3.doc_id = cand.doc2 AND b3.tok = a.tok
-           |      GROUP BY 1, 2) j
-           |  JOIN sz s1 ON s1.doc_id = j.doc1 JOIN sz s2 ON s2.doc_id = j.doc2
-           |  WHERE j.inter * 1000000 >= (s1.s + s2.s - j.inter) * 500000),
-           |truth AS (SELECT p.doc1, p.doc2
-           |  FROM (SELECT t1.doc_id AS doc1, t2.doc_id AS doc2, count(*) AS inter
-           |      FROM tok t1 JOIN tok t2 ON t1.tok = t2.tok AND t1.doc_id < t2.doc_id
-           |      GROUP BY 1, 2) p
-           |  JOIN sz s1 ON s1.doc_id = p.doc1 JOIN sz s2 ON s2.doc_id = p.doc2
-           |  WHERE p.inter * 1000000 >= (s1.s + s2.s - p.inter) * 500000)
-           |SELECT CAST(count(*) AS BIGINT) AS n_true,
-           |  CAST(coalesce(sum(CASE WHEN l.doc1 IS NOT NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_found,
-           |  CAST(CASE WHEN count(*) = 0 THEN 1000000
-           |    ELSE coalesce(sum(CASE WHEN l.doc1 IS NOT NULL THEN 1 ELSE 0 END), 0)
-           |      * 1000000 // count(*) END AS BIGINT) AS recall_micro
-           |FROM truth t LEFT JOIN lshp l ON l.doc1 = t.doc1 AND l.doc2 = t.doc2""".stripMargin,
-
-      // m3's formula-replayed frame energies + the identical island window
-      "m7_vad_segments" ->
-        """WITH a AS (SELECT doc_id AS id, 5 + doc_id % 5 AS n_frames
-          |           FROM documents WHERE doc_id % 20 = 0),
-          |f AS (SELECT id, unnest(range(0, n_frames)) AS frame FROM a),
-          |s AS (SELECT id, frame, unnest(range(0, 160)) AS j FROM f),
-          |v AS (SELECT id, frame,
-          |        (id*31 + (frame*160 + j)*17) % 4096 - 2048 AS val FROM s),
-          |e AS (SELECT id, frame, sum(val*val) AS sum_sq FROM v GROUP BY 1, 2),
-          |voiced AS (SELECT id, frame, sum_sq,
-          |    frame - row_number() OVER (PARTITION BY id ORDER BY frame) AS island
-          |  FROM e WHERE sum_sq >= 170000000)
-          |SELECT id AS asset_id, CAST(min(frame) AS INT) AS start_frame,
-          |  CAST(max(frame) AS INT) AS end_frame,
-          |  count(*) AS n_frames, CAST(sum(sum_sq) AS BIGINT) AS energy
-          |FROM voiced GROUP BY id, island ORDER BY asset_id, start_frame""".stripMargin,
-
-      // micro-nat logs before the normal-equation folds; HUGEINT lift for
-      // the slope division, sign-safe magnitude form
-      "t33_zipf_slope" ->
-        s"""WITH freq AS (SELECT tok, count(*) AS cnt
-           |  FROM (SELECT unnest($tokExpr) AS tok FROM documents) GROUP BY 1
-           |  ORDER BY cnt DESC, tok ASC LIMIT 100),
-           |pts AS (SELECT CAST(floor(ln(r) * 1e6 + 0.5) AS BIGINT) AS x,
-           |    CAST(floor(ln(cnt) * 1e6 + 0.5) AS BIGINT) AS y
-           |  FROM (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, tok ASC) AS r
-           |        FROM freq)),
-           |a AS (SELECT count(*) AS n_terms, sum(x) AS sx, sum(y) AS sy,
-           |    sum(x * y) AS sxy, sum(x * x) AS sxx FROM pts),
-           |b AS (SELECT n_terms,
-           |    (CAST(sxy AS HUGEINT) * n_terms - CAST(sx AS HUGEINT) * sy) * 1000000 AS num,
-           |    CAST(sxx AS HUGEINT) * n_terms - CAST(sx AS HUGEINT) * sx AS den FROM a)
-           |SELECT n_terms, CAST(CASE WHEN den = 0 THEN 0
-           |  WHEN num < 0 THEN -((-num) // den) ELSE num // den END AS BIGINT) AS slope_micro
-           |FROM b""".stripMargin,
-
-      // ascending-rank Gini; the oracle's single window replays the
-      // Spark side's bucket-offset two-pass rank exactly
-      "x36_gini" ->
-        """WITH rev AS (SELECT o_custkey,
-          |    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
-          |  FROM orders GROUP BY 1),
-          |r AS (SELECT cents, row_number() OVER (ORDER BY cents, o_custkey) AS i FROM rev),
-          |a AS (SELECT count(*) AS n, CAST(sum(cents) AS BIGINT) AS total_cents,
-          |    CAST(sum(i * cents) AS HUGEINT) AS s2 FROM r)
-          |SELECT n, total_cents,
-          |  CAST(CASE WHEN n * total_cents = 0 THEN 0
-          |    ELSE ((2 * s2 - (CAST(n AS HUGEINT) + 1) * total_cents) * 1000000)
-          |      // (CAST(n AS HUGEINT) * total_cents) END AS BIGINT) AS gini_micro
-          |FROM a""".stripMargin,
-
-      // add-one-smoothed target/corpus unigram models over the shared
-      // vocabulary; per-token log-ratio micro-quantized before the sum
-      "t34_importance_weights" ->
-        s"""WITH tok AS (SELECT doc_id, source = 'src0' AS tgt,
-           |    unnest($tokExpr) AS tok FROM documents),
-           |freq AS (SELECT tok, sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS ct,
-           |    count(*) AS call FROM tok GROUP BY 1),
-           |tot AS (SELECT sum(ct) AS nt, sum(call) AS nc, count(*) AS v FROM freq),
-           |m AS (SELECT doc_id,
-           |    CAST(floor((ln((ct + 1) * 1.0 / (nt + v))
-           |      - ln((call + 1) * 1.0 / (nc + v))) * 1e6 + 0.5) AS BIGINT) AS micro
-           |  FROM tok JOIN freq USING (tok) CROSS JOIN tot)
-           |SELECT doc_id, count(*) AS n_tokens,
-           |  CAST(sum(micro) AS BIGINT) AS logweight_micro
-           |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      // one arg_max per user; (ts, event_id) tiebreak matches the
-      // struct-max exactly
-      "st6_latest_event" ->
-        """SELECT user_id, ts, event_id, event_type FROM (
-          |  SELECT user_id, ts, event_id, event_type,
-          |    row_number() OVER (PARTITION BY user_id
-          |      ORDER BY ts DESC, event_id DESC) AS rn
-          |  FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-      // rank within each rollup level over the |groups|-sized aggregate;
-      // nullness-derived levels, 'ALL' sentinels (x3 discipline)
-      "x37_rollup_topk" ->
-        """WITH agg AS (SELECT CAST(year(l_shipdate) AS BIGINT) AS shipyear0, l_returnflag,
-          |    CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS rev_cents
-          |  FROM lineitem GROUP BY ROLLUP (shipyear0, l_returnflag)),
-          |lv AS (SELECT CASE WHEN shipyear0 IS NULL AND l_returnflag IS NULL THEN 2
-          |      WHEN l_returnflag IS NULL THEN 1 ELSE 0 END AS lvl,
-          |    coalesce(shipyear0, -1) AS shipyear,
-          |    coalesce(l_returnflag, 'ALL') AS returnflag, rev_cents FROM agg)
-          |SELECT lvl, shipyear, returnflag, rev_cents,
-          |  CAST(rank AS INT) AS rank FROM (
-          |  SELECT *, row_number() OVER (PARTITION BY lvl
-          |    ORDER BY rev_cents DESC, shipyear, returnflag) AS rank FROM lv)
-          |WHERE rank <= 3 ORDER BY lvl, rank""".stripMargin)
   }
 }

@@ -8,6 +8,7 @@ object Verify {
     // optional trailing query names: dump only those (local iteration);
     // the driver always invokes with exactly (sfDir, outDir) = everything
     val only = args.drop(2).toSet
+    SparkEntry.exitOnUnknown("verify", only)
     val spark = graft.core.GraftSession.local("verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -76,22 +76,16 @@ final case class LayerSpec(
     }
   }
   order.foreach(o => require(o == "asc" || o == "desc", s"Unknown order: $o"))
-  resampling match {
-    case "nearest" | "bilinear" | "cubic" | "cubic_spline" | "lanczos" | "gauss" |
-         "average" | "mode" | "max" | "min" | "med" | "q1" | "q3" | "sum" | "rms" => ()
-    case other => throw new IllegalArgumentException(s"Unknown resampling method: $other")
-  }
+  if (!LayerSpec.resamplings(resampling))
+    throw new IllegalArgumentException(s"Unknown resampling method: $resampling")
 
   require(overviews.forall(f => f >= 2 && (f & (f - 1)) == 0) &&
     overviews == overviews.sorted.distinct,
     s"overviews must be distinct ascending powers of 2: $overviews")
   require(overviews.isEmpty || !autoOverviews,
     "give explicit overview factors OR auto_overviews, not both")
-  overviewResampling match {
-    case "nearest" | "bilinear" | "cubic" | "cubic_spline" | "lanczos" | "gauss" |
-         "average" | "mode" | "max" | "min" | "med" | "q1" | "q3" | "sum" | "rms" => ()
-    case other => throw new IllegalArgumentException(s"Unknown overview resampling method: $other")
-  }
+  if (!LayerSpec.resamplings(overviewResampling))
+    throw new IllegalArgumentException(s"Unknown overview resampling method: $overviewResampling")
   require(overviewLayout == "internal" || overviewLayout == "external",
     s"overview_layout must be internal or external, got $overviewLayout")
   require(!cog || overviewLayout == "internal",
@@ -125,6 +119,10 @@ final case class LayerSpec(
 
 object LayerSpec {
   val versionRegex = "^v\\d{1,8}(\\.\\d{1,3}){0,2}?$|^latest$".r
+
+  /** The resampling kernels a spec may name, for pixels and overviews. */
+  val resamplings: Set[String] = Set("nearest", "bilinear", "cubic", "cubic_spline",
+    "lanczos", "gauss", "average", "mode", "max", "min", "med", "q1", "q3", "sum", "rms")
 
   /** Parse the reference's layer-spec JSON (`gfw_pixetl/pixetl.py:49-51`). */
   def fromJson(json: String): LayerSpec = {

@@ -175,13 +175,21 @@ object LayerJob {
     }
 
     // J4: band alignment zip — full outer join across bands on the block
-    // key; a band with no coverage contributes null pixels (K4 padding).
+    // key; a band with no coverage of a block contributes all-masked
+    // pixels (K4 padding), which the calc masks as the reference's
+    // masked-array calc does. One band needs no zip and no padding.
     val key = Seq("tile_id", "block_row", "block_col", "width", "height")
     val perBand = (1 to inBandCount).map { b =>
       mosaicked.filter(col("band") === b)
         .select(key.map(col) :+ col("values").as(s"v$b") :+ col("valid").as(s"k$b"): _*)
     }
-    val zipped = perBand.reduce((l, r) => l.join(r, key, "full_outer"))
+    val zipped = if (inBandCount == 1) perBand.head else {
+      val px = col("width") * col("height")
+      perBand.reduce((l, r) => l.join(r, key, "full_outer"))
+        .select(key.map(col) ++ (1 to inBandCount).flatMap(b => Seq(
+          coalesce(col(s"v$b"), array_repeat(lit(0.0), px)).as(s"v$b"),
+          coalesce(col(s"k$b"), array_repeat(lit(false), px)).as(s"k$b"))): _*)
+    }
 
     // P1 + P2 in ONE kernel pass per band: calc over band arrays (defaults
     // to identity on band A) with the cast + nodata fill fused into the
@@ -346,17 +354,24 @@ object LayerJob {
     s"""{"type":"Feature","geometry":$geometry,"properties":{"name":"$uri"$props}}"""
   }
 
-  /** A FeatureCollection streamed to the file at `path`: `body` emits its
-    * features. Scheme-qualified paths go through Hadoop FS. */
-  private def writeCollection[T](spark: SparkSession, path: String)
-                                (body: (String => Unit) => T): T = {
+  /** A UTF-8 writer creating (or replacing) the file at `path` through its
+    * Hadoop file system: a bare path is local, a scheme-qualified one
+    * (`file://`, `s3a://`) goes to its scheme, parents are created. */
+  private[graft] def createText(spark: SparkSession, path: String): java.io.Writer = {
     val hp = new org.apache.hadoop.fs.Path(
       if (path.contains("://")) path
       else java.nio.file.Paths.get(path).toAbsolutePath.toString)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.setWriteChecksum(false) // no .crc droppings next to manifests
-    val out = new java.io.BufferedWriter(
+    new java.io.BufferedWriter(
       new java.io.OutputStreamWriter(fs.create(hp, true), "UTF-8"), 1 << 20)
+  }
+
+  /** A FeatureCollection streamed to the file at `path` ([[createText]]):
+    * `body` emits its features. */
+  private def writeCollection[T](spark: SparkSession, path: String)
+                                (body: (String => Unit) => T): T = {
+    val out = createText(spark, path)
     try {
       out.write("{\"type\":\"FeatureCollection\",\"features\":[")
       var first = true

@@ -178,6 +178,16 @@ class PixetlSpec extends SparkSpec {
       """"std_dev":null,"count":0}]"""), manifest)
   }
 
+  test("a file:// dest holds the tiles and both manifests") {
+    val spec = statsLayer(halfEmptySources("fileuri/src"), """ "no_data": 0,""")
+    val dest = fresh("fileuri/dest")
+    Pixetl.run(spark, spec, s"file://$dest", overwrite = false, sub = None)
+    val out = dest.resolve(spec.prefix())
+    assert(names(out, ".tif") == Seq("90N_090W.tif", "90N_180W.tif"))
+    assert(names(out, ".geojson") == Seq("extent.geojson", "tiles.geojson"))
+    assert(!Files.exists(Paths.get("file:")), "a relative file: directory in the working dir")
+  }
+
   /** A whole-world EPSG:4326 uint16 source (`world.tif`, 1° pixels) under
     * `name`, served through the counting `onepass://` file system. Returns
     * the folder's uri. */

@@ -151,11 +151,18 @@ class LayerJobSpec extends SparkSpec {
     val inter = Publish(LayerJob.run(spark, spec2, cat2, constReader), spec2,
       dir("intersection")).tileIds
     assert(inter == Set("90N_090W", "00N_090W"), s"intersection got $inter")
-    // the union's F2 set, unpublished: a union tile that only one band
-    // covers has null band arrays, on which the tile sink's unpackBand throws
-    val uni = LayerJob.run(spark, spec2.copy(unionBands = true), cat2, constReader)
-      .tiles.withSource.select("tile_id").as[String].collect().toSet
+    // the union publishes all six tiles; where only one band covers a
+    // block, the other band's pixels are masked, so "A + B" is nodata there
+    val uniDir = dir("union_bands")
+    val uni = Publish(LayerJob.run(spark, spec2.copy(unionBands = true), cat2, constReader),
+      spec2, uniDir).tileIds
     assert(uni.size == 6 && inter.subsetOf(uni), s"union got $uni")
+    def pixels(id: String) = graft.sources.GeoTiff.open(s"$uniDir/$id.tif").readTile(1, 0, 0)
+    assert(pixels("90N_090W").forall(_ == 2.0)) // both bands: 1 + 1
+    Seq("90N_180W", "00N_180W").foreach { id => // band 1 only
+      val px = pixels(id)
+      assert(px.nonEmpty && px.forall(_ == 0.0), s"$id is not all nodata")
+    }
   }
 
   test("non-overlapping bands fail with the reference's error (layers.py:255-257)") {

@@ -30,11 +30,16 @@ def eq(a, b):
 def main():
     out_dir, sf_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
+    oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
+    unknown = sorted(only - set(oracles))
+    if unknown:
+        # a typo'd name must fail, not check nothing and pass
+        print(f"unknown query names: {', '.join(unknown)}", file=sys.stderr)
+        sys.exit(2)
     con = duckdb.connect()
     for t in ["region","nation","customer","supplier","part","orders",
               "lineitem","events","documents","embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name, sql in sorted(oracles.items()):
         if only and name not in only:
