@@ -345,26 +345,25 @@ object PixetlPrep {
     import org.apache.spark.sql.functions._
     val cat = GeoTiffSpark.harvestCatalog(spark, uris)
       .select(col("uri"), col("footprint"))
-    val existingManifest = s"$dest/tiles.geojson"
+    val manifest = s"$dest/tiles.geojson"
     val all =
-      if (mergeExisting && graft.sources.Catalog.exists(spark, existingManifest)) {
+      if (mergeExisting && graft.sources.Catalog.exists(spark, manifest)) {
         val existing = graft.sources.Catalog
-          .fromTilesGeojson(spark, existingManifest)
+          .fromTilesGeojson(spark, manifest)
           .select(col("uri"), col("footprint"))
           .join(cat.select("uri"), Seq("uri"), "left_anti")
         cat.unionByName(existing)
       } else cat
+    // both collected before either write: a merge reads `dest/tiles.geojson`
     val tiles = all.select(col("uri"),
       GeoFunctions.st_asGeoJson(col("footprint")).as("geometry"))
       .orderBy("uri").collect()
-      .map(r => s"""{"type":"Feature","geometry":${r.getString(1)},""" +
-        s""""properties":{"name":"${r.getString(0)}"}}""")
     val extent = all.agg(GeomUnionAgg.column(col("footprint")).as("u"))
       .select(GeoFunctions.st_asGeoJson(col("u"))).collect()(0).getString(0)
-    Files.createDirectories(Paths.get(dest))
-    Files.writeString(Paths.get(s"$dest/tiles.geojson"),
-      s"""{"type":"FeatureCollection","features":[${tiles.mkString(",")}]}""")
-    Files.writeString(Paths.get(s"$dest/extent.geojson"),
-      s"""{"type":"FeatureCollection","features":[{"type":"Feature","geometry":$extent,"properties":{}}]}""")
+    LayerJob.writeCollection(spark, manifest) { emit =>
+      tiles.foreach(r => emit(LayerJob.feature(r.getString(1), r.getString(0), None)))
+    }
+    val out = LayerJob.createText(spark, s"$dest/extent.geojson")
+    try out.write(LayerJob.renderExtentGeojson(Option(extent))) finally out.close()
   }
 }

@@ -344,8 +344,8 @@ object LayerJob {
     * each band's stats in the reference's `Metadata.bands` shape
     * (`models/pydantic.py:81-114`), NaN-sanitized like
     * `utils/geometry.py:51-59`. */
-  private def feature(geometry: String, uri: String,
-                      bands: Option[Seq[(Int, BandStats)]]): String = {
+  private[graft] def feature(geometry: String, uri: String,
+                             bands: Option[Seq[(Int, BandStats)]]): String = {
     def num(v: Double): String = if (v.isNaN || v.isInfinite) "null" else v.toString
     val props = bands.fold("")(_.map { case (b, s) =>
       s"""{"band":$b,"min":${num(s.min)},"max":${num(s.max)},"mean":${num(s.mean)},""" +
@@ -369,8 +369,8 @@ object LayerJob {
 
   /** A FeatureCollection streamed to the file at `path` ([[createText]]):
     * `body` emits its features. */
-  private def writeCollection[T](spark: SparkSession, path: String)
-                                (body: (String => Unit) => T): T = {
+  private[graft] def writeCollection[T](spark: SparkSession, path: String)
+                                       (body: (String => Unit) => T): T = {
     val out = createText(spark, path)
     try {
       out.write("{\"type\":\"FeatureCollection\",\"features\":[")

@@ -53,6 +53,29 @@ class SubmitJobE2ESpec extends SparkSpec {
     assert(!fresh.contains("first.tif") && fresh.contains("second.tif"))
   }
 
+  test("pixetl_prep writes its manifests under a file:// dest") {
+    val work = new java.io.File("target/tmp/prepfileuri")
+    FileUtils.deleteQuietly(work)
+    work.mkdirs()
+    val src = new java.io.File(work, "a.tif").getAbsolutePath
+    val w = new GeoTiff.Writer(src, GeoTiff.Profile(width = 16, height = 16, bands = 1,
+      dataType = "uint16", tileWidth = 16, tileHeight = 16, noData = Some(0.0), epsg = 4326,
+      originX = 0.0, originY = 10.0, xres = 0.5, yres = 0.5))
+    w.writeTile(1, 0, 0, Array.fill(256)(3.0))
+    w.close()
+    val dest = new java.io.File(work, "dest").getAbsoluteFile
+    for (merge <- Seq(false, true)) {
+      PixetlPrep.run(spark, s"file://$dest", Seq(src), mergeExisting = merge)
+      val tiles = java.nio.file.Files.readString(dest.toPath.resolve("tiles.geojson"))
+      assert("\"type\":\"Feature\"".r.findAllMatchIn(tiles).size == 1, tiles)
+      assert(tiles.contains(s"\"name\":\"$src\""), tiles)
+      assert(java.nio.file.Files.readString(dest.toPath.resolve("extent.geojson"))
+        .contains("Polygon"))
+    }
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get("file:")),
+      "a relative file: directory in the working dir")
+  }
+
   test("depends_on chain: base job publishes, dependent resamples its manifest") {
     val work = new java.io.File("target/tmp/submitjob")
     FileUtils.deleteQuietly(work)

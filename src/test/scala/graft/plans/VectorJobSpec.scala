@@ -3,6 +3,7 @@ package graft.plans
 import graft.SparkSpec
 import graft.core.LayerSpec
 import graft.functions.{GeoFunctions, Reproject}
+import graft.operators.Rasterize
 import org.apache.spark.sql.functions._
 
 /** Vector pipe end-to-end — ports tests/test_vector_src_tile.py:60-138
@@ -71,6 +72,75 @@ class VectorJobSpec extends SparkSpec {
       .filter(col("v") === 1).count()
     // ~20°x20° at zoom-4 resolution ≈ 228x244 px burned
     assert(burnt > 150L * 150 && burnt < 300L * 300, s"burnt=$burnt")
+  }
+
+  test("a feature touching a tile without covering a pixel centre there skips the tile") {
+    // crosses into 90N_090W by 0.01°, under half a 0.089° pixel
+    val g = GeoFunctions.write(GeoFunctions.envelope(-170, 10, -89.99, 30))
+    val r = VectorJob.run(spark, spec, Seq((g, 1L)).toDF("geom", "value"))
+    assert(r.blocks.select("tile_id").distinct().as[String].collect().toSeq == Seq("90N_180W"))
+    assert(Publish(r, spec, "target/tmp/vectorjob/sliver").status
+      == Map("processed" -> 1L, "skipped (does not intersect)" -> 7L))
+  }
+
+  test("per-block burn equals a per-pixel cover oracle (scalacheck: holes, multipolygons)") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // 90/1040: 8 tiles of 5 x 5 blocks (208 px); features straddle the
+    // tile corner at (-90, 0) and the block edges around it
+    val grid = graft.core.grid.GridFactory("90/1040")
+    val (xres, block) = (grid.xres, grid.blockSize)
+    /** A star-shaped ring around (cx, cy): one vertex per radius, at even angles. */
+    def ring(cx: Double, cy: Double, radii: Seq[Double]): String = {
+      val pts = radii.zipWithIndex.map { case (r, k) =>
+        val a = 2 * math.Pi * k / radii.size
+        s"${cx + r * math.cos(a)} ${cy + r * math.sin(a)}"
+      }
+      (pts :+ pts.head).mkString("(", ", ", ")")
+    }
+    def radii(r: Double, lo: Double, hi: Double): Gen[Seq[Double]] =
+      Gen.choose(5, 9).flatMap(n => Gen.listOfN(n, Gen.choose(lo * r, hi * r)))
+    // outer radii ≥ 0.6 r keep every edge beyond 0.48 r, clear of a ≤ 0.3 r hole
+    def polygon(cx: Double, cy: Double): Gen[String] = for {
+      r <- Gen.choose(0.5, 12.0); shell <- radii(r, 0.6, 1.0)
+      hole <- Gen.option(radii(r, 0.15, 0.3))
+    } yield (ring(cx, cy, shell) +: hole.map(ring(cx, cy, _)).toSeq).mkString("(", ", ", ")")
+    val centre = Gen.zip(Gen.choose(-110.0, -70.0), Gen.choose(-20.0, 20.0))
+    // a multipolygon's second part sits 30° east of its first: they never meet
+    val feature: Gen[String] = Gen.frequency(
+      2 -> centre.flatMap { case (x, y) => polygon(x, y).map("POLYGON " + _) },
+      1 -> centre.flatMap { case (x, y) =>
+        Gen.zip(polygon(x, y), polygon(x + 30, y)).map { case (a, b) => s"MULTIPOLYGON ($a, $b)" }
+      })
+    val features = Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, Gen.zip(feature, Gen.choose(1L, 200L))))
+
+    val prop = Prop.forAllNoShrink(features) { fs =>
+      val wkbs = fs.map { case (wkt, v) => (GeoFunctions.write(GeoFunctions.readWkt(wkt)), v) }
+      val covers = wkbs.flatMap { case (g, v) =>
+        Rasterize.pixelCoverIterator(g, -180, 90, xres, xres).map(_ -> v) }.groupMap(_._1)(_._2)
+      val df = wkbs.toDF("geom", "value")
+      Seq(("count", "asc"), ("value", "asc"), ("value", "desc")).forall { case (method, order) =>
+        val oracle = covers.map { case (px, vs) =>
+          px -> (if (method == "count") vs.size.toLong else if (order == "asc") vs.max else vs.min)
+        }
+        val s = spec.copy(grid = "90/1040", calc = None, rasterizeMethod = Some(method),
+          order = Some(order))
+        val got = VectorJob.run(spark, s, df).blocks
+          .select("left", "top", "block_row", "block_col", "band_1")
+          .as[(Double, Double, Int, Int, Seq[Long])].collect().toSeq.flatMap {
+            case (left, top, br, bc, arr) =>
+              assert(arr.exists(_ != 0L), "a burned block holds a burned pixel")
+              val c0 = math.round((left + 180) / xres).toInt + bc * block
+              val r0 = math.round((90 - top) / xres).toInt + br * block
+              arr.zipWithIndex.collect { case (v, i) if v != 0L =>
+                (c0 + i % block, r0 + i / block) -> v }
+          }
+        assert(got.size == got.map(_._1).distinct.size)
+        got.toMap == oracle
+      }
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(12)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261019L)), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
   }
 
   test("status tally counts processed tiles") {
