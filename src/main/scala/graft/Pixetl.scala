@@ -106,15 +106,15 @@ object Pixetl {
     *
     * One pass over the pixel plane: the tile sink is its only consumer,
     * and each sink task writes its tile's stats sidecar next to the tile.
-    * After the sink, two small Spark jobs ([[LayerJob.derive]]): one pass
-    * over the sink's per-tile rows writes tiles.geojson, folds the extent
-    * and counts the processed tiles; one count over the plan-side tile
-    * sets gives the rest of the status tally. */
+    * After the sink (and the raster path's gdal-geotiff copy), one small
+    * Spark job ([[LayerJob.derive]]): a pass over the sink's per-tile rows
+    * writes tiles.geojson, folds the extent and counts the processed
+    * tiles; the plan's tile counts give the rest of the status tally. */
   def run(spark: org.apache.spark.sql.SparkSession, spec0: LayerSpec, dest: String,
           overwrite: Boolean, sub: Option[Seq[String]]): Seq[(String, Long)] = {
     val spec = resolvePixetlUris(spec0, dest)
     val outDir = s"$dest/${spec.prefix()}"
-    // the run's pins (tile sets, sink rows) are released when it
+    // the run's pin (the sink rows) is released when it
     // returns; an explicit scope rather than a `Caching.scoped` closure
     // keeps each Spark job's call site on its own line of `run`, which is
     // how perfbench's step trace attributes the jobs written inline here
@@ -180,11 +180,6 @@ object Pixetl {
           val existing = Catalog.existingTiles(spark, outDir)
           val result = LayerJob.run(spark, spec, catalog, reader,
             subset = sub, existing = Some(existing), overwrite = overwrite)
-          // pinned: the sink reads the tile sets (through `pending`), and
-          // so does the status count after it
-          val LayerJob.Tiles(_, withSource, pending, _) = result.tiles
-          Caching.shared(withSource)
-          if (pending ne withSource) Caching.shared(pending)
           (result.blocks, result.tiles)
         case "vector" =>
           // S7: features from a live PostGIS via ONE partitioned JDBC scan
@@ -246,7 +241,7 @@ object Pixetl {
         }
       }
       // one pass over the sink's rows streams tiles.geojson (zoom-22-safe)
-      // and folds the extent; the status tally comes from counts
+      // and folds the extent; the status tally comes from the plan's counts
       val (extent, status) = LayerJob.writeTilesGeojson(spec, tiles, written,
         s"$outDir/tiles.geojson")
       val out = LayerJob.createText(spark, s"$outDir/extent.geojson")

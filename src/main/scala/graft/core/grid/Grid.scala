@@ -24,11 +24,12 @@ final case class Bounds(left: Double, bottom: Double, right: Double, top: Double
   *
   * Re-expression of the reference's `Grid` ABC
   * (`gfw_pixetl/grids/grid.py:14-165`): a grid assigns every tile a stable id
-  * and bounds, and every tile is subdivided into square blocks. In Spark the
-  * grid IS the partitioning expression: `tilesDF` seeds the job as a
-  * distributed `spark.range` + pure column arithmetic (no driver-side
-  * materialization), so a zoom-22 grid (268M tiles) plans without collecting
-  * anything.
+  * and bounds, and every tile is subdivided into square blocks. A layer job
+  * never enumerates the world: [[tilesTouching]] finds a shape's tiles by
+  * index arithmetic on the tile lattice, so a zoom-22 grid (268M tiles)
+  * plans in the time its sources' tiles take. `tilesDF` is the whole grid
+  * as a distributed `spark.range` + pure column arithmetic, for the
+  * operators that scan every tile (Focal, the ledger).
   */
 sealed trait Grid {
   def name: String
@@ -49,8 +50,33 @@ sealed trait Grid {
   /** tile id containing an (x, y) point */
   def pointTileId(x: Double, y: Double): String
 
-  /** Distributed grid seed: (tile_idx, tile_id, left, bottom, right, top).
-    * This is operator S1 — the leaf "table scan" of every job
+  /** (left of tile column 0, top of tile row 0, tile edge): tiles are square. */
+  protected def lattice: (Double, Double, Double)
+
+  /** The tiles whose closed bounds intersect `b`, by index arithmetic on
+    * the tile lattice: the index range under `b`, widened by one tile each
+    * side and clamped to the world, kept by an inclusive test on
+    * [[tileBounds]]' own doubles — every tile `b`'s shape can touch,
+    * whatever the rounding. An empty `b`, or one off the world, yields none. */
+  def tilesTouching(b: Bounds): Iterator[String] = {
+    val (x0, y0, span) = lattice
+    // lattice indices of offsets lo..hi, widened by one and clamped to
+    // [0, n); an offset far off the lattice clamps before it can overflow
+    def range(lo: Double, hi: Double, n: Long) = {
+      def at(v: Double) = math.max(-1.0, math.min(n.toDouble, math.floor(v / span))).toLong
+      if (lo <= hi) math.max(0L, at(lo) - 1) to math.min(n - 1, at(hi) + 1) else 0L until 0L
+    }
+    for {
+      r <- range(y0 - b.top, y0 - b.bottom, numTiles / tileCols).iterator
+      c <- range(b.left - x0, b.right - x0, tileCols)
+      id = tileId(r * tileCols + c)
+      t = tileBounds(id)
+      if t.left <= b.right && b.left <= t.right && t.bottom <= b.top && b.bottom <= t.top
+    } yield id
+  }
+
+  /** Distributed grid seed: (tile_idx, tile_id, left, bottom, right, top),
+    * operator S1 as a table scan of every tile
     * (`gfw_pixetl/grids/lat_lng_grid.py:119-138`). */
   def tilesDF(spark: SparkSession): DataFrame
 }
@@ -85,6 +111,7 @@ final case class LatLngGrid(width: Int, override val cols: Int) extends Grid {
   val nLatTiles: Int = (180 - 2 * latOffset) / height
   override val numTiles: Long = nLngTiles.toLong * nLatTiles
   override def tileCols: Int = nLngTiles
+  override protected def lattice = (minLng.toDouble, maxTop.toDouble, width.toDouble)
 
   private def fmtId(top: Int, left: Int): String = {
     val lat = if (top >= 0) f"${top}%02dN" else f"${-top}%02dS"
@@ -175,6 +202,7 @@ final case class WebMercatorGrid(zoom: Int) extends Grid {
   override val yres: Double = xres
 
   private def tileSpan: Double = 2 * extent / tilesPerSide
+  override protected def lattice = (-extent, extent, tileSpan)
 
   override def tileId(index: Long): String = {
     val r = (index / tilesPerSide).toInt

@@ -38,7 +38,7 @@ object GeoFunctions {
   def read(wkb: Array[Byte]): Geometry  = wkbReader.get.read(wkb)
   def write(g: Geometry): Array[Byte]   = wkbWriter.get.write(g)
 
-  // The join-condition predicates (J1/J2) evaluate tiles × catalog rows, so
+  // The join-condition predicate (J5) evaluates tiles × feature rows, so
   // the same WKB bytes recur thousands of times per task. Per-thread LRUs
   // of parsed and PREPARED geometries (JTS indexed predicates) avoid both
   // the per-row WKB deserialization and the repeated topology walks.
@@ -86,26 +86,12 @@ object GeoFunctions {
   }
 
   /** Interiors-intersect predicate `intersects ∧ ¬touches` — the tile/source
-    * test of `tiles/raster_src_tile.py:155-161`, on cached prepared
-    * geometries (this sits inside the J1/J2 join condition). */
-  val st_intersectsInterior: (Column, Column) => Column = {
-    val f = udf((a: Array[Byte], b: Array[Byte]) =>
-      a != null && b != null && {
-        val pa = prepared(a); val gb = cachedRead(b)
-        pa.intersects(gb) && !pa.getGeometry.touches(gb)
-      })
-    (a, b) => f(a, b)
-  }
+    * test of `tiles/raster_src_tile.py:155-161` (F2/J2). */
+  def intersectsInterior(a: Geometry, b: Geometry): Boolean = a.intersects(b) && !a.touches(b)
 
   val st_intersects: (Column, Column) => Column = {
     val f = udf((a: Array[Byte], b: Array[Byte]) =>
       a != null && b != null && prepared(a).intersects(cachedRead(b)))
-    (a, b) => f(a, b)
-  }
-
-  val st_touches: (Column, Column) => Column = {
-    val f = udf((a: Array[Byte], b: Array[Byte]) =>
-      a != null && b != null && read(a).touches(read(b)))
     (a, b) => f(a, b)
   }
 

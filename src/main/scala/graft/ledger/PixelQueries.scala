@@ -532,10 +532,10 @@ private[graft] object PixelQueries {
         |ORDER BY tile_id""".stripMargin
     },
 
-    /** J5 spatial form — the ACTUAL `st_intersects` tile ⋈ features join
-      * VectorJob runs (`plans/VectorJob.scala` — real JTS geometries via
-      * `st_makeEnvelope`/`st_intersects`/`st_intersection`, broadcast tile
-      * seed), where j1/j2 exercise only the bbox-arithmetic twin. Per
+    /** J5 spatial form — the JTS intersects + clip that VectorJob runs on
+      * each feature's lattice candidates (`plans/VectorJob.scala`), here as
+      * a `st_makeEnvelope`/`st_intersects`/`st_intersection` join over the
+      * broadcast tile seed; j1/j2 exercise only the bbox-arithmetic twin. Per
       * tile: intersecting-feature count and summed CLIPPED area (P4 on
       * the join output). The oracle replays it as closed-form axis-
       * aligned overlap products — integer lattice bounds keep every

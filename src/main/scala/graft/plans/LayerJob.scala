@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.core.LayerSpec
-import graft.core.grid.Bounds
+import graft.core.grid.{Bounds, Grid}
 import graft.functions.{GeoFunctions, GeomUnionAgg}
 import graft.operators.Raster
 import graft.operators.Raster.BandStats
@@ -13,27 +13,27 @@ import scala.jdk.CollectionConverters._
 /** The raster layer job — the Spark re-expression of the pixetl CLI
   * lifecycle (SURVEY §3.1). All of the reference's process boundaries
   * (parallelpipe stages, per-window forks, GDAL subprocesses) collapse into
-  * ONE lazy DataFrame program, from the tile seed to the output blocks:
+  * ONE lazy DataFrame program, from the work list to the output blocks:
   *
-  *   tiles seed (S1) → subset filter (F1) → source-intersect semi-join (F2/J1,
-  *   catalog broadcast) → existing anti-join (F3/J6) → file assignment (J2) →
-  *   block expansion → block read (S5, pluggable reader) → mosaic coalesce
-  *   (J3) → band zip (J4) → calc (P1) → cast/fill (P2) → empty-block filter
-  *   (F5).
+  *   subset filter (F1) → source-intersect tiles (F2/J1) → existing
+  *   anti-join (F3/J6) → file assignment (J2) — all four on the driver, from
+  *   each footprint's lattice candidates ([[Grid.tilesTouching]]) → block
+  *   expansion → block read (S5, pluggable reader) → mosaic coalesce (J3) →
+  *   band zip (J4) → calc (P1) → cast/fill (P2) → empty-block filter (F5).
   *
   * A publish (`Pixetl.run`) sinks the blocks as tiles
   * ([[graft.sources.GeoTiffSpark.writeTiles]], which also folds each
   * tile's A3 stats), then [[writeTilesGeojson]] derives the manifest (K3),
   * extent (A6) and status tally (A8) from the sink's per-tile rows.
   *
-  * Scale design: everything partitions by tile_id from the seed on; the
+  * Scale design: no job enumerates the grid. The source catalog is
+  * collected once on the driver ([[prioritize]]); priority, the layer
+  * geometry, the (tile, source) work list and its single-source probe come
+  * from its rows, and the work list enters Spark as a local relation. The
   * only shuffles before the sink are the spread of the block work list
   * (narrow descriptors, no pixels) and, when some (tile, band) has more
   * than one source, the block groupBy for mosaic overlap — keyed (tile,
-  * band, block), map-side combined. The source catalog is collected once
-  * on the driver ([[prioritize]]); priority, per-band uri counts and the
-  * layer geometry come from its rows, and it joins the tiles as a
-  * broadcast local relation.
+  * band, block), map-side combined.
   */
 object LayerJob {
 
@@ -44,13 +44,31 @@ object LayerJob {
     * tests and perfbench's calc kernel leg: Raster.synthesizeBand. */
   type BlockReader = DataFrame => DataFrame
 
-  /** The plan-side tile sets of a publish — footprint joins, no pixels:
-    * the seed after the subset filter (F1), the tiles a source covers (F2),
-    * and the tiles left to build (F3); the rest of `withSource` is already
-    * published and skipped. A pending tile that yields no pixels is
+  /** The plan-side tile counts of a publish, no pixels: |seed|, the tiles
+    * after the subset filter (F1); |withSource|, those a source covers (F2);
+    * |pending|, those left to build (F3) — the rest of `withSource` is
+    * already published and skipped. A pending tile that yields no pixels is
     * tallied as `emptyStatus`. */
-  final case class Tiles(seed: DataFrame, withSource: DataFrame, pending: DataFrame,
-                         emptyStatus: String)
+  final case class Tiles(seed: Long, withSource: Long, pending: Long, emptyStatus: String)
+
+  /** F1: the tiles a run may touch — every tile of `grid` (None), or the
+    * distinct ids of `subset` that name one; an id off the grid or
+    * malformed selects nothing. */
+  private[plans] def seedOf(grid: Grid, subset: Option[Seq[String]]): Option[Set[String]] =
+    subset.map(_.filter(id => scala.util.Try(
+      grid.tilesTouching(grid.tileBounds(id)).contains(id)).getOrElse(false)).toSet)
+
+  /** `g`'s lattice candidates within `seed`, each with its bounds and its
+    * envelope, both from `tileBounds` (the doubles of `tilesDF`). */
+  private[plans] def candidates(grid: Grid, seed: Option[Set[String]],
+                                g: Geometry): Iterator[(String, Bounds, Geometry)] = {
+    val e = g.getEnvelopeInternal
+    grid.tilesTouching(Bounds(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY))
+      .filter(id => seed.forall(_(id))).map { id =>
+        val b = grid.tileBounds(id)
+        (id, b, GeoFunctions.envelope(b.left, b.bottom, b.right, b.top))
+      }
+  }
 
   /** A layer job's plan (raster here, vector in [[VectorJob]]): the
     * output pixel `blocks` (post calc/fill, empty blocks dropped) and the
@@ -59,9 +77,12 @@ object LayerJob {
     * extent and status from the sink's rows ([[writeTilesGeojson]]). */
   final case class Result(blocks: DataFrame, tiles: Tiles)
 
-  /** The plan of `spec` over `catalog` read through `reader`. It pins
-    * nothing: a caller that consumes the tile sets more than once pins
-    * `withSource` and `pending` itself (`Pixetl.run`). */
+  /** The plan of `spec` over `catalog` read through `reader`. Its tile sets
+    * are planned on the driver from each footprint's lattice candidates
+    * ([[Grid.tilesTouching]]): the driver holds one entry per candidate
+    * (tile, source) pair — about the tiles published, which [[derive]]
+    * streams through the driver anyway — never one per tile of the world.
+    * `existing`, a listing of published tiles, is collected. */
   def run(spark: SparkSession, spec: LayerSpec, catalog: DataFrame,
           reader: BlockReader, subset: Option[Seq[String]] = None,
           existing: Option[DataFrame] = None, overwrite: Boolean = false): Result = {
@@ -69,58 +90,51 @@ object LayerJob {
     val grid = spec.gridDef
     // the catalog, collected once: free for a local relation
     val sources = prioritize(catalog)
+    val seed = seedOf(grid, subset)
 
-    // --- plan: tiles after F1/F2/F3 -------------------------------------
-    val seed = grid.tilesDF(spark)
-    val subsetted = subset.fold(seed)(ids => seed.filter(col("tile_id").isin(ids: _*)))
+    // F2/J1: the seed tiles whose interior intersects `g`'s — the
+    // interiors-intersect test of raster_src_tile.py:155-161
+    def tilesUnder(g: Geometry): Seq[String] = candidates(grid, seed, g)
+      .collect { case (id, _, t) if GeoFunctions.intersectsInterior(t, g) => id }.toSeq
+    val pairs = sources.flatMap(s => tilesUnder(GeoFunctions.read(s.footprint)).map(_ -> s))
 
-    // F2/J1: keep tiles whose interior intersects the LAYER geometry —
-    // the union (union_bands=true) or polygonal INTERSECTION (the
-    // reference default) of the per-band footprint unions
-    // (layers.py:239-258, utils/utils.py:187-225). Single-band layers and
-    // union semantics shortcut to the any-footprint broadcast semi-join
-    // (identical result, no geometry fold); the predicate is the
-    // interiors-intersect test of raster_src_tile.py:155-161.
-    val tileEnv = GeoFunctions.st_makeEnvelope(col("left"), col("bottom"), col("right"), col("top"))
+    // the tiles of the LAYER geometry: the union (union_bands=true) or
+    // polygonal INTERSECTION (the reference default) of the per-band
+    // footprint unions (layers.py:239-258, utils/utils.py:187-225); single
+    // band and union shortcut to the tiles of any footprint (same result)
     val inBandCount = spec.sourceUri.map(_.length).getOrElse(1)
     val withSource =
-      if (spec.unionBands || inBandCount == 1)
-        subsetted.join(broadcast(sources.map(_.footprint).toDF("src_fp")),
-          GeoFunctions.st_intersectsInterior(tileEnv, col("src_fp")), "left_semi")
+      if (spec.unionBands || inBandCount == 1) pairs.map(_._1).distinct
       else {
         val bandGeoms = sources.groupBy(_.band).values
           .map(ss => GeomUnionAgg.unionAll(ss.map(s => GeoFunctions.read(s.footprint))))
         require(bandGeoms.nonEmpty, "Input bands do not overlap") // empty catalog
         val layerGeom = bandGeoms.reduce(GeoFunctions.intersectionPolygonal)
         require(!layerGeom.isEmpty, "Input bands do not overlap") // layers.py:255-257
-        subsetted.filter(
-          GeoFunctions.st_intersectsInterior(tileEnv, lit(GeoFunctions.write(layerGeom))))
+        tilesUnder(layerGeom)
       }
 
     // F3/J6: skip already-materialized tiles unless overwrite
-    val pending = existing match {
-      case Some(ex) if !overwrite => withSource.join(broadcast(ex), Seq("tile_id"), "left_anti")
-      case _ => withSource
-    }
+    val done = existing.filter(_ => !overwrite)
+      .fold(Set.empty[String])(_.select("tile_id").as[String].collect().toSet)
+    val pending = withSource.filterNot(done)
 
-    // J2: file assignment — which files feed which tile, per band
-    val prioritized = sources
-      .map(s => (s.uri, s.band, s.fileBand, s.footprint, s.priority))
-      .toDF("uri", "band", "file_band", "footprint", "priority")
-    val work = pending.join(broadcast(prioritized),
-      GeoFunctions.st_intersectsInterior(tileEnv, col("footprint")))
+    // J2: file assignment — which files feed which pending tile, per band
+    val isPending = pending.toSet
+    val work = pairs.filter(p => isPending(p._1)).distinctBy { case (id, s) => (id, s.uri, s.band) }
 
     // --- blocks: expand, read, mosaic, zip ------------------------------
     // Spread the block grid across the session's full parallelism BEFORE
-    // the read: the exploded work list inherits the tile seed's partition
-    // count, so a 2-tile subset job would otherwise read + compute its
+    // the read: the exploded work list inherits the local relation's
+    // partitions, so a 2-tile subset job would otherwise read + compute its
     // ~200 Mpx on TWO cores (measured r15 — the bench pipeline ran at 2/32
     // occupancy). The shuffled rows are narrow work descriptors (ids +
     // uri), not pixels.
-    val blockWork = Raster.tilesToBlocks(
-      work.select("tile_id", "left", "bottom", "right", "top", "uri", "band",
-          "file_band", "priority")
-        .dropDuplicates("tile_id", "uri", "band"), grid)
+    val blockWork = Raster.tilesToBlocks(work.map { case (id, s) =>
+        val b = grid.tileBounds(id)
+        (id, b.left, b.bottom, b.right, b.top, s.uri, s.band, s.fileBand, s.priority)
+      }.toDF("tile_id", "left", "bottom", "right", "top", "uri", "band", "file_band", "priority"),
+      grid)
       .repartition(graft.core.Partitions.sessionParallelism(spark))
     val readBlocks = reader(blockWork)
 
@@ -141,20 +155,9 @@ object LayerJob {
     // NARROW from read to sink. Keyed per (tile, band), NOT per band
     // (ADVICE r15): the common tiled layout — many non-overlapping uris
     // per band, one per tile — has catalog-wide counts ≫ 1 but exactly one
-    // layer per block, and must bypass. TWO-TIER probe (VERDICT r16 #2):
-    // a band with ≤1 uri catalog-wide can never overlay, so the collected
-    // catalog's per-band uri count settles the common single-source case
-    // outright; only multi-uri bands escalate to the exact per-(tile,band)
-    // probe over the tile⋈catalog join (ids only, no pixels). Run
-    // unconditionally, that exact probe's extra Spark job doubled the
-    // bench pipeline's build constant (the r15→r16 drift).
-    val multiUri = sources.groupBy(_.band)
-      .collect { case (b, ss) if ss.map(_.uri).distinct.size > 1 => b }.toSeq
-    val multiSource = multiUri.nonEmpty &&
-      work.filter(col("band").isin(multiUri: _*))
-        .groupBy(col("tile_id"), col("band"))
-        .agg(countDistinct(col("uri")).as("n"))
-        .filter(col("n") > 1).limit(1).count() > 0
+    // layer per block, and must bypass. The driver's work list answers it
+    // exactly, with no Spark job.
+    val multiSource = work.groupBy { case (id, s) => (id, s.band) }.values.exists(_.size > 1)
     val mosaicked = if (!multiSource) {
       readBlocks.select(col("tile_id"), col("band"), col("block_row"),
         col("block_col"), col("width"), col("height"), col("values"), col("valid"))
@@ -219,10 +222,12 @@ object LayerJob {
     }
     // re-attach tile georeferencing for the sink (tiny broadcast join —
     // the bounds were shed before the mosaic shuffle to keep rows narrow)
-    val nonEmpty = nonEmptyBare.join(
-      broadcast(pending.select("tile_id", "left", "bottom", "right", "top")), "tile_id")
+    val nonEmpty = nonEmptyBare.join(broadcast(pending.map { id =>
+      val b = grid.tileBounds(id); (id, b.left, b.bottom, b.right, b.top)
+    }.toDF("tile_id", "left", "bottom", "right", "top")), "tile_id")
 
-    Result(nonEmpty, Tiles(subsetted, withSource, pending, "skipped (has no data)"))
+    Result(nonEmpty, Tiles(seed.fold(grid.numTiles)(_.size.toLong), withSource.size,
+      pending.size, "skipped (has no data)"))
   }
 
   /** One catalog source as the joins see it: its GLOBAL `band` (A, B, C…),
@@ -270,27 +275,26 @@ object LayerJob {
 
   /** The one derivation of what a publish reports beside its tiles, from
     * `processed`, the tile sink's rows: one row per tile with `tile_id`
-    * and `stats` (finalized per-band [[BandStats]]). Two Spark jobs:
-    *  - one count over the plan-side [[Tiles]] ([[tileCounts]]);
-    *  - one pass over `processed` in tile_id order, which hands each tile
-    *    to `onTile` (K3 manifest, A3 stats), folds the A6 extent — the
-    *    union of the tile footprints, [[GeomUnionAgg.unionAll]] over
-    *    batches — and counts the processed tiles. The pass streams: the
-    *    driver holds one partition of at most `passTiles` rows
-    *    ([[PassTiles]] in a publish) at a time.
+    * and `stats` (finalized per-band [[BandStats]]). One Spark job: a pass
+    * over `processed` in tile_id order, which hands each tile to `onTile`
+    * (K3 manifest, A3 stats), folds the A6 extent — the union of the tile
+    * footprints, [[GeomUnionAgg.unionAll]] over batches — and counts the
+    * processed tiles. The pass streams: the driver holds one partition of
+    * at most `passTiles` rows ([[PassTiles]] in a publish) at a time.
     *
     * Returns the extent's GeoJSON geometry (None when nothing was
     * processed) and the A8 status tally (status, count; pipe.py:137-168,
-    * skip reasons raster_pipe.py:62-81). The tally comes from counts:
-    * processed; empty = |pending| − processed; does-not-intersect =
-    * |seed| − |withSource|; existing = |withSource| − |pending|. Zero
+    * skip reasons raster_pipe.py:62-81). The tally comes from the pass's
+    * count and the plan's [[Tiles]]: processed; empty = |pending| −
+    * processed; does-not-intersect = |seed| − |withSource|; existing =
+    * |withSource| − |pending|. Zero
     * tallies are omitted and the rest sorted by status. */
   private[plans] def derive(spec: LayerSpec, tiles: Tiles, processed: DataFrame,
                             passTiles: Long)
                            (onTile: Published => Unit): (Option[String], Seq[(String, Long)]) = {
     val spark = processed.sparkSession
     import spark.implicits._
-    val (seed, withSource, pending) = tileCounts(tiles)
+    val Tiles(seed, withSource, pending, _) = tiles
     val parts = ((pending + passTiles - 1) / passTiles).toInt
     val rows = processed.select("tile_id", "stats")
     val ordered =
@@ -320,24 +324,6 @@ object LayerJob {
         "existing" -> (withSource - pending))
       .groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > 0).toSeq.sorted
     (Option(extent).map(GeoFunctions.toGeoJson), status)
-  }
-
-  /** |seed|, |withSource| and |pending| of a publish in ONE Spark job: an
-    * RDD aggregate over the union of the tagged sets, so no exchange or
-    * query stage of its own (the raster sets are pinned, and the sink has
-    * already materialized them). A relation passed as more than one set
-    * (vector passes the seed for all three) is counted once. */
-  private def tileCounts(t: Tiles): (Long, Long, Long) = {
-    val spark = t.seed.sparkSession
-    import spark.implicits._
-    val all = Seq(t.seed, t.withSource, t.pending)
-    val sets = all.foldLeft(Vector.empty[DataFrame])((s, df) => if (s.exists(_ eq df)) s else s :+ df)
-    val n = sets.zipWithIndex.map { case (df, i) => df.select(lit(i).as("set")) }
-      .reduce(_ union _).as[Int].rdd
-      .aggregate(new Array[Long](sets.size))((acc, i) => { acc(i) += 1; acc },
-        (a, b) => { for (i <- a.indices) a(i) += b(i); a })
-    val Seq(seed, withSource, pending) = all.map(df => n(sets.indexWhere(_ eq df)))
-    (seed, withSource, pending)
   }
 
   /** One tiles.geojson feature (K3): footprint, dst uri and, when given,

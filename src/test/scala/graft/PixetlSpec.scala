@@ -106,6 +106,18 @@ final class JobLog extends SparkListener {
   }
 }
 
+/** The physical plan of every SQL execution the session starts, and of
+  * each adaptive re-plan. */
+final class PlanLog extends SparkListener {
+  private val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart => seen.add(s.physicalPlanDescription)
+    case u: SparkListenerSQLAdaptiveExecutionUpdate => seen.add(u.physicalPlanDescription)
+    case _ =>
+  }
+  def plans: Seq[String] = seen.asScala.toSeq
+}
+
 /** `Pixetl.run` end to end: the tile sink is the only pass over the pixel
   * plane, and what a publish writes beside its tiles agrees with them. */
 class PixetlSpec extends SparkSpec {
@@ -284,7 +296,10 @@ class PixetlSpec extends SparkSpec {
     w.writeTile(1, 0, 1, Array.fill(256 * 256)(7.0))
     w.close()
     val aligned = statsLayer(src, """ "no_data": 0,""")
-    for ((name, spec) <- Seq("warp" -> warp, "aligned" -> aligned)) {
+    // the tiled layout: two uris in the band, one per tile
+    val tiled = statsLayer(bandSources("prologue/tiled", Seq("90N_180W", "90N_090W"))(
+      twoBandValue).head, """ "no_data": 0,""")
+    for ((name, spec) <- Seq("warp" -> warp, "aligned" -> aligned, "tiled" -> tiled)) {
       val before = jobsBeforeSink(spec, fresh(s"prologue/$name-dest"))
       info(s"$name prologue: ${before.size} jobs")
       assert(before.size == 1 && before.head._2.contains("graft.sources.GeoTiffSpark$.harvest"),
@@ -405,7 +420,7 @@ class PixetlSpec extends SparkSpec {
       got.equalsTopo(GeoFunctions.readWkt(ExpectedExtentWkt)), got)
   }
 
-  test("the epilogue after the tile sink runs at most two Spark jobs") {
+  test("the epilogue after the tile sink runs at most one Spark job") {
     val tiles = Seq("90N_180W", "90N_090W")
     val raster = twoBandLayer(bandSources("jobs/src", tiles)(twoBandValue))
     val vdest = fresh("jobs/vector")
@@ -442,7 +457,7 @@ class PixetlSpec extends SparkSpec {
         after = after.filterNot(_._1 == copy._1)
       }
       info(s"${spec.sourceType} epilogue: ${after.size} jobs")
-      assert(after.size <= 2, s"${spec.sourceType} epilogue jobs:\n" +
+      assert(after.size <= 1, s"${spec.sourceType} epilogue jobs:\n" +
         after.map(_._2.linesIterator.take(4).mkString(" | ")).mkString("\n"))
     }
   }
@@ -496,6 +511,65 @@ class PixetlSpec extends SparkSpec {
       val z = publish(s"rev${overviews.size}", blocks.reverse, overviews)
       assert(java.util.Arrays.equals(a, z), s"overviews $overviews")
     }
+  }
+
+  test("a 2°x2° publish on the 64,800-tile 1/128 grid plans no world seed") {
+    // one 256x256 source on the 1/128 block lattice: four 1° tiles
+    val grid = graft.core.grid.GridFactory("1/128")
+    val src = fresh("scale/src")
+    val w = new GeoTiff.Writer(src.resolve("patch.tif").toString, GeoTiff.Profile(
+      width = 256, height = 256, bands = 1, dataType = "uint16",
+      tileWidth = grid.blockSize, tileHeight = grid.blockSize, noData = Some(0.0),
+      epsg = 4326, originX = 10, originY = 12, xres = grid.xres, yres = grid.yres))
+    for (tr <- 0 to 1; tc <- 0 to 1) w.writeTile(1, tr, tc, Array.fill(128 * 128)(5.0))
+    w.close()
+    val raster = LayerSpec.fromJson(
+      s"""{"dataset": "scale", "version": "v1", "source_type": "raster",
+         |"pixel_meaning": "x", "data_type": "uint16", "no_data": 0, "grid": "1/128",
+         |"source_uri": ["$src"]}""".stripMargin)
+    val vdest = fresh("scale/vector")
+    Seq((GeoFunctions.write(GeoFunctions.envelope(10, 10, 12, 12)), 1L))
+      .toDF("geom", "value").write.parquet(vdest.resolve("features.parquet").toString)
+    val vector = LayerSpec.fromJson(
+      """{"dataset": "scale", "version": "v1", "source_type": "vector",
+        |"pixel_meaning": "is", "data_type": "uint8", "no_data": 0, "grid": "1/128",
+        |"rasterize_method": "value"}""".stripMargin)
+    for ((spec, dest) <- Seq(raster -> fresh("scale/raster"), vector -> vdest)) {
+      val plans = new PlanLog
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(plans)
+      try {
+        assert(Pixetl.run(spark, spec, dest.toString, overwrite = false, sub = None).toMap ==
+          Map("processed" -> 4L, "skipped (does not intersect)" -> 64796L))
+        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(plans)
+      assert(plans.plans.nonEmpty)
+      assert(!plans.plans.exists(_.contains("Range (0, 64800")), spec.sourceType)
+      assert(names(dest.resolve(spec.prefix()), ".tif") ==
+        Seq("11N_010E.tif", "11N_011E.tif", "12N_010E.tif", "12N_011E.tif"))
+    }
+  }
+
+  test("a zoom_22 plan counts its 268M-tile seed and starts no Spark job") {
+    val spec = LayerSpec.fromJson(
+      """{"dataset": "z22", "version": "v1", "source_type": "raster",
+        |"pixel_meaning": "x", "data_type": "uint16", "no_data": 0, "grid": "zoom_22",
+        |"source_uri": ["unused"]}""".stripMargin)
+    // a 5 km square in EPSG:3857, a few 2.4 km tiles
+    val catalog = Seq(("mem://patch.tif", 1,
+      GeoFunctions.write(GeoFunctions.envelope(1000, 1000, 6000, 6000))))
+      .toDF("uri", "band", "footprint")
+    val log = new JobLog
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(log)
+    val tiles = try {
+      val t = LayerJob.run(spark, spec, catalog,
+        b => graft.operators.Raster.synthesizeBand(b.drop("band"), band = 1)).tiles
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      t
+    } finally spark.sparkContext.removeSparkListener(log)
+    assert(tiles.seed == 268435456L && tiles.withSource == 9 && tiles.pending == 9, tiles)
+    assert(log.jobs.isEmpty, log.jobs.map(_._2.linesIterator.take(4).mkString(" | ")))
   }
 
   test("CLI failure text names each cause's class") {

@@ -1,12 +1,11 @@
 package graft.core
 
-import graft.core.grid.{LatLngGrid, WebMercatorGrid}
-import org.scalatest.funsuite.AnyFunSuite
+import graft.core.grid.{Bounds, Grid, LatLngGrid, WebMercatorGrid}
 
 /** Property-style grid/type laws over seeded random samples (the upgrade of
   * the reference's hand-case tests promised in SURVEY §5; plain scalacheck
   * Gens replaced with a seeded sampler to stay inside the dependency set). */
-class GridPropertySpec extends AnyFunSuite {
+class GridPropertySpec extends graft.SparkSpec {
 
   private val grids = Seq(LatLngGrid(10, 40000), LatLngGrid(1, 4000), LatLngGrid(90, 1008))
   private def samples(n: Int)(f: (Double, Double) => Unit): Unit = {
@@ -60,6 +59,50 @@ class GridPropertySpec extends AnyFunSuite {
       val below = g.tileBounds(f"${r + 1}%03dR_${c}%03dC")
       assert(math.abs(a.right - right.left) < 1e-6)
       assert(math.abs(a.bottom - below.top) < 1e-6)
+    }
+  }
+
+  test("tilesTouching equals a brute-force filter of tilesDF (edges, slivers, off-world)") {
+    // 40/4000 and 20/2000 sit on half-tile offset lattices (both axes, lat only)
+    val lattices: Seq[Grid] = Seq(LatLngGrid(40, 4000), LatLngGrid(20, 2000),
+      LatLngGrid(10, 40000), LatLngGrid(90, 1008)) ++ (0 to 10).map(WebMercatorGrid(_))
+    val rnd = new scala.util.Random(2026)
+    for (g <- lattices) {
+      val tiles = g.tilesDF(spark).select("tile_id", "left", "bottom", "right", "top").collect()
+        .map(r => r.getString(0) -> Bounds(r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
+      val (wx, wy) = g match {
+        case wm: WebMercatorGrid => (wm.extent, wm.extent)
+        case _ => (180.0, 90.0)
+      }
+      val xEdges = tiles.flatMap(t => Seq(t._2.left, t._2.right)).distinct
+      val yEdges = tiles.flatMap(t => Seq(t._2.bottom, t._2.top)).distinct
+      // one axis: a random span past the world, a span between tile edges,
+      // a zero-width line (on an edge or not) or a span wholly off the world
+      def axis(w: Double, edges: Array[Double]): (Double, Double) = {
+        def any = rnd.between(-1.3 * w, 1.3 * w)
+        def edge = edges(rnd.nextInt(edges.length))
+        val (a, b) = rnd.nextInt(5) match {
+          case 0 => (any, any)
+          case 1 => (edge, edge)
+          case 2 => val v = if (rnd.nextBoolean()) edge else any; (v, v)
+          case 3 => (edge, any)
+          case _ => val v = rnd.between(1.0001 * w, 2 * w); val s = if (rnd.nextBoolean()) 1 else -1
+            (s * v, s * (v + rnd.between(0, w)))
+        }
+        (math.min(a, b), math.max(a, b))
+      }
+      for (_ <- 1 to 300) {
+        val (l, r) = axis(wx, xEdges)
+        val (bo, t) = axis(wy, yEdges)
+        val b = Bounds(l, bo, r, t)
+        val expected = tiles.collect { case (id, tb) if tb.left <= b.right && b.left <= tb.right &&
+          tb.bottom <= b.top && b.bottom <= tb.top => id }.toSet
+        val got = g.tilesTouching(b).toSeq
+        assert(got.distinct.size == got.size && got.toSet == expected, s"${g.name} $b")
+      }
+      // an empty JTS envelope (min 0, max -1) and an inverted one yield nothing
+      assert(g.tilesTouching(Bounds(0, 0, -1, -1)).isEmpty)
+      assert(g.tilesTouching(Bounds(1, 0, 0, 1)).isEmpty, g.name)
     }
   }
 

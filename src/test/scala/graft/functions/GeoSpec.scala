@@ -24,11 +24,12 @@ class GeoSpec extends SparkSpec {
       .map { case (n, a, b) => (n, write(envelope(a._1, a._2, a._3, a._4)),
         write(envelope(b._1, b._2, b._3, b._4))) }
       .toDF("name", "ga", "gb")
-    val r = df.select(col("name"),
-      st_intersectsInterior(col("ga"), col("gb")).as("ii"),
-      st_intersects(col("ga"), col("gb")).as("i"),
-      st_touches(col("ga"), col("gb")).as("t")).collect()
-      .map(r => r.getString(0) -> (r.getBoolean(1), r.getBoolean(2), r.getBoolean(3))).toMap
+    val r = df.select(col("name"), col("ga"), col("gb"),
+      st_intersects(col("ga"), col("gb")).as("i")).collect()
+      .map { r =>
+        val (a, b) = (read(r.getAs[Array[Byte]](1)), read(r.getAs[Array[Byte]](2)))
+        r.getString(0) -> (intersectsInterior(a, b), r.getBoolean(3), a.touches(b))
+      }.toMap
     assert(r("overlap") == ((true, true, false)))
     assert(r("touch") == ((false, true, true)))
     assert(r("apart") == ((false, false, false)))

@@ -125,6 +125,13 @@ class LayerJobSpec extends SparkSpec {
     assert(Publish(r, spec, dir("subset")).features.size == 1)
   }
 
+  test("F1: a duplicate, an off-grid and a malformed subset id count once, never throw") {
+    val ids = Seq("90N_180W", "90N_180W", "90N_045W", "not-a-tile", "90N_", "")
+    val r = LayerJob.run(spark, spec, catalog, reader, subset = Some(ids))
+    assert(r.tiles == LayerJob.Tiles(1, 1, 1, "skipped (has no data)"))
+    assert(Publish(r, spec, dir("subset_odd")).status == Map("processed" -> 1L))
+  }
+
   test("a bare LayerJob.run pins nothing") {
     spark.catalog.clearCache()
     val r = LayerJob.run(spark, spec, catalog, reader,
@@ -234,13 +241,16 @@ class LayerJobSpec extends SparkSpec {
       .reduce(GeoFunctions.intersectionPolygonal)
     val grid = spec2.gridDef
     val expected = grid.tilesDF(spark)
-      .filter(GeoFunctions.st_intersectsInterior(
-        GeoFunctions.st_makeEnvelope(col("left"), col("bottom"), col("right"), col("top")),
-        lit(GeoFunctions.write(layerGeom))))
-      .select("tile_id").as[String].collect().toSet
-    val got = LayerJob.run(spark, spec2, cat, reader).tiles.withSource
-      .select("tile_id").as[String].collect().toSet
+      .select("tile_id", "left", "bottom", "right", "top")
+      .as[(String, Double, Double, Double, Double)].collect()
+      .collect { case (id, l, b, r, t)
+        if GeoFunctions.intersectsInterior(GeoFunctions.envelope(l, b, r, t), layerGeom) => id }
+      .toSet
+    // the reader fills every block, so the blocks' tiles are `withSource`
+    val r = LayerJob.run(spark, spec2, cat, reader)
+    val got = r.blocks.select("tile_id").distinct().as[String].collect().toSet
     assert(expected.size > 10 && got == expected, s"${got.size} tiles vs ${expected.size}")
+    assert(r.tiles.withSource == expected.size)
   }
 
   test("tiles.geojson from a range-partitioned pass equals the one-partition pass") {

@@ -149,6 +149,16 @@ class VectorJobSpec extends SparkSpec {
     assert(Publish(r, spec, "target/tmp/vectorjob/status").status
       == Map("processed" -> 1L, "skipped (does not intersect)" -> 7L))
   }
+
+  test("F1: a duplicate, an off-grid and a malformed subset id count once, never throw") {
+    // the feature spans four tiles; the subset names one of them twice
+    val g = GeoFunctions.write(GeoFunctions.envelope(-100, -20, -80, 20))
+    val ids = Seq("00N_090W", "00N_090W", "45N_045W", "not-a-tile", "90N_", "")
+    val r = VectorJob.run(spark, spec, Seq((g, 1L)).toDF("geom", "value"), subset = Some(ids))
+    assert(r.tiles == LayerJob.Tiles(1, 1, 1, "skipped (does not intersect)"))
+    assert(r.blocks.select("tile_id").distinct().as[String].collect().toSeq == Seq("00N_090W"))
+    assert(Publish(r, spec, "target/tmp/vectorjob/subset_odd").status == Map("processed" -> 1L))
+  }
 }
 
 /** P5 reprojection math. */
