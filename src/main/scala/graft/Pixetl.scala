@@ -64,25 +64,32 @@ object Pixetl {
   /** Tile sink + the spec's pyramid choice: internal overviews (chained
     * IFDs, optionally COG head-first) ride the SAME write; the external
     * layout publishes plain tiles then builds `.ovr` sidecars next to
-    * them (gdaladdo -ro semantics — the tiles stay byte-stable). Returns
-    * the sink's per-tile rows, pinned and materialized: the only pass
-    * over the pixel plane, which every later step reads instead. */
+    * them (gdaladdo -ro semantics — the tiles stay byte-stable) for the
+    * tiles this sink wrote and any listed tile without one yet (a run
+    * that died mid-pyramid). Each file also goes to the `mirrors` dirs,
+    * from the task that writes it. Returns the sink's per-tile rows,
+    * pinned and materialized: the only pass over the pixel plane, which
+    * every later step reads instead. */
   private def writeWithPyramid(spark: org.apache.spark.sql.SparkSession,
       blocks: org.apache.spark.sql.DataFrame, spec: LayerSpec,
-      outDir: String): org.apache.spark.sql.DataFrame = {
+      outDir: String, mirrors: Seq[String]): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
     val external = spec.overviewLayout == "external" && spec.overviewFactors.nonEmpty
-    val written = Caching.shared(
-      if (external) GeoTiffSpark.writeTiles(blocks, spec, outDir)
-      else GeoTiffSpark.writeTiles(blocks, spec, outDir,
-        overviewFactors = spec.overviewFactors,
-        overviewMethod = spec.overviewResampling,
-        cogLayout = spec.cog,
-        overviewSeamExact = spec.overviewSeamExact))
-    written.count()
-    if (external)
-      GeoTiffSpark.addOverviewSidecars(spark, outDir, spec,
-        spec.overviewFactors, spec.overviewResampling,
-        seamExact = spec.overviewSeamExact).count()
+    val written = Caching.shared(GeoTiffSpark.writeTiles(blocks, spec, outDir,
+      overviewFactors = if (external) Nil else spec.overviewFactors,
+      overviewMethod = spec.overviewResampling,
+      cogLayout = spec.cog,
+      overviewSeamExact = spec.overviewSeamExact,
+      mirrors = mirrors))
+    if (external) {
+      val ids = written.select("tile_id").as[String].collect().toSet ++
+        (Catalog.listed(spark, outDir, ".tif").toSet --
+          Catalog.listed(spark, outDir, ".tif.ovr"))
+      if (ids.nonEmpty)
+        GeoTiffSpark.addOverviewSidecars(spark, outDir, spec,
+          spec.overviewFactors, spec.overviewResampling, subset = Some(ids),
+          seamExact = spec.overviewSeamExact, mirrors = mirrors).count()
+    } else written.count()
     written
   }
 
@@ -105,8 +112,9 @@ object Pixetl {
     * on failure; returns the status tally.
     *
     * One pass over the pixel plane: the tile sink is its only consumer,
-    * and each sink task writes its tile's stats sidecar next to the tile.
-    * After the sink (and the raster path's gdal-geotiff copy), one small
+    * and each sink task writes its tile's stats sidecar next to the tile
+    * and, on the raster path, the tile's `gdal-geotiff` profile copy
+    * before the tile itself. After the sink, one small
     * Spark job ([[LayerJob.derive]]): a pass over the sink's per-tile rows
     * writes tiles.geojson, folds the extent and counts the processed
     * tiles; the plan's tile counts give the rest of the status tally. */
@@ -201,45 +209,9 @@ object Pixetl {
           (result.blocks, result.tiles)
       }
 
-      val written = writeWithPyramid(spark, blocks, spec, outDir)
-      if (spec.sourceType == "raster") {
-        // dual destination profiles (tiles/tile.py:54-97): the
-        // `gdal-geotiff` variant differs only in creation options the
-        // codec normalizes away, so it materializes as a copy —
-        // DISTRIBUTED (Hadoop-FS per task): a driver-side loop would
-        // serialize the whole second profile at 100k tiles
-        val gdalDir = s"$dest/${spec.prefix(fmt = "gdal-geotiff")}"
-        def abs(p: String) =
-          if (p.contains("://")) p else Paths.get(p).toAbsolutePath.toString
-        if (gdalDir.contains("://")) {
-          val p = new org.apache.hadoop.fs.Path(gdalDir)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-        } else Files.createDirectories(Paths.get(gdalDir))
-        val (srcRoot, dstRoot) = (abs(outDir), abs(gdalDir))
-        locally {
-          import spark.implicits._
-          val confBytes = graft.sources.HadoopConfs.capture(
-            spark.sparkContext.hadoopConfiguration)
-          Catalog.existingTiles(spark, outDir).as[String].mapPartitions { ids =>
-            graft.sources.HadoopConfs.install(confBytes)
-            val conf = graft.sources.HadoopConfs.get
-            ids.map { id =>
-              // the tile AND any external .ovr sidecar — a dual profile
-              // must not silently drop the pyramid the primary one has
-              for (name <- Seq(s"$id.tif", s"$id.tif.ovr")) {
-                val src = new org.apache.hadoop.fs.Path(s"$srcRoot/$name")
-                val dst = new org.apache.hadoop.fs.Path(s"$dstRoot/$name")
-                val sfs = src.getFileSystem(conf)
-                val dfs = dst.getFileSystem(conf)
-                dfs.setWriteChecksum(false)
-                if (sfs.exists(src))
-                  org.apache.hadoop.fs.FileUtil.copy(sfs, src, dfs, dst, false, true, conf)
-              }
-              id
-            }
-          }.count()
-        }
-      }
+      // the raster path's second destination profile (tiles/tile.py:54-97)
+      val written = writeWithPyramid(spark, blocks, spec, outDir,
+        if (spec.sourceType == "raster") Seq(s"$dest/${spec.prefix(fmt = "gdal-geotiff")}") else Nil)
       // one pass over the sink's rows streams tiles.geojson (zoom-22-safe)
       // and folds the extent; the status tally comes from the plan's counts
       val (extent, status) = LayerJob.writeTilesGeojson(spec, tiles, written,

@@ -100,10 +100,15 @@ object Catalog {
     * next to them are not. */
   def existingTiles(spark: SparkSession, destPrefix: String): DataFrame = {
     import spark.implicits._
-    val path = new Path(s"$destPrefix/*.tif")
+    listed(spark, destPrefix, ".tif").toDF("tile_id")
+  }
+
+  /** Tile ids of the `<id><suffix>` files directly under `dir`, listed on
+    * the driver. */
+  def listed(spark: SparkSession, dir: String, suffix: String): Seq[String] = {
+    val path = new Path(s"$dir/*$suffix")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Option(fs.globStatus(path)).getOrElse(Array.empty)
-      .map(_.getPath.getName.stripSuffix(".tif"))
-      .toSeq.toDF("tile_id")
+      .map(_.getPath.getName.stripSuffix(suffix)).toSeq
   }
 }

@@ -138,33 +138,38 @@ object GeoTiffSpark {
     if (wl == 0) writer.writeTile(b, br, bc, px)
     else writer.writeOverviewTile(wl, b, br, bc, px)
 
-  /** K4-style padding + close + optional remote upload — the shared tail
-    * of every streaming tile sink: never-emitted blocks become nodata
-    * tiles at EVERY level of the writer, then the finished file uploads
-    * through the Hadoop FS when the destination is scheme-qualified.
-    * `written` carries WRITER-level keys (level, band, row, col). */
-  private def padCloseUpload(writer: GeoTiff.Writer, bandCount: Int,
+  /** K4-style padding + close + publish — the shared tail of every
+    * streaming tile sink: never-emitted blocks become nodata tiles at
+    * EVERY level of the writer, then the finished file at `localPath`
+    * goes to each of `dests` in order: the mirrors first, the primary
+    * last, so a primary that exists implies its mirrors do. A plain
+    * `localPath` is `dests.head`, written in place; each later plain dest
+    * gets a `Files.copy` — never a hard link, which would let an in-place
+    * rewrite under `--overwrite` truncate every profile through one inode.
+    * A scheme-qualified dest gets a Hadoop-FS `copyFromLocalFile` of the
+    * local temp, and the last one moves it. `written` carries WRITER-level
+    * keys (level, band, row, col). */
+  private def padClosePublish(writer: GeoTiff.Writer, bandCount: Int,
       block: Int, noData: Option[Double],
       written: scala.collection.mutable.Set[(Int, Int, Int, Int)],
-      viaFs: Boolean, localPath: String, path: String): Unit = {
-    if (writer != null) {
-      val empty = Array.fill(block * block)(noData.getOrElse(0.0))
-      for (wl <- writer.levelProfiles.indices) {
-        val lp = writer.levelProfiles(wl)
-        for (b <- 1 to bandCount; br <- 0 until lp.tilesDown;
-             bc <- 0 until lp.tilesAcross)
-          if (!written.contains((wl, b, br, bc))) writeAt(writer, wl, b, br, bc, empty)
-      }
-      writer.close()
-      if (viaFs) {
-        val dst = new org.apache.hadoop.fs.Path(path)
+      localPath: String, dests: Seq[String]): Unit = {
+    val empty = Array.fill(block * block)(noData.getOrElse(0.0))
+    for (wl <- writer.levelProfiles.indices) {
+      val lp = writer.levelProfiles(wl)
+      for (b <- 1 to bandCount; br <- 0 until lp.tilesDown;
+           bc <- 0 until lp.tilesAcross)
+        if (!written.contains((wl, b, br, bc))) writeAt(writer, wl, b, br, bc, empty)
+    }
+    writer.close()
+    for ((d, i) <- dests.zipWithIndex if d != localPath)
+      if (d.contains("://")) {
+        val dst = new org.apache.hadoop.fs.Path(d)
         val dfs = dst.getFileSystem(HadoopConfs.get)
         dfs.setWriteChecksum(false)
-        dfs.copyFromLocalFile(true /* delete temp */,
+        dfs.copyFromLocalFile(i == dests.size - 1 /* move the temp */,
           true /* overwrite */, new org.apache.hadoop.fs.Path(localPath), dst)
-      }
-    } else if (viaFs && localPath != null)
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(localPath))
+      } else java.nio.file.Files.copy(java.nio.file.Paths.get(localPath),
+        java.nio.file.Paths.get(d), java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Write one GeoTIFF per tile under `outDir` (`<tile_id>.tif`), returning
@@ -187,6 +192,11 @@ object GeoTiffSpark {
     * `copyFromLocalFile` INSIDE the same task — the reference's
     * write-local-then-upload step (`tiles/tile.py:143-172`) without a
     * driver round-trip. Plain paths keep the direct POSIX writer.
+    * `mirrors` are further tile dirs, sharing `outDir`'s scheme, that get
+    * the same `<tile_id>.tif` from the same task (the reference's second
+    * destination profile, `tiles/tile.py:54-97`): each mirror is written
+    * before the primary, so a tile in `outDir` has its mirrors
+    * ([[padClosePublish]]). The stats sidecar stays in `outDir` only.
     *
     * `overviewFactors` (ascending powers of 2) adds INTERNAL overview
     * levels (chained IFDs, the gdaladdo layout) — a step beyond the
@@ -197,7 +207,8 @@ object GeoTiffSpark {
                  overviewFactors: Seq[Int] = Nil,
                  overviewMethod: String = "average",
                  cogLayout: Boolean = false,
-                 overviewSeamExact: Boolean = false): DataFrame = {
+                 overviewSeamExact: Boolean = false,
+                 mirrors: Seq[String] = Nil): DataFrame = {
     val spark = blocks.sparkSession
     import spark.implicits._
     val grid = spec.gridDef
@@ -214,10 +225,11 @@ object GeoTiffSpark {
     val photometric = spec.photometric
     val ccitt = pt.compression == "CCITTFAX4"
     val viaFs = outDir.contains("://")
-    if (viaFs) {
-      val p = new org.apache.hadoop.fs.Path(outDir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-    } else java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    for (d <- outDir +: mirrors)
+      if (viaFs) {
+        val p = new org.apache.hadoop.fs.Path(d)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
+      } else java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
 
     val cols0 = Seq("tile_id", "left", "top", "block_row", "block_col") ++
       (1 to bandCount).map(i => s"band_$i")
@@ -261,10 +273,11 @@ object GeoTiffSpark {
             var writer: GeoTiff.Writer = null
             var n = 0
             var tileStats: Seq[StatsPartial] = Nil
-            val path = s"$outDir/$tileId.tif"
+            val dests = (mirrors :+ outDir).map(d => s"$d/$tileId.tif")
+            val path = dests.last
             val localPath =
               if (viaFs) java.nio.file.Files.createTempFile(s"graft_$tileId", ".tif").toString
-              else path
+              else dests.head
             val written = scala.collection.mutable.Set.empty[(Int, Int, Int, Int)]
             while (it.hasNext && it.head._1 == tileId) {
               val (_, left, top, br, bc, lvl, bands, blockStats) = it.next()
@@ -288,8 +301,8 @@ object GeoTiffSpark {
                 n += 1
               }
             }
-            padCloseUpload(writer, bandCount, block, noData, written,
-              viaFs, localPath, path)
+            padClosePublish(writer, bandCount, block, noData, written,
+              localPath, dests)
             val bands = tileStats.map(_.finish)
             if (sidecars) {
               val aux = new org.apache.hadoop.fs.Path(
@@ -349,12 +362,15 @@ object GeoTiffSpark {
     * chain holds the reduced levels, already consumed by
     * [[GeoTiff.openWithOverviews]] and the warp reader — writes one task
     * per tile. `factors` are distinct ascending powers of 2; `method` is
-    * any [[graft.operators.Resample]] kernel. */
+    * any [[graft.operators.Resample]] kernel. `mirrors`, existing dirs
+    * like `dir`, get each `.tif.ovr` from the same task, before `dir`
+    * does, as in [[writeTiles]]. */
   def addOverviewSidecars(spark: SparkSession, dir: String, spec: LayerSpec,
                           factors: Seq[Int],
                           method: String = "average",
                           subset: Option[Set[String]] = None,
-                          seamExact: Boolean = false): DataFrame = {
+                          seamExact: Boolean = false,
+                          mirrors: Seq[String] = Nil): DataFrame = {
     import spark.implicits._
     require(factors.nonEmpty && factors.forall(f => f >= 2 && (f & (f - 1)) == 0) &&
       factors == factors.sorted.distinct,
@@ -367,12 +383,7 @@ object GeoTiffSpark {
     val (cols, rows_, block) = (grid.cols, grid.rows, grid.blockSize)
     val nPerSide = cols / block
     val viaFs = dir.contains("://")
-    // the published tiles (one `<id>.tif` each; sidecars/manifests in the
-    // same prefix don't match the glob)
-    val tifGlob = new org.apache.hadoop.fs.Path(s"$dir/*.tif")
-    val fs0 = tifGlob.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val all = Option(fs0.globStatus(tifGlob)).getOrElse(Array.empty)
-      .map(_.getPath.getName.stripSuffix(".tif")).toSeq
+    val all = Catalog.listed(spark, dir, ".tif")
     val ids = subset.fold(all)(keep => all.filter(keep))
     // a typo'd dest, wrong prefix, or subset matching nothing must fail
     // LOUDLY, not exit green with zero sidecars — the silent-no-pyramid
@@ -433,17 +444,16 @@ object GeoTiffSpark {
           override def next(): (String, String) = {
             val tileId = it.head._1
             var writer: GeoTiff.Writer = null
+            val dests = (mirrors :+ dir).map(d => s"$d/$tileId.tif.ovr")
             var localPath: String = null
-            var path: String = null
             val written = scala.collection.mutable.Set.empty[(Int, Int, Int, Int)]
             while (it.hasNext && it.head._1 == tileId) {
               val (_, left, top, br, bc, rowLvl, bands) = it.next()
               if (writer == null) {
-                path = s"$dir/$tileId.tif.ovr"
                 localPath =
                   if (viaFs) java.nio.file.Files
                     .createTempFile(s"graft_ovr_$tileId", ".ovr").toString
-                  else path
+                  else dests.head
                 // the sidecar's BASE image is the first reduced level;
                 // deeper declared levels chain as its own internal
                 // overviews
@@ -467,9 +477,9 @@ object GeoTiffSpark {
                 written += ((wl, b, br, bc))
               }
             }
-            padCloseUpload(writer, bandCount, block, noData, written,
-              viaFs, localPath, path)
-            (tileId, path)
+            padClosePublish(writer, bandCount, block, noData, written,
+              localPath, dests)
+            (tileId, dests.last)
           }
         }
       }

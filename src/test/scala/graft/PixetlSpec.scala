@@ -200,12 +200,70 @@ class PixetlSpec extends SparkSpec {
     assert(!Files.exists(Paths.get("file:")), "a relative file: directory in the working dir")
   }
 
+  /** `(name, bytes)` of each `.tif` and `.tif.ovr` directly under `dir`. */
+  private def tileFiles(dir: Path): Seq[(String, Seq[Byte])] =
+    (names(dir, ".tif") ++ names(dir, ".tif.ovr"))
+      .map(n => n -> Files.readAllBytes(dir.resolve(n)).toSeq)
+
+  private val externalOvr = """ "overviews": [2], "overview_layout": "external","""
+
+  test("the gdal-geotiff profile holds a byte copy of every tile and .ovr") {
+    val src = halfEmptySources("mirror/src")
+    for ((name, extra, uri) <- Seq[(String, String, Path => String)](
+        ("plain", "", _.toString), ("file uri", "", p => s"file://$p"),
+        ("external overviews", externalOvr, _.toString))) {
+      val spec = statsLayer(src, s""" "no_data": 0,$extra""")
+      val dest = fresh(s"mirror/${name.replace(' ', '-')}")
+      Pixetl.run(spark, spec, uri(dest), overwrite = false, sub = None)
+      val primary = tileFiles(dest.resolve(spec.prefix()))
+      val mirror = dest.resolve(spec.prefix(fmt = "gdal-geotiff"))
+      assert(primary.map(_._1) == (Seq("90N_090W.tif", "90N_180W.tif") ++
+        (if (extra.isEmpty) Nil else Seq("90N_090W.tif.ovr", "90N_180W.tif.ovr"))), name)
+      assert(tileFiles(mirror) == primary, name)
+      assert(names(mirror, "").toSet == primary.map(_._1).toSet, s"$name: ${names(mirror, "")}")
+    }
+  }
+
+  /** Publish `spec` twice to a fresh `onepass://` dest under `name`, the
+    * second time without `--overwrite`: nothing is left to write, so the
+    * rerun must read no published file. Returns the dest's uri. */
+  private def rerunReadsNothing(name: String, spec: LayerSpec): String = {
+    countingFs()
+    val dest = CountingFileSystem.uriOf(fresh(name))
+    Pixetl.run(spark, spec, dest, overwrite = false, sub = None)
+    CountingFileSystem.take()
+    val status = Pixetl.run(spark, spec, dest, overwrite = false, sub = None).toMap
+    val read = CountingFileSystem.take()
+    assert(status == Map("existing" -> 2L, "skipped (does not intersect)" -> 6L), status)
+    assert(read == ((0L, 0L)), s"rerun read (opens, bytes) $read")
+    dest
+  }
+
+  test("a rerun without --overwrite opens no published tile") {
+    rerunReadsNothing("rerun/plain", statsLayer(halfEmptySources("rerun/src"), """ "no_data": 0,"""))
+  }
+
+  test("a rerun with external overviews opens no published tile, and builds a missing .ovr") {
+    val spec = statsLayer(halfEmptySources("rerun-ovr/src"), s""" "no_data": 0,$externalOvr""")
+    val dest = rerunReadsNothing("rerun-ovr/dest", spec)
+    // a run that died mid-pyramid: the next run builds the missing .ovr
+    val ovr = Paths.get(new URI(s"$dest/${spec.prefix()}/90N_180W.tif.ovr").getPath)
+    val want = Files.readAllBytes(ovr).toSeq
+    Files.delete(ovr)
+    Pixetl.run(spark, spec, dest, overwrite = false, sub = None)
+    assert(Files.exists(ovr) && Files.readAllBytes(ovr).toSeq == want)
+  }
+
+  /** Serve the `onepass://` scheme through [[CountingFileSystem]]. */
+  private def countingFs(): Unit =
+    spark.sparkContext.hadoopConfiguration.set(s"fs.${CountingFileSystem.Scheme}.impl",
+      classOf[CountingFileSystem].getName)
+
   /** A whole-world EPSG:4326 uint16 source (`world.tif`, 1° pixels) under
     * `name`, served through the counting `onepass://` file system. Returns
     * the folder's uri. */
   private def worldSource(name: String): String = {
-    spark.sparkContext.hadoopConfiguration.set(s"fs.${CountingFileSystem.Scheme}.impl",
-      classOf[CountingFileSystem].getName)
+    countingFs()
     val src = fresh(name)
     val profile = GeoTiff.Profile(width = 360, height = 180, bands = 1, dataType = "uint16",
       tileWidth = 64, tileHeight = 64, noData = Some(0.0), epsg = 4326,
@@ -263,8 +321,10 @@ class PixetlSpec extends SparkSpec {
     }
     val plain = opens("ovr/plain", warpLayer(srcUri))
     val pyramid = opens("ovr/cog", warpLayer(srcUri, """ "overviews": [2], "cog": true,"""))
-    info(s"source opens: $plain plain, $pyramid with overviews")
-    assert(plain > 0 && pyramid == plain, s"source opens: $plain plain, $pyramid with overviews")
+    val external = opens("ovr/external", warpLayer(srcUri, externalOvr))
+    info(s"source opens: $plain plain, $pyramid with overviews, $external with .ovr sidecars")
+    assert(plain > 0 && pyramid == plain && external == plain,
+      s"source opens: $plain plain, $pyramid with overviews, $external with .ovr sidecars")
   }
 
   /** The jobs a publish of `spec` starts before its tile sink's SQL
@@ -433,10 +493,10 @@ class PixetlSpec extends SparkSpec {
     // the raster publish skips one already-published tile
     val rdest = fresh("jobs/raster")
     Pixetl.run(spark, raster, rdest.toString, overwrite = false, sub = Some(Seq("90N_180W")))
-    for ((spec, dest, dualCopy, tally) <- Seq(
-        (raster, rdest, true, Map("processed" -> 1L, "existing" -> 1L,
+    for ((spec, dest, tally) <- Seq(
+        (raster, rdest, Map("processed" -> 1L, "existing" -> 1L,
           "skipped (does not intersect)" -> 6L)),
-        (vector, vdest, false, Map("processed" -> 1L, "skipped (does not intersect)" -> 7L)))) {
+        (vector, vdest, Map("processed" -> 1L, "skipped (does not intersect)" -> 7L)))) {
       val log = new JobLog
       org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
       spark.sparkContext.addSparkListener(log)
@@ -448,14 +508,7 @@ class PixetlSpec extends SparkSpec {
       val jobs = log.jobs
       val sink = jobs.lastIndexWhere(_._2.contains("graft.Pixetl$.writeWithPyramid"))
       assert(sink >= 0)
-      var after = jobs.drop(sink + 1).filter(j => j._1.isEmpty || j._1 != jobs(sink)._1)
-      if (dualCopy) {
-        // the gdal-geotiff copy: the first SQL execution after the sink
-        val copy = after.head
-        assert(copy._1.isDefined && copy._2.linesIterator
-          .find(_.trim.startsWith("graft.")).exists(_.contains("graft.Pixetl$.run(")), copy)
-        after = after.filterNot(_._1 == copy._1)
-      }
+      val after = jobs.drop(sink + 1).filter(j => j._1.isEmpty || j._1 != jobs(sink)._1)
       info(s"${spec.sourceType} epilogue: ${after.size} jobs")
       assert(after.size <= 1, s"${spec.sourceType} epilogue jobs:\n" +
         after.map(_._2.linesIterator.take(4).mkString(" | ")).mkString("\n"))
