@@ -93,6 +93,13 @@ object Pixetl {
     written
   }
 
+  /** The tile dirs under `dest` that get a copy of every file the layer
+    * publishes: a raster layer's second destination profile,
+    * `gdal-geotiff` (tiles/tile.py:54-97); none for a vector layer. */
+  private[graft] def mirrors(spec: LayerSpec, dest: String): Seq[String] =
+    if (spec.sourceType == "raster") Seq(s"$dest/${spec.prefix(fmt = "gdal-geotiff")}")
+    else Nil
+
   /** Resolve `pixetl://dataset/attr/grid/tiles.geojson` source uris (emitted
     * by [[SubmitJob]] for resampled `depends_on` grids) to the upstream
     * job's manifest under the same dest prefix — the reference's data-lake
@@ -209,9 +216,7 @@ object Pixetl {
           (result.blocks, result.tiles)
       }
 
-      // the raster path's second destination profile (tiles/tile.py:54-97)
-      val written = writeWithPyramid(spark, blocks, spec, outDir,
-        if (spec.sourceType == "raster") Seq(s"$dest/${spec.prefix(fmt = "gdal-geotiff")}") else Nil)
+      val written = writeWithPyramid(spark, blocks, spec, outDir, mirrors(spec, dest))
       // one pass over the sink's rows streams tiles.geojson (zoom-22-safe)
       // and folds the extent; the status tally comes from the plan's counts
       val (extent, status) = LayerJob.writeTilesGeojson(spec, tiles, written,
@@ -231,8 +236,25 @@ object Pixetl {
   *
   * The layer json is the SAME spec the publish ran with (it carries the
   * grid/data-type/prefix); factors default to the spec's own
-  * `overviews`/auto chain. Exit 0 on success, 1 on failure. */
+  * `overviews`/auto chain. A raster layer's sidecars also go to its
+  * `gdal-geotiff` profile, as a publish's do ([[Pixetl.mirrors]]). Exit 0
+  * on success, 1 on failure. */
 object Addo {
+  /** Builds the `factors` sidecars of the tiles `spec` published under
+    * `dest` (all of them, or the `subset` ids) on the caller's session,
+    * with `method` or else the spec's own overview kernel. Returns
+    * (tile_id, path) per sidecar. */
+  def run(spark: org.apache.spark.sql.SparkSession, spec: LayerSpec, dest: String,
+          factors: Seq[Int], method: Option[String] = None,
+          subset: Seq[String] = Nil): Seq[(String, String)] =
+    GeoTiffSpark.addOverviewSidecars(spark, s"$dest/${spec.prefix()}", spec, factors,
+      // the SAME kernel the spec publishes with, unless overridden —
+      // an 'average' default would corrupt categorical (mode) pyramids
+      method.getOrElse(spec.overviewResampling),
+      subset = if (subset.nonEmpty) Some(subset.toSet) else None,
+      mirrors = Pixetl.mirrors(spec, dest))
+      .collect().toSeq.map(r => (r.getString(0), r.getString(1)))
+
   def main(args: Array[String]): Unit = {
     var dest = "out"
     var method: Option[String] = None // default: the spec's own kernel
@@ -263,13 +285,8 @@ object Addo {
       else spec.copy(autoOverviews = true, overviews = Nil).overviewFactors
     val spark = GraftSession.local(s"addo ${spec.dataset}/${spec.version}")
     try {
-      val written = GeoTiffSpark.addOverviewSidecars(spark,
-        s"$dest/${spec.prefix()}", spec, resolved,
-        // the SAME kernel the spec publishes with, unless overridden —
-        // an 'average' default would corrupt categorical (mode) pyramids
-        method.getOrElse(spec.overviewResampling),
-        subset = if (subset.nonEmpty) Some(subset.toSet) else None).collect()
-      written.foreach(r => println(s"${r.getString(0)}: ${r.getString(1)}"))
+      val written = run(spark, spec, dest, resolved, method, subset)
+      written.foreach { case (id, path) => println(s"$id: $path") }
       println(s"overviews: ${written.length} sidecars, factors ${resolved.mkString(",")}")
       sys.exit(0)
     } catch {

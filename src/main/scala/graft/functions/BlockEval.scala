@@ -264,16 +264,7 @@ case class BlockStats(values: Expression, valid: Option[Expression],
                       noData: Option[Double] = None)
   extends Expression with CodegenFallback {
   /** How an element of `values` widens to double, chosen once. */
-  private lazy val widen: Int = values.dataType match {
-    case ArrayType(DoubleType, _)  => 0
-    case ArrayType(FloatType, _)   => 1
-    case ArrayType(LongType, _)    => 2
-    case ArrayType(IntegerType, _) => 3
-    case ArrayType(ShortType, _)   => 4
-    case ArrayType(ByteType, _)    => 5
-    case other => throw new IllegalArgumentException(
-      s"block_stats: values must be a numeric array, got ${other.simpleString}")
-  }
+  private lazy val widen: Int = BlockKernels.widening(values.dataType, "block_stats")
   override def prettyName: String = "block_stats"
   override def children: Seq[Expression] = values +: valid.toSeq
   override def nullable: Boolean = children.exists(_.nullable)
@@ -307,14 +298,7 @@ case class BlockStats(values: Expression, valid: Option[Expression],
     var i = 0
     while (i < n) {
       var ok = !v.isNullAt(i) && (k == null || !k.isNullAt(i) && k.getBoolean(i))
-      val x = if (!ok) 0.0 else (w: @scala.annotation.switch) match {
-        case 0 => v.getDouble(i)
-        case 1 => v.getFloat(i).toDouble
-        case 2 => v.getLong(i).toDouble
-        case 3 => v.getInt(i).toDouble
-        case 4 => v.getShort(i).toDouble
-        case _ => v.getByte(i).toDouble
-      }
+      val x = if (!ok) 0.0 else BlockKernels.widenAt(v, i, w)
       if (ok && hasNd && BlockKernels.cmp(x, nd) == 0) ok = false
       if (ok) {
         // Spark SQL double ordering (NaN largest, ±0.0 equal) — NOT the

@@ -96,24 +96,58 @@ object BlockKernels {
   def unpackBandColumn(bytes: Column, mode: String): Column =
     ColumnBridge.column(UnpackBand(ColumnBridge.expression(bytes), mode))
 
-  /** Writer-side inverse of [[PackBand]]: packed little-endian samples →
-    * the double plane the tile writer consumes. Plain Scala (runs inside
-    * the sink's mapPartitions, once per block). */
+  def encodeBlock(values: Column, profile: graft.sources.GeoTiff.Profile): Column =
+    ColumnBridge.column(EncodeBlock(ColumnBridge.expression(values), profile))
+
+  /** Inverse of [[PackBand]]: packed little-endian samples → the double
+    * plane. Plain Scala, once per block. */
   def unpackBand(bytes: Array[Byte], mode: String): Array[Double] = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    // a primitive loop: `Array.tabulate` boxes every sample
+    def fill(n: Int)(f: Int => Double): Array[Double] = {
+      val out = new Array[Double](n)
+      var i = 0
+      while (i < n) { out(i) = f(i); i += 1 }
+      out
+    }
     mode match {
-      case "u8"  => Array.tabulate(bytes.length)(i => (bytes(i) & 0xff).toDouble)
-      case "i8"  => Array.tabulate(bytes.length)(i => bytes(i).toDouble)
-      case "u16" => Array.tabulate(bytes.length / 2)(i => (bb.getShort(2 * i) & 0xffff).toDouble)
-      case "i16" => Array.tabulate(bytes.length / 2)(i => bb.getShort(2 * i).toDouble)
-      case "u32" => Array.tabulate(bytes.length / 4)(i => (bb.getInt(4 * i) & 0xffffffffL).toDouble)
-      case "i32" => Array.tabulate(bytes.length / 4)(i => bb.getInt(4 * i).toDouble)
-      case "f32" => Array.tabulate(bytes.length / 4)(i => bb.getFloat(4 * i).toDouble)
-      case "f64" => Array.tabulate(bytes.length / 8)(i => bb.getDouble(8 * i))
+      case "u8"  => fill(bytes.length)(i => (bytes(i) & 0xff).toDouble)
+      case "i8"  => fill(bytes.length)(i => bytes(i).toDouble)
+      case "u16" => fill(bytes.length / 2)(i => (bb.getShort(2 * i) & 0xffff).toDouble)
+      case "i16" => fill(bytes.length / 2)(i => bb.getShort(2 * i).toDouble)
+      case "u32" => fill(bytes.length / 4)(i => (bb.getInt(4 * i) & 0xffffffffL).toDouble)
+      case "i32" => fill(bytes.length / 4)(i => bb.getInt(4 * i).toDouble)
+      case "f32" => fill(bytes.length / 4)(i => bb.getFloat(4 * i).toDouble)
+      case "f64" => fill(bytes.length / 8)(i => bb.getDouble(8 * i))
       case other => throw new IllegalArgumentException(s"unknown pack mode $other")
     }
   }
+
+  /** How an element of a numeric array type widens to double, chosen once
+    * per type and read per element by [[widenAt]] — what a cast to
+    * `array<double>` would give, without materializing that array. */
+  private[functions] def widening(arrayType: DataType, kernel: String): Int = arrayType match {
+    case ArrayType(DoubleType, _)  => 0
+    case ArrayType(FloatType, _)   => 1
+    case ArrayType(LongType, _)    => 2
+    case ArrayType(IntegerType, _) => 3
+    case ArrayType(ShortType, _)   => 4
+    case ArrayType(ByteType, _)    => 5
+    case other => throw new IllegalArgumentException(
+      s"$kernel: values must be a numeric array, got ${other.simpleString}")
+  }
+
+  /** Element `i` of `a`, widened to double by the [[widening]] code `w`. */
+  @inline private[functions] def widenAt(a: ArrayData, i: Int, w: Int): Double =
+    (w: @scala.annotation.switch) match {
+      case 0 => a.getDouble(i)
+      case 1 => a.getFloat(i).toDouble
+      case 2 => a.getLong(i).toDouble
+      case 3 => a.getInt(i).toDouble
+      case 4 => a.getShort(i).toDouble
+      case _ => a.getByte(i).toDouble
+    }
 
   def mosaicFold(layers: Column): Column =
     ColumnBridge.column(MosaicFold(ColumnBridge.expression(layers)))
@@ -236,12 +270,9 @@ case class MosaicFold(child: Expression)
 }
 
 /** Masked-pixel (null) → fill-value resolution over one packed block, with
-  * a NON-NULLABLE `array<double>` output type. This is what lets the tile
-  * sink's shuffle decode band arrays as primitive `toDoubleArray` copies:
-  * a nullable element type forces Catalyst's object deserializer through
-  * per-element `MapObjects` boxing — 260k `java.lang.Double`s per 512²
-  * block, measured as the allocation wall in the 2.62-Gpx sink soak. The
-  * no-null fast path returns the input array untouched. */
+  * a NON-NULLABLE `array<double>` output type: the input of [[PackBand]] in
+  * the overview regroup exchange. The no-null fast path returns the input
+  * array untouched. */
 case class FillNulls(child: Expression, fill: Double)
   extends UnaryExpression with ImplicitDoubleArrayInputs with CodegenFallback {
   override def prettyName: String = "fill_nulls"
@@ -560,13 +591,14 @@ case class BlockDownsample(child: Expression, blockW: Int, blockH: Int,
     copy(child = newChild)
 }
 
-/** Pack one non-nullable double band plane to the sink dtype's STORAGE
-  * width for the tile-assembly shuffle — wire bytes ≈ file bytes instead
+/** Pack one non-nullable double band plane to the layer dtype's STORAGE
+  * width: the wire format of the overview regroup exchange only (the tile
+  * sink ships [[EncodeBlock]] payloads). Wire bytes ≈ file bytes instead
   * of 8 B/px doubles (4× less exchange volume for uint16 layers, 8× for
   * uint8; found when a 10-Gpx incompressible soak spilled ~80 GB of
   * uncompressible shuffled doubles for a 20 GB uint16 file). Integer
   * modes apply the WRITER's exact clamp rule (max(lo, min(hi, rint(v))),
-  * GeoTiff.encode) so pack → unpack → encode produces bit-identical
+  * GeoTiff.BlockEncoder) so pack → unpack → encode produces bit-identical
   * samples: the clamp is idempotent and the writer re-applies it. Float
   * modes store float bits (f32 — also float16's pack: the writer's
   * floatToHalf consumes the same narrowed float) or raw doubles (f64).
@@ -643,6 +675,52 @@ case class UnpackBand(child: Expression, mode: String)
   override def nullSafeEval(input: Any): Any =
     UnsafeArrayData.fromPrimitiveArray(
       BlockKernels.unpackBand(input.asInstanceOf[Array[Byte]], mode))
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** The tile sink's one pass from a computed band block to its stored
+  * payload: `values` (any numeric array, read through the element accessor
+  * of its type — no cast to `array<double>` is planned) lands in a per-task
+  * double buffer with nulls as the profile's nodata (0 without one), and
+  * [[graft.sources.GeoTiff.BlockEncoder]] narrows, predicts and compresses
+  * it. The result is exactly `GeoTiff.encodeBlock(profile, filled)`, the
+  * payload [[graft.sources.GeoTiff.Writer.writeTile]] would store, so the
+  * sink exchange moves compressed blocks and the writer only lays them out.
+  * Only the tile shape, sample type, predictor and codec of `profile` are
+  * read. The task's encoder (one Deflater, reset per block) ends when the
+  * task completes. */
+case class EncodeBlock(child: Expression, profile: graft.sources.GeoTiff.Profile)
+  extends UnaryExpression with CodegenFallback {
+
+  override def prettyName: String = "encode_block"
+  override def dataType: DataType = BinaryType
+  override def stringArgs: Iterator[Any] = Iterator(child, profile.dataType)
+
+  private lazy val widen = BlockKernels.widening(child.dataType, prettyName)
+  private val fill = profile.noData.getOrElse(0.0)
+  @transient private lazy val buffer = new Array[Double](profile.tileWidth * profile.tileHeight)
+  @transient private lazy val encoder = {
+    val e = new graft.sources.GeoTiff.BlockEncoder(profile)
+    Option(org.apache.spark.TaskContext.get())
+      .foreach(_.addTaskCompletionListener[Unit](_ => e.end()))
+    e
+  }
+
+  override def nullSafeEval(input: Any): Any = {
+    val a = input.asInstanceOf[ArrayData]
+    val n = a.numElements()
+    require(n == buffer.length,
+      s"encode_block: $n pixels, tile is ${profile.tileWidth}x${profile.tileHeight}")
+    val w = widen
+    var i = 0
+    while (i < n) {
+      buffer(i) = if (a.isNullAt(i)) fill else BlockKernels.widenAt(a, i, w)
+      i += 1
+    }
+    encoder.encode(buffer)
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

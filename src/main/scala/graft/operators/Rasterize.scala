@@ -103,7 +103,8 @@ object Rasterize {
       val (id, left, top, br, bc, _, _) = it.head
       val r0 = row0(top) + br * block
       val c0 = col0(left) + bc * block
-      val arr = Array.fill(block * block)(noData)
+      val arr = new Array[Long](block * block)
+      java.util.Arrays.fill(arr, noData)
       val hit = new java.util.BitSet(block * block)
       while (it.hasNext && it.head._1 == id && it.head._4 == br && it.head._5 == bc) {
         val (_, _, _, _, _, wkb, value) = it.next()

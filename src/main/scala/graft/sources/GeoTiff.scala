@@ -157,6 +157,118 @@ object GeoTiff {
     } else java.lang.Float.intBitsToFloat((half & 0x8000) << 16) // ±0
   }
 
+  // ----------------------------------------------------------------- encode
+  /** Encodes the blocks of one profile to their stored payloads: samples
+    * narrow to the storage type (out-of-range values clamp, GDAL
+    * semantics), then the predictor, then the codec. TIFF blocks compress
+    * independently, so a payload does not depend on where its block sits
+    * in the file: blocks can be encoded where they are computed and laid
+    * out later by [[Writer.writeEncoded]]. Only the tile shape, sample
+    * type, predictor and codec of `profile` matter, so one encoder serves
+    * every overview level of a writer. Deflate reuses one `Deflater`,
+    * reset between blocks; [[end]] frees it. A JPEG payload is a complete
+    * JFIF stream; a writer with shared tables splits it. */
+  final class BlockEncoder(profile: Profile) {
+    private var deflater: Deflater = null
+    private val deflateBuf = new Array[Byte](8192)
+
+    /** The payload of one block: `rows` rows of `tileWidth * stride`
+      * samples, row-major (`stride` bands interleaved per pixel). */
+    def encode(pixels: Array[Double], rows: Int = profile.tileHeight,
+               stride: Int = 1): Array[Byte] = {
+      val rowSamples = profile.tileWidth * stride
+      val raw = narrow(pixels, rows, rowSamples)
+      if (profile.predictor == 2)
+        diffPredictor2(raw, profile.bitsPerSample, rows, rowSamples, stride)
+      else if (profile.predictor == 3)
+        diffPredictor3(raw, rows, rowSamples, profile.bitsPerSample / 8, stride)
+      val rowBytes =
+        if (profile.bitsPerSample < 8) profile.bytesPerRow
+        else rowSamples * (profile.bitsPerSample / 8)
+      profile.compressionCode match {
+        case 4     => CcittG4.encode(raw, profile.tileWidth, rows, profile.bytesPerRow)
+        case 5     => Lzw.encode(raw)
+        case 7 =>
+          require(stride == 1 || stride == 3,
+            "JPEG writes 1-band grayscale or 3-band interleaved color")
+          if (stride == 3) jpegEncodeRgb(raw, profile.tileWidth, rows, profile.jpegQuality)
+          else jpegEncode(raw, profile.tileWidth, rows, profile.jpegQuality)
+        case 8     => deflate(raw)
+        case 32773 => Packbits.encode(raw, rowBytes)
+        case 50000 => zstdCompress(raw)
+        case _     => raw
+      }
+    }
+
+    /** Releases the Deflater; a later [[encode]] makes a new one. */
+    def end(): Unit = if (deflater != null) { deflater.end(); deflater = null }
+
+    private def deflate(data: Array[Byte]): Array[Byte] = {
+      if (deflater == null) deflater = new Deflater(Deflater.DEFAULT_COMPRESSION)
+      else deflater.reset()
+      deflater.setInput(data); deflater.finish()
+      val out = new ByteArrayOutputStream(data.length / 2 + 64)
+      while (!deflater.finished()) out.write(deflateBuf, 0, deflater.deflate(deflateBuf))
+      out.toByteArray
+    }
+
+    private def narrow(px: Array[Double], rows: Int, rowSamples: Int): Array[Byte] = {
+      // out-of-range values CLAMP to the storage range (GDAL semantics);
+      // Java's narrowing casts would silently wrap instead
+      def cl(v: Double, lo: Long, hi: Long): Long =
+        math.max(lo, math.min(hi, math.rint(v).toLong))
+      val bits = profile.bitsPerSample
+      val n = rows * rowSamples
+      if (bits < 8) { // sub-byte NBITS: MSB-first packing, byte-padded rows
+        val tw = profile.tileWidth; val bpr = profile.bytesPerRow
+        val out = new Array[Byte](bpr * rows)
+        val maxV = (1L << bits) - 1
+        var r = 0
+        while (r < rows) {
+          var c = 0
+          while (c < tw) {
+            val v = cl(px(r * tw + c), 0, maxV)
+            var remaining = bits; var bit = c * bits
+            while (remaining > 0) { // a 3/5/6/7-bit sample can span two bytes
+              val free = 8 - (bit % 8)
+              val take = math.min(free, remaining)
+              val chunk = (v >>> (remaining - take)) & ((1 << take) - 1)
+              val i = r * bpr + bit / 8
+              out(i) = (out(i) | (chunk << (free - take))).toByte
+              bit += take; remaining -= take
+            }
+            c += 1
+          }
+          r += 1
+        }
+        return out
+      }
+      val bb = ByteBuffer.allocate(n * (bits / 8)).order(ByteOrder.LITTLE_ENDIAN)
+      var i = 0
+      (bits, profile.sampleFormat) match {
+        case (8, 1)  => while (i < n) { bb.put(cl(px(i), 0, 255).toByte); i += 1 }
+        case (8, 2)  => while (i < n) { bb.put(cl(px(i), -128, 127).toByte); i += 1 }
+        case (16, 1) => while (i < n) { bb.putShort(cl(px(i), 0, 65535).toShort); i += 1 }
+        case (16, 2) => while (i < n) { bb.putShort(cl(px(i), -32768, 32767).toShort); i += 1 }
+        case (16, 3) => while (i < n) { bb.putShort(floatToHalf(px(i).toFloat)); i += 1 }
+        case (32, 1) => while (i < n) { bb.putInt(cl(px(i), 0, 4294967295L).toInt); i += 1 }
+        case (32, 2) => while (i < n) { bb.putInt(cl(px(i), Int.MinValue, Int.MaxValue).toInt); i += 1 }
+        case (32, 3) => while (i < n) { bb.putFloat(px(i).toFloat); i += 1 }
+        case (64, 3) => while (i < n) { bb.putDouble(px(i)); i += 1 }
+        case other   => throw new IllegalStateException(s"encode $other")
+      }
+      bb.array()
+    }
+  }
+
+  /** The stored payload of one padded block (`tileWidth * tileHeight`
+    * samples, row-major) under `profile`: what [[Writer.writeTile]] lays
+    * out for it. */
+  def encodeBlock(profile: Profile, pixels: Array[Double]): Array[Byte] = {
+    val e = new BlockEncoder(profile)
+    try e.encode(pixels) finally e.end()
+  }
+
   // ------------------------------------------------------------------ write
   /** Incremental writer: feed tiles in ANY order, close() writes the IFD.
     *
@@ -273,9 +385,7 @@ object GeoTiff {
         "multiband pixel-interleaved files write via writeTileInterleaved")
       require(pixels.length == profile.tileWidth * profile.tileHeight,
         s"tile must be padded to ${profile.tileWidth}x${profile.tileHeight}")
-      writePlane(0, (band - 1) * profile.tilesPerBand +
-          tileRow * profile.tilesAcross + tileCol,
-        tileRow, pixels, 1)
+      writePlane(0, band, tileRow, tileCol, pixels, 1)
     }
 
     /** Write one tile of the `ovr`-th declared overview level (1-based
@@ -287,13 +397,7 @@ object GeoTiff {
         s"overview $ovr of ${overviewFactors.length} declared")
       require(pixels.length == profile.tileWidth * profile.tileHeight,
         s"tile must be padded to ${profile.tileWidth}x${profile.tileHeight}")
-      val lp = levelProfiles(ovr)
-      require(tileRow >= 0 && tileRow < lp.tilesDown &&
-        tileCol >= 0 && tileCol < lp.tilesAcross,
-        s"overview $ovr tile ($tileRow,$tileCol) outside ${lp.tilesDown}x${lp.tilesAcross}")
-      writePlane(ovr, (band - 1) * lp.tilesPerBand +
-          tileRow * lp.tilesAcross + tileCol,
-        tileRow, pixels, 1)
+      writePlane(ovr, band, tileRow, tileCol, pixels, 1)
     }
 
     /** Chunky (PlanarConfiguration=1) write: ALL bands of one tile at
@@ -310,122 +414,73 @@ object GeoTiff {
       val merged = new Array[Double](profile.tileWidth * profile.tileHeight * nb)
       var j = 0
       while (j < merged.length) { merged(j) = bands(j % nb)(j / nb); j += 1 }
-      writePlane(0, tileRow * profile.tilesAcross + tileCol, tileRow, merged, nb)
+      writePlane(0, 1, tileRow, tileCol, merged, nb)
     }
 
-    private def writePlane(level: Int, idx: Int, tileRow: Int,
+    private val encoder = new BlockEncoder(profile)
+
+    /** The SPARSE_OK hole test, then encode and lay out. */
+    private def writePlane(level: Int, band: Int, tileRow: Int, tileCol: Int,
                            pixels: Array[Double], stride: Int): Unit = {
       val rows = rowsAt(tileRow)
-      val rowSamples = profile.tileWidth * stride
       if (sparse) {
         // SPARSE_OK: an all-nodata plane leaves its offset/count at 0 —
         // only the STORED samples matter (a short last strip's virtual
         // pad rows sit past rows*rowSamples and are never on disk)
         val nd = profile.noData.getOrElse(0.0)
         val ndIsNaN = nd.isNaN // NaN != NaN, so a NaN sentinel needs its own test
+        val stored = rows * profile.tileWidth * stride
         var i = 0; var hole = true
-        while (hole && i < rows * rowSamples) {
+        while (hole && i < stored) {
           val v = pixels(i)
           if (if (ndIsNaN) !v.isNaN else v != nd) hole = false
           i += 1
         }
         if (hole) return
       }
-      val raw = encode(pixels, rows, rowSamples)
-      if (profile.predictor == 2)
-        diffPredictor2(raw, profile.bitsPerSample, rows, rowSamples, stride)
-      else if (profile.predictor == 3)
-        diffPredictor3(raw, rows, rowSamples, profile.bitsPerSample / 8, stride)
-      val rowBytes =
-        if (profile.bitsPerSample < 8) profile.bytesPerRow
-        else rowSamples * (profile.bitsPerSample / 8)
-      val payload = profile.compressionCode match {
-        case 4     => CcittG4.encode(raw, profile.tileWidth, rows, profile.bytesPerRow)
-        case 5     => Lzw.encode(raw)
-        case 7 =>
-          require(stride == 1 || stride == 3,
-            "JPEG writes 1-band grayscale or 3-band interleaved color")
-          val full =
-            if (stride == 3) jpegEncodeRgb(raw, profile.tileWidth, rows,
-              profile.jpegQuality)
-            else jpegEncode(raw, profile.tileWidth, rows, profile.jpegQuality)
-          if (!sharedJpegTables) full
-          else {
-            // factor DQT/DHT out into tag 347 (GDAL's default layout);
-            // identical encoder settings ⇒ identical tables every tile
-            val (tables, tile) = splitJpegTables(full)
-            jpegTablesBytes match {
-              case None => jpegTablesBytes = Some(tables)
-              case Some(prev) => require(java.util.Arrays.equals(prev, tables),
-                "JPEG table segments changed between tiles")
-            }
-            tile
+      writeEncoded(level, band, tileRow, tileCol, encoder.encode(pixels, rows, stride))
+    }
+
+    /** Lay out one block's stored payload — a [[BlockEncoder]] result
+      * under this writer's profile — as plane (`band`, `tileRow`,
+      * `tileCol`) of writer level `level` (0 = base, k = the k-th declared
+      * overview). An interleaved writer has one plane per tile: band 1.
+      * With shared JPEG tables the payload's tables are split off here. */
+    def writeEncoded(level: Int, band: Int, tileRow: Int, tileCol: Int,
+                     payload: Array[Byte]): Unit = {
+      require(level >= 0 && level < levelProfiles.length,
+        s"level $level of ${levelProfiles.length} written")
+      val lp = levelProfiles(level)
+      require(band >= 1 && band <= nPlanes && tileRow >= 0 && tileRow < lp.tilesDown &&
+        tileCol >= 0 && tileCol < lp.tilesAcross,
+        s"level $level plane ($band,$tileRow,$tileCol) outside $nPlanes x ${lp.tilesDown} x ${lp.tilesAcross}")
+      val idx = (band - 1) * lp.tilesPerBand + tileRow * lp.tilesAcross + tileCol
+      val bytes =
+        if (!sharedJpegTables) payload
+        else {
+          // factor DQT/DHT out into tag 347 (GDAL's default layout);
+          // identical encoder settings ⇒ identical tables every tile
+          val (tables, tile) = splitJpegTables(payload)
+          jpegTablesBytes match {
+            case None => jpegTablesBytes = Some(tables)
+            case Some(prev) => require(java.util.Arrays.equals(prev, tables),
+              "JPEG table segments changed between tiles")
           }
-        case 8     => deflate(raw)
-        case 32773 => Packbits.encode(raw, rowBytes)
-        case 50000 => zstdCompress(raw)
-        case _     => raw
-      }
+          tile
+        }
       val at = raf.getFilePointer
       // classic TIFF stores offsets as 32-bit: fail loudly instead of
       // silently wrapping into a corrupt file (the auto-switch should
       // have chosen BigTIFF long before this fires)
-      require(big || at + payload.length <= 0xFFFFFFFFL,
+      require(big || at + bytes.length <= 0xFFFFFFFFL,
         s"$path exceeds the classic TIFF 4GB limit at plane $idx")
       lvlOffsets(level)(idx) = at
-      lvlCounts(level)(idx) = payload.length
-      raf.write(payload)
-    }
-
-    private def encode(px: Array[Double], rows: Int, rowSamples: Int): Array[Byte] = {
-      // out-of-range values CLAMP to the storage range (GDAL semantics);
-      // Java's narrowing casts would silently wrap instead
-      def cl(v: Double, lo: Long, hi: Long): Long =
-        math.max(lo, math.min(hi, math.rint(v).toLong))
-      val bits = profile.bitsPerSample
-      val n = rows * rowSamples
-      if (bits < 8) { // sub-byte NBITS: MSB-first packing, byte-padded rows
-        val tw = profile.tileWidth; val bpr = profile.bytesPerRow
-        val out = new Array[Byte](bpr * rows)
-        val maxV = (1L << bits) - 1
-        var r = 0
-        while (r < rows) {
-          var c = 0
-          while (c < tw) {
-            val v = cl(px(r * tw + c), 0, maxV)
-            var remaining = bits; var bit = c * bits
-            while (remaining > 0) { // a 3/5/6/7-bit sample can span two bytes
-              val free = 8 - (bit % 8)
-              val take = math.min(free, remaining)
-              val chunk = (v >>> (remaining - take)) & ((1 << take) - 1)
-              val i = r * bpr + bit / 8
-              out(i) = (out(i) | (chunk << (free - take))).toByte
-              bit += take; remaining -= take
-            }
-            c += 1
-          }
-          r += 1
-        }
-        return out
-      }
-      val bb = ByteBuffer.allocate(n * (bits / 8)).order(ByteOrder.LITTLE_ENDIAN)
-      var i = 0
-      (bits, profile.sampleFormat) match {
-        case (8, 1)  => while (i < n) { bb.put(cl(px(i), 0, 255).toByte); i += 1 }
-        case (8, 2)  => while (i < n) { bb.put(cl(px(i), -128, 127).toByte); i += 1 }
-        case (16, 1) => while (i < n) { bb.putShort(cl(px(i), 0, 65535).toShort); i += 1 }
-        case (16, 2) => while (i < n) { bb.putShort(cl(px(i), -32768, 32767).toShort); i += 1 }
-        case (16, 3) => while (i < n) { bb.putShort(floatToHalf(px(i).toFloat)); i += 1 }
-        case (32, 1) => while (i < n) { bb.putInt(cl(px(i), 0, 4294967295L).toInt); i += 1 }
-        case (32, 2) => while (i < n) { bb.putInt(cl(px(i), Int.MinValue, Int.MaxValue).toInt); i += 1 }
-        case (32, 3) => while (i < n) { bb.putFloat(px(i).toFloat); i += 1 }
-        case (64, 3) => while (i < n) { bb.putDouble(px(i)); i += 1 }
-        case other   => throw new IllegalStateException(s"encode $other")
-      }
-      bb.array()
+      lvlCounts(level)(idx) = bytes.length
+      raf.write(bytes)
     }
 
     def close(): Unit = {
+      encoder.end()
       // a sparse writer's zero entries are deliberate holes (implicit
       // nodata fill — GDAL SPARSE_OK), including tiles never written
       require(sparse || lvlOffsets.forall(_.forall(_ > 0)),
@@ -701,16 +756,6 @@ object GeoTiff {
       dos.write(overflow.toByteArray)
       out.toByteArray
     }
-  }
-
-  private def deflate(data: Array[Byte]): Array[Byte] = {
-    val d = new Deflater(Deflater.DEFAULT_COMPRESSION)
-    d.setInput(data); d.finish()
-    val out = new ByteArrayOutputStream(data.length / 2 + 64)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
   }
 
   private def inflate(data: Array[Byte], expected: Int): Array[Byte] = {

@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
 
 /** Spark integration of the GeoTIFF codec.
   *
-  * Sink (K1/K2): one task per tile — `groupByKey(tile_id)` streams that
-  * tile's blocks through an incremental writer, so memory per task is one
-  * block regardless of tile size (the 10-Gpx case of SURVEY §7.4.6). The
-  * single-writer-per-tile shape is exactly the reference's per-tile GeoTIFF
-  * assembly, minus the process pool.
+  * Sink (K1/K2): each block is encoded where it is computed, and one task
+  * per tile streams that tile's encoded blocks into an incremental writer
+  * that only lays them out, so memory per task is one block regardless of
+  * tile size (the 10-Gpx case of SURVEY §7.4.6). The single-writer-per-tile
+  * shape is exactly the reference's per-tile GeoTIFF assembly, minus the
+  * process pool.
   *
   * Source (S4/S5): a metadata harvest for the catalog — one job of header
   * reads (small, like parquet footer reads) whose rows stay on the driver —
@@ -58,15 +59,15 @@ object GeoTiffSpark {
               Resample.downsample(col(b), block, block, 2, method, noData)))
           }
         cur = regroupPack match {
-          // dtype-width regroup exchange (same PackBand wire discipline as
-          // the sink shuffle): masked nulls fill with nodata, quarters ship
-          // packed, and the NEXT halving's downsample re-masks the fill
-          // through its fused noData rule — requires a nodata that
-          // round-trips the dtype exactly (the caller checks). Intermediate
-          // levels clamp to the dtype range, which is precisely GDAL's
-          // behavior (overviews are STORED in the band dtype level by
-          // level); the unpacked path kept full double precision between
-          // levels — more than GDAL, and 4× the exchange bytes at uint16.
+          // dtype-width regroup exchange (PackBand): masked nulls fill
+          // with nodata, quarters ship packed, and the NEXT halving's
+          // downsample re-masks the fill through its fused noData rule —
+          // requires a nodata that round-trips the dtype exactly (the
+          // caller checks). Intermediate levels clamp to the dtype range,
+          // which is precisely GDAL's behavior (overviews are STORED in the
+          // band dtype level by level); the unpacked path kept full double
+          // precision between levels — more than GDAL, and 4× the exchange
+          // bytes at uint16.
           case Some(mode) =>
             val nd = noData.get
             val packedIn = m.select((keyCols.map(col) ++
@@ -114,34 +115,40 @@ object GeoTiffSpark {
     }
   }
 
-  /** [[graft.functions.PackBand]] mode for a pixel type: the sink
-    * shuffle's wire width. Integer names pack at their storage width with
-    * the writer's clamp rule; float16/float32 pack as float bits; float64
-    * stays raw. Sub-byte NBITS types still pack at their full-width class
-    * — the pack clamp range contains the encoder's, and the clamp is
-    * idempotent, so the final file bytes are unchanged. */
-  private def packMode(pt: graft.core.PixelType): String = pt.name match {
-    case "uint8"  => "u8"
-    case "int8"   => "i8"
-    case "uint16" => "u16"
-    case "int16"  => "i16"
-    case "uint32" => "u32"
-    case "int32"  => "i32"
-    case "float16" | "float32" => "f32"
-    case _ => "f64"
+  /** The [[graft.functions.PackBand]] mode of the overview regroup
+    * exchange for a pixel type, or None when its nodata cannot take the
+    * packed path ([[packSafeNoData]]). Integer names pack at their storage
+    * width with the writer's clamp rule; float16/float32 pack as float
+    * bits; float64 stays raw. Sub-byte NBITS types still pack at their
+    * full-width class — the pack clamp range contains the encoder's, and
+    * the clamp is idempotent, so the final file bytes are unchanged. */
+  private def regroupPack(pt: graft.core.PixelType): Option[String] = {
+    val mode = pt.name match {
+      case "uint8"  => "u8"
+      case "int8"   => "i8"
+      case "uint16" => "u16"
+      case "int16"  => "i16"
+      case "uint32" => "u32"
+      case "int32"  => "i32"
+      case "float16" | "float32" => "f32"
+      case _ => "f64"
+    }
+    pt.noData.filter(packSafeNoData(mode, _)).map(_ => mode)
   }
 
-  /** Write one plane at a WRITER level (0 = base IFD, k = k-th declared
-    * overview of that writer). */
-  private def writeAt(writer: GeoTiff.Writer, wl: Int, b: Int,
-                      br: Int, bc: Int, px: Array[Double]): Unit =
-    if (wl == 0) writer.writeTile(b, br, bc, px)
-    else writer.writeOverviewTile(wl, b, br, bc, px)
+  /** Creates each of `dirs`, plain paths or scheme-qualified. */
+  private def mkdirs(spark: SparkSession, dirs: Seq[String]): Unit =
+    for (d <- dirs)
+      if (d.contains("://")) {
+        val p = new org.apache.hadoop.fs.Path(d)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
+      } else java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
 
   /** K4-style padding + close + publish — the shared tail of every
     * streaming tile sink: never-emitted blocks become nodata tiles at
-    * EVERY level of the writer, then the finished file at `localPath`
-    * goes to each of `dests` in order: the mirrors first, the primary
+    * EVERY level of the writer (one payload, encoded once: every level
+    * shares the tile shape and codec), then the finished file at
+    * `localPath` goes to each of `dests` in order: the mirrors first, the primary
     * last, so a primary that exists implies its mirrors do. A plain
     * `localPath` is `dests.head`, written in place; each later plain dest
     * gets a `Files.copy` — never a hard link, which would let an in-place
@@ -149,16 +156,20 @@ object GeoTiffSpark {
     * A scheme-qualified dest gets a Hadoop-FS `copyFromLocalFile` of the
     * local temp, and the last one moves it. `written` carries WRITER-level
     * keys (level, band, row, col). */
-  private def padClosePublish(writer: GeoTiff.Writer, bandCount: Int,
-      block: Int, noData: Option[Double],
+  private def padClosePublish(writer: GeoTiff.Writer,
       written: scala.collection.mutable.Set[(Int, Int, Int, Int)],
       localPath: String, dests: Seq[String]): Unit = {
-    val empty = Array.fill(block * block)(noData.getOrElse(0.0))
+    val base = writer.levelProfiles(0)
+    lazy val empty = {
+      val px = new Array[Double](base.tileWidth * base.tileHeight)
+      java.util.Arrays.fill(px, base.noData.getOrElse(0.0))
+      GeoTiff.encodeBlock(base, px)
+    }
     for (wl <- writer.levelProfiles.indices) {
       val lp = writer.levelProfiles(wl)
-      for (b <- 1 to bandCount; br <- 0 until lp.tilesDown;
+      for (b <- 1 to base.bands; br <- 0 until lp.tilesDown;
            bc <- 0 until lp.tilesAcross)
-        if (!written.contains((wl, b, br, bc))) writeAt(writer, wl, b, br, bc, empty)
+        if (!written.contains((wl, b, br, bc))) writer.writeEncoded(wl, b, br, bc, empty)
     }
     writer.close()
     for ((d, i) <- dests.zipWithIndex if d != localPath)
@@ -184,8 +195,12 @@ object GeoTiffSpark {
     * sidecar never exists without its tile. Manifests need no second pass
     * over the pixels ([[graft.plans.LayerJob.derive]]).
     *
-    * Blocks reach the writer sorted by (tile, level, block row, block
-    * column), so a tile's byte layout does not depend on shuffle order.
+    * K1 encode: each band block is compressed before the exchange, in the
+    * task that computed it ([[sinkExchange]]), so the task that owns a tile
+    * only lays out bytes ([[GeoTiff.Writer.writeEncoded]]) and the shuffle
+    * moves compressed payloads. Blocks reach the writer sorted by (tile,
+    * level, block row, block column), so a tile's byte layout does not
+    * depend on shuffle order.
     *
     * K2 upload: a scheme-qualified `outDir` (s3a://, file://, …) routes
     * each tile through a local temp file then a Hadoop-FS
@@ -215,21 +230,20 @@ object GeoTiffSpark {
     val pt = spec.pixelType
     val bandCount = spec.bandCount
     val noData = pt.noData
-    val dataType = pt.name
     val epsg = if (grid.crs == "EPSG:3857") 3857 else 4326
     val (xres, yres, cols, block) = (grid.xres, grid.yres, grid.cols, grid.blockSize)
-    // NBITS reaches the writer (sub-byte widths bit-pack, data_type.py:112-149);
+    // every tile's profile but for its origin (`left`/`top`). NBITS reaches
+    // the writer (sub-byte widths bit-pack, data_type.py:112-149);
     // CCITTFAX4 routes boolean tiles through the pure-JVM Group-4 codec
     // (data_type.py:122-124) — the full byte-parity lowering, no fallback
-    val ptNbits = pt.nbits
-    val photometric = spec.photometric
-    val ccitt = pt.compression == "CCITTFAX4"
+    val profile = GeoTiff.Profile(
+      width = cols, height = cols, bands = bandCount, dataType = pt.name,
+      tileWidth = block, tileHeight = block, noData = noData, epsg = epsg,
+      originX = 0, originY = 0, xres = xres, yres = yres,
+      nbits = pt.nbits, photometric = spec.photometric,
+      ccitt = pt.compression == "CCITTFAX4")
     val viaFs = outDir.contains("://")
-    for (d <- outDir +: mirrors)
-      if (viaFs) {
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-      } else java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
+    mkdirs(spark, outDir +: mirrors)
 
     val cols0 = Seq("tile_id", "left", "top", "block_row", "block_col") ++
       (1 to bandCount).map(i => s"band_$i")
@@ -243,26 +257,24 @@ object GeoTiffSpark {
       if (overviewFactors.isEmpty) blocks.select(cols0.map(col): _*)
       else Caching.shared(blocks.select(cols0.map(col): _*))
     val base = plane.withColumn("level", lit(0))
-    val mode = packMode(pt)
-    val regroupPack = noData.filter(packSafeNoData(mode, _)).map(_ => mode)
     val leveled =
       if (overviewFactors.isEmpty) base
       else (base +: overviewLevels(plane, block,
         bandCols, keyCols, noData, overviewFactors, overviewMethod,
-        overviewSeamExact, regroupPack))
+        overviewSeamExact, regroupPack(pt)))
         .reduce(_ unionByName _)
     val confBytes = HadoopConfs.capture(spark.sparkContext.hadoopConfiguration)
     // A3 partials of the base blocks ride the same projection, taken
-    // BEFORE fillNulls: without a nodata value a null pixel and a 0 look
-    // alike once filled
+    // from the unfilled values: without a nodata value a null pixel and a
+    // 0 look alike once encoded
     val stats = graft.operators.Raster.bandPartials(bandCols.map(col), noData)
-    val packed = sinkExchange(leveled, bandCols, noData, mode,
+    val encoded = sinkExchange(leveled, bandCols, profile,
         "stats" -> when(col("level") === 0, stats))
       .as[(String, Double, Double, Int, Int, Int, Seq[Array[Byte]],
         Seq[StatsPartial])]
     val sidecars = spec.computeStats
     val totalPixels = grid.cols.toLong * grid.rows
-    packed
+    encoded
       .mapPartitions { it0 =>
         HadoopConfs.install(confBytes)
         val it = it0.buffered
@@ -281,18 +293,12 @@ object GeoTiffSpark {
             val written = scala.collection.mutable.Set.empty[(Int, Int, Int, Int)]
             while (it.hasNext && it.head._1 == tileId) {
               val (_, left, top, br, bc, lvl, bands, blockStats) = it.next()
-              if (writer == null) {
-                val profile = GeoTiff.Profile(
-                  width = cols, height = cols, bands = bandCount, dataType = dataType,
-                  tileWidth = block, tileHeight = block, noData = noData, epsg = epsg,
-                  originX = left, originY = top, xres = xres, yres = yres,
-                  nbits = ptNbits, photometric = photometric, ccitt = ccitt)
-                writer = new GeoTiff.Writer(localPath, profile,
+              if (writer == null)
+                writer = new GeoTiff.Writer(localPath,
+                  profile.copy(originX = left, originY = top),
                   overviewFactors = overviewFactors, cogLayout = cogLayout)
-              }
               for (b <- 1 to bandCount) {
-                writeAt(writer, lvl, b, br, bc,
-                  graft.functions.BlockKernels.unpackBand(bands(b - 1), mode))
+                writer.writeEncoded(lvl, b, br, bc, bands(b - 1))
                 written += ((lvl, b, br, bc))
               }
               if (lvl == 0) {
@@ -301,8 +307,7 @@ object GeoTiffSpark {
                 n += 1
               }
             }
-            padClosePublish(writer, bandCount, block, noData, written,
-              localPath, dests)
+            padClosePublish(writer, written, localPath, dests)
             val bands = tileStats.map(_.finish)
             if (sidecars) {
               val aux = new org.apache.hadoop.fs.Path(
@@ -320,30 +325,27 @@ object GeoTiffSpark {
       .toDF("tile_id", "path", "n_blocks", "stats")
   }
 
-  /** The exchange in front of both tile writers, WITHOUT per-pixel
-    * boxing (the old Row-typed groupByKey/mapGroups deserialized every band
-    * array through a MapObjects SafeProjection — one java.lang.Double per
-    * pixel, twice — the allocation wall the 2.62-Gpx soak hit):
-    *  - each band's masked nulls resolve to the nodata fill per BLOCK
-    *    ([[graft.functions.FillNulls]] primitive loop — the writer padded
-    *    the same value per PIXEL anyway), so the writer's typed decode is
-    *    a primitive copy;
-    *  - the band packs to its dtype width `mode` BEFORE the exchange
-    *    (PackBand): the shuffle moves ~file bytes, not 8 B/px doubles — a
-    *    10-Gpx incompressible soak spilled ~80 GB of shuffled doubles for
-    *    a 20 GB uint16 file. Bit-parity is the kernel's contract (the
-    *    writer re-applies the same idempotent clamp);
+  /** The exchange in front of both tile writers:
+    *  - each band block is encoded where it is computed
+    *    ([[graft.functions.EncodeBlock]]: one primitive pass over the
+    *    band's own element type, nulls as `profile`'s nodata, then
+    *    [[GeoTiff.BlockEncoder]]'s narrow, predictor and codec), so the
+    *    shuffle moves compressed payloads — the bytes the file will hold —
+    *    and the writer only lays them out ([[GeoTiff.Writer.writeEncoded]]).
+    *    Blocks compress independently (GDAL's NUM_THREADS does the same),
+    *    so encoding spreads over every task that computes blocks instead
+    *    of the one task that owns a tile;
     *  - a pure UnsafeRow hash exchange on tile_id, then an in-partition
     *    sort on (tile, level, block row, block column), so writers stream
     *    tile runs in a shuffle-order-independent layout.
-    * Rows: the block keys and `level`, the packed `bands` array, then the
+    * Rows: the block keys and `level`, the `bands` payloads, then the
     * `extra` columns. */
-  private def sinkExchange(leveled: DataFrame, bandCols: Seq[String], noData: Option[Double],
-                           mode: String, extra: (String, Column)*): DataFrame = {
+  private def sinkExchange(leveled: DataFrame, bandCols: Seq[String],
+                           profile: GeoTiff.Profile, extra: (String, Column)*): DataFrame = {
     val keys = Seq("tile_id", "left", "top", "block_row", "block_col", "level").map(col)
     leveled
-      .select(keys ++ bandCols.map(b => graft.functions.BlockKernels.packBand(
-          graft.functions.BlockKernels.fillNulls(col(b), noData.getOrElse(0.0)), mode).as(b)) ++
+      .select(keys ++ bandCols.map(b =>
+          graft.functions.BlockKernels.encodeBlock(col(b), profile).as(b)) ++
         extra.map { case (n, c) => c.as(n) }: _*)
       .repartition(col("tile_id"))
       .sortWithinPartitions("tile_id", "level", "block_row", "block_col")
@@ -362,9 +364,9 @@ object GeoTiffSpark {
     * chain holds the reduced levels, already consumed by
     * [[GeoTiff.openWithOverviews]] and the warp reader — writes one task
     * per tile. `factors` are distinct ascending powers of 2; `method` is
-    * any [[graft.operators.Resample]] kernel. `mirrors`, existing dirs
-    * like `dir`, get each `.tif.ovr` from the same task, before `dir`
-    * does, as in [[writeTiles]]. */
+    * any [[graft.operators.Resample]] kernel. `mirrors`, dirs like `dir`
+    * (made if missing), get each `.tif.ovr` from the same task, before
+    * `dir` does, as in [[writeTiles]]. */
   def addOverviewSidecars(spark: SparkSession, dir: String, spec: LayerSpec,
                           factors: Seq[Int],
                           method: String = "average",
@@ -390,6 +392,7 @@ object GeoTiffSpark {
     // mode the spec parsing also bans
     require(ids.nonEmpty, s"addOverviewSidecars: no matching *.tif tiles " +
       s"under $dir${subset.fold("")(k => s" for subset ${k.toSeq.sorted.mkString(",")}")}")
+    mkdirs(spark, mirrors)
     val confBytes = HadoopConfs.capture(spark.sparkContext.hadoopConfiguration)
     // distributed block work-list: never materializes tiles×blocks on the
     // driver (a 10-Gpx grid is ~38k blocks per tile)
@@ -425,17 +428,27 @@ object GeoTiffSpark {
     val blocks = bandCols.zipWithIndex.foldLeft(blocks0) { case (df, (b, i)) =>
       df.withColumn(b, element_at(col("__bands"), i + 1))
     }.drop("__bands")
-    val mode = packMode(pt) // dtype-width wire format, same as writeTiles
     val leveled = overviewLevels(blocks, block, bandCols,
       Seq("tile_id", "left", "top"), noData, factors, method, seamExact,
-      noData.filter(packSafeNoData(mode, _)).map(_ => mode))
+      regroupPack(pt))
       .reduce(_ unionByName _)
     val f1 = factors.head
     val relFactors = factors.tail.map(_ / f1)
     def ceilDiv(a: Int, f: Int): Int = (a + f - 1) / f
-    val packed = sinkExchange(leveled, bandCols, noData, mode)
+    // the sidecar's BASE image is the first reduced level; deeper declared
+    // levels chain as its own internal overviews. Every tile's profile but
+    // for its origin.
+    val p1 = GeoTiff.Profile(
+      width = ceilDiv(cols, f1), height = ceilDiv(rows_, f1),
+      bands = bandCount, dataType = pt.name,
+      tileWidth = block, tileHeight = block, noData = noData,
+      epsg = epsg, originX = 0, originY = 0,
+      xres = grid.xres * f1, yres = grid.yres * f1,
+      nbits = pt.nbits, photometric = spec.photometric,
+      ccitt = pt.compression == "CCITTFAX4")
+    val encoded = sinkExchange(leveled, bandCols, p1)
       .as[(String, Double, Double, Int, Int, Int, Seq[Array[Byte]])]
-    packed
+    encoded
       .mapPartitions { it0 =>
         HadoopConfs.install(confBytes)
         val it = it0.buffered
@@ -454,31 +467,19 @@ object GeoTiffSpark {
                   if (viaFs) java.nio.file.Files
                     .createTempFile(s"graft_ovr_$tileId", ".ovr").toString
                   else dests.head
-                // the sidecar's BASE image is the first reduced level;
-                // deeper declared levels chain as its own internal
-                // overviews
-                val p1 = GeoTiff.Profile(
-                  width = ceilDiv(cols, f1), height = ceilDiv(rows_, f1),
-                  bands = bandCount, dataType = pt.name,
-                  tileWidth = block, tileHeight = block, noData = noData,
-                  epsg = epsg, originX = left, originY = top,
-                  xres = grid.xres * f1, yres = grid.yres * f1,
-                  nbits = pt.nbits, photometric = spec.photometric,
-                  ccitt = pt.compression == "CCITTFAX4")
-                writer = new GeoTiff.Writer(localPath, p1,
+                writer = new GeoTiff.Writer(localPath,
+                  p1.copy(originX = left, originY = top),
                   overviewFactors = relFactors)
               }
               // row levels are 1-based into `factors`; the sidecar
               // writer's level 0 IS the first reduced level
               val wl = rowLvl - 1
               for (b <- 1 to bandCount) {
-                writeAt(writer, wl, b, br, bc,
-                  graft.functions.BlockKernels.unpackBand(bands(b - 1), mode))
+                writer.writeEncoded(wl, b, br, bc, bands(b - 1))
                 written += ((wl, b, br, bc))
               }
             }
-            padClosePublish(writer, bandCount, block, noData, written,
-              localPath, dests)
+            padClosePublish(writer, written, localPath, dests)
             (tileId, dests.last)
           }
         }
@@ -756,17 +757,22 @@ object GeoTiffSpark {
             s"$uri is not on the block lattice of tile $tileId")
           val (sr, sc) = (dy / h + br, dx / w + bc)
           val nd = p.noData
-          if (sr < 0 || sc < 0 || sr >= p.tilesDown || sc >= p.tilesAcross)
-            (tileId, band, br, bc, w, h, uri, priority,
-              Array.fill(w * h)(nd.getOrElse(0.0)), Array.fill(w * h)(false))
-          else {
+          if (sr < 0 || sc < 0 || sr >= p.tilesDown || sc >= p.tilesAcross) {
+            val px = new Array[Double](w * h)
+            java.util.Arrays.fill(px, nd.getOrElse(0.0))
+            (tileId, band, br, bc, w, h, uri, priority, px, new Array[Boolean](w * h))
+          } else {
             val px = t.readTile(fileBand, sr.toInt, sc.toInt)
             val (x0, y0) = (sc * w, sr * h)
-            // NaN != NaN is true, so a NaN nodata sentinel needs its own test
-            val valid = Array.tabulate(px.length) { i =>
+            val (hasNd, ndv) = (nd.isDefined, nd.getOrElse(0.0))
+            val valid = new Array[Boolean](px.length)
+            var i = 0
+            while (i < px.length) {
               val v = px(i)
-              x0 + i % w < p.width && y0 + i / w < p.height &&
-                nd.forall(x => if (x.isNaN) !v.isNaN else x != v)
+              // NaN != NaN is true, so a NaN nodata sentinel needs its own test
+              valid(i) = x0 + i % w < p.width && y0 + i / w < p.height &&
+                !(hasNd && (if (ndv.isNaN) v.isNaN else ndv == v))
+              i += 1
             }
             (tileId, band, br, bc, w, h, uri, priority, px, valid)
           }

@@ -224,6 +224,18 @@ class PixetlSpec extends SparkSpec {
     }
   }
 
+  test("addo writes each .ovr to the gdal-geotiff profile too") {
+    val spec = statsLayer(halfEmptySources("addo/src"), """ "no_data": 0,""")
+    val dest = fresh("addo/dest")
+    Pixetl.run(spark, spec, dest.toString, overwrite = false, sub = None)
+    val written = Addo.run(spark, spec, dest.toString, Seq(2))
+    assert(written.map(_._1).sorted == Seq("90N_090W", "90N_180W"))
+    val primary = tileFiles(dest.resolve(spec.prefix()))
+    assert(primary.map(_._1) == Seq("90N_090W.tif", "90N_180W.tif",
+      "90N_090W.tif.ovr", "90N_180W.tif.ovr"))
+    assert(tileFiles(dest.resolve(spec.prefix(fmt = "gdal-geotiff"))) == primary)
+  }
+
   /** Publish `spec` twice to a fresh `onepass://` dest under `name`, the
     * second time without `--overwrite`: nothing is left to write, so the
     * rerun must read no published file. Returns the dest's uri. */
@@ -600,6 +612,31 @@ class PixetlSpec extends SparkSpec {
       assert(!plans.plans.exists(_.contains("Range (0, 64800")), spec.sourceType)
       assert(names(dest.resolve(spec.prefix()), ".tif") ==
         Seq("11N_010E.tif", "11N_011E.tif", "12N_010E.tif", "12N_011E.tif"))
+    }
+  }
+
+  test("the sink encodes each band where it is computed, with no cast to array<double>") {
+    val raster = statsLayer(halfEmptySources("encode/src"), """ "no_data": 0,""")
+    val vdest = fresh("encode/vector")
+    Seq((GeoFunctions.write(GeoFunctions.envelope(-170, 10, -150, 30)), 1L))
+      .toDF("geom", "value").write.parquet(vdest.resolve("features.parquet").toString)
+    val vector = LayerSpec.fromJson(
+      """{"dataset": "burn", "version": "v1", "source_type": "vector",
+        |"pixel_meaning": "is", "data_type": "uint8", "no_data": 0, "grid": "90/256",
+        |"rasterize_method": "value"}""".stripMargin)
+    for ((spec, dest) <- Seq(raster -> fresh("encode/raster"), vector -> vdest)) {
+      val plans = new PlanLog
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(plans)
+      try {
+        Pixetl.run(spark, spec, dest.toString, overwrite = false, sub = None)
+        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(plans)
+      val sink = plans.plans.filter(_.contains("hashpartitioning(tile_id"))
+      assert(sink.nonEmpty && sink.forall(_.contains("encode_block(")),
+        s"${spec.sourceType} sink plans:\n${sink.mkString("\n")}")
+      for (p <- sink)
+        assert(!p.contains("as array<double>)"), s"${spec.sourceType} sink plan:\n$p")
     }
   }
 

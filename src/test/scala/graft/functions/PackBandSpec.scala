@@ -3,9 +3,9 @@ package graft.functions
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The sink shuffle's dtype-width wire format: pack → unpack → the writer's
+/** The overview regroup's dtype-width wire format: pack → unpack → the writer's
   * own clamp must be bit-identical to handing the writer the raw doubles.
-  * The clamp rule under test is GeoTiff.encode's `max(lo, min(hi, rint(v)))`
+  * The clamp rule under test is GeoTiff.BlockEncoder's `max(lo, min(hi, rint(v)))`
   * applied one stage early — idempotent, so the file bytes cannot move. */
 class PackBandSpec extends SparkSpec {
   import spark.implicits._
@@ -41,7 +41,7 @@ class PackBandSpec extends SparkSpec {
   }
 
   test("NaN follows the writer's rule in integer modes (rint->0, clamped)") {
-    // math.rint(NaN).toLong == 0 — the same value GeoTiff.encode stores
+    // math.rint(NaN).toLong == 0 — the same value GeoTiff.BlockEncoder stores
     assert(roundTrip(Seq(Double.NaN), "u16").toSeq == Seq(0.0))
     assert(roundTrip(Seq(Double.NaN), "i16").toSeq == Seq(0.0))
     // float modes preserve NaN

@@ -1317,4 +1317,70 @@ class GeoTiffSpec extends SparkSpec {
     w.close()
     assert(GeoTiff.open(iiPath).readTile(1, 0, 0).sameElements(got))
   }
+
+  /** Every codec and sample type the tile sink writes. */
+  private val sinkProfiles: Seq[(String, GeoTiff.Profile)] =
+    Seq("uint8", "int8", "uint16", "int16", "uint32", "int32", "float16", "float32",
+      "float64").map(dt => dt -> profile(dt)) ++
+    Seq("float32 NaN nodata" -> profile("float32", Some(Double.NaN)),
+      "uint16 no nodata" -> profile("uint16", None)) ++
+    Seq(1, 2, 4).map(b => s"uint8 NBITS $b" -> profile("uint8").copy(nbits = Some(b))) :+
+    ("CCITT" -> profile("boolean").copy(nbits = Some(1), ccitt = true))
+
+  test("encode_block returns the writer's payload for every sink codec and band type") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val rnd = new scala.util.Random(15)
+    val n = 16 * 16
+    // values past every storage range (clamp), fractions (rint), NaN, and
+    // small ones the bit-packed profiles keep; about one in eight is null
+    def draw(): Double = rnd.nextInt(6) match {
+      case 0 => Double.NaN
+      case 1 => rnd.nextInt(20).toDouble
+      case 2 => rnd.nextInt(300) - 150.5
+      case _ => (rnd.nextDouble() - 0.3) * 5e9
+    }
+    def blocks[T](conv: Double => T): Seq[Seq[Option[T]]] = Seq.fill(3)(Seq.fill(n) {
+      val v = draw()
+      if (rnd.nextInt(8) == 0) None else Some(conv(v))
+    })
+    def check[T](kind: String, rows: Seq[Seq[Option[T]]], widen: T => Double)
+                (df: Seq[Seq[Option[T]]] => org.apache.spark.sql.DataFrame): Unit = {
+      val got = df(rows).select(sinkProfiles.map { case (name, p) =>
+        graft.functions.BlockKernels.encodeBlock(col("v"), p).as(name) }: _*).collect()
+      for ((row, r) <- rows.zip(got); ((name, p), j) <- sinkProfiles.zipWithIndex) {
+        val filled = row.map(_.fold(p.noData.getOrElse(0.0))(widen)).toArray
+        assert(java.util.Arrays.equals(r.getAs[Array[Byte]](j), GeoTiff.encodeBlock(p, filled)),
+          s"$kind → $name")
+      }
+    }
+    check("array<double>", blocks(identity), (v: Double) => v)(_.map(Tuple1(_)).toDF("v"))
+    check("array<float>", blocks(_.toFloat), (v: Float) => v.toDouble)(_.map(Tuple1(_)).toDF("v"))
+    check("array<bigint>", blocks(_.toLong), (v: Long) => v.toDouble)(_.map(Tuple1(_)).toDF("v"))
+    check("array<int>", blocks(_.toInt), (v: Int) => v.toDouble)(_.map(Tuple1(_)).toDF("v"))
+  }
+
+  test("a file laid out from encoded payloads equals the file writeTile builds") {
+    val rnd = new scala.util.Random(16)
+    for ((name, p) <- sinkProfiles) {
+      // 2x2 base tiles, one of them all nodata, and one factor-2 overview tile
+      val tiles = Seq.fill(5)(Array.fill(16 * 16)(rnd.nextInt(70000) - 1000.25))
+      val fill = Array.fill(16 * 16)(p.noData.getOrElse(0.0))
+      val a = tmp(s"enc_tile_${name.replace(' ', '_')}.tif")
+      val wa = new GeoTiff.Writer(a, p, overviewFactors = Seq(2))
+      for (tr <- 0 to 1; tc <- 0 to 1)
+        wa.writeTile(1, tr, tc, if (tr == 1 && tc == 1) fill else tiles(2 * tr + tc))
+      wa.writeOverviewTile(1, 1, 0, 0, tiles(4))
+      wa.close()
+      val b = tmp(s"enc_payload_${name.replace(' ', '_')}.tif")
+      val wb = new GeoTiff.Writer(b, p, overviewFactors = Seq(2))
+      for (tr <- 0 to 1; tc <- 0 to 1)
+        wb.writeEncoded(0, 1, tr, tc, GeoTiff.encodeBlock(p,
+          if (tr == 1 && tc == 1) fill else tiles(2 * tr + tc)))
+      wb.writeEncoded(1, 1, 0, 0, GeoTiff.encodeBlock(p, tiles(4)))
+      wb.close()
+      assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(a)),
+        Files.readAllBytes(Paths.get(b))), name)
+    }
+  }
 }
